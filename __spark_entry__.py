@@ -2008,10 +2008,11 @@ def _q_referential_integrity(spark, sf_dir):
     """Cross-table referential-integrity gate
     (operators/expect.py check_foreign_keys): all seven TPC-H foreign
     keys checked in one query — child count, NULL-FK count, and orphan
-    count per FK (NULL is unknown, not an orphan). Each check is a
-    single-column anti-join against the parent's deduplicated key set
-    (broadcast — dimension key sets stay small even at 100 TB fact
-    scale). DuckDB-oracle-checked; all integers and booleans.
+    count per FK (NULL is unknown, not an orphan). Each check is one
+    left join of the child's single key column against the parent's
+    deduplicated key set (broadcast — dimension key sets stay small even
+    at 100 TB fact scale) feeding one aggregate that yields all three
+    counts. DuckDB-oracle-checked; all integers and booleans.
     """
     _prep(spark)
     from wavelet_decomposition_spark.operators.expect import (

@@ -146,29 +146,46 @@ def test_solve_stage_not_coalesced(spark, queries):
     assert plan.count("Exchange") == 2  # resample's + the solve repartition
 
 
-def test_wavelet_stage_single_shuffle(spark):
-    """The pyramid stage adds exactly one exchange (the bucket repartition);
-    the groupBy reuses that clustering instead of shuffling again."""
+@pytest.mark.parametrize(
+    "op",
+    ["dwt_windows", "energy_windows", "denoise_windows", "encode_blocks",
+     "decode_blocks"],
+)
+def test_wavelet_stage_single_shuffle(spark, op):
+    """Every bucketed Python stage (wavelet_ops.bucketed_apply) adds exactly
+    one exchange (the bucket repartition); the groupBy reuses that
+    clustering instead of shuffling again."""
     from wavelet_decomposition_spark.io.transcripts import transcripts_df
-    from wavelet_decomposition_spark.operators import activity, rollup, wavelet_ops
+    from wavelet_decomposition_spark.operators import (
+        activity, compress, rollup, wavelet_ops,
+    )
 
-    tier = rollup.rollup_once(
+    src = rollup.rollup_once(
         activity.activity_raw(transcripts_df(spark, 20, seed=3)), "1m"
     )
-    base = _plan(tier, "simple").count("Exchange")
-    coefs = wavelet_ops.dwt_windows(
-        tier, "turns", wavelet="haar", levels=3, window_len=64,
-        sparse_fill_step="1 minute",
+    if op == "encode_blocks":
+        out = compress.encode_blocks(src, ["turns"])
+    elif op == "decode_blocks":
+        src = compress.encode_blocks(src, ["turns"])
+        out = compress.decode_blocks(src, ["turns"])
+    else:
+        out = getattr(wavelet_ops, op)(
+            src, "turns", levels=3, window_len=64, sparse_fill_step="1 minute"
+        )
+    base = _plan(src, "simple")
+    plan = _plan(out, "simple")
+    assert plan.count("Exchange") == base.count("Exchange") + 1
+    assert (
+        plan.count("FlatMapGroupsInPandas")
+        == base.count("FlatMapGroupsInPandas") + 1
     )
-    plan = _plan(coefs, "simple")
-    assert plan.count("Exchange") == base + 1
-    # the per-coefficient fan-out must stay JVM-side: a Generate (posexplode)
-    # node ABOVE the single Python stage, never a second Python pass
-    assert "Generate" in plan
-    assert plan.count("FlatMapGroupsInPandas") == 1
     # pre-UDF projection: unused tier columns must not ride the shuffle into
     # the Python stage (Catalyst cannot prune into grouped-map UDFs itself)
     assert "chars" not in plan and "tool_calls" not in plan
+    if op == "dwt_windows":
+        # the per-coefficient fan-out must stay JVM-side: a Generate
+        # (posexplode) node ABOVE the single Python stage
+        assert "Generate" in plan
 
 
 @pytest.mark.slow

@@ -126,6 +126,14 @@ def test_sparse_fill_fusion_matches_explicit_gapfill(spark):
     )
 
 
+# every window-matrix operator shares one scatter (_window_matrix), so each
+# must reject what it rejects
+WINDOWED_OPS = [
+    wavelet_ops.dwt_windows, wavelet_ops.energy_windows,
+    wavelet_ops.denoise_windows,
+]
+
+
 def test_sparse_fill_rejects_offgrid_timestamps(spark):
     """Sparse mode must ERROR on off-grid input, not silently floor-divide
     rows into the wrong window cell."""
@@ -135,12 +143,13 @@ def test_sparse_fill_rejects_offgrid_timestamps(spark):
         [("c", "2024-01-01 00:00:00", 1.0), ("c", "2024-01-01 00:01:30", 2.0)],
         "conv_id string, bucket_ts string, turns double",
     ).withColumn("bucket_ts", F.col("bucket_ts").cast("timestamp"))
-    out = wavelet_ops.dwt_windows(
-        df, "turns", wavelet="haar", levels=2, window_len=8,
-        sparse_fill_step="1 minute",
-    )
-    with pytest.raises(Exception, match="not aligned"):
-        out.collect()
+    for op in WINDOWED_OPS:
+        out = op(
+            df, "turns", wavelet="haar", levels=2, window_len=8,
+            sparse_fill_step="1 minute",
+        )
+        with pytest.raises(Exception, match="not aligned"):
+            out.collect()
 
 
 def test_sparse_fill_rejects_duplicate_grid_rows(spark):
@@ -151,9 +160,66 @@ def test_sparse_fill_rejects_duplicate_grid_rows(spark):
          ("c", "2024-01-01 00:01:00", 3.0)],
         "conv_id string, bucket_ts string, turns double",
     ).withColumn("bucket_ts", F.col("bucket_ts").cast("timestamp"))
-    out = wavelet_ops.dwt_windows(
-        df, "turns", wavelet="haar", levels=2, window_len=8,
-        sparse_fill_step="1 minute",
+    for op in WINDOWED_OPS:
+        out = op(
+            df, "turns", wavelet="haar", levels=2, window_len=8,
+            sparse_fill_step="1 minute",
+        )
+        with pytest.raises(Exception, match="duplicate"):
+            out.collect()
+
+
+def test_non_dyadic_window_len_rejected_at_construction(spark):
+    """A decimating transform cannot halve a 100-point window 5 times: the
+    operator must refuse on the driver, while building the DataFrame, not
+    in every Python task after the shuffle. MODWT is undecimated, so any
+    window length is valid there."""
+    import pytest
+
+    filled = _filled(spark, n=2, seed=6)
+    kw = dict(levels=5, window_len=100)
+    for build in (
+        lambda: wavelet_ops.dwt_windows(filled, "turns", **kw),
+        lambda: wavelet_ops.energy_windows(filled, "turns", **kw),
+        lambda: wavelet_ops.energy_windows(
+            filled, "turns", transform="wpt", **kw
+        ),
+        lambda: wavelet_ops.denoise_windows(filled, "turns", **kw),
+    ):
+        with pytest.raises(ValueError, match="divisible by 2\\*\\*levels"):
+            build()
+    modwt = wavelet_ops.energy_windows(
+        filled, "turns", transform="modwt", **kw
+    ).toPandas()
+    assert len(modwt) > 0 and modwt["energy"].notna().all()
+
+
+def test_energy_windows_wpt_parseval_and_band_labels(spark):
+    """Wavelet-packet energies: every window carries exactly the
+    ``2**levels`` leaf bands band00..bandNN at level ``levels``, and their
+    energies sum to the window's input energy (orthonormal Parseval over
+    the leaf set, zero-padded tail included)."""
+    filled = _filled(spark, n=5, seed=9)
+    levels, window_len = 3, 64
+    got = wavelet_ops.energy_windows(
+        filled, "turns", wavelet="db4", levels=levels,
+        window_len=window_len, transform="wpt",
+    ).toPandas()
+    labels = {f"band{i:02d}" for i in range(2**levels)}
+    assert (got["level"] == levels).all()
+    assert (got["wavelet"] == "db4").all()
+    per_window = got.groupby(["conv_id", "window_id"])
+    assert all(sorted(g) == sorted(labels) for _, g in per_window["coef_type"])
+    e_out = per_window["energy"].sum()
+
+    src = filled.orderBy("conv_id", "bucket_ts").toPandas()
+    src["window_id"] = src.groupby("conv_id").cumcount() // window_len
+    e_in = (
+        src.assign(e=src["turns"].to_numpy(dtype=np.float64) ** 2)
+        .groupby(["conv_id", "window_id"])["e"].sum()
     )
-    with pytest.raises(Exception, match="duplicate"):
-        out.collect()
+    assert set(e_out.index) == set(e_in.index)
+    np.testing.assert_allclose(
+        e_out.sort_index().to_numpy(), e_in.sort_index().to_numpy(),
+        rtol=1e-9, atol=1e-9,
+    )

@@ -59,14 +59,6 @@ def max_level(n: int, wavelet: str) -> int:
     return lvl
 
 
-def _analysis_step(x: np.ndarray, filt: np.ndarray) -> np.ndarray:
-    """Periodized downsampling convolution: y[k] = sum_m filt[m] x[(2k+m)%N]."""
-    n = x.size
-    k = np.arange(n // 2)
-    idx = (2 * k[:, None] + np.arange(filt.size)[None, :]) % n
-    return x[idx] @ filt
-
-
 def dwt(x: np.ndarray, wavelet: str = "haar", levels: int | None = None):
     """Periodized orthonormal DWT pyramid.
 

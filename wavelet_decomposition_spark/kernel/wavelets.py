@@ -27,9 +27,7 @@ from .sparse import CSRMatrix
 # Reference pipeline parameters (tutorial.ipynb cell 6).
 VY, VW, VD = 6, 3, 6
 DPY = 365
-DPD_RAW = 48  # samples/day in the input workbook
 NDPD = 64  # samples/day after resample
-N_POINTS = DPY * NDPD  # 23360
 TIME_SCALES_HOURS = [
     0.75, 1.5, 3.0, 6.0, 12.0, 24.0, 42.0, 84.0, 168.0,
     273.75, 547.5, 1095.0, 2190.0, 4380.0, 8760.0,
@@ -188,19 +186,6 @@ def flat_to_scale_pos(
         )
         pos_parts.append(np.arange(size - 1, -1, -1, dtype=np.int32))
     return np.concatenate(scale_idx_parts), np.concatenate(pos_parts)
-
-
-def scale_pos_to_flat(
-    vy: int = VY, vw: int = VW, vd: int = VD, dpy: int = DPY
-) -> np.ndarray:
-    """Inverse permutation: flat index of each (scale_idx, pos), as a lookup
-    array indexed by the rank of (scale_idx, pos) in lexicographic order."""
-    scale_idx, pos = flat_to_scale_pos(vy, vw, vd, dpy)
-    m = scale_idx.size
-    order = np.lexsort((pos, scale_idx))
-    inv = np.empty(m, dtype=np.int64)
-    inv[:] = np.arange(m)[order]
-    return inv  # inv[rank] = flat index
 
 
 def scale_sizes(vy: int = VY, vw: int = VW, vd: int = VD, dpy: int = DPY):

@@ -62,7 +62,3 @@ def conversation_stats(transcripts: DataFrame, n_salts: int = 16) -> DataFrame:
         F.max("p_max_ts").alias("last_ts"),
     )
 
-
-def turns_per_second(transcripts: DataFrame) -> DataFrame:
-    """Convenience: the turns/sec series alone (north star names it first)."""
-    return activity_raw(transcripts).select("conv_id", "bucket_ts", "turns")

@@ -34,12 +34,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _seg_cost(S1: np.ndarray, S2: np.ndarray, a, b):
-    """Gaussian mean-shift cost of [a, b): sum (y - mean)^2 via prefixes."""
-    s = S1[b] - S1[a]
-    return (S2[b] - S2[a]) - s * s / (b - a)
-
-
 def pelt_segments_np(y: np.ndarray, beta: float) -> list[int]:
     """Changepoint positions (segment START indices, excluding 0) of the
     exact penalized optimum, by PELT. Driver/test-callable numpy core."""

@@ -4,8 +4,9 @@ timestamps per (conv_id, day) block, stored as BinaryType columns.
 The reference's analogue is its memo-cache layer (S2/S3 in SURVEY.md §2.1);
 the north star requires the compressed representation per retention tier.
 Encode/decode are vectorized numpy codecs (kernel/gorilla.py,
-kernel/deltadelta.py) inside ``applyInPandas`` — one block per group, no
-per-row Python. Round-trips are bit-exact, so a tier can be stored
+kernel/deltadelta.py) inside a bucketed ``applyInPandas``
+(wavelet_ops.bucketed_apply) — one hash bucket of conversations per
+group, no per-row Python. Round-trips are bit-exact, so a tier can be stored
 compressed and re-expanded losslessly (test invariant).
 
 Block schema:
@@ -20,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernel import deltadelta, gorilla
+from .wavelet_ops import bucketed_apply
 
 
 def encode_blocks(
@@ -57,25 +59,13 @@ def encode_blocks(
             )
         return pd.DataFrame(out)
 
+    # Python-CPU-bound group stage: bucketed conversations with a
+    # size-derived task count (see wavelet_ops.bucketed_apply); explicit
+    # pre-UDF projection — Catalyst cannot prune into grouped-map UDFs
     with_day = tier_df.select(group_col, ts_col, *value_cols).withColumn(
         block_col, F.to_date(ts_col)
     )
-    # Python-CPU-bound group stage: size-derived task count and bucketed
-    # conversations (see wavelet_ops.python_stage_partitions for the
-    # rationale and measurements); explicit pre-UDF projection —
-    # Catalyst cannot prune into grouped-map UDFs
-    from .wavelet_ops import python_stage_partitions
-
-    p = python_stage_partitions(with_day)
-    n_buckets = p * 4
-    bucketed = with_day.withColumn(
-        "_bucket", F.pmod(F.hash(group_col), F.lit(n_buckets))
-    )
-    return (
-        bucketed.repartition(p, "_bucket")
-        .groupBy("_bucket")
-        .applyInPandas(_enc, schema=schema)
-    )
+    return bucketed_apply(with_day, group_col, _enc, schema)
 
 
 def decode_blocks(
@@ -105,14 +95,9 @@ def decode_blocks(
             data[c] = vals
         return pd.DataFrame(data)
 
-    p = blocks.sparkSession.sparkContext.defaultParallelism * 2
-    bucketed = blocks.withColumn(
-        "_bucket", F.pmod(F.hash(group_col), F.lit(p * 4))
-    )
-    return (
-        bucketed.repartition(p, "_bucket")
-        .groupBy("_bucket")
-        .applyInPandas(_dec, schema=schema)
+    return bucketed_apply(
+        blocks, group_col, _dec, schema,
+        blocks.sparkSession.sparkContext.defaultParallelism * 2,
     )
 
 

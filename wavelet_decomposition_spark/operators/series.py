@@ -1,4 +1,4 @@
-"""Per-point series transforms — reference operators P1/P2/P3/P5/P6/P7.
+"""Per-point series transforms — reference operators P1/P2/P7.
 
 All pure column expressions / window aggregates (JVM-side, whole-stage
 codegen); no Python in these paths.
@@ -12,7 +12,7 @@ of the reference's ``dict[str, 1-D array]`` stacked-signal model
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 GROUP_KEYS = ["series_id", "year"]
@@ -33,36 +33,6 @@ def normalize_yearly_mean(df: DataFrame) -> DataFrame:
     group key shared with downstream per-group stages."""
     w = Window.partitionBy(*GROUP_KEYS)
     return df.withColumn("value", F.col("value") / F.avg("value").over(w))
-
-
-def remove_mean(df: DataFrame) -> DataFrame:
-    """P3 — subtract the per-group mean (calc_translations.py:22)."""
-    w = Window.partitionBy(*GROUP_KEYS)
-    return df.withColumn("value", F.col("value") - F.avg("value").over(w))
-
-
-def circular_translate(df: DataFrame, shift, n: int) -> DataFrame:
-    """P5 — circular shift: out[i] = in[(i + shift) mod n]
-    (reference ``translate``, calc_translations.py:12-18 — an O(n) Python
-    loop there; here a pure index projection, no shuffle).
-
-    ``shift`` may be a literal int or a Column (e.g. joined per-year
-    translation). Negative shifts wrap (pmod)."""
-    s = shift if isinstance(shift, Column) else F.lit(int(shift))
-    return df.withColumn("idx", F.pmod(F.col("idx") - s, F.lit(n)))
-
-
-def series_subtract(prod: DataFrame, conso: DataFrame, value_col: str = "beta") -> DataFrame:
-    """P6/J1 — production minus consumption, aligned positionally in the
-    reference (tutorial cells 25/30/32), here an explicit equi-join on the
-    coefficient key. Both sides are coefficient tables of the same year set,
-    so the join keys are co-partitioned after the solve stage."""
-    keys = ["year", "scale_idx", "pos"]
-    p = prod.select(*keys, F.col(value_col).alias("p_val"))
-    c = conso.select(*keys, F.col(value_col).alias("c_val"))
-    return p.join(c, keys).select(
-        *keys, (F.col("p_val") - F.col("c_val")).alias(value_col)
-    )
 
 
 def mask_scales(df: DataFrame, keep_scales, value_col: str = "beta") -> DataFrame:

@@ -729,12 +729,12 @@ def holt_winters(
             for i, (sid, xs) in enumerate(items):
                 ok = True
                 if verify:
-                    l2, t2, s2, f2 = _run_matrix(xs[None, :])
+                    l2, t2, s2, f2 = _run_scalar(xs)
                     ok = (
-                        _close(l2[0], lvl[i])
-                        and _close(t2[0], trend[i])
-                        and _close(s2[0], sse[i])
-                        and _close(f2[0], fc[i])
+                        _close(l2, lvl[i])
+                        and _close(t2, trend[i])
+                        and _close(s2, sse[i])
+                        and _close(f2, fc[i])
                     )
                 for h in range(1, H + 1):
                     cols[group_col].append(sid)

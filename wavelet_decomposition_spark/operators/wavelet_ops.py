@@ -2,11 +2,14 @@
 (north star: per-scale detail/approximation coefficients and energy spectra
 as vectorized Arrow pandas UDFs).
 
-Each (conv_id) group's gap-filled series is cut into fixed dyadic windows of
-``2**levels_cap * k`` points; one ``applyInPandas`` call computes the whole
-pyramid for all of a group's windows vectorized (numpy kernel,
-kernel/dwt.py). Group size is bounded by the window length x windows per
-conversation, so Arrow batches stay small and skew is capped.
+Each conversation's gap-filled series is cut into fixed windows of
+``window_len`` points (dyadic: ``2**levels * k``). The Python stage is
+bucketed (:func:`bucketed_apply`): conversations hash into ``4 x`` the task
+count buckets, and one ``applyInPandas`` group is one such bucket of whole
+conversations. Inside it, :func:`_window_matrix` scatters every window of
+the bucket into one zero-padded (windows, window_len) matrix and the whole
+pyramid runs as whole-matrix numpy calls (kernel/dwt.py), so per-conversation
+Python overhead is amortized across the bucket.
 
 Output: the Python stage emits the compact band form (BAND_SCHEMA — one row
 per (conv_id, window_id, band) with coefficients packed as array<double>;
@@ -74,13 +77,70 @@ def python_stage_partitions(projected: DataFrame) -> int:
     return max(dp, min(b // (2 << 20), max(dp * 4, b // (64 << 20))))
 
 
-def _positions(pdf, codes, counts, starts, ts_col, step_us, window_len):
-    """(grid position per row, windows per conversation).
+def bucketed_apply(
+    projected: DataFrame,
+    group_col: str,
+    fn,
+    schema: str,
+    n_partitions: int | None = None,
+) -> DataFrame:
+    """Run the grouped-map ``fn`` over hash buckets of ``group_col`` — the
+    one bucketing policy of every Python-CPU-bound group stage.
+
+    ``projected`` must hold only the columns ``fn`` reads: Catalyst cannot
+    prune columns INTO a grouped-map UDF (the whole row ships through
+    Arrow). The task count defaults to :func:`python_stage_partitions`
+    (AQE's byte-based coalescing can't see Python CPU). Each call of ``fn``
+    gets one of ``n_partitions * 4`` buckets of whole ``group_col`` values.
+    The explicit repartition on the bucket key both pins the task count and
+    satisfies the groupBy clustering, so the stage adds exactly one
+    exchange.
+    """
+    if n_partitions is None:
+        n_partitions = python_stage_partitions(projected)
+    bucketed = projected.withColumn(
+        "_bucket", F.pmod(F.hash(group_col), F.lit(n_partitions * 4))
+    )
+    return (
+        bucketed.repartition(n_partitions, "_bucket")
+        .groupBy("_bucket")
+        .applyInPandas(fn, schema=schema)
+    )
+
+
+def _window_args(levels, window_len, sparse_fill_step, dyadic=True):
+    """``(window_len, step_us)`` of a windowed operator.
+
+    ``window_len`` defaults to ``2**levels * 8``. A decimating transform
+    (``dyadic``) halves each window ``levels`` times, so any other length
+    is rejected here on the driver instead of in every Python task after
+    the shuffle. ``step_us`` is ``sparse_fill_step`` in microseconds, or
+    None for dense input."""
+    if window_len is None:
+        window_len = (2**levels) * 8
+    if dyadic and window_len % (2**levels):
+        raise ValueError("window_len must be divisible by 2**levels")
+    step_us = (
+        int(pd.Timedelta(sparse_fill_step).total_seconds() * 1e6)
+        if sparse_fill_step is not None
+        else None
+    )
+    return window_len, step_us
+
+
+def _window_matrix(pdf, group_col, ts_col, value_col, step_us, window_len):
+    """Scatter one bucket's rows into a zero-padded (windows, window_len)
+    matrix ``M``; returns ``(M, win_conv, win_id)`` with the conversation
+    and per-conversation window id of each row of ``M``.
 
     Dense mode (``step_us`` None): rows ARE the grid (input pre-gap-filled).
     Sparse mode: position = (ts - conv's first ts) / step; absent grid points
     simply never get scattered — they stay zero in the window matrix, which
     is precisely ``gapfill_zero``'s output for count series."""
+    pdf = pdf.sort_values([group_col, ts_col])
+    codes, uniques = pd.factorize(pdf[group_col], sort=False)
+    counts = np.bincount(codes)
+    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
     if step_us is None:
         pos = np.arange(len(pdf)) - starts[codes]
         nwin = np.maximum(1, -(-counts // window_len))
@@ -101,7 +161,49 @@ def _positions(pdf, codes, counts, starts, ts_col, step_us, window_len):
             )
         last = pos[starts + counts - 1]
         nwin = np.maximum(1, -(-(last + 1) // window_len))
-    return pos, nwin
+    win_base = np.concatenate(([0], np.cumsum(nwin)[:-1]))
+    M = np.zeros((int(nwin.sum()), window_len), dtype=np.float64)
+    M[win_base[codes] + pos // window_len, pos % window_len] = (
+        pdf[value_col].to_numpy(dtype=np.float64)
+    )
+    win_code = np.repeat(np.arange(counts.size), nwin)
+    win_conv = np.asarray(uniques, dtype=object)[win_code]
+    win_id = (np.arange(len(M)) - win_base[win_code]).astype(np.int32)
+    return M, win_conv, win_id
+
+
+def _bands(M, wavelet, levels, transform):
+    """``[(level, C, coef_type)]`` of ``transform`` over the rows of ``M``:
+    the details finest first, then the approximation — or, for ``wpt``,
+    the ``2**levels`` leaf bands in natural (Paley) order."""
+    if transform == "wpt":
+        return [
+            (levels, C, f"band{i:02d}")
+            for i, C in enumerate(kdwt.wpt_batch(M, wavelet, levels))
+        ]
+    batch = kdwt.dwt_batch if transform == "dwt" else kdwt.modwt_batch
+    details, approx = batch(M, wavelet, levels)
+    return [
+        *(((j + 1), d, "detail") for j, d in enumerate(details)),
+        (levels, approx, "approx"),
+    ]
+
+
+def _band_frame(win_conv, win_id, wavelet, bands, col, values):
+    """Band-major output frame: one row per (band, window) carrying
+    ``values`` (band-major, window within) as column ``col``."""
+    lvls, _, types = zip(*bands)
+    n_win = len(win_id)
+    return pd.DataFrame(
+        {
+            "conv_id": np.tile(win_conv, len(bands)),
+            "window_id": np.tile(win_id, len(bands)),
+            "wavelet": wavelet,
+            "level": np.repeat(np.array(lvls, dtype=np.int32), n_win),
+            "coef_type": np.repeat(np.array(types, dtype=object), n_win),
+            col: values,
+        }
+    )
 
 
 def dwt_window_bands(
@@ -130,87 +232,27 @@ def dwt_window_bands(
     tests/test_wavelet_ops_spark.py). At scale this removes the exploded
     grid's join/shuffle — the gap-filled series is never materialized.
     """
-    if window_len is None:
-        window_len = (2**levels) * 8
     if transform not in ("dwt", "modwt"):
         raise ValueError(transform)
-    step_us = (
-        int(pd.Timedelta(sparse_fill_step).total_seconds() * 1e6)
-        if sparse_fill_step is not None
-        else None
+    window_len, step_us = _window_args(
+        levels, window_len, sparse_fill_step, dyadic=transform != "modwt"
     )
 
     def _pyramid_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        """One Spark group = one BUCKET of conversations; every step below is
-        a whole-bucket numpy operation — per-conversation Python overhead is
-        amortized across the bucket (thousands of tiny per-conv UDF calls
-        were the profile's dominant cost)."""
-        pdf = pdf.sort_values([group_col, ts_col])
-        codes, uniques = pd.factorize(pdf[group_col], sort=False)
-        x = pdf[value_col].to_numpy(dtype=np.float64)
-        counts = np.bincount(codes)
-        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        pos, nwin = _positions(pdf, codes, counts, starts, ts_col,
-                               step_us, window_len)
-        win_base = np.concatenate(([0], np.cumsum(nwin)[:-1]))
-        total_win = int(nwin.sum())
-        M = np.zeros((total_win, window_len), dtype=np.float64)
-        M[win_base[codes] + pos // window_len, pos % window_len] = x
-
-        if transform == "dwt":
-            details, approx = kdwt.dwt_batch(M, wavelet, levels)
-        else:
-            details, approx = kdwt.modwt_batch(M, wavelet, levels)
-
-        win_code = np.repeat(np.arange(counts.size), nwin)
-        win_conv = np.asarray(uniques, dtype=object)[win_code]
-        win_id = (np.arange(total_win) - win_base[win_code]).astype(np.int32)
-
+        M, win_conv, win_id = _window_matrix(
+            pdf, group_col, ts_col, value_col, step_us, window_len
+        )
+        bands = _bands(M, wavelet, levels, transform)
         # one output row per (window, band): the per-coefficient long rows
         # (window_len rows per window, conv_id string repeated for each) made
         # the Arrow exchange and the workers' allocation churn the dominant
         # cost at scale — the k-explosion now happens JVM-side (dwt_windows)
-        bands = [
-            *(((j + 1), d, "detail") for j, d in enumerate(details)),
-            (levels, approx, "approx"),
-        ]
-        n_bands = len(bands)
-        lvls = np.fromiter((b[0] for b in bands), dtype=np.int32, count=n_bands)
-        types = np.array([b[2] for b in bands], dtype=object)
-        coefs: list[np.ndarray] = []
-        for _lvl, C, _ctype in bands:
-            coefs.extend(np.ascontiguousarray(C))  # band-major, window within
-        return pd.DataFrame(
-            {
-                "conv_id": np.tile(win_conv, n_bands),
-                "window_id": np.tile(win_id, n_bands),
-                "wavelet": wavelet,
-                "level": np.repeat(lvls, total_win),
-                "coef_type": np.repeat(types, total_win),
-                "coefs": coefs,
-            }
-        )
+        coefs = [row for _, C, _ in bands for row in np.ascontiguousarray(C)]
+        return _band_frame(win_conv, win_id, wavelet, bands, "coefs", coefs)
 
-    # Bucketed fan-out, task count derived from the projected input's
-    # size (python_stage_partitions): AQE's byte-based coalescing can't
-    # see Python CPU, and a fixed parallelism multiple overpays per-task
-    # overhead on small tiers. The explicit repartition on the bucket
-    # key both pins the task count and satisfies the groupBy clustering
-    # (no extra shuffle).
-    # explicit projection: Catalyst cannot prune columns INTO a grouped-map
-    # UDF (the whole row ships through Arrow), so drop everything the
-    # pyramid doesn't read before the shuffle
-    projected = filled.select(group_col, ts_col, value_col)
-    if n_partitions is None:
-        n_partitions = python_stage_partitions(projected)
-    n_buckets = n_partitions * 4
-    bucketed = projected.withColumn(
-        "_bucket", F.pmod(F.hash(group_col), F.lit(n_buckets))
-    )
-    return (
-        bucketed.repartition(n_partitions, "_bucket")
-        .groupBy("_bucket")
-        .applyInPandas(_pyramid_bucket, schema=BAND_SCHEMA)
+    return bucketed_apply(
+        filled.select(group_col, ts_col, value_col), group_col,
+        _pyramid_bucket, BAND_SCHEMA, n_partitions,
     )
 
 
@@ -381,81 +423,25 @@ def energy_windows(
     are coarsest) as rows ``(level=levels, coef_type='bandNN')`` in
     natural (Paley) order; the orthonormal Parseval identity holds over
     the leaf set exactly as over the pyramid's bands."""
-    if window_len is None:
-        window_len = (2**levels) * 8
     if transform not in ("dwt", "modwt", "wpt"):
         raise ValueError(transform)
-    step_us = (
-        int(pd.Timedelta(sparse_fill_step).total_seconds() * 1e6)
-        if sparse_fill_step is not None
-        else None
+    window_len, step_us = _window_args(
+        levels, window_len, sparse_fill_step, dyadic=transform != "modwt"
     )
 
     def _energy_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([group_col, ts_col])
-        codes, uniques = pd.factorize(pdf[group_col], sort=False)
-        x = pdf[value_col].to_numpy(dtype=np.float64)
-        counts = np.bincount(codes)
-        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        pos, nwin = _positions(pdf, codes, counts, starts, ts_col,
-                               step_us, window_len)
-        win_base = np.concatenate(([0], np.cumsum(nwin)[:-1]))
-        total_win = int(nwin.sum())
-        M = np.zeros((total_win, window_len), dtype=np.float64)
-        M[win_base[codes] + pos // window_len, pos % window_len] = x
-        if transform == "dwt":
-            details, approx = kdwt.dwt_batch(M, wavelet, levels)
-        elif transform == "modwt":
-            details, approx = kdwt.modwt_batch(M, wavelet, levels)
-        else:
-            details, approx = None, None
-
-        win_code = np.repeat(np.arange(counts.size), nwin)
-        win_conv = np.asarray(uniques, dtype=object)[win_code]
-        win_id = (np.arange(total_win) - win_base[win_code]).astype(np.int32)
-
-        if transform == "wpt":
-            bands = [
-                (levels, b, f"band{i:02d}")
-                for i, b in enumerate(kdwt.wpt_batch(M, wavelet, levels))
-            ]
-        else:
-            bands = [
-                *(((j + 1), d, "detail") for j, d in enumerate(details)),
-                (levels, approx, "approx"),
-            ]
-        n_bands = len(bands)
-        energies = np.empty((n_bands, total_win), dtype=np.float64)
-        lvls = np.empty(n_bands, dtype=np.int32)
-        types: list[str] = []
-        for i, (lvl, C, ctype) in enumerate(bands):
-            energies[i] = np.einsum("ij,ij->i", C, C)
-            lvls[i] = lvl
-            types.append(ctype)
-        return pd.DataFrame(
-            {
-                "conv_id": np.tile(win_conv, n_bands),
-                "window_id": np.tile(win_id, n_bands),
-                "wavelet": wavelet,
-                "level": np.repeat(lvls, total_win),
-                "coef_type": np.repeat(np.array(types, dtype=object), total_win),
-                "energy": energies.ravel(),
-            }
+        M, win_conv, win_id = _window_matrix(
+            pdf, group_col, ts_col, value_col, step_us, window_len
         )
+        bands = _bands(M, wavelet, levels, transform)
+        energies = np.concatenate(
+            [np.einsum("ij,ij->i", C, C) for _, C, _ in bands]
+        )
+        return _band_frame(win_conv, win_id, wavelet, bands, "energy", energies)
 
-    # same explicit pre-UDF projection and size-derived task count as
-    # dwt_window_bands
-    projected = filled.select(group_col, ts_col, value_col)
-    if n_partitions is None:
-        n_partitions = python_stage_partitions(projected)
-    n_buckets = n_partitions * 4
-    bucketed = projected.withColumn(
-        "_bucket", F.pmod(F.hash(group_col), F.lit(n_buckets))
-    )
-    return (
-        bucketed.repartition(n_partitions, "_bucket")
-        .groupBy("_bucket")
-        .applyInPandas(_energy_bucket, schema=ENERGY_SCHEMA)
+    return bucketed_apply(
+        filled.select(group_col, ts_col, value_col), group_col,
+        _energy_bucket, ENERGY_SCHEMA, n_partitions,
     )
 
 
@@ -502,31 +488,16 @@ def denoise_windows(
     - ``n_zeroed`` of ``n_detail``: how much of the detail mass the
       threshold removed.
     """
-    if window_len is None:
-        window_len = (2**levels) * 8
     if mode not in ("soft", "hard"):
         raise ValueError(mode)
     if isinstance(threshold, str) and threshold != "universal":
         raise ValueError(threshold)
-    step_us = (
-        int(pd.Timedelta(sparse_fill_step).total_seconds() * 1e6)
-        if sparse_fill_step is not None
-        else None
-    )
+    window_len, step_us = _window_args(levels, window_len, sparse_fill_step)
 
     def _denoise_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([group_col, ts_col])
-        codes, uniques = pd.factorize(pdf[group_col], sort=False)
-        x = pdf[value_col].to_numpy(dtype=np.float64)
-        counts = np.bincount(codes)
-        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        pos, nwin = _positions(pdf, codes, counts, starts, ts_col,
-                               step_us, window_len)
-        win_base = np.concatenate(([0], np.cumsum(nwin)[:-1]))
-        total_win = int(nwin.sum())
-        M = np.zeros((total_win, window_len), dtype=np.float64)
-        M[win_base[codes] + pos // window_len, pos % window_len] = x
-
+        M, win_conv, win_id = _window_matrix(
+            pdf, group_col, ts_col, value_col, step_us, window_len
+        )
         details, approx = kdwt.dwt_batch(M, wavelet, levels)
         input_energy = np.einsum("ij,ij->i", M, M)
         coef_energy = np.einsum("ij,ij->i", approx, approx)
@@ -537,10 +508,10 @@ def denoise_windows(
         if threshold == "universal":
             thr = sigma * np.sqrt(2.0 * np.log(window_len))
         else:
-            thr = np.full(total_win, float(threshold))
+            thr = np.full(len(M), float(threshold))
 
         shrunk = []
-        n_zeroed = np.zeros(total_win, dtype=np.int64)
+        n_zeroed = np.zeros(len(M), dtype=np.int64)
         n_detail = 0
         for d in details:
             n_detail += d.shape[1]
@@ -557,9 +528,6 @@ def denoise_windows(
         roundtrip = kdwt.idwt_batch(details, approx, wavelet)
         rt_num = np.sqrt(np.einsum("ij,ij->i", roundtrip - M, roundtrip - M))
         rt_den = np.maximum(np.sqrt(input_energy), 1e-300)
-        win_code = np.repeat(np.arange(counts.size), nwin)
-        win_conv = np.asarray(uniques, dtype=object)[win_code]
-        win_id = (np.arange(total_win) - win_base[win_code]).astype(np.int32)
         return pd.DataFrame(
             {
                 "conv_id": win_conv,
@@ -578,15 +546,7 @@ def denoise_windows(
             }
         )
 
-    projected = filled.select(group_col, ts_col, value_col)
-    if n_partitions is None:
-        n_partitions = python_stage_partitions(projected)
-    n_buckets = n_partitions * 4
-    bucketed = projected.withColumn(
-        "_bucket", F.pmod(F.hash(group_col), F.lit(n_buckets))
-    )
-    return (
-        bucketed.repartition(n_partitions, "_bucket")
-        .groupBy("_bucket")
-        .applyInPandas(_denoise_bucket, schema=DENOISE_SCHEMA)
+    return bucketed_apply(
+        filled.select(group_col, ts_col, value_col), group_col,
+        _denoise_bucket, DENOISE_SCHEMA, n_partitions,
     )
