@@ -173,127 +173,11 @@ def main():
     n_turns = flagship_pipeline.last_n_turns
 
     # --- representative operator queries on the sf tables ------------------
-    bench_queries = [
-        "activity_1m", "rollup_1h", "gapfill_locf", "epn_thresholds",
-        "pricing_summary", "nation_revenue", "shipping_priority", "returned_customers", "dedup_groups", "ngram_jaccard",
-        "ngram_jaccard_bounded", "doc_stats", "ann_topk", "pq_ann_topk",
-        "minhash_pairs",
-        "simhash_near", "gorilla_blocks", "translation_search", "sessionize",
-        # round-4 additions: as-of join + interpolating gap-fill (timeseries),
-        # cluster contraction over near-dup pairs (GEMM exact pair list +
-        # large/small-star components), benchmark decontamination, and
-        # deterministic hash-split
-        "asof_join", "gapfill_interp", "dedup_clusters", "decontaminate",
-        "stratified_split",
-        # round-5: CMS heavy hitters over the planted-skew events (the
-        # a-priori-support production path of the freq_items contract),
-        # plus the context-window prep pair (chunking + sequence packing)
-        "cms_heavy_hitters", "doc_chunks", "pack_sequences",
-        # ts-analytics pack: rolling stats (exact-integer window sums),
-        # EWMA (Arrow pandas recurrence), ACF (explode+join, no per-lag
-        # sorts), M4 pixel downsampling, median/MAD anomalies, CUSUM
-        # change-point, classical seasonal decomposition
-        "ts_rolling", "ts_ewma", "ts_acf", "m4_downsample", "ts_anomaly",
-        "ts_cusum", "ts_seasonal", "ts_brown_les", "ts_xcorr",
-        "lttb_downsample", "ts_rolling_median", "ts_theil_sen", "ts_strengths", "ts_period", "value_histogram", "weekly_profile", "top_users_per_hour", "spectral_features", "data_expectations", "hourly_percentiles", "series_corr_matrix", "hourly_pivot", "event_transitions", "freq_items", "snapshot_diff", "user_profile",
-        # text cleaning: PII redaction + boilerplate strip + intra-doc
-        # repetition scoring (pure JVM regexp/aggregate paths)
-        "pii_redact", "repetition_ratio",
-        # temporal joins/aggregation over irregular samples: bucketized
-        # point-in-interval join, LOCF time-weighted bucket means,
-        # PromQL-style counter rate with reset detection, and
-        # gaps-and-islands interval union (all pure JVM, one exchange)
-        "interval_join", "time_weighted_avg", "counter_rate",
-        "interval_union",
-        # event product-analytics: weekly retention triangle + ordered
-        # 3-step funnel with whole-funnel window (pure JVM)
-        "cohort_retention", "funnel_steps",
-        # write-side layout: range-clustered capped-file parquet with
-        # metadata-verified pruning invariants
-        "clustered_layout",
-        # the reference's complete E3 offline job (3 families x 23,360
-        # LSQR fits, golden-parity invariant riding on every row) —
-        # reference-equivalent cost: "hours single-core per year"
-        "translation_full",
-        # the reference's full E1 flagship: all 21 series-year LSQR solves
-        # (7yr x {Consumption,PV} square + 7yr x Wind sine) with golden
-        # parity riding on every row; reference-equivalent single-core
-        # baseline is 73.2 s for the 14 square solves alone (BASELINE.md)
-        "full_decomposition",
-        # round-5: language ID, planted-skew relational pair, mergeable
-        # KLL/HLL sketch tiers, trailing-window distinct (exact 24x-fan-out
-        # form AND the zero-fan-out HLL range-frame path), banded DTW,
-        # VisuShrink denoising, OLAP cube, hopping windows, ranking pack
-        "lang_id", "sessionize_skewed", "user_profile_skewed",
-        "sketch_tier_merge", "sliding_distinct", "sliding_distinct_sketch",
-        "dtw_pairs", "dwt_denoise", "cube_profile", "hopping_window",
-        "rank_functions", "response_latency",
-        # round-5 retention-engine completions: routed partition-pruned
-        # tier read (write + pruned read each repeat), SCD2 run-length
-        # version history (one shuffle), bin-pack compaction with content
-        # checksum verification (write + two verify scans each repeat)
-        "tier_routed_read", "scd2_build", "compact_tier",
-        # single-pass column profiling (unpivot + grouped aggregate) and
-        # the point-in-time probe against the SCD2 history
-        "table_profile", "scd2_asof_probe",
-        # hyperfunction completions: OHLC candles (one hash aggregate,
-        # struct tie-breaks), LOCF time-in-state shares, and additive
-        # Holt-Winters forecasting (bucket-vectorized Arrow recurrence
-        # with in-kernel dual-path verification)
-        "ohlc_bars", "state_durations", "holt_winters",
-        # per-tier wavelet parity: the full rollup cascade + dual-path
-        # Haar pyramid (Arrow kernel vs closed-form relational) at all
-        # three retention tiers, plus cascade-vs-direct point parity
-        "tier_wavelet_parity",
-        # matrix-profile motif/discord discovery (blocked GEMM per
-        # bounded series group + planted-series + relational recompute)
-        "matrix_profile",
-        # PAA+SAX symbolic words (pure-JVM relational, oracle-checked
-        # down to the discrete symbols)
-        "sax_words",
-        # search/retrieval surface: blocked inverted index, BM25, and
-        # posting intersection over the documents corpus
-        "inverted_index", "bm25_topk", "boolean_retrieval",
-        # graph centrality: 12 power iterations + planted star run
-        "pagerank",
-        # lakehouse primitives: CDC merge, FK gate, weighted sampling,
-        # JSON extraction, morton keys
-        "merge_upsert", "referential_integrity", "weighted_sample",
-        "json_extract_stats", "zorder_values", "zorder_layout",
-        # symbolic anomaly, rank binning, forecaster evaluation
-        "sax_anomaly", "feature_binning", "forecast_backtest",
-        # hybrid search: RRF fusion of dense + lexical rankings
-        "hybrid_search_rrf",
-        # dashboard rollup + session sequence mining + graph kernel
-        "topn_others", "session_paths", "triangle_count",
-        # long-memory R/S ladder, trigram corpus-familiarity quality
-        # profile, and prefix-blocked exact edit-distance near-dups
-        "hurst_rs", "trigram_quality", "edit_distance_pairs",
-        # distributed bit-deterministic Lloyd's k-means (2 fits + label
-        # pass per repeat — the refit-identical invariant is the query)
-        "kmeans_clusters",
-        # exact-integer-Gram PCA (2 fits + projection pass per repeat)
-        "pca_embeddings",
-        # shared-prefix dedup: oracle-checked event sequences + planted
-        # transcript forks recovered exactly
-        "event_prefix_groups", "conversation_forks",
-        # exact penalized segmentation with in-kernel unpruned-DP twin
-        "pelt_changepoints",
-        # distributed BPE training (24 merge rounds on the word table,
-        # dual-path + telescoped bookkeeping + encode pass per repeat)
-        "bpe_vocab",
-        # DSIR importance weights (oracle-exact integer log-ratio dot)
-        "dsir_weights",
-        # PSI snapshot-drift monitor (oracle-exact integer micro terms)
-        "drift_psi",
-        # full wavelet-packet tree energy spectra (16 uniform bands)
-        "wpt_energy",
-        # robust feature scaling: rank-exact per-group winsorization
-        "winsorize_values",
-    ]
-    qs = entrymod.queries()
-    for name in bench_queries:
-        run_timed(name, lambda name=name: _noop(qs[name](spark, sf_dir)))
+    # the registry marks them (@query(bench=True)); they run in queries()
+    # order
+    for name, fn in entrymod.queries().items():
+        if fn.bench:
+            run_timed(name, lambda fn=fn: _noop(fn(spark, sf_dir)))
 
     total = round(sum(timings.values()), 3)
     # Full record (per-query min-of-warm, cold walls incl. codegen/JIT, and

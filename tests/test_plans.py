@@ -192,25 +192,27 @@ def test_wavelet_stage_single_shuffle(spark, op):
 def test_no_undesigned_nested_loop_joins_anywhere(spark):
     """Full-surface sweep (the pytest form of tools/plan_audit.py): plan
     every driver query at sf0.001 and assert no BroadcastNestedLoopJoin /
-    CartesianProduct outside the designed tiny-broadcast allowlist — the
-    one plan regression that silently turns a scale path quadratic."""
+    CartesianProduct outside the queries marked ``designed_bnl`` — the
+    one plan regression that silently turns a scale path quadratic. A
+    query marked ``designed_bnl`` whose plan has no such join fails too,
+    so the marks cannot go stale."""
     import re
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
-    from tools.plan_audit import DESIGNED_BNL
 
-    offenders = {}
+    offenders, stale = {}, []
     for name, fn in sorted(entrymod.queries().items()):
         df = fn(spark, "/root/testdata/sf0.001")
         plan = df._jdf.queryExecution().executedPlan().toString()
         n = len(
             re.findall(r"BroadcastNestedLoopJoin|CartesianProduct", plan)
         )
-        if n and name not in DESIGNED_BNL:
+        if n and not fn.designed_bnl:
             offenders[name] = n
+        if fn.designed_bnl and not n:
+            stale.append(name)
     assert not offenders, offenders
+    assert not stale, f"designed_bnl but no nested-loop join: {stale}"
 
 
 def test_skewed_profile_partial_aggregation(spark, queries):

@@ -45,61 +45,6 @@ FEATURES = {
     "codegen_spans": r"WholeStageCodegen",
 }
 
-# queries whose construction performs side effects / streaming drains:
-# their returned frame is a summary; planning them is still valid but
-# wall time includes the drain, so they are flagged in the report
-SIDE_EFFECT = {
-    "stream_sessionize_drain", "stream_rollup_drain", "stream_ewma_drain",
-    "stream_counter_rate_drain", "stream_dedup_drain", "clustered_layout",
-    "freq_items", "tier_routed_read", "compact_tier", "tier_refresh_resume",
-    "tier_retention_expiry",
-}
-
-# queries where a BroadcastNestedLoopJoin is the DESIGNED physical plan:
-# one side is a literal/1-row/bounded-tiny broadcast (invariant summary
-# rows, the broadcast query set of a brute-force ANN scan, threshold
-# literals), for which BNL with a broadcast side of O(1)-O(k) rows is
-# the optimal join — there is no equi-key to hash on and nothing to
-# shuffle. Any BNL on a query NOT in this list is a regression.
-DESIGNED_BNL = {
-    "ann_topk", "lsh_ann_topk", "ivf_ann_topk", "epn_thresholds",
-    "dwt_energy", "modwt_energy", "wpt_energy", "transcript_rollup_1m",
-    "stream_dedup_drain",
-    # 1-row broadcast fixture-accuracy invariant join (no equi-key exists)
-    "lang_id",
-    # 1-row broadcast n_total / n_hot_exact invariant joins
-    "cms_heavy_hitters",
-    # 1-row broadcast (n_docs_in, tok_in) coverage-invariant join
-    "pack_sequences",
-    # 1-row broadcast coverage/cascade invariant joins (per-tier counts)
-    "tier_wavelet_parity",
-    # 1-row broadcast planted-motif/discord + recompute invariant joins
-    "matrix_profile",
-    # 1-row broadcast corpus stats (N, avgdl) + invariant-checks joins
-    "bm25_topk",
-    # 1-row broadcast mass/contraction/planted-star invariant joins
-    "pagerank",
-    # per-FK 1-row broadcast orphan-count joins (7 FKs = 7 BNLs)
-    "referential_integrity",
-    # 1-row broadcast determinism/planted-dominance invariant joins
-    "weighted_sample",
-    # 1-row broadcast split/planted-separation invariant joins
-    "forecast_backtest",
-    # brute-force ANN's broadcast query-vector crossJoin (ann_topk's
-    # designed shape) feeding the fusion
-    "hybrid_search_rrf",
-    # 1-row broadcast n_edges join for the clustering-coefficient
-    # denominator (triangle_stats' wedge count is global by definition)
-    "triangle_count",
-    # exact-L2 twin's broadcast query crossJoin (the ann_topk shape)
-    # + 1-row broadcast decode-dual-path invariant join
-    "pq_ann_topk",
-    # 1-row broadcast residual-vs-trailing-eigenvalue invariant join
-    # onto the 16-row spectrum frame
-    "pca_embeddings",
-}
-
-
 def shuffle_bytes_for_group(spark, group: str) -> tuple[int, int]:
     """(shuffle_write_bytes, shuffle_read_bytes) summed over every stage
     of every job tagged with ``group`` — read from the JVM AppStatusStore
@@ -162,7 +107,8 @@ def main() -> None:
     spark = build_session(app_name="wds-plan-audit", cores=8)
     spark.sparkContext.setLogLevel("ERROR")
     rows = []
-    for name, fn in sorted(entrymod.queries().items()):
+    qs = entrymod.queries()
+    for name, fn in sorted(qs.items()):
         t0 = time.time()
         try:
             # tag construction too: side-effecting queries (streaming
@@ -197,21 +143,23 @@ def main() -> None:
             feat["shuffle_write"] = feat["shuffle_read"] = None
             feat["err"] = f"{type(exc).__name__}: {exc}"[:200]
         feat["name"] = name
-        feat["side_effect"] = name in SIDE_EFFECT
+        feat["side_effect"] = fn.side_effect
         feat["plan_wall_s"] = round(time.time() - t0, 2)
         rows.append(feat)
         print(json.dumps(feat))
 
+    # a nested-loop join is a regression unless the query's @query line
+    # marks it designed_bnl (a literal/1-row/bounded-tiny broadcast side)
     bad = [
         r
         for r in rows
         if (r["nested_loop_joins"] or 0) > 0
-        and r["name"] not in DESIGNED_BNL
+        and not qs[r["name"]].designed_bnl
     ]
     designed = [
         r
         for r in rows
-        if (r["nested_loop_joins"] or 0) > 0 and r["name"] in DESIGNED_BNL
+        if (r["nested_loop_joins"] or 0) > 0 and qs[r["name"]].designed_bnl
     ]
     errs = [r for r in rows if r["err"]]
 

@@ -8,6 +8,7 @@ plan shapes carry from local tests to a 1000-executor deployment.
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 import zipfile
@@ -31,10 +32,12 @@ def _default_driver_mem() -> str:
     return f"{gib}g"
 
 
+@functools.cache
 def package_zip() -> str:
     """Zip this package for shipping to executors (the local-mode analogue of
     ``spark-submit --py-files``; required whenever the driver script does not
-    run from the repo root). Deterministic content, cached per process."""
+    run from the repo root). Deterministic content, written once per
+    process."""
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = os.path.join(
         tempfile.gettempdir(), "wavelet_decomposition_spark_pyfiles.zip"
@@ -49,6 +52,13 @@ def package_zip() -> str:
                     rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                     zf.write(full, rel)
     return out
+
+
+def ship_package(sc) -> None:
+    """``addPyFile`` the package zip unless ``sc`` already ships it."""
+    path = package_zip()
+    if os.path.basename(path) not in sc._python_includes:
+        sc.addPyFile(path)
 
 
 # glibc malloc tuning for the pandas-UDF workers (and the JVM they fork
@@ -114,5 +124,5 @@ def build_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # ship the engine to executor Python workers (--py-files analogue)
-    spark.sparkContext.addPyFile(package_zip())
+    ship_package(spark.sparkContext)
     return spark

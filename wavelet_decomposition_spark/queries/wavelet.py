@@ -1,0 +1,780 @@
+"""The paper's chain and the wavelet operators: EPN storage
+sizing, the E1 LSQR decompositions with golden parity, E3 translation
+search, spectra and reconstructions, the DWT/WPT/MODWT window energies,
+per-tier wavelet parity and the block codecs.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from wavelet_decomposition_spark.io import reference_data as rd
+from wavelet_decomposition_spark.io.electricity import electricity_df
+from wavelet_decomposition_spark.io.reference_data import (
+    load_prepared_signal,
+    load_translations,
+)
+from wavelet_decomposition_spark.io.transcripts import transcripts_df
+from wavelet_decomposition_spark.operators import (
+    activity,
+    compress,
+    gapfill,
+    rollup,
+    wavelet_ops,
+)
+from wavelet_decomposition_spark.operators import decompose as dec
+from wavelet_decomposition_spark.operators import series as ser
+from wavelet_decomposition_spark.operators.epn import epn
+from wavelet_decomposition_spark.operators.resample import resample_per_year
+from wavelet_decomposition_spark.operators.spectrum import (
+    fft_spectrum,
+    heatmap_pivot,
+    per_scale_reconstruction,
+)
+from wavelet_decomposition_spark.operators.translation import (
+    residues_for_shifts,
+)
+from wavelet_decomposition_spark.operators.wavelet_ops import denoise_windows
+from wavelet_decomposition_spark.queries import aqe_off, query
+
+
+@query(bench=True, designed_bnl=True)
+def _q_epn_thresholds(spark, sf_dir):
+    """A6 — EPN analytics via the engine operator, fed lineitem prices as
+    coefficients (scale_idx = l_linenumber - 1)."""
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    betas = li.select(
+        F.lit("li").alias("series_id"),
+        (F.col("l_linenumber") - 1).cast("int").alias("scale_idx"),
+        F.col("l_extendedprice").alias("beta"),
+    )
+    out = epn(spark, betas, [90.0], n_years=1)
+    return out.select(
+        "scale_idx",
+        "satisfaction",
+        F.round("pmax", 6).alias("pmax"),
+        F.round("emax", 6).alias("emax"),
+        F.round("n", 6).alias("n_cycles"),
+        F.round("uf", 6).alias("uf"),
+        # serv = emax * n is O(1e9); oracle-compare it in scaled millions so
+        # the 6-decimal rounding absorbs float reassociation (~1e-2 abs)
+        # while still pinning all meaningful digits — all six calc_EPN.py
+        # outputs are now DuckDB-checked (exact-value pytest oracle remains
+        # in tests/test_epn.py)
+        F.round(F.col("serv") / 1e6, 6).alias("serv_m"),
+    )
+
+
+@query()
+def _q_epn_approx(spark, sf_dir):
+    """A6's 100-TB escape hatch, driver-exposed (round-3 verdict #8):
+    ``epn(..., exact=False)`` computes the discharge threshold with
+    ``percentile_approx`` (GK sketch, map-side partial aggregation — the
+    per-(group, scale) sort shuffle disappears). Rows-only but
+    SELF-VERIFYING: the GK sketch guarantees rank error <= n/accuracy, so
+    every approximate threshold must land inside the exact
+    order-statistics band around the reference's target rank — ``lo``/
+    ``hi`` are computed in-query by an independent rank join and
+    ``sketch_ok`` = (lo <= pmax <= hi) rides on every row. The exact form
+    is the DuckDB-checked ``epn_thresholds`` above."""
+    acc = 10_000
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    betas = li.select(
+        F.lit("li").alias("series_id"),
+        (F.col("l_linenumber") - 1).cast("int").alias("scale_idx"),
+        F.col("l_extendedprice").alias("beta"),
+    )
+    out = epn(
+        spark, betas, [90.0], n_years=1, exact=False, approx_accuracy=acc
+    )
+    # independent exact rank band: value at rank target +/- (n/acc + 1)
+    coeff = betas.filter(F.col("scale_idx") < 15).select(
+        "scale_idx", F.abs("beta").alias("ab")
+    )
+    w = Window.partitionBy("scale_idx").orderBy("ab")
+    ranked = coeff.withColumn("rnk", F.row_number().over(w)).withColumn(
+        "n_size", F.count(F.lit(1)).over(Window.partitionBy("scale_idx"))
+    )
+    target = F.ceil(90.0 * F.col("n_size") / 100.0).cast("int")
+    err = (F.col("n_size") / acc).cast("int") + 1
+    band = (
+        ranked.withColumn("_t", target)
+        .withColumn("_e", err)
+        .filter(
+            (F.col("rnk") == F.greatest(F.col("_t") - F.col("_e"), F.lit(1)))
+            | (F.col("rnk") == F.least(F.col("_t") + F.col("_e"), F.col("n_size")))
+        )
+        .groupBy("scale_idx")
+        .agg(F.min("ab").alias("lo"), F.max("ab").alias("hi"))
+    )
+    return out.join(F.broadcast(band), "scale_idx").select(
+        "scale_idx",
+        "satisfaction",
+        F.round("pmax", 6).alias("pmax"),
+        F.round("emax", 6).alias("emax"),
+        F.round("n", 6).alias("n_cycles"),
+        F.round("uf", 6).alias("uf"),
+        F.round(F.col("serv") / 1e6, 6).alias("serv_m"),
+        (
+            (F.col("pmax") >= F.col("lo") - 1e-9)
+            & (F.col("pmax") <= F.col("hi") + 1e-9)
+        ).alias("sketch_ok"),
+    )
+
+
+@query(bench=True)
+def _q_dwt_denoise(spark, sf_dir):
+    """Wavelet shrinkage denoising (operators/wavelet_ops.py
+    denoise_windows — Donoho-Johnstone VisuShrink) over db4 pyramids of
+    the transcript 1m activity tier: per dyadic window, noise scale from
+    the finest detail band's MAD, soft-threshold every detail coefficient
+    at sigma*sqrt(2 ln n), inverse DWT. Same bucketed Arrow execution as
+    dwt_energy. Rows-only, SELF-VERIFYING via identities computed in the
+    same kernel pass that the output cannot satisfy by accident:
+    ``parseval_ok`` (orthonormal DWT conserves energy between the time
+    and coefficient domains), ``roundtrip_ok`` (inverse(forward(x)) == x
+    to 1e-9 on the UNSHRUNK coefficients — perfect reconstruction rides
+    every row), ``energy_ok`` (shrinkage is pointwise |c'| <= |c| on an
+    orthonormal basis, so denoised energy can only decrease), and
+    ``zeroed_ok`` (0 <= n_zeroed <= n_detail)."""
+    tx = transcripts_df(spark, 100, seed=42)
+    tier = rollup.rollup_once(activity.activity_raw(tx), "1m")
+    filled = gapfill.gapfill_zero(
+        tier, activity.ACTIVITY_COUNT_COLS, step="1 minute"
+    )
+    out = denoise_windows(
+        filled, "turns", wavelet="db4", levels=4, window_len=64
+    )
+    return out.select(
+        "conv_id",
+        "window_id",
+        "wavelet",
+        "n",
+        F.round("sigma", 6).alias("sigma"),
+        F.round("threshold", 6).alias("threshold"),
+        F.round("input_energy", 6).alias("input_energy"),
+        F.round("den_energy", 6).alias("den_energy"),
+        "n_zeroed",
+        "n_detail",
+        (
+            F.abs(F.col("coef_energy") - F.col("input_energy"))
+            <= 1e-6 * F.greatest(F.col("input_energy"), F.lit(1.0))
+        ).alias("parseval_ok"),
+        (F.col("roundtrip_rel_err") <= 1e-9).alias("roundtrip_ok"),
+        (
+            F.col("den_energy")
+            <= F.col("input_energy")
+            + 1e-6 * F.greatest(F.col("input_energy"), F.lit(1.0))
+        ).alias("energy_ok"),
+        (
+            (F.col("n_zeroed") >= 0)
+            & (F.col("n_zeroed") <= F.col("n_detail"))
+        ).alias("zeroed_ok"),
+    ).orderBy("conv_id", "window_id")
+
+
+@query()
+def _q_fft_spectrum(spark, sf_dir):
+    """A7 — one-sided demeaned FFT magnitude spectrum per (series, year),
+    self-verifying: ``parseval_ok`` = one-sided coefficient energy (window
+    aggregate over the FULL spectrum, computed before the display filter)
+    equals the demeaned input energy to 1e-4 relative (the omitted Nyquist
+    bin contributes ~1e-7 on this signal) — the rows-only gate cannot pass
+    on garbage magnitudes."""
+    df = electricity_df(spark, signals=["Consumption"], years=[2013])
+    df = ser.leap_trim(df, 48 * 365)
+    df = ser.normalize_yearly_mean(df)
+    df = resample_per_year(df, 48, 64, 365)
+    in_e = df.groupBy("series_id", "year").agg(
+        (
+            F.sum(F.col("value") * F.col("value"))
+            - F.count(F.lit(1)) * F.pow(F.avg("value"), 2)
+        ).alias("_in_e")
+    )
+    spec = fft_spectrum(df).join(F.broadcast(in_e), ["series_id", "year"])
+    w = Window.partitionBy("series_id", "year")
+    n = 2 * F.count(F.lit(1)).over(w)  # full length N = 2 * one-sided bins
+    coef_e = 2.0 * F.sum(
+        F.pow(F.col("magnitude") * n / 2.0, 2)
+    ).over(w)
+    return spec.select(
+        "series_id", "year", "freq_idx", "magnitude",
+        (
+            F.abs(coef_e - n * F.col("_in_e")) <= 1e-4 * n * F.col("_in_e")
+        ).alias("parseval_ok"),
+    ).filter(F.col("freq_idx") < 2048)
+
+
+@query()
+def _q_reconstruction_roundtrip(spark, sf_dir):
+    """A8 — decompose then inverse-transform through the broadcast-matvec
+    UDF path (the twin of ``reconstruction_relational``'s join+agg form),
+    SELF-VERIFYING: every row carries ``invariant_ok`` = per-(series, year)
+    relative reconstruction error vs the input signal < 1e-2 (the
+    damped-LSQR fit bound) — a garbage solve, dictionary, or matvec cannot
+    satisfy it. Band-pass masking (P7) is pinned separately by
+    tests/test_decompose_spark.py and the per-scale ``heatmap_scales``
+    query."""
+    df = electricity_df(spark, signals=["Consumption"], years=[2013])
+    df = ser.leap_trim(df, 48 * 365)
+    df = ser.normalize_yearly_mean(df)
+    df = resample_per_year(df, 48, 64, 365)
+    trans = rd.load_translations("square")
+    bc = dec.broadcast_dictionaries(spark, "square", {2013: trans[1]})
+    betas = dec.decompose(df, bc)
+    recon = dec.reconstruct(betas, bc)
+    joined = recon.join(
+        df.withColumnRenamed("value", "signal"), ["series_id", "year", "idx"]
+    )
+    w = Window.partitionBy("series_id", "year")
+    rel_err = F.sum(F.pow(F.col("value") - F.col("signal"), 2)).over(w) / F.sum(
+        F.pow("signal", 2)
+    ).over(w)
+    return joined.select(
+        "series_id", "year", "idx", "value",
+        (rel_err < 1e-2).alias("invariant_ok"),
+    )
+
+
+@query(bench=True)
+def _q_translation_search(spark, sf_dir):
+    """A11 — the reference's dominant cost at FULL width: all 23,360
+    circular shifts for (Consumption, 2012, year family), distributed
+    (reference: ~hours single-core per year, calc_translations.py:29-43
+    "grab a coffee"). SELF-VERIFYING: ``invariant_ok`` = (argmin shift ==
+    the golden pickle's transyear, modulo the square year wavelet's
+    N/2 sign-flip tie symmetry), as a window aggregate over the one sweep
+    lineage. All three families run in ``translation_full``; shift-level
+    parity is asserted in tests/test_translation_spectrum.py."""
+    sig = load_prepared_signal("Consumption", 2012)
+    golden_year = int(load_translations("square")[0][2])
+    res = residues_for_shifts(spark, sig, "year", "square", dpy=365, dpd=64)
+    w = Window.partitionBy()
+    best_shift = F.min(F.struct(F.col("residue"), F.col("shift"))).over(w)[
+        "shift"
+    ]
+    return res.select(
+        "shift",
+        "residue",
+        (
+            F.pmod(best_shift - golden_year, F.lit(int(sig.size) // 2)) == 0
+        ).alias("invariant_ok"),
+    )
+
+
+@query(bench=True)
+def _q_translation_full(spark, sf_dir):
+    """The reference's COMPLETE E3 offline job for one year, distributed
+    and self-verifying: all three mother-wavelet families (day, week, year)
+    swept over every one of the 23,360 circular shifts — ~3 x 23,360 LSQR
+    fits, the load the reference calls "grab a coffee ... hours single-core"
+    (calc_translations.py:45-118,128). ``invariant_ok`` on every row:
+    the per-family argmin (min-residue shift, window aggregate over the one
+    union lineage) must equal the golden pickle trans_square_12_18.p[0] ==
+    [87, 5974, 19225] MODULO the family's proven exact-arithmetic tie
+    symmetry — day mothers are invariant under 64-point shifts (argmin
+    defined mod 64), the square year wavelet sign-flips at N/2 (mod
+    11,680), week has no symmetry (exact; modulus N). The same parity is
+    asserted shift-for-shift in tests/test_translation_spectrum.py."""
+    sig = load_prepared_signal("Consumption", 2012)
+    n = int(sig.size)
+    g_day, g_week, g_year = load_translations("square")[0]
+    golden = spark.createDataFrame(
+        [
+            ("day", int(g_day), 64),
+            ("week", int(g_week), n),
+            ("year", int(g_year), n // 2),
+        ],
+        "family string, golden_shift long, modulus long",
+    )
+    res = None
+    for fam in ("day", "week", "year"):
+        part = residues_for_shifts(
+            spark, sig, fam, "square", dpy=365, dpd=64
+        ).withColumn("family", F.lit(fam))
+        res = part if res is None else res.unionByName(part)
+    w = Window.partitionBy("family")
+    best_shift = F.min(F.struct(F.col("residue"), F.col("shift"))).over(w)[
+        "shift"
+    ]
+    return res.join(F.broadcast(golden), "family").select(
+        "family",
+        "shift",
+        "residue",
+        (
+            F.pmod(best_shift - F.col("golden_shift"), F.col("modulus")) == 0
+        ).alias("invariant_ok"),
+    )
+
+
+@query()
+def _q_heatmap_scales(spark, sf_dir):
+    """A9 — heatmap pre-pivot: each scale reconstructed separately, pivoted
+    wide (reference wavelet_decomposition.py:325-358, notebook cells
+    21->23 — which densify the 4.38 GB matrix; here one sparse matvec per
+    scale per group). Now SELF-VERIFYING via the linearity identity: with
+    the offset included as the 16th column, the scale columns must SUM to
+    the full reconstruction, so ``invariant_ok`` = per-(series, year)
+    relative error of (sum of all 16 scale columns) vs the input signal
+    < 1e-2 (the damped-LSQR fit bound) — shift a single scale's matvec and
+    the sum breaks. The per-scale-vs-full linearity is also asserted
+    exactly in tests/test_translation_spectrum.py."""
+    df = electricity_df(spark, signals=["Consumption"], years=[2013])
+    df = ser.leap_trim(df, 48 * 365)
+    df = ser.normalize_yearly_mean(df)
+    df = resample_per_year(df, 48, 64, 365)
+    trans = rd.load_translations("square")
+    bc = dec.broadcast_dictionaries(spark, "square", {2013: trans[1]})
+    betas = dec.decompose(df, bc)
+    pivot = heatmap_pivot(
+        per_scale_reconstruction(betas, bc, n_scales=16), scales=range(16)
+    )
+    joined = pivot.join(
+        df.select(
+            "series_id", "year", "idx", F.col("value").alias("_signal")
+        ),
+        ["series_id", "year", "idx"],
+    )
+    scale_sum = sum(
+        [F.col("1")] + [F.col(str(s)) for s in range(2, 16)], F.col("0")
+    )
+    w = Window.partitionBy("series_id", "year")
+    rel_err = F.sum(F.pow(scale_sum - F.col("_signal"), 2)).over(w) / F.sum(
+        F.pow("_signal", 2)
+    ).over(w)
+    return joined.select(
+        "series_id", "year", "idx",
+        *[F.col(str(s)) for s in range(16)],
+        (rel_err < 1e-2).alias("invariant_ok"),
+    )
+
+
+@query()
+def _q_reconstruction_relational(spark, sf_dir):
+    """J3 — reconstruction as broadcast join + hash aggregation over the
+    dictionary-as-a-table (the pure-relational alternative to the
+    broadcast-matvec UDF; equivalence pinned in tests/test_decompose_spark).
+    Self-verifying: ``invariant_ok`` carries the relative reconstruction
+    error vs the input signal (< 1e-2 for the damped-LSQR fit) — a garbage
+    join/agg cannot satisfy it."""
+    df = electricity_df(spark, signals=["Consumption"], years=[2013])
+    df = ser.leap_trim(df, 48 * 365)
+    df = ser.normalize_yearly_mean(df)
+    df = resample_per_year(df, 48, 64, 365)
+    trans = rd.load_translations("square")
+    bc = dec.broadcast_dictionaries(spark, "square", {2013: trans[1]})
+    betas = dec.decompose(df, bc)
+    support = dec.support_table(spark, bc)
+    recon = dec.reconstruct_relational(betas, support, add_offset=True)
+    joined = recon.join(
+        df.withColumnRenamed("value", "signal"), ["series_id", "year", "idx"]
+    )
+    # single lineage: the relative-error invariant is a window aggregate
+    # over the one joined result (referencing `joined` from two branches
+    # would recompute the whole decompose+reconstruct lineage twice)
+    w = Window.partitionBy("series_id", "year")
+    rel_err = F.sum(F.pow(F.col("value") - F.col("signal"), 2)).over(w) / F.sum(
+        F.pow("signal", 2)
+    ).over(w)
+    return joined.select(
+        "series_id", "year", "idx", "value",
+        (rel_err < 1e-2).alias("invariant_ok"),
+    )
+
+
+@query(designed_bnl=True)
+def _q_dwt_energy(spark, sf_dir):
+    """Haar DWT per-scale energy spectra over dyadic windows of the
+    transcript 1m tier, with a single-lineage Parseval invariant column
+    (sum of band energies equals window energy) riding every row."""
+    tx = transcripts_df(spark, 100, seed=42)
+    tier = rollup.rollup_once(activity.activity_raw(tx), "1m")
+    filled = gapfill.gapfill_zero(
+        tier, activity.ACTIVITY_COUNT_COLS, step="1 minute"
+    ).cache()
+
+    coefs = wavelet_ops.dwt_windows(filled, "turns", "db4", levels=4, window_len=64)
+    spectrum = wavelet_ops.energy_spectrum(coefs)
+    # Parseval self-check: db4 is orthonormal, so total coefficient energy
+    # == input energy (zero-padding adds none) — rows-only gate can't pass
+    # on garbage coefficients. Global-window sum keeps the spectrum lineage
+    # single-pass (a two-branch agg+crossJoin re-ran the pyramid UDF);
+    # the input-energy side reads the cached `filled` tier.
+    in_e = filled.agg(F.sum(F.col("turns") * F.col("turns")).alias("_in_e"))
+    w = Window.partitionBy()
+    return spectrum.crossJoin(F.broadcast(in_e)).select(
+        "conv_id", "window_id", "wavelet", "level", "coef_type", "energy",
+        (
+            F.abs(F.sum("energy").over(w) - F.col("_in_e"))
+            <= 1e-6 * F.greatest(F.col("_in_e"), F.lit(1.0))
+        ).alias("parseval_ok"),
+    )
+
+
+@query(bench=True, designed_bnl=True)
+def _q_wpt_energy(spark, sf_dir):
+    """Wavelet PACKET energy spectra (kernel/dwt.py wpt_batch — Coifman
+    & Wickerhauser 1992) over dyadic windows of the transcript 1m tier:
+    the FULL binary tree decomposes detail bands too, giving 2^4 = 16
+    uniform-width frequency bands per window where the DWT pyramid's
+    detail bands are octave-wide — the right basis when conversation
+    rhythm lives mid-band. Rows-only; invariants riding every row:
+
+    ``parseval_ok``    the orthonormal tree preserves energy: the sum
+                       of ALL leaf-band energies equals the gap-filled
+                       input tier's total signal energy (zero padding
+                       adds none) to 1e-6 relative — garbage packets
+                       cannot balance it;
+    ``n_bands_ok``     every window emits exactly 16 band rows
+                       (band00..band15, natural order).
+
+    tests/test_dwt.py pins the kernel identities (roundtrip, leaf
+    Parseval, all-low path == DWT approximation, Haar closed form).
+    """
+    tx = transcripts_df(spark, 100, seed=42)
+    tier = rollup.rollup_once(activity.activity_raw(tx), "1m")
+    filled = gapfill.gapfill_zero(
+        tier, activity.ACTIVITY_COUNT_COLS, step="1 minute"
+    ).cache()
+    spectrum = wavelet_ops.energy_windows(
+        filled, "turns", wavelet="db4", levels=4, window_len=64,
+        transform="wpt",
+    )
+    in_e = filled.agg(F.sum(F.col("turns") * F.col("turns")).alias("_in_e"))
+    w = Window.partitionBy()
+    wwin = Window.partitionBy("conv_id", "window_id")
+    return spectrum.crossJoin(F.broadcast(in_e)).select(
+        "conv_id", "window_id", "wavelet", "level", "coef_type", "energy",
+        (
+            F.abs(F.sum("energy").over(w) - F.col("_in_e"))
+            <= 1e-6 * F.greatest(F.col("_in_e"), F.lit(1.0))
+        ).alias("parseval_ok"),
+        (F.count(F.lit(1)).over(wwin) == 16).alias("n_bands_ok"),
+    )
+
+
+@query(bench=True)
+def _q_tier_wavelet_parity(spark, sf_dir):
+    """Wavelet coefficient + point parity at EVERY retention tier — the
+    north metric's "coefficient/point parity vs reference at every
+    retention tier" clause, driver-exposed in one query.
+
+    The rollup cascade raw -> 1m -> 1h -> 1d (operators/rollup.py) is
+    built, each tier is zero-gap-filled at its own grid step, and the
+    Haar pyramid runs over each tier's dyadic windows TWICE through
+    disjoint computation paths: the production Arrow numpy kernel
+    (wavelet_ops.dwt_windows, kernel/dwt.py) and a pure-JVM closed-form
+    relational pyramid (wavelet_ops.haar_dwt_relational — one explode +
+    one hash aggregate, no Python stage). Every coefficient of every
+    tier must agree to 1e-9 relative.
+
+    Invariants riding each output row (one per tier x level x band):
+    ``parity_ok``  — max |kernel - closed form| <= 1e-9 * max |coef|;
+    ``coverage_ok`` — no closed-form coefficient falls outside the
+    kernel's coefficient grid (windowing drift detector);
+    ``cascade_ok`` — POINT parity: the 1h and 1d tiers built from the
+    cascade equal the same tiers aggregated straight from raw, exactly
+    (integer counts; full-outer null-safe comparison finds any drift).
+    """
+    # small-data conf window (same rationale as _q_pagerank/_q_bpe_vocab):
+    # this query's input is the FIXED 100-conversation parity fixture —
+    # a ~25-stage verification DAG over <=6k-row tiers where AQE's
+    # stage-by-stage materialization is pure driver round trips
+    # (measured 3.9-4.3 s -> 3.0 s back-to-back). The plan executes
+    # eagerly inside the window via localCheckpoint and the confs are
+    # restored before return; nothing leaves the timed region — query
+    # construction IS timed by the bench harness.
+    with aqe_off(spark, 16):
+        out = _tier_wavelet_parity_plan(spark).localCheckpoint()
+    return out.orderBy("tier", "level", "coef_type")
+
+
+def _tier_wavelet_parity_plan(spark):
+    tx = transcripts_df(spark, 100, seed=42)
+    raw = activity.activity_raw(tx).cache()
+    tiers = rollup.build_tiers(raw)
+    for t in ("1m", "1h", "1d"):
+        tiers[t] = tiers[t].cache()
+    cfg = {"1m": ("1 minute", 64, 4), "1h": ("1 hour", 32, 4),
+           "1d": ("1 day", 8, 3)}
+    keys = ["conv_id", "window_id", "level", "k", "coef_type"]
+    cols = activity.ACTIVITY_COUNT_COLS
+    parts = []
+
+    w_all = Window.partitionBy()
+    for tier, (step, wlen, levels) in cfg.items():
+        filled = gapfill.gapfill_zero(tiers[tier], cols, step=step).cache()
+        kern = wavelet_ops.dwt_windows(
+            filled, "turns", "haar", levels=levels, window_len=wlen
+        )
+        rel = wavelet_ops.haar_dwt_relational(
+            filled, "turns", levels=levels, window_len=wlen
+        ).withColumnRenamed("coef", "rel_coef")
+        # ONE full-outer join replaces the old left-join + left-anti pair,
+        # which referenced both pyramid paths twice and recomputed every
+        # Arrow kernel pass and the explode/aggregate twin per reference
+        # (the plan carried 187 exchanges / 41 Python stages across the
+        # three tiers). Rows with a NULL kernel side are exactly the
+        # left-anti rows the coverage check counted; when coverage holds
+        # (it must — coverage_ok gates every row) the joined row set is
+        # identical to the old left join's.
+        j = kern.join(rel, keys, "full_outer")
+        parts.append(
+            j.groupBy("level", "coef_type")
+            .agg(
+                F.count("coef").alias("n_coefs"),
+                F.max(
+                    F.when(
+                        F.col("coef").isNotNull(),
+                        F.abs(
+                            F.col("coef")
+                            - F.coalesce("rel_coef", F.lit(0.0))
+                        ),
+                    )
+                ).alias("max_abs_err"),
+                F.max(F.abs("coef")).alias("_max_c"),
+                F.sum(
+                    F.col("coef").isNull().cast("long")
+                ).alias("_uncov_g"),
+            )
+            .select(
+                F.lit(tier).alias("tier"),
+                "level",
+                "coef_type",
+                "n_coefs",
+                "max_abs_err",
+                (
+                    F.col("max_abs_err")
+                    <= 1e-9 * F.greatest(F.lit(1.0), F.col("_max_c"))
+                ).alias("parity_ok"),
+                (F.sum("_uncov_g").over(w_all) == 0).alias("coverage_ok"),
+            )
+        )
+    out = parts[0].unionByName(parts[1]).unionByName(parts[2])
+    # point parity: cascade tier == direct-from-raw tier, exactly
+    bads = []
+    for tier in ("1h", "1d"):
+        d = rollup.rollup_direct(raw, tier).select(
+            "conv_id", "bucket_ts",
+            *[F.col(c).alias(f"d_{c}") for c in cols],
+        )
+        diff = " OR ".join(f"{c} IS DISTINCT FROM d_{c}" for c in cols)
+        bads.append(
+            tiers[tier]
+            .join(d, ["conv_id", "bucket_ts"], "full_outer")
+            .where(F.expr(diff))
+            .agg(F.count(F.lit(1)).alias(f"_bad_{tier}"))
+        )
+    casc = bads[0].crossJoin(bads[1]).select(
+        ((F.col("_bad_1h") == 0) & (F.col("_bad_1d") == 0)).alias(
+            "cascade_ok"
+        )
+    )
+    # ordering applied by the caller after the checkpoint
+    return out.crossJoin(F.broadcast(casc))
+
+
+@query(designed_bnl=True)
+def _q_modwt_energy(spark, sf_dir):
+    """MODWT (shift-equivariant, undecimated) energy spectrum with the same
+    Parseval self-check as dwt_energy — MODWT's scaled filters conserve
+    energy too (Percival & Walden ch. 5)."""
+    tx = transcripts_df(spark, 100, seed=42)
+    tier = rollup.rollup_once(activity.activity_raw(tx), "1m")
+    filled = gapfill.gapfill_zero(
+        tier, activity.ACTIVITY_COUNT_COLS, step="1 minute"
+    ).cache()
+
+    spectrum = wavelet_ops.energy_windows(
+        filled, "turns", wavelet="db4", levels=4, window_len=64,
+        transform="modwt",
+    )
+    # same single-lineage window form as dwt_energy (see comment there)
+    in_e = filled.agg(F.sum(F.col("turns") * F.col("turns")).alias("_in_e"))
+    w = Window.partitionBy()
+    return spectrum.crossJoin(F.broadcast(in_e)).select(
+        "conv_id", "window_id", "wavelet", "level", "coef_type", "energy",
+        (
+            F.abs(F.sum("energy").over(w) - F.col("_in_e"))
+            <= 1e-6 * F.greatest(F.col("_in_e"), F.lit(1.0))
+        ).alias("parseval_ok"),
+    )
+
+
+@query(bench=True)
+def _q_gorilla_blocks(spark, sf_dir):
+    """Gorilla + delta-of-delta block encode of the 1m tier, with the
+    compression report. SELF-VERIFYING: ``invariant_ok`` = every block
+    non-empty with a positive blob AND the tier-wide compression ratio
+    (sum raw / sum compressed) >= 2 — regular 1-minute timestamps
+    delta-of-delta to near-zero bits and small counts Gorilla-pack far
+    below 8 bytes/point, so a codec emitting bloated or truncated blobs
+    fails; exact value round-trip is the separate ``codec_roundtrip``
+    gate."""
+    tx = transcripts_df(spark, 150, seed=42)
+    tier = rollup.rollup_once(activity.activity_raw(tx), "1m")
+    blocks = compress.encode_blocks(tier, activity.ACTIVITY_COUNT_COLS)
+    report = compress.compression_report(blocks, activity.ACTIVITY_COUNT_COLS)
+    w = Window.partitionBy()
+    ratio = F.sum("raw_bytes").over(w) / F.sum("compressed_bytes").over(w)
+    return report.select(
+        "conv_id",
+        "day",
+        "n_points",
+        "compressed_bytes",
+        "raw_bytes",
+        (
+            (F.col("n_points") > 0)
+            & (F.col("compressed_bytes") > 0)
+            & (ratio >= 2.0)
+        ).alias("invariant_ok"),
+    )
+
+
+@query()
+def _q_codec_roundtrip(spark, sf_dir):
+    """Self-verifying codec invariant for the driver's rows-only gate:
+    encode the 1m tier into Gorilla + delta-of-delta blocks, decode, and
+    full-outer-join back against the original tier. The single output row
+    cannot pass on garbage: n_unmatched must be 0 and max_abs_err must be
+    exactly 0.0 (the codecs are bit-exact)."""
+    cols = activity.ACTIVITY_COUNT_COLS
+    tx = transcripts_df(spark, 150, seed=42)
+    tier = rollup.rollup_once(activity.activity_raw(tx), "1m")
+    blocks = compress.encode_blocks(tier, cols)
+    back = compress.decode_blocks(blocks, cols)
+    a = tier.select(
+        "conv_id", "bucket_ts",
+        *[F.col(c).cast("double").alias(f"a_{c}") for c in cols],
+    )
+    b = back.select(
+        "conv_id", "bucket_ts",
+        *[F.col(c).alias(f"b_{c}") for c in cols],
+    )
+    j = a.join(b, ["conv_id", "bucket_ts"], "full_outer")
+    err = F.greatest(
+        *[F.abs(F.col(f"a_{c}") - F.col(f"b_{c}")) for c in cols]
+    )
+    unmatched = (
+        F.col(f"a_{cols[0]}").isNull() | F.col(f"b_{cols[0]}").isNull()
+    ).cast("long")
+    return j.agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(unmatched).alias("n_unmatched"),
+        F.max(err).alias("max_abs_err"),
+    ).select(
+        "n_rows",
+        "n_unmatched",
+        "max_abs_err",
+        (
+            (F.col("n_rows") > 0)
+            & (F.col("n_unmatched") == 0)
+            & (F.col("max_abs_err") == 0.0)
+        ).alias("roundtrip_ok"),
+    )
+
+
+@query()
+def _q_wavelet_betas_golden(spark, sf_dir):
+    """Reference flagship: one (signal, year) LSQR decomposition, with the
+    golden-parity invariant (<= 1e-9 vs the exported 2013 Consumption
+    sheet) riding on every row — same self-verification as
+    full_decomposition, single-year scope."""
+    return _betas_with_golden_parity(spark, "square", ["Consumption"], [2013])
+
+
+# per-session memo for the reference dictionaries and the parsed golden
+# workbooks: the reference itself memoizes both (the import_matrix flag,
+# wavelet_decomposition.py:30-35, and the betas xlsx cache), so the warm
+# path prices only the distributed solves, not re-parsing static artifacts
+_GOLDEN_CACHE: dict = {}
+
+
+def _betas_with_golden_parity(spark, shape, signals, years):
+    """Ingest -> P1 leap trim -> P2 normalize -> P4 resample -> A1 LSQR
+    decompose for ``signals`` x ``years`` with dictionary ``shape``, plus a
+    per-(series, year) golden-parity check: every output row carries
+    ``max_abs_err`` (vs the reference's exported coefficient sheet) and
+    ``invariant_ok`` = (all 23,423 coefficients joined AND max_abs_err <=
+    1e-9) — the rows-only driver gate cannot pass on garbage betas."""
+    df = electricity_df(spark, signals=signals, years=years)
+    df = ser.leap_trim(df, 48 * 365)
+    df = ser.normalize_yearly_mean(df)
+    df = resample_per_year(df, 48, 64, 365)
+
+    # keyed by applicationId, not id(spark): id() can be recycled after a
+    # stopped session is GC'd, which would hand back a broadcast bound to a
+    # dead SparkContext (round-3 advisory)
+    key = ("bc", shape, tuple(years), spark.sparkContext.applicationId)
+    bc = _GOLDEN_CACHE.get(key)
+    if bc is None:
+        trans = rd.load_translations(shape)
+        bc = dec.broadcast_dictionaries(
+            spark, shape, {y: trans[y - 2012] for y in years}
+        )
+        _GOLDEN_CACHE[key] = bc
+    betas = dec.decompose(df, bc)
+
+    # cache the golden side as a SPARK DataFrame (keyed per session):
+    # re-running createDataFrame on the ~328k-row pandas frame cost ~2 s
+    # of every warm repeat; a LocalRelation is immutable and reusable
+    gkey = (
+        "golden", tuple(signals), tuple(years),
+        spark.sparkContext.applicationId,
+    )
+    golden = _GOLDEN_CACHE.get(gkey)
+    if golden is None:
+        gpdf = rd.load_golden_betas_long(
+            [(s, y) for s in signals for y in years]
+        )
+        golden = spark.createDataFrame(gpdf)
+        _GOLDEN_CACHE[gkey] = golden
+
+    # single lineage: joining betas to golden once and deriving the
+    # per-(series, year) parity via window aggregates avoids referencing
+    # the betas DataFrame twice — two branches would recompute every LSQR
+    # solve (measured: 2x the solve wall). The inner join + count==23,423
+    # guard still catches missing or duplicated coefficients.
+    w = Window.partitionBy("series_id", "year")
+    return betas.join(golden, ["series_id", "year", "scale_idx", "pos"]).select(
+        "series_id",
+        "year",
+        "scale_idx",
+        "pos",
+        "beta",
+        (
+            (F.count(F.lit(1)).over(w) == 23423)
+            & (F.max(F.abs(F.col("beta") - F.col("golden"))).over(w) <= 1e-9)
+        ).alias("invariant_ok"),
+    )
+
+
+@query(bench=True)
+def _q_full_decomposition(spark, sf_dir):
+    """The reference's FULL E1 flagship, distributed: all 21 series-year
+    LSQR solves (7 years x {Consumption, PV} square + 7 years x Wind sine —
+    tutorial.ipynb cells 9->16, wavelet_decomposition.py:203-250 +
+    :103-192), each (series, year) group one Spark task. Golden parity
+    (<= 1e-9 vs every exported coefficient sheet) rides on every row as
+    ``invariant_ok``. Reference-equivalent single-core baseline: 73.2 s for
+    the 14 square solves alone (BASELINE.md); benched distributed in
+    bench.py as ``full_decomposition``."""
+    years = list(range(2012, 2019))
+    square = _betas_with_golden_parity(
+        spark, "square", ["Consumption", "PV"], years
+    )
+    sine = _betas_with_golden_parity(spark, "sine", ["Wind"], years)
+    return (
+        square.withColumn("shape", F.lit("square"))
+        .unionByName(sine.withColumn("shape", F.lit("sine")))
+    )
+
+
+@query()
+def _q_wavelet_betas_sine(spark, sf_dir):
+    """Sine-dictionary decomposition (Wind 2012) — the reference's second
+    wavelet family (wavelet_decomposition.py:103-192: unnormalized Phi0,
+    sine levels, Dt<=4 square fallback), driver-exposed with golden parity
+    vs betas_Wind.xlsx riding on every row."""
+    return _betas_with_golden_parity(spark, "sine", ["Wind"], [2012])
