@@ -26,6 +26,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans.session import worker_kernel
+
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
     "tool string, ts timestamp"
@@ -172,7 +174,7 @@ def transcripts_df(
 
     return (
         spark.range(0, n_convs, numPartitions=partitions)
-        .mapInPandas(gen, schema=TRANSCRIPT_SCHEMA)
+        .mapInPandas(worker_kernel(gen), schema=TRANSCRIPT_SCHEMA)
     )
 
 
@@ -277,7 +279,7 @@ def forked_transcripts(
 
     return (
         spark.range(0, n_convs + n_forks, numPartitions=partitions)
-        .mapInPandas(gen, schema=TRANSCRIPT_SCHEMA)
+        .mapInPandas(worker_kernel(gen), schema=TRANSCRIPT_SCHEMA)
     )
 
 

@@ -39,6 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.session import worker_kernel
+
 _WORD_REGEX = r"[a-zA-Z0-9]+|[^a-zA-Z0-9\s]"
 
 
@@ -126,7 +128,8 @@ def _pair_counts(
                 )
 
     partial = vocab.select("count", "symbols").mapInPandas(
-        gen, schema="left string, right string, pair_count bigint"
+        worker_kernel(gen),
+        schema="left string, right string, pair_count bigint",
     )
     return partial.groupBy("left", "right").agg(
         F.sum("pair_count").alias("pair_count")
@@ -154,7 +157,8 @@ def _apply_merges(
             yield pdf
 
     return vocab.mapInPandas(
-        gen, schema="word string, count bigint, symbols array<string>"
+        worker_kernel(gen),
+        schema="word string, count bigint, symbols array<string>",
     )
 
 
@@ -317,5 +321,6 @@ def bpe_encode(
             )
 
     return docs.select(id_col, text_col).mapInPandas(
-        gen, schema=f"{id_col} bigint, n_chars int, n_tokens int"
+        worker_kernel(gen),
+        schema=f"{id_col} bigint, n_chars int, n_tokens int",
     )

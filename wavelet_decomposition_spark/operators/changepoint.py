@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.session import worker_kernel
+
 
 def pelt_segments_np(y: np.ndarray, beta: float) -> list[int]:
     """Changepoint positions (segment START indices, excluding 0) of the
@@ -146,4 +148,4 @@ def pelt_changepoints(
 
     return df.select(*group_cols, order_col, value_col).groupBy(
         *group_cols
-    ).applyInPandas(fit, schema=schema)
+    ).applyInPandas(worker_kernel(fit), schema=schema)

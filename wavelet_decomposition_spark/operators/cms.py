@@ -49,6 +49,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.session import worker_kernel
+
 _KIND_CELL = 0  # (cell, cnt): one nonzero CMS cell of this partition
 _KIND_CAND = 1  # (key, cnt): local exact top-k candidate
 _KIND_NROW = 2  # (cnt): partition row count
@@ -144,7 +146,9 @@ def cms_heavy_hitters(
     # input scan + Arrow pass (3 scans of 100 TB). The partials are
     # bounded by partitions x (d*w + local_k) rows — pennies to cache —
     # so persist THEM, making the expensive pass run exactly once.
-    partials = keyed.mapInPandas(partial, _PARTIAL_SCHEMA).persist()
+    partials = keyed.mapInPandas(
+        worker_kernel(partial), _PARTIAL_SCHEMA
+    ).persist()
     # one small shuffle each, all bounded by partitions x (d*w + k):
     cells = (
         partials.filter(F.col("kind") == _KIND_CELL)

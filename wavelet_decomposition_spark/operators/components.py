@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.session import worker_kernel
+
 
 def _star(e: DataFrame, large: bool) -> DataFrame:
     """One large- or small-star round over directed edges (u, v), u > v."""
@@ -215,7 +217,9 @@ def triangle_stats(
 
         tri = (
             e.coalesce(1)
-            .mapInPandas(_gemm_stream, schema="n_triangles bigint")
+            .mapInPandas(
+                worker_kernel(_gemm_stream), schema="n_triangles bigint"
+            )
         )
     else:
         tri = _wedge_triangles(e, deg)

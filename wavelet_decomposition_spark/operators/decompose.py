@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..kernel import wavelets as wl
 from ..kernel.lsqr import beta_decomposition
 from ..kernel.sparse import CSRMatrix
+from ..plans.session import worker_kernel
 
 BETA_SCHEMA = (
     "series_id string, year int, scale_idx int, pos int, beta double"
@@ -109,7 +110,7 @@ def decompose(
     if solve_partitions:
         df = df.repartition(int(solve_partitions), "series_id", "year")
     return df.groupBy("series_id", "year").applyInPandas(
-        _solve, schema=BETA_SCHEMA
+        worker_kernel(_solve), schema=BETA_SCHEMA
     )
 
 
@@ -160,7 +161,8 @@ def reconstruct(
         )
 
     return betas.groupBy("series_id", "year").applyInPandas(
-        _recon, schema="series_id string, year int, idx int, value double"
+        worker_kernel(_recon),
+        schema="series_id string, year int, idx int, value double",
     )
 
 

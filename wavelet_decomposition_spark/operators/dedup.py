@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .textstats import fingerprint, normalized
+from ..plans.session import worker_kernel
 
 # deterministic MinHash permutation parameters: universal hashing over the
 # Mersenne prime 2^31 - 1 (31-bit hash space keeps a*h+b < 2^62, inside
@@ -434,7 +435,9 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
             out = (sh << shifts[None, :]).sum(axis=1).astype(_np.int64)
             yield pd.DataFrame({"id": pdf["id"].to_numpy(), "simhash": out})
 
-    return hashed.mapInPandas(_majority, schema="id long, simhash long")
+    return hashed.mapInPandas(
+        worker_kernel(_majority), schema="id long, simhash long"
+    )
 
 
 def simhash_near_pairs(sh: DataFrame, max_hamming: int = 3) -> DataFrame:

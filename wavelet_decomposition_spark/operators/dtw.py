@@ -54,6 +54,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.session import worker_kernel
+
 __all__ = [
     "banded_dtw_numpy",
     "full_dtw_numpy",
@@ -185,7 +187,7 @@ def dtw_for_candidates(
         "key_a", "key_b", "vals_a", "vals_b"
     )
     kernel, schema = _score_kernel(radius, wide_radius)
-    return joined.mapInPandas(kernel, schema=schema)
+    return joined.mapInPandas(worker_kernel(kernel), schema=schema)
 
 
 def dtw_allpairs(
@@ -234,4 +236,4 @@ def dtw_allpairs(
     # per pair) across the cluster before scoring
     pairs = pairs.repartition(F.col("key_a"), F.col("key_b"))
     kernel, schema = _score_kernel(radius, wide_radius)
-    return pairs.mapInPandas(kernel, schema=schema)
+    return pairs.mapInPandas(worker_kernel(kernel), schema=schema)

@@ -42,6 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.session import worker_kernel
+
 
 def _partials_schema(dim: int) -> str:
     return (
@@ -120,7 +122,7 @@ def _iterate(
     re-seeding would break determinism)."""
     k, dim = cent.shape
     partials = emb.mapInPandas(
-        _assign_kernel(cent, id_col, vec_col),
+        worker_kernel(_assign_kernel(cent, id_col, vec_col)),
         schema=_partials_schema(dim),
     )
     agg = (
@@ -207,8 +209,11 @@ def kmeans_assign(
     """Label every row with its nearest centroid:
     ``(id_col, cell, sqdist_micro)`` — one corpus pass, no shuffle."""
     return emb.select(id_col, vec_col).mapInPandas(
-        _labels_kernel(np.asarray(centroids, dtype=np.float64),
-                       id_col, vec_col),
+        worker_kernel(
+            _labels_kernel(
+                np.asarray(centroids, dtype=np.float64), id_col, vec_col
+            )
+        ),
         schema=f"{id_col} bigint, cell int, sqdist_micro bigint",
     )
 

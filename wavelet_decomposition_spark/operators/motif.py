@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.session import worker_kernel
+
 _SCHEMA = (
     "{g} string, idx int, start_ts timestamp, mp_dist double, nn_idx int"
 )
@@ -104,7 +106,7 @@ def matrix_profile(
     return (
         series.select(group_col, ts_col, value_col)
         .groupBy(group_col)
-        .applyInPandas(_one, schema=_SCHEMA.format(g=group_col))
+        .applyInPandas(worker_kernel(_one), schema=_SCHEMA.format(g=group_col))
     )
 
 

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.session import worker_kernel
+
 ASSET_SCHEMA = (
     "asset_id long, kind string, payload binary, width int, height int, "
     "duration_ms int, codec string"
@@ -100,7 +102,8 @@ def extract_features(
             )
 
     return assets.mapInPandas(
-        _extract, schema="asset_id long, kind string, feature array<float>"
+        worker_kernel(_extract),
+        schema="asset_id long, kind string, feature array<float>",
     )
 
 

@@ -47,6 +47,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.session import worker_kernel
+
 
 def _stats_kernel(dim: int, vec_col: str):
     """mapInPandas kernel: ONE partial-statistics row per Arrow batch —
@@ -99,7 +101,7 @@ def pca_fit(
         raise ValueError("pca_fit on an empty DataFrame")
     dim = len(first[0])
     partials = emb.select(vec_col).mapInPandas(
-        _stats_kernel(dim, vec_col),
+        worker_kernel(_stats_kernel(dim, vec_col)),
         schema="n long, s array<bigint>, g array<bigint>",
     )
     # flatten (n | s | g) into one posexplode so ONE aggregate reduces
@@ -177,5 +179,6 @@ def pca_project(
             )
 
     return emb.select(id_col, vec_col).mapInPandas(
-        gen, schema=f"{id_col} bigint, scores array<double>, resid_sq double"
+        worker_kernel(gen),
+        schema=f"{id_col} bigint, scores array<double>, resid_sq double",
     )

@@ -52,6 +52,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.session import worker_kernel
+
 
 def train_pq_codebooks(
     corpus: DataFrame,
@@ -150,7 +152,7 @@ def pq_encode(
     ``qerr_micro`` is the exact (floor-micro) squared reconstruction
     error, carried so a decode pass can verify the encode."""
     return corpus.select(id_col, vec_col).mapInPandas(
-        _encode_kernel(books, id_col, vec_col),
+        worker_kernel(_encode_kernel(books, id_col, vec_col)),
         schema=f"{id_col} bigint, codes array<int>, qerr_micro bigint",
     )
 
@@ -192,7 +194,7 @@ def pq_decode_errors(
             )
 
     return joined.mapInPandas(
-        gen,
+        worker_kernel(gen),
         schema=(
             f"{id_col} bigint, qerr_micro bigint, qerr_decode_micro bigint"
         ),
@@ -260,7 +262,8 @@ def pq_topk(
             )
 
     cand = codes.mapInPandas(
-        gen, schema=f"query_id bigint, {id_col} bigint, adist double"
+        worker_kernel(gen),
+        schema=f"query_id bigint, {id_col} bigint, adist double",
     )
     w = Window.partitionBy("query_id").orderBy(
         F.asc("adist"), F.asc(id_col)

@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.session import worker_kernel
+
 RESAMPLE_SCHEMA = "series_id string, year int, idx int, value double"
 
 
@@ -41,7 +43,7 @@ def resample_per_year(
         )
 
     return df.groupBy("series_id", "year").applyInPandas(
-        _interp, schema=RESAMPLE_SCHEMA
+        worker_kernel(_interp), schema=RESAMPLE_SCHEMA
     )
 
 

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from wavelet_decomposition_spark.operators.textstats import token_count
+from ..plans.session import worker_kernel
 
 _LCG_A = 1103515245
 _LCG_C = 12345
@@ -259,7 +260,9 @@ def pack_sequences(
 
     packed = (
         meta.repartition(n_parts, F.pmod(F.col("_id"), F.lit(n_parts)))
-        .mapInPandas(pack, "_id bigint, n_tokens int, bin_id bigint")
+        .mapInPandas(
+            worker_kernel(pack), "_id bigint, n_tokens int, bin_id bigint"
+        )
     )
     return packed.select(
         F.col("_id").alias(id_col), "n_tokens", "bin_id"

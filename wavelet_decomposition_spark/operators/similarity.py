@@ -24,6 +24,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.session import worker_kernel
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -417,5 +419,5 @@ def cosine_allpairs_exact(
         F.col(id_col).cast("bigint").alias(id_col), vec_col
     ).repartition(spark.sparkContext.defaultParallelism)
     return streamed.mapInPandas(
-        gen, schema="id_a bigint, id_b bigint, cosine double"
+        worker_kernel(gen), schema="id_a bigint, id_b bigint, cosine double"
     )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernel.sparse import CSRMatrix
+from ..plans.session import worker_kernel
 
 
 def fft_spectrum(
@@ -43,7 +44,9 @@ def fft_spectrum(
         out["magnitude"] = mag
         return pd.DataFrame(out)
 
-    return df.groupBy(*group_cols).applyInPandas(_fft, schema=out_schema)
+    return df.groupBy(*group_cols).applyInPandas(
+        worker_kernel(_fft), schema=out_schema
+    )
 
 
 def spectral_features(
@@ -109,7 +112,9 @@ def spectral_features(
         )
         return pd.DataFrame([out])
 
-    return df.groupBy(*group_cols).applyInPandas(_feat, schema=out_schema)
+    return df.groupBy(*group_cols).applyInPandas(
+        worker_kernel(_feat), schema=out_schema
+    )
 
 
 def per_scale_reconstruction(betas: DataFrame, bc, n_scales: int = 15) -> DataFrame:
@@ -152,7 +157,7 @@ def per_scale_reconstruction(betas: DataFrame, bc, n_scales: int = 15) -> DataFr
         return pd.concat(frames, ignore_index=True)
 
     return betas.groupBy("series_id", "year").applyInPandas(
-        _per_scale,
+        worker_kernel(_per_scale),
         schema="series_id string, year int, scale_idx int, idx int, value double",
     )
 

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..kernel import wavelets as wl
 from ..kernel.lsqr import lsqr
 from ..kernel.sparse import CSRMatrix
+from ..plans.session import worker_kernel
 
 
 def residues_for_shifts(
@@ -72,7 +73,9 @@ def residues_for_shifts(
                 out_res.append(float(np.dot(resid, resid)))
             yield pd.DataFrame({"shift": out_shift, "residue": out_res})
 
-    return cand.mapInPandas(_residues, schema="shift long, residue double")
+    return cand.mapInPandas(
+        worker_kernel(_residues), schema="shift long, residue double"
+    )
 
 
 def best_translation(

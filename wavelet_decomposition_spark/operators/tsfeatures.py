@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.session import worker_kernel
+
 
 def rolling_stats(
     series: DataFrame,
@@ -95,7 +97,7 @@ def ewma(
 
     return series.select(group_col, ts_col, value_col).groupBy(
         group_col
-    ).applyInPandas(fit, schema=out_schema)
+    ).applyInPandas(worker_kernel(fit), schema=out_schema)
 
 
 def acf(
@@ -186,7 +188,7 @@ def brown_les(
 
     return series.select(group_col, ts_col, value_col).groupBy(
         group_col
-    ).applyInPandas(fit, schema=out_schema)
+    ).applyInPandas(worker_kernel(fit), schema=out_schema)
 
 
 def cross_corr(
@@ -413,7 +415,7 @@ def lttb_downsample(
 
     return series.select(group_col, ts_col, value_col).groupBy(
         group_col
-    ).applyInPandas(fit, schema=out_schema)
+    ).applyInPandas(worker_kernel(fit), schema=out_schema)
 
 
 def m4_downsample(
@@ -753,5 +755,5 @@ def holt_winters(
             "_bkt", F.pmod(F.xxhash64(F.col(group_col)), F.lit(n_buckets))
         )
         .groupBy("_bkt")
-        .applyInPandas(fit, schema=out_schema)
+        .applyInPandas(worker_kernel(fit), schema=out_schema)
     )

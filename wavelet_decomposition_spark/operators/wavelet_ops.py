@@ -24,12 +24,17 @@ mirroring the reference's per-scale energy analytics (SURVEY.md A7).
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernel import dwt as kdwt
+from ..plans.session import worker_kernel
+
+_log = logging.getLogger(__name__)
 
 COEF_SCHEMA = (
     "conv_id string, window_id int, wavelet string, level int, k int, "
@@ -50,31 +55,43 @@ def python_stage_partitions(projected: DataFrame) -> int:
     size — rather than a constant tuned for one deployment).
 
     Targets ~2 MB of (already projected) input per task at the small
-    end — each applyInPandas task pays a fixed worker/Arrow/scheduling
-    cost that a fleet of 3k-row tasks cannot amortize (measured on the
-    flagship 1m tier: 64 fixed tasks = 1.3 s, 32 = 0.8 s for the
-    identical kernel) — and caps per-task input at ~64 MB once the data
-    is large enough to keep every core busy anyway. The task count
-    never drops below ``defaultParallelism``: Catalyst's size estimate
-    is unreliable below a generated/exploded lineage (a gap-filled grid
-    is far larger than its estimate), and a Python-CPU-heavy kernel
-    must keep every core busy even when its input bytes are few
-    (measured: the db4 VisuShrink kernel serialized onto a handful of
-    tasks regressed 1.9 s -> 5.3 s before this floor). Falls back to
-    ``2 * defaultParallelism`` when Catalyst has no usable estimate.
+    end, and caps per-task input at ~64 MB once the data is large enough
+    to keep every core busy anyway. Each Python task pays a fixed cost
+    that a fleet of 3k-row tasks cannot amortize (measured on the flagship
+    1m tier: 64 fixed tasks = 1.3 s, 32 = 0.8 s for the identical kernel).
+    Most of it was pyspark's per-task ``importlib.invalidate_caches()``
+    re-reading the Spark distribution's zip archives, which
+    :func:`~wavelet_decomposition_spark.plans.session.worker_kernel` now
+    avoids. The task count never drops below ``defaultParallelism``:
+    Catalyst's size estimate is unreliable below a generated/exploded
+    lineage (a gap-filled grid is far larger than its estimate), and a
+    Python-CPU-heavy kernel must keep every core busy even when its input
+    bytes are few (measured: the db4 VisuShrink kernel serialized onto a
+    handful of tasks regressed 1.9 s -> 5.3 s before this floor). Falls
+    back to ``2 * defaultParallelism`` when Catalyst has no usable
+    estimate. Each decision is logged with its inputs.
     """
-    sc = projected.sparkSession.sparkContext
-    dp = sc.defaultParallelism
+    dp = projected.sparkSession.sparkContext.defaultParallelism
     try:
         b = int(
             projected._jdf.queryExecution().optimizedPlan().stats()
             .sizeInBytes()
         )
-    except Exception:
+    except Exception as e:
+        _log.warning(
+            "python_stage_partitions: no size estimate (%s), "
+            "defaultParallelism=%d -> %d tasks", type(e).__name__, dp, dp * 2,
+        )
         return dp * 2
     if b <= 0 or b > (1 << 60):  # Catalyst's "unknown" is ~8 EiB
-        return dp * 2
-    return max(dp, min(b // (2 << 20), max(dp * 4, b // (64 << 20))))
+        n = dp * 2
+    else:
+        n = max(dp, min(b // (2 << 20), max(dp * 4, b // (64 << 20))))
+    _log.info(
+        "python_stage_partitions: sizeInBytes=%d, defaultParallelism=%d "
+        "-> %d tasks", b, dp, n,
+    )
+    return n
 
 
 def bucketed_apply(
@@ -104,7 +121,7 @@ def bucketed_apply(
     return (
         bucketed.repartition(n_partitions, "_bucket")
         .groupBy("_bucket")
-        .applyInPandas(fn, schema=schema)
+        .applyInPandas(worker_kernel(fn), schema=schema)
     )
 
 
