@@ -78,14 +78,3 @@ def test_relational_reconstruction_matches_matvec(spark, betas_2013):
             | (F.abs(F.col("value") - F.col("v_udf")) > 1e-9)
         ).count()
         assert bad == 0, f"keep_scales={keep}"
-
-
-def test_mask_scales_zeroes_unselected(spark, betas_2013):
-    betas, _ = betas_2013
-    masked = ser.mask_scales(betas, [5])  # keep only the 24 h scale
-    agg = masked.groupBy(F.col("scale_idx") == 5).agg(
-        F.sum(F.abs(F.col("beta"))).alias("mass")
-    ).collect()
-    mass = {r[0]: r[1] for r in agg}
-    assert mass[False] == 0.0
-    assert mass[True] > 0.0

@@ -27,11 +27,6 @@ def test_exact_dedup(spark, docs):
     n = docs.count()
     deduped = dedup.exact_dedup(docs)
     assert deduped.count() == n - 20
-    groups = dedup.exact_dup_groups(docs)
-    assert groups.count() == 20
-    assert groups.filter(F.col("n_dups") != 2).count() == 0
-    # keeper is always the original (lowest id)
-    assert groups.filter(F.col("keeper_id") >= 100000).count() == 0
 
 
 def test_ngram_jaccard_finds_near_dups(spark, docs):

@@ -3,43 +3,8 @@ import time
 from pyspark.sql import functions as F
 
 from wavelet_decomposition_spark.io.transcripts import transcripts_df
-from wavelet_decomposition_spark.operators import activity, export, rollup
+from wavelet_decomposition_spark.operators import activity, rollup
 from wavelet_decomposition_spark.streaming.facade import stream_rollup_1m
-
-
-def test_sheet_layout_and_stacking(spark):
-    rows = [
-        ("A", 2012, 0, 0, 1.0), ("A", 2012, 0, 1, 2.0),
-        ("A", 2013, 0, 0, 3.0), ("A", 2013, 0, 1, 4.0),
-        ("A", 2012, 1, 0, 5.0),
-    ]
-    betas = spark.createDataFrame(
-        rows, "series_id string, year int, scale_idx int, pos int, beta double"
-    )
-    sheet = {
-        (r.year, r.scale_idx): r.column
-        for r in export.sheet_layout(betas).collect()
-    }
-    assert sheet[(2012, 0)] == [1.0, 2.0]
-    stacked = export.stacked_betas(betas).orderBy(
-        "scale_idx", "stack_pos"
-    ).collect()
-    s0 = [r.beta for r in stacked if r.scale_idx == 0]
-    assert s0 == [1.0, 2.0, 3.0, 4.0]  # 2012 then 2013, pos order within
-
-
-def test_write_betas_partitioned(spark, tmp_path):
-    betas = spark.createDataFrame(
-        [("A", 2012, 0, 0, 1.0), ("B", 2013, 1, 0, 2.0)],
-        "series_id string, year int, scale_idx int, pos int, beta double",
-    )
-    path = str(tmp_path / "betas")
-    export.write_betas(betas, path)
-    back = spark.read.parquet(path)
-    assert back.count() == 2
-    # partition pruning: reading one partition touches one directory
-    one = back.filter((F.col("series_id") == "A") & (F.col("year") == 2012))
-    assert one.count() == 1
 
 
 def test_streaming_1m_tier_matches_batch(spark, tmp_path):

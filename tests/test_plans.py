@@ -323,44 +323,6 @@ def test_shuffle_bytes_pinned_thresholds(spark, queries):
     assert w2 < 8 * 1024 * 1024, f"activity_1m shuffle write {w2}"
 
 
-def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
-    """write_bucketed's contract: two tables bucketed identically on the
-    join key equi-join with ZERO exchanges and zero sorts in the join
-    stage (bucket layout IS the hash partitioning; sortBy pre-sorts each
-    bucket) — the one-time-write-cost / every-run-join-savings trade that
-    matters for recurring fact-fact joins at 100 TB."""
-    from pyspark.sql import functions as F
-
-    from wavelet_decomposition_spark.operators.layout import write_bucketed
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-        write_bucketed(
-            ev.select("event_id", "user_id", "ts", "value"),
-            "t_ev_bucketed", ["user_id"], 8, sort_cols=["user_id"],
-        )
-        write_bucketed(
-            ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")),
-            "t_usr_bucketed", ["user_id"], 8, sort_cols=["user_id"],
-        )
-        a = spark.table("t_ev_bucketed")
-        b = spark.table("t_usr_bucketed")
-        j = a.join(b, "user_id")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan[:1500]
-        assert plan.count("Sort ") == 0 or "Sort [user_id" not in plan.split(
-            "SortMergeJoin"
-        )[1].split("FileScan")[0] or True  # sorts absent: buckets pre-sorted
-        # and the result is right
-        assert j.count() == ev.count()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS t_ev_bucketed")
-        spark.sql("DROP TABLE IF EXISTS t_usr_bucketed")
-
-
 def test_runtime_bloom_filter_join_pruning(spark):
     """Runtime row-level Bloom-filter injection (Spark 3.3+): a selective
     dimension side plants a bloom filter on the fact side's scan so

@@ -13,7 +13,6 @@ from wavelet_decomposition_spark.operators.router import (
     TIER_STEP,
     choose_tier,
     read_tier_range,
-    route_and_read,
 )
 from wavelet_decomposition_spark.operators import rollup
 
@@ -111,20 +110,6 @@ def test_read_tier_range_prunes_partitions(spark, tmp_path):
     ]
     days = {f.split("day%3D")[-1].split("day=")[-1].split("/")[0] for f in files}
     assert days == {"2024-01-03", "2024-01-04"}
-
-
-def test_route_and_read_composes(spark, tmp_path):
-    base = _write_store(spark, tmp_path)
-    tier, df = route_and_read(
-        spark, base, datetime(2024, 1, 1), datetime(2024, 1, 11), max_points=300
-    )
-    assert tier == "1h"  # 10 days = 240 hourly points <= 300
-    assert df.count() == 240
-    tier, df = route_and_read(
-        spark, base, datetime(2024, 1, 1), datetime(2024, 1, 11), max_points=20
-    )
-    assert tier == "1d"
-    assert df.count() == 10
 
 
 def test_tier_steps_cover_rollup_tiers():

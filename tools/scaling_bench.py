@@ -12,8 +12,8 @@ SAME stored input, and we report throughput at both plus
 Protocol notes (all deliberate):
 - Each measurement runs in its own subprocess (a JVM's master is fixed at
   startup, so the two parallelism levels cannot share one SparkSession).
-- The flagship runs four times per subprocess (cold + three warm repeats)
-  and the BEST warm repeat is the measurement: a production rollup
+- Each job goes through ``bench.timed``: cold + three warm repeats, and the
+  BEST warm repeat is the measurement: a production rollup
   pipeline is long-running, so steady state (python workers spawned, code
   JIT'd, input in page cache) is the honest operating point — and this
   shared-host guest sees up to 2-4x run-to-run noise from neighbor load,
@@ -24,28 +24,36 @@ Protocol notes (all deliberate):
   both raw and normalized by that ceiling, since no software can scale
   better than the hardware it runs on.
 
+The four scaling points are one table (:data:`POINTS`): flagship, dedup,
+relational and gemm. Each names its input materializer, its job, its
+throughput unit, its ceiling probe and its BENCH.md section text; one
+:func:`measure` and one :func:`run` serve all four.
+
 Usage:
     python tools/scaling_bench.py                 # flagship run -> BENCH.md + JSON line
     python tools/scaling_bench.py --dedup         # LLM-dedup scaling -> appended to BENCH.md
     python tools/scaling_bench.py --relational    # pure-JVM sessionize scaling -> appended
     python tools/scaling_bench.py --gemm          # Arrow+BLAS all-pairs cosine -> appended
-    python tools/scaling_bench.py --one 8 <path>  # single measurement (internal)
-    python tools/scaling_bench.py --one-dedup 8 <path>       # (internal)
-    python tools/scaling_bench.py --one-relational 8 <path>  # (internal)
-    python tools/scaling_bench.py --one-gemm 8 <path>        # (internal)
+    python tools/scaling_bench.py --one <point> 8 <path>  # single measurement (internal)
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import multiprocessing as mp
 import os
 import subprocess
 import sys
+import tempfile
 import time
+from dataclasses import dataclass
+from typing import Callable
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+import bench  # noqa: E402
 
 # 3M conversations ≈ 150M turns: big enough that parallel compute (shuffles,
 # Arrow exchange, pyramid/codec UDFs) dominates fixed job latency — the
@@ -62,44 +70,54 @@ N_CONVS = int(os.environ.get("SPARK_GRAFT_SCALE_CONVS", "3000000"))
 # "N and 4N" shape; override with SPARK_GRAFT_SCALE_LO/HI.
 CORES_LO = int(os.environ.get("SPARK_GRAFT_SCALE_LO", "4"))
 CORES_HI = int(os.environ.get("SPARK_GRAFT_SCALE_HI", "16"))
+DOCS_MULT = int(os.environ.get("SPARK_GRAFT_SCALE_DOCS_MULT", "100"))
+N_VECS = int(os.environ.get("SPARK_GRAFT_SCALE_VECS", "80000"))
 
 
-def run_one(cores: int, tx_path: str) -> None:
-    """Measure the flagship pipeline at local[cores]: one cold run, then two
-    warm repeats; the measurement is the BEST warm repeat. This VM is a
-    shared-host guest — identical back-to-back runs have been observed to
-    differ 2-4x when a noisy neighbor steals cycles, and min-of-warm
-    measures the engine rather than the neighbors. All walls are printed so
-    the variance is visible."""
-    from bench import flagship_pipeline
-
+def _session(app_name: str, cores: int | None = None):
     from wavelet_decomposition_spark.plans.session import build_session
 
-    spark = build_session(app_name=f"wds-scale-{cores}", cores=cores)
+    spark = build_session(app_name=app_name, cores=cores)
     spark.sparkContext.setLogLevel("ERROR")
-    walls = []
-    for _ in range(4):  # cold + three warm: episodic host noise on this
-        # shared guest hits single runs 1.3-2x; min-of-three warm suppresses
-        t0 = time.time()
-        n_turns = flagship_pipeline(spark, tx_path)
-        walls.append(time.time() - t0)
-    print(json.dumps({
-        "cores": cores,
-        "wall_cold_sec": round(walls[0], 3),
-        "wall_sec": round(min(walls[1:]), 3),
-        "walls_all_sec": [round(w, 3) for w in walls],
-        "n_turns": n_turns,
-        "turns_per_sec": round(n_turns / min(walls[1:]), 1),
-    }))
-    spark.stop()
+    return spark
 
 
-DOCS_MULT = int(os.environ.get("SPARK_GRAFT_SCALE_DOCS_MULT", "100"))
+def pin_blas() -> None:
+    """Pin BLAS threading to 1 BEFORE the first numpy import in this
+    process: OpenBLAS reads these once at load, fork-based mp.Pool workers
+    inherit the already-initialized library, and Spark's Python workers
+    inherit this process' env. An unpinned BLAS would use every machine
+    core inside each worker and silently erase the parallelism difference
+    being measured (measured 0.32-0.44 ceiling unpinned vs 0.74 pinned on
+    identical hardware)."""
+    for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS",
+                "MKL_NUM_THREADS"):
+        os.environ[var] = "1"
 
 
-def materialize_docs(mult: int) -> str:
-    """Scaled documents input for the dedup scaling point: each sf0.1
-    document expanded into ``mult`` variants arranged in PAIRS — variants
+# --- input materializers: run once in the driver process, untimed ---------
+
+
+def materialize_tx() -> str:
+    """The stored transcript corpus the flagship and relational points
+    share (``$SPARK_GRAFT_SCALE_PATH`` overrides the location)."""
+    tx_path = os.environ.get(
+        "SPARK_GRAFT_SCALE_PATH",
+        f"{tempfile.gettempdir()}/wds_scale_tx_{N_CONVS}",
+    )
+    if not os.path.exists(tx_path):
+        spark = _session("wds-scale-setup")
+        materialized = bench.materialize_transcripts(spark, N_CONVS)
+        if materialized != tx_path:
+            os.rename(materialized, tx_path)
+        spark.stop()
+    return tx_path
+
+
+def materialize_docs() -> str:
+    """Scaled documents input for the dedup scaling point: each
+    ``$SPARK_GRAFT_SF_DIR`` document expanded into ``DOCS_MULT`` variants
+    arranged in PAIRS — variants
     (2k, 2k+1) share a 150-token body block UNIQUE to that (doc, k) and
     differ by one token (jaccard ~0.97: a true near-dup pair). Every other
     relationship — other pairs of the same doc, any variant of any other
@@ -116,294 +134,54 @@ def materialize_docs(mult: int) -> str:
 
     Deterministic; written once with a fixed split count so every
     parallelism level sees the same well-split scan."""
-    import tempfile
-
-    path = f"{tempfile.gettempdir()}/wds_scale_docs_{mult}x"
+    sf_dir = bench.sf_location()[0]
+    path = (f"{tempfile.gettempdir()}/wds_scale_docs_"
+            f"{os.path.basename(sf_dir.rstrip('/'))}_{DOCS_MULT}x")
     if os.path.exists(path):
         return path
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
-    from wavelet_decomposition_spark.plans.session import build_session
-
-    spark = build_session(app_name="wds-scale-docs-setup", cores=32)
-    spark.sparkContext.setLogLevel("ERROR")
-    docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    spark = _session("wds-scale-docs-setup")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
     parts = []
-    for i in range(mult):
+    for i in range(DOCS_MULT):
         k = i // 2
+        text = F.col("text")
         if k:
             # 150 tokens, each embedding (doc_id, k): unique per (doc, k)
-            block = F.concat_ws(
-                " ",
-                *[
-                    F.concat(
-                        F.lit("b"),
-                        F.col("doc_id").cast("string"),
-                        F.lit(f"k{k}t{j}"),
-                    )
-                    for j in range(150)
-                ],
-            )
-            text = F.concat(F.col("text"), F.lit(" "), block)
-        else:
-            text = F.col("text")
+            block = F.concat_ws(" ", *[
+                F.concat(F.lit("b"), F.col("doc_id").cast("string"),
+                         F.lit(f"k{k}t{j}"))
+                for j in range(150)
+            ])
+            text = F.concat(text, F.lit(" "), block)
         if i % 2:
             text = F.concat(text, F.lit(" oddvariant"))
-        parts.append(
-            docs.select(
-                (F.col("doc_id") + F.lit(i * n)).alias("doc_id"),
-                text.alias("text"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+        parts.append(docs.select(
+            (F.col("doc_id") + F.lit(i * n)).alias("doc_id"), text.alias("text")
+        ))
+    out = functools.reduce(DataFrame.unionByName, parts)
     out.repartition(64).write.mode("overwrite").parquet(path)
     spark.stop()
     return path
 
 
-def run_one_dedup(cores: int, docs_path: str) -> None:
-    """Measure the 100-TB dedup path (ngram_jaccard_pairs_bounded at its
-    0.8 operating point: minhash signatures -> banded LSH candidates ->
-    exact JVM-side verification) at local[cores]: cold + three warm repeats,
-    best warm is the measurement (same protocol as the flagship)."""
-    from pyspark.sql import functions as F
-
-    from wavelet_decomposition_spark.operators.dedup import (
-        ngram_jaccard_pairs_bounded,
-    )
-    from wavelet_decomposition_spark.plans.session import build_session
-
-    spark = build_session(app_name=f"wds-scale-dedup-{cores}", cores=cores)
-    spark.sparkContext.setLogLevel("ERROR")
-    docs = spark.read.parquet(docs_path)
-    n_docs = docs.count()
-    walls, n_pairs = [], 0
-    for _ in range(4):  # cold + three warm (same protocol as the flagship)
-        t0 = time.time()
-        pairs = ngram_jaccard_pairs_bounded(docs, threshold=0.8)
-        n_pairs = pairs.groupBy().count().collect()[0][0]
-        walls.append(time.time() - t0)
-    print(json.dumps({
-        "cores": cores,
-        "wall_cold_sec": round(walls[0], 3),
-        "wall_sec": round(min(walls[1:]), 3),
-        "walls_all_sec": [round(w, 3) for w in walls],
-        "n_docs": n_docs,
-        "n_pairs": int(n_pairs),
-        "docs_per_sec": round(n_docs / min(walls[1:]), 1),
-    }))
-    spark.stop()
-
-
-def dedup_main() -> None:
-    """The per-query N->4N scaling point for the LLM-pipeline path
-    (round-2 verdict #8): same protocol as the flagship, appended to
-    BENCH.md as its own evidence block."""
-    docs_path = materialize_docs(DOCS_MULT)
-    ceiling = cpu_ceiling(CORES_LO, CORES_HI)
-    results: dict[int, dict] = {}
-    for cores in (CORES_LO, CORES_HI):
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--one-dedup",
-             str(cores), docs_path],
-            capture_output=True, text=True, cwd=REPO, check=True,
-        )
-        line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-        results[cores] = json.loads(line)
-    lo, hi = results[CORES_LO], results[CORES_HI]
-    speedup = lo["wall_sec"] / hi["wall_sec"]
-    efficiency = speedup / (CORES_HI / CORES_LO)
-    summary = {
-        "metric": f"dedup scaling efficiency (ngram_jaccard_bounded, "
-                  f"local[{CORES_LO}] -> local[{CORES_HI}], same input, "
-                  "best warm repeat)",
-        "n_docs": hi["n_docs"],
-        "n_pairs": hi["n_pairs"],
-        f"throughput_local{CORES_LO}_docs_per_sec": lo["docs_per_sec"],
-        f"throughput_local{CORES_HI}_docs_per_sec": hi["docs_per_sec"],
-        f"wall_local{CORES_LO}_sec": lo["wall_sec"],
-        f"wall_local{CORES_HI}_sec": hi["wall_sec"],
-        f"walls_all_local{CORES_LO}_sec": lo["walls_all_sec"],
-        f"walls_all_local{CORES_HI}_sec": hi["walls_all_sec"],
-        "speedup": round(speedup, 3),
-        "scaling_efficiency": round(efficiency, 3),
-        "hardware_cpu_ceiling": round(ceiling, 3),
-        "efficiency_vs_hardware_ceiling": round(efficiency / ceiling, 3),
-        "target": 0.8,
-    }
-    print(json.dumps(summary))
-    with open(os.path.join(REPO, "BENCH.md"), "a") as f:
-        f.write(
-            "\n## Dedup scaling point (LLM-pipeline path)\n\n"
-            "Same N->4N protocol applied to the 100-TB dedup operator "
-            "`ngram_jaccard_pairs_bounded` at its 0.8 operating point "
-            "(minhash signatures -> banded-LSH candidate pairs -> exact "
-            "JVM-side `array_intersect` verification; no shingle "
-            f"self-join) over the sf0.1 documents table replicated "
-            f"{DOCS_MULT}x with near-dup copies "
-            f"({hi['n_docs']:,} docs, {hi['n_pairs']:,} verified pairs).\n\n"
-            f"- local[{CORES_LO}]:  {lo['wall_sec']:.1f}s best-warm "
-            f"({lo['wall_cold_sec']:.1f}s cold) -> "
-            f"{lo['docs_per_sec']:,.0f} docs/sec\n"
-            f"- local[{CORES_HI}]: {hi['wall_sec']:.1f}s best-warm "
-            f"({hi['wall_cold_sec']:.1f}s cold) -> "
-            f"{hi['docs_per_sec']:,.0f} docs/sec\n"
-            f"- **scaling efficiency: {efficiency:.3f}** (target >= 0.8; "
-            f"hardware ceiling between these core counts measured at "
-            f"{ceiling:.3f} -> {efficiency / ceiling:.2f}x of ceiling)\n\n"
-            "Reproduce: `python tools/scaling_bench.py --dedup`.\n\n"
-            "```json\n" + json.dumps(summary, indent=2) + "\n```\n"
-        )
-
-
-def run_one_relational(cores: int, tx_path: str) -> None:
-    """Measure a PURE-JVM relational query (sessionize: lag + cumulative-sum
-    window + hash aggregate, zero Python) at local[cores] — the scaling
-    point for the engine's whole-stage-codegen path, complementing the
-    UDF-heavy flagship and the dedup point (round-3 verdict #7). The scan
-    projects exactly (conv_id, ts, turn_idx, length(text)) so only an int
-    rides the sort shuffle, not the wide text column. Cold + three warm
-    repeats, best warm is the measurement (same protocol as the others)."""
-    from pyspark.sql import functions as F
-
-    from wavelet_decomposition_spark.operators.sessions import sessionize
-    from wavelet_decomposition_spark.plans.session import build_session
-
-    spark = build_session(app_name=f"wds-scale-rel-{cores}", cores=cores)
-    spark.sparkContext.setLogLevel("ERROR")
-    tx = spark.read.parquet(tx_path).select(
-        "conv_id", "ts", "turn_idx", F.length("text").alias("n_chars")
-    )
-    n_turns = tx.count()  # untimed: input size for the throughput figure
-
-    def _job():
-        sessionize(
-            tx, gap="60 seconds", group_col="conv_id", ts_col="ts",
-            order_col="turn_idx", value_col="n_chars",
-        ).write.format("noop").mode("overwrite").save()
-
-    walls = []
-    for _ in range(4):  # cold + three warm (same protocol as the flagship)
-        t0 = time.time()
-        _job()
-        walls.append(time.time() - t0)
-    n_sessions = sessionize(
-        tx, gap="60 seconds", group_col="conv_id", ts_col="ts",
-        order_col="turn_idx", value_col="n_chars",
-    ).count()
-    print(json.dumps({
-        "cores": cores,
-        "wall_cold_sec": round(walls[0], 3),
-        "wall_sec": round(min(walls[1:]), 3),
-        "walls_all_sec": [round(w, 3) for w in walls],
-        "n_turns": n_turns,
-        "n_sessions": int(n_sessions),
-        "turns_per_sec": round(n_turns / min(walls[1:]), 1),
-    }))
-    spark.stop()
-
-
-def relational_main() -> None:
-    """N->4N scaling point for the pure-relational path (round-3 verdict
-    #7): sessionize (oracle-checked query shape) over the same stored
-    transcript corpus the flagship uses; appended to BENCH.md as its own
-    evidence block."""
-    import tempfile
-
-    tx_path = os.environ.get(
-        "SPARK_GRAFT_SCALE_PATH",
-        f"{tempfile.gettempdir()}/wds_scale_tx_{N_CONVS}",
-    )
-    if not os.path.exists(tx_path):
-        from bench import materialize_transcripts
-
-        from wavelet_decomposition_spark.plans.session import build_session
-
-        spark = build_session(app_name="wds-scale-setup", cores=32)
-        spark.sparkContext.setLogLevel("ERROR")
-        materialized = materialize_transcripts(spark, N_CONVS)
-        if materialized != tx_path:
-            os.rename(materialized, tx_path)
-        spark.stop()
-    ceiling = cpu_ceiling(CORES_LO, CORES_HI)
-    results: dict[int, dict] = {}
-    for cores in (CORES_LO, CORES_HI):
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--one-relational",
-             str(cores), tx_path],
-            capture_output=True, text=True, cwd=REPO, check=True,
-        )
-        line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-        results[cores] = json.loads(line)
-    lo, hi = results[CORES_LO], results[CORES_HI]
-    speedup = lo["wall_sec"] / hi["wall_sec"]
-    efficiency = speedup / (CORES_HI / CORES_LO)
-    summary = {
-        "metric": f"relational scaling efficiency (sessionize, "
-                  f"local[{CORES_LO}] -> local[{CORES_HI}], same input, "
-                  "best warm repeat)",
-        "n_turns": hi["n_turns"],
-        "n_sessions": hi["n_sessions"],
-        f"throughput_local{CORES_LO}_turns_per_sec": lo["turns_per_sec"],
-        f"throughput_local{CORES_HI}_turns_per_sec": hi["turns_per_sec"],
-        f"wall_local{CORES_LO}_sec": lo["wall_sec"],
-        f"wall_local{CORES_HI}_sec": hi["wall_sec"],
-        f"walls_all_local{CORES_LO}_sec": lo["walls_all_sec"],
-        f"walls_all_local{CORES_HI}_sec": hi["walls_all_sec"],
-        "speedup": round(speedup, 3),
-        "scaling_efficiency": round(efficiency, 3),
-        "hardware_cpu_ceiling": round(ceiling, 3),
-        "efficiency_vs_hardware_ceiling": round(efficiency / ceiling, 3),
-        "target": 0.8,
-    }
-    print(json.dumps(summary))
-    with open(os.path.join(REPO, "BENCH.md"), "a") as f:
-        f.write(
-            "\n## Relational scaling point (pure-JVM path)\n\n"
-            "Same N->4N protocol applied to a ZERO-Python query — "
-            "`sessionize` (lag + cumulative-sum window + hash aggregate, "
-            "whole-stage codegen end to end; the oracle-checked driver "
-            "query's exact shape) — over the same stored transcript corpus "
-            "the flagship uses, so the relational/shuffle path has its own "
-            "evidence alongside the UDF-heavy flagship and the dedup "
-            f"point ({hi['n_turns']:,} turns -> {hi['n_sessions']:,} "
-            "sessions at a 60 s gap; the scan projects the group key, "
-            "timestamp, order key and an int — the wide text column never "
-            "rides the sort shuffle).\n\n"
-            f"- local[{CORES_LO}]:  {lo['wall_sec']:.1f}s best-warm "
-            f"({lo['wall_cold_sec']:.1f}s cold) -> "
-            f"{lo['turns_per_sec']:,.0f} turns/sec\n"
-            f"- local[{CORES_HI}]: {hi['wall_sec']:.1f}s best-warm "
-            f"({hi['wall_cold_sec']:.1f}s cold) -> "
-            f"{hi['turns_per_sec']:,.0f} turns/sec\n"
-            f"- **scaling efficiency: {efficiency:.3f}** (target >= 0.8; "
-            f"hardware ceiling between these core counts measured at "
-            f"{ceiling:.3f} -> {efficiency / ceiling:.2f}x of ceiling)\n\n"
-            "Reproduce: `python tools/scaling_bench.py --relational`.\n\n"
-            "```json\n" + json.dumps(summary, indent=2) + "\n```\n"
-        )
-
-
-def materialize_embeddings(n_vecs: int, dim: int = 64) -> str:
+def materialize_embeddings(dim: int = 64) -> str:
     """Deterministic synthetic embedding corpus for the GEMM scaling
-    point, stored once and reused: unit-normalized gaussian vectors with
-    10% planted near-duplicate pairs (so the threshold filter has real
-    work and a stable output count)."""
-    import tempfile
-
+    point, stored once and reused: ``N_VECS`` unit-normalized gaussian
+    vectors with 10% planted near-duplicate pairs (so the threshold filter
+    has real work and a stable output count)."""
     import numpy as np
+    import pandas as pd
 
+    n_vecs = N_VECS
     path = f"{tempfile.gettempdir()}/wds_scale_emb_{n_vecs}x{dim}"
     # _SUCCESS guards against reusing a partial corpus from a killed write
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
-    from wavelet_decomposition_spark.plans.session import build_session
-
-    spark = build_session(app_name="wds-scale-emb-setup", cores=32)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _session("wds-scale-emb-setup")
     rng = np.random.default_rng(17)
     base = rng.normal(size=(n_vecs, dim))
     n_dup = n_vecs // 10
@@ -413,8 +191,6 @@ def materialize_embeddings(n_vecs: int, dim: int = 64) -> str:
         scale=0.05, size=(n_dup, dim)
     )
     base /= np.linalg.norm(base, axis=1, keepdims=True)
-    import pandas as pd
-
     pdf = pd.DataFrame(
         {
             "vec_id": np.arange(n_vecs, dtype=np.int64),
@@ -428,121 +204,83 @@ def materialize_embeddings(n_vecs: int, dim: int = 64) -> str:
     return path
 
 
-def run_one_gemm(cores: int, emb_path: str) -> None:
-    """Measure the broadcast-GEMM exact all-pairs cosine at local[cores].
-    BLAS threading is pinned to 1 (OPENBLAS/OMP/MKL_NUM_THREADS) — an
-    unpinned BLAS would use every machine core inside each Python worker
-    and silently erase the parallelism difference being measured. The
-    throughput unit is pair-dot-products/sec (n^2 per full scan)."""
-    for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS",
-                "MKL_NUM_THREADS"):
-        os.environ[var] = "1"
+# --- jobs: (spark, input path) -> (timed run, counts of the last run) ------
+# ``counts(out)`` turns the last run's result into (units, named counts);
+# throughput is units per second of the best warm wall. Input sizes are
+# counted untimed.
+
+
+def flagship_job(spark, tx_path):
+    """The bench.py flagship pipeline; its result is the turn count."""
+    return (lambda: bench.flagship_pipeline(spark, tx_path),
+            lambda n_turns: (n_turns, {"n_turns": n_turns}))
+
+
+def dedup_job(spark, docs_path):
+    """The 100-TB dedup path: ngram_jaccard_pairs_bounded at its 0.8
+    operating point (minhash signatures -> banded LSH candidates -> exact
+    JVM-side verification)."""
+    from wavelet_decomposition_spark.operators.dedup import (
+        ngram_jaccard_pairs_bounded,
+    )
+
+    docs = spark.read.parquet(docs_path)
+    n_docs = docs.count()
+
+    def run():
+        pairs = ngram_jaccard_pairs_bounded(docs, threshold=0.8)
+        return pairs.groupBy().count().collect()[0][0]
+
+    return run, lambda n_pairs: (
+        n_docs, {"n_docs": n_docs, "n_pairs": int(n_pairs)}
+    )
+
+
+def relational_job(spark, tx_path):
+    """A PURE-JVM relational query (sessionize: lag + cumulative-sum
+    window + hash aggregate, zero Python) — the scaling point for the
+    engine's whole-stage-codegen path, complementing the UDF-heavy
+    flagship and the dedup point (round-3 verdict #7). The scan projects
+    exactly (conv_id, ts, turn_idx, length(text)) so only an int rides the
+    sort shuffle, not the wide text column. The session count is taken
+    untimed, after the timed runs."""
+    from pyspark.sql import functions as F
+
+    from wavelet_decomposition_spark.operators.sessions import sessionize
+
+    tx = spark.read.parquet(tx_path).select(
+        "conv_id", "ts", "turn_idx", F.length("text").alias("n_chars")
+    )
+    n_turns = tx.count()
+
+    def sessions():
+        return sessionize(
+            tx, gap="60 seconds", group_col="conv_id", ts_col="ts",
+            order_col="turn_idx", value_col="n_chars",
+        )
+
+    return (lambda: bench.noop(sessions()), lambda _: (
+        n_turns, {"n_turns": n_turns, "n_sessions": int(sessions().count())}
+    ))
+
+
+def gemm_job(spark, emb_path):
+    """The broadcast-GEMM exact all-pairs cosine (BLAS pinned to 1
+    thread). The throughput unit is pair-dot-products (n^2 per full
+    scan)."""
     from wavelet_decomposition_spark.operators.similarity import (
         cosine_allpairs_exact,
     )
-    from wavelet_decomposition_spark.plans.session import build_session
 
-    spark = build_session(app_name=f"wds-scale-gemm-{cores}", cores=cores)
-    spark.sparkContext.setLogLevel("ERROR")
     emb = spark.read.parquet(emb_path)
     n_vecs = emb.count()
-
-    def _job() -> int:
-        return cosine_allpairs_exact(emb, threshold=0.9).count()
-
-    walls, n_pairs = [], 0
-    for _ in range(4):  # cold + three warm, best warm is the measurement
-        t0 = time.time()
-        n_pairs = _job()
-        walls.append(time.time() - t0)
-    best = min(walls[1:])
-    print(json.dumps({
-        "cores": cores,
-        "wall_cold_sec": round(walls[0], 3),
-        "wall_sec": round(best, 3),
-        "walls_all_sec": [round(w, 3) for w in walls],
-        "n_vecs": n_vecs,
-        "n_pairs": int(n_pairs),
-        "pair_dots_per_sec": round(n_vecs * n_vecs / best, 1),
-    }))
-    spark.stop()
+    return (lambda: cosine_allpairs_exact(emb, threshold=0.9).count(),
+            lambda n_pairs: (
+                n_vecs * n_vecs, {"n_vecs": n_vecs, "n_pairs": int(n_pairs)}
+            ))
 
 
-def gemm_main() -> None:
-    """N->4N scaling point for the Arrow+numpy GEMM path (exact all-pairs
-    cosine): the one hot-path stage class with no prior scaling evidence
-    (flagship = pandas-UDF pyramid, dedup = JVM shuffle+hash, relational =
-    whole-stage codegen; this = Python workers doing BLAS over broadcast
-    state)."""
-    # Pin BLAS threading BEFORE the first numpy import in THIS process:
-    # OpenBLAS reads these once at load, and fork-based mp.Pool workers
-    # inherit the already-initialized library — setting them later (as
-    # gemm_ceiling once did) silently runs every ceiling-probe worker
-    # multithreaded, oversubscribing the box and deflating the ceiling
-    # (measured 0.32-0.44 unpinned vs 0.74 pinned on identical hardware).
-    for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS",
-                "MKL_NUM_THREADS"):
-        os.environ[var] = "1"
-    n_vecs = int(os.environ.get("SPARK_GRAFT_SCALE_VECS", "80000"))
-    emb_path = materialize_embeddings(n_vecs)
-    ceiling = gemm_ceiling(CORES_LO, CORES_HI)
-    results: dict[int, dict] = {}
-    for cores in (CORES_LO, CORES_HI):
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--one-gemm",
-             str(cores), emb_path],
-            capture_output=True, text=True, cwd=REPO, check=True,
-        )
-        line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-        results[cores] = json.loads(line)
-    lo, hi = results[CORES_LO], results[CORES_HI]
-    speedup = lo["wall_sec"] / hi["wall_sec"]
-    efficiency = speedup / (CORES_HI / CORES_LO)
-    summary = {
-        "metric": f"GEMM all-pairs-cosine scaling efficiency "
-                  f"(local[{CORES_LO}] -> local[{CORES_HI}], same input, "
-                  "best warm repeat, BLAS pinned to 1 thread)",
-        "n_vecs": hi["n_vecs"],
-        "n_pairs": hi["n_pairs"],
-        f"throughput_local{CORES_LO}_pair_dots_per_sec":
-            lo["pair_dots_per_sec"],
-        f"throughput_local{CORES_HI}_pair_dots_per_sec":
-            hi["pair_dots_per_sec"],
-        f"wall_local{CORES_LO}_sec": lo["wall_sec"],
-        f"wall_local{CORES_HI}_sec": hi["wall_sec"],
-        f"walls_all_local{CORES_LO}_sec": lo["walls_all_sec"],
-        f"walls_all_local{CORES_HI}_sec": hi["walls_all_sec"],
-        "speedup": round(speedup, 3),
-        "scaling_efficiency": round(efficiency, 3),
-        "hardware_cpu_ceiling": round(ceiling, 3),
-        "efficiency_vs_hardware_ceiling": round(efficiency / ceiling, 3),
-        "target": 0.8,
-    }
-    print(json.dumps(summary))
-    with open(os.path.join(REPO, "BENCH.md"), "a") as f:
-        f.write(
-            "\n## GEMM scaling point (Arrow + numpy BLAS path)\n\n"
-            "Same N->4N protocol applied to the broadcast-GEMM exact "
-            "all-pairs cosine (`cosine_allpairs_exact`): each Arrow batch "
-            "does one BLAS matmul against the broadcast unit-row matrix, "
-            "so this measures the Python-worker/Arrow/BLAS stage class "
-            "that none of the other three scaling blocks exercise. BLAS "
-            "threading pinned to 1 so worker-level parallelism is the only "
-            f"variable ({hi['n_vecs']:,} vectors -> {hi['n_pairs']:,} "
-            "pairs at cosine >= 0.9, 10% planted near-dup twins).\n\n"
-            f"- local[{CORES_LO}]:  {lo['wall_sec']:.1f}s best-warm "
-            f"({lo['wall_cold_sec']:.1f}s cold) -> "
-            f"{lo['pair_dots_per_sec']:,.0f} pair-dots/sec\n"
-            f"- local[{CORES_HI}]: {hi['wall_sec']:.1f}s best-warm "
-            f"({hi['wall_cold_sec']:.1f}s cold) -> "
-            f"{hi['pair_dots_per_sec']:,.0f} pair-dots/sec\n"
-            f"- **scaling efficiency: {efficiency:.3f}** (target >= 0.8; "
-            f"same-workload-class ceiling — blocked single-thread BLAS "
-            f"under multiprocessing, NO Spark — measured at "
-            f"{ceiling:.3f} -> {efficiency / ceiling:.2f}x of ceiling)\n\n"
-            "Reproduce: `python tools/scaling_bench.py --gemm`.\n\n"
-            "```json\n" + json.dumps(summary, indent=2) + "\n```\n"
-        )
+# --- ceiling probes ---------------------------------------------------------
 
 
 def _gemm_chunk(args: tuple) -> int:
@@ -567,15 +305,13 @@ def _gemm_chunk(args: tuple) -> int:
 def gemm_ceiling(lo: int, hi: int, n: int = 80_000, dim: int = 64,
                  repeats: int = 3) -> float:
     """GEMM-class scaling this VM can deliver between the two core counts
-    (pure multiprocessing + pinned single-thread BLAS, no Spark): the
+    (pure multiprocessing + pinned single-thread BLAS, no Spark; the
+    caller runs :func:`pin_blas` first): the
     honest upper bound for the --gemm point. The generic integer-burn
     `cpu_ceiling` overstates it — measured 0.865 integer vs ~0.74 for
     blocked BLAS on this host (shared memory bandwidth + SMT sharing hit
     vector units harder than scalar loops). Interleaved best-of-N because
     identical runs vary up to 1.5x under neighbor load."""
-    for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS",
-                "MKL_NUM_THREADS"):
-        os.environ[var] = "1"
     chunks = 32
     args = [(i, n // chunks, n // 16, dim) for i in range(chunks)]
     rates: dict[int, list] = {lo: [], hi: []}
@@ -607,90 +343,235 @@ def cpu_ceiling(lo: int, hi: int, work: int = 3_000_000) -> float:
     return (rates[hi] / rates[lo]) / (hi / lo)
 
 
-def main() -> None:
-    if len(sys.argv) >= 2 and sys.argv[1] == "--one":
-        run_one(int(sys.argv[2]), sys.argv[3])
-        return
-    if len(sys.argv) >= 2 and sys.argv[1] == "--one-dedup":
-        run_one_dedup(int(sys.argv[2]), sys.argv[3])
-        return
-    if len(sys.argv) >= 2 and sys.argv[1] == "--dedup":
-        dedup_main()
-        return
-    if len(sys.argv) >= 2 and sys.argv[1] == "--one-relational":
-        run_one_relational(int(sys.argv[2]), sys.argv[3])
-        return
-    if len(sys.argv) >= 2 and sys.argv[1] == "--relational":
-        relational_main()
-        return
-    if len(sys.argv) >= 2 and sys.argv[1] == "--one-gemm":
-        run_one_gemm(int(sys.argv[2]), sys.argv[3])
-        return
-    if len(sys.argv) >= 2 and sys.argv[1] == "--gemm":
-        gemm_main()
-        return
+# --- BENCH.md section texts (str.format templates; see section()) ----------
 
-    import tempfile
+_LEVELS = (
+    "- local[{lo}]:  {lo_wall:.1f}s best-warm ({lo_cold:.1f}s cold) -> "
+    "{lo_rate:,.0f} {label}/sec\n"
+    "- local[{hi}]: {hi_wall:.1f}s best-warm ({hi_cold:.1f}s cold) -> "
+    "{hi_rate:,.0f} {label}/sec\n"
+)
 
-    from bench import materialize_transcripts
 
-    from wavelet_decomposition_spark.plans.session import build_session
-
-    tx_path = os.environ.get(
-        "SPARK_GRAFT_SCALE_PATH",
-        f"{tempfile.gettempdir()}/wds_scale_tx_{N_CONVS}",
+def _appended(heading: str, intro: str,
+              ceiling: str = "hardware ceiling between these core counts"
+              ) -> str:
+    """Section text of a point that appends its block to BENCH.md."""
+    return (
+        f"\n## {heading}\n\n{intro}\n\n" + _LEVELS
+        + "- **scaling efficiency: {eff:.3f}** (target >= 0.8; " + ceiling
+        + " measured at {ceiling:.3f} -> {of_ceiling:.2f}x of ceiling)\n\n"
+        "Reproduce: `python tools/scaling_bench.py --{name}`.\n\n"
     )
-    if not os.path.exists(tx_path):
-        spark = build_session(app_name="wds-scale-setup", cores=32)
-        spark.sparkContext.setLogLevel("ERROR")
-        materialized = materialize_transcripts(spark, N_CONVS)
-        if materialized != tx_path:
-            os.rename(materialized, tx_path)
+
+
+_FLAGSHIP_TEXT = (
+    "# BENCH — scaling-efficiency evidence (north rule)\n\n"
+    "No real cluster exists in this sandbox, so per the driver's "
+    "instruction the N->4N executor criterion is evidenced by "
+    "running the identical flagship job at two parallelism levels "
+    "on the same stored input. The flagship: stored transcript "
+    "parquet -> 1s activity tier -> 1m/1h/1d rollup cascade (one "
+    "scan of the wide text column, narrow 1m tier cached) -> "
+    "Haar+db4 DWT coefficient tables + in-UDF energy spectra over "
+    "zero-gap-filled dyadic windows (gap-fill fused into the window "
+    "scatter — the exploded grid is never shuffled) -> Gorilla XOR "
+    "+ delta-of-delta block encode of the 1m tier.\n\n"
+    "- input: {n_turns:,} turns ({n_convs:,} conversations, "
+    "deterministic seed 42)\n"
+    + _LEVELS
+    + "- speedup {lo}->{hi} cores: {speedup:.2f}x (ideal {ratio:.0f}x)\n"
+    "- **scaling efficiency: {eff:.3f}** (target >= 0.8)\n"
+    "- hardware context: a pure-CPU multiprocessing microbenchmark "
+    "(no Spark, measured on the idle machine before the runs) "
+    "scales at **{ceiling:.3f}** efficiency between the same core "
+    "counts on this VM — the ceiling any engine can reach here "
+    "(the 32 vCPUs share fewer effective cores under full load: "
+    "SMT/host contention). The engine achieves "
+    "**{of_ceiling:.2f}x of the hardware ceiling** "
+    "(same raw ratio as `efficiency_vs_hardware_ceiling` in the "
+    "JSON below; values above 1.0 are measurement noise).\n\n"
+    "Why best-of-warm: a production rollup pipeline is "
+    "long-running; a warm in-session run (python workers spawned, "
+    "JIT'd, input page-cached) is the operating point the "
+    "10^12-turn deployment lives at. This sandbox is a shared-host "
+    "guest whose identical back-to-back runs differ up to 2-4x "
+    "under neighbor load, so each level runs cold + three warm "
+    "repeats and the BEST warm repeat is the measurement (all "
+    "walls published in the JSON).\n\n"
+    "Reproduce: `python tools/scaling_bench.py` "
+    "(env `SPARK_GRAFT_SCALE_CONVS` scales the input, "
+    "`SPARK_GRAFT_SCALE_LO/HI` pick the core counts).\n\n"
+)
+
+
+@dataclass(frozen=True)
+class Point:
+    """One N->4N scaling point."""
+
+    name: str
+    materialize: Callable[[], str]
+    job: Callable  # (spark, path) -> (run, counts)
+    unit: str  # throughput unit: "<unit>_per_sec"
+    counts: tuple[str, ...]  # named counts the summary carries
+    ceiling: Callable[[int, int], float]
+    metric: str  # format(lo=, hi=)
+    text: str  # BENCH.md section template
+    # the flagship writes BENCH.md's head (every other point appends) and
+    # its summary keeps the cold walls and a unit-less throughput key
+    head: bool = False
+    pin_blas: bool = False
+
+
+POINTS = {p.name: p for p in (
+    Point(
+        "flagship", materialize_tx, flagship_job, "turns", ("n_turns",),
+        cpu_ceiling,
+        "scaling efficiency (local[{lo}] -> local[{hi}], same input, "
+        "best warm repeat)",
+        _FLAGSHIP_TEXT, head=True,
+    ),
+    Point(
+        "dedup", materialize_docs, dedup_job, "docs", ("n_docs", "n_pairs"),
+        cpu_ceiling,
+        "dedup scaling efficiency (ngram_jaccard_bounded, local[{lo}] -> "
+        "local[{hi}], same input, best warm repeat)",
+        _appended(
+            "Dedup scaling point (LLM-pipeline path)",
+            "Same N->4N protocol applied to the 100-TB dedup operator "
+            "`ngram_jaccard_pairs_bounded` at its 0.8 operating point "
+            "(minhash signatures -> banded-LSH candidate pairs -> exact "
+            "JVM-side `array_intersect` verification; no shingle "
+            "self-join) over the {sf} documents table replicated "
+            "{docs_mult}x with near-dup copies "
+            "({n_docs:,} docs, {n_pairs:,} verified pairs).",
+        ),
+    ),
+    Point(
+        "relational", materialize_tx, relational_job, "turns",
+        ("n_turns", "n_sessions"), cpu_ceiling,
+        "relational scaling efficiency (sessionize, local[{lo}] -> "
+        "local[{hi}], same input, best warm repeat)",
+        _appended(
+            "Relational scaling point (pure-JVM path)",
+            "Same N->4N protocol applied to a ZERO-Python query — "
+            "`sessionize` (lag + cumulative-sum window + hash aggregate, "
+            "whole-stage codegen end to end; the oracle-checked driver "
+            "query's exact shape) — over the same stored transcript corpus "
+            "the flagship uses, so the relational/shuffle path has its own "
+            "evidence alongside the UDF-heavy flagship and the dedup "
+            "point ({n_turns:,} turns -> {n_sessions:,} "
+            "sessions at a 60 s gap; the scan projects the group key, "
+            "timestamp, order key and an int — the wide text column never "
+            "rides the sort shuffle).",
+        ),
+    ),
+    Point(
+        "gemm", materialize_embeddings, gemm_job, "pair_dots",
+        ("n_vecs", "n_pairs"), gemm_ceiling,
+        "GEMM all-pairs-cosine scaling efficiency (local[{lo}] -> "
+        "local[{hi}], same input, best warm repeat, BLAS pinned to 1 "
+        "thread)",
+        _appended(
+            "GEMM scaling point (Arrow + numpy BLAS path)",
+            "Same N->4N protocol applied to the broadcast-GEMM exact "
+            "all-pairs cosine (`cosine_allpairs_exact`): each Arrow batch "
+            "does one BLAS matmul against the broadcast unit-row matrix, "
+            "so this measures the Python-worker/Arrow/BLAS stage class "
+            "that none of the other three scaling blocks exercise. BLAS "
+            "threading pinned to 1 so worker-level parallelism is the only "
+            "variable ({n_vecs:,} vectors -> {n_pairs:,} "
+            "pairs at cosine >= 0.9, 10% planted near-dup twins).",
+            ceiling="same-workload-class ceiling — blocked single-thread "
+                    "BLAS under multiprocessing, NO Spark —",
+        ),
+        pin_blas=True,
+    ),
+)}
+
+
+def measure(point: Point, cores: int, path: str) -> dict:
+    """One measurement of ``point``'s job at local[cores] through
+    ``bench.timed``."""
+    if point.pin_blas:
+        pin_blas()
+    spark = _session(f"wds-scale-{point.name}-{cores}", cores)
+    try:
+        run, counts = point.job(spark, path)
+        t = bench.timed(point.name, run)
+        units, named = counts(t["out"])
+    finally:
         spark.stop()
-
-    # measure the hardware ceiling FIRST (idle machine — adjacent Spark load
-    # skews the microbenchmark)
-    ceiling = cpu_ceiling(CORES_LO, CORES_HI)
-
-    results: dict[int, dict] = {}
-    for cores in (CORES_LO, CORES_HI):
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--one",
-             str(cores), tx_path],
-            capture_output=True, text=True, cwd=REPO, check=True,
-        )
-        line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-        results[cores] = json.loads(line)
-
-    lo, hi = results[CORES_LO], results[CORES_HI]
-    speedup = lo["wall_sec"] / hi["wall_sec"]
-    ratio = CORES_HI / CORES_LO
-    efficiency = speedup / ratio
-    summary = {
-        "metric": f"scaling efficiency (local[{CORES_LO}] -> "
-                  f"local[{CORES_HI}], same input, best warm repeat)",
-        "n_turns": hi["n_turns"],
-        f"throughput_local{CORES_LO}": lo["turns_per_sec"],
-        f"throughput_local{CORES_HI}": hi["turns_per_sec"],
-        f"wall_local{CORES_LO}_sec": lo["wall_sec"],
-        f"wall_local{CORES_HI}_sec": hi["wall_sec"],
-        f"wall_cold_local{CORES_LO}_sec": lo["wall_cold_sec"],
-        f"wall_cold_local{CORES_HI}_sec": hi["wall_cold_sec"],
-        f"walls_all_local{CORES_LO}_sec": lo["walls_all_sec"],
-        f"walls_all_local{CORES_HI}_sec": hi["walls_all_sec"],
-        "speedup": round(speedup, 3),
-        "scaling_efficiency": round(efficiency, 3),
-        "hardware_cpu_ceiling": round(ceiling, 3),
-        "efficiency_vs_hardware_ceiling": round(efficiency / ceiling, 3),
-        "target": 0.8,
+    return {
+        "cores": cores,
+        "wall_cold_sec": t["cold"],
+        "wall_sec": t["wall"],
+        "walls_all_sec": [t["cold"], *t["raw"]],
+        **named,
+        f"{point.unit}_per_sec": round(units / t["wall"], 1),
     }
-    print(json.dumps(summary))
 
-    # The flagship block is the file's head; every other mode APPENDS its own
-    # section. Rewriting with mode "w" used to wipe those appended sections
-    # (dedup/relational/GEMM/10x evidence) — preserve everything from the
-    # first appended-section marker onward.
+
+def _scaling(lo: dict, hi: dict) -> tuple[float, float]:
+    """(speedup, efficiency) from lo -> hi."""
+    speedup = lo["wall_sec"] / hi["wall_sec"]
+    return speedup, speedup / (hi["cores"] / lo["cores"])
+
+
+def summarize(point: Point, lo: dict, hi: dict, ceiling: float) -> dict:
+    """The JSON summary of one point from its lo/hi measurements."""
+    speedup, efficiency = _scaling(lo, hi)
+    rate = f"{point.unit}_per_sec"
+    fields = [("throughput_local{}" + ("" if point.head else f"_{rate}"),
+               rate), ("wall_local{}_sec", "wall_sec")]
+    if point.head:
+        fields.append(("wall_cold_local{}_sec", "wall_cold_sec"))
+    fields.append(("walls_all_local{}_sec", "walls_all_sec"))
+    summary = {"metric": point.metric.format(lo=lo["cores"], hi=hi["cores"])}
+    summary.update({k: hi[k] for k in point.counts})
+    for key, field in fields:
+        for r in (lo, hi):
+            summary[key.format(r["cores"])] = r[field]
+    summary.update(
+        speedup=round(speedup, 3),
+        scaling_efficiency=round(efficiency, 3),
+        hardware_cpu_ceiling=round(ceiling, 3),
+        efficiency_vs_hardware_ceiling=round(efficiency / ceiling, 3),
+        target=0.8,
+    )
+    return summary
+
+
+def section(point: Point, lo: dict, hi: dict, ceiling: float,
+            summary: dict) -> str:
+    """``point``'s BENCH.md section: its text, then the JSON summary."""
+    speedup, efficiency = _scaling(lo, hi)
+    rate = f"{point.unit}_per_sec"
+    text = point.text.format(
+        name=point.name, label=point.unit.replace("_", "-"),
+        lo=lo["cores"], lo_wall=lo["wall_sec"], lo_cold=lo["wall_cold_sec"],
+        lo_rate=lo[rate],
+        hi=hi["cores"], hi_wall=hi["wall_sec"], hi_cold=hi["wall_cold_sec"],
+        hi_rate=hi[rate],
+        speedup=speedup, ratio=hi["cores"] / lo["cores"], eff=efficiency,
+        ceiling=ceiling, of_ceiling=efficiency / ceiling,
+        n_convs=N_CONVS, docs_mult=DOCS_MULT,
+        sf=os.path.basename(bench.sf_location()[0].rstrip("/")),
+        **{k: hi[k] for k in point.counts},
+    )
+    return text + "```json\n" + json.dumps(summary, indent=2) + "\n```\n"
+
+
+def write_section(point: Point, block: str) -> None:
+    """The flagship block is BENCH.md's head; every other point APPENDS
+    its own section. Rewriting with mode "w" used to wipe those appended
+    sections (dedup/relational/GEMM/10x evidence) — the flagship keeps
+    everything from the first appended-section marker onward."""
     bench_path = os.path.join(REPO, "BENCH.md")
+    if not point.head:
+        with open(bench_path, "a") as f:
+            f.write(block)
+        return
     tail = ""
     if os.path.exists(bench_path):
         old = open(bench_path).read()
@@ -700,55 +581,42 @@ def main() -> None:
             if pos != -1:
                 cut = min(cut, pos)
         tail = "\n" + old[cut:].lstrip("\n") if cut < len(old) else ""
-
     with open(bench_path, "w") as f:
-        f.write(
-            "# BENCH — scaling-efficiency evidence (north rule)\n\n"
-            "No real cluster exists in this sandbox, so per the driver's "
-            "instruction the N->4N executor criterion is evidenced by "
-            "running the identical flagship job at two parallelism levels "
-            "on the same stored input. The flagship: stored transcript "
-            "parquet -> 1s activity tier -> 1m/1h/1d rollup cascade (one "
-            "scan of the wide text column, narrow 1m tier cached) -> "
-            "Haar+db4 DWT coefficient tables + in-UDF energy spectra over "
-            "zero-gap-filled dyadic windows (gap-fill fused into the window "
-            "scatter — the exploded grid is never shuffled) -> Gorilla XOR "
-            "+ delta-of-delta block encode of the 1m tier.\n\n"
-            f"- input: {hi['n_turns']:,} turns ({N_CONVS:,} conversations, "
-            "deterministic seed 42)\n"
-            f"- local[{CORES_LO}]:  {lo['wall_sec']:.1f}s best-warm "
-            f"({lo['wall_cold_sec']:.1f}s cold) -> "
-            f"{lo['turns_per_sec']:,.0f} turns/sec\n"
-            f"- local[{CORES_HI}]: {hi['wall_sec']:.1f}s best-warm "
-            f"({hi['wall_cold_sec']:.1f}s cold) -> "
-            f"{hi['turns_per_sec']:,.0f} turns/sec\n"
-            f"- speedup {CORES_LO}->{CORES_HI} cores: {speedup:.2f}x "
-            f"(ideal {ratio:.0f}x)\n"
-            f"- **scaling efficiency: {efficiency:.3f}** (target >= 0.8)\n"
-            f"- hardware context: a pure-CPU multiprocessing microbenchmark "
-            f"(no Spark, measured on the idle machine before the runs) "
-            f"scales at **{ceiling:.3f}** efficiency between the same core "
-            "counts on this VM — the ceiling any engine can reach here "
-            "(the 32 vCPUs share fewer effective cores under full load: "
-            "SMT/host contention). The engine achieves "
-            f"**{efficiency / ceiling:.2f}x of the hardware ceiling** "
-            "(same raw ratio as `efficiency_vs_hardware_ceiling` in the "
-            "JSON below; values above 1.0 are measurement noise).\n\n"
-            "Why best-of-warm: a production rollup pipeline is "
-            "long-running; a warm in-session run (python workers spawned, "
-            "JIT'd, input page-cached) is the operating point the "
-            "10^12-turn deployment lives at. This sandbox is a shared-host "
-            "guest whose identical back-to-back runs differ up to 2-4x "
-            "under neighbor load, so each level runs cold + three warm "
-            "repeats and the BEST warm repeat is the measurement (all "
-            "walls published in the JSON).\n\n"
-            "Reproduce: `python tools/scaling_bench.py` "
-            "(env `SPARK_GRAFT_SCALE_CONVS` scales the input, "
-            "`SPARK_GRAFT_SCALE_LO/HI` pick the core counts).\n\n"
-            "```json\n" + json.dumps(summary, indent=2) + "\n```\n"
-            + tail
-        )
+        f.write(block + tail)
+
+
+def _measure_apart(point: Point, cores: int, path: str) -> dict:
+    """:func:`measure` in its own subprocess (its own JVM and master)."""
+    out = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), "--one", point.name,
+         str(cores), path],
+        capture_output=True, text=True, cwd=REPO, check=True,
+    )
+    line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
+    return json.loads(line)
+
+
+def run(point: Point) -> None:
+    """One point's N->4N run: materialize the input, measure the hardware
+    ceiling FIRST (idle machine — adjacent Spark load skews the
+    microbenchmark), measure both levels in their own subprocesses, then
+    print the summary and write the BENCH.md section."""
+    if point.pin_blas:
+        pin_blas()
+    path = point.materialize()
+    ceiling = point.ceiling(CORES_LO, CORES_HI)
+    lo, hi = (_measure_apart(point, c, path) for c in (CORES_LO, CORES_HI))
+    summary = summarize(point, lo, hi, ceiling)
+    print(json.dumps(summary))
+    write_section(point, section(point, lo, hi, ceiling, summary))
+
+
+def main(argv: list[str]) -> None:
+    if argv[:1] == ["--one"]:
+        print(json.dumps(measure(POINTS[argv[1]], int(argv[2]), argv[3])))
+    else:
+        run(POINTS[argv[0].removeprefix("--") if argv else "flagship"])
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

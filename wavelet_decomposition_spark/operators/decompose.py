@@ -61,26 +61,24 @@ def decompose(
     df: DataFrame,
     bc,
     damp: float = 0.001,
-    solve_partitions: int | None = 0,
 ) -> DataFrame:
     """(series_id, year, idx, value) -> (series_id, year, scale_idx, pos, beta).
 
     ``bc`` is the broadcast from :func:`broadcast_dictionaries`.
 
-    ``solve_partitions`` pins the solve stage's shuffle width: a solve
-    group is ~700 KB of rows but ~2 s of CPU (700 LSQR iterations), a
-    byte-to-compute ratio AQE cannot see — with the session's 8 MB
+    The solve stage's shuffle width is pinned to ``defaultParallelism * 8``:
+    a solve group is ~700 KB of rows but ~2 s of CPU (700 LSQR iterations),
+    a byte-to-compute ratio AQE cannot see — with the session's 8 MB
     advisory size, AQE's partition coalescing packed the full E1's 21
     solves into THREE tasks (4/4/6 groups each, serialized: measured 11.7 s
     for a wave that runs in ~2.5 s when spread). An explicit
     ``repartition(n, keys)`` is exempt from AQE coalescing
     (REPARTITION_BY_NUM shuffle origin) and the groupBy reuses its hash
-    partitioning, so no second exchange appears. Default 0 = auto:
-    ``defaultParallelism * 8`` — scales with the CLUSTER, not the data
-    (birthday-collision-free for the reference's O(cores) group counts;
-    for corpora with millions of groups each partition simply carries many
-    groups, which is the normal compute-dense shuffle shape). Pass None to
-    keep the plain groupBy exchange."""
+    partitioning, so no second exchange appears. The width scales with the
+    CLUSTER, not the data (birthday-collision-free for the reference's
+    O(cores) group counts; for corpora with millions of groups each
+    partition simply carries many groups, which is the normal
+    compute-dense shuffle shape)."""
 
     def _solve(pdf: pd.DataFrame) -> pd.DataFrame:
         state = bc.value
@@ -105,12 +103,11 @@ def decompose(
             }
         )
 
-    if solve_partitions == 0:
-        solve_partitions = df.sparkSession.sparkContext.defaultParallelism * 8
-    if solve_partitions:
-        df = df.repartition(int(solve_partitions), "series_id", "year")
-    return df.groupBy("series_id", "year").applyInPandas(
-        worker_kernel(_solve), schema=BETA_SCHEMA
+    n = df.sparkSession.sparkContext.defaultParallelism * 8
+    return (
+        df.repartition(n, "series_id", "year")
+        .groupBy("series_id", "year")
+        .applyInPandas(worker_kernel(_solve), schema=BETA_SCHEMA)
     )
 
 

@@ -84,16 +84,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(fingerprint, n_dups, keeper_id) for groups with >1 member."""
-    return (
-        df.withColumn("fp", fingerprint(text_col))
-        .groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n_dups"), F.min(id_col).alias("keeper_id"))
-        .filter(F.col("n_dups") > 1)
-    )
-
-
 def _gram_array(words: F.Column, n: int) -> F.Column:
     """Distinct word n-grams from an ALREADY-MATERIALIZED words column.
 

@@ -62,43 +62,6 @@ def write_clustered(
     )
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a BUCKETED catalog table: rows are hash-
-    distributed into ``n_buckets`` files per partition by ``bucket_cols``
-    and (optionally) sorted within each bucket.
-
-    This is the shuffle-elimination half of the layout story
-    (``write_clustered`` is the pruning half): two tables bucketed the
-    same way on the same key equi-join with ZERO exchanges — the bucket
-    file layout IS the hash partitioning, recorded in the catalog, so
-    Catalyst drops both shuffle (and, with matching ``sort_cols``, both
-    sorts) from every future join/aggregation on that key. At 100 TB this
-    converts the recurring cost of a fact-fact join (reshuffling the
-    larger table every run) into a one-time write-side cost — the same
-    contract as Iceberg's bucket partition transform on a real
-    deployment (io/tables.py documents that seam).
-
-    Choose ``n_buckets`` so one bucket of the LARGER table fits an
-    executor comfortably (bytes / n_buckets ~ 256 MB-1 GB); both sides
-    must use the SAME n_buckets and key for the join to co-locate.
-    """
-    w = (
-        df.write.mode(mode)
-        .format("parquet")
-        .bucketBy(n_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
-
-
 _MORTON_MASKS = [
     (16, 0x0000FFFF0000FFFF),
     (8, 0x00FF00FF00FF00FF),

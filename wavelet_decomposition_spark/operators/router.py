@@ -87,18 +87,3 @@ def read_tier_range(
         & (F.col("bucket_ts") >= F.lit(start_ts))
         & (F.col("bucket_ts") < F.lit(end_ts))
     )
-
-
-def route_and_read(
-    spark: SparkSession,
-    base_path: str,
-    start_ts: datetime,
-    end_ts: datetime,
-    max_points: int,
-    retention_days: dict[str, int] | None = None,
-) -> tuple[str, DataFrame]:
-    """Convenience composition: choose, then read."""
-    tier, _ = choose_tier(
-        start_ts, end_ts, max_points, retention_days=retention_days
-    )
-    return tier, read_tier_range(spark, base_path, tier, start_ts, end_ts)

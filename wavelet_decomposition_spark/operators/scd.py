@@ -1,6 +1,6 @@
 """Change-stream -> SCD2 version history (run-length encoding over time).
 
-The retention engine's snapshot_diff (operators/export.py-era CDC) answers
+The ``snapshot_diff`` driver query (CDC between two snapshots) answers
 "what changed between two table versions"; this is the complementary
 primitive: given an APPEND-ONLY event stream carrying an attribute per key,
 collapse consecutive runs of the same attribute value into validity

@@ -1,4 +1,5 @@
-"""Per-point series transforms — reference operators P1/P2/P7.
+"""Per-point series transforms — reference operators P1/P2 (P7, the
+scale mask, is ``decompose.reconstruct(keep_scales=...)``).
 
 All pure column expressions / window aggregates (JVM-side, whole-stage
 codegen); no Python in these paths.
@@ -33,14 +34,3 @@ def normalize_yearly_mean(df: DataFrame) -> DataFrame:
     group key shared with downstream per-group stages."""
     w = Window.partitionBy(*GROUP_KEYS)
     return df.withColumn("value", F.col("value") / F.avg("value").over(w))
-
-
-def mask_scales(df: DataFrame, keep_scales, value_col: str = "beta") -> DataFrame:
-    """P7 — zero out coefficients outside the selected time scales before
-    reconstruction (wavelet_decomposition.py:406-416): a CASE projection."""
-    return df.withColumn(
-        value_col,
-        F.when(
-            F.col("scale_idx").isin(list(keep_scales)), F.col(value_col)
-        ).otherwise(F.lit(0.0)),
-    )

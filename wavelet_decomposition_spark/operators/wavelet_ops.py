@@ -232,7 +232,6 @@ def dwt_window_bands(
     transform: str = "dwt",
     group_col: str = "conv_id",
     ts_col: str = "bucket_ts",
-    n_partitions: int | None = None,
     sparse_fill_step: str | None = None,
 ) -> DataFrame:
     """Pyramid-transform a gap-filled series per conversation.
@@ -269,7 +268,7 @@ def dwt_window_bands(
 
     return bucketed_apply(
         filled.select(group_col, ts_col, value_col), group_col,
-        _pyramid_bucket, BAND_SCHEMA, n_partitions,
+        _pyramid_bucket, BAND_SCHEMA,
     )
 
 
@@ -282,7 +281,6 @@ def dwt_windows(
     transform: str = "dwt",
     group_col: str = "conv_id",
     ts_col: str = "bucket_ts",
-    n_partitions: int | None = None,
     sparse_fill_step: str | None = None,
 ) -> DataFrame:
     """Long-format coefficient table (COEF_SCHEMA, one row per coefficient).
@@ -294,8 +292,7 @@ def dwt_windows(
     bands = dwt_window_bands(
         filled, value_col, wavelet=wavelet, levels=levels,
         window_len=window_len, transform=transform, group_col=group_col,
-        ts_col=ts_col, n_partitions=n_partitions,
-        sparse_fill_step=sparse_fill_step,
+        ts_col=ts_col, sparse_fill_step=sparse_fill_step,
     )
     return bands.select(
         "conv_id", "window_id", "wavelet", "level", "coef_type",
@@ -421,7 +418,6 @@ def energy_windows(
     transform: str = "dwt",
     group_col: str = "conv_id",
     ts_col: str = "bucket_ts",
-    n_partitions: int | None = None,
     sparse_fill_step: str | None = None,
 ) -> DataFrame:
     """Per-scale energy spectrum computed inside the pyramid pass — one
@@ -458,7 +454,7 @@ def energy_windows(
 
     return bucketed_apply(
         filled.select(group_col, ts_col, value_col), group_col,
-        _energy_bucket, ENERGY_SCHEMA, n_partitions,
+        _energy_bucket, ENERGY_SCHEMA,
     )
 
 
@@ -480,7 +476,6 @@ def denoise_windows(
     mode: str = "soft",
     group_col: str = "conv_id",
     ts_col: str = "bucket_ts",
-    n_partitions: int | None = None,
     sparse_fill_step: str | None = None,
 ) -> DataFrame:
     """Wavelet shrinkage denoising per dyadic window (Donoho–Johnstone
@@ -565,5 +560,5 @@ def denoise_windows(
 
     return bucketed_apply(
         filled.select(group_col, ts_col, value_col), group_col,
-        _denoise_bucket, DENOISE_SCHEMA, n_partitions,
+        _denoise_bucket, DENOISE_SCHEMA,
     )

@@ -155,8 +155,13 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """A ``local[cores]`` session with the defaults above, shipping the
+    package. ``cores`` defaults to ``$SPARK_GRAFT_CPUS``, else the cores
+    this process may run on."""
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(
+            os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+        )
     if shuffle_partitions is None:
         # ~2x parallelism; AQE coalesces down when partitions are small
         shuffle_partitions = max(2 * cores, 8)
