@@ -25,11 +25,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 def entry(spark: SparkSession) -> DataFrame:
     """Rollup + wavelet flagship: synthetic transcripts -> 1s activity tier
-    -> 1m rollup -> gap-fill -> Haar DWT energy spectrum per conversation."""
+    -> 1m rollup -> Haar DWT energy spectrum per conversation, over windows
+    of the 1-minute grid (the zero gap-fill is fused into the window
+    builder)."""
     from wavelet_decomposition_spark.io.transcripts import transcripts_df
     from wavelet_decomposition_spark.operators import (
         activity,
-        gapfill,
         rollup,
         wavelet_ops,
     )
@@ -37,13 +38,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
     prep(spark)
     tx = transcripts_df(spark, 300, seed=42)
-    raw = activity.activity_raw(tx)
-    tier_1m = rollup.rollup_once(raw, "1m")
-    filled = gapfill.gapfill_zero(
-        tier_1m, activity.ACTIVITY_COUNT_COLS, step="1 minute"
-    )
+    tier_1m = rollup.rollup_once(activity.activity_raw(tx), "1m")
     return wavelet_ops.energy_windows(
-        filled, "turns", wavelet="haar", levels=4, window_len=64
+        tier_1m, "turns", wavelet="haar", levels=4, window_len=64,
+        sparse_fill_step="1 minute",
     )
 
 

@@ -48,7 +48,8 @@ def test_denoise_reduces_noise_and_identities(spark):
     pdf, clean = _noisy_windows()
     df = spark.createDataFrame(pdf).repartition(4)
     out = denoise_windows(
-        df, "v", wavelet="db4", levels=4, window_len=128
+        df, "v", wavelet="db4", levels=4, window_len=128,
+        sparse_fill_step="1 minute",
     ).toPandas()
     assert len(out) == len(clean)
     # per-row identities (what the driver invariants assert)
@@ -82,7 +83,8 @@ def test_threshold_zero_is_identity(spark):
     pdf, _ = _noisy_windows(n_conv=2)
     df = spark.createDataFrame(pdf)
     out = denoise_windows(
-        df, "v", wavelet="haar", levels=3, window_len=128, threshold=0.0
+        df, "v", wavelet="haar", levels=3, window_len=128, threshold=0.0,
+        sparse_fill_step="1 minute",
     ).toPandas()
     for row in out.itertuples():
         noisy = (
@@ -98,7 +100,8 @@ def test_hard_mode_zeroes_but_preserves_survivors(spark):
     pdf, _ = _noisy_windows(n_conv=2)
     df = spark.createDataFrame(pdf)
     out = denoise_windows(
-        df, "v", wavelet="haar", levels=3, window_len=128, mode="hard"
+        df, "v", wavelet="haar", levels=3, window_len=128, mode="hard",
+        sparse_fill_step="1 minute",
     ).toPandas()
     assert (out["n_zeroed"] > 0).all()
     assert (out["n_zeroed"] <= out["n_detail"]).all()

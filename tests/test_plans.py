@@ -84,8 +84,9 @@ def test_invariant_queries_single_lineage(spark, queries):
     DataFrame from two plan branches (agg + crossJoin back) recomputes the
     whole expensive lineage twice — full_decomposition re-ran all 21 LSQR
     solves (round-3 fix). Pin the Python-stage counts: one resample + one
-    decompose FlatMapGroupsInPandas per dictionary-shape branch, and one
-    pyramid stage for the energy queries."""
+    decompose FlatMapGroupsInPandas per dictionary-shape branch (the
+    energy queries' single pyramid stage is pinned by
+    test_wavelet_queries_leave_no_storage)."""
     # full: square branch (resample+decompose) + sine branch = 4 stages
     plan = _plan(queries["full_decomposition"](spark, SF_DIR), "simple")
     assert plan.count("FlatMapGroupsInPandas") == 4
@@ -96,9 +97,6 @@ def test_invariant_queries_single_lineage(spark, queries):
     # the error join — a cheap np.interp pass) + ONE decompose solve stage
     plan = _plan(queries["reconstruction_relational"](spark, SF_DIR), "simple")
     assert plan.count("FlatMapGroupsInPandas") == 3
-    # energy queries: one pyramid pass over the cached tier
-    plan = _plan(queries["modwt_energy"](spark, SF_DIR), "simple")
-    assert plan.count("FlatMapGroupsInPandas") == 1
     # roundtrip UDF form: resample twice (solve input + the signal side of
     # the error join, a cheap np.interp pass) + ONE decompose + ONE
     # reconstruct = 4; a double-referenced betas branch would show 5+
@@ -144,6 +142,48 @@ def test_solve_stage_not_coalesced(spark, queries):
     assert all(r["count"] == 23423 for r in sizes)
     plan = _plan(betas, "simple")
     assert plan.count("Exchange") == 2  # resample's + the solve repartition
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["dwt_energy", "modwt_energy", "wpt_energy", "dwt_denoise",
+     "tier_wavelet_parity", "entry"],
+)
+def test_wavelet_queries_leave_no_storage(spark, queries, name):
+    """The wavelet queries hand the sparse tier and its grid step straight
+    to the operators: no gap-filled grid is built and none is cached.
+    Building and running one leaves no persistent RDD behind, except
+    tier_wavelet_parity's own returned checkpoint, and this holds on every
+    repeat. The energy and denoise queries run exactly one Python stage,
+    read no cached relation and explode no grid ``sequence``."""
+    import __spark_entry__ as entrymod
+
+    sc = spark.sparkContext
+    allowed = 1 if name == "tier_wavelet_parity" else 0
+    start = set(sc._jsc.getPersistentRDDs().keys())
+    for _ in range(2):
+        before = len(sc._jsc.getPersistentRDDs())
+        df = (
+            entrymod.entry(spark) if name == "entry"
+            else queries[name](spark, SF_DIR)
+        )
+        df.collect()
+        assert len(sc._jsc.getPersistentRDDs()) - before <= allowed
+        if name in ("dwt_energy", "modwt_energy", "wpt_energy", "dwt_denoise"):
+            # the plan that ran: AQE's final plan, not its initial one
+            plan = df._jdf.queryExecution().executedPlan()
+            if plan.nodeName() == "AdaptiveSparkPlan":
+                plan = plan.executedPlan()
+            plan = plan.toString()
+            assert plan.count("FlatMapGroupsInPandas") == 1
+            assert "InMemoryRelation" not in plan
+            assert not [
+                ln for ln in plan.splitlines()
+                if "Generate" in ln and "sequence(" in ln
+            ]
+    for rdd_id, rdd in sc._jsc.getPersistentRDDs().items():
+        if rdd_id not in start:
+            rdd.unpersist(True)
 
 
 @pytest.mark.parametrize(

@@ -125,7 +125,9 @@ def test_dwt_window_bands_plan_names_the_kernel(spark):
         [("c", datetime(2024, 1, 1, 0, i), float(i)) for i in range(8)],
         "conv_id string, bucket_ts timestamp, turns double",
     )
-    bands = wavelet_ops.dwt_window_bands(df, "turns", levels=2, window_len=8)
+    bands = wavelet_ops.dwt_window_bands(
+        df, "turns", levels=2, window_len=8, sparse_fill_step="1 minute"
+    )
     plan = bands._jdf.queryExecution().executedPlan().toString()
     assert "_pyramid_bucket" in plan
 

@@ -11,10 +11,15 @@ def _filled(spark, n=6, seed=2):
     return gapfill.gapfill_zero(raw, ["turns", "chars", "tool_calls"])
 
 
+# the grid step of _filled's raw (1-second) tier
+STEP = "1 second"
+
+
 def test_dwt_windows_match_numpy_kernel(spark):
     filled = _filled(spark)
     coefs = wavelet_ops.dwt_windows(
-        filled, "turns", wavelet="haar", levels=3, window_len=64
+        filled, "turns", wavelet="haar", levels=3, window_len=64,
+        sparse_fill_step=STEP,
     )
     pdf = coefs.toPandas()
     src = filled.orderBy("conv_id", "bucket_ts").toPandas()
@@ -34,7 +39,8 @@ def test_dwt_windows_match_numpy_kernel(spark):
 def test_energy_spectrum_parseval(spark):
     filled = _filled(spark, n=4, seed=8)
     coefs = wavelet_ops.dwt_windows(
-        filled, "turns", wavelet="db4", levels=4, window_len=128
+        filled, "turns", wavelet="db4", levels=4, window_len=128,
+        sparse_fill_step=STEP,
     )
     spec = wavelet_ops.energy_spectrum(coefs)
     total = spec.groupBy("conv_id").agg(F.sum("energy").alias("e")).toPandas()
@@ -49,7 +55,7 @@ def test_modwt_windows_shapes(spark):
     filled = _filled(spark, n=3, seed=4)
     coefs = wavelet_ops.dwt_windows(
         filled, "chars", wavelet="haar", levels=3, window_len=64,
-        transform="modwt",
+        transform="modwt", sparse_fill_step=STEP,
     )
     pdf = coefs.toPandas()
     # MODWT is undecimated: every level has window_len coefficients
@@ -61,7 +67,7 @@ def test_energy_windows_matches_relational_spectrum(spark):
     """In-UDF spectrum (scale path) == energy_spectrum over the coefficient
     table (relational path), row for row."""
     filled = _filled(spark, n=5, seed=11)
-    kw = dict(wavelet="db4", levels=4, window_len=128)
+    kw = dict(wavelet="db4", levels=4, window_len=128, sparse_fill_step=STEP)
     want = (
         wavelet_ops.energy_spectrum(
             wavelet_ops.dwt_windows(filled, "turns", **kw)
@@ -84,8 +90,9 @@ def test_energy_windows_matches_relational_spectrum(spark):
 
 
 def test_sparse_fill_fusion_matches_explicit_gapfill(spark):
-    """dwt over the SPARSE tier with sparse_fill_step == dwt over the
-    explicitly gap-filled dense grid (the fusion the flagship relies on)."""
+    """The fused zero fill against its ``gapfill_zero`` oracle: through the
+    one windowing path, the SPARSE tier and the explicitly gap-filled grid
+    give identical rows."""
     from wavelet_decomposition_spark.io.transcripts import transcripts_df
     from wavelet_decomposition_spark.operators import rollup
 
@@ -94,14 +101,16 @@ def test_sparse_fill_fusion_matches_explicit_gapfill(spark):
     dense = gapfill.gapfill_zero(
         tier, ["turns", "chars", "tool_calls"], step="1 minute"
     )
-    kw = dict(wavelet="db4", levels=3, window_len=64)
+    kw = dict(
+        wavelet="db4", levels=3, window_len=64, sparse_fill_step="1 minute"
+    )
     order = ["conv_id", "window_id", "level", "coef_type", "k"]
     want = (
         wavelet_ops.dwt_windows(dense, "turns", **kw)
         .orderBy(*order).toPandas()
     )
     got = (
-        wavelet_ops.dwt_windows(tier, "turns", sparse_fill_step="1 minute", **kw)
+        wavelet_ops.dwt_windows(tier, "turns", **kw)
         .orderBy(*order).toPandas()
     )
     assert len(got) == len(want) and len(got) > 0
@@ -116,9 +125,7 @@ def test_sparse_fill_fusion_matches_explicit_gapfill(spark):
         .orderBy("conv_id", "window_id", "level", "coef_type").toPandas()
     )
     e_got = (
-        wavelet_ops.energy_windows(
-            tier, "turns", sparse_fill_step="1 minute", **kw
-        )
+        wavelet_ops.energy_windows(tier, "turns", **kw)
         .orderBy("conv_id", "window_id", "level", "coef_type").toPandas()
     )
     np.testing.assert_allclose(
@@ -177,7 +184,7 @@ def test_non_dyadic_window_len_rejected_at_construction(spark):
     import pytest
 
     filled = _filled(spark, n=2, seed=6)
-    kw = dict(levels=5, window_len=100)
+    kw = dict(levels=5, window_len=100, sparse_fill_step=STEP)
     for build in (
         lambda: wavelet_ops.dwt_windows(filled, "turns", **kw),
         lambda: wavelet_ops.energy_windows(filled, "turns", **kw),
@@ -203,7 +210,7 @@ def test_energy_windows_wpt_parseval_and_band_labels(spark):
     levels, window_len = 3, 64
     got = wavelet_ops.energy_windows(
         filled, "turns", wavelet="db4", levels=levels,
-        window_len=window_len, transform="wpt",
+        window_len=window_len, transform="wpt", sparse_fill_step=STEP,
     ).toPandas()
     labels = {f"band{i:02d}" for i in range(2**levels)}
     assert (got["level"] == levels).all()

@@ -2,8 +2,7 @@
 long-format table (series_id, year, idx, value) at the raw 48 samples/day.
 
 Driver-side build (the workbook is ~370k values); real deployments read the
-same schema from parquet/Iceberg — `write_parquet_fixture` materializes it
-so Spark tests exercise a genuine scan with pushdown/pruning.
+same schema from parquet/Iceberg.
 """
 
 from __future__ import annotations
@@ -65,12 +64,3 @@ def electricity_df(spark: SparkSession, signals=None, years=None) -> DataFrame:
         _DF_CACHE[key] = df
     return df
 
-
-def write_parquet_fixture(spark: SparkSession, path: str, **kw) -> None:
-    (
-        electricity_df(spark, **kw)
-        .repartition("series_id", "year")
-        .write.mode("overwrite")
-        .partitionBy("series_id", "year")
-        .parquet(path)
-    )

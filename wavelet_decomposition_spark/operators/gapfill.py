@@ -8,9 +8,11 @@ last-observation-carried-forward (gauges) with
 ``last(value, ignorenulls).over(rowsBetween(unboundedPreceding, 0))``
 — the as-of-style fill named in SURVEY.md §2.3.
 
-Scale note: the exploded grid is bounded by group time-span / step; the
-wavelet path caps it further by fixed dyadic window lengths. The join is on
-(conv_id, bucket_ts) — co-partitioned with the grid by construction.
+Scale note: the exploded grid is bounded by group time-span / step. The join
+is on (conv_id, bucket_ts) — co-partitioned with the grid by construction.
+The wavelet operators never build this grid: they fuse the zero fill into
+their window builder (``sparse_fill_step`` in operators/wavelet_ops.py), and
+:func:`gapfill_zero` is the oracle that fusion is tested against.
 """
 
 from __future__ import annotations
@@ -35,7 +37,9 @@ def time_grid(series: DataFrame, step: str = "1 second",
 
 def gapfill_zero(series: DataFrame, value_cols, step: str = "1 second",
                  group_col: str = "conv_id", ts_col: str = "bucket_ts") -> DataFrame:
-    """Counts: missing buckets become 0."""
+    """Counts: missing buckets become 0. The oracle of the wavelet
+    operators' fused zero fill: their windows over this output equal their
+    windows over the sparse input."""
     grid = time_grid(series, step, group_col, ts_col)
     filled = grid.join(series, [group_col, ts_col], "left")
     return filled.fillna(0, subset=list(value_cols))

@@ -1,15 +1,19 @@
-"""DWT / MODWT pyramids over gap-filled activity-series windows
+"""DWT / MODWT pyramids over windows of sparse activity series
 (north star: per-scale detail/approximation coefficients and energy spectra
 as vectorized Arrow pandas UDFs).
 
-Each conversation's gap-filled series is cut into fixed windows of
-``window_len`` points (dyadic: ``2**levels * k``). The Python stage is
-bucketed (:func:`bucketed_apply`): conversations hash into ``4 x`` the task
-count buckets, and one ``applyInPandas`` group is one such bucket of whole
-conversations. Inside it, :func:`_window_matrix` scatters every window of
-the bucket into one zero-padded (windows, window_len) matrix and the whole
-pyramid runs as whole-matrix numpy calls (kernel/dwt.py), so per-conversation
-Python overhead is amortized across the bucket.
+Each conversation's series is laid on a regular grid of step
+``sparse_fill_step`` and cut into fixed windows of ``window_len`` points
+(dyadic: ``2**levels * k``). A row lands at grid position
+``(ts - the conversation's first ts) / step``; grid points with no row stay
+zero, so the zero gap-fill is fused into the window builder and the grid is
+never materialized. The Python stage is bucketed (:func:`bucketed_apply`):
+conversations hash into ``4 x`` the task count buckets, and one
+``applyInPandas`` group is one such bucket of whole conversations. Inside
+it, :func:`_window_matrix` scatters every window of the bucket into one
+zero-padded (windows, window_len) matrix and the whole pyramid runs as
+whole-matrix numpy calls (kernel/dwt.py), so per-conversation Python
+overhead is amortized across the bucket.
 
 Output: the Python stage emits the compact band form (BAND_SCHEMA — one row
 per (conv_id, window_id, band) with coefficients packed as array<double>;
@@ -28,11 +32,12 @@ import logging
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..kernel import dwt as kdwt
 from ..plans.session import worker_kernel
+from ._time import us
 
 _log = logging.getLogger(__name__)
 
@@ -64,12 +69,11 @@ def python_stage_partitions(projected: DataFrame) -> int:
     :func:`~wavelet_decomposition_spark.plans.session.worker_kernel` now
     avoids. The task count never drops below ``defaultParallelism``:
     Catalyst's size estimate is unreliable below a generated/exploded
-    lineage (a gap-filled grid is far larger than its estimate), and a
-    Python-CPU-heavy kernel must keep every core busy even when its input
-    bytes are few (measured: the db4 VisuShrink kernel serialized onto a
-    handful of tasks regressed 1.9 s -> 5.3 s before this floor). Falls
-    back to ``2 * defaultParallelism`` when Catalyst has no usable
-    estimate. Each decision is logged with its inputs.
+    lineage, and a Python-CPU-heavy kernel must keep every core busy even
+    when its input bytes are few (measured: the db4 VisuShrink kernel
+    serialized onto a handful of tasks regressed 1.9 s -> 5.3 s before
+    this floor). Falls back to ``2 * defaultParallelism`` when Catalyst
+    has no usable estimate. Each decision is logged with its inputs.
     """
     dp = projected.sparkSession.sparkContext.defaultParallelism
     try:
@@ -131,17 +135,13 @@ def _window_args(levels, window_len, sparse_fill_step, dyadic=True):
     ``window_len`` defaults to ``2**levels * 8``. A decimating transform
     (``dyadic``) halves each window ``levels`` times, so any other length
     is rejected here on the driver instead of in every Python task after
-    the shuffle. ``step_us`` is ``sparse_fill_step`` in microseconds, or
-    None for dense input."""
+    the shuffle. ``step_us`` is the grid step ``sparse_fill_step`` in
+    microseconds."""
     if window_len is None:
         window_len = (2**levels) * 8
     if dyadic and window_len % (2**levels):
         raise ValueError("window_len must be divisible by 2**levels")
-    step_us = (
-        int(pd.Timedelta(sparse_fill_step).total_seconds() * 1e6)
-        if sparse_fill_step is not None
-        else None
-    )
+    step_us = int(pd.Timedelta(sparse_fill_step).total_seconds() * 1e6)
     return window_len, step_us
 
 
@@ -150,34 +150,29 @@ def _window_matrix(pdf, group_col, ts_col, value_col, step_us, window_len):
     matrix ``M``; returns ``(M, win_conv, win_id)`` with the conversation
     and per-conversation window id of each row of ``M``.
 
-    Dense mode (``step_us`` None): rows ARE the grid (input pre-gap-filled).
-    Sparse mode: position = (ts - conv's first ts) / step; absent grid points
+    A row's position is (ts - conv's first ts) / step; absent grid points
     simply never get scattered — they stay zero in the window matrix, which
     is precisely ``gapfill_zero``'s output for count series."""
     pdf = pdf.sort_values([group_col, ts_col])
     codes, uniques = pd.factorize(pdf[group_col], sort=False)
     counts = np.bincount(codes)
     starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    if step_us is None:
-        pos = np.arange(len(pdf)) - starts[codes]
-        nwin = np.maximum(1, -(-counts // window_len))
-    else:
-        ts = pdf[ts_col].to_numpy(dtype="datetime64[us]").view(np.int64)
-        delta = ts - ts[starts][codes]
-        if (delta % step_us).any():
-            raise ValueError(
-                "sparse_fill_step: input timestamps are not aligned to the "
-                "fill grid — off-grid rows would silently collide into the "
-                "wrong window cell"
-            )
-        pos = delta // step_us
-        if ((codes[1:] == codes[:-1]) & (pos[1:] <= pos[:-1])).any():
-            raise ValueError(
-                "sparse_fill_step: duplicate (group, ts) rows — aggregate "
-                "to the grid step before the pyramid stage"
-            )
-        last = pos[starts + counts - 1]
-        nwin = np.maximum(1, -(-(last + 1) // window_len))
+    ts = pdf[ts_col].to_numpy(dtype="datetime64[us]").view(np.int64)
+    delta = ts - ts[starts][codes]
+    if (delta % step_us).any():
+        raise ValueError(
+            "sparse_fill_step: input timestamps are not aligned to the "
+            "fill grid — off-grid rows would silently collide into the "
+            "wrong window cell"
+        )
+    pos = delta // step_us
+    if ((codes[1:] == codes[:-1]) & (pos[1:] <= pos[:-1])).any():
+        raise ValueError(
+            "sparse_fill_step: duplicate (group, ts) rows — aggregate "
+            "to the grid step before the pyramid stage"
+        )
+    last = pos[starts + counts - 1]
+    nwin = np.maximum(1, -(-(last + 1) // window_len))
     win_base = np.concatenate(([0], np.cumsum(nwin)[:-1]))
     M = np.zeros((int(nwin.sum()), window_len), dtype=np.float64)
     M[win_base[codes] + pos // window_len, pos % window_len] = (
@@ -224,7 +219,7 @@ def _band_frame(win_conv, win_id, wavelet, bands, col, values):
 
 
 def dwt_window_bands(
-    filled: DataFrame,
+    series: DataFrame,
     value_col: str,
     wavelet: str = "haar",
     levels: int = 5,
@@ -232,21 +227,22 @@ def dwt_window_bands(
     transform: str = "dwt",
     group_col: str = "conv_id",
     ts_col: str = "bucket_ts",
-    sparse_fill_step: str | None = None,
+    *,
+    sparse_fill_step: str,
 ) -> DataFrame:
-    """Pyramid-transform a gap-filled series per conversation.
+    """Pyramid-transform each conversation's series on its grid.
 
     ``window_len`` defaults to ``2**levels * 8``; tail windows are zero-padded
     to the dyadic length (zero turns = genuinely zero activity, so padding is
     semantically the zero-fill continued).
 
-    ``sparse_fill_step`` fuses the zero gap-fill into the window builder:
-    pass the grid step (e.g. ``"1 minute"``) and the input may be the SPARSE
-    tier — each row lands at position ``(ts - min(ts) per conv) / step`` and
-    the missing grid points stay zero, exactly what
-    ``gapfill_zero(...)`` + dense windows would produce (asserted by
-    tests/test_wavelet_ops_spark.py). At scale this removes the exploded
-    grid's join/shuffle — the gap-filled series is never materialized.
+    ``sparse_fill_step`` is the grid step (e.g. ``"1 minute"``) and fuses
+    the zero gap-fill into the window builder: the input is the sparse
+    tier, each row lands at position ``(ts - min(ts) per conv) / step`` and
+    the missing grid points stay zero — the same windows as over
+    ``gapfill_zero``'s output (asserted by tests/test_wavelet_ops_spark.py),
+    without the exploded grid's join and shuffle. Timestamps off the grid
+    and duplicate grid points are errors.
     """
     if transform not in ("dwt", "modwt"):
         raise ValueError(transform)
@@ -267,13 +263,13 @@ def dwt_window_bands(
         return _band_frame(win_conv, win_id, wavelet, bands, "coefs", coefs)
 
     return bucketed_apply(
-        filled.select(group_col, ts_col, value_col), group_col,
+        series.select(group_col, ts_col, value_col), group_col,
         _pyramid_bucket, BAND_SCHEMA,
     )
 
 
 def dwt_windows(
-    filled: DataFrame,
+    series: DataFrame,
     value_col: str,
     wavelet: str = "haar",
     levels: int = 5,
@@ -281,16 +277,17 @@ def dwt_windows(
     transform: str = "dwt",
     group_col: str = "conv_id",
     ts_col: str = "bucket_ts",
-    sparse_fill_step: str | None = None,
+    *,
+    sparse_fill_step: str,
 ) -> DataFrame:
     """Long-format coefficient table (COEF_SCHEMA, one row per coefficient).
 
-    Same rows as the pre-band-form implementation; the per-coefficient
-    fan-out is a JVM-side ``posexplode`` over :func:`dwt_window_bands`'
-    ``array<double>`` column — whole-stage-codegen'd, never through Python.
+    The per-coefficient fan-out is a JVM-side ``posexplode`` over
+    :func:`dwt_window_bands`' ``array<double>`` column —
+    whole-stage-codegen'd, never through Python.
     """
     bands = dwt_window_bands(
-        filled, value_col, wavelet=wavelet, levels=levels,
+        series, value_col, wavelet=wavelet, levels=levels,
         window_len=window_len, transform=transform, group_col=group_col,
         ts_col=ts_col, sparse_fill_step=sparse_fill_step,
     )
@@ -304,12 +301,14 @@ def dwt_windows(
 
 
 def haar_dwt_relational(
-    filled: DataFrame,
+    series: DataFrame,
     value_col: str,
     levels: int,
     window_len: int,
     group_col: str = "conv_id",
     ts_col: str = "bucket_ts",
+    *,
+    sparse_fill_step: str,
 ) -> DataFrame:
     """Closed-form Haar pyramid as PURE relational ops — the independent
     verification twin of ``dwt_windows(wavelet='haar')``.
@@ -327,18 +326,18 @@ def haar_dwt_relational(
     series the block sums are exact and the only float op is the final
     ``2^(-l/2)`` scaling.
 
+    A point's position is derived from its timestamp exactly as the
+    kernel's: ``(ts - the group's first ts) / sparse_fill_step``.
+
     Output matches COEF_SCHEMA minus the ``wavelet`` column. Blocks with
-    no surviving input rows (zero-padded tail positions the kernel
+    no input rows (grid gaps and zero-padded tail positions the kernel
     materializes as explicit 0.0 coefficients) emit NO row here — callers
     compare with a left join and ``coalesce(rel_coef, 0)``.
     """
-    if window_len % (2**levels):
-        raise ValueError("window_len must be divisible by 2**levels")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(group_col).orderBy(ts_col)
-    pos = F.row_number().over(w) - 1
-    base = filled.select(
+    window_len, step_us = _window_args(levels, window_len, sparse_fill_step)
+    w = Window.partitionBy(group_col)
+    pos = F.floor((us(ts_col) - F.min(us(ts_col)).over(w)) / step_us)
+    base = series.select(
         group_col,
         F.floor(pos / window_len).cast("int").alias("window_id"),
         (pos % window_len).alias("_p"),
@@ -410,7 +409,7 @@ ENERGY_SCHEMA = (
 
 
 def energy_windows(
-    filled: DataFrame,
+    series: DataFrame,
     value_col: str,
     wavelet: str = "haar",
     levels: int = 5,
@@ -418,7 +417,8 @@ def energy_windows(
     transform: str = "dwt",
     group_col: str = "conv_id",
     ts_col: str = "bucket_ts",
-    sparse_fill_step: str | None = None,
+    *,
+    sparse_fill_step: str,
 ) -> DataFrame:
     """Per-scale energy spectrum computed inside the pyramid pass — one
     ``einsum`` per level per bucket, output one row per
@@ -427,8 +427,8 @@ def energy_windows(
     Same numbers as ``energy_spectrum(dwt_windows(...))`` (float64-tolerance:
     the in-UDF sum is a single vectorized reduction) without the
     per-coefficient shuffle — at 10^12 turns that shuffle, not the math, is
-    the bottleneck. ``sparse_fill_step`` fuses the zero gap-fill exactly as
-    in :func:`dwt_windows`.
+    the bottleneck. ``sparse_fill_step`` is the grid step, exactly as in
+    :func:`dwt_window_bands`.
 
     ``transform="wpt"`` emits the FULL wavelet-packet tree's ``2**levels``
     leaf bands (uniform frequency resolution — the right basis when the
@@ -453,7 +453,7 @@ def energy_windows(
         return _band_frame(win_conv, win_id, wavelet, bands, "energy", energies)
 
     return bucketed_apply(
-        filled.select(group_col, ts_col, value_col), group_col,
+        series.select(group_col, ts_col, value_col), group_col,
         _energy_bucket, ENERGY_SCHEMA,
     )
 
@@ -467,7 +467,7 @@ DENOISE_SCHEMA = (
 
 
 def denoise_windows(
-    filled: DataFrame,
+    series: DataFrame,
     value_col: str,
     wavelet: str = "db4",
     levels: int = 4,
@@ -476,7 +476,8 @@ def denoise_windows(
     mode: str = "soft",
     group_col: str = "conv_id",
     ts_col: str = "bucket_ts",
-    sparse_fill_step: str | None = None,
+    *,
+    sparse_fill_step: str,
 ) -> DataFrame:
     """Wavelet shrinkage denoising per dyadic window (Donoho–Johnstone
     VisuShrink, public algorithm): DWT -> estimate the noise scale from the
@@ -499,6 +500,9 @@ def denoise_windows(
       an orthonormal basis, so reconstruction energy can only decrease;
     - ``n_zeroed`` of ``n_detail``: how much of the detail mass the
       threshold removed.
+
+    ``sparse_fill_step`` is the grid step, exactly as in
+    :func:`dwt_window_bands`.
     """
     if mode not in ("soft", "hard"):
         raise ValueError(mode)
@@ -559,6 +563,6 @@ def denoise_windows(
         )
 
     return bucketed_apply(
-        filled.select(group_col, ts_col, value_col), group_col,
+        series.select(group_col, ts_col, value_col), group_col,
         _denoise_bucket, DENOISE_SCHEMA,
     )

@@ -19,7 +19,6 @@ from wavelet_decomposition_spark.io.transcripts import transcripts_df
 from wavelet_decomposition_spark.operators import (
     activity,
     compress,
-    gapfill,
     rollup,
     wavelet_ops,
 )
@@ -37,6 +36,31 @@ from wavelet_decomposition_spark.operators.translation import (
 )
 from wavelet_decomposition_spark.operators.wavelet_ops import denoise_windows
 from wavelet_decomposition_spark.queries import aqe_off, query
+
+
+def _tier_1m(spark, n_convs):
+    """The 1m activity tier of ``n_convs`` seeded synthetic conversations."""
+    tx = transcripts_df(spark, n_convs, seed=42)
+    return rollup.rollup_once(activity.activity_raw(tx), "1m")
+
+
+def _with_parseval(spectrum, tier, *cols):
+    """``spectrum``'s energy rows plus ``cols`` and ``parseval_ok``: the
+    band energies of every window sum to the tier's total turns energy
+    (an orthonormal transform conserves energy, and grid gaps and zero
+    padding add none) to 1e-6 relative. The global-window sum keeps the
+    spectrum lineage single-pass (a two-branch agg+crossJoin re-ran the
+    pyramid UDF)."""
+    in_e = tier.agg(F.sum(F.col("turns") * F.col("turns")).alias("_in_e"))
+    w = Window.partitionBy()
+    return spectrum.crossJoin(F.broadcast(in_e)).select(
+        "conv_id", "window_id", "wavelet", "level", "coef_type", "energy",
+        (
+            F.abs(F.sum("energy").over(w) - F.col("_in_e"))
+            <= 1e-6 * F.greatest(F.col("_in_e"), F.lit(1.0))
+        ).alias("parseval_ok"),
+        *cols,
+    )
 
 
 @query(bench=True, designed_bnl=True)
@@ -138,13 +162,9 @@ def _q_dwt_denoise(spark, sf_dir):
     every row), ``energy_ok`` (shrinkage is pointwise |c'| <= |c| on an
     orthonormal basis, so denoised energy can only decrease), and
     ``zeroed_ok`` (0 <= n_zeroed <= n_detail)."""
-    tx = transcripts_df(spark, 100, seed=42)
-    tier = rollup.rollup_once(activity.activity_raw(tx), "1m")
-    filled = gapfill.gapfill_zero(
-        tier, activity.ACTIVITY_COUNT_COLS, step="1 minute"
-    )
     out = denoise_windows(
-        filled, "turns", wavelet="db4", levels=4, window_len=64
+        _tier_1m(spark, 100), "turns", wavelet="db4", levels=4,
+        window_len=64, sparse_fill_step="1 minute",
     )
     return out.select(
         "conv_id",
@@ -388,28 +408,14 @@ def _q_dwt_energy(spark, sf_dir):
     """Haar DWT per-scale energy spectra over dyadic windows of the
     transcript 1m tier, with a single-lineage Parseval invariant column
     (sum of band energies equals window energy) riding every row."""
-    tx = transcripts_df(spark, 100, seed=42)
-    tier = rollup.rollup_once(activity.activity_raw(tx), "1m")
-    filled = gapfill.gapfill_zero(
-        tier, activity.ACTIVITY_COUNT_COLS, step="1 minute"
-    ).cache()
-
-    coefs = wavelet_ops.dwt_windows(filled, "turns", "db4", levels=4, window_len=64)
-    spectrum = wavelet_ops.energy_spectrum(coefs)
-    # Parseval self-check: db4 is orthonormal, so total coefficient energy
-    # == input energy (zero-padding adds none) — rows-only gate can't pass
-    # on garbage coefficients. Global-window sum keeps the spectrum lineage
-    # single-pass (a two-branch agg+crossJoin re-ran the pyramid UDF);
-    # the input-energy side reads the cached `filled` tier.
-    in_e = filled.agg(F.sum(F.col("turns") * F.col("turns")).alias("_in_e"))
-    w = Window.partitionBy()
-    return spectrum.crossJoin(F.broadcast(in_e)).select(
-        "conv_id", "window_id", "wavelet", "level", "coef_type", "energy",
-        (
-            F.abs(F.sum("energy").over(w) - F.col("_in_e"))
-            <= 1e-6 * F.greatest(F.col("_in_e"), F.lit(1.0))
-        ).alias("parseval_ok"),
+    tier = _tier_1m(spark, 100)
+    coefs = wavelet_ops.dwt_windows(
+        tier, "turns", "db4", levels=4, window_len=64,
+        sparse_fill_step="1 minute",
     )
+    # Parseval self-check: the rows-only gate can't pass on garbage
+    # coefficients
+    return _with_parseval(wavelet_ops.energy_spectrum(coefs), tier)
 
 
 @query(bench=True, designed_bnl=True)
@@ -422,9 +428,9 @@ def _q_wpt_energy(spark, sf_dir):
     rhythm lives mid-band. Rows-only; invariants riding every row:
 
     ``parseval_ok``    the orthonormal tree preserves energy: the sum
-                       of ALL leaf-band energies equals the gap-filled
-                       input tier's total signal energy (zero padding
-                       adds none) to 1e-6 relative — garbage packets
+                       of ALL leaf-band energies equals the input tier's
+                       total signal energy (grid gaps and zero padding
+                       add none) to 1e-6 relative — garbage packets
                        cannot balance it;
     ``n_bands_ok``     every window emits exactly 16 band rows
                        (band00..band15, natural order).
@@ -432,24 +438,14 @@ def _q_wpt_energy(spark, sf_dir):
     tests/test_dwt.py pins the kernel identities (roundtrip, leaf
     Parseval, all-low path == DWT approximation, Haar closed form).
     """
-    tx = transcripts_df(spark, 100, seed=42)
-    tier = rollup.rollup_once(activity.activity_raw(tx), "1m")
-    filled = gapfill.gapfill_zero(
-        tier, activity.ACTIVITY_COUNT_COLS, step="1 minute"
-    ).cache()
+    tier = _tier_1m(spark, 100)
     spectrum = wavelet_ops.energy_windows(
-        filled, "turns", wavelet="db4", levels=4, window_len=64,
-        transform="wpt",
+        tier, "turns", wavelet="db4", levels=4, window_len=64,
+        transform="wpt", sparse_fill_step="1 minute",
     )
-    in_e = filled.agg(F.sum(F.col("turns") * F.col("turns")).alias("_in_e"))
-    w = Window.partitionBy()
     wwin = Window.partitionBy("conv_id", "window_id")
-    return spectrum.crossJoin(F.broadcast(in_e)).select(
-        "conv_id", "window_id", "wavelet", "level", "coef_type", "energy",
-        (
-            F.abs(F.sum("energy").over(w) - F.col("_in_e"))
-            <= 1e-6 * F.greatest(F.col("_in_e"), F.lit(1.0))
-        ).alias("parseval_ok"),
+    return _with_parseval(
+        spectrum, tier,
         (F.count(F.lit(1)).over(wwin) == 16).alias("n_bands_ok"),
     )
 
@@ -461,9 +457,9 @@ def _q_tier_wavelet_parity(spark, sf_dir):
     retention tier" clause, driver-exposed in one query.
 
     The rollup cascade raw -> 1m -> 1h -> 1d (operators/rollup.py) is
-    built, each tier is zero-gap-filled at its own grid step, and the
-    Haar pyramid runs over each tier's dyadic windows TWICE through
-    disjoint computation paths: the production Arrow numpy kernel
+    built, and the Haar pyramid runs over each tier's dyadic windows, on
+    the tier's own grid step, TWICE through disjoint computation paths:
+    the production Arrow numpy kernel
     (wavelet_ops.dwt_windows, kernel/dwt.py) and a pure-JVM closed-form
     relational pyramid (wavelet_ops.haar_dwt_relational — one explode +
     one hash aggregate, no Python stage). Every coefficient of every
@@ -484,18 +480,27 @@ def _q_tier_wavelet_parity(spark, sf_dir):
     # (measured 3.9-4.3 s -> 3.0 s back-to-back). The plan executes
     # eagerly inside the window via localCheckpoint and the confs are
     # restored before return; nothing leaves the timed region — query
-    # construction IS timed by the bench harness.
+    # construction IS timed by the bench harness. The tier caches only
+    # serve the checkpoint, so they are released right after it (coarsest
+    # first: no cached plan is left referring to a released one).
     with aqe_off(spark, 16):
-        out = _tier_wavelet_parity_plan(spark).localCheckpoint()
+        plan, tiers = _tier_wavelet_parity_plan(spark)
+        try:
+            out = plan.localCheckpoint()
+        finally:
+            for t in reversed(tiers.values()):
+                t.unpersist()
     return out.orderBy("tier", "level", "coef_type")
 
 
 def _tier_wavelet_parity_plan(spark):
+    """``(plan, tiers)``: the unordered parity plan and the cached tiers
+    (raw included) it reads."""
     tx = transcripts_df(spark, 100, seed=42)
-    raw = activity.activity_raw(tx).cache()
-    tiers = rollup.build_tiers(raw)
+    tiers = rollup.build_tiers(activity.activity_raw(tx).cache())
     for t in ("1m", "1h", "1d"):
         tiers[t] = tiers[t].cache()
+    raw = tiers["raw"]
     cfg = {"1m": ("1 minute", 64, 4), "1h": ("1 hour", 32, 4),
            "1d": ("1 day", 8, 3)}
     keys = ["conv_id", "window_id", "level", "k", "coef_type"]
@@ -504,12 +509,13 @@ def _tier_wavelet_parity_plan(spark):
 
     w_all = Window.partitionBy()
     for tier, (step, wlen, levels) in cfg.items():
-        filled = gapfill.gapfill_zero(tiers[tier], cols, step=step).cache()
         kern = wavelet_ops.dwt_windows(
-            filled, "turns", "haar", levels=levels, window_len=wlen
+            tiers[tier], "turns", "haar", levels=levels, window_len=wlen,
+            sparse_fill_step=step,
         )
         rel = wavelet_ops.haar_dwt_relational(
-            filled, "turns", levels=levels, window_len=wlen
+            tiers[tier], "turns", levels=levels, window_len=wlen,
+            sparse_fill_step=step,
         ).withColumnRenamed("coef", "rel_coef")
         # ONE full-outer join replaces the old left-join + left-anti pair,
         # which referenced both pyramid paths twice and recomputed every
@@ -572,7 +578,7 @@ def _tier_wavelet_parity_plan(spark):
         )
     )
     # ordering applied by the caller after the checkpoint
-    return out.crossJoin(F.broadcast(casc))
+    return out.crossJoin(F.broadcast(casc)), tiers
 
 
 @query(designed_bnl=True)
@@ -580,26 +586,12 @@ def _q_modwt_energy(spark, sf_dir):
     """MODWT (shift-equivariant, undecimated) energy spectrum with the same
     Parseval self-check as dwt_energy — MODWT's scaled filters conserve
     energy too (Percival & Walden ch. 5)."""
-    tx = transcripts_df(spark, 100, seed=42)
-    tier = rollup.rollup_once(activity.activity_raw(tx), "1m")
-    filled = gapfill.gapfill_zero(
-        tier, activity.ACTIVITY_COUNT_COLS, step="1 minute"
-    ).cache()
-
+    tier = _tier_1m(spark, 100)
     spectrum = wavelet_ops.energy_windows(
-        filled, "turns", wavelet="db4", levels=4, window_len=64,
-        transform="modwt",
+        tier, "turns", wavelet="db4", levels=4, window_len=64,
+        transform="modwt", sparse_fill_step="1 minute",
     )
-    # same single-lineage window form as dwt_energy (see comment there)
-    in_e = filled.agg(F.sum(F.col("turns") * F.col("turns")).alias("_in_e"))
-    w = Window.partitionBy()
-    return spectrum.crossJoin(F.broadcast(in_e)).select(
-        "conv_id", "window_id", "wavelet", "level", "coef_type", "energy",
-        (
-            F.abs(F.sum("energy").over(w) - F.col("_in_e"))
-            <= 1e-6 * F.greatest(F.col("_in_e"), F.lit(1.0))
-        ).alias("parseval_ok"),
-    )
+    return _with_parseval(spectrum, tier)
 
 
 @query(bench=True)
@@ -612,8 +604,7 @@ def _q_gorilla_blocks(spark, sf_dir):
     below 8 bytes/point, so a codec emitting bloated or truncated blobs
     fails; exact value round-trip is the separate ``codec_roundtrip``
     gate."""
-    tx = transcripts_df(spark, 150, seed=42)
-    tier = rollup.rollup_once(activity.activity_raw(tx), "1m")
+    tier = _tier_1m(spark, 150)
     blocks = compress.encode_blocks(tier, activity.ACTIVITY_COUNT_COLS)
     report = compress.compression_report(blocks, activity.ACTIVITY_COUNT_COLS)
     w = Window.partitionBy()
@@ -640,8 +631,7 @@ def _q_codec_roundtrip(spark, sf_dir):
     cannot pass on garbage: n_unmatched must be 0 and max_abs_err must be
     exactly 0.0 (the codecs are bit-exact)."""
     cols = activity.ACTIVITY_COUNT_COLS
-    tx = transcripts_df(spark, 150, seed=42)
-    tier = rollup.rollup_once(activity.activity_raw(tx), "1m")
+    tier = _tier_1m(spark, 150)
     blocks = compress.encode_blocks(tier, cols)
     back = compress.decode_blocks(blocks, cols)
     a = tier.select(
