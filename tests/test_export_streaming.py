@@ -1,9 +1,8 @@
-import time
-
 from pyspark.sql import functions as F
 
 from wavelet_decomposition_spark.io.transcripts import transcripts_df
 from wavelet_decomposition_spark.operators import activity, rollup
+from wavelet_decomposition_spark.streaming import await_drain
 from wavelet_decomposition_spark.streaming.facade import stream_rollup_1m
 
 
@@ -22,11 +21,7 @@ def test_streaming_1m_tier_matches_batch(spark, tmp_path):
     sentinel.write.mode("append").parquet(in_path)
 
     q = stream_rollup_1m(spark, in_path, out_path, ckpt, watermark="10 minutes")
-    q.awaitTermination(120)
-    for _ in range(30):
-        if not q.isActive:
-            break
-        time.sleep(1)
+    await_drain(q, 120)
 
     got = spark.read.parquet(out_path).filter(F.col("conv_id") != "sentinel")
     batch = rollup.rollup_once(
@@ -62,7 +57,7 @@ def test_watermark_drops_late_data_across_restarts(spark, tmp_path):
     # advances the watermark to 12:20 (10-minute delay)
     tx_rows([t(0, 10), t(0, 20), t(30)]).write.mode("append").parquet(in_path)
     q = stream_rollup_1m(spark, in_path, out_path, ckpt, watermark="10 minutes")
-    q.awaitTermination(120)
+    await_drain(q, 120)
 
     # run 2 (same checkpoint): one LATE turn at 12:05 — beyond the 12:20
     # horizon restored from the checkpoint, must be dropped — one fresh
@@ -71,7 +66,7 @@ def test_watermark_drops_late_data_across_restarts(spark, tmp_path):
         "append"
     ).parquet(in_path)
     q = stream_rollup_1m(spark, in_path, out_path, ckpt, watermark="10 minutes")
-    q.awaitTermination(120)
+    await_drain(q, 120)
 
     got = {
         r["bucket_ts"]: r["turns"]

@@ -90,12 +90,12 @@ def test_shared_groups_counts_and_members(spark):
 def test_forked_transcripts_plant_exact_prefixes(spark):
     from wavelet_decomposition_spark.io.transcripts import (
         fork_metadata,
-        forked_transcripts,
+        transcripts_df,
         transcripts_pandas,
     )
 
     n, nf = 40, 12
-    tx = forked_transcripts(spark, n, nf, seed=7).toPandas()
+    tx = transcripts_df(spark, n, seed=7, n_forks=nf).toPandas()
     base = transcripts_pandas(n + nf, seed=7)
     meta = fork_metadata(n, nf, seed=7)
     by_conv = {
@@ -124,7 +124,7 @@ def test_forked_transcripts_plant_exact_prefixes(spark):
 def test_fork_families_recovered_exactly(spark):
     from wavelet_decomposition_spark.io.transcripts import (
         fork_metadata,
-        forked_transcripts,
+        transcripts_df,
     )
     from wavelet_decomposition_spark.operators.prefixes import (
         prefix_fingerprints,
@@ -133,7 +133,7 @@ def test_fork_families_recovered_exactly(spark):
 
     n, nf = 40, 12
     depths = (1, 2, 3, 4, 6)
-    tx = forked_transcripts(spark, n, nf, seed=7)
+    tx = transcripts_df(spark, n, seed=7, n_forks=nf)
     fp = prefix_fingerprints(tx, "conv_id", "turn_idx", "text", depths)
     got = {
         (r.depth, frozenset(r.members))

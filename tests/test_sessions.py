@@ -5,14 +5,13 @@ accumulator), so their agreement on every closed session is a strong
 correctness check for both.
 """
 
-import time
-
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from wavelet_decomposition_spark.operators.sessions import sessionize
+from wavelet_decomposition_spark.streaming import await_drain
 
 
 def _events_df(spark, n_users=7, n_events=400, seed=11):
@@ -86,14 +85,6 @@ def test_sessionize_batch_matches_numpy_oracle(spark):
     )
 
 
-def _drain(q):
-    q.awaitTermination(120)
-    for _ in range(30):
-        if not q.isActive:
-            return
-        time.sleep(1)
-
-
 def test_stream_sessionize_drops_cross_batch_late_events(spark, tmp_path):
     """An event arriving in a LATER micro-batch strictly before the open
     session's newest event is dropped (round-2 advisory): emitted sessions
@@ -128,7 +119,7 @@ def test_stream_sessionize_drops_cross_batch_late_events(spark, tmp_path):
         return (t + pd.Timedelta(seconds=sec)).to_pydatetime()
 
     _append([(1, _ts(0), 1, 1.0), (2, _ts(60), 1, 2.0)], "a")
-    _drain(stream_sessionize(spark, in_path, out_path, ckpt, schema))
+    await_drain(stream_sessionize(spark, in_path, out_path, ckpt, schema), 120)
 
     _append(
         [
@@ -142,7 +133,7 @@ def test_stream_sessionize_drops_cross_batch_late_events(spark, tmp_path):
         ],
         "b",
     )
-    _drain(stream_sessionize(spark, in_path, out_path, ckpt, schema))
+    await_drain(stream_sessionize(spark, in_path, out_path, ckpt, schema), 120)
 
     got = (
         spark.read.parquet(out_path)
@@ -189,7 +180,9 @@ def test_stream_sessionize_matches_batch_across_restarts(spark, tmp_path):
     # split mid-stream by time so many sessions straddle the two files
     cut = df.approxQuantile("event_id", [0.5], 0.0)[0]
     _append(df.filter(F.col("event_id") <= cut), "a")
-    _drain(stream_sessionize(spark, in_path, out_path, ckpt, df.schema))
+    await_drain(
+        stream_sessionize(spark, in_path, out_path, ckpt, df.schema), 120
+    )
 
     _append(df.filter(F.col("event_id") > cut), "b")
     # sentinel events far beyond every gap close each user's tail session
@@ -204,7 +197,9 @@ def test_stream_sessionize_matches_batch_across_restarts(spark, tmp_path):
         )
     )
     _append(sentinel, "z")
-    _drain(stream_sessionize(spark, in_path, out_path, ckpt, df.schema))
+    await_drain(
+        stream_sessionize(spark, in_path, out_path, ckpt, df.schema), 120
+    )
 
     got = (
         spark.read.parquet(out_path)

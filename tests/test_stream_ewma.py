@@ -7,6 +7,7 @@ import numpy as np
 import pandas as pd
 
 from wavelet_decomposition_spark.operators.tsfeatures import ewma
+from wavelet_decomposition_spark.streaming import await_drain
 from wavelet_decomposition_spark.streaming.stateful import stream_ewma
 
 SCHEMA = "series_id string, bucket_ts timestamp, v double"
@@ -38,12 +39,12 @@ def test_incremental_drains_equal_batch(spark, tmp_path_factory):
     part2 = _mk(spark, rng, "2024-05-02 16:00", 25)  # continues the grid
 
     part1.write.mode("append").parquet(in_p)
-    stream_ewma(spark, in_p, out_p, ck, SCHEMA, alpha=0.25).awaitTermination(120)
+    await_drain(stream_ewma(spark, in_p, out_p, ck, SCHEMA, alpha=0.25), 120)
     n1 = spark.read.parquet(out_p).count()
     assert n1 == 80
 
     part2.write.mode("append").parquet(in_p)
-    stream_ewma(spark, in_p, out_p, ck, SCHEMA, alpha=0.25).awaitTermination(120)
+    await_drain(stream_ewma(spark, in_p, out_p, ck, SCHEMA, alpha=0.25), 120)
 
     streamed = (
         spark.read.parquet(out_p)
@@ -72,8 +73,8 @@ def test_replayed_bucket_is_dropped(spark, tmp_path_factory):
     rng = np.random.default_rng(4)
     part1 = _mk(spark, rng, "2024-05-01", 10)
     part1.write.mode("append").parquet(in_p)
-    stream_ewma(spark, in_p, out_p, ck, SCHEMA, alpha=0.5).awaitTermination(120)
+    await_drain(stream_ewma(spark, in_p, out_p, ck, SCHEMA, alpha=0.5), 120)
     # replay the SAME buckets (duplicate delivery) -> no new output rows
     part1.write.mode("append").parquet(in_p)
-    stream_ewma(spark, in_p, out_p, ck, SCHEMA, alpha=0.5).awaitTermination(120)
+    await_drain(stream_ewma(spark, in_p, out_p, ck, SCHEMA, alpha=0.5), 120)
     assert spark.read.parquet(out_p).count() == 20

@@ -10,6 +10,7 @@ import numpy as np
 import pandas as pd
 
 from wavelet_decomposition_spark.operators.temporal import ohlc_bars
+from wavelet_decomposition_spark.streaming import await_drain
 from wavelet_decomposition_spark.streaming.facade import stream_ohlc_1h
 
 SCHEMA = "series_id string, ts timestamp, v long"
@@ -43,12 +44,12 @@ def test_stream_ohlc_restart_equals_batch(spark, tmp_path_factory):
         )
 
     parts[0].write.mode("append").parquet(in_p)
-    stream_ohlc_1h(spark, in_p, out_p, ck, SCHEMA).awaitTermination(120)
+    await_drain(stream_ohlc_1h(spark, in_p, out_p, ck, SCHEMA), 120)
     n1 = spark.read.parquet(out_p).count()
     assert n1 > 0  # watermark passed several part-1 windows
 
     parts[1].write.mode("append").parquet(in_p)
-    stream_ohlc_1h(spark, in_p, out_p, ck, SCHEMA).awaitTermination(120)
+    await_drain(stream_ohlc_1h(spark, in_p, out_p, ck, SCHEMA), 120)
 
     emitted = spark.read.parquet(out_p).toPandas()
     # nothing emitted twice across the restart

@@ -10,6 +10,7 @@ import numpy as np
 import pandas as pd
 
 from wavelet_decomposition_spark.operators.temporal import counter_rate
+from wavelet_decomposition_spark.streaming import await_drain
 from wavelet_decomposition_spark.streaming.stateful import (
     stream_counter_rate,
 )
@@ -48,11 +49,11 @@ def test_incremental_drains_equal_batch(spark, tmp_path_factory):
     )
 
     part1.write.mode("append").parquet(in_p)
-    stream_counter_rate(spark, in_p, out_p, ck, SCHEMA).awaitTermination(120)
+    await_drain(stream_counter_rate(spark, in_p, out_p, ck, SCHEMA), 120)
     assert spark.read.parquet(out_p).count() == 2 * 59  # first sample seeds
 
     part2.write.mode("append").parquet(in_p)
-    stream_counter_rate(spark, in_p, out_p, ck, SCHEMA).awaitTermination(120)
+    await_drain(stream_counter_rate(spark, in_p, out_p, ck, SCHEMA), 120)
 
     emitted = spark.read.parquet(out_p)
     assert emitted.count() == 2 * 99  # every non-first sample exactly once
@@ -104,12 +105,12 @@ def test_replayed_equal_timestamp_not_double_applied(spark, tmp_path_factory):
         }
     )
     spark.createDataFrame(pdf, SCHEMA).write.mode("append").parquet(in_p)
-    stream_counter_rate(spark, in_p, out_p, ck, SCHEMA).awaitTermination(120)
+    await_drain(stream_counter_rate(spark, in_p, out_p, ck, SCHEMA), 120)
     # replay the SAME newest sample in a later file: strict guard drops it
     spark.createDataFrame(pdf.iloc[[1]], SCHEMA).write.mode(
         "append"
     ).parquet(in_p)
-    stream_counter_rate(spark, in_p, out_p, ck, SCHEMA).awaitTermination(120)
+    await_drain(stream_counter_rate(spark, in_p, out_p, ck, SCHEMA), 120)
     out = spark.read.parquet(out_p).toPandas()
     assert len(out) == 1 and out.inc.iloc[0] == 15.0
 
@@ -131,9 +132,9 @@ def test_stream_dedup_cross_restart(spark, tmp_path_factory):
         }
     )
     spark.createDataFrame(pdf, schema).write.mode("append").parquet(in_p)
-    stream_dedup(
-        spark, in_p, out_p, ck, schema, keys=["event_id"]
-    ).awaitTermination(120)
+    await_drain(
+        stream_dedup(spark, in_p, out_p, ck, schema, keys=["event_id"]), 120
+    )
     # restart with dups of 1 and 3 plus a new key 4
     pdf2 = pd.DataFrame(
         {
@@ -143,8 +144,8 @@ def test_stream_dedup_cross_restart(spark, tmp_path_factory):
         }
     )
     spark.createDataFrame(pdf2, schema).write.mode("append").parquet(in_p)
-    stream_dedup(
-        spark, in_p, out_p, ck, schema, keys=["event_id"]
-    ).awaitTermination(120)
+    await_drain(
+        stream_dedup(spark, in_p, out_p, ck, schema, keys=["event_id"]), 120
+    )
     out = spark.read.parquet(out_p).toPandas()
     assert sorted(out.event_id) == [1, 2, 3, 4]

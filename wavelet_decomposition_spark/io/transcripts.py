@@ -145,39 +145,6 @@ def _gen_batch(conv: np.ndarray, seed: int, mean_turns: int, max_turns: int,
     )
 
 
-def transcripts_df(
-    spark: SparkSession,
-    n_convs: int,
-    seed: int = 42,
-    mean_turns: int = 40,
-    max_turns: int = 20_000,
-    span_seconds: int = 7 * 86400,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Distributed deterministic transcript generator."""
-    if partitions is None:
-        partitions = max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # yield in bounded conv chunks: one partition can carry tens of
-        # thousands of conv ids, and a single ~50x-larger output frame per
-        # partition held 32 workers x O(GB) at once (observed global OOM at
-        # 3M convs / 64 partitions)
-        chunk = 4096
-        for pdf in batches:
-            conv = pdf["id"].to_numpy(dtype=np.int64)
-            for lo in range(0, conv.size, chunk):
-                yield _gen_batch(
-                    conv[lo:lo + chunk], seed, mean_turns, max_turns,
-                    span_seconds,
-                )
-
-    return (
-        spark.range(0, n_convs, numPartitions=partitions)
-        .mapInPandas(worker_kernel(gen), schema=TRANSCRIPT_SCHEMA)
-    )
-
-
 def fork_metadata(
     n_convs: int,
     n_forks: int,
@@ -185,7 +152,7 @@ def fork_metadata(
     mean_turns: int = 40,
     max_turns: int = 20_000,
 ) -> pd.DataFrame:
-    """Closed-form fork plan for :func:`forked_transcripts` — one row per
+    """Closed-form fork plan for :func:`transcripts_df` — one row per
     fork: ``(fork_id, parent_id, fork_depth)``. Pure integer-hash
     arithmetic (no data access), so the invariant side of the driver
     query can recompute EXACTLY what the distributed generator planted."""
@@ -221,7 +188,9 @@ def _apply_forks(pdf: pd.DataFrame, n_convs: int,
     ``depth_of`` are the :func:`fork_metadata` arrays, computed ONCE per
     task by the caller (r6 advisory fix: the full hash-arithmetic plan
     was previously rebuilt for every 4096-conversation chunk, forks
-    present or not)."""
+    present or not). An empty plan returns ``pdf`` untouched."""
+    if not depth_of.size:
+        return pdf
     ids = pdf["conv_id"].str[5:].astype(np.int64).to_numpy()
     m = ids >= n_convs
     if not m.any():
@@ -238,31 +207,34 @@ def _apply_forks(pdf: pd.DataFrame, n_convs: int,
     return pdf
 
 
-def forked_transcripts(
+def transcripts_df(
     spark: SparkSession,
     n_convs: int,
-    n_forks: int,
     seed: int = 42,
     mean_turns: int = 40,
     max_turns: int = 20_000,
     span_seconds: int = 7 * 86400,
     partitions: int | None = None,
+    n_forks: int = 0,
 ) -> DataFrame:
-    """Transcript table with PLANTED FORKS: ``n_convs`` base conversations
-    plus ``n_forks`` extra conversations whose first ``fork_depth`` turns
-    are byte-identical to a hash-chosen parent's before diverging — the
-    retried-run / branched-conversation / shared-system-preamble shape
-    that prefix dedup (operators/prefixes.py) exists to find.
-    ``fork_depth`` = min(2 + hash%5, own length, parent length), so a
-    fork NEVER copies past its parent (two forks of one parent sharing
-    depth d therefore implies the parent itself reaches depth d).
-    Deterministic and per-conversation independent (forks recompute the
-    parent's content-addressable texts; no join) — the scale properties
-    of ``transcripts_df`` carry over unchanged."""
+    """Distributed deterministic transcript generator: ``n_convs`` base
+    conversations plus ``n_forks`` PLANTED FORKS, extra conversations whose
+    first ``fork_depth`` turns are byte-identical to a hash-chosen parent's
+    before diverging — the retried-run / branched-conversation /
+    shared-system-preamble shape that prefix dedup (operators/prefixes.py)
+    exists to find. ``fork_depth`` = min(2 + hash%5, own length, parent
+    length), so a fork NEVER copies past its parent (two forks of one
+    parent sharing depth d therefore implies the parent itself reaches
+    depth d). Forks recompute the parent's content-addressable texts (no
+    join), so generation stays per-conversation independent."""
     if partitions is None:
         partitions = max(8, spark.sparkContext.defaultParallelism)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # yield in bounded conv chunks: one partition can carry tens of
+        # thousands of conv ids, and a single ~50x-larger output frame per
+        # partition held 32 workers x O(GB) at once (observed global OOM at
+        # 3M convs / 64 partitions)
         chunk = 4096
         # fork plan computed once per task, reused by every chunk
         meta = fork_metadata(n_convs, n_forks, seed, mean_turns, max_turns)

@@ -22,20 +22,23 @@ from pyspark.sql import functions as F
 ACTIVITY_COUNT_COLS = ["turns", "chars", "tool_calls"]
 
 
+def activity_aggs() -> list:
+    """The ``ACTIVITY_COUNT_COLS`` aggregates over transcript rows, shared by
+    the batch raw tier and the streaming 1m tier."""
+    return [
+        F.count(F.lit(1)).alias("turns"),
+        F.sum(F.length("text")).alias("chars"),
+        F.count("tool").alias("tool_calls"),  # count() skips nulls
+    ]
+
+
 def activity_raw(transcripts: DataFrame) -> DataFrame:
     """1-second activity buckets. date_trunc keeps the key a plain timestamp
     (no window struct) so every rollup tier and the DuckDB oracle share the
     same key expression."""
-    return (
-        transcripts.groupBy(
-            "conv_id", F.date_trunc("second", F.col("ts")).alias("bucket_ts")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("turns"),
-            F.sum(F.length("text")).alias("chars"),
-            F.count("tool").alias("tool_calls"),  # count() skips nulls
-        )
-    )
+    return transcripts.groupBy(
+        "conv_id", F.date_trunc("second", F.col("ts")).alias("bucket_ts")
+    ).agg(*activity_aggs())
 
 
 def conversation_stats(transcripts: DataFrame, n_salts: int = 16) -> DataFrame:

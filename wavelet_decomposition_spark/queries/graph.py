@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from wavelet_decomposition_spark.io.transcripts import (
     fork_metadata,
-    forked_transcripts,
+    transcripts_df,
 )
 from wavelet_decomposition_spark.operators._time import us as _tus
 from wavelet_decomposition_spark.operators.components import triangle_stats
@@ -310,7 +310,7 @@ def _q_event_prefix_groups(spark, sf_dir):
 
 @query(bench=True)
 def _q_conversation_forks(spark, sf_dir):
-    """Planted-fork recovery over transcripts: ``forked_transcripts``
+    """Planted-fork recovery over transcripts: ``transcripts_df``
     plants 30 forks among 120 conversations — each fork's first
     ``fork_depth`` = min(2 + hash%5, own len, parent len) turns are
     byte-identical to its parent's (the retried-run / branched-agent /
@@ -333,7 +333,7 @@ def _q_conversation_forks(spark, sf_dir):
     membership lists are fork families, not the corpus)."""
     n, nf = 120, 30
     depths = (1, 2, 3, 4, 6)
-    tx = forked_transcripts(spark, n, nf, seed=42)
+    tx = transcripts_df(spark, n, seed=42, n_forks=nf)
     fp = prefix_fingerprints(tx, "conv_id", "turn_idx", "text", depths)
     groups = shared_prefix_groups(fp, "conv_id", with_members=True).cache()
     got = {

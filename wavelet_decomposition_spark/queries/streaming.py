@@ -18,6 +18,7 @@ from wavelet_decomposition_spark.operators.temporal import (
     ohlc_bars,
 )
 from wavelet_decomposition_spark.operators.tsfeatures import ewma
+from wavelet_decomposition_spark.streaming import await_drain
 from wavelet_decomposition_spark.streaming.facade import (
     stream_dedup,
     stream_distinct_1m,
@@ -32,6 +33,38 @@ from wavelet_decomposition_spark.streaming.stateful import (
 from wavelet_decomposition_spark.queries import _events, _hourly_series, query
 
 
+def _drain_paths(name):
+    """Fresh ``(in, out, ckpt)`` scratch paths for the drain ``name``."""
+    base = f"{tempfile.gettempdir()}/wds_{name}"
+    shutil.rmtree(base, ignore_errors=True)
+    return f"{base}/in", f"{base}/out", f"{base}/ckpt"
+
+
+def _drain_in_halves(frame, ts_col, in_path, start):
+    """Append ``frame``'s rows up to the median ``ts_col`` to ``in_path``
+    and drain ``start()``, then append the rest and drain again: two
+    availableNow runs over one checkpoint, so the second really exercises
+    cross-restart state continuation."""
+    mid = frame.agg(
+        F.expr(f"percentile(unix_micros({ts_col}), 0.5)")
+    ).collect()[0][0]
+    t = F.unix_micros(F.col(ts_col))
+    for half in (t <= mid, t > mid):
+        frame.filter(half).write.mode("append").parquet(in_path)
+        await_drain(start(), 300)
+
+
+def _mismatch_summary(j, n_col, bad):
+    """The one summary row over the comparison join ``j``: its row count
+    as ``n_col``, ``n_mismatch`` = rows where ``bad`` holds, and
+    ``invariant_ok`` = no mismatch over a non-empty join."""
+    ok = (F.col("n_mismatch") == 0) & (F.col(n_col) > 0)
+    return j.agg(
+        F.count(F.lit(1)).alias(n_col),
+        F.sum(bad.cast("long")).alias("n_mismatch"),
+    ).select(n_col, "n_mismatch", ok.alias("invariant_ok"))
+
+
 @query(side_effect=True)
 def _q_stream_sessionize_drain(spark, sf_dir):
     """Streaming surface, driver-exposed: drain the event table through the
@@ -42,16 +75,14 @@ def _q_stream_sessionize_drain(spark, sf_dir):
     tail). Restart-safety of the same operator is pinned in
     tests/test_sessions.py."""
     ev = _events(spark, sf_dir).select("event_id", "ts", "user_id", "value")
-    base = f"{tempfile.gettempdir()}/wds_stream_drain"
-    shutil.rmtree(base, ignore_errors=True)
-    in_path, out_path, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
+    in_path, out_path, ckpt = _drain_paths("stream_sessionize_drain")
     ev.write.mode("overwrite").parquet(in_path)
     q = stream_sessionize(
         spark, in_path, out_path, ckpt,
         "event_id long, ts timestamp, user_id long, value double",
         gap="30 minutes",
     )
-    q.awaitTermination(300)
+    await_drain(q, 300)
 
     streamed = spark.read.parquet(out_path).select(
         "user_id", "session_start", "session_end", "n_events",
@@ -74,19 +105,9 @@ def _q_stream_sessionize_drain(spark, sf_dir):
          "total_value"],
         "full_outer",
     )
-    summary = j.agg(
-        F.count(F.lit(1)).alias("n_sessions"),
-        F.sum(
-            (F.col("s.user_id").isNull() | F.col("b.user_id").isNull())
-            .cast("long")
-        ).alias("n_mismatch"),
-    )
-    return summary.select(
-        "n_sessions",
-        "n_mismatch",
-        ((F.col("n_mismatch") == 0) & (F.col("n_sessions") > 0)).alias(
-            "invariant_ok"
-        ),
+    return _mismatch_summary(
+        j, "n_sessions",
+        F.col("s.user_id").isNull() | F.col("b.user_id").isNull(),
     )
 
 
@@ -102,21 +123,11 @@ def _q_stream_ewma_drain(spark, sf_dir):
     hr = _hourly_series(spark, sf_dir).select(
         "series_id", "bucket_ts", F.col("v").cast("double").alias("v")
     )
-    mid = hr.agg(
-        F.expr("percentile(unix_micros(bucket_ts), 0.5)")
-    ).collect()[0][0]
-    base = f"{tempfile.gettempdir()}/wds_stream_ewma_drain"
-    shutil.rmtree(base, ignore_errors=True)
-    in_p, out_p, ck = f"{base}/in", f"{base}/out", f"{base}/ck"
+    in_p, out_p, ck = _drain_paths("stream_ewma_drain")
     schema = "series_id string, bucket_ts timestamp, v double"
-    t = F.unix_micros(F.col("bucket_ts"))
-    hr.filter(t <= mid).write.mode("append").parquet(in_p)
-    stream_ewma(spark, in_p, out_p, ck, schema, alpha=0.25).awaitTermination(
-        300
-    )
-    hr.filter(t > mid).write.mode("append").parquet(in_p)
-    stream_ewma(spark, in_p, out_p, ck, schema, alpha=0.25).awaitTermination(
-        300
+    _drain_in_halves(
+        hr, "bucket_ts", in_p,
+        lambda: stream_ewma(spark, in_p, out_p, ck, schema, alpha=0.25),
     )
 
     streamed = spark.read.parquet(out_p).select(
@@ -127,21 +138,11 @@ def _q_stream_ewma_drain(spark, sf_dir):
         ts_col="bucket_ts",
     ).select("series_id", "bucket_ts", F.col("ewma").alias("ewma_b"))
     j = streamed.join(batch, ["series_id", "bucket_ts"], "full_outer")
-    return j.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(
-            (
-                F.col("ewma").isNull()
-                | F.col("ewma_b").isNull()
-                | (F.col("ewma") != F.col("ewma_b"))
-            ).cast("long")
-        ).alias("n_mismatch"),
-    ).select(
-        "n_buckets",
-        "n_mismatch",
-        ((F.col("n_mismatch") == 0) & (F.col("n_buckets") > 0)).alias(
-            "invariant_ok"
-        ),
+    return _mismatch_summary(
+        j, "n_buckets",
+        F.col("ewma").isNull()
+        | F.col("ewma_b").isNull()
+        | (F.col("ewma") != F.col("ewma_b")),
     )
 
 
@@ -169,18 +170,12 @@ def _q_stream_counter_rate_drain(spark, sf_dir):
         .withColumn("v", (F.sum("_c").over(w) % 1_000_000).cast("double"))
         .select("series_id", F.col("ts").cast("timestamp").alias("ts"), "v")
     )
-    mid = counter.agg(
-        F.expr("percentile(unix_micros(ts), 0.5)")
-    ).collect()[0][0]
-    base = f"{tempfile.gettempdir()}/wds_stream_rate_drain"
-    shutil.rmtree(base, ignore_errors=True)
-    in_p, out_p, ck = f"{base}/in", f"{base}/out", f"{base}/ck"
+    in_p, out_p, ck = _drain_paths("stream_counter_rate_drain")
     schema = "series_id string, ts timestamp, v double"
-    t = F.unix_micros(F.col("ts"))
-    counter.filter(t <= mid).write.mode("append").parquet(in_p)
-    stream_counter_rate(spark, in_p, out_p, ck, schema).awaitTermination(300)
-    counter.filter(t > mid).write.mode("append").parquet(in_p)
-    stream_counter_rate(spark, in_p, out_p, ck, schema).awaitTermination(300)
+    _drain_in_halves(
+        counter, "ts", in_p,
+        lambda: stream_counter_rate(spark, in_p, out_p, ck, schema),
+    )
 
     streamed = (
         spark.read.parquet(out_p)
@@ -208,16 +203,7 @@ def _q_stream_counter_rate_drain(spark, sf_dir):
         | (F.col("n_deltas_s") != F.col("n_deltas"))
         | (F.col("n_resets_s") != F.col("n_resets"))
     )
-    return j.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(bad.cast("long")).alias("n_mismatch"),
-    ).select(
-        "n_buckets",
-        "n_mismatch",
-        ((F.col("n_mismatch") == 0) & (F.col("n_buckets") > 0)).alias(
-            "invariant_ok"
-        ),
-    )
+    return _mismatch_summary(j, "n_buckets", bad)
 
 
 @query(side_effect=True, designed_bnl=True)
@@ -231,25 +217,23 @@ def _q_stream_dedup_drain(spark, sf_dir):
     event emitted exactly once, nothing twice, nothing missing."""
     ev = _events(spark, sf_dir).select("event_id", "ts", "user_id", "value")
     dups = ev.where(F.col("event_id") % 3 == 0)
-    base = f"{tempfile.gettempdir()}/wds_stream_dedup_drain"
-    shutil.rmtree(base, ignore_errors=True)
-    in_p, out_p, ck = f"{base}/in", f"{base}/out", f"{base}/ck"
+    in_p, out_p, ck = _drain_paths("stream_dedup_drain")
     schema = "event_id bigint, ts timestamp, user_id bigint, value double"
     # run 1: all originals + duplicates of even sample rows
     ev.unionByName(dups.where(F.col("event_id") % 2 == 0)).write.mode(
         "append"
     ).parquet(in_p)
-    stream_dedup(
-        spark, in_p, out_p, ck, schema, keys=["event_id"]
-    ).awaitTermination(300)
+    await_drain(
+        stream_dedup(spark, in_p, out_p, ck, schema, keys=["event_id"]), 300
+    )
     # run 2 (same checkpoint): odd-sample duplicates — only state carried
     # from run 1 can identify them as duplicates
     dups.where(F.col("event_id") % 2 == 1).write.mode("append").parquet(
         in_p
     )
-    stream_dedup(
-        spark, in_p, out_p, ck, schema, keys=["event_id"]
-    ).awaitTermination(300)
+    await_drain(
+        stream_dedup(spark, in_p, out_p, ck, schema, keys=["event_id"]), 300
+    )
 
     emitted = spark.read.parquet(out_p)
     per_key = emitted.groupBy("event_id").agg(
@@ -289,12 +273,10 @@ def _q_stream_distinct_drain(spark, sf_dir):
     ``band_ok`` = the sketch lands within 5*rsd of the exact distinct
     count. Append-mode emission subset semantics as in the other drains
     (emitted ⊆ batch; >0 windows)."""
-    base = f"{tempfile.gettempdir()}/wds_stream_distinct_drain"
-    shutil.rmtree(base, ignore_errors=True)
-    in_path, out_path, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
+    in_path, out_path, ckpt = _drain_paths("stream_distinct_drain")
     tx = transcripts_df(spark, 200, seed=42)
     tx.write.mode("overwrite").parquet(in_path)
-    stream_distinct_1m(spark, in_path, out_path, ckpt).awaitTermination(300)
+    await_drain(stream_distinct_1m(spark, in_path, out_path, ckpt), 300)
 
     streamed = spark.read.parquet(out_path)
     batch = (
@@ -339,9 +321,7 @@ def _q_stream_ohlc_drain(spark, sf_dir):
     month's candles actually emitted (append-mode withholds only windows
     still inside the 2 h watermark horizon, so a vacuous 0-row pass is
     impossible)."""
-    base = f"{tempfile.gettempdir()}/wds_stream_ohlc_drain"
-    shutil.rmtree(base, ignore_errors=True)
-    in_path, out_path, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
+    in_path, out_path, ckpt = _drain_paths("stream_ohlc_drain")
     schema = "series_id string, ts timestamp, v long"
     samples = _events(spark, sf_dir).select(
         F.col("event_type").alias("series_id"),
@@ -349,9 +329,7 @@ def _q_stream_ohlc_drain(spark, sf_dir):
         F.round(F.col("value") * 100).cast("bigint").alias("v"),
     )
     samples.write.mode("overwrite").parquet(in_path)
-    stream_ohlc_1h(
-        spark, in_path, out_path, ckpt, schema
-    ).awaitTermination(300)
+    await_drain(stream_ohlc_1h(spark, in_path, out_path, ckpt, schema), 300)
 
     streamed = spark.read.parquet(out_path)
     batch = ohlc_bars(
@@ -402,13 +380,10 @@ def _q_stream_rollup_drain(spark, sf_dir):
     end-of-input are withheld (they stay in state for the next drain), so
     the invariant is: emitted ⊆ batch with exact equality on every emitted
     key, nothing emitted twice, and >0 windows emitted."""
-    base = f"{tempfile.gettempdir()}/wds_stream_rollup_drain"
-    shutil.rmtree(base, ignore_errors=True)
-    in_path, out_path, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
+    in_path, out_path, ckpt = _drain_paths("stream_rollup_drain")
     tx = transcripts_df(spark, 200, seed=42)
     tx.write.mode("overwrite").parquet(in_path)
-    q = stream_rollup_1m(spark, in_path, out_path, ckpt)
-    q.awaitTermination(300)
+    await_drain(stream_rollup_1m(spark, in_path, out_path, ckpt), 300)
 
     streamed = spark.read.parquet(out_path)
     batch = rollup.rollup_once(
@@ -417,21 +392,10 @@ def _q_stream_rollup_drain(spark, sf_dir):
     j = streamed.alias("s").join(
         batch.alias("b"), ["conv_id", "bucket_ts"], "left"
     )
-    summary = j.agg(
-        F.count(F.lit(1)).alias("n_windows"),
-        F.sum(
-            (
-                F.col("b.turns").isNull()
-                | (F.col("s.turns") != F.col("b.turns"))
-                | (F.col("s.chars") != F.col("b.chars"))
-                | (F.col("s.tool_calls") != F.col("b.tool_calls"))
-            ).cast("long")
-        ).alias("n_mismatch"),
-    )
-    return summary.select(
-        "n_windows",
-        "n_mismatch",
-        ((F.col("n_mismatch") == 0) & (F.col("n_windows") > 0)).alias(
-            "invariant_ok"
-        ),
+    return _mismatch_summary(
+        j, "n_windows",
+        F.col("b.turns").isNull()
+        | (F.col("s.turns") != F.col("b.turns"))
+        | (F.col("s.chars") != F.col("b.chars"))
+        | (F.col("s.tool_calls") != F.col("b.tool_calls")),
     )

@@ -405,9 +405,11 @@ def _q_reconstruction_relational(spark, sf_dir):
 
 @query(designed_bnl=True)
 def _q_dwt_energy(spark, sf_dir):
-    """Haar DWT per-scale energy spectra over dyadic windows of the
-    transcript 1m tier, with a single-lineage Parseval invariant column
-    (sum of band energies equals window energy) riding every row."""
+    """db4 DWT per-scale energy spectra over dyadic windows of the
+    transcript 1m tier: the ``dwt_windows`` coefficients reduced by the
+    relational ``energy_spectrum``, with a single-lineage Parseval
+    invariant column (sum of band energies equals window energy) riding
+    every row."""
     tier = _tier_1m(spark, 100)
     coefs = wavelet_ops.dwt_windows(
         tier, "turns", "db4", levels=4, window_len=64,

@@ -7,9 +7,10 @@ keep rebuilding from the 1m tier in batch (idempotent manifest refresh),
 which sidesteps multi-level streaming aggregation (unsupported) exactly the
 way the retention design already works.
 
-Usage:
+Usage (every operator starts an availableNow drain):
+    from wavelet_decomposition_spark.streaming import await_drain
     q = stream_rollup_1m(spark, in_path, out_path, ckpt)
-    q.processAllAvailable()  # or trigger(availableNow=True) batch drains
+    await_drain(q, 300)  # stops q and raises TimeoutError past 300 s
 """
 
 from __future__ import annotations
@@ -18,6 +19,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..io.transcripts import TRANSCRIPT_SCHEMA
+from ..operators.activity import activity_aggs
+from . import parquet_source, start_drain
 
 
 def stream_rollup_1m(
@@ -28,20 +31,14 @@ def stream_rollup_1m(
     watermark: str = "10 minutes",
 ):
     """File-source stream of transcript parquet -> 1m tier parquet sink."""
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .parquet(input_path)
-        .withWatermark("ts", watermark)
+    stream = parquet_source(
+        spark, TRANSCRIPT_SCHEMA, input_path, "ts", watermark
     )
     tier = (
         stream.groupBy(
             "conv_id", F.window("ts", "1 minute").alias("w")
         )
-        .agg(
-            F.count(F.lit(1)).alias("turns"),
-            F.sum(F.length("text")).alias("chars"),
-            F.count("tool").alias("tool_calls"),
-        )
+        .agg(*activity_aggs())
         .select(
             "conv_id",
             F.col("w.start").alias("bucket_ts"),
@@ -50,14 +47,7 @@ def stream_rollup_1m(
             "tool_calls",
         )
     )
-    return (
-        tier.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_drain(tier, output_path, checkpoint_path)
 
 
 def stream_distinct_1m(
@@ -80,10 +70,8 @@ def stream_distinct_1m(
     driver drain asserts exactly. Watermark bounds how long a window's
     registers live; at 10^12 turns/day state is windows-in-horizon x
     sketch size, independent of conversation count."""
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .parquet(input_path)
-        .withWatermark("ts", watermark)
+    stream = parquet_source(
+        spark, TRANSCRIPT_SCHEMA, input_path, "ts", watermark
     )
     agg = (
         stream.groupBy(F.window("ts", "1 minute").alias("w"))
@@ -95,14 +83,7 @@ def stream_distinct_1m(
             F.col("w.start").alias("bucket_ts"), "approx_convs", "turns"
         )
     )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_drain(agg, output_path, checkpoint_path)
 
 
 def stream_dedup(
@@ -129,19 +110,10 @@ def stream_dedup(
     batches needs hours, not forever) and let the batch tier repair
     beyond it, exactly like the late-data contract of the other
     streaming operators."""
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(input_path)
-        .withWatermark(ts_col, delay)
-        .dropDuplicatesWithinWatermark(keys)
-    )
-    return (
-        stream.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    stream = parquet_source(spark, schema, input_path, ts_col, delay)
+    return start_drain(
+        stream.dropDuplicatesWithinWatermark(keys), output_path,
+        checkpoint_path,
     )
 
 
@@ -167,11 +139,7 @@ def stream_ohlc_1h(
     drain asserts. The watermark bounds candle state lifetime; append
     mode emits a candle once its window can no longer change, so a
     restart continues from checkpointed state without re-emitting."""
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(input_path)
-        .withWatermark(ts_col, watermark)
-    )
+    stream = parquet_source(spark, schema, input_path, ts_col, watermark)
     pre = stream.select(
         group_col,
         ts_col,
@@ -201,11 +169,4 @@ def stream_ohlc_1h(
             "volume",
         )
     )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_drain(agg, output_path, checkpoint_path)

@@ -49,6 +49,35 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from . import parquet_source, start_drain
+
+
+def _sorted_batch(pdfs: Iterator[pd.DataFrame], ts_col: str,
+                  value_col: str):
+    """One group's micro-batch frames as ``(ts, vals)`` in stable
+    event-time order: ``ts`` in epoch micros, ``vals`` as float64."""
+    batch = pd.concat(list(pdfs), ignore_index=True)
+    ts = batch[ts_col].to_numpy(dtype="datetime64[us]").view(np.int64)
+    order = np.argsort(ts, kind="stable")
+    return ts[order], batch[value_col].to_numpy(dtype=np.float64)[order]
+
+
+def _drain_with_state(spark, schema, input_path, output_path,
+                      checkpoint_path, key, fn, out_schema, state_schema):
+    """File-source stream grouped on ``key`` through the stateful group
+    function ``fn`` (append mode, no timeout) into the parquet drain."""
+    out = parquet_source(spark, schema, input_path).groupBy(
+        key
+    ).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    return start_drain(out, output_path, checkpoint_path)
+
+
 OUT_SCHEMA = (
     "user_id long, session_start timestamp, session_end timestamp, "
     "n_events long, total_value double"
@@ -63,15 +92,9 @@ def _sessionize_group(gap_us: int):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
+        ts, vals = _sorted_batch(pdfs, "ts", "value")
+        if not len(ts):
             return
-        ts = (
-            batch["ts"].to_numpy(dtype="datetime64[us]").view(np.int64)
-        )
-        order = np.argsort(ts, kind="stable")
-        ts = ts[order]
-        vals = batch["value"].to_numpy(dtype=np.float64)[order]
         vals = np.nan_to_num(vals, nan=0.0)
 
         if state.exists:
@@ -141,28 +164,13 @@ def stream_sessionize(
 ):
     """File-source stream -> closed-session parquet sink (append mode).
 
-    ``trigger(availableNow=True)`` drains whatever input exists and stops;
-    re-starting with the same checkpoint resumes the state store, so open
-    sessions keep accumulating across restarts — the property that makes
-    this deployable as a scheduled incremental job as well as a continuous
-    one.
+    Re-starting the drain on the same checkpoint resumes the state store,
+    so open sessions keep accumulating across restarts.
     """
     gap_us = int(pd.Timedelta(gap).total_seconds() * 1_000_000)
-    stream = spark.readStream.schema(schema).parquet(input_path)
-    sessions = stream.groupBy("user_id").applyInPandasWithState(
-        _sessionize_group(gap_us),
-        outputStructType=OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return (
-        sessions.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _drain_with_state(
+        spark, schema, input_path, output_path, checkpoint_path, "user_id",
+        _sessionize_group(gap_us), OUT_SCHEMA, STATE_SCHEMA,
     )
 
 
@@ -181,15 +189,9 @@ def _ewma_group(alpha: float):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
+        ts, vals = _sorted_batch(pdfs, "bucket_ts", "v")
+        if not len(ts):
             return
-        batch = batch.sort_values("bucket_ts", kind="stable")
-        ts = (
-            batch["bucket_ts"].to_numpy(dtype="datetime64[us]")
-            .view(np.int64)
-        )
-        vals = batch["v"].to_numpy(dtype=np.float64)
 
         if state.exists:
             last_us, s_prev = state.get
@@ -245,21 +247,9 @@ def stream_ewma(
     dropped under the same append-only contract as sessionize; the batch
     re-aggregation tier is the repair path.
     """
-    stream = spark.readStream.schema(schema).parquet(input_path)
-    out = stream.groupBy("series_id").applyInPandasWithState(
-        _ewma_group(alpha),
-        outputStructType=EWMA_OUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _drain_with_state(
+        spark, schema, input_path, output_path, checkpoint_path,
+        "series_id", _ewma_group(alpha), EWMA_OUT_SCHEMA, EWMA_STATE_SCHEMA,
     )
 
 
@@ -276,12 +266,9 @@ def _counter_rate_group():
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
+        ts, vals = _sorted_batch(pdfs, "ts", "v")
+        if not len(ts):
             return
-        batch = batch.sort_values("ts", kind="stable")
-        ts = batch["ts"].to_numpy(dtype="datetime64[us]").view(np.int64)
-        vals = batch["v"].to_numpy(dtype=np.float64)
         if state.exists:
             last_us, last_v = state.get
             # STRICT guard, same contract as stream_ewma: one sample is
@@ -338,19 +325,8 @@ def stream_counter_rate(
     samples (ts <= state's newest) are dropped under the same append-only
     contract as the other stateful operators; the batch re-aggregation
     tier is the repair path."""
-    stream = spark.readStream.schema(schema).parquet(input_path)
-    out = stream.groupBy("series_id").applyInPandasWithState(
-        _counter_rate_group(),
-        outputStructType=RATE_OUT_SCHEMA,
-        stateStructType=RATE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _drain_with_state(
+        spark, schema, input_path, output_path, checkpoint_path,
+        "series_id", _counter_rate_group(), RATE_OUT_SCHEMA,
+        RATE_STATE_SCHEMA,
     )
