@@ -249,7 +249,9 @@ def test_auto_banding_recall_guarantee_property():
     check()
 
 
-def test_cosine_allpairs_exact_matches_numpy_and_never_collects(spark, monkeypatch):
+def test_cosine_allpairs_exact_matches_numpy_and_never_collects(
+    spark, monkeypatch, tmp_path
+):
     """The exact all-pairs GEMM oracle must (a) agree with a numpy brute
     force, (b) run with NO driver-side collect anywhere in its lineage —
     through round 4 it toPandas()'d one full side, which dies at 10^8+
@@ -265,8 +267,9 @@ def test_cosine_allpairs_exact_matches_numpy_and_never_collects(spark, monkeypat
 
     monkeypatch.setattr(DataFrame, "toPandas", _poisoned)
     got = (
-        similarity.cosine_allpairs_exact(emb, threshold=0.8, tile_rows=40)
-        .collect()
+        similarity.cosine_allpairs_exact(
+            emb, str(tmp_path), threshold=0.8, tile_rows=40
+        ).collect()
     )
     monkeypatch.undo()
     ids = pdf["vec_id"].to_numpy()
@@ -287,9 +290,9 @@ def test_cosine_allpairs_exact_matches_numpy_and_never_collects(spark, monkeypat
         assert abs(r.cosine - S[a, b]) < 1e-12
 
 
-def test_cosine_allpairs_exact_empty_input(spark):
+def test_cosine_allpairs_exact_empty_input(spark, tmp_path):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").where(F.lit(False))
-    out = similarity.cosine_allpairs_exact(emb, threshold=0.5)
+    out = similarity.cosine_allpairs_exact(emb, str(tmp_path), threshold=0.5)
     assert out.count() == 0
     assert out.columns == ["id_a", "id_b", "cosine"]
 

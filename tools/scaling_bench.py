@@ -266,15 +266,16 @@ def relational_job(spark, tx_path):
 
 def gemm_job(spark, emb_path):
     """The broadcast-GEMM exact all-pairs cosine (BLAS pinned to 1
-    thread). The throughput unit is pair-dot-products (n^2 per full
-    scan)."""
+    thread), tiling into ``<emb_path>_tiles``. The throughput unit is
+    pair-dot-products (n^2 per full scan)."""
     from wavelet_decomposition_spark.operators.similarity import (
         cosine_allpairs_exact,
     )
 
     emb = spark.read.parquet(emb_path)
     n_vecs = emb.count()
-    return (lambda: cosine_allpairs_exact(emb, threshold=0.9).count(),
+    tiles = f"{emb_path}_tiles"
+    return (lambda: cosine_allpairs_exact(emb, tiles, threshold=0.9).count(),
             lambda n_pairs: (
                 n_vecs * n_vecs, {"n_vecs": n_vecs, "n_pairs": int(n_pairs)}
             ))

@@ -49,19 +49,17 @@ def lsqr(
     atol: float = 0.0,
     btol: float = 0.0,
     conlim: float = 0.0,
-    iter_lim: int | None = None,
 ):
     """Solve ``min ||A x - b||^2 + damp^2 ||x||^2``.
 
     Returns ``(x, istop, itn)``. Stopping-rule semantics follow the
     published algorithm: with ``atol=btol=0, conlim=0`` iteration continues
-    until the machine-precision guards (istop 4/5/6) or ``iter_lim``
-    (default ``2 * n``).
+    until the machine-precision guards (istop 4/5/6) or ``2 * n``
+    iterations.
     """
     m, n = A.shape
     b = np.asarray(b, dtype=np.float64)
-    if iter_lim is None:
-        iter_lim = 2 * n
+    iter_lim = 2 * n
 
     ctol = 1.0 / conlim if conlim > 0 else 0.0
     dampsq = damp * damp
@@ -188,8 +186,8 @@ def lsqr(
     return x, istop, itn
 
 
-def beta_decomposition(A, signal: np.ndarray, damp: float = 0.001) -> np.ndarray:
-    """The reference's solve call: damped LSQR with exact-zero tolerances
-    (/root/reference/wavelet_decomposition.py:195-199)."""
-    x, _, _ = lsqr(A, signal, damp=damp, atol=0.0, btol=0.0, conlim=0.0)
+def beta_decomposition(A, signal: np.ndarray) -> np.ndarray:
+    """The reference's solve call: LSQR damped by 0.001 with exact-zero
+    tolerances (/root/reference/wavelet_decomposition.py:195-199)."""
+    x, _, _ = lsqr(A, signal, damp=0.001, atol=0.0, btol=0.0, conlim=0.0)
     return x

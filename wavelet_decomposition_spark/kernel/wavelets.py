@@ -40,27 +40,20 @@ def _sine_period(Dt: int) -> np.ndarray:
     return np.sin(np.linspace(0.0, 2.0 * np.pi, Dt, endpoint=False))
 
 
-def _family_specs(vy: int, vw: int, vd: int, dpy: int, dpd: int):
+def _family_specs():
     """Yield (family, level, n_wavelets, support_len) in column order."""
-    n = dpy * dpd
-    for k in range(vy):
+    n = DPY * NDPD
+    for k in range(VY):
         yield "year", k, 2**k, n >> k
-    for k in range(vw):
-        yield "week", k, 52 * 2**k, (7 * dpd) >> k
-    for k in range(vd):
-        yield "day", k, dpy * 2**k, dpd >> k
+    for k in range(VW):
+        yield "week", k, 52 * 2**k, (7 * NDPD) >> k
+    for k in range(VD):
+        yield "day", k, DPY * 2**k, NDPD >> k
 
 
-def generate_dictionary(
-    shape: str,
-    trans_vec,
-    vy: int = VY,
-    vw: int = VW,
-    vd: int = VD,
-    dpy: int = DPY,
-    dpd: int = NDPD,
-) -> CSRMatrix:
-    """Build the full wavelet dictionary for one year.
+def generate_dictionary(shape: str, trans_vec) -> CSRMatrix:
+    """Build the full wavelet dictionary for one year of the reference
+    configuration (``VY``/``VW``/``VD`` levels, ``DPY`` x ``NDPD`` points).
 
     ``shape``: 'square' or 'sine'. ``trans_vec`` = [transday, transweek,
     transyear] circular shifts (reference applies ``translate(row, -trans)``,
@@ -69,7 +62,7 @@ def generate_dictionary(
     if shape not in ("square", "sine"):
         raise ValueError("shape must be 'square' or 'sine'")
     transday, transweek, transyear = (int(t) for t in trans_vec)
-    n = dpy * dpd
+    n = DPY * NDPD
     shift_of = {"year": transyear, "week": transweek, "day": transday}
 
     rows_parts: list[np.ndarray] = []
@@ -84,7 +77,7 @@ def generate_dictionary(
     vals_parts.append(np.full(n, phi0, dtype=np.float64))
 
     col = 1
-    for family, _level, count, Dt in _family_specs(vy, vw, vd, dpy, dpd):
+    for family, _level, count, Dt in _family_specs():
         shift = shift_of[family]
         # base support pattern for one wavelet of this level
         use_square = shape == "square" or (family == "day" and Dt <= 4)
@@ -155,27 +148,25 @@ def mother_dictionary(
 # flat coefficient index -> (scale_idx, pos) mapping
 # ---------------------------------------------------------------------------
 
-def flat_to_scale_pos(
-    vy: int = VY, vw: int = VW, vd: int = VD, dpy: int = DPY
-):
+def flat_to_scale_pos():
     """Vectorized mapping from the solver's natural flat coefficient order to
     the reference's exported sheet layout.
 
-    Natural flat order: ``[offset | year k=0..vy-1 | week k=0..vw-1 |
-    day k=0..vd-1]`` (slicing at wavelet_decomposition.py:271-286). The
+    Natural flat order: ``[offset | year k=0..VY-1 | week k=0..VW-1 |
+    day k=0..VD-1]`` (slicing at wavelet_decomposition.py:271-286). The
     exported sheet reverses the scale list and each scale's entries
     (wavelet_decomposition.py:290), so ``scale_idx`` runs finest -> coarsest:
-    0 = 0.75 h (day k=vd-1) ... 14 = 8760 h (year k=0), 15 = offset.
+    0 = 0.75 h (day k=VD-1) ... 14 = 8760 h (year k=0), 15 = offset.
 
     Returns (scale_idx[M] int32, pos[M] int32).
     """
     sizes = [1]  # offset
-    for k in range(vy):
+    for k in range(VY):
         sizes.append(2**k)
-    for k in range(vw):
+    for k in range(VW):
         sizes.append(52 * 2**k)
-    for k in range(vd):
-        sizes.append(dpy * 2**k)
+    for k in range(VD):
+        sizes.append(DPY * 2**k)
     n_scales = len(sizes)  # 16 natural scale lists
 
     scale_idx_parts = []

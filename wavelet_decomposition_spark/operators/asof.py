@@ -55,8 +55,6 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str | list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     right_cols: list[str] | None = None,
     tie_break: str | None = None,
     tolerance: str | None = None,
@@ -68,7 +66,7 @@ def asof_join(
 
     ``right_cols``: right payload columns to carry (default: all except the
     key and timestamp). Each lands on the output as ``<name><suffix>``,
-    alongside ``<right_ts><suffix>`` (the matched row's timestamp, null if
+    alongside ``ts<suffix>`` (the matched row's timestamp, null if
     no match).
 
     ``tie_break``: column ordering equal-timestamp right rows; the row with
@@ -81,7 +79,7 @@ def asof_join(
     keys = [on] if isinstance(on, str) else list(on)
     if right_cols is None:
         right_cols = [
-            c for c in right.columns if c not in keys and c != right_ts
+            c for c in right.columns if c not in keys and c != "ts"
         ]
 
     extra = (
@@ -95,10 +93,10 @@ def asof_join(
     # onto every probe as a phantom match whose matched-ts stays null.
     # (Null-ts LEFT rows need no filter: they sort first, see no preceding
     # right row, and come out unmatched — plain left-outer semantics.)
-    right = right.where(F.col(right_ts).isNotNull())
+    right = right.where(F.col("ts").isNotNull())
     r = right.select(
         *keys,
-        F.unix_micros(F.col(right_ts).cast("timestamp")).alias(_TS_US),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias(_TS_US),
         *[F.col(c) for c in right_cols + extra],
     )
     if tie_break is not None:
@@ -116,16 +114,16 @@ def asof_join(
         F.col(_TS_US).alias(_RTS),
         *[F.col(c).alias(o) for c, o in zip(right_cols, out_right)],
         *[F.lit(None).cast(left.schema[c].dataType).alias(c)
-          for c in left.columns if c not in keys and c != left_ts],
+          for c in left.columns if c not in keys and c != "ts"],
     )
     l = left.select(
         *keys,
-        F.unix_micros(F.col(left_ts).cast("timestamp")).alias(_TS_US),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias(_TS_US),
         F.lit(1).alias(_TAG),
         F.lit(None).cast("bigint").alias(_RTS),
         *[F.lit(None).cast(r.schema[o].dataType).alias(o)
           for o in out_right],
-        *[F.col(c) for c in left.columns if c not in keys and c != left_ts],
+        *[F.col(c) for c in left.columns if c not in keys and c != "ts"],
     )
     # unionByName keeps the two selects order-independent
     u = r.unionByName(l.select(*r.columns))
@@ -139,7 +137,7 @@ def asof_join(
                for o in out_right]
     matched_ts = F.last(F.col(_RTS), ignorenulls=True).over(w)
 
-    keep = [c for c in left.columns if c not in keys and c != left_ts]
+    keep = [c for c in left.columns if c not in keys and c != "ts"]
     out = (
         u.select(
             *keys,
@@ -161,18 +159,18 @@ def asof_join(
             *[F.when(fresh, F.col(o)).alias(o) for o in out_right],
             *keep,
         )
-    ts_out = F.timestamp_micros(F.col(_TS_US)).alias(left_ts)
-    if dict(left.dtypes)[left_ts] == "timestamp_ntz":
+    ts_out = F.timestamp_micros(F.col(_TS_US)).alias("ts")
+    if dict(left.dtypes)["ts"] == "timestamp_ntz":
         ts_out = (
             F.timestamp_micros(F.col(_TS_US))
-            .cast("timestamp_ntz").alias(left_ts)
+            .cast("timestamp_ntz").alias("ts")
         )
     return out.select(
         *keys,
         ts_out,
         F.when(
             F.col(_RTS).isNotNull(), F.timestamp_micros(F.col(_RTS))
-        ).cast(dict(left.dtypes)[left_ts]).alias(f"{right_ts}{suffix}"),
+        ).cast(dict(left.dtypes)["ts"]).alias(f"ts{suffix}"),
         *out_right,
         *keep,
     )

@@ -71,15 +71,13 @@ def _merge_word(sym: list, a: str, b: str, ab: str) -> list:
     return out
 
 
-def word_counts(
-    docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """The one corpus scan: ``(word, count)`` + initial character symbol
     arrays. Everything after runs on this Zipf-bounded table."""
     words = docs.select(
         F.explode(
             F.regexp_extract_all(
-                F.col(text_col), F.lit(_WORD_REGEX), F.lit(0)
+                F.col("text"), F.lit(_WORD_REGEX), F.lit(0)
             )
         ).alias("word")
     )
@@ -165,7 +163,6 @@ def _apply_merges(
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 30,
-    text_col: str = "text",
     min_freq: int = 2,
     verify: bool = False,
 ) -> dict:
@@ -180,7 +177,7 @@ def bpe_train(
     # the next pair-count job materialize the truncation as a side
     # effect instead of paying a dedicated eager-checkpoint job (5.9 s
     # vs 6.9 s eager, vs 11+ s with no truncation at all)
-    vocab = word_counts(docs, text_col).localCheckpoint(eager=False)
+    vocab = word_counts(docs).localCheckpoint(eager=False)
     vocab0 = vocab  # checkpointed initial word table (see out dict)
     merges: list[tuple[str, str, int]] = []
     # one fused setup aggregate: vocabulary size and (for verify) the
@@ -273,11 +270,9 @@ def bpe_train_reference(
 def bpe_encode(
     docs: DataFrame,
     merges: list[tuple[str, str, int]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Tokenize every document with the learned merges (applied in rank
-    order, leftmost-greedy): ``(id_col, n_chars, n_tokens)`` — one Arrow
+    order, leftmost-greedy): ``(doc_id, n_chars, n_tokens)`` — one Arrow
     pass, no shuffle. ``n_tokens <= n_chars`` always; equality iff no
     merge applies."""
     import re
@@ -297,7 +292,7 @@ def bpe_encode(
                 continue
             n_chars = []
             n_tokens = []
-            for t in pdf[text_col]:
+            for t in pdf["text"]:
                 words = rx.findall(t or "")
                 total_c = sum(len(w) for w in words)
                 total_t = 0
@@ -314,13 +309,13 @@ def bpe_encode(
                 n_tokens.append(total_t)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].values,
+                    "doc_id": pdf["doc_id"].values,
                     "n_chars": n_chars,
                     "n_tokens": n_tokens,
                 }
             )
 
-    return docs.select(id_col, text_col).mapInPandas(
+    return docs.select("doc_id", "text").mapInPandas(
         worker_kernel(gen),
-        schema=f"{id_col} bigint, n_chars int, n_tokens int",
+        schema="doc_id bigint, n_chars int, n_tokens int",
     )

@@ -37,16 +37,14 @@ from pyspark.sql import functions as F
 from .textstats import normalized
 
 
-def char_trigrams(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def char_trigrams(docs: DataFrame) -> DataFrame:
     """Explode each document into its overlapping character trigrams of
     NORMALIZED text (lowercase, whitespace-collapsed, trimmed —
     textstats.normalized, the same canonical form the dedup fingerprints
     key on). Documents shorter than 3 normalized chars contribute no
-    rows. Output: ``(id_col, tri)``, one row per occurrence.
+    rows. Output: ``(doc_id, tri)``, one row per occurrence.
     """
-    norm = normalized(F.col(text_col))
+    norm = normalized(F.col("text"))
     # NB 1: Spark's sequence(1, stop) DESCENDS when stop < 1
     # (sequence(1,0) is [1, 0], not empty) — short docs need the
     # explicit empty branch.
@@ -68,13 +66,11 @@ def char_trigrams(
         )
     )
     return docs.select(
-        F.col(id_col), F.explode(tris).alias("tri")
+        F.col("doc_id"), F.explode(tris).alias("tri")
     )
 
 
-def trigram_profile(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def trigram_profile(docs: DataFrame) -> DataFrame:
     """Corpus trigram frequency table ``(tri, df)`` — df counts
     OCCURRENCES across the corpus (not distinct docs: repetition inside
     a document is evidence of the trigram's productivity too, and the
@@ -82,83 +78,58 @@ def trigram_profile(
     |charset|^3 rows however large the corpus is.
     """
     return (
-        char_trigrams(docs, text_col, id_col)
+        char_trigrams(docs)
         .groupBy("tri")
         .agg(F.count(F.lit(1)).alias("df"))
     )
 
 
-def trigram_quality(
-    docs: DataFrame,
-    profile: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    rare_max: int = 2,
-) -> DataFrame:
-    """Per-document integer quality statistics against a trigram
-    profile (defaults to the corpus' own profile — self-scoring, the
-    common first pass):
+def trigram_quality(docs: DataFrame, rare_max: int = 2) -> DataFrame:
+    """Per-document integer quality statistics against the corpus' own
+    trigram profile (self-scoring):
 
     ``n_tri``    total trigram occurrences in the doc (0 for docs under
                  3 normalized chars — such docs still appear, zeroed);
-    ``n_rare``   occurrences whose profile frequency is <= ``rare_max``
-                 (unseen trigrams count: a missing profile row scores
-                 frequency 0);
-    ``df_mass``  exact BIGINT sum of profile frequencies over the doc's
+    ``n_rare``   occurrences whose corpus frequency is <= ``rare_max``;
+    ``df_mass``  exact BIGINT sum of corpus frequencies over the doc's
                  occurrences — df_mass/n_tri is the mean familiarity.
 
-    One broadcast join (the profile is charset-bounded) + one hash
-    aggregate; the left join back to ``docs`` keeps empty docs.
+    ONE trigram explode pass feeds both the profile and the per-doc
+    statistics. The (doc, tri) count table is the shared intermediate:
+    the profile is its tri-marginal (sum of counts = occurrence counts,
+    exactly what :func:`trigram_profile` computes) and every per-doc
+    statistic is a count-weighted sum over it. Exact integers
+    throughout, at half the explode/aggregate work of profiling and
+    scoring separately (the explode is the query's dominant stage: all
+    trigram occurrences of the corpus). One broadcast join (the profile
+    is charset-bounded) + one hash aggregate; the left join back to
+    ``docs`` keeps empty docs.
     """
-    if profile is None:
-        # self-scoring mode: ONE trigram explode pass feeds both the
-        # profile and the per-doc statistics. The (doc, tri) count
-        # table is the natural shared intermediate — the profile is its
-        # tri-marginal (sum of counts = occurrence counts, exactly what
-        # trigram_profile computes) and every per-doc statistic is a
-        # count-weighted sum over it. Exact integers throughout, so the
-        # output is bit-identical to the two-pass form at half the
-        # explode/aggregate work (the explode is the query's dominant
-        # stage: all trigram occurrences of the corpus).
-        occ_pc = (
-            char_trigrams(docs, text_col, id_col)
-            .groupBy(id_col, "tri")
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .localCheckpoint(eager=False)
+    occ_pc = (
+        char_trigrams(docs)
+        .groupBy("doc_id", "tri")
+        .agg(F.count(F.lit(1)).alias("_c"))
+        .localCheckpoint(eager=False)
+    )
+    profile = occ_pc.groupBy("tri").agg(F.sum("_c").alias("df"))
+    scored = (
+        occ_pc.join(F.broadcast(profile), "tri", "left")
+        .withColumn("df", F.coalesce(F.col("df"), F.lit(0)))
+        .groupBy("doc_id")
+        .agg(
+            F.sum("_c").alias("n_tri"),
+            F.sum(
+                F.when(F.col("df") <= rare_max, F.col("_c"))
+                .otherwise(F.lit(0))
+            ).alias("n_rare"),
+            F.sum(F.col("df") * F.col("_c")).alias("df_mass"),
         )
-        profile = occ_pc.groupBy("tri").agg(F.sum("_c").alias("df"))
-        scored = (
-            occ_pc.join(F.broadcast(profile), "tri", "left")
-            .withColumn("df", F.coalesce(F.col("df"), F.lit(0)))
-            .groupBy(id_col)
-            .agg(
-                F.sum("_c").alias("n_tri"),
-                F.sum(
-                    F.when(F.col("df") <= rare_max, F.col("_c"))
-                    .otherwise(F.lit(0))
-                ).alias("n_rare"),
-                F.sum(F.col("df") * F.col("_c")).alias("df_mass"),
-            )
-        )
-    else:
-        occ = char_trigrams(docs, text_col, id_col)
-        scored = (
-            occ.join(F.broadcast(profile), "tri", "left")
-            .withColumn("df", F.coalesce(F.col("df"), F.lit(0)))
-            .groupBy(id_col)
-            .agg(
-                F.count(F.lit(1)).alias("n_tri"),
-                F.sum(
-                    F.when(F.col("df") <= rare_max, 1).otherwise(0)
-                ).alias("n_rare"),
-                F.sum("df").alias("df_mass"),
-            )
-        )
+    )
     return (
-        docs.select(id_col)
-        .join(scored, id_col, "left")
+        docs.select("doc_id")
+        .join(scored, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_tri", F.lit(0)).cast("bigint").alias("n_tri"),
             F.coalesce("n_rare", F.lit(0)).cast("bigint").alias("n_rare"),
             F.coalesce("df_mass", F.lit(0)).cast("bigint").alias(
@@ -171,8 +142,6 @@ def trigram_quality(
 def trigram_logprob(
     docs: DataFrame,
     profile: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     alpha: float = 0.5,
 ) -> DataFrame:
     """Per-document mean trigram log-probability under an
@@ -186,7 +155,7 @@ def trigram_logprob(
     totals = profile.agg(
         F.sum("df").alias("_total"), F.count(F.lit(1)).alias("_vocab")
     )
-    occ = char_trigrams(docs, text_col, id_col)
+    occ = char_trigrams(docs)
     return (
         occ.join(F.broadcast(profile), "tri", "left")
         .crossJoin(F.broadcast(totals))
@@ -198,7 +167,7 @@ def trigram_logprob(
                 / (F.col("_total") + F.lit(alpha) * F.col("_vocab"))
             ),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tri"),
             F.avg("_lp").alias("mean_logprob"),

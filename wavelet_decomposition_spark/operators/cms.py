@@ -27,7 +27,7 @@ Provable guarantees (both gate-asserted by the driver query):
 - *Superset of the true hot set*: a key with global share >= support has,
   by pigeonhole, share >= support in at least one partition; at most
   floor(1/support) keys can hold share >= support in that partition, so
-  ``local_k >= ceil(1/support)`` (the default is 2x that) puts every
+  ``local_k >= ceil(1/support)`` (``local_k`` is 2x that) puts every
   truly-hot key in some partition's candidate list — under ANY
   partitioning. Combined with no-undercount, the output is always a
   superset of the true hot set.
@@ -79,7 +79,6 @@ def cms_heavy_hitters(
     support: float,
     depth: int = 4,
     width: int = 8192,
-    local_k: int | None = None,
 ) -> DataFrame:
     """All keys whose frequency is >= ``support`` of the total row count,
     with CMS-estimated counts: columns (key string, estimate bigint,
@@ -90,8 +89,7 @@ def cms_heavy_hitters(
     """
     if not (0.0 < support < 1.0):
         raise ValueError(f"support must be in (0,1), got {support}")
-    if local_k is None:
-        local_k = 2 * math.ceil(1.0 / support)
+    local_k = 2 * math.ceil(1.0 / support)
     spark = df.sparkSession
 
     keyed = (

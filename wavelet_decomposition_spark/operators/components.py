@@ -37,6 +37,8 @@ from pyspark.sql import functions as F
 
 from ..plans.session import worker_kernel
 
+_MAX_ROUNDS = 50
+
 
 def _star(e: DataFrame, large: bool) -> DataFrame:
     """One large- or small-star round over directed edges (u, v), u > v."""
@@ -65,22 +67,18 @@ def _star(e: DataFrame, large: bool) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """(node, component) for every node appearing in ``edges``; the
-    component label is the minimum node id in the component.
+def connected_components(edges: DataFrame) -> DataFrame:
+    """(node, component) for every node appearing in the ``(id_a, id_b)``
+    ``edges``; the component label is the minimum node id in the
+    component.
 
-    Raises ``RuntimeError`` if ``max_iter`` rounds don't converge — with
-    the O(log n) star contraction that means ~2**50 nodes, i.e. never.
+    Raises ``RuntimeError`` if 50 rounds don't converge — with the
+    O(log n) star contraction that means ~2**50 nodes, i.e. never.
     """
     e = (
         edges.select(
-            F.col(a_col).cast("bigint").alias("u"),
-            F.col(b_col).cast("bigint").alias("v"),
+            F.col("id_a").cast("bigint").alias("u"),
+            F.col("id_b").cast("bigint").alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
@@ -88,7 +86,7 @@ def connected_components(
         .localCheckpoint()
     )
     prev = None
-    for _ in range(max_iter):
+    for _ in range(_MAX_ROUNDS):
         e = _star(_star(e, large=True), large=False).localCheckpoint()
         sig = e.agg(
             F.count(F.lit(1)).alias("n"),
@@ -101,7 +99,7 @@ def connected_components(
             break
         prev = cur
     else:
-        raise RuntimeError(f"no convergence in {max_iter} star rounds")
+        raise RuntimeError(f"no convergence in {_MAX_ROUNDS} star rounds")
     # star forest: (u -> root) edges plus the roots themselves
     children = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
     roots = e.select(F.col("v").alias("node")).distinct().withColumn(
@@ -110,11 +108,7 @@ def connected_components(
     return children.unionByName(roots).distinct()
 
 
-def triangle_stats(
-    edges: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-) -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Exact triangle count + global clustering coefficient over an
     undirected graph — the third classic graph kernel beside
     :func:`connected_components` and operators/pagerank.py.
@@ -151,8 +145,8 @@ def triangle_stats(
     """
     e = (
         edges.select(
-            F.col(a_col).cast("bigint").alias("u"),
-            F.col(b_col).cast("bigint").alias("v"),
+            F.col("id_a").cast("bigint").alias("u"),
+            F.col("id_b").cast("bigint").alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .select(
@@ -273,15 +267,12 @@ def dedup_clusters(
     nodes: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iter: int = 50,
 ) -> DataFrame:
     """Cluster assignment for EVERY node (singletons label themselves):
     (id, component, cluster_size, is_canonical). Canonical = the minimum
     id in the cluster — swap in a quality-ranked ``min_by`` upstream if
     the keep-policy is "best doc wins" rather than "first doc wins"."""
-    cc = connected_components(pairs, a_col, b_col, max_iter)
+    cc = connected_components(pairs)
     out = (
         nodes.select(F.col(id_col).cast("bigint").alias("node"))
         .join(cc, "node", "left")

@@ -29,12 +29,11 @@ def encode_blocks(
     value_cols,
     group_col: str = "conv_id",
     ts_col: str = "bucket_ts",
-    block_col: str = "day",
 ) -> DataFrame:
     """Compress one tier into per-(conv, day) blocks."""
     value_cols = list(value_cols)
     schema = (
-        f"{group_col} string, {block_col} date, n_points int, ts_blob binary, "
+        f"{group_col} string, day date, n_points int, ts_blob binary, "
         + ", ".join(f"{c}_blob binary" for c in value_cols)
     )
 
@@ -47,10 +46,10 @@ def encode_blocks(
         pdf = pdf.sort_values([group_col, ts_col])
         ts_all = pdf[ts_col].astype("datetime64[us]").to_numpy().view(np.int64)
         convs = pdf[group_col].to_numpy()
-        days = pdf[block_col].to_numpy()
+        days = pdf["day"].to_numpy()
         change = (convs[1:] != convs[:-1]) | (days[1:] != days[:-1])
         bounds = np.flatnonzero(np.r_[True, change, True])
-        out = {group_col: convs[bounds[:-1]], block_col: days[bounds[:-1]],
+        out = {group_col: convs[bounds[:-1]], "day": days[bounds[:-1]],
                "n_points": (bounds[1:] - bounds[:-1]).astype(np.int32),
                "ts_blob": deltadelta.encode_many(ts_all, bounds)}
         for c in value_cols:
@@ -63,32 +62,26 @@ def encode_blocks(
     # size-derived task count (see wavelet_ops.bucketed_apply); explicit
     # pre-UDF projection — Catalyst cannot prune into grouped-map UDFs
     with_day = tier_df.select(group_col, ts_col, *value_cols).withColumn(
-        block_col, F.to_date(ts_col)
+        "day", F.to_date(ts_col)
     )
     return bucketed_apply(with_day, group_col, _enc, schema)
 
 
-def decode_blocks(
-    blocks: DataFrame,
-    value_cols,
-    group_col: str = "conv_id",
-    ts_col: str = "bucket_ts",
-    block_col: str = "day",
-) -> DataFrame:
+def decode_blocks(blocks: DataFrame, value_cols) -> DataFrame:
     """Expand blocks back to one row per point (exact inverse of
     :func:`encode_blocks` up to float64 bits)."""
     value_cols = list(value_cols)
-    schema = f"{group_col} string, {ts_col} timestamp, " + ", ".join(
+    schema = "conv_id string, bucket_ts timestamp, " + ", ".join(
         f"{c} double" for c in value_cols
     )
 
     def _dec(pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(pdf):
-            return pd.DataFrame(columns=[group_col, ts_col, *value_cols])
+            return pd.DataFrame(columns=["conv_id", "bucket_ts", *value_cols])
         ts, bounds = deltadelta.decode_many(list(pdf["ts_blob"]))
         data = {
-            group_col: np.repeat(pdf[group_col].to_numpy(), np.diff(bounds)),
-            ts_col: pd.to_datetime(ts, unit="us"),
+            "conv_id": np.repeat(pdf["conv_id"].to_numpy(), np.diff(bounds)),
+            "bucket_ts": pd.to_datetime(ts, unit="us"),
         }
         for c in value_cols:
             vals, _ = gorilla.decode_many(list(pdf[f"{c}_blob"]))
@@ -96,7 +89,7 @@ def decode_blocks(
         return pd.DataFrame(data)
 
     return bucketed_apply(
-        blocks, group_col, _dec, schema,
+        blocks, "conv_id", _dec, schema,
         blocks.sparkSession.sparkContext.defaultParallelism * 2,
     )
 

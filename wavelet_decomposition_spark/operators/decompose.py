@@ -38,30 +38,21 @@ def broadcast_dictionaries(
     spark: SparkSession,
     shape: str,
     translations_by_year: dict[int, list[int]],
-    vy: int = wl.VY,
-    vw: int = wl.VW,
-    vd: int = wl.VD,
-    dpy: int = wl.DPY,
-    dpd: int = wl.NDPD,
 ):
     """Generate one CSR dictionary per year on the driver (<1 s/year,
     CSR-direct — the reference's dense path needs 4.38 GB) and broadcast the
     raw arrays plus the scale map. Returns the broadcast handle."""
     payload = {}
     for year, trans in translations_by_year.items():
-        A = wl.generate_dictionary(shape, trans, vy, vw, vd, dpy, dpd)
+        A = wl.generate_dictionary(shape, trans)
         payload[int(year)] = (A.data, A.indices, A.indptr, A.shape)
-    scale_idx, pos = wl.flat_to_scale_pos(vy, vw, vd, dpy)
+    scale_idx, pos = wl.flat_to_scale_pos()
     return spark.sparkContext.broadcast(
         {"matrices": payload, "scale_idx": scale_idx, "pos": pos}
     )
 
 
-def decompose(
-    df: DataFrame,
-    bc,
-    damp: float = 0.001,
-) -> DataFrame:
+def decompose(df: DataFrame, bc) -> DataFrame:
     """(series_id, year, idx, value) -> (series_id, year, scale_idx, pos, beta).
 
     ``bc`` is the broadcast from :func:`broadcast_dictionaries`.
@@ -92,7 +83,7 @@ def decompose(
                 f"group ({pdf['series_id'].iloc[0]}, {year}) has "
                 f"{signal.size} points, dictionary expects {A.shape[0]}"
             )
-        beta = beta_decomposition(A, signal, damp=damp)
+        beta = beta_decomposition(A, signal)
         return pd.DataFrame(
             {
                 "series_id": pdf["series_id"].iloc[0],
@@ -163,7 +154,7 @@ def reconstruct(
     )
 
 
-def support_table(spark: SparkSession, bc, years=None) -> DataFrame:
+def support_table(spark: SparkSession, bc) -> DataFrame:
     """J3 — the wavelet dictionary as a long relational table
     ``(year, scale_idx, pos, idx, weight)``: one row per CSR nonzero
     (~373k/year, a few MB — broadcast-able). Built driver-side from the
@@ -173,8 +164,6 @@ def support_table(spark: SparkSession, bc, years=None) -> DataFrame:
     lut_scale, lut_pos = state["scale_idx"], state["pos"]
     frames = []
     for year, (data, indices, indptr, shape) in state["matrices"].items():
-        if years is not None and int(year) not in set(int(y) for y in years):
-            continue
         frames.append(
             pd.DataFrame(
                 {

@@ -33,19 +33,17 @@ def decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
     n: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     on_hash: bool = True,
 ) -> DataFrame:
     """One row per corpus document: ``n_overlap`` (count of distinct
     n-grams also present anywhere in the benchmark) and ``contaminated``
     (any overlap at all — the usual drop criterion)."""
     bench_grams = (
-        word_shingles(benchmark, text_col=text_col, id_col=id_col, n=n)
+        word_shingles(benchmark, n=n)
         .select("shingle")
         .distinct()
     )
-    corpus_grams = word_shingles(corpus, text_col=text_col, id_col=id_col, n=n)
+    corpus_grams = word_shingles(corpus, n=n)
     if on_hash:
         key = F.xxhash64("shingle").alias("_g")
         bench_grams = bench_grams.select(key).distinct()
@@ -59,10 +57,10 @@ def decontaminate(
         .agg(F.count_distinct("_g").alias("n_overlap"))
     )
     return (
-        corpus.select(F.col(id_col).alias("id"))
+        corpus.select(F.col("doc_id").alias("id"))
         .join(hits, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             F.coalesce("n_overlap", F.lit(0)).alias("n_overlap"),
             (F.coalesce("n_overlap", F.lit(0)) > 0).alias("contaminated"),
         )

@@ -34,16 +34,17 @@ from ..plans.session import worker_kernel
 # int64 under ANSI arithmetic; per-permutation collision prob ~ n/2^31 is
 # negligible for shingle sets)
 _MERSENNE = (1 << 31) - 1
+_N_PERM = 64  # MinHash permutations (signature length)
 
 
-def _perm_params(n_perm: int, seed: int = 42):
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, _MERSENNE, size=n_perm, dtype=np.int64)
-    b = rng.integers(0, _MERSENNE, size=n_perm, dtype=np.int64)
+def _perm_params():
+    rng = np.random.default_rng(42)
+    a = rng.integers(1, _MERSENNE, size=_N_PERM, dtype=np.int64)
+    b = rng.integers(0, _MERSENNE, size=_N_PERM, dtype=np.int64)
     return a, b
 
 
-def _spread(df: DataFrame, factor: int = 2) -> DataFrame:
+def _spread(df: DataFrame) -> DataFrame:
     """Parallelism floor for the CPU-bound shingle/hash stages.
 
     Small inputs often arrive as a handful of file splits (the sf fixtures
@@ -57,7 +58,7 @@ def _spread(df: DataFrame, factor: int = 2) -> DataFrame:
     translation) so an already-well-partitioned input is respected rather
     than unconditionally reshuffled (round-3 advisory)."""
     sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
+    target = sc.defaultParallelism * 2
     try:
         n_splits = len(df.inputFiles())
     except Exception:
@@ -73,11 +74,11 @@ def _spread(df: DataFrame, factor: int = 2) -> DataFrame:
     return df.repartition(target)
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep the lowest-id representative per identical (normalized) text."""
-    w = Window.partitionBy("fp").orderBy(id_col)
+    w = Window.partitionBy("fp").orderBy("doc_id")
     return (
-        df.withColumn("fp", fingerprint(text_col))
+        df.withColumn("fp", fingerprint("text"))
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn", "fp")
@@ -99,22 +100,20 @@ def _gram_array(words: F.Column, n: int) -> F.Column:
     return F.filter(F.array_distinct(grams), lambda g: F.length(g) > 0)
 
 
-def shingled(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-             n: int = 3, out_col: str = "sh") -> DataFrame:
-    """(id, <out_col> array<string>) — per-doc distinct shingle set, with
+def shingled(df: DataFrame) -> DataFrame:
+    """(id, sh array<string>) — per-doc distinct word 3-gram set, with
     the words array materialized first (see :func:`_gram_array`)."""
     return (
-        _spread(df.select(id_col, text_col))
-        .withColumn("_w", F.split(normalized(text_col), " "))
+        _spread(df.select("doc_id", "text"))
+        .withColumn("_w", F.split(normalized("text"), " "))
         .select(
-            F.col(id_col).alias("id"),
-            _gram_array(F.col("_w"), n).alias(out_col),
+            F.col("doc_id").alias("id"),
+            _gram_array(F.col("_w"), 3).alias("sh"),
         )
     )
 
 
-def word_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  n: int = 3) -> DataFrame:
+def word_shingles(df: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per doc: (id, shingle).
 
     The gram array is exploded INLINE rather than through a named column:
@@ -126,30 +125,25 @@ def word_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     scan task (measured: 4x the entire signature stage). Exploding the
     complex expression directly blocks the inference (the rule only fires
     on attribute children)."""
-    base = _spread(df.select(id_col, text_col)).withColumn(
-        "_w", F.split(normalized(text_col), " ")
+    base = _spread(df.select("doc_id", "text")).withColumn(
+        "_w", F.split(normalized("text"), " ")
     )
     return base.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.explode(_gram_array(F.col("_w"), n)).alias("shingle"),
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Exact Jaccard-similar pairs (id_a < id_b, jaccard >= threshold).
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """Exact Jaccard-similar pairs (id_a < id_b, jaccard >= threshold) over
+    word 3-gram shingles.
 
     The shingle self-join is quadratic in duplicates and skewed on common
     shingles — this is the VERIFICATION ORACLE for the bounded variant
     below, not the 100-TB path. Shingles are deliberately recomputed for the
     sizes branch rather than cached: caching a mid-operator RDD at scale
     pins executor memory, and the recompute is one projection."""
-    sh = word_shingles(df, text_col, id_col, n)
+    sh = word_shingles(df)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col("id").alias("id_a"), "shingle")
     b = sh.select(F.col("id").alias("id_b"), "shingle")
@@ -176,9 +170,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def _auto_banding(
-    threshold: float, n_perm: int, target_recall: float = 0.95
-) -> tuple[int, int]:
+def _auto_banding(threshold: float, n_perm: int) -> tuple[int, int]:
     """Pick ``(bands, rows_per_band)`` with ``bands * rows == n_perm`` so the
     banded-LSH candidate recall AT the requested threshold stays high:
     ``recall(j) = 1 - (1 - j^r)^b``. A banding is only valid near its own
@@ -186,52 +178,41 @@ def _auto_banding(
     so a fixed banding silently drops almost every low-threshold pair.
     Returns the largest ``rows_per_band`` (hardest candidate pruning, i.e.
     cheapest verification join) whose recall at ``threshold`` still meets
-    ``target_recall``: 64x1 for t<=~0.17, 32x2 to ~0.45, 16x4 to ~0.72,
+    0.95: 64x1 for t<=~0.17, 32x2 to ~0.45, 16x4 to ~0.72,
     8x8 to ~0.87 (n_perm=64)."""
     best = (n_perm, 1)
     for r in range(1, n_perm + 1):
         if n_perm % r:
             continue
         b = n_perm // r
-        if 1.0 - (1.0 - threshold**r) ** b >= target_recall:
+        if 1.0 - (1.0 - threshold**r) ** b >= 0.95:
             best = (b, r)
     return best
 
 
 def ngram_jaccard_pairs_bounded(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.8,
-    n_perm: int = 64,
-    bands: int | None = None,
-    rows_per_band: int | None = None,
-    seed: int = 42,
+    df: DataFrame, threshold: float = 0.8
 ) -> DataFrame:
     """Exact Jaccard computed ONLY on MinHash-LSH candidate pairs — the
     100-TB path. No shingle self-join ever happens: candidates come from
     banded LSH (shuffle key = (band, bucket)), then two bounded equi-joins
     attach each side's shingle set and the intersection runs JVM-side
     (``array_intersect``). Precision is exact; recall is the LSH band
-    recall, and the banding is derived from ``threshold`` by default
-    (:func:`_auto_banding`) so the candidate filter's operating point always
-    matches the requested threshold — pass ``bands``/``rows_per_band`` to
-    pin it manually. Low thresholds get permissive bandings (more
-    candidates): that cost is inherent to asking for low-similarity pairs,
-    not a property of this implementation. The unbounded self-join above is
-    the pytest oracle for this operator."""
-    if bands is None or rows_per_band is None:
-        bands, rows_per_band = _auto_banding(threshold, n_perm)
+    recall over 64 permutations, and the banding is derived from
+    ``threshold`` (:func:`_auto_banding`) so the candidate filter's
+    operating point always matches the requested threshold. Low thresholds
+    get permissive bandings (more candidates): that cost is inherent to
+    asking for low-similarity pairs, not a property of this
+    implementation. The unbounded self-join above is the pytest oracle for
+    this operator."""
+    bands, rows_per_band = _auto_banding(threshold, _N_PERM)
     # materialize the signature table once (localCheckpoint spills
     # MEMORY_AND_DISK): the band join and any estimate pass would
     # otherwise each re-run the shingle explode + 64-min aggregate —
     # the dominant cost of the whole operator — per reference. This is
     # the production dedup shape anyway: signatures are written once,
     # then banded and verified from the stored table.
-    sigs = minhash_signatures(
-        df, text_col, id_col, n, n_perm, seed
-    ).localCheckpoint()
+    sigs = minhash_signatures(df).localCheckpoint()
     cand = minhash_lsh_pairs(sigs, bands, rows_per_band)
     # verification sets are HASHED shingles (array<bigint>), not strings:
     # the set rides two exchanges into the verification join, and 8-byte
@@ -242,7 +223,7 @@ def ngram_jaccard_pairs_bounded(
     # shingles of the same document collide in 64-bit xxhash space
     # (~s^2/2^64 per doc, s ~ hundreds: negligible and deterministic);
     # equality vs the string-exact oracle is pinned in tests.
-    sets = shingled(df, text_col, id_col, n).select(
+    sets = shingled(df).select(
         "id", F.transform("sh", lambda s: F.xxhash64(s)).alias("sh")
     ).localCheckpoint()  # feeds BOTH verification sides — hash once
     a = sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
@@ -262,16 +243,9 @@ def ngram_jaccard_pairs_bounded(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    n_perm: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """(id, sig array<bigint>) — min over shingle hashes of (a*h+b) mod p,
-    per permutation.
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """(id, sig array<bigint>) — min over word 3-gram shingle hashes of
+    (a*h+b) mod p, per permutation.
 
     Single-pass formulation: explode shingles once, then ONE hash aggregate
     with 64 ``min`` buffer columns per doc (the permutation arithmetic is a
@@ -281,21 +255,21 @@ def minhash_signatures(
     alternatives: 64 nested array_min(transform(...)) projections
     re-evaluate the shingle pipeline per permutation; a broadcast-join with
     a 64-row perm dim materializes 64x rows into the aggregate.)"""
-    a, b = _perm_params(n_perm, seed)
-    hashed = word_shingles(df, text_col, id_col, n).select(
+    a, b = _perm_params()
+    hashed = word_shingles(df).select(
         "id", F.pmod(F.xxhash64("shingle"), F.lit(_MERSENNE)).alias("h")
     )
     aggs = [
         F.min(
             F.pmod(F.col("h") * int(a[i]) + int(b[i]), F.lit(_MERSENNE))
         ).alias(f"_m{i}")
-        for i in range(n_perm)
+        for i in range(_N_PERM)
     ]
     return (
         hashed.groupBy("id")
         .agg(*aggs)
         .select(
-            "id", F.array(*[f"_m{i}" for i in range(n_perm)]).alias("sig")
+            "id", F.array(*[f"_m{i}" for i in range(_N_PERM)]).alias("sig")
         )
     )
 
@@ -368,7 +342,7 @@ def minhash_jaccard_estimate(signatures: DataFrame, pairs: DataFrame) -> DataFra
 # SimHash
 # --------------------------------------------------------------------------
 
-def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """64-bit SimHash per document (Charikar 2002): sum token-hash bit
     vectors (+1/-1), take signs.
 
@@ -378,10 +352,10 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     Python anywhere (round-1 ran a byte-at-a-time FNV loop here — the one
     violation of the no-per-row-Python contract, and 14.8 s at sf0.1)."""
     token_hashes = F.transform(
-        F.split(normalized(text_col), " "), lambda t: F.xxhash64(t)
+        F.split(normalized("text"), " "), lambda t: F.xxhash64(t)
     )
-    hashed = _spread(df.select(id_col, text_col)).select(
-        F.col(id_col).alias("id"), token_hashes.alias("h")
+    hashed = _spread(df.select("doc_id", "text")).select(
+        F.col("doc_id").alias("id"), token_hashes.alias("h")
     )
 
     def _majority(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -484,20 +458,15 @@ def _cosine(a, b) -> F.Column:
 
 def embedding_near_dup_pairs(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
 ) -> DataFrame:
-    """Cosine >= threshold pairs via random-hyperplane LSH buckets
-    (sign sketch); candidates only meet within a bucket. Exact cosine
-    verification in-bucket. High-threshold near-dups collide with high
-    probability on all n_planes signs."""
-    rng = np.random.default_rng(seed)
-    planes = rng.normal(size=(n_planes, dim))
-    vec = F.col(vec_col).cast("array<double>")
+    """Cosine >= threshold pairs of 64-d embeddings via random-hyperplane
+    LSH buckets (an 8-plane sign sketch); candidates only meet within a
+    bucket. Exact cosine verification in-bucket. High-threshold near-dups
+    collide with high probability on all 8 signs."""
+    n_planes = 8
+    planes = np.random.default_rng(42).normal(size=(n_planes, 64))
+    vec = F.col("embedding").cast("array<double>")
     bucket_bits = [
         (
             F.aggregate(
@@ -514,7 +483,7 @@ def embedding_near_dup_pairs(
         for p in range(n_planes)
     ]
     bucketed = emb.select(
-        F.col(id_col).alias("id"),
+        F.col("vec_id").alias("id"),
         vec.alias("v"),
         sum(bucket_bits[1:], bucket_bits[0]).alias("bucket"),
     )
@@ -531,8 +500,6 @@ def embedding_near_dup_pairs(
 
 def edit_distance_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_dist: int = 16,
     block_prefix: int = 24,
 ) -> DataFrame:
@@ -567,9 +534,9 @@ def edit_distance_pairs(
     ASCII-only); on non-ASCII corpora the oracle would need a
     byte-level cast.
     """
-    norm = normalized(F.col(text_col))
+    norm = normalized(F.col("text"))
     sides = docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         norm.alias("t"),
         F.substring(norm, 1, block_prefix).alias("blk"),
         F.length(norm).alias("len"),

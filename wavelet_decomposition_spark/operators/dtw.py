@@ -173,20 +173,17 @@ def dtw_for_candidates(
     packed: DataFrame,
     candidates: DataFrame,
     radius: int,
-    wide_radius: int | None = None,
 ) -> DataFrame:
     """Score an explicit (key_a, key_b) candidate list — the scale path.
     Two broadcast/hash equi-joins attach the packed arrays, then one Arrow
     kernel scores each pair; O(|candidates| * n * radius) total work,
-    partitioned by pair. ``euclid`` is NaN for unequal-length pairs.
-    ``wide_radius`` additionally scores a wider band in the same kernel
-    pass (used by the monotonicity invariant)."""
+    partitioned by pair. ``euclid`` is NaN for unequal-length pairs."""
     a = packed.select(F.col("key").alias("key_a"), F.col("vals").alias("vals_a"))
     b = packed.select(F.col("key").alias("key_b"), F.col("vals").alias("vals_b"))
     joined = candidates.join(a, "key_a").join(b, "key_b").select(
         "key_a", "key_b", "vals_a", "vals_b"
     )
-    kernel, schema = _score_kernel(radius, wide_radius)
+    kernel, schema = _score_kernel(radius, None)
     return joined.mapInPandas(worker_kernel(kernel), schema=schema)
 
 

@@ -11,7 +11,7 @@ threshold, then a clamped sum. Here:
   tiny threshold table back onto the coefficients;
 - satisfactions fan out via a broadcast cross join of a literal dim table.
 
-Input: long coefficient table (group_col, scale_idx, beta) stacked across
+Input: long coefficient table (series_id, scale_idx, beta) stacked across
 years (the reference runs EPN on all-years-stacked betas,
 wavelet_decomposition.py:302-319). Fully SQL-expressible -> DuckDB oracle
 in __spark_entry__.py.
@@ -30,15 +30,12 @@ def epn(
     betas: DataFrame,
     satisfactions,
     n_years: int,
-    time_scales=None,
-    load_factor: float = 1.0,
-    shape: str = "square",
-    group_col: str = "series_id",
-    dpy: int = 365,
     exact: bool = True,
     approx_accuracy: int = 10_000,
 ) -> DataFrame:
-    """Returns (group, scale_idx, satisfaction, pmax, emax, n, uf, serv).
+    """Returns (series_id, scale_idx, satisfaction, pmax, emax, n, uf, serv)
+    over the reference's time scales (``TIME_SCALES_HOURS``), for a square
+    dictionary, unit load factor and 365-day years.
 
     ``exact=False`` is the 100-TB escape hatch: the discharge threshold
     comes from ``percentile_approx`` (a GK sketch with map-side partial
@@ -49,9 +46,8 @@ def epn(
     1/approx_accuracy quantile step, and every downstream aggregate
     (clamped sum, cycles, uf, serv) is still computed exactly against the
     chosen threshold. Accuracy pinned in tests/test_epn.py."""
-    time_scales = list(time_scales or TIME_SCALES_HOURS)
     scales_df = spark.createDataFrame(
-        [(i, float(ts)) for i, ts in enumerate(time_scales)],
+        [(i, float(ts)) for i, ts in enumerate(TIME_SCALES_HOURS)],
         "scale_idx int, scale_hours double",
     )
     satis_df = spark.createDataFrame(
@@ -59,13 +55,13 @@ def epn(
     )
 
     coeff = (
-        betas.filter(F.col("scale_idx") < F.lit(len(time_scales)))
-        .select(group_col, "scale_idx", F.abs("beta").alias("abs_beta"))
+        betas.filter(F.col("scale_idx") < F.lit(len(TIME_SCALES_HOURS)))
+        .select("series_id", "scale_idx", F.abs("beta").alias("abs_beta"))
     )
     if exact:
-        w = Window.partitionBy(group_col, "scale_idx").orderBy("abs_beta")
+        w = Window.partitionBy("series_id", "scale_idx").orderBy("abs_beta")
         ranked = coeff.withColumn("rank", F.row_number().over(w))
-        sizes = coeff.groupBy(group_col, "scale_idx").agg(
+        sizes = coeff.groupBy("series_id", "scale_idx").agg(
             F.count(F.lit(1)).alias("n_size")
         )
 
@@ -84,7 +80,7 @@ def epn(
         targets = (
             sizes.crossJoin(F.broadcast(satis_df))
             .select(
-                F.col(group_col).alias("_g"),
+                F.col("series_id").alias("_g"),
                 F.col("scale_idx").alias("_s"),
                 "satisfaction",
                 "n_size",
@@ -96,12 +92,12 @@ def epn(
         thresholds = targets.join(
             ranked,
             on=[
-                targets["_g"] == ranked[group_col],
+                targets["_g"] == ranked["series_id"],
                 targets["_s"] == ranked["scale_idx"],
                 targets["rank"] == ranked["rank"],
             ],
         ).select(
-            F.col("_g").alias(group_col),
+            F.col("_g").alias("series_id"),
             F.col("_s").alias("scale_idx"),
             "satisfaction",
             "n_size",
@@ -114,19 +110,19 @@ def epn(
             *[F.lit(float(s) / 100.0) for s in satisfactions]
         )
         satis_lit = F.array(*[F.lit(float(s)) for s in satisfactions])
-        sk = coeff.groupBy(group_col, "scale_idx").agg(
+        sk = coeff.groupBy("series_id", "scale_idx").agg(
             F.percentile_approx(
                 "abs_beta", pcts, F.lit(int(approx_accuracy))
             ).alias("_thrs"),
             F.count(F.lit(1)).alias("n_size"),
         )
         thresholds = sk.select(
-            group_col,
+            "series_id",
             "scale_idx",
             "n_size",
             F.posexplode("_thrs").alias("_i", "thr"),
         ).select(
-            group_col,
+            "series_id",
             "scale_idx",
             F.element_at(satis_lit, F.col("_i") + 1).alias("satisfaction"),
             "n_size",
@@ -136,34 +132,29 @@ def epn(
     # clamped sum against each threshold (thresholds table is tiny)
     clamped = (
         coeff.join(
-            F.broadcast(thresholds), on=[group_col, "scale_idx"]
+            F.broadcast(thresholds), on=["series_id", "scale_idx"]
         )
-        .groupBy(group_col, "scale_idx", "satisfaction", "thr")
+        .groupBy("series_id", "scale_idx", "satisfaction", "thr")
         .agg(F.sum(F.least(F.col("abs_beta"), F.col("thr"))).alias("clamped_sum"))
     )
 
-    factor = (2.0 / 3.141592653589793) if shape == "sine" else 1.0
     return (
         clamped.join(F.broadcast(scales_df), "scale_idx")
         .select(
-            group_col,
+            "series_id",
             "scale_idx",
             "satisfaction",
-            (F.col("thr") * F.lit(load_factor)).alias("pmax"),
-            (
-                F.col("thr") * F.lit(load_factor) * F.col("scale_hours") / 2.0
-                * F.lit(factor)
-            ).alias("emax"),
+            F.col("thr").alias("pmax"),
+            (F.col("thr") * F.col("scale_hours") / 2.0).alias("emax"),
             (F.col("clamped_sum") / F.col("thr") / F.lit(float(n_years))).alias("n"),
             (
                 100.0
                 * (F.col("clamped_sum") / F.col("thr") / F.lit(float(n_years)))
                 * F.col("scale_hours")
-                / F.lit(float(dpy * 24))
+                / F.lit(float(365 * 24))
             ).alias("uf"),
             (
-                F.col("thr") * F.lit(load_factor) * F.col("scale_hours") / 2.0
-                * F.lit(factor)
+                F.col("thr") * F.col("scale_hours") / 2.0
                 * (F.col("clamped_sum") / F.col("thr") / F.lit(float(n_years)))
             ).alias("serv"),
         )

@@ -33,9 +33,6 @@ def cohort_retention(
     events: DataFrame,
     cohort_event: str | None = "signup",
     period: str = "1 week",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Classic retention triangle: users are cohorted by the period of
     their FIRST ``cohort_event`` (or first event of any type when None);
@@ -50,18 +47,18 @@ def cohort_retention(
     gus = _gran_us(period)
     src = events
     if cohort_event is not None:
-        src = events.where(F.col(type_col) == cohort_event)
+        src = events.where(F.col("event_type") == cohort_event)
     # cohort start via integer modulo subtraction — exact for any epoch,
     # no float floor near period boundaries
-    cohorts = src.groupBy(user_col).agg(
-        F.min(_us(ts_col)).alias("_c0")
+    cohorts = src.groupBy("user_id").agg(
+        F.min(_us("ts")).alias("_c0")
     ).withColumn("_cstart", F.col("_c0") - F.col("_c0") % gus)
     sizes = cohorts.groupBy("_cstart").agg(
         F.count(F.lit(1)).alias("n_cohort")
     )
     active = (
-        events.select(user_col, _us(ts_col).alias("_t"))
-        .join(cohorts, user_col)
+        events.select("user_id", _us("ts").alias("_t"))
+        .join(cohorts, "user_id")
         .where(F.col("_t") >= F.col("_cstart"))
         .withColumn(
             # ((d - d%gus) / gus) is an exact-multiple division: IEEE
@@ -72,7 +69,7 @@ def cohort_retention(
               - (F.col("_t") - F.col("_cstart")) % gus) / gus).cast("int"),
         )
         .groupBy("_cstart", "period_k")
-        .agg(F.countDistinct(user_col).alias("n_active"))
+        .agg(F.countDistinct("user_id").alias("n_active"))
     )
     return (
         active.join(F.broadcast(sizes), "_cstart")
@@ -90,9 +87,6 @@ def funnel(
     events: DataFrame,
     steps: list[str],
     window: str = "7 days",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Ordered funnel with a conversion window: a user completes step k
     when they have a ``steps[k]`` event AT OR AFTER their step-(k-1)
@@ -112,27 +106,27 @@ def funnel(
     spark = events.sparkSession
     wus = _gran_us(window)
     base = events.select(
-        user_col, F.col(type_col).alias("_ty"), _us(ts_col).alias("_t")
+        "user_id", F.col("event_type").alias("_ty"), _us("ts").alias("_t")
     )
     cur = (
         base.where(F.col("_ty") == steps[0])
-        .groupBy(user_col)
+        .groupBy("user_id")
         .agg(F.min("_t").alias("_t1"))
         .withColumn("_tk", F.col("_t1"))
     )
-    reached = [cur.select(user_col, F.lit(1).alias("_stage"))]
+    reached = [cur.select("user_id", F.lit(1).alias("_stage"))]
     for i, step in enumerate(steps[1:], start=2):
         cur = (
             base.where(F.col("_ty") == step)
-            .join(cur.select(user_col, "_t1", "_tk"), user_col)
+            .join(cur.select("user_id", "_t1", "_tk"), "user_id")
             .where(
                 (F.col("_t") >= F.col("_tk"))
                 & (F.col("_t") <= F.col("_t1") + wus)
             )
-            .groupBy(user_col)
+            .groupBy("user_id")
             .agg(F.min("_t").alias("_tk"), F.first("_t1").alias("_t1"))
         )
-        reached.append(cur.select(user_col, F.lit(i).alias("_stage")))
+        reached.append(cur.select("user_id", F.lit(i).alias("_stage")))
     furthest = reached[0]
     for r in reached[1:]:
         furthest = furthest.unionByName(r)
@@ -140,7 +134,7 @@ def funnel(
     # then cumulative counts over the K-row result (n_users at step k =
     # users whose furthest stage >= k)
     hist = (
-        furthest.groupBy(user_col)
+        furthest.groupBy("user_id")
         .agg(F.max("_stage").alias("_stage"))
         .groupBy("_stage")
         .agg(F.count(F.lit(1)).alias("_n_at"))

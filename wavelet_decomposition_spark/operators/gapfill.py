@@ -22,37 +22,38 @@ from pyspark.sql import functions as F
 
 
 def time_grid(series: DataFrame, step: str = "1 second",
-              group_col: str = "conv_id", ts_col: str = "bucket_ts") -> DataFrame:
+              group_col: str = "conv_id") -> DataFrame:
     """One row per (group, grid timestamp) spanning each group's [min, max]."""
     bounds = series.groupBy(group_col).agg(
-        F.min(ts_col).alias("_t0"), F.max(ts_col).alias("_t1")
+        F.min("bucket_ts").alias("_t0"), F.max("bucket_ts").alias("_t1")
     )
     return bounds.select(
         group_col,
         F.explode(
             F.sequence("_t0", "_t1", F.expr(f"interval {step}"))
-        ).alias(ts_col),
+        ).alias("bucket_ts"),
     )
 
 
-def gapfill_zero(series: DataFrame, value_cols, step: str = "1 second",
-                 group_col: str = "conv_id", ts_col: str = "bucket_ts") -> DataFrame:
+def gapfill_zero(
+    series: DataFrame, value_cols, step: str = "1 second"
+) -> DataFrame:
     """Counts: missing buckets become 0. The oracle of the wavelet
     operators' fused zero fill: their windows over this output equal their
     windows over the sparse input."""
-    grid = time_grid(series, step, group_col, ts_col)
-    filled = grid.join(series, [group_col, ts_col], "left")
+    grid = time_grid(series, step)
+    filled = grid.join(series, ["conv_id", "bucket_ts"], "left")
     return filled.fillna(0, subset=list(value_cols))
 
 
 def gapfill_locf(series: DataFrame, value_cols, step: str = "1 second",
-                 group_col: str = "conv_id", ts_col: str = "bucket_ts") -> DataFrame:
+                 group_col: str = "conv_id") -> DataFrame:
     """Gauges: missing buckets carry the last observed value forward."""
-    grid = time_grid(series, step, group_col, ts_col)
-    filled = grid.join(series, [group_col, ts_col], "left")
+    grid = time_grid(series, step, group_col)
+    filled = grid.join(series, [group_col, "bucket_ts"], "left")
     w = (
         Window.partitionBy(group_col)
-        .orderBy(ts_col)
+        .orderBy("bucket_ts")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     for c in value_cols:
@@ -61,8 +62,7 @@ def gapfill_locf(series: DataFrame, value_cols, step: str = "1 second",
 
 
 def gapfill_interp(series: DataFrame, value_cols, step: str = "1 second",
-                   group_col: str = "conv_id",
-                   ts_col: str = "bucket_ts") -> DataFrame:
+                   group_col: str = "conv_id") -> DataFrame:
     """Continuous gauges: missing interior buckets are linearly
     interpolated between the surrounding observations; leading/trailing
     buckets with no observation on one side stay null (compose with
@@ -81,19 +81,19 @@ def gapfill_interp(series: DataFrame, value_cols, step: str = "1 second",
     Identical window SQL runs on any warehouse (the driver's DuckDB oracle
     uses ``IGNORE NULLS`` ``last_value``/``first_value`` the same way).
     """
-    grid = time_grid(series, step, group_col, ts_col)
-    filled = grid.join(series, [group_col, ts_col], "left")
+    grid = time_grid(series, step, group_col)
+    filled = grid.join(series, [group_col, "bucket_ts"], "left")
     wb = (
         Window.partitionBy(group_col)
-        .orderBy(ts_col)
+        .orderBy("bucket_ts")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     wf = (
         Window.partitionBy(group_col)
-        .orderBy(F.desc(ts_col))
+        .orderBy(F.desc("bucket_ts"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    t = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    t = F.unix_micros(F.col("bucket_ts").cast("timestamp"))
     for c in value_cols:
         obs_t = F.when(F.col(c).isNotNull(), t)
         pv = F.last(c, ignorenulls=True).over(wb)

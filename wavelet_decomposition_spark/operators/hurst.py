@@ -139,28 +139,19 @@ def rs_ladder(
     )
 
 
-def hurst_exponent(
-    series: DataFrame,
-    value_col: str = "v",
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
-    sizes: tuple[int, ...] = DEFAULT_SIZES,
-) -> DataFrame:
+def hurst_exponent(series: DataFrame) -> DataFrame:
     """Per-group Hurst exponent: OLS slope of log2(mean R/S) against
-    log2(n) over the dyadic ladder — ``(group, hurst, n_points)``.
-    Groups with fewer than two ladder points (series shorter than
-    2*sizes[1]) are dropped rather than reported on one point.
+    log2(n) over the dyadic ladder — ``(series_id, hurst, n_points)``.
+    Groups with fewer than two ladder points (series shorter than 32
+    points) are dropped rather than reported on one point.
 
     The slope leaves the bit-deterministic regime (libm log2), so this
     surface is pytest-verified against numpy (`tests/test_hurst.py`)
     while the driver's hash gate pins :func:`rs_ladder` underneath it.
     """
-    ladder = rs_ladder(
-        series, value_col=value_col, group_col=group_col,
-        ts_col=ts_col, sizes=sizes,
-    ).where(F.col("n_chunks") > 0)
+    ladder = rs_ladder(series).where(F.col("n_chunks") > 0)
     pt = ladder.select(
-        group_col,
+        "series_id",
         F.log2(F.col("n").cast("double")).alias("_lx"),
         F.log2(
             F.col("sum_rs_micro").cast("double")
@@ -170,7 +161,7 @@ def hurst_exponent(
     )
     lx, ly = F.col("_lx"), F.col("_ly")
     return (
-        pt.groupBy(group_col)
+        pt.groupBy("series_id")
         .agg(
             F.count(F.lit(1)).alias("n_points"),
             F.sum(lx).alias("_sx"),
@@ -180,7 +171,7 @@ def hurst_exponent(
         )
         .where(F.col("n_points") >= 2)
         .select(
-            group_col,
+            "series_id",
             (
                 (
                     F.col("n_points") * F.col("_sxy")

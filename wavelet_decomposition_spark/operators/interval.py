@@ -38,13 +38,10 @@ def interval_join(
     intervals: DataFrame,
     on: str,
     granularity: str = "1 hour",
-    ts_col: str = "ts",
-    start_col: str = "start_ts",
-    end_col: str = "end_ts",
     how: str = "inner",
 ) -> DataFrame:
     """Join each point row to every interval row (same ``on`` key) whose
-    ``[start_col, end_col]`` contains ``ts_col``.
+    ``[start_ts, end_ts]`` contains its ``ts``.
 
     ``how``: 'inner' or 'left' (left keeps unmatched points with null
     interval columns — implemented as a second anti-join pass over the
@@ -61,21 +58,21 @@ def interval_join(
     from wavelet_decomposition_spark.operators._time import us as _us
 
     gran_us = _g(granularity)
-    p_bucket = F.floor(_us(ts_col) / gran_us)
-    s_us = _us(start_col)
-    e_us = _us(end_col)
+    p_bucket = F.floor(_us("ts") / gran_us)
+    s_us = _us("start_ts")
+    e_us = _us("end_ts")
     iv = intervals.select(
         F.col(on),
-        start_col,
-        end_col,
-        *[c for c in intervals.columns if c not in (on, start_col, end_col)],
+        "start_ts",
+        "end_ts",
+        *[c for c in intervals.columns if c not in (on, "start_ts", "end_ts")],
         F.explode(
             F.sequence(F.floor(s_us / gran_us), F.floor(e_us / gran_us))
         ).alias("_bucket"),
     )
     pt = points.withColumn("_bucket", p_bucket)
-    contains = (F.col(ts_col) >= F.col(start_col)) & (
-        F.col(ts_col) <= F.col(end_col)
+    contains = (F.col("ts") >= F.col("start_ts")) & (
+        F.col("ts") <= F.col("end_ts")
     )
     matched = (
         pt.join(iv, [on, "_bucket"])

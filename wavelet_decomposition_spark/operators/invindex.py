@@ -32,19 +32,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 TOKEN_SPLIT = "[^a-z0-9]+"
+_K1, _B = 1.2, 0.75  # BM25 term-frequency saturation and length normalization
 
 
-def tokenize(
-    docs: DataFrame, doc_id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def tokenize(docs: DataFrame) -> DataFrame:
     """Lowercase + split on non-alphanumeric runs — one JVM-side
     explode, the shared tokenizer contract (identical semantics to
     DuckDB's string_split_regex on the same pattern)."""
     return (
         docs.select(
-            doc_id_col,
+            "doc_id",
             F.explode(
-                F.split(F.lower(F.col(text_col)), TOKEN_SPLIT)
+                F.split(F.lower(F.col("text")), TOKEN_SPLIT)
             ).alias("term"),
         )
         .where(F.col("term") != "")
@@ -55,10 +54,6 @@ def bm25_topk(
     docs: DataFrame,
     query_terms: list[str],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """BM25 ranked retrieval (Robertson-Sparck Jones; Lucene's
     +1-inside-the-log idf variant, so idf is always positive):
@@ -66,6 +61,8 @@ def bm25_topk(
         score(d) = sum over query terms t of
             ln(1 + (N - df_t + 0.5)/(df_t + 0.5))
             * tf * (k1+1) / (tf + k1 * (1 - b + b * dl/avgdl))
+
+    with the usual ``k1 = 1.2`` and ``b = 0.75``.
 
     Scale shape: the token stream is filtered to the query's terms
     MAP-SIDE (an O(|q|) literal isin — no join) before any aggregate,
@@ -80,15 +77,15 @@ def bm25_topk(
     """
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
-    toks = tokenize(docs, doc_id_col, text_col)
-    dl = toks.groupBy(doc_id_col).agg(F.count(F.lit(1)).alias("dl"))
+    toks = tokenize(docs)
+    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     corpus = dl.agg(
         F.count(F.lit(1)).alias("_N"),
         F.avg("dl").alias("_avgdl"),
     )
     qtf = (
         toks.where(F.col("term").isin(list(query_terms)))
-        .groupBy("term", doc_id_col)
+        .groupBy("term", "doc_id")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     df_t = qtf.groupBy("term").agg(
@@ -96,7 +93,7 @@ def bm25_topk(
     )
     scored = (
         qtf.join(F.broadcast(df_t), "term")
-        .join(dl, doc_id_col)
+        .join(dl, "doc_id")
         .crossJoin(F.broadcast(corpus))
         .withColumn(
             "_idf",
@@ -108,29 +105,24 @@ def bm25_topk(
         .withColumn(
             "_s",
             F.col("_idf")
-            * (F.col("tf") * (k1 + 1.0))
+            * (F.col("tf") * (_K1 + 1.0))
             / (
                 F.col("tf")
-                + k1
-                * (1.0 - b + b * F.col("dl") / F.col("_avgdl"))
+                + _K1
+                * (1.0 - _B + _B * F.col("dl") / F.col("_avgdl"))
             ),
         )
-        .groupBy(doc_id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("_s").alias("score"),
             F.count(F.lit(1)).alias("n_hit_terms"),
             F.min("dl").alias("dl"),
         )
     )
-    return scored.orderBy(F.desc("score"), doc_id_col).limit(k)
+    return scored.orderBy(F.desc("score"), "doc_id").limit(k)
 
 
-def boolean_and(
-    docs: DataFrame,
-    query_terms: list[str],
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def boolean_and(docs: DataFrame, query_terms: list[str]) -> DataFrame:
     """Conjunctive boolean retrieval: docs containing ALL query terms
     (the posting-list-intersection primitive under every AND query).
     Map-side isin filter to the query's terms, one hash aggregate,
@@ -142,11 +134,11 @@ def boolean_and(
         raise ValueError("query_terms must be non-empty")
     want = len(set(query_terms))
     return (
-        tokenize(docs, doc_id_col, text_col)
+        tokenize(docs)
         .where(F.col("term").isin(list(query_terms)))
-        .groupBy(doc_id_col, "term")
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("_tf"))
-        .groupBy(doc_id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_terms"),
             F.sum("_tf").alias("total_tf"),
@@ -156,12 +148,7 @@ def boolean_and(
     )
 
 
-def inverted_index(
-    docs: DataFrame,
-    block_size: int = 128,
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def inverted_index(docs: DataFrame, block_size: int = 128) -> DataFrame:
     """Build the blocked inverted index.
 
     Output: one row per (term, block_id) —
@@ -175,16 +162,16 @@ def inverted_index(
     """
     if block_size < 1:
         raise ValueError("block_size must be >= 1")
-    tf = tokenize(docs, doc_id_col, text_col).groupBy(
-        "term", doc_id_col
+    tf = tokenize(docs).groupBy(
+        "term", "doc_id"
     ).agg(F.count(F.lit(1)).alias("tf"))
-    w = Window.partitionBy("term").orderBy(doc_id_col)
+    w = Window.partitionBy("term").orderBy("doc_id")
     wt = Window.partitionBy("term")
     g = tf.select(
         "term",
-        F.col(doc_id_col).alias("_doc"),
+        F.col("doc_id").alias("_doc"),
         "tf",
-        (F.col(doc_id_col) - F.lag(doc_id_col, 1, 0).over(w)).alias(
+        (F.col("doc_id") - F.lag("doc_id", 1, 0).over(w)).alias(
             "_gap"
         ),
         F.floor((F.row_number().over(w) - 1) / block_size)

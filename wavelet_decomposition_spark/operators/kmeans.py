@@ -44,6 +44,8 @@ from pyspark.sql import functions as F
 
 from ..plans.session import worker_kernel
 
+SCALE = 1e6  # quantization: integer micro-units per input unit
+
 
 def _partials_schema(dim: int) -> str:
     return (
@@ -161,36 +163,34 @@ def kmeans_fit(
     emb: DataFrame,
     k: int = 8,
     max_iter: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
 ) -> dict:
     """Fit k-means over an INTEGER vector column (quantize floats with
     ``quantized()`` first). Returns ``{"centroids": (k, dim) float64,
     "counts": (k,) int64, "inertia_micro": [per-iteration ints],
     "n": corpus size}``. Init: the k rows with the lowest
-    ``xxhash64(id_col, seed)`` (deterministic, scan-order-free,
+    ``xxhash64(vec_id, seed)`` (deterministic, scan-order-free,
     unbiased for hash-uniform ids).
     """
     init_rows = (
         emb.select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.xxhash64(F.col(id_col), F.lit(seed)).alias("_h"),
+            F.col("vec_id"),
+            F.col("embedding"),
+            F.xxhash64(F.col("vec_id"), F.lit(seed)).alias("_h"),
         )
-        .orderBy("_h", id_col)
+        .orderBy("_h", "vec_id")
         .limit(k)
         .collect()
     )
     assert len(init_rows) >= 2, "k-means needs at least 2 rows"
     cent = np.array(
-        [r[vec_col] for r in init_rows], dtype=np.int64
+        [r["embedding"] for r in init_rows], dtype=np.int64
     ).astype(np.float64)
     inertias: list[int] = []
     counts = None
     n = 0
     for _ in range(max_iter):
-        cent, counts, inertia, n = _iterate(emb, cent, id_col, vec_col)
+        cent, counts, inertia, n = _iterate(emb, cent, "vec_id", "embedding")
         inertias.append(inertia)
     return {
         "centroids": cent,
@@ -200,35 +200,28 @@ def kmeans_fit(
     }
 
 
-def kmeans_assign(
-    emb: DataFrame,
-    centroids: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_assign(emb: DataFrame, centroids: np.ndarray) -> DataFrame:
     """Label every row with its nearest centroid:
-    ``(id_col, cell, sqdist_micro)`` — one corpus pass, no shuffle."""
-    return emb.select(id_col, vec_col).mapInPandas(
+    ``(vec_id, cell, sqdist_micro)`` — one corpus pass, no shuffle."""
+    return emb.select("vec_id", "embedding").mapInPandas(
         worker_kernel(
             _labels_kernel(
-                np.asarray(centroids, dtype=np.float64), id_col, vec_col
+                np.asarray(centroids, dtype=np.float64), "vec_id", "embedding"
             )
         ),
-        schema=f"{id_col} bigint, cell int, sqdist_micro bigint",
+        schema="vec_id bigint, cell int, sqdist_micro bigint",
     )
 
 
-def quantized(
-    emb: DataFrame, vec_col: str = "embedding", scale: float = 1e6
-) -> DataFrame:
-    """Quantize a float vector column to exact integer micro-units —
-    the determinism precondition for :func:`kmeans_fit` (unit-norm
-    embeddings lose ~1/scale relative geometry, nothing a cluster
+def quantized(emb: DataFrame) -> DataFrame:
+    """Quantize a float vector column to exact integer micro-units
+    (``SCALE``) — the determinism precondition for :func:`kmeans_fit`
+    (unit-norm embeddings lose ~1/SCALE relative geometry, nothing a cluster
     boundary can feel; what it buys is order-free exact aggregation)."""
     return emb.withColumn(
-        vec_col,
+        "embedding",
         F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(x * F.lit(scale)).cast("bigint"),
+            F.col("embedding"),
+            lambda x: F.floor(x * F.lit(SCALE)).cast("bigint"),
         ),
     )

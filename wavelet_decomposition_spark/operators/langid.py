@@ -361,11 +361,9 @@ def lang_id_col(text_col) -> Column:
     return _classify_udf(c)
 
 
-def lang_id_ngram(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def lang_id_ngram(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, lang, margin) per document — map-side only, no shuffle."""
-    pred = lang_id_col(text_col)
+    pred = lang_id_col("text")
     return df.select(
         id_col,
         pred["lang"].alias("lang"),

@@ -36,9 +36,8 @@ def write_clustered(
     path: str,
     cluster_cols: list[str],
     target_rows_per_file: int = 1_000_000,
-    mode: str = "overwrite",
 ) -> None:
-    """Write ``df`` as parquet clustered on ``cluster_cols``:
+    """Overwrite ``path`` with ``df`` as parquet clustered on ``cluster_cols``:
     range-repartitioned so each output task owns a contiguous key range,
     sorted within partitions so row groups inside a file are themselves
     contiguous, and capped at ``target_rows_per_file`` so file size is
@@ -56,7 +55,7 @@ def write_clustered(
     (
         df.repartitionByRange(n, *cluster_cols)
         .sortWithinPartitions(*cluster_cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .option("maxRecordsPerFile", target_rows_per_file)
         .parquet(path)
     )
@@ -108,61 +107,52 @@ def write_zorder(
     path: str,
     x_col: str,
     y_col: str,
-    bits: int = 16,
-    normalize: bool = True,
     target_rows_per_file: int = 1_000_000,
-    mode: str = "overwrite",
 ) -> None:
-    """Write ``df`` as parquet clustered on the Z-order curve of
-    ``(x_col, y_col)``: range-repartitioned and sorted by the morton
+    """Overwrite ``path`` with ``df`` as parquet clustered on the Z-order
+    curve of ``(x_col, y_col)``: range-repartitioned and sorted by the morton
     value (Delta's OPTIMIZE ... ZORDER mechanism), files capped like
     ``write_clustered``. The z column itself is not persisted — the
     pruning payoff is in the per-file min/max envelopes of the ORIGINAL
     columns, which the curve keeps narrow in both dimensions at once.
 
-    ``normalize=True`` (default, and almost always what you want)
-    min-max scales each dimension to the full ``2**bits`` range first:
+    Each dimension is min-max scaled to the full 16-bit range first:
     raw interleaving is only meaningful when both keys span comparable
     bit widths — a key whose domain varies in its low 10 bits loses
     every interleave decision to a 16-bit neighbor and degenerates to
     1-D clustering (an epoch-hour column is the canonical victim: its
     HIGH bits are constant). Min-max is one cheap aggregate; swap in
-    rank/quantile bucketing upstream for heavily skewed keys, then
-    write with ``normalize=False``.
+    rank/quantile bucketing upstream for heavily skewed keys.
     """
     from pyspark.sql import functions as F
 
     n = max(1, df.sparkSession.sparkContext.defaultParallelism)
-    if normalize:
-        top = (1 << bits) - 1
-        b = df.agg(
-            F.min(x_col).alias("_xmin"), F.max(x_col).alias("_xmax"),
-            F.min(y_col).alias("_ymin"), F.max(y_col).alias("_ymax"),
+    bits = 16
+    top = (1 << bits) - 1
+    b = df.agg(
+        F.min(x_col).alias("_xmin"), F.max(x_col).alias("_xmax"),
+        F.min(y_col).alias("_ymin"), F.max(y_col).alias("_ymax"),
+    )
+    scale = lambda c, lo, hi: F.floor(  # noqa: E731
+        (F.col(c) - F.col(lo)).cast("double")
+        * top
+        / F.greatest(
+            (F.col(hi) - F.col(lo)).cast("double"), F.lit(1.0)
         )
-        scale = lambda c, lo, hi: F.floor(  # noqa: E731
-            (F.col(c) - F.col(lo)).cast("double")
-            * top
-            / F.greatest(
-                (F.col(hi) - F.col(lo)).cast("double"), F.lit(1.0)
-            )
-        ).cast("bigint")
-        keyed = df.crossJoin(F.broadcast(b)).withColumn(
-            "_z",
-            zvalue(
-                scale(x_col, "_xmin", "_xmax"),
-                scale(y_col, "_ymin", "_ymax"),
-                bits,
-            ),
-        ).drop("_xmin", "_xmax", "_ymin", "_ymax")
-    else:
-        keyed = df.withColumn(
-            "_z", zvalue(F.col(x_col), F.col(y_col), bits)
-        )
+    ).cast("bigint")
+    keyed = df.crossJoin(F.broadcast(b)).withColumn(
+        "_z",
+        zvalue(
+            scale(x_col, "_xmin", "_xmax"),
+            scale(y_col, "_ymin", "_ymax"),
+            bits,
+        ),
+    ).drop("_xmin", "_xmax", "_ymin", "_ymax")
     (
         keyed.repartitionByRange(n, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .option("maxRecordsPerFile", target_rows_per_file)
         .parquet(path)
     )

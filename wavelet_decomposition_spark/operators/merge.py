@@ -37,7 +37,6 @@ def merge_upsert(
     source: DataFrame,
     keys: list[str],
     delete_col: str | None = None,
-    action_col: str = "action",
 ) -> DataFrame:
     """Merge ``source`` into ``target`` on ``keys``.
 
@@ -99,13 +98,13 @@ def merge_upsert(
         .otherwise(F.lit("keep"))
     )
     out_payload = [
-        F.when(F.col(action_col) == "keep", F.col(f"_t_{c}"))
+        F.when(F.col("action") == "keep", F.col(f"_t_{c}"))
         .otherwise(F.col(f"_s_{c}"))
         .alias(c)
         for c in payload
     ]
     return (
-        j.withColumn(action_col, action)
-        .where(F.col(action_col).isNotNull())
-        .select(*keys, *out_payload, action_col)
+        j.withColumn("action", action)
+        .where(F.col("action").isNotNull())
+        .select(*keys, *out_payload, "action")
     )

@@ -34,11 +34,12 @@ from pyspark.sql import functions as F
 from ..plans.session import worker_kernel
 
 _SCHEMA = (
-    "{g} string, idx int, start_ts timestamp, mp_dist double, nn_idx int"
+    "series_id string, idx int, start_ts timestamp, mp_dist double, nn_idx int"
 )
+_BLOCK = 2048  # distance-matrix rows per block
 
 
-def _profile_one(x: np.ndarray, m: int, block: int = 2048):
+def _profile_one(x: np.ndarray, m: int):
     """(mp_dist, nn_idx) arrays for one series. See module docstring."""
     n = x.size
     p = n - m + 1
@@ -56,8 +57,8 @@ def _profile_one(x: np.ndarray, m: int, block: int = 2048):
     mp = np.full(p, np.inf)
     nn = np.full(p, -1, dtype=np.int64)
     offs = np.arange(p)
-    for lo in range(0, p, block):
-        hi = min(lo + block, p)
+    for lo in range(0, p, _BLOCK):
+        hi = min(lo + _BLOCK, p)
         # squared z-distance; for flat rows Z=0 gives 2m vs anything,
         # patched to 0 for flat-vs-flat below
         D2 = 2.0 * (m - Z[lo:hi] @ Z.T)
@@ -72,45 +73,39 @@ def _profile_one(x: np.ndarray, m: int, block: int = 2048):
     return mp, nn
 
 
-def matrix_profile(
-    series: DataFrame,
-    value_col: str = "v",
-    m: int = 24,
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
-) -> DataFrame:
+def matrix_profile(series: DataFrame, m: int = 24) -> DataFrame:
     """Full matrix profile: one output row per subsequence start
     (``idx`` = 0-based position in the ts-sorted series), carrying the
     nearest-neighbor z-distance and that neighbor's index."""
 
     def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        x = pdf[value_col].to_numpy(dtype=np.float64)
+        pdf = pdf.sort_values("bucket_ts")
+        x = pdf["v"].to_numpy(dtype=np.float64)
         out = _profile_one(x, m)
         if out is None:
             return pd.DataFrame(
-                columns=[group_col, "idx", "start_ts", "mp_dist", "nn_idx"]
+                columns=["series_id", "idx", "start_ts", "mp_dist", "nn_idx"]
             )
         mp, nn = out
         p = mp.size
         return pd.DataFrame(
             {
-                group_col: pdf[group_col].iloc[0],
+                "series_id": pdf["series_id"].iloc[0],
                 "idx": np.arange(p, dtype=np.int32),
-                "start_ts": pdf[ts_col].iloc[:p].to_numpy(),
+                "start_ts": pdf["bucket_ts"].iloc[:p].to_numpy(),
                 "mp_dist": mp,
                 "nn_idx": nn.astype(np.int32),
             }
         )
 
     return (
-        series.select(group_col, ts_col, value_col)
-        .groupBy(group_col)
-        .applyInPandas(worker_kernel(_one), schema=_SCHEMA.format(g=group_col))
+        series.select("series_id", "bucket_ts", "v")
+        .groupBy("series_id")
+        .applyInPandas(worker_kernel(_one), schema=_SCHEMA)
     )
 
 
-def top_motif_discord(profile: DataFrame, group_col: str = "series_id") -> DataFrame:
+def top_motif_discord(profile: DataFrame) -> DataFrame:
     """Per group: the top motif (min mp_dist) and top discord (max
     mp_dist) rows, tagged with ``kind``. Ties break to the lowest idx
     (struct min/max — deterministic under any partitioning)."""
@@ -122,15 +117,15 @@ def top_motif_discord(profile: DataFrame, group_col: str = "series_id") -> DataF
                  "start_ts")
     ).alias("s")
     m = (
-        profile.groupBy(group_col)
+        profile.groupBy("series_id")
         .agg(motif)
-        .select(group_col, F.lit("motif").alias("kind"),
+        .select("series_id", F.lit("motif").alias("kind"),
                 "s.idx", "s.nn_idx", "s.mp_dist", "s.start_ts")
     )
     d = (
-        profile.groupBy(group_col)
+        profile.groupBy("series_id")
         .agg(discord)
-        .select(group_col, F.lit("discord").alias("kind"),
+        .select("series_id", F.lit("discord").alias("kind"),
                 (-F.col("s.neg_idx")).cast("int").alias("idx"),
                 "s.nn_idx", "s.mp_dist", "s.start_ts")
     )

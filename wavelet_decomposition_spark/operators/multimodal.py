@@ -47,7 +47,7 @@ def synthetic_assets(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
     return spark.createDataFrame(rows, schema=ASSET_SCHEMA)
 
 
-def _fake_features(payload: pd.Series, dim: int) -> np.ndarray:
+def _fake_features(payload: pd.Series) -> np.ndarray:
     """Deterministic feature vectors derived from payload bytes (FNV-1 over
     the first 64 bytes, expanded via splitmix) — vectorized across the whole
     Arrow batch: the blobs are packed into one padded ``(n, 64)`` uint8
@@ -67,7 +67,7 @@ def _fake_features(payload: pd.Series, dim: int) -> np.ndarray:
     for j in range(int(lens.max(initial=0))):
         step = (h ^ mat[:, j].astype(np.uint64)) * prime
         h = np.where(j < lens, step, h)
-    x = h[:, None] + np.arange(dim, dtype=np.uint64)[None, :]
+    x = h[:, None] + np.arange(FEATURE_DIM, dtype=np.uint64)[None, :]
     x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
     return ((x >> np.uint64(11)).astype(np.float64) / float(1 << 53)).astype(
@@ -75,9 +75,7 @@ def _fake_features(payload: pd.Series, dim: int) -> np.ndarray:
     )
 
 
-def extract_features(
-    assets: DataFrame, dim: int = FEATURE_DIM, fake: bool = False
-) -> DataFrame:
+def extract_features(assets: DataFrame, fake: bool = False) -> DataFrame:
     """Decode + feature-extract: (asset_id, kind, feature array<float>).
 
     Partitioned by nothing in particular — mapInPandas over whatever the scan
@@ -92,7 +90,7 @@ def extract_features(
                     "(none in this environment); pass fake=True for "
                     "deterministic plumbing-test features"
                 )
-            feats = _fake_features(pdf["payload"], dim)
+            feats = _fake_features(pdf["payload"])
             yield pd.DataFrame(
                 {
                     "asset_id": pdf["asset_id"],

@@ -36,8 +36,6 @@ from pyspark.sql import functions as F
 
 def pagerank(
     edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
     damping: float = 0.85,
     max_iter: int = 30,
     tol: float = 1e-8,
@@ -52,8 +50,8 @@ def pagerank(
     """
     e0 = (
         edges.select(
-            F.col(src_col).cast("bigint").alias("src"),
-            F.col(dst_col).cast("bigint").alias("dst"),
+            F.col("src").cast("bigint").alias("src"),
+            F.col("dst").cast("bigint").alias("dst"),
         )
         # a NULL endpoint is not a node: the contribution join would
         # silently drop the edge while the node set kept a NULL row

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.session import worker_kernel
+from .kmeans import SCALE
 
 
 def _stats_kernel(dim: int, vec_col: str):
@@ -77,15 +78,10 @@ def _stats_kernel(dim: int, vec_col: str):
     return gen
 
 
-def pca_fit(
-    emb: DataFrame,
-    n_components: int = 16,
-    vec_col: str = "embedding",
-    scale: float = 1e6,
-) -> dict:
+def pca_fit(emb: DataFrame, n_components: int = 16) -> dict:
     """Fit PCA over an INTEGER vector column (quantize floats with
-    ``kmeans.quantized()`` first; ``scale`` is that quantization scale,
-    used only to report results back in input units). Returns
+    ``kmeans.quantized()`` first; its ``SCALE`` is used only to report
+    results back in input units). Returns
     ``{"mean": (d,), "components": (c, d) rows orthonormal,
     "eigenvalues": (d,) descending — ALL d, in input units,
     "n": corpus rows}``.
@@ -96,12 +92,12 @@ def pca_fit(
     Exact integer statistics make the fit bit-reproducible under any
     partitioning — see module docstring.
     """
-    first = emb.select(vec_col).first()
+    first = emb.select("embedding").first()
     if first is None:
         raise ValueError("pca_fit on an empty DataFrame")
     dim = len(first[0])
-    partials = emb.select(vec_col).mapInPandas(
-        worker_kernel(_stats_kernel(dim, vec_col)),
+    partials = emb.select("embedding").mapInPandas(
+        worker_kernel(_stats_kernel(dim, "embedding")),
         schema="n long, s array<bigint>, g array<bigint>",
     )
     # flatten (n | s | g) into one posexplode so ONE aggregate reduces
@@ -139,9 +135,9 @@ def pca_fit(
         if comps[r, j] < 0:
             comps[r] = -comps[r]
     return {
-        "mean": mean / scale,
+        "mean": mean / SCALE,
         "components": comps[:n_components],
-        "eigenvalues": evals / (scale * scale),
+        "eigenvalues": evals / (SCALE * SCALE),
         "n": n,
     }
 
@@ -150,11 +146,9 @@ def pca_project(
     emb: DataFrame,
     mean: np.ndarray,
     components: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Project every FLOAT vector onto the fitted components:
-    ``(id_col, scores array<double>, resid_sq double)`` where
+    ``(vec_id, scores array<double>, resid_sq double)`` where
     ``resid_sq = ||x - mean||^2 - ||scores||^2`` (the exact residual
     for orthonormal rows). One Arrow pass, one (b x d)(d x c) GEMM per
     batch, no shuffle."""
@@ -165,20 +159,20 @@ def pca_project(
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64) - mean
+            X = np.array(pdf["embedding"].tolist(), dtype=np.float64) - mean
             S = X @ C.T
             resid = np.maximum(
                 (X * X).sum(axis=1) - (S * S).sum(axis=1), 0.0
             )
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].values,
+                    "vec_id": pdf["vec_id"].values,
                     "scores": list(S),
                     "resid_sq": resid,
                 }
             )
 
-    return emb.select(id_col, vec_col).mapInPandas(
+    return emb.select("vec_id", "embedding").mapInPandas(
         worker_kernel(gen),
-        schema=f"{id_col} bigint, scores array<double>, resid_sq double",
+        schema="vec_id bigint, scores array<double>, resid_sq double",
     )

@@ -59,10 +59,7 @@ def train_pq_codebooks(
     corpus: DataFrame,
     m: int = 8,
     k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     train_sample: int = 2048,
-    n_iter: int = 10,
     seed: int = 42,
 ) -> np.ndarray:
     """Per-subspace Lloyd codebooks, shape ``(m, k_eff, dim//m)`` float64.
@@ -75,13 +72,13 @@ def train_pq_codebooks(
     independent dsub-dim fits instead of one spherical fit.
     """
     pdf = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)), F.col(id_col))
+        corpus.select("vec_id", "embedding")
+        .orderBy(F.xxhash64(F.col("vec_id"), F.lit(seed)), F.col("vec_id"))
         .limit(train_sample)
-        .select(vec_col)
+        .select("embedding")
         .toPandas()
     )
-    X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
     n, dim = X.shape
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
@@ -91,7 +88,7 @@ def train_pq_codebooks(
     for j in range(m):
         S = X[:, j * dsub:(j + 1) * dsub]
         C = S[:k].copy()  # sample is hash-ordered: first k = seeded init
-        for _ in range(n_iter):
+        for _ in range(10):  # Lloyd iterations
             d = (
                 (S * S).sum(axis=1)[:, None]
                 - 2.0 * (S @ C.T)
@@ -141,19 +138,14 @@ def _encode_kernel(books: np.ndarray, id_col: str, vec_col: str):
     return gen
 
 
-def pq_encode(
-    corpus: DataFrame,
-    books: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Compress every vector to its PQ codes: ``(id_col, codes
+def pq_encode(corpus: DataFrame, books: np.ndarray) -> DataFrame:
+    """Compress every vector to its PQ codes: ``(vec_id, codes
     array<int>, qerr_micro bigint)`` — one corpus pass, no shuffle.
     ``qerr_micro`` is the exact (floor-micro) squared reconstruction
     error, carried so a decode pass can verify the encode."""
-    return corpus.select(id_col, vec_col).mapInPandas(
-        worker_kernel(_encode_kernel(books, id_col, vec_col)),
-        schema=f"{id_col} bigint, codes array<int>, qerr_micro bigint",
+    return corpus.select("vec_id", "embedding").mapInPandas(
+        worker_kernel(_encode_kernel(books, "vec_id", "embedding")),
+        schema="vec_id bigint, codes array<int>, qerr_micro bigint",
     )
 
 
@@ -161,23 +153,21 @@ def pq_decode_errors(
     corpus: DataFrame,
     codes: DataFrame,
     books: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Dual-path verification: join codes back to the raw vectors,
     DECODE (gather codewords, concatenate) and recompute the squared
-    reconstruction error from scratch: ``(id_col, qerr_micro,
+    reconstruction error from scratch: ``(vec_id, qerr_micro,
     qerr_decode_micro)``. A code/codebook mixup, a subspace offset bug,
     or a wrong argmin cannot keep the two columns equal. One broadcast-
     able equi-join + one Arrow pass."""
     m, k, dsub = books.shape
-    joined = corpus.select(id_col, vec_col).join(codes, id_col)
+    joined = corpus.select("vec_id", "embedding").join(codes, "vec_id")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             C = np.array(pdf["codes"].tolist(), dtype=np.int64)
             R = np.concatenate(
                 [books[j][C[:, j]] for j in range(m)], axis=1
@@ -185,7 +175,7 @@ def pq_decode_errors(
             err = ((X - R) ** 2).sum(axis=1)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].values,
+                    "vec_id": pdf["vec_id"].values,
                     "qerr_micro": pdf["qerr_micro"].values,
                     "qerr_decode_micro": np.floor(err * 1e6).astype(
                         np.int64
@@ -196,7 +186,7 @@ def pq_decode_errors(
     return joined.mapInPandas(
         worker_kernel(gen),
         schema=(
-            f"{id_col} bigint, qerr_micro bigint, qerr_decode_micro bigint"
+            "vec_id bigint, qerr_micro bigint, qerr_decode_micro bigint"
         ),
     )
 
@@ -208,9 +198,6 @@ def pq_topk(
     k: int = 10,
     shortlist: int | None = None,
     corpus: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """ADC top-k per query over the compressed corpus:
     ``(query_id, vec_id, adist, rank)`` by ascending approximate squared
@@ -226,9 +213,9 @@ def pq_topk(
     """
     shortlist = max(k, shortlist or 4 * k)
     m, nk, dsub = books.shape
-    qrows = queries.select(query_id_col, vec_col).collect()  # bounded side
-    qids = np.array([r[query_id_col] for r in qrows], dtype=np.int64)
-    Q = np.array([r[vec_col] for r in qrows], dtype=np.float64)
+    qrows = queries.select("query_id", "embedding").collect()  # bounded side
+    qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
+    Q = np.array([r["embedding"] for r in qrows], dtype=np.float64)
     # m x k LUT per query: ||q_j - c||^2 per codeword
     luts = np.empty((len(Q), m, nk), dtype=np.float64)
     for j in range(m):
@@ -244,7 +231,7 @@ def pq_topk(
             if not len(pdf):
                 continue
             C = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
             # scores[q, r] = sum_j luts[q, j, C[r, j]] — m row-gathers
             scores = np.zeros((len(Q), len(C)), dtype=np.float64)
             for j in range(m):
@@ -254,7 +241,7 @@ def pq_topk(
             yield pd.DataFrame(
                 {
                     "query_id": np.repeat(qids, top),
-                    id_col: ids[part.ravel()],
+                    "vec_id": ids[part.ravel()],
                     "adist": np.take_along_axis(
                         scores, part, axis=1
                     ).ravel(),
@@ -263,10 +250,10 @@ def pq_topk(
 
     cand = codes.mapInPandas(
         worker_kernel(gen),
-        schema=f"query_id bigint, {id_col} bigint, adist double",
+        schema="query_id bigint, vec_id bigint, adist double",
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.asc("adist"), F.asc(id_col)
+        F.asc("adist"), F.asc("vec_id")
     )
     if corpus is None:
         return (
@@ -277,22 +264,22 @@ def pq_topk(
     short = (
         cand.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= shortlist)
-        .select("query_id", id_col)
+        .select("query_id", "vec_id")
     )
     qdf = queries.select(
-        F.col(query_id_col).cast("bigint").alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
+        F.col("query_id").cast("bigint").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("_qv"),
     )
     exact = (
         corpus.select(
-            F.col(id_col).cast("bigint").alias(id_col),
-            F.col(vec_col).cast("array<double>").alias("_cv"),
+            F.col("vec_id").cast("bigint").alias("vec_id"),
+            F.col("embedding").cast("array<double>").alias("_cv"),
         )
-        .join(F.broadcast(short), id_col)
+        .join(F.broadcast(short), "vec_id")
         .join(F.broadcast(qdf), "query_id")
         .select(
             "query_id",
-            id_col,
+            "vec_id",
             F.aggregate(
                 F.zip_with(
                     F.col("_qv"), F.col("_cv"), lambda a, b: (a - b) * (a - b)
@@ -312,21 +299,18 @@ def l2_brute_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Exact L2 top-k baseline (the recall denominator for PQ):
     ``(query_id, vec_id, dist, rank)`` — broadcast queries, one corpus
     scan, JVM-side arithmetic (the ``brute_force_topk`` shape with the
     squared-distance metric)."""
     c = corpus.select(
-        F.col(id_col).alias(id_col),
-        F.col(vec_col).cast("array<double>").alias("_cv"),
+        F.col("vec_id"),
+        F.col("embedding").cast("array<double>").alias("_cv"),
     )
     q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
+        F.col("query_id"),
+        F.col("embedding").cast("array<double>").alias("_qv"),
     )
     dist = F.aggregate(
         F.zip_with(
@@ -335,10 +319,10 @@ def l2_brute_topk(
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("vec_id"))
     return (
         c.crossJoin(F.broadcast(q))
-        .select("query_id", id_col, dist.alias("dist"))
+        .select("query_id", "vec_id", dist.alias("dist"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )

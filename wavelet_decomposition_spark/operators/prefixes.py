@@ -81,12 +81,11 @@ def prefix_fingerprints(
 def shared_prefix_groups(
     fingerprints: DataFrame,
     group_col: str,
-    min_size: int = 2,
     with_members: bool = False,
 ) -> DataFrame:
     """Collapse fingerprints into shared-prefix groups:
     ``(depth, prefix_hash, n_members[, members])`` keeping groups with at
-    least ``min_size`` members. ``with_members`` adds the sorted member
+    least 2 members. ``with_members`` adds the sorted member
     list — bounded by the fork-family size; leave it off when a single
     prefix can be shared by a non-bounded number of sequences (the
     count-only form is a pure hash aggregate)."""
@@ -96,5 +95,5 @@ def shared_prefix_groups(
     return (
         fingerprints.groupBy("depth", "prefix_hash")
         .agg(*aggs)
-        .filter(F.col("n_members") >= min_size)
+        .filter(F.col("n_members") >= 2)
     )

@@ -24,7 +24,8 @@ _TRUNC = {"raw": "second", "1m": "minute", "1h": "hour", "1d": "day"}
 
 
 def rollup_once(finer: DataFrame, tier: str) -> DataFrame:
-    """Aggregate a finer tier into ``tier`` ('1m' | '1h' | '1d')."""
+    """Aggregate a finer tier into ``tier`` ('1m' | '1h' | '1d'). Applied
+    to raw directly, it is the oracle the cascade is checked against."""
     unit = _TRUNC[tier]
     aggs = [F.sum(c).alias(c) for c in ACTIVITY_COUNT_COLS]
     return (
@@ -45,25 +46,19 @@ def build_tiers(raw: DataFrame) -> dict[str, DataFrame]:
     return tiers
 
 
-def rollup_direct(raw: DataFrame, tier: str) -> DataFrame:
-    """Oracle path: aggregate ``tier`` straight from raw (used by the
-    tier-vs-raw equivalence tests; exact for counts/sums)."""
-    return rollup_once(raw, tier)
-
-
 def with_day(df: DataFrame) -> DataFrame:
     """Partitioning column for retention writes: calendar day."""
     return df.withColumn("day", F.to_date("bucket_ts"))
 
 
-def write_tier(df: DataFrame, base_path: str, tier: str, mode: str = "overwrite") -> None:
-    """Persist one tier partitioned by day (partition pruning for both the
-    next tier's refresh and retention deletes — dropping a day = dropping a
-    partition directory)."""
+def write_tier(df: DataFrame, base_path: str, tier: str) -> None:
+    """Overwrite one tier, partitioned by day (partition pruning for both
+    the next tier's refresh and retention deletes — dropping a day =
+    dropping a partition directory)."""
     (
         with_day(df)
         .repartition("day")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("day")
         .parquet(f"{base_path}/tier={tier}")
     )

@@ -36,7 +36,6 @@ def choose_tier(
     max_points: int,
     retention_days: dict[str, int] | None = None,
     now: datetime | None = None,
-    tiers: tuple[str, ...] = ("raw", "1m", "1h", "1d"),
 ) -> tuple[str, int]:
     """(tier, worst-case points per series) for a range + point budget.
 
@@ -54,7 +53,7 @@ def choose_tier(
     if max_points < 1:
         raise ValueError("max_points must be >= 1")
     span = (end_ts - start_ts).total_seconds()
-    ordered = sorted(tiers, key=lambda t: TIER_STEP[t])
+    ordered = sorted(TIER_STEP, key=TIER_STEP.get)
 
     def alive(t: str) -> bool:
         if not retention_days or t not in retention_days:

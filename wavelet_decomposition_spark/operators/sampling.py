@@ -57,14 +57,13 @@ def hash_bucket(
 def hash_sample(
     df: DataFrame,
     rate: float,
-    key_col: str = "doc_id",
     seed: int = 0,
     method: str = "xxhash64",
 ) -> DataFrame:
-    """Deterministic Bernoulli(rate) sample keyed on ``key_col``."""
+    """Deterministic Bernoulli(rate) sample keyed on ``doc_id``."""
     if not 0.0 <= rate <= 1.0:
         raise ValueError(f"rate must be in [0, 1], got {rate}")
-    return df.where(hash_bucket(key_col, seed, method) < F.lit(rate))
+    return df.where(hash_bucket("doc_id", seed, method) < F.lit(rate))
 
 
 def weighted_sample(
@@ -73,7 +72,6 @@ def weighted_sample(
     weight_col: str,
     key_col: str = "doc_id",
     seed: int = 0,
-    method: str = "xxhash64",
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement
     (Efraimidis-Spirakis A-ES): each row draws u = hash(key, seed) in
@@ -94,7 +92,7 @@ def weighted_sample(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    u = hash_bucket(key_col, seed, method)
+    u = hash_bucket(key_col, seed)
     es = F.log(F.greatest(u, F.lit(2.0**-53))) / F.col(weight_col)
     return (
         df.where(
@@ -113,7 +111,6 @@ def assign_splits(
     key_col: str = "doc_id",
     seed: int = 0,
     method: str = "xxhash64",
-    out_col: str = "split",
 ) -> DataFrame:
     """Disjoint, exhaustive split labels (e.g. train/val/test 0.8/0.1/0.1)
     by hash-bucket thresholds. Weights must sum to 1 (±1e-9); every row
@@ -132,14 +129,12 @@ def assign_splits(
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
     last = items[-1][0]
     expr = F.lit(last) if expr is None else expr.otherwise(last)
-    return df.withColumn(out_col, expr)
+    return df.withColumn("split", expr)
 
 
 def domain_mix(
     docs: DataFrame,
     budget_tokens: int,
-    source_col: str = "source",
-    text_col: str = "text",
     weights: dict[str, float] | None = None,
 ) -> DataFrame:
     """Per-source sampling rates that hit a token budget under target mix
@@ -151,9 +146,9 @@ def domain_mix(
     Undersupplied sources (rate capped at 1) deliver fewer tokens than
     their target share — ``expected_tokens`` makes the shortfall explicit
     rather than silently renormalizing."""
-    per = docs.groupBy(source_col).agg(
+    per = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(token_count(text_col)).alias("n_tokens"),
+        F.sum(token_count("text")).alias("n_tokens"),
     )
     if weights is None:
         w = 1.0 / F.count(F.lit(1)).over(Window.partitionBy())
@@ -164,12 +159,12 @@ def domain_mix(
         mapping = F.create_map(
             *[F.lit(x) for kv in weights.items() for x in kv]
         )
-        w = mapping[F.col(source_col)]
+        w = mapping[F.col("source")]
     rate = F.least(
         F.lit(1.0), F.lit(float(budget_tokens)) * w / F.col("n_tokens")
     )
     return per.select(
-        source_col,
+        "source",
         "n_docs",
         "n_tokens",
         F.round(w, 6).alias("target_weight"),
@@ -182,8 +177,6 @@ def pack_sequences(
     df: DataFrame,
     budget: int,
     token_col: str = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_parts: int = 32,
 ) -> DataFrame:
     """Greedy sequence packing — assign each document to a fixed-token-
@@ -212,9 +205,9 @@ def pack_sequences(
     toks = (
         F.col(token_col)
         if token_col
-        else token_count(F.col(text_col))
+        else token_count(F.col("text"))
     ).cast("int")
-    meta = df.select(F.col(id_col).alias("_id"), toks.alias("n_tokens"))
+    meta = df.select(F.col("doc_id").alias("_id"), toks.alias("n_tokens"))
 
     def pack(batches):
         import heapq
@@ -265,5 +258,5 @@ def pack_sequences(
         )
     )
     return packed.select(
-        F.col("_id").alias(id_col), "n_tokens", "bin_id"
+        F.col("_id").alias("doc_id"), "n_tokens", "bin_id"
     )

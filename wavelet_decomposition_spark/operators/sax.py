@@ -74,14 +74,12 @@ def paa(
     value_col: str,
     window_len: int,
     n_segments: int,
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
 ) -> DataFrame:
     """Piecewise Aggregate Approximation over tumbling windows.
 
     ``value_col`` must be an exact-integer-unit column (BIGINT), and
     the input must have ONE row per (group, ts) — positions come from a
-    rank over ``ts_col``, so duplicate timestamps would make window
+    rank over ``bucket_ts``, so duplicate timestamps would make window
     membership partitioning-order-dependent. Compose with the rollup /
     gapfill operators, which guarantee exactly that grid. Each complete
     ``window_len``-row window is cut into ``n_segments`` equal
@@ -97,37 +95,37 @@ def paa(
     seg_len = window_len // n_segments
     pos = (
         F.row_number().over(
-            Window.partitionBy(group_col).orderBy(ts_col)
+            Window.partitionBy("series_id").orderBy("bucket_ts")
         )
         - 1
     )
     segs = (
         series.select(
-            group_col,
-            F.col(ts_col),
+            "series_id",
+            F.col("bucket_ts"),
             F.col(value_col).alias("_v"),
             F.floor(pos / window_len).cast("int").alias("window_id"),
             F.floor((pos % window_len) / seg_len)
             .cast("int")
             .alias("seg_id"),
         )
-        .groupBy(group_col, "window_id", "seg_id")
+        .groupBy("series_id", "window_id", "seg_id")
         .agg(
             F.sum("_v").alias("_s"),
             F.count(F.lit(1)).alias("_n"),
-            F.min(ts_col).alias("_t0"),
+            F.min("bucket_ts").alias("_t0"),
         )
     )
-    w = Window.partitionBy(group_col, "window_id")
+    w = Window.partitionBy("series_id", "window_id")
     return (
         segs.withColumn("n_pts", F.sum("_n").over(w))
         .where(F.col("n_pts") == window_len)
         .select(
-            group_col,
+            "series_id",
             "window_id",
             "seg_id",
             F.min("_t0")
-            .over(Window.partitionBy(group_col, "window_id"))
+            .over(Window.partitionBy("series_id", "window_id"))
             .alias("window_start"),
             (F.col("_s") / F.col("_n")).alias("seg_mean"),
             "n_pts",
@@ -142,8 +140,6 @@ def sax_rare_words(
     window_len: int = 64,
     n_segments: int = 8,
     alphabet: int = 5,
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
 ) -> DataFrame:
     """HOT-SAX-style anomaly candidates: the ``k`` windows per series
     whose SAX word is rarest WITHIN that series (a window shaped unlike
@@ -157,23 +153,20 @@ def sax_rare_words(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    words = sax_words(
-        series, value_col, window_len, n_segments, alphabet,
-        group_col=group_col, ts_col=ts_col,
-    )
-    freq = words.groupBy(group_col, "word").agg(
+    words = sax_words(series, value_col, window_len, n_segments, alphabet)
+    freq = words.groupBy("series_id", "word").agg(
         F.count(F.lit(1)).alias("word_freq")
     )
-    ranked = words.join(F.broadcast(freq), [group_col, "word"]).withColumn(
+    ranked = words.join(F.broadcast(freq), ["series_id", "word"]).withColumn(
         "_rk",
         F.row_number().over(
-            Window.partitionBy(group_col).orderBy(
+            Window.partitionBy("series_id").orderBy(
                 "word_freq", "window_id"
             )
         ),
     )
     return ranked.where(F.col("_rk") <= k).select(
-        group_col, "window_id", "window_start", "word", "word_freq"
+        "series_id", "window_id", "window_start", "word", "word_freq"
     )
 
 
@@ -183,8 +176,6 @@ def sax_words(
     window_len: int = 64,
     n_segments: int = 8,
     alphabet: int = 5,
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
 ) -> DataFrame:
     """SAX: z-normalize PAA segment means per series and discretize.
 
@@ -199,15 +190,14 @@ def sax_words(
     """
     if alphabet not in BREAKPOINTS:
         raise ValueError(f"alphabet must be one of {sorted(BREAKPOINTS)}")
-    stats = series.groupBy(group_col).agg(
+    stats = series.groupBy("series_id").agg(
         F.sum(value_col).alias("_gs"),
         F.sum(F.col(value_col) * F.col(value_col)).alias("_gss"),
         F.count(F.lit(1)).alias("_gn"),
     )
-    p = paa(
-        series, value_col, window_len, n_segments,
-        group_col=group_col, ts_col=ts_col,
-    ).join(F.broadcast(stats), group_col)
+    p = paa(series, value_col, window_len, n_segments).join(
+        F.broadcast(stats), "series_id"
+    )
     mu = F.col("_gs") / F.col("_gn")
     var = F.greatest(
         F.col("_gss") / F.col("_gn") - mu * mu, F.lit(0.0)
@@ -223,7 +213,7 @@ def sax_words(
     sym = sym.otherwise(F.lit(_ALPHABET[len(cuts)]))
     return (
         p.withColumn("_sym", sym)
-        .groupBy(group_col, "window_id")
+        .groupBy("series_id", "window_id")
         .agg(
             F.min("window_start").alias("window_start"),
             F.array_join(

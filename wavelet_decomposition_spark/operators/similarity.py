@@ -6,7 +6,7 @@
   corpus self-join. SQL-expressible (DuckDB list_dot_product oracle).
 - ``lsh_topk`` — a scale path: random-hyperplane sign buckets built once
   over the corpus (data-independent coarse index); queries probe only their
-  own bucket (plus optional multi-probe hamming-1 neighbors), so per-query
+  own bucket plus its hamming-1 neighbors (multi-probe), so per-query
   work is corpus/2^planes on average. Recall<1 by construction; the test
   measures recall against brute force.
 - ``ivf_topk`` — the data-adaptive scale path: a spherical k-means coarse
@@ -17,8 +17,6 @@
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -41,27 +39,23 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    metric: str = "cosine",
 ) -> DataFrame:
-    """(query_id, vec_id, score, rank) — top-k per query by cosine (or dot).
+    """(query_id, vec_id, score, rank) — top-k per query by cosine.
 
     ``queries``: (query_id, embedding). The query side is broadcast — the
     corpus is scanned once and never shuffled until the per-query top-k
     (which AQE handles as a tiny aggregation)."""
     c = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("cv")
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("cv")
     )
     q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
+        F.col("query_id"),
+        F.col("embedding").cast("array<double>").alias("qv"),
     )
     joined = c.crossJoin(F.broadcast(q))
-    score = _dot(F.col("cv"), F.col("qv"))
-    if metric == "cosine":
-        score = score / (_norm(F.col("cv")) * _norm(F.col("qv")))
+    score = _dot(F.col("cv"), F.col("qv")) / (
+        _norm(F.col("cv")) * _norm(F.col("qv"))
+    )
     scored = joined.select("query_id", "vec_id", score.alias("score"))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
@@ -70,16 +64,10 @@ def brute_force_topk(
     )
 
 
-def rrf_fuse(
-    rank_a: DataFrame,
-    rank_b: DataFrame,
-    k: int = 10,
-    c: int = 60,
-    id_col: str = "vec_id",
-) -> DataFrame:
+def rrf_fuse(rank_a: DataFrame, rank_b: DataFrame, k: int = 10) -> DataFrame:
     """Reciprocal Rank Fusion (Cormack et al. 2009) of two rankings —
     the hybrid-search combiner behind every embedding+lexical RAG
-    retriever: rrf(d) = sum over rankings of 1/(c + rank_d), absent
+    retriever: rrf(d) = sum over rankings of 1/(60 + rank_d), absent
     docs contribute 0. Inputs are (id, rank) frames; output is the
     fused top-k as (id, rank_a, rank_b, rrf), ordered and tie-broken
     on (rrf desc, id).
@@ -94,20 +82,20 @@ def rrf_fuse(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    a = rank_a.select(F.col(id_col), F.col("rank").alias("rank_a"))
-    b = rank_b.select(F.col(id_col), F.col("rank").alias("rank_b"))
+    a = rank_a.select(F.col("vec_id"), F.col("rank").alias("rank_a"))
+    b = rank_b.select(F.col("vec_id"), F.col("rank").alias("rank_b"))
     contrib = lambda r: F.coalesce(  # noqa: E731
-        1.0 / (F.lit(float(c)) + F.col(r)), F.lit(0.0)
+        1.0 / (F.lit(60.0) + F.col(r)), F.lit(0.0)
     )
     return (
-        a.join(b, id_col, "full_outer")
+        a.join(b, "vec_id", "full_outer")
         .select(
-            id_col,
+            "vec_id",
             "rank_a",
             "rank_b",
             (contrib("rank_a") + contrib("rank_b")).alias("rrf"),
         )
-        .orderBy(F.desc("rrf"), id_col)
+        .orderBy(F.desc("rrf"), "vec_id")
         .limit(k)
     )
 
@@ -127,37 +115,28 @@ def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     n_planes: int = 6,
-    dim: int = 64,
-    seed: int = 42,
-    multiprobe: bool = True,
 ) -> DataFrame:
-    """Bucketed ANN: corpus bucketed once by hyperplane signs; each query
-    scores only its bucket (and hamming-1 buckets when ``multiprobe``)."""
-    rng = np.random.default_rng(seed)
-    planes = rng.normal(size=(n_planes, dim))
+    """Bucketed ANN over 64-d embeddings: corpus bucketed once by
+    hyperplane signs; each query scores only its bucket and the hamming-1
+    buckets around it."""
+    planes = np.random.default_rng(42).normal(size=(n_planes, 64))
     c = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+        F.col("vec_id"),
+        F.col("embedding").cast("array<double>").alias("cv"),
     ).withColumn("bucket", _bucket_expr("cv", planes))
     q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
+        F.col("query_id"),
+        F.col("embedding").cast("array<double>").alias("qv"),
     ).withColumn("qbucket", _bucket_expr("qv", planes))
-    if multiprobe:
-        probes = F.array(
-            F.col("qbucket"),
-            *[
-                F.col("qbucket").bitwiseXOR(F.lit(1 << p))
-                for p in range(n_planes)
-            ],
-        )
-        q = q.select("query_id", "qv", F.explode(probes).alias("bucket"))
-    else:
-        q = q.select("query_id", "qv", F.col("qbucket").alias("bucket"))
+    probes = F.array(
+        F.col("qbucket"),
+        *[
+            F.col("qbucket").bitwiseXOR(F.lit(1 << p))
+            for p in range(n_planes)
+        ],
+    )
+    q = q.select("query_id", "qv", F.explode(probes).alias("bucket"))
     joined = c.join(F.broadcast(q), "bucket")
     score = _dot(F.col("cv"), F.col("qv")) / (
         _norm(F.col("cv")) * _norm(F.col("qv"))
@@ -170,22 +149,14 @@ def lsh_topk(
     )
 
 
-def train_coarse_quantizer(
-    corpus: DataFrame,
-    n_cells: int = 16,
-    vec_col: str = "embedding",
-    train_sample: int = 4096,
-    n_iter: int = 10,
-    seed: int = 42,
-    id_col: str = "vec_id",
-) -> np.ndarray:
+def train_coarse_quantizer(corpus: DataFrame, n_cells: int) -> np.ndarray:
     """Spherical k-means centroids (unit rows, shape ``(min(n_cells, n), dim)``).
 
     Training collects a BOUNDED, UNBIASED sample to the driver
-    (``train_sample`` rows — a few MB even at 10^12-row corpora, the same
-    order as broadcasting the query set) and runs Lloyd iterations in numpy;
-    the corpus itself is never collected. The sample is the ``train_sample``
-    rows with the smallest seeded ``xxhash64(id)`` — a deterministic
+    (4096 rows — a few MB even at 10^12-row corpora, the same order as
+    broadcasting the query set) and runs 10 Lloyd iterations in numpy;
+    the corpus itself is never collected. The sample is the 4096 rows
+    with the smallest seeded ``xxhash64(id)`` — a deterministic
     pseudo-random draw that is independent of file order and partitioning
     (a plain ``limit`` would train on the first file split's likely
     time/source-correlated vectors and silently degrade recall on the rest
@@ -194,18 +165,18 @@ def train_coarse_quantizer(
     ``n_cells`` is clamped to the sample size; callers must use the
     returned ``C.shape[0]`` as the effective cell count."""
     pdf = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)), F.col(id_col))
-        .limit(train_sample)
-        .select(vec_col)
+        corpus.select("vec_id", "embedding")
+        .orderBy(F.xxhash64(F.col("vec_id"), F.lit(42)), F.col("vec_id"))
+        .limit(4096)
+        .select("embedding")
         .toPandas()
     )
-    X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
     n_cells = min(n_cells, len(X))
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     C = X[rng.choice(len(X), size=n_cells, replace=False)]
-    for _ in range(n_iter):
+    for _ in range(10):
         assign = np.argmax(X @ C.T, axis=1)
         for j in range(n_cells):
             m = assign == j
@@ -219,13 +190,8 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     n_cells: int = 16,
     n_probe: int = 3,
-    train_sample: int = 4096,
-    seed: int = 42,
 ) -> DataFrame:
     """IVF-bucketed ANN: corpus assigned to its nearest centroid cell in one
     JVM scan; each query scores only its ``n_probe`` nearest cells.
@@ -234,10 +200,7 @@ def ivf_topk(
     broadcast of ``n_cells`` centroid literals — at cluster scale the scan
     stays embarrassingly parallel and nothing about the corpus is ever
     centralized."""
-    C = train_coarse_quantizer(
-        corpus, n_cells=n_cells, vec_col=vec_col,
-        train_sample=train_sample, seed=seed, id_col=id_col,
-    )
+    C = train_coarse_quantizer(corpus, n_cells)
     n_cells = C.shape[0]  # trainer clamps to the sample size
     n_probe = min(n_probe, n_cells)
 
@@ -249,8 +212,8 @@ def ivf_topk(
 
     cdots = F.array(*_cent_dots(F.col("cv")))
     corpus_cells = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+        F.col("vec_id"),
+        F.col("embedding").cast("array<double>").alias("cv"),
     ).withColumn(
         # argmax over the centroid dots; |cv| is constant per row so the
         # un-normalized dot ranks cells identically to cosine
@@ -269,8 +232,8 @@ def ivf_topk(
         F.slice(ranked, 1, n_probe), lambda s: s["c"]
     )
     q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
+        F.col("query_id"),
+        F.col("embedding").cast("array<double>").alias("qv"),
     ).select(
         "query_id", "qv", F.explode(probe_cells).alias("cell")
     )
@@ -289,11 +252,9 @@ def ivf_topk(
 
 def cosine_allpairs_exact(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    scratch_dir: str,
     threshold: float = 0.5,
     tile_rows: int = 2_000_000,
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """EXACT all-pairs cosine >= threshold — (id_a, id_b, cosine) with
     id_a < id_b. The verification oracle for the LSH-bucketed near-dup
@@ -325,23 +286,17 @@ def cosine_allpairs_exact(
     price of exactness without a broadcast. Beyond ~10^7 rows use the LSH
     path and reserve this as the audit oracle on samples/buckets.
 
-    ``scratch_dir``: where the tile parquet goes — must be reachable from
-    every executor (local path in local mode; a shared FS / object-store
-    URI on a cluster; anything ``pyarrow.fs.FileSystem.from_uri`` opens).
-    Defaults to a unique dir under the local tmpdir.
+    ``scratch_dir``: where the tile parquet goes (overwritten) — must be
+    reachable from every executor (local path in local mode; a shared FS /
+    object-store URI on a cluster; anything
+    ``pyarrow.fs.FileSystem.from_uri`` opens) and must stay in place until
+    the returned frame has run.
     """
     import pandas as pd
 
     spark = emb.sparkSession
-    if scratch_dir is None:
-        import tempfile
-        import uuid
-
-        scratch_dir = os.path.join(
-            tempfile.gettempdir(), f"wds_cosine_tiles_{uuid.uuid4().hex}"
-        )
     (
-        emb.select(F.col(id_col).cast("bigint").alias(id_col), vec_col)
+        emb.select(F.col("vec_id").cast("bigint").alias("vec_id"), "embedding")
         .write.mode("overwrite")
         .option("maxRecordsPerFile", tile_rows)
         .parquet(scratch_dir)
@@ -371,8 +326,10 @@ def cosine_allpairs_exact(
         id_parts, a_parts = [], []
         for pdf in batches:
             if len(pdf):
-                id_parts.append(pdf[id_col].to_numpy())
-                a_parts.append(np.array(pdf[vec_col].tolist(), dtype=np.float64))
+                id_parts.append(pdf["vec_id"].to_numpy())
+                a_parts.append(
+                    np.array(pdf["embedding"].tolist(), dtype=np.float64)
+                )
         if not a_parts:
             return
         ida = np.concatenate(id_parts)
@@ -380,12 +337,14 @@ def cosine_allpairs_exact(
         A = A / np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-30)
         tfs, _ = _fs_and_path(scratch_dir)
         for fp in tile_files:
-            t = pq.read_table(fp, columns=[id_col, vec_col], filesystem=tfs)
+            t = pq.read_table(
+                fp, columns=["vec_id", "embedding"], filesystem=tfs
+            )
             if t.num_rows == 0:
                 continue
-            tid = t[id_col].to_numpy()
+            tid = t["vec_id"].to_numpy()
             flat = (
-                t[vec_col].combine_chunks().flatten()
+                t["embedding"].combine_chunks().flatten()
                 .to_numpy(zero_copy_only=False)
             )
             T = np.ascontiguousarray(flat, dtype=np.float64).reshape(
@@ -416,7 +375,7 @@ def cosine_allpairs_exact(
                         })
 
     streamed = emb.select(
-        F.col(id_col).cast("bigint").alias(id_col), vec_col
+        F.col("vec_id").cast("bigint").alias("vec_id"), "embedding"
     ).repartition(spark.sparkContext.defaultParallelism)
     return streamed.mapInPandas(
         worker_kernel(gen), schema="id_a bigint, id_b bigint, cosine double"

@@ -64,10 +64,9 @@ def sketch_tier(
     value_col: str,
     distinct_col: str,
     tier: str,
-    kll_k: int = KLL_K,
-    hll_lg_k: int = HLL_LG_K,
 ) -> DataFrame:
-    """Build the finest sketch tier straight from raw rows.
+    """Build the finest sketch tier straight from raw rows (KLL at
+    ``KLL_K``, HLL at ``HLL_LG_K``).
 
     One hash aggregate (map-side partial sketches — each task folds its rows
     into local sketches, only sketch bytes ride the exchange, bounded by
@@ -80,10 +79,10 @@ def sketch_tier(
     return df.groupBy(
         *keys, F.date_trunc(unit, F.col(ts_col)).alias("bucket_ts")
     ).agg(
-        F.kll_sketch_agg_double(F.col(value_col).cast("double"), kll_k).alias(
+        F.kll_sketch_agg_double(F.col(value_col).cast("double"), KLL_K).alias(
             "value_kll"
         ),
-        F.hll_sketch_agg(distinct_col, hll_lg_k).alias("distinct_hll"),
+        F.hll_sketch_agg(distinct_col, HLL_LG_K).alias("distinct_hll"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 
@@ -130,7 +129,6 @@ def sliding_distinct_sketch(
     ts_col: str,
     distinct_col: str,
     window_hours: int = 24,
-    hll_lg_k: int = HLL_LG_K,
 ) -> DataFrame:
     """Trailing-window distinct-count estimate with ZERO event fan-out.
 
@@ -151,7 +149,7 @@ def sliding_distinct_sketch(
     """
     hourly = df.groupBy(
         *keys, F.date_trunc("hour", F.col(ts_col)).alias("bucket_ts")
-    ).agg(F.hll_sketch_agg(distinct_col, hll_lg_k).alias("_sk"))
+    ).agg(F.hll_sketch_agg(distinct_col, HLL_LG_K).alias("_sk"))
     from pyspark.sql import Window
 
     hr = (F.unix_timestamp("bucket_ts") / 3600).cast("long")

@@ -44,20 +44,14 @@ from wavelet_decomposition_spark.operators._time import gran_us as _gran_us
 from wavelet_decomposition_spark.operators._time import us as _us
 
 
-def time_weighted_avg(
-    samples: DataFrame,
-    bucket: str = "1 hour",
-    group_col: str = "series_id",
-    ts_col: str = "ts",
-    value_col: str = "v",
-) -> DataFrame:
+def time_weighted_avg(samples: DataFrame, bucket: str = "1 hour") -> DataFrame:
     """Per-(group, bucket) time-weighted mean of the LOCF step function:
     each sample's value holds until the next sample of the same group; a
     segment spanning several buckets contributes to each in proportion to
     overlap. The trailing sample (no successor) contributes nothing — its
     holding time is unknown, and inventing one would bias the last bucket.
 
-    Output: ``group_col, bucket_ts, twa, covered_us`` where ``covered_us``
+    Output: ``series_id, bucket_ts, twa, covered_us`` where ``covered_us``
     is the observed (segment-covered) microseconds in the bucket — the
     caller can null out buckets with partial coverage if the workload
     requires it. Buckets no segment touches simply don't appear (compose
@@ -70,18 +64,18 @@ def time_weighted_avg(
     gus = _gran_us(bucket)
     seg = (
         samples.select(
-            group_col,
-            _us(ts_col).alias("_s"),
-            F.col(value_col).alias("_v"),
+            "series_id",
+            _us("ts").alias("_s"),
+            F.col("v").alias("_v"),
         )
         .withColumn(
             "_e",
-            F.lead("_s").over(Window.partitionBy(group_col).orderBy("_s")),
+            F.lead("_s").over(Window.partitionBy("series_id").orderBy("_s")),
         )
         .where(F.col("_e").isNotNull() & (F.col("_e") > F.col("_s")))
     )
     exploded = seg.select(
-        group_col,
+        "series_id",
         "_s",
         "_e",
         "_v",
@@ -97,7 +91,7 @@ def time_weighted_avg(
     return (
         exploded.withColumn("_w", overlap)
         .groupBy(
-            group_col,
+            "series_id",
             F.timestamp_micros(F.col("_bucket") * gus).alias("bucket_ts"),
         )
         .agg(
@@ -107,13 +101,7 @@ def time_weighted_avg(
     )
 
 
-def counter_rate(
-    samples: DataFrame,
-    bucket: str = "1 hour",
-    group_col: str = "series_id",
-    ts_col: str = "ts",
-    value_col: str = "v",
-) -> DataFrame:
+def counter_rate(samples: DataFrame, bucket: str = "1 hour") -> DataFrame:
     """Per-(group, bucket) increase and per-second rate of a cumulative
     counter with restart detection (PromQL ``increase`` over aligned
     buckets): each adjacent-sample delta contributes ``v_t - v_{t-1}``
@@ -127,12 +115,12 @@ def counter_rate(
     Shape: one window (lag) on the group sort, one hash aggregate.
     """
     gus = _gran_us(bucket)
-    w = Window.partitionBy(group_col).orderBy("_ts_us")
+    w = Window.partitionBy("series_id").orderBy("_ts_us")
     d = (
         samples.select(
-            group_col,
-            _us(ts_col).alias("_ts_us"),
-            F.col(value_col).alias("_v"),
+            "series_id",
+            _us("ts").alias("_ts_us"),
+            F.col("v").alias("_v"),
         )
         .withColumn("_prev", F.lag("_v").over(w))
         .where(F.col("_prev").isNotNull())
@@ -144,7 +132,7 @@ def counter_rate(
     )
     return (
         d.groupBy(
-            group_col,
+            "series_id",
             F.timestamp_micros(
                 F.floor(F.col("_ts_us") / gus).cast("long") * gus
             ).alias("bucket_ts"),
@@ -163,9 +151,6 @@ def counter_rate(
 def ohlc_bars(
     samples: DataFrame,
     bucket: str = "1 hour",
-    group_col: str = "series_id",
-    ts_col: str = "ts",
-    value_col: str = "v",
     volume_col: str | None = None,
 ) -> DataFrame:
     """Per-(group, bucket) OHLC candle: ``open`` = value at the bucket's
@@ -184,9 +169,9 @@ def ohlc_bars(
     """
     gus = _gran_us(bucket)
     pre = samples.select(
-        group_col,
-        _us(ts_col).alias("_t"),
-        F.col(value_col).alias("_v"),
+        "series_id",
+        _us("ts").alias("_t"),
+        F.col("v").alias("_v"),
         *([F.col(volume_col).alias("_vol")] if volume_col else []),
     )
     aggs = [
@@ -199,19 +184,14 @@ def ohlc_bars(
     if volume_col:
         aggs.append(F.sum("_vol").alias("volume"))
     return pre.groupBy(
-        group_col,
+        "series_id",
         F.timestamp_micros(
             F.floor(F.col("_t") / gus).cast("long") * gus
         ).alias("bucket_ts"),
     ).agg(*aggs)
 
 
-def state_durations(
-    samples: DataFrame,
-    group_col: str = "series_id",
-    ts_col: str = "ts",
-    state_col: str = "state",
-) -> DataFrame:
+def state_durations(samples: DataFrame) -> DataFrame:
     """Time spent in each state per key under the LOCF convention: a row's
     state holds until the key's NEXT sample; the trailing sample
     contributes nothing (its holding time is unknown — the same convention
@@ -229,23 +209,23 @@ def state_durations(
     aggregate's ``ClusteredDistribution([key, state])``, so Catalyst
     inserts no second exchange).
     """
-    w = Window.partitionBy(group_col).orderBy("_t", "_st")
+    w = Window.partitionBy("series_id").orderBy("_t", "_st")
     seg = (
         samples.select(
-            group_col,
-            _us(ts_col).alias("_t"),
-            F.col(state_col).alias("_st"),
+            "series_id",
+            _us("ts").alias("_t"),
+            F.col("state").alias("_st"),
         )
         .withColumn("_e", F.lead("_t").over(w))
         .where(F.col("_e").isNotNull())
         .withColumn("_dur", F.col("_e") - F.col("_t"))
         .withColumn(
             "_key_total",
-            F.sum("_dur").over(Window.partitionBy(group_col)),
+            F.sum("_dur").over(Window.partitionBy("series_id")),
         )
     )
     return (
-        seg.groupBy(group_col, F.col("_st").alias(state_col))
+        seg.groupBy("series_id", F.col("_st").alias("state"))
         .agg(
             F.sum("_dur").alias("total_us"),
             F.count(F.lit(1)).alias("n_segments"),
@@ -260,9 +240,6 @@ def state_durations(
 
 def interval_union(
     intervals: DataFrame,
-    group_col: str = "series_id",
-    start_col: str = "start_ts",
-    end_col: str = "end_ts",
     merge_adjacent: bool = True,
 ) -> DataFrame:
     """Merge each key's overlapping (and, by default, exactly-abutting)
@@ -271,7 +248,7 @@ def interval_union(
     previous ends (strictly exceeds when ``merge_adjacent``; >= merges
     only true overlaps otherwise, keeping [1,2][2,3] separate).
 
-    Output: one row per island — ``group_col, island_start, island_end,
+    Output: one row per island — ``series_id, island_start, island_end,
     n_intervals`` — from which coverage aggregates (sum of lengths, count)
     are one further groupBy for the caller.
 
@@ -280,7 +257,7 @@ def interval_union(
     fuses them into one Window node pair without re-sorting), one hash
     aggregate on (key, island).
     """
-    w = Window.partitionBy(group_col).orderBy("_s", "_e")
+    w = Window.partitionBy("series_id").orderBy("_s", "_e")
     prev_max_end = F.max("_e").over(
         w.rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -291,9 +268,9 @@ def interval_union(
     )
     flagged = (
         intervals.select(
-            group_col,
-            _us(start_col).alias("_s"),
-            _us(end_col).alias("_e"),
+            "series_id",
+            _us("start_ts").alias("_s"),
+            _us("end_ts").alias("_e"),
         )
         .withColumn(
             "_new_island",
@@ -307,7 +284,7 @@ def interval_union(
         )
     )
     return (
-        flagged.groupBy(group_col, "_island")
+        flagged.groupBy("series_id", "_island")
         .agg(
             F.timestamp_micros(F.min("_s")).alias("island_start"),
             F.timestamp_micros(F.max("_e")).alias("island_end"),

@@ -26,13 +26,11 @@ def _count(col: Column, pat: str) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(pat), F.lit(0)))
 
 
-def redact_pii(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """(id, redacted, n_emails, n_ips, n_phones): PII spans replaced with
     typed placeholders. Counts are taken BEFORE redaction from the same
     expression tree — Catalyst computes the shared regex scan once."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_emails = _count(t, EMAIL_RE)
     red = F.regexp_replace(t, EMAIL_RE, "<EMAIL>")
     n_ips = _count(red, IPV4_RE)
@@ -40,7 +38,7 @@ def redact_pii(
     n_phones = _count(red2, PHONE_RE)
     red3 = F.regexp_replace(red2, PHONE_RE, "<PHONE>")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         red3.alias("redacted"),
         n_emails.alias("n_emails"),
         n_ips.alias("n_ips"),
@@ -48,14 +46,12 @@ def redact_pii(
     )
 
 
-def strip_html(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def strip_html(df: DataFrame) -> DataFrame:
     """(id, clean): drop tags, unescape the five predefined XML entities,
     collapse whitespace. Deliberately NOT an HTML parser — boilerplate
     stripping at corpus scale is a regex pass; documents needing real DOM
     handling route to a parser UDF downstream."""
-    t = F.col(text_col)
+    t = F.col("text")
     clean = F.regexp_replace(t, r"<[^>]*>", " ")
     for ent, ch in (
         ("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
@@ -63,13 +59,10 @@ def strip_html(
     ):
         clean = F.replace(clean, F.lit(ent), F.lit(ch))
     clean = F.trim(F.regexp_replace(clean, r"\s+", " "))
-    return df.select(F.col(id_col), clean.alias("clean"))
+    return df.select(F.col("doc_id"), clean.alias("clean"))
 
 
-def repetition_ratio(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
+def repetition_ratio(df: DataFrame, n: int = 3) -> DataFrame:
     """Intra-document n-gram repetition: (id, n_grams, n_distinct,
     dup_ratio, top_gram_frac). ``dup_ratio = 1 - distinct/total`` is the
     standard "repeated n-gram fraction" quality filter (high values mean
@@ -94,10 +87,10 @@ def repetition_ratio(
     )
     exploded = (
         df.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             F.split(
                 F.trim(
-                    F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
+                    F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
                 ),
                 " ",
             ).alias("_w"),
@@ -119,8 +112,6 @@ def chunk_documents(
     df: DataFrame,
     chunk_len: int = 400,
     stride: int = 350,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Split each document into fixed-length overlapping character chunks
     (the context-window prep step of a training pipeline): chunk i covers
@@ -137,24 +128,24 @@ def chunk_documents(
     if stride <= 0 or chunk_len < stride:
         raise ValueError("need 0 < stride <= chunk_len")
     last = (
-        F.floor((F.length(F.col(text_col)) - 1) / stride).cast("int")
+        F.floor((F.length(F.col("text")) - 1) / stride).cast("int")
         * stride
     )
     return (
-        df.filter(F.length(F.col(text_col)) > 0)
+        df.filter(F.length(F.col("text")) > 0)
         .select(
-            id_col,
-            text_col,
+            "doc_id",
+            "text",
             F.posexplode(
                 F.sequence(F.lit(0), last, F.lit(stride))
             ).alias("chunk_idx", "chunk_start"),
         )
         .select(
-            id_col,
+            "doc_id",
             "chunk_idx",
             "chunk_start",
             F.substring(
-                F.col(text_col), F.col("chunk_start") + 1, chunk_len
+                F.col("text"), F.col("chunk_start") + 1, chunk_len
             ).alias("chunk_text"),
         )
     )

@@ -69,13 +69,13 @@ def lang_id(text_col) -> Column:
     return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
 
 
-def doc_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def doc_stats(df: DataFrame) -> DataFrame:
     """Per-document quality features + a composite quality score in [0, 1]."""
-    c = F.col(text_col)
-    norm = normalized(text_col)
+    c = F.col("text")
+    norm = normalized("text")
     n_chars = F.length(c)
-    n_words = word_count(text_col)
-    n_tokens = token_count(text_col)
+    n_words = word_count("text")
+    n_tokens = token_count("text")
     punct = F.regexp_count(c, F.lit(r"[^\w\s]"))
     stop_hits = _marker_hits(norm, _EN_STOPWORDS)
     punct_ratio = punct / F.greatest(n_chars, F.lit(1))
@@ -94,13 +94,13 @@ def doc_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         + 0.2 * wordlen_score
     )
     return df.select(
-        id_col,
+        "doc_id",
         n_chars.alias("n_chars"),
         n_words.alias("n_words"),
         n_tokens.alias("n_tokens"),
         punct_ratio.alias("punct_ratio"),
         stop_ratio.alias("stopword_ratio"),
         quality.alias("quality_score"),
-        lang_id(text_col).alias("lang_guess"),
-        fingerprint(text_col).alias("fingerprint"),
+        lang_id("text").alias("lang_guess"),
+        fingerprint("text").alias("fingerprint"),
     )

@@ -35,22 +35,20 @@ def rolling_stats(
     series: DataFrame,
     value_col: str = "v",
     k: int = 24,
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
 ) -> DataFrame:
     """Trailing-window mean/std/min/max over the last ``k`` observations
     (row-based frame: the series is already on a regular bucket grid —
     compose with ``gapfill_*`` first if it is not, or missing buckets
     silently shrink the window)."""
     w = (
-        Window.partitionBy(group_col)
-        .orderBy(ts_col)
+        Window.partitionBy("series_id")
+        .orderBy("bucket_ts")
         .rowsBetween(-(k - 1), 0)
     )
     v = F.col(value_col)
     return series.select(
-        group_col,
-        ts_col,
+        "series_id",
+        "bucket_ts",
         value_col,
         F.avg(v).over(w).alias("roll_mean"),
         F.stddev_samp(v).over(w).alias("roll_std"),
@@ -104,8 +102,6 @@ def acf(
     series: DataFrame,
     value_col: str = "v",
     max_lag: int = 12,
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
 ) -> DataFrame:
     """Sample autocorrelation at lags ``1..max_lag`` per group:
     ``corr(x_t, x_{t-lag})`` over the aligned pairs (the "naive"
@@ -118,30 +114,30 @@ def acf(
     shuffle of n*max_lag rows, then a partial-aggregated ``corr`` per
     (group, lag). No per-lag window passes (which would sort n rows
     ``max_lag`` times)."""
-    w = Window.partitionBy(group_col).orderBy(ts_col)
+    w = Window.partitionBy("series_id").orderBy("bucket_ts")
     base = series.select(
-        group_col,
+        "series_id",
         F.col(value_col).alias("_x"),
         (F.row_number().over(w) - 1).alias("_idx"),
     )
     lagged = base.select(
-        group_col,
+        "series_id",
         F.col("_x").alias("_y"),
         F.explode(
             F.sequence(F.lit(1), F.lit(max_lag))
         ).alias("lag"),
         F.col("_idx"),
     ).select(
-        group_col, "_y", "lag", (F.col("_idx") + F.col("lag")).alias("_idx")
+        "series_id", "_y", "lag", (F.col("_idx") + F.col("lag")).alias("_idx")
     )
-    pairs = base.join(lagged, [group_col, "_idx"])
+    pairs = base.join(lagged, ["series_id", "_idx"])
     return (
-        pairs.groupBy(group_col, "lag")
+        pairs.groupBy("series_id", "lag")
         .agg(
             F.corr("_x", "_y").alias("acf"),
             F.count(F.lit(1)).alias("n_pairs"),
         )
-        .orderBy(group_col, "lag")
+        .orderBy("series_id", "lag")
     )
 
 
@@ -149,8 +145,6 @@ def brown_les(
     series: DataFrame,
     value_col: str = "v",
     alpha: float = 0.25,
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
 ) -> DataFrame:
     """Brown's linear (double) exponential smoothing: the classic
     trend-aware forecaster one notch up from EWMA. Two chained
@@ -169,16 +163,16 @@ def brown_les(
     exact)."""
     import pandas as pd  # noqa: F401  (documents the kernel dependency)
 
-    gtype = series.schema[group_col].dataType.simpleString()
+    gtype = series.schema["series_id"].dataType.simpleString()
     out_schema = (
-        f"{group_col} {gtype}, {ts_col} timestamp, "
+        f"series_id {gtype}, bucket_ts timestamp, "
         f"{value_col} double, level double, trend double, forecast double"
     )
     gain = alpha / (1.0 - alpha)
 
     def fit(pdf):
-        pdf = pdf.sort_values(ts_col)
-        pdf = pdf[[group_col, ts_col, value_col]]
+        pdf = pdf.sort_values("bucket_ts")
+        pdf = pdf[["series_id", "bucket_ts", value_col]]
         s1 = pdf[value_col].ewm(alpha=alpha, adjust=False).mean()
         s2 = s1.ewm(alpha=alpha, adjust=False).mean()
         pdf["level"] = 2.0 * s1 - s2
@@ -186,8 +180,8 @@ def brown_les(
         pdf["forecast"] = pdf["level"] + pdf["trend"]
         return pdf
 
-    return series.select(group_col, ts_col, value_col).groupBy(
-        group_col
+    return series.select("series_id", "bucket_ts", value_col).groupBy(
+        "series_id"
     ).applyInPandas(worker_kernel(fit), schema=out_schema)
 
 
@@ -197,8 +191,6 @@ def cross_corr(
     id_b,
     value_col: str = "v",
     max_lag: int = 6,
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
 ) -> DataFrame:
     """Cross-correlation between two named series at lags ``-max_lag ..
     max_lag``: ``xcorr(lag) = corr(a_t, b_{t-lag})`` over positionally
@@ -211,16 +203,16 @@ def cross_corr(
     shifted index (the lag explode rides the smaller pair set), then a
     partial-aggregated ``corr`` per lag. Two shuffles total (window +
     join), both on bounded per-series data."""
-    w = Window.partitionBy(group_col).orderBy(ts_col)
+    w = Window.partitionBy("series_id").orderBy("bucket_ts")
     base = series.where(
-        F.col(group_col).isin([id_a, id_b])
+        F.col("series_id").isin([id_a, id_b])
     ).select(
-        group_col,
+        "series_id",
         F.col(value_col).alias("_x"),
         (F.row_number().over(w) - 1).alias("_idx"),
     )
-    a = base.where(F.col(group_col) == id_a).select("_x", "_idx")
-    b = base.where(F.col(group_col) == id_b).select(
+    a = base.where(F.col("series_id") == id_a).select("_x", "_idx")
+    b = base.where(F.col("series_id") == id_b).select(
         F.col("_x").alias("_y"), "_idx"
     )
     shifted = b.select(
@@ -245,8 +237,6 @@ def rolling_median(
     series: DataFrame,
     value_col: str = "v",
     k: int = 24,
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
 ) -> DataFrame:
     """Trailing-window median — the robust twin of ``rolling_stats``'s
     mean (one wild outlier moves a 24-bucket mean by outlier/24 but the
@@ -262,26 +252,20 @@ def rolling_median(
     and the GK-sketch path (`percentile_approx`) is the escape hatch when
     k explodes."""
     w = (
-        Window.partitionBy(group_col)
-        .orderBy(ts_col)
+        Window.partitionBy("series_id")
+        .orderBy("bucket_ts")
         .rowsBetween(-(k - 1), 0)
     )
     return series.select(
-        group_col,
-        ts_col,
+        "series_id",
+        "bucket_ts",
         value_col,
         F.expr(f"percentile({value_col}, 0.5)").over(w).alias("roll_median"),
         F.count(F.lit(1)).over(w).alias("roll_n"),
     )
 
 
-def theil_sen(
-    series: DataFrame,
-    value_col: str = "v",
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
-    unit: str = "1 hour",
-) -> DataFrame:
+def theil_sen(series: DataFrame, unit: str = "1 hour") -> DataFrame:
     """Theil–Sen robust trend: per group, the median of all pairwise
     slopes ``(v_j - v_i) / (t_j - t_i)`` — up to ~29% corrupted points
     move it boundedly where least-squares follows every outlier. Slope
@@ -297,17 +281,17 @@ def theil_sen(
     from wavelet_decomposition_spark.operators._time import gran_us, us
 
     base = series.select(
-        group_col,
-        (us(ts_col) / gran_us(unit)).alias("_t"),
-        F.col(value_col).alias("_v"),
+        "series_id",
+        (us("bucket_ts") / gran_us(unit)).alias("_t"),
+        F.col("v").alias("_v"),
     )
     a = base.select(
-        group_col, F.col("_t").alias("_ta"), F.col("_v").alias("_va")
+        "series_id", F.col("_t").alias("_ta"), F.col("_v").alias("_va")
     )
     b = base.select(
-        group_col, F.col("_t").alias("_tb"), F.col("_v").alias("_vb")
+        "series_id", F.col("_t").alias("_tb"), F.col("_v").alias("_vb")
     )
-    pairs = a.join(b, group_col).where(F.col("_ta") < F.col("_tb"))
+    pairs = a.join(b, "series_id").where(F.col("_ta") < F.col("_tb"))
     slope = (F.col("_vb") - F.col("_va")) / (F.col("_tb") - F.col("_ta"))
     # exact median via the two middle ORDER STATISTICS instead of
     # ``percentile(_s, 0.5)``: the percentile aggregate buffers every
@@ -320,12 +304,12 @@ def theil_sen(
     # value-ties, so the k-th order statistic is deterministic).
     from pyspark.sql import Window
 
-    sl = pairs.select(group_col, slope.alias("_s"))
-    w_ord = Window.partitionBy(group_col).orderBy("_s")
-    w_grp = Window.partitionBy(group_col)
+    sl = pairs.select("series_id", slope.alias("_s"))
+    w_ord = Window.partitionBy("series_id").orderBy("_s")
+    w_grp = Window.partitionBy("series_id")
     pos = (F.col("_n") - 1) / 2  # 0-indexed interpolation position
     mid = sl.select(
-        group_col,
+        "series_id",
         "_s",
         F.row_number().over(w_ord).alias("_rn"),
         F.count(F.lit(1)).over(w_grp).alias("_n"),
@@ -334,14 +318,14 @@ def theil_sen(
         | (F.col("_rn") - 1 == F.ceil(pos))
     )
     return (
-        mid.groupBy(group_col)
+        mid.groupBy("series_id")
         .agg(
             F.min("_s").alias("_lo"),
             F.max("_s").alias("_hi"),
             F.max("_n").alias("_n2"),
         )
         .select(
-            group_col,
+            "series_id",
             F.when(F.col("_n2") % 2 == 1, F.col("_lo"))
             .otherwise(F.col("_lo") + 0.5 * (F.col("_hi") - F.col("_lo")))
             .alias("slope_per_unit"),
@@ -354,8 +338,6 @@ def lttb_downsample(
     series: DataFrame,
     n_out: int = 500,
     value_col: str = "v",
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
 ) -> DataFrame:
     """Largest-Triangle-Three-Buckets downsampling (Steinarsson 2013) to
     exactly ``min(n_out, n)`` points per group: the line-chart downsampler
@@ -381,17 +363,17 @@ def lttb_downsample(
 
     if n_out < 3:
         raise ValueError("n_out must be >= 3")
-    gtype = series.schema[group_col].dataType.simpleString()
+    gtype = series.schema["series_id"].dataType.simpleString()
     out_schema = (
-        f"{group_col} {gtype}, {ts_col} timestamp, {value_col} double"
+        f"series_id {gtype}, bucket_ts timestamp, {value_col} double"
     )
 
     def fit(pdf):
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
+        pdf = pdf.sort_values("bucket_ts").reset_index(drop=True)
         n = len(pdf)
         if n <= n_out:
-            return pdf[[group_col, ts_col, value_col]]
-        t = pdf[ts_col].astype("int64").to_numpy().astype(np.float64)
+            return pdf[["series_id", "bucket_ts", value_col]]
+        t = pdf["bucket_ts"].astype("int64").to_numpy().astype(np.float64)
         v = pdf[value_col].to_numpy().astype(np.float64)
         # interior bucket boundaries over points 1..n-2 (endpoints pinned)
         edges = np.linspace(1, n - 1, n_out - 1).astype(np.int64)
@@ -411,10 +393,10 @@ def lttb_downsample(
             a = lo + int(np.argmax(area))
             sel[k + 1] = a
         sel[-1] = n - 1
-        return pdf.iloc[sel][[group_col, ts_col, value_col]]
+        return pdf.iloc[sel][["series_id", "bucket_ts", value_col]]
 
-    return series.select(group_col, ts_col, value_col).groupBy(
-        group_col
+    return series.select("series_id", "bucket_ts", value_col).groupBy(
+        "series_id"
     ).applyInPandas(worker_kernel(fit), schema=out_schema)
 
 
@@ -422,8 +404,6 @@ def m4_downsample(
     series: DataFrame,
     value_col: str = "v",
     bucket: str = "1 hour",
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
 ) -> DataFrame:
     """M4 visualization downsampling (Jugel et al., VLDB'14): per time
     bucket keep exactly the first, last, min, and max points — the four
@@ -432,10 +412,10 @@ def m4_downsample(
     combine; ties on equal values/timestamps resolved by earliest
     timestamp (``min_by`` on a (v, ts) / (ts) struct) so output is
     partitioning-independent."""
-    b = F.window(F.col(ts_col), bucket)["start"].alias("bucket_start")
-    v, t = F.col(value_col), F.col(ts_col)
+    b = F.window(F.col("bucket_ts"), bucket)["start"].alias("bucket_start")
+    v, t = F.col(value_col), F.col("bucket_ts")
     return (
-        series.groupBy(group_col, b)
+        series.groupBy("series_id", b)
         .agg(
             F.min_by(v, F.struct(t, v)).alias("first_v"),
             F.max_by(v, F.struct(t, v)).alias("last_v"),
@@ -446,13 +426,7 @@ def m4_downsample(
     )
 
 
-def robust_anomalies(
-    series: DataFrame,
-    value_col: str = "v",
-    z_cut: float = 3.5,
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
-) -> DataFrame:
+def robust_anomalies(series: DataFrame, value_col: str = "v") -> DataFrame:
     """Median/MAD outlier flags (Iglewicz–Hoaglin modified z-score:
     ``0.6745*(x-median)/MAD``, cut at 3.5). Mean/std anomaly scoring is
     circular — the anomalies inflate the std that is supposed to expose
@@ -463,35 +437,30 @@ def robust_anomalies(
     broadcast back in one small join — the series itself is scanned
     twice but shuffled never (percentile partials and the tiny per-group
     stats move)."""
-    med = series.groupBy(group_col).agg(
+    med = series.groupBy("series_id").agg(
         F.percentile(value_col, F.lit(0.5)).alias("_med")
     )
-    dev = series.join(F.broadcast(med), group_col).select(
-        group_col,
-        ts_col,
+    dev = series.join(F.broadcast(med), "series_id").select(
+        "series_id",
+        "bucket_ts",
         F.col(value_col),
         F.col("_med"),
         F.abs(F.col(value_col) - F.col("_med")).alias("_adev"),
     )
-    mad = dev.groupBy(group_col).agg(
+    mad = dev.groupBy("series_id").agg(
         F.percentile("_adev", F.lit(0.5)).alias("_mad")
     )
     z = F.lit(0.6745) * (F.col(value_col) - F.col("_med")) / F.col("_mad")
-    return dev.join(F.broadcast(mad), group_col).select(
-        group_col,
-        ts_col,
+    return dev.join(F.broadcast(mad), "series_id").select(
+        "series_id",
+        "bucket_ts",
         value_col,
         z.alias("robust_z"),
-        (F.abs(z) > z_cut).alias("is_anomaly"),
+        (F.abs(z) > 3.5).alias("is_anomaly"),
     )
 
 
-def cusum_changepoint(
-    series: DataFrame,
-    value_col: str = "v",
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
-) -> DataFrame:
+def cusum_changepoint(series: DataFrame, value_col: str = "v") -> DataFrame:
     """Single most-likely mean-shift location per group via the CUSUM
     statistic: ``S_t = cumsum(x - mean)``; the change point is the
     ``argmax |S_t|`` and the normalized statistic ``max|S|/(std*sqrt(n))``
@@ -500,26 +469,23 @@ def cusum_changepoint(
     One window cumsum (single exchange+sort per group) and one per-group
     ``max_by`` — the per-group outputs are scalars, so the final shuffle
     moves one row per series regardless of series length."""
-    stats = Window.partitionBy(group_col)
-    wcum = (
-        Window.partitionBy(group_col)
-        .orderBy(ts_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    stats = Window.partitionBy("series_id")
+    ordered = stats.orderBy("bucket_ts")
+    wcum = ordered.rowsBetween(Window.unboundedPreceding, 0)
     v = F.col(value_col)
     cum = series.select(
-        group_col,
-        ts_col,
+        "series_id",
+        "bucket_ts",
         (F.sum(v).over(wcum)
-         - F.row_number().over(Window.partitionBy(group_col).orderBy(ts_col))
+         - F.row_number().over(ordered)
          * F.avg(v).over(stats)).alias("_s"),
         F.stddev_samp(v).over(stats).alias("_sd"),
         F.count(v).over(stats).alias("_n"),
     )
     # argmax |S| with earliest-ts tie-break, partitioning-independent
-    return cum.groupBy(group_col).agg(
-        F.min_by(ts_col, F.struct(
-            (-F.abs(F.col("_s"))).alias("a"), F.col(ts_col).alias("t")
+    return cum.groupBy("series_id").agg(
+        F.min_by("bucket_ts", F.struct(
+            (-F.abs(F.col("_s"))).alias("a"), F.col("bucket_ts").alias("t")
         )).alias("cp_ts"),
         (F.max(F.abs("_s")) / (F.first("_sd") * F.sqrt(F.first("_n"))))
         .alias("cusum_stat"),
@@ -531,8 +497,6 @@ def seasonal_decompose(
     series: DataFrame,
     value_col: str = "v",
     period: int = 24,
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
 ) -> DataFrame:
     """Additive seasonal decomposition, moving-average flavor (the
     classical `decompose`): trend = centered (period+1)-point moving
@@ -554,7 +518,7 @@ def seasonal_decompose(
     the flat window vs ~0 under 2xm). Odd periods use the flat
     period-point centered mean, which is exactly seasonal-orthogonal."""
     half = period // 2
-    wobs = Window.partitionBy(group_col).orderBy(ts_col)
+    wobs = Window.partitionBy("series_id").orderBy("bucket_ts")
     v = F.col(value_col)
     if period % 2 == 0:
         wa = wobs.rowsBetween(-half, half - 1)
@@ -571,25 +535,25 @@ def seasonal_decompose(
             F.count(v).over(wt) == period, F.avg(v).over(wt)
         )
     base = series.select(
-        group_col,
-        ts_col,
+        "series_id",
+        "bucket_ts",
         v,
         ((F.row_number().over(wobs) - 1) % period).alias("phase"),
         trend.alias("trend"),
     )
-    ph = base.groupBy(group_col, "phase").agg(
+    ph = base.groupBy("series_id", "phase").agg(
         F.avg(v - F.col("trend")).alias("_raw_seasonal")
     )
     ph = ph.select(
-        group_col,
+        "series_id",
         "phase",
         (F.col("_raw_seasonal")
-         - F.avg("_raw_seasonal").over(Window.partitionBy(group_col)))
+         - F.avg("_raw_seasonal").over(Window.partitionBy("series_id")))
         .alias("seasonal"),
     )
-    return base.join(F.broadcast(ph), [group_col, "phase"]).select(
-        group_col,
-        ts_col,
+    return base.join(F.broadcast(ph), ["series_id", "phase"]).select(
+        "series_id",
+        "bucket_ts",
         value_col,
         "phase",
         "trend",
@@ -601,20 +565,15 @@ def seasonal_decompose(
 def holt_winters(
     series: DataFrame,
     period: int = 24,
-    alpha: float = 0.3,
-    beta: float = 0.05,
-    gamma: float = 0.2,
     horizon: int | None = None,
-    value_col: str = "v",
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
     n_buckets: int = 64,
     verify: bool = True,
 ) -> DataFrame:
     """Additive Holt-Winters (triple exponential smoothing) fit +
-    ``horizon``-step forecast per series, with FIXED smoothing gains —
-    deterministic, no optimizer. ``brown_les`` deliberately stops at
-    Brown's single-gain form because Holt's coupled recurrences cannot
+    ``horizon``-step forecast per series, with FIXED smoothing gains
+    (a=0.3, b=0.05, g=0.2) — deterministic, no optimizer. ``brown_les``
+    deliberately stops at Brown's single-gain form because Holt's coupled
+    recurrences cannot
     ride pandas' C ``ewm`` kernel; this operator pays the recurrence the
     only scalable way: series are hash-bucketed (``pmod(xxhash64(id),
     n_buckets)``) and each Arrow batch pivots its bucket into an (S, T)
@@ -657,10 +616,10 @@ def holt_winters(
 
     m = int(period)
     H = int(horizon) if horizon is not None else m
-    a, b, g = float(alpha), float(beta), float(gamma)
-    gtype = series.schema[group_col].dataType.simpleString()
+    a, b, g = 0.3, 0.05, 0.2
+    gtype = series.schema["series_id"].dataType.simpleString()
     out_schema = (
-        f"{group_col} {gtype}, h int, forecast double, level double, "
+        f"series_id {gtype}, h int, forecast double, level double, "
         f"trend double, sse double, n long, dual_ok boolean"
     )
 
@@ -717,12 +676,15 @@ def holt_winters(
 
     def fit(pdf):
         cols = {
-            group_col: [], "h": [], "forecast": [], "level": [],
+            "series_id": [], "h": [], "forecast": [], "level": [],
             "trend": [], "sse": [], "n": [], "dual_ok": [],
         }
         by_len: dict = {}
-        for sid, sg in pdf.sort_values(ts_col).groupby(group_col, sort=True):
-            xs = sg[value_col].to_numpy(dtype=np.float64)
+        by_series = pdf.sort_values("bucket_ts").groupby(
+            "series_id", sort=True
+        )
+        for sid, sg in by_series:
+            xs = sg["v"].to_numpy(dtype=np.float64)
             if len(xs) >= 2 * m:
                 by_len.setdefault(len(xs), []).append((sid, xs))
         for T, items in sorted(by_len.items()):
@@ -739,7 +701,7 @@ def holt_winters(
                         and _close(f2, fc[i])
                     )
                 for h in range(1, H + 1):
-                    cols[group_col].append(sid)
+                    cols["series_id"].append(sid)
                     cols["h"].append(h)
                     cols["forecast"].append(float(fc[i, h - 1]))
                     cols["level"].append(float(lvl[i]))
@@ -750,9 +712,9 @@ def holt_winters(
         return pd.DataFrame(cols)
 
     return (
-        series.select(group_col, ts_col, value_col)
+        series.select("series_id", "bucket_ts", "v")
         .withColumn(
-            "_bkt", F.pmod(F.xxhash64(F.col(group_col)), F.lit(n_buckets))
+            "_bkt", F.pmod(F.xxhash64(F.col("series_id")), F.lit(n_buckets))
         )
         .groupBy("_bkt")
         .applyInPandas(worker_kernel(fit), schema=out_schema)

@@ -106,7 +106,9 @@ def bucketed_apply(
     n_partitions: int | None = None,
 ) -> DataFrame:
     """Run the grouped-map ``fn`` over hash buckets of ``group_col`` — the
-    one bucketing policy of every Python-CPU-bound group stage.
+    bucketing policy of the wavelet operators and the block codecs
+    (``tsfeatures.holt_winters`` hashes its series into its own
+    ``n_buckets`` buckets instead).
 
     ``projected`` must hold only the columns ``fn`` reads: Catalyst cannot
     prune columns INTO a grouped-map UDF (the whole row ships through
@@ -305,8 +307,6 @@ def haar_dwt_relational(
     value_col: str,
     levels: int,
     window_len: int,
-    group_col: str = "conv_id",
-    ts_col: str = "bucket_ts",
     *,
     sparse_fill_step: str,
 ) -> DataFrame:
@@ -335,10 +335,10 @@ def haar_dwt_relational(
     compare with a left join and ``coalesce(rel_coef, 0)``.
     """
     window_len, step_us = _window_args(levels, window_len, sparse_fill_step)
-    w = Window.partitionBy(group_col)
-    pos = F.floor((us(ts_col) - F.min(us(ts_col)).over(w)) / step_us)
+    w = Window.partitionBy("conv_id")
+    pos = F.floor((us("bucket_ts") - F.min(us("bucket_ts")).over(w)) / step_us)
     base = series.select(
-        group_col,
+        "conv_id",
         F.floor(pos / window_len).cast("int").alias("window_id"),
         (pos % window_len).alias("_p"),
         F.col(value_col).alias("_v"),
@@ -366,16 +366,16 @@ def haar_dwt_relational(
     )
     return (
         base.select(
-            group_col,
+            "conv_id",
             "window_id",
             F.explode(F.array(*entries)).alias("e"),
         )
         .groupBy(
-            group_col, "window_id", "e.level", "e.coef_type", "e.k"
+            "conv_id", "window_id", "e.level", "e.coef_type", "e.k"
         )
         .agg(F.sum("e.sv").alias("_s"))
         .select(
-            group_col,
+            "conv_id",
             "window_id",
             "level",
             F.col("k").cast("int").alias("k"),

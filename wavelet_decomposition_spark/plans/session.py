@@ -108,27 +108,25 @@ def _after_call(out):
 
 def worker_kernel(fn):
     """Wrap the Python-stage kernel ``fn`` (an ``applyInPandas`` function of
-    ``(pdf)`` or ``(key, pdf)``, or a ``mapInPandas`` function of an
-    iterator) so that, inside a task, each call ends with
+    ``(pdf)`` or ``(key, pdf)``, a ``mapInPandas`` function of an iterator,
+    or an ``applyInPandasWithState`` function of ``(key, pdfs, state)``) so
+    that, inside a task, each call ends with
     :func:`_evict_static_zipimporters`. The next task's
     ``importlib.invalidate_caches()`` then no longer re-reads the Spark
     distribution's zip archives: on a 4-core x86 VM (CPython 3.11, one
     ``wavelet_scan`` benchmark run) it fell from a median of 311 ms to
-    1.3 ms per task. Name, docstring and arity are ``fn``'s
-    (pyspark reads the arity of a grouped-map function), so UDF names and
-    plan text do not change. On the driver the wrapper only calls ``fn``.
-    Every ``applyInPandas``/``mapInPandas`` kernel goes through this."""
-    if len(inspect.getfullargspec(fn).args) == 2:
+    1.3 ms per task. Name, docstring and signature are ``fn``'s (pyspark
+    reads a grouped-map function's arity through ``__signature__``, not
+    ``__wrapped__``), so UDF names and plan text do not change. On the
+    driver the wrapper only calls ``fn``. Every Python-stage kernel goes
+    through this."""
 
-        def run(key, pdf):
-            return _after_call(fn(key, pdf))
+    @functools.wraps(fn)
+    def run(*args):
+        return _after_call(fn(*args))
 
-    else:
-
-        def run(arg):
-            return _after_call(fn(arg))
-
-    return functools.wraps(fn)(run)
+    run.__signature__ = inspect.signature(fn)
+    return run
 
 
 # glibc malloc tuning for the pandas-UDF workers (and the JVM they fork

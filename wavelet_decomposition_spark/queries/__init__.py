@@ -19,6 +19,9 @@ from __future__ import annotations
 
 import functools
 import importlib
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from contextlib import contextmanager
 
@@ -88,6 +91,14 @@ def aqe_off(spark, shuffle_partitions: int, when: bool = True):
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
+
+
+def scratch_dir(name: str) -> str:
+    """The scratch directory ``wds_<name>`` under the temp directory,
+    emptied of what an earlier run left there (removed, not re-created)."""
+    path = os.path.join(tempfile.gettempdir(), f"wds_{name}")
+    shutil.rmtree(path, ignore_errors=True)
+    return path
 
 
 def _events(spark, sf_dir):

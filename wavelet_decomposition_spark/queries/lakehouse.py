@@ -6,8 +6,6 @@ layouts, merges, integrity checks, sampling and sketch tiers.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 from datetime import datetime
 
 from pyspark.sql import functions as F
@@ -42,7 +40,12 @@ from wavelet_decomposition_spark.operators.sketch_tiers import (
     read_sketch_tier,
     sketch_tier,
 )
-from wavelet_decomposition_spark.queries import _docs, _events, query
+from wavelet_decomposition_spark.queries import (
+    _docs,
+    _events,
+    query,
+    scratch_dir,
+)
 
 
 @query(bench=True, side_effect=True)
@@ -78,10 +81,7 @@ def _q_tier_routed_read(spark, sf_dir):
     one_h = one_m.groupBy(
         "event_type", F.date_trunc("hour", F.col("bucket_ts")).alias("bucket_ts")
     ).agg(F.sum("turns").alias("turns"), F.sum("sum_value").alias("sum_value"))
-    base = (
-        f"{tempfile.gettempdir()}/wds_tier_store_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    base = scratch_dir(f"tier_store_{os.path.basename(sf_dir.rstrip('/'))}")
     rollup.write_tier(one_h, base, tier)
     return read_tier_range(spark, base, tier, start, end).select(
         "event_type",
@@ -117,8 +117,8 @@ def _q_compact_tier(spark, sf_dir):
     content identity, not just cardinality); fewer_ok pins that compaction
     actually reduced the file count."""
     tag = os.path.basename(sf_dir.rstrip("/"))
-    src = f"{tempfile.gettempdir()}/wds_compact_src_{tag}"
-    dst = f"{tempfile.gettempdir()}/wds_compact_dst_{tag}"
+    src = scratch_dir(f"compact_src_{tag}")
+    dst = scratch_dir(f"compact_dst_{tag}")
     one_m = (
         _events(spark, sf_dir)
         .groupBy(
@@ -156,8 +156,7 @@ def _q_tier_refresh_resume(spark, sf_dir):
     content_stable_ok (every day's manifest content hash — including the
     rebuilt one — is byte-stable across the three refreshes)."""
     tag = os.path.basename(sf_dir.rstrip("/"))
-    base = f"{tempfile.gettempdir()}/wds_refresh_{tag}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(f"refresh_{tag}")
     os.makedirs(base)
     inp = _events(spark, sf_dir).withColumn("day", F.to_date("ts"))
 
@@ -229,8 +228,7 @@ def _q_tier_retention_expiry(spark, sf_dir):
     refresh_ok (a horizon-filtered refresh after expiry rebuilds
     nothing — the manifest rewrite is consistent)."""
     tag = os.path.basename(sf_dir.rstrip("/"))
-    base = f"{tempfile.gettempdir()}/wds_expiry_{tag}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(f"expiry_{tag}")
     os.makedirs(base)
     inp = _events(spark, sf_dir).withColumn("day", F.to_date("ts"))
 
@@ -482,7 +480,7 @@ def _q_zorder_layout(spark, sf_dir):
     z-curve gives ~sqrt(1/n_files) on both at once — the layout for
     tables filtered by either key independently.
     """
-    path = f"{tempfile.gettempdir()}/wds_layout_zorder"
+    path = scratch_dir("layout_zorder")
     cap = 5_000
     write_zorder(
         _zx_zy(spark, sf_dir), path, "x", "y",
@@ -718,7 +716,7 @@ def _q_clustered_layout(spark, sf_dir):
     fraction of all files (`prune_ok` from the min/max envelopes — the
     exact statistic a distributed planner prunes with; an arrival-order
     write measures ~1.0 here, i.e. zero pruning)."""
-    path = f"{tempfile.gettempdir()}/wds_layout_events"
+    path = scratch_dir("layout_events")
     cap = 5_000
     write_clustered(
         _events(spark, sf_dir).select("user_id", "ts", "value"),

@@ -4,9 +4,6 @@ pipeline over a file source and checks it against the batch twin.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -30,13 +27,17 @@ from wavelet_decomposition_spark.streaming.stateful import (
     stream_ewma,
     stream_sessionize,
 )
-from wavelet_decomposition_spark.queries import _events, _hourly_series, query
+from wavelet_decomposition_spark.queries import (
+    _events,
+    _hourly_series,
+    query,
+    scratch_dir,
+)
 
 
 def _drain_paths(name):
     """Fresh ``(in, out, ckpt)`` scratch paths for the drain ``name``."""
-    base = f"{tempfile.gettempdir()}/wds_{name}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(name)
     return f"{base}/in", f"{base}/out", f"{base}/ckpt"
 
 

@@ -5,8 +5,6 @@ DSIR, and the inverted-index retrieval surface.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -49,7 +47,12 @@ from wavelet_decomposition_spark.operators.textstats import (
     doc_stats,
     token_count,
 )
-from wavelet_decomposition_spark.queries import _docs, aqe_off, query
+from wavelet_decomposition_spark.queries import (
+    _docs,
+    aqe_off,
+    query,
+    scratch_dir,
+)
 
 
 _TOKEN_REGEX = r"[a-zA-Z0-9]+|[^a-zA-Z0-9\s]"
@@ -617,7 +620,7 @@ def _q_text_invariant(spark, sf_dir):
     snapshot vs derived lineage under stable (conv_id, turn_idx) ordering;
     must return n_mismatch=0 over all turns."""
     tx = transcripts_df(spark, 200, seed=42)
-    path = f"{tempfile.gettempdir()}/wds_invariant_snapshot"
+    path = scratch_dir("invariant_snapshot")
     tx.write.mode("overwrite").parquet(path)
     derived = spark.read.parquet(path)
     joined = tx.alias("a").join(

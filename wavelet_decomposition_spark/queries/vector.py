@@ -34,7 +34,7 @@ from wavelet_decomposition_spark.operators.similarity import (
     lsh_topk,
     rrf_fuse,
 )
-from wavelet_decomposition_spark.queries import _docs, query
+from wavelet_decomposition_spark.queries import _docs, query, scratch_dir
 
 
 @query(bench=True, designed_bnl=True)
@@ -55,7 +55,8 @@ def _q_cosine_pairs(spark, sf_dir):
     """Exact embedding near-dup pairs (cosine >= 0.5) — the verification
     oracle for the LSH-bucketed variant."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    pairs = cosine_allpairs_exact(emb, threshold=0.5)
+    tiles = scratch_dir("cosine_tiles")
+    pairs = cosine_allpairs_exact(emb, tiles, threshold=0.5)
     return pairs.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 

@@ -563,7 +563,7 @@ def _tier_wavelet_parity_plan(spark):
     # point parity: cascade tier == direct-from-raw tier, exactly
     bads = []
     for tier in ("1h", "1d"):
-        d = rollup.rollup_direct(raw, tier).select(
+        d = rollup.rollup_once(raw, tier).select(
             "conv_id", "bucket_ts",
             *[F.col(c).alias(f"d_{c}") for c in cols],
         )

@@ -55,11 +55,10 @@ def stream_distinct_1m(
     input_path: str,
     output_path: str,
     checkpoint_path: str,
-    watermark: str = "10 minutes",
-    rsd: float = 0.02,
 ):
     """Streaming windowed cardinality: per 1-minute tumbling window, the
-    approximate number of distinct conversations (HLL++) plus the exact
+    approximate number of distinct conversations (HLL++ at 2% relative
+    standard deviation, 10-minute watermark) plus the exact
     turn count — the streaming twin of the batch `sketch_distinct` family.
 
     Why a sketch and not countDistinct: streaming distinct-per-window
@@ -71,12 +70,12 @@ def stream_distinct_1m(
     registers live; at 10^12 turns/day state is windows-in-horizon x
     sketch size, independent of conversation count."""
     stream = parquet_source(
-        spark, TRANSCRIPT_SCHEMA, input_path, "ts", watermark
+        spark, TRANSCRIPT_SCHEMA, input_path, "ts", "10 minutes"
     )
     agg = (
         stream.groupBy(F.window("ts", "1 minute").alias("w"))
         .agg(
-            F.approx_count_distinct("conv_id", rsd).alias("approx_convs"),
+            F.approx_count_distinct("conv_id", 0.02).alias("approx_convs"),
             F.count(F.lit(1)).alias("turns"),
         )
         .select(
@@ -93,8 +92,6 @@ def stream_dedup(
     checkpoint_path: str,
     schema: str,
     keys: list,
-    ts_col: str = "ts",
-    delay: str = "90 days",
 ):
     """Streaming exact dedup on ``keys`` via
     ``dropDuplicatesWithinWatermark`` — the incremental twin of the batch
@@ -103,14 +100,15 @@ def stream_dedup(
     dedup state is bounded by the watermark (plain streaming
     dropDuplicates keeps state forever — unusable at 10^12 events).
 
-    ``delay`` is the dedup guarantee window: a duplicate arriving more
-    than ``delay`` of event-time after its first copy MAY be re-emitted
+    The watermark delay, 90 days, is the dedup guarantee window: a
+    duplicate arriving more than 90 days of event-time after its first
+    copy MAY be re-emitted
     (its state has been reclaimed). That is the honest contract at scale
     — pick the window the pipeline actually needs (dedup of replayed
     batches needs hours, not forever) and let the batch tier repair
     beyond it, exactly like the late-data contract of the other
     streaming operators."""
-    stream = parquet_source(spark, schema, input_path, ts_col, delay)
+    stream = parquet_source(spark, schema, input_path, "ts", "90 days")
     return start_drain(
         stream.dropDuplicatesWithinWatermark(keys), output_path,
         checkpoint_path,
@@ -123,31 +121,26 @@ def stream_ohlc_1h(
     output_path: str,
     checkpoint_path: str,
     schema: str,
-    watermark: str = "2 hours",
-    bucket: str = "1 hour",
-    group_col: str = "series_id",
-    ts_col: str = "ts",
-    value_col: str = "v",
 ):
-    """File-source stream -> per-(group, window) OHLC candle sink: the
+    """File-source stream -> per-(series, hour) OHLC candle sink: the
     streaming twin of ``operators/temporal.py ohlc_bars`` with the SAME
     deterministic struct tie-breaks. ``min_by``/``max_by`` are
     declarative aggregates with a merge, so the state store composes
     incremental partials exactly like the batch map-side partials — any
     emitted candle is bit-identical to the batch candle over the same
     rows (exact when the caller feeds integer values), which the driver
-    drain asserts. The watermark bounds candle state lifetime; append
+    drain asserts. The 2-hour watermark bounds candle state lifetime; append
     mode emits a candle once its window can no longer change, so a
     restart continues from checkpointed state without re-emitting."""
-    stream = parquet_source(spark, schema, input_path, ts_col, watermark)
+    stream = parquet_source(spark, schema, input_path, "ts", "2 hours")
     pre = stream.select(
-        group_col,
-        ts_col,
-        F.unix_micros(F.col(ts_col)).alias("_t"),
-        F.col(value_col).alias("_v"),
+        "series_id",
+        "ts",
+        F.unix_micros(F.col("ts")).alias("_t"),
+        F.col("v").alias("_v"),
     )
     agg = (
-        pre.groupBy(group_col, F.window(ts_col, bucket).alias("w"))
+        pre.groupBy("series_id", F.window("ts", "1 hour").alias("w"))
         .agg(
             F.min_by("_v", F.struct(F.col("_t"), F.col("_v"))).alias("open"),
             F.max("_v").alias("high"),
@@ -159,7 +152,7 @@ def stream_ohlc_1h(
             F.sum("_v").alias("volume"),
         )
         .select(
-            group_col,
+            "series_id",
             F.col("w.start").alias("bucket_ts"),
             "open",
             "high",

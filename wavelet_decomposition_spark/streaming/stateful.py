@@ -49,6 +49,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..plans.session import worker_kernel
 from . import parquet_source, start_drain
 
 
@@ -69,7 +70,7 @@ def _drain_with_state(spark, schema, input_path, output_path,
     out = parquet_source(spark, schema, input_path).groupBy(
         key
     ).applyInPandasWithState(
-        fn,
+        worker_kernel(fn),
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="append",
