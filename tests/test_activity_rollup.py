@@ -56,7 +56,7 @@ def test_salted_conversation_stats_match_plain(spark):
 
 def test_gapfill_zero_dense_grid(spark):
     raw = _raw(spark, n=10, seed=3)
-    filled = gapfill.gapfill_zero(raw, ["turns", "chars", "tool_calls"])
+    filled = gapfill.gapfill_zero(raw)
     pdf = filled.toPandas()
     for conv, g in pdf.groupby("conv_id"):
         ts = g["bucket_ts"].sort_values().reset_index(drop=True)
@@ -138,7 +138,7 @@ def test_resample_linear_relational_matches_np_interp(spark, n, dpd, ndpd):
         "grp string, idx int, v double",
     )
     out = (
-        resample_linear_relational(df, "grp", "idx", "v", dpd, ndpd)
+        resample_linear_relational(df, "grp", dpd, ndpd)
         .orderBy("idx")
         .toPandas()
     )

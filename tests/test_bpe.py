@@ -19,7 +19,7 @@ def corpus(spark):
 def test_classic_first_merges(spark, corpus):
     from wavelet_decomposition_spark.operators.bpe import bpe_train
 
-    fit = bpe_train(corpus, n_merges=4, min_freq=2, verify=True)
+    fit = bpe_train(corpus, n_merges=4, verify=True)
     merges = [(a, b) for a, b, _ in fit["merges"]]
     # 'lo' then 'low' dominate this corpus by construction
     assert merges[0] == ("l", "o")
@@ -37,7 +37,7 @@ def test_distributed_equals_reference(spark, corpus):
     wc = {
         r["word"]: r["count"] for r in word_counts(corpus).collect()
     }
-    got = bpe_train(corpus, n_merges=10, min_freq=2)["merges"]
+    got = bpe_train(corpus, n_merges=10)["merges"]
     want = bpe_train_reference(wc, 10, 2)
     assert got == want
 
@@ -45,8 +45,8 @@ def test_distributed_equals_reference(spark, corpus):
 def test_determinism_under_repartition(spark, corpus):
     from wavelet_decomposition_spark.operators.bpe import bpe_train
 
-    a = bpe_train(corpus, n_merges=6, min_freq=2)["merges"]
-    b = bpe_train(corpus.repartition(5), n_merges=6, min_freq=2)["merges"]
+    a = bpe_train(corpus, n_merges=6)["merges"]
+    b = bpe_train(corpus.repartition(5), n_merges=6)["merges"]
     assert a == b
 
 
@@ -70,7 +70,7 @@ def test_bookkeeping_on_run_heavy_corpus(spark):
         [(1, "aaaa aaa aa baab aab"), (2, "aaaa bb aabb aaa")],
         "doc_id long, text string",
     )
-    fit = bpe_train(df, n_merges=6, min_freq=2, verify=True)
+    fit = bpe_train(df, n_merges=6, verify=True)
     assert fit["bookkeeping_ok"]
     assert fit["merges"][0][:2] == ("a", "a")
 
@@ -81,7 +81,7 @@ def test_min_freq_stops_early(spark):
     df = spark.createDataFrame(
         [(1, "ab cd ef gh")], "doc_id long, text string"
     )
-    fit = bpe_train(df, n_merges=10, min_freq=2)
+    fit = bpe_train(df, n_merges=10)
     assert fit["merges"] == []  # every pair occurs once
 
 
@@ -91,7 +91,7 @@ def test_encode_counts_and_monotonicity(spark, corpus):
         bpe_train,
     )
 
-    fit = bpe_train(corpus, n_merges=8, min_freq=2)
+    fit = bpe_train(corpus, n_merges=8)
     enc = {r.doc_id: r for r in bpe_encode(corpus, fit["merges"]).collect()}
     raw = {r.doc_id: r for r in bpe_encode(corpus, []).collect()}
     for d in enc:

@@ -71,7 +71,7 @@ def test_spark_kernel_segments_and_dual_path(spark):
     rows += [("b", i, 1.5) for i in range(50)]
     df = spark.createDataFrame(rows, "sid string, pos int, v double")
     out = pelt_changepoints(
-        df, ["sid"], "pos", "v", beta=10.0, verify=True
+        df, ["sid"], "pos", beta=10.0
     ).toPandas()
     a = out[out.sid == "a"].sort_values("seg_idx")
     assert list(a.start_pos) == [0] + want

@@ -66,7 +66,7 @@ def test_quality_stats_match_python(spark):
     df = _docs_df(spark)
     got = {
         r["doc_id"]: (r["n_tri"], r["n_rare"], r["df_mass"])
-        for r in trigram_quality(df, rare_max=2).collect()
+        for r in trigram_quality(df).collect()
     }
     prof = {}
     for _, t in DOCS:

@@ -33,7 +33,7 @@ def test_superset_no_undercount_and_band(spark):
     assert true_hot == {"hot", "warm"}  # fixture sanity
 
     out = cms_heavy_hitters(
-        spark.createDataFrame(pdf), "k", support=support, depth=4, width=8192
+        spark.createDataFrame(pdf), "k", support=support, width=8192
     ).toPandas()
     got = dict(zip(out["key"], out["estimate"]))
     # superset of the true hot set

@@ -66,6 +66,27 @@ def test_cc_long_chain(spark):
     assert (cc["component"] == 0).all()
 
 
+def test_cc_round_is_one_job(spark):
+    """Every star round (and the input edge list) is checkpointed lazily, so
+    each round's signature aggregate is the one job that materializes it.
+    Pinned on a 65-node chain: 62 jobs under the test session's confs (an
+    eager checkpoint adds one job per round: 70)."""
+    n = 65
+    pdf = pd.DataFrame(
+        {"id_a": np.arange(n - 1), "id_b": np.arange(1, n)}
+    ).astype(np.int64)
+    src = spark.createDataFrame(pdf)
+    sc = spark.sparkContext
+    sc.setJobGroup("test_cc_round_is_one_job", "connected_components jobs")
+    try:
+        cc = connected_components(src).toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test_cc_round_is_one_job")
+    assert len(cc) == n and (cc["component"] == 0).all()
+    assert len(jobs) == 62
+
+
 def test_dedup_clusters_singletons_and_canonical(spark):
     nodes = spark.createDataFrame(
         pd.DataFrame({"doc_id": np.arange(10, dtype=np.int64)})

@@ -44,7 +44,7 @@ def _tables(spark):
 def test_decontaminate_planted(spark):
     corpus, bench = _tables(spark)
     out = (
-        decontaminate(corpus, bench, n=3)
+        decontaminate(corpus, bench)
         .toPandas()
         .set_index("doc_id")
         .sort_index()
@@ -61,8 +61,8 @@ def test_decontaminate_planted(spark):
 
 def test_decontaminate_hash_equals_raw(spark):
     corpus, bench = _tables(spark)
-    hashed = decontaminate(corpus, bench, n=3, on_hash=True).toPandas()
-    raw = decontaminate(corpus, bench, n=3, on_hash=False).toPandas()
+    hashed = decontaminate(corpus, bench, on_hash=True).toPandas()
+    raw = decontaminate(corpus, bench, on_hash=False).toPandas()
     merged = hashed.merge(raw, on="doc_id", suffixes=("_h", "_r"))
     assert (merged["n_overlap_h"] == merged["n_overlap_r"]).all()
 
@@ -70,7 +70,7 @@ def test_decontaminate_hash_equals_raw(spark):
 def test_decontaminate_plan_broadcasts_benchmark(spark):
     corpus, bench = _tables(spark)
     plan = (
-        decontaminate(corpus, bench, n=3)
+        decontaminate(corpus, bench)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan

@@ -132,9 +132,7 @@ def test_embedding_near_dup(spark):
     extra = spark.createDataFrame(
         [(990001, noisy, 0)], "vec_id long, embedding array<float>, label int"
     )
-    pairs = dedup.embedding_near_dup_pairs(
-        emb.unionByName(extra), threshold=0.999
-    ).toPandas()
+    pairs = dedup.embedding_near_dup_pairs(emb.unionByName(extra)).toPandas()
     assert ((pairs.id_a == 0) & (pairs.id_b == 990001)).any()
 
 
@@ -165,7 +163,7 @@ def test_lsh_topk_recall(spark):
     exact = similarity.brute_force_topk(emb, queries, k=5).toPandas()
     # uniform random embeddings are LSH's worst case (neighbors barely
     # correlate with buckets) — use wide buckets to test the mechanism
-    approx = similarity.lsh_topk(emb, queries, k=5, n_planes=2).toPandas()
+    approx = similarity.lsh_topk(emb, queries, n_planes=2).toPandas()
     total, hit = 0, 0
     for qid in exact["query_id"].unique():
         want = set(exact[exact.query_id == qid]["vec_id"])
@@ -188,7 +186,7 @@ def test_ivf_topk_full_probe_equals_brute_force(spark):
         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     )
     full = (
-        similarity.ivf_topk(emb, queries, k=5, n_cells=8, n_probe=8)
+        similarity.ivf_topk(emb, queries, n_probe=8)
         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     )
     assert list(full["vec_id"]) == list(exact["vec_id"])
@@ -200,7 +198,7 @@ def test_ivf_topk_recall(spark):
     queries = emb.limit(5).select(F.col("vec_id").alias("query_id"), "embedding")
     exact = similarity.brute_force_topk(emb, queries, k=5).toPandas()
     approx = similarity.ivf_topk(
-        emb, queries, k=5, n_cells=8, n_probe=4
+        emb, queries, n_probe=4
     ).toPandas()
     total, hit = 0, 0
     for qid in exact["query_id"].unique():

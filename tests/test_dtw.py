@@ -75,7 +75,7 @@ def test_spark_allpairs_matches_numpy(spark):
     data = {f"s{j}": rng.normal(size=64) for j in range(4)}
     out = (
         dtw_allpairs(
-            _series_df(spark, data), "k", "o", "v",
+            _series_df(spark, data), "k", "o",
             radius=8, wide_radius=32, include_self=True,
         )
         .toPandas()
@@ -101,11 +101,11 @@ def test_spark_allpairs_matches_numpy(spark):
 def test_candidates_path_scores_only_requested_pairs(spark):
     rng = np.random.default_rng(9)
     data = {f"s{j}": rng.normal(size=32) for j in range(5)}
-    packed = pack_series(_series_df(spark, data), "k", "o", "v")
+    packed = pack_series(_series_df(spark, data), "k", "o")
     cand = spark.createDataFrame(
         pd.DataFrame({"key_a": ["s0", "s1"], "key_b": ["s3", "s4"]})
     )
-    out = dtw_for_candidates(packed, cand, radius=4).toPandas()
+    out = dtw_for_candidates(packed, cand).toPandas()
     assert sorted(zip(out["key_a"], out["key_b"])) == [
         ("s0", "s3"), ("s1", "s4")
     ]
@@ -118,7 +118,7 @@ def test_candidates_path_scores_only_requested_pairs(spark):
 def test_unequal_lengths_euclid_nan(spark):
     data = {"a": np.arange(10.0), "b": np.arange(14.0)}
     out = dtw_allpairs(
-        _series_df(spark, data), "k", "o", "v", radius=2
+        _series_df(spark, data), "k", "o", radius=2
     ).toPandas()
     assert len(out) == 1
     assert np.isnan(out["euclid"].iloc[0])

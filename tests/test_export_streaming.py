@@ -20,7 +20,7 @@ def test_streaming_1m_tier_matches_batch(spark, tmp_path):
     ).withColumn("ts", F.col("ts") + F.expr("interval 2 hours"))
     sentinel.write.mode("append").parquet(in_path)
 
-    q = stream_rollup_1m(spark, in_path, out_path, ckpt, watermark="10 minutes")
+    q = stream_rollup_1m(spark, in_path, out_path, ckpt)
     await_drain(q, 120)
 
     got = spark.read.parquet(out_path).filter(F.col("conv_id") != "sentinel")
@@ -56,7 +56,7 @@ def test_watermark_drops_late_data_across_restarts(spark, tmp_path):
     # run 1: two turns in the 12:00 window + a clock turn at 12:30 that
     # advances the watermark to 12:20 (10-minute delay)
     tx_rows([t(0, 10), t(0, 20), t(30)]).write.mode("append").parquet(in_path)
-    q = stream_rollup_1m(spark, in_path, out_path, ckpt, watermark="10 minutes")
+    q = stream_rollup_1m(spark, in_path, out_path, ckpt)
     await_drain(q, 120)
 
     # run 2 (same checkpoint): one LATE turn at 12:05 — beyond the 12:20
@@ -65,7 +65,7 @@ def test_watermark_drops_late_data_across_restarts(spark, tmp_path):
     tx_rows([t(5), t(25), datetime(2024, 1, 1, 13, 0)]).write.mode(
         "append"
     ).parquet(in_path)
-    q = stream_rollup_1m(spark, in_path, out_path, ckpt, watermark="10 minutes")
+    q = stream_rollup_1m(spark, in_path, out_path, ckpt)
     await_drain(q, 120)
 
     got = {

@@ -60,9 +60,7 @@ def _retention_brute(df, period_s=WEEK):
 
 def test_cohort_retention_parity(spark):
     df = _events()
-    got = cohort_retention(
-        spark.createDataFrame(df), cohort_event="signup", period="1 week"
-    ).toPandas()
+    got = cohort_retention(spark.createDataFrame(df)).toPandas()
     want = _retention_brute(df)
     cols = ["cohort_ts", "period_k", "n_active", "n_cohort"]
     got_c = got[cols].sort_values(cols).reset_index(drop=True)
@@ -89,9 +87,7 @@ def test_cohort_excludes_pre_cohort_events(spark):
             "event_type": ["click", "signup"],
         }
     )
-    got = cohort_retention(
-        spark.createDataFrame(df), cohort_event="signup"
-    ).toPandas()
+    got = cohort_retention(spark.createDataFrame(df)).toPandas()
     assert (got.period_k >= 0).all()
     assert len(got) == 1 and got.n_active.iloc[0] == 1
 
@@ -117,7 +113,7 @@ def test_funnel_parity(spark):
     df = _events(seed=29)
     steps = ["signup", "click", "purchase"]
     got = (
-        funnel(spark.createDataFrame(df), steps=steps, window="7 days")
+        funnel(spark.createDataFrame(df), steps=steps)
         .toPandas()
         .sort_values("step_idx")
         .reset_index(drop=True)
@@ -152,7 +148,6 @@ def test_funnel_ordering_and_window(spark):
         funnel(
             spark.createDataFrame(df),
             steps=["signup", "click", "purchase"],
-            window="7 days",
         )
         .toPandas()
         .sort_values("step_idx")

@@ -41,7 +41,6 @@ def clustered_path(spark, table_pdf):
     write_clustered(
         spark.createDataFrame(table_pdf).repartition(16),
         path,
-        cluster_cols=["user_id"],
         target_rows_per_file=30_000,
     )
     yield path
@@ -159,7 +158,7 @@ def test_zorder_write_prunes_both_dims(spark, tmp_path):
         "id", "1000000 + CAST(id / 16 AS BIGINT) AS x", "id % 64 AS y"
     )
     path = str(tmp_path / "z")
-    write_zorder(df, path, "x", "y", target_rows_per_file=3000)
+    write_zorder(df, path, target_rows_per_file=3000)
     pfs = {}
     for dim in ("x", "y"):
         st = layout_stats(path, dim)

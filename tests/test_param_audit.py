@@ -1,15 +1,22 @@
-"""No unused options: every defaulted parameter of a package function is set
-by some call in the repo's Python (the package, the contract module,
-``bench.py``, ``tools/``, ``enginebench/`` and the tests). A parameter no
-caller sets only ever takes its default, so it is a constant written as an
-option; this test keeps such options from growing back.
+"""No single-valued options: every parameter of a package function, with or
+without a default, takes at least two different values over the calls in
+the repo's Python (the package, the contract module, ``bench.py``,
+``tools/``, ``enginebench/`` and the tests). A parameter every call gives
+the same value is a constant written as an option; this test keeps such
+options from growing back.
 
-The scan is static and matches callees by name. A parameter counts as set
-when a call passes it by keyword or by position, when the call spreads
-``*args`` or ``**kw``, or when it reaches the function through
-``Ctx.call(name, fn, ...)`` or ``submit(fn, ...)``. A function referenced
-other than by being called (handed to ``applyInPandas``, kept in a table,
-wrapped) may be called with any arguments, so it is skipped.
+The scan is static and matches callees by name. A call gives a parameter
+the literal it passes by keyword or by position; a call that omits it gives
+its default. A non-literal argument, or a call that spreads ``*args`` or
+``**kw``, counts as a second value. Calls reach a function directly or
+through ``Ctx.call(name, fn, ...)`` and ``submit(fn, ...)``. A call counts
+only for the package function it reaches: a module that defines a function
+or method of the callee's name calls its own, not the package's. Tests
+count as callers. A parameter no call reaches has no value and is not
+flagged: dunder methods and the ``@query`` bodies are reached through the
+language or a registry. A function that non-test code references other
+than by calling it (a kernel handed to Spark, a table entry) may be called
+with any arguments, so it is skipped; a test's reference skips nothing.
 
 Run ``python tests/test_param_audit.py`` to list the findings."""
 
@@ -18,13 +25,15 @@ import os
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-PACKAGE = os.path.join(ROOT, "wavelet_decomposition_spark")
+PACKAGE = "wavelet_decomposition_spark"
+TESTS = "tests"
 SKIP_DIRS = {".git", ".claude", "__pycache__", ".enginebench", ".pytest_cache"}
 
 # deployment paths: set by whoever deploys the engine, not by the repo
 EXEMPT_PARAMS = {"root", "scratch_dir"}
 # test oracles kept with their options
-EXEMPT_FUNCS = {"calc_epn", "dictionary_width", "scale_sizes", "column_floats"}
+EXEMPT_FUNCS = {"calc_epn", "dictionary_width", "scale_sizes", "column_floats",
+                "best_translation", "bpe_train_reference", "transcripts_pandas"}
 EXEMPT_MODULES = {os.path.join("io", "reference_data.py")}
 
 # (callee attribute, index of the function argument) of the call indirections
@@ -52,38 +61,72 @@ def _name(node):
     return None
 
 
-def _defaulted(fn):
-    """(name, position or None) of each parameter that has a default; the
-    position counts from the first argument a caller passes."""
+def _functions(tree):
+    return [n for n in ast.walk(tree) if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+
+
+def _literal(node):
+    """The literal ``node`` spells, as a comparable key, or None."""
+    try:
+        return repr(ast.literal_eval(node))
+    except (ValueError, TypeError, SyntaxError):
+        return None
+
+
+def _params(fn):
+    """(name, position or None, default node or None) of each parameter a
+    caller fills; the position counts from the first argument a caller
+    passes."""
     a = fn.args
     pos = a.posonlyargs + a.args
     skip = 1 if pos and pos[0].arg in ("self", "cls") else 0
-    out = [(p.arg, i - skip) for i, p in enumerate(pos)
-           if i >= len(pos) - len(a.defaults)]
-    out += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    first_default = len(pos) - len(a.defaults)
+    out = [(p.arg, i - skip, a.defaults[i - first_default] if i >= first_default else None)
+           for i, p in enumerate(pos) if i >= skip]
+    out += [(p.arg, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)]
     return out
 
 
-def package_functions():
-    """Every function and method in the package with a defaulted parameter:
-    (module path relative to the package, name, [(param, position)])."""
+def package_functions(root):
+    """Every function and method in the package that takes a parameter:
+    (module path relative to the package, name, params)."""
     found = []
-    for path in _py_files(PACKAGE):
-        rel = os.path.relpath(path, PACKAGE)
-        for node in ast.walk(_parse(path)):
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                params = _defaulted(node)
-                if params:
-                    found.append((rel, node.name, params))
+    for path in _py_files(os.path.join(root, PACKAGE)):
+        rel = os.path.relpath(path, os.path.join(root, PACKAGE))
+        for node in _functions(_parse(path)):
+            params = _params(node)
+            if params:
+                found.append((rel, node.name, params))
     return found
 
 
-def _calls_and_refs():
-    """callee name -> list of (n positional args, keywords, spread), and the
-    set of names used other than as a callee."""
+def _imports(tree):
+    """The names a module binds with ``from ... import``: local name ->
+    imported name, and the local names bound from the package."""
+    names, from_package = {}, set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom):
+            for a in node.names:
+                names[a.asname or a.name] = a.name
+                if (node.module or "").startswith(PACKAGE) or node.level:
+                    from_package.add(a.asname or a.name)
+    return names, from_package
+
+
+def _calls_and_refs(root):
+    """callee name -> list of (calling module, positional args, keyword
+    args, spread, whether the call reaches a function of the calling module
+    that has the callee's name); and the names non-test code uses other than
+    as a callee."""
     calls, refs = {}, set()
-    for path in _py_files(ROOT):
+    for path in _py_files(root):
+        rel = os.path.relpath(path, root)
+        is_test = rel.split(os.sep)[0] == TESTS
         tree = _parse(path)
+        names, from_package = _imports(tree)
+        # a call to one of these by bare name or through ``self``/``cls``
+        # reaches the module's own function
+        own = {f.name for f in _functions(tree)} - from_package
         callee_nodes = set()
         for node in ast.walk(tree):
             if isinstance(node, ast.Attribute):
@@ -93,49 +136,153 @@ def _calls_and_refs():
             if not isinstance(node, ast.Call):
                 continue
             func, args = node.func, node.args
-            target = _name(func)
             callee_nodes.add(id(func))
-            at = INDIRECT.get(target)
+            at = INDIRECT.get(_name(func))
             if at is not None and len(args) > at and _name(args[at]):
-                callee_nodes.add(id(args[at]))
-                target, args = _name(args[at]), args[at + 1:]
+                func, args = args[at], args[at + 1:]
+                callee_nodes.add(id(func))
+            target = _name(func)
+            local = target in own and (isinstance(func, ast.Name) or (
+                isinstance(func.value, ast.Name) and func.value.id in ("self", "cls")))
+            if isinstance(func, ast.Name):
+                target = names.get(target, target)
             spread = (any(isinstance(x, ast.Starred) for x in args)
                       or any(k.arg is None for k in node.keywords))
             calls.setdefault(target, []).append(
-                (len(args), {k.arg for k in node.keywords}, spread))
+                (rel, args, {k.arg: k.value for k in node.keywords if k.arg}, spread, local))
+        if is_test:
+            continue
         for node in ast.walk(tree):
             if isinstance(node, (ast.Name, ast.Attribute)) and id(node) not in callee_nodes:
                 if isinstance(node.ctx, ast.Load):
-                    refs.add(_name(node))
+                    refs.add(names.get(_name(node), _name(node)))
     return calls, refs
 
 
-def findings():
-    calls, refs = _calls_and_refs()
-    out = []
-    for rel, fname, params in package_functions():
+def _single_valued(pname, pos, default, sites):
+    """True when every call site gives the parameter one and the same
+    literal value (an omitted argument gives the default)."""
+    values = set()
+    for args, kws, spread in sites:
+        if spread:
+            return False
+        if pname in kws:
+            arg = kws[pname]
+        elif pos is not None and pos < len(args):
+            arg = args[pos]
+        elif default is not None:
+            arg = default
+        else:
+            continue  # not a call this function can bind
+        value = _literal(arg)
+        if value is None and arg is not default:
+            return False
+        values.add(value if value is not None else ast.dump(arg))
+        if len(values) > 1:
+            return False
+    return len(values) == 1
+
+
+def audit(root):
+    """(number of parameters audited, the single-valued ones as
+    ``module::function(parameter)``) for the repo at ``root``."""
+    calls, refs = _calls_and_refs(root)
+    audited, single = 0, []
+    for rel, fname, params in package_functions(root):
         if fname in refs or fname in EXEMPT_FUNCS or rel in EXEMPT_MODULES:
             continue
-        sites = calls.get(fname, [])
-        for pname, pos in params:
+        own = os.path.join(PACKAGE, rel)
+        sites = [(args, kws, spread) for mod, args, kws, spread, local in calls.get(fname, [])
+                 if mod == own or not local]
+        for pname, pos, default in params:
             if pname in EXEMPT_PARAMS:
                 continue
-            if not any(spread or pname in kws or (pos is not None and n > pos)
-                       for n, kws, spread in sites):
-                out.append(f"{rel}::{fname}({pname})")
-    return out
+            audited += 1
+            if _single_valued(pname, pos, default, sites):
+                single.append(f"{rel}::{fname}({pname})")
+    return audited, single
 
 
-def test_every_defaulted_parameter_is_set_by_some_call():
-    unset = findings()
-    assert not unset, (f"{len(unset)} defaulted parameters no call sets; make "
-                       "each the constant it always is:\n" + "\n".join(unset))
+def findings(root=ROOT):
+    return audit(root)[1]
+
+
+def test_every_parameter_takes_two_values():
+    single = findings()
+    assert not single, (f"{len(single)} parameters take one value at every call; "
+                        "make each the constant it always is:\n" + "\n".join(single))
+
+
+def _plant(tmp_path, files):
+    """Write ``{relative path: source}`` under ``tmp_path`` and audit it."""
+    for rel, src in files.items():
+        path = tmp_path / rel
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_text(src)
+    return findings(str(tmp_path))
+
+
+MOD = f"{PACKAGE}/mod.py"
+
+
+def test_rule_required_parameter_with_one_literal_is_flagged(tmp_path):
+    got = _plant(tmp_path, {
+        MOD: "def f(x, col):\n    return x\n",
+        "tools/run.py": "f(1, 'a')\nf(2, 'a')\n",
+    })
+    assert got == ["mod.py::f(col)"]
+
+
+def test_rule_default_passed_only_its_own_value_is_flagged(tmp_path):
+    got = _plant(tmp_path, {
+        MOD: "def g(x, n=5):\n    return x\n",
+        "tools/run.py": "g(1, n=5)\ng(2)\n",
+    })
+    assert got == ["mod.py::g(n)"]
+
+
+def test_rule_second_value_makes_an_option(tmp_path):
+    got = _plant(tmp_path, {
+        MOD: ("def two(x, col):\n    return x\n"
+              "def named(x, col):\n    return x\n"
+              "def star(x, col):\n    return x\n"
+              "def kw(x, col):\n    return x\n"),
+        "tools/run.py": ("two(1, 'a')\ntwo(2, 'b')\n"
+                         "named(1, 'a')\nnamed(2, name)\n"
+                         "star(1, 'a')\nstar(*args)\n"
+                         "kw(1, 'a')\nkw(2, **opts)\n"),
+    })
+    assert got == []
+
+
+def test_rule_test_reference_does_not_hide_a_function(tmp_path):
+    got = _plant(tmp_path, {
+        MOD: "def h(x, col='a'):\n    return x\n",
+        f"{TESTS}/test_h.py": ("from wavelet_decomposition_spark.mod import h\n"
+                               "for fn in (h,):\n    fn(1)\n"
+                               "h(2)\nh(3)\n"),
+    })
+    assert got == ["mod.py::h(col)"]
+
+
+def test_rule_calling_module_own_function_is_not_a_caller(tmp_path):
+    got = _plant(tmp_path, {
+        MOD: "def k(x, mode='a'):\n    return x\nk(1)\nk(2)\n",
+        "tools/run.py": ("def k(x, mode='a'):\n    return x\n"
+                         "class Run:\n"
+                         "    def k(self, mode):\n        return mode\n"
+                         "    def go(self):\n        return self.k(mode='c')\n"
+                         "k(1, mode='b')\n"),
+    })
+    assert got == ["mod.py::k(mode)"]
 
 
 if __name__ == "__main__":
-    fns = package_functions()
-    print(f"{sum(len(p) for _, _, p in fns)} defaulted parameters in {len(fns)} functions")
-    unset = findings()
-    print("\n".join(unset))
-    print(f"{len(unset)} set by no call", file=sys.stderr)
-    sys.exit(1 if unset else 0)
+    fns = package_functions(ROOT)
+    n = sum(len(p) for _, _, p in fns)
+    d = sum(1 for _, _, p in fns for _, _, default in p if default is not None)
+    audited, single = audit(ROOT)
+    print(f"{n} parameters ({d} defaulted) in {len(fns)} functions, {audited} audited")
+    print("\n".join(single))
+    print(f"{len(single)} take one value at every call", file=sys.stderr)
+    sys.exit(1 if single else 0)

@@ -95,12 +95,12 @@ def test_sax_words_invariant_under_power_of_two_scaling(
 
     base = {
         r.window_id: r.word
-        for r in sax_words(_series_df(spark, vals), "vm").collect()
+        for r in sax_words(_series_df(spark, vals)).collect()
     }
     scaled = {
         r.window_id: r.word
         for r in sax_words(
-            _series_df(spark, [v * scale for v in vals]), "vm"
+            _series_df(spark, [v * scale for v in vals])
         ).collect()
     }
     assert base == scaled

@@ -140,9 +140,9 @@ def test_weighted_sample_planted_dominance_and_determinism(spark):
 
     rows = [(i, 1.0) for i in range(200)] + [(1000, 1e12)]
     df = spark.createDataFrame(rows, "doc_id long, w double")
-    s1 = weighted_sample(df, k=10, weight_col="w", seed=7)
+    s1 = weighted_sample(df, k=10, seed=7)
     s2 = weighted_sample(
-        df.repartition(13), k=10, weight_col="w", seed=7
+        df.repartition(13), k=10, seed=7
     )
     ids1 = sorted(r.doc_id for r in s1.collect())
     ids2 = sorted(r.doc_id for r in s2.collect())
@@ -157,9 +157,9 @@ def test_weighted_sample_seed_changes_draw(spark):
 
     df = spark.range(500).selectExpr("id AS doc_id", "1.0 AS w")
     a = {r.doc_id for r in
-         weighted_sample(df, 20, "w", seed=1).collect()}
+         weighted_sample(df, 20, seed=1).collect()}
     b = {r.doc_id for r in
-         weighted_sample(df, 20, "w", seed=2).collect()}
+         weighted_sample(df, 20, seed=2).collect()}
     assert a != b
 
 
@@ -175,11 +175,11 @@ def test_weighted_sample_excludes_nonpositive_and_validates_k(spark):
         "doc_id long, w double",
     )
     got = sorted(
-        r.doc_id for r in weighted_sample(df, 10, "w").collect()
+        r.doc_id for r in weighted_sample(df, 10).collect()
     )
     assert got == [1, 5]
     with pytest.raises(ValueError):
-        weighted_sample(df, 0, "w")
+        weighted_sample(df, 0)
 
 
 def test_weighted_sample_plan_is_take_ordered(spark):
@@ -188,7 +188,7 @@ def test_weighted_sample_plan_is_take_ordered(spark):
     )
 
     df = spark.range(1000).selectExpr("id AS doc_id", "1.0 AS w")
-    plan = weighted_sample(df, 5, "w")._jdf.queryExecution(
+    plan = weighted_sample(df, 5)._jdf.queryExecution(
     ).executedPlan().toString()
     assert "TakeOrderedAndProject" in plan  # top-k merge, no global sort
 
@@ -203,6 +203,6 @@ def test_weighted_sample_null_keys_excluded(spark):
         "doc_id long, w double",
     )
     got = sorted(
-        r.doc_id for r in weighted_sample(df, 10, "w").collect()
+        r.doc_id for r in weighted_sample(df, 10).collect()
     )
     assert got == [1, 2]

@@ -48,7 +48,7 @@ def _numpy_sax(values, window_len, n_segments, alphabet):
 def test_paa_segment_means_exact(spark):
     vals = list(range(128))
     out = (
-        paa(_series_df(spark, vals), "vm", window_len=64, n_segments=8)
+        paa(_series_df(spark, vals), n_segments=8)
         .orderBy("window_id", "seg_id")
         .collect()
     )
@@ -62,22 +62,21 @@ def test_paa_segment_means_exact(spark):
 
 def test_incomplete_tail_window_dropped(spark):
     out = paa(
-        _series_df(spark, range(100)), "vm", window_len=64, n_segments=8
+        _series_df(spark, range(100)), n_segments=8
     ).collect()
     assert {r.window_id for r in out} == {0}
 
 
 def test_indivisible_window_raises(spark):
     with pytest.raises(ValueError):
-        paa(_series_df(spark, range(64)), "vm", 64, 7)
+        paa(_series_df(spark, range(64)), 7)
     with pytest.raises(ValueError):
-        sax_words(_series_df(spark, range(64)), "vm", alphabet=7)
+        sax_words(_series_df(spark, range(64)), alphabet=7)
 
 
 def test_constant_series_is_middle_letter(spark):
     out = sax_words(
-        _series_df(spark, [5] * 128), "vm",
-        window_len=64, n_segments=8, alphabet=5,
+        _series_df(spark, [5] * 128), alphabet=5,
     ).collect()
     assert sorted(r.word for r in out) == ["cccccccc", "cccccccc"]
 
@@ -90,8 +89,7 @@ def test_words_match_independent_numpy_recompute(spark):
         got = {
             r.window_id: r.word
             for r in sax_words(
-                _series_df(spark, vals), "vm",
-                window_len=64, n_segments=8, alphabet=a,
+                _series_df(spark, vals), alphabet=a,
             ).collect()
         }
         assert got == exp, f"alphabet={a}"
@@ -101,7 +99,7 @@ def test_multi_group_isolation_and_window_start(spark):
     a = _series_df(spark, range(64), sid="a")
     b = _series_df(spark, [100 - i for i in range(64)], sid="b")
     out = sax_words(
-        a.unionByName(b), "vm", window_len=64, n_segments=8
+        a.unionByName(b)
     ).collect()
     by = {r.series_id: r for r in out}
     assert set(by) == {"a", "b"}
@@ -129,8 +127,7 @@ def test_rare_words_find_planted_anomaly(spark):
         else:
             vals += day
     out = sax_rare_words(
-        _series_df(spark, vals), "vm", k=1,
-        window_len=64, n_segments=8, alphabet=5,
+        _series_df(spark, vals), k=1,
     ).collect()
     assert len(out) == 1
     assert out[0].window_id == 3 and out[0].word_freq == 1
@@ -145,8 +142,8 @@ def test_rare_words_deterministic_tiebreak_and_k(spark):
     # pick the lowest window_ids
     vals = list(range(64)) * 4
     out = sax_rare_words(
-        _series_df(spark, vals), "vm", k=2, window_len=64, n_segments=8
+        _series_df(spark, vals), k=2
     ).collect()
     assert sorted(r.window_id for r in out) == [0, 1]
     with pytest.raises(ValueError):
-        sax_rare_words(_series_df(spark, vals), "vm", k=0)
+        sax_rare_words(_series_df(spark, vals), k=0)

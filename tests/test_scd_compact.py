@@ -23,7 +23,7 @@ def test_scd2_runs_and_intervals(spark):
         ("u2", _ts(5), "X", 5),
     ]
     df = spark.createDataFrame(rows, "k string, ts timestamp, attr string, i int")
-    out = changes_to_scd2(df, "k", "attr", "ts", tiebreak="i").collect()
+    out = changes_to_scd2(df, "k", "attr", tiebreak="i").collect()
     u1 = sorted([r for r in out if r.k == "u1"], key=lambda r: r.version)
     assert [(r.version, r.attr, r.n_events) for r in u1] == [
         (1, "A", 2), (2, "B", 1), (3, "A", 1)]
@@ -44,7 +44,7 @@ def test_scd2_null_attr_runs(spark):
         ("u", _ts(4), None, 4),
     ]
     df = spark.createDataFrame(rows, "k string, ts timestamp, attr string, i int")
-    out = sorted(changes_to_scd2(df, "k", "attr", "ts", "i").collect(),
+    out = sorted(changes_to_scd2(df, "k", "attr", "i").collect(),
                  key=lambda r: r.version)
     assert [(r.version, r.attr, r.n_events) for r in out] == [
         (1, None, 2), (2, "A", 1), (3, None, 1)]
@@ -54,7 +54,7 @@ def test_scd2_tiebreak_determinism(spark):
     # two rows at the same ts: tiebreak column decides run order
     rows = [("u", _ts(1), "B", 2), ("u", _ts(1), "A", 1), ("u", _ts(2), "B", 3)]
     df = spark.createDataFrame(rows, "k string, ts timestamp, attr string, i int")
-    out = sorted(changes_to_scd2(df, "k", "attr", "ts", "i").collect(),
+    out = sorted(changes_to_scd2(df, "k", "attr", "i").collect(),
                  key=lambda r: r.version)
     assert [(r.attr, r.n_events) for r in out] == [("A", 1), ("B", 2)]
 
@@ -64,7 +64,7 @@ def test_scd2_single_shuffle(spark):
     version, attr) aggregate, and the final window — one exchange total."""
     rows = [("u%d" % i, _ts(1 + i % 20), "A", i) for i in range(100)]
     df = spark.createDataFrame(rows, "k string, ts timestamp, attr string, i int")
-    out = changes_to_scd2(df, "k", "attr", "ts", "i")
+    out = changes_to_scd2(df, "k", "attr", "i")
     plan = out._jdf.queryExecution().executedPlan().toString()
     n_exchanges = plan.count("Exchange")
     # reused-exchange nodes also print "Exchange"; count real shuffles
@@ -82,7 +82,7 @@ def test_compact_binpacks_and_verifies(spark, tmp_path):
     # fragment the source: 16 writer tasks x 3 days -> ~48 small files
     (df.withColumn("day", F.to_date("bucket_ts")).repartition(16)
        .write.partitionBy("day").parquet(src))
-    out = compact_partitioned(spark, src, dst, "day", target_rows_per_file=400)
+    out = compact_partitioned(spark, src, dst, target_rows_per_file=400)
     got = {str(r.day): r for r in out.collect()}
     assert len(got) == 3
     for r in got.values():
@@ -104,6 +104,6 @@ def test_compact_detects_content_drift(spark, tmp_path):
     drifted = str(tmp_path / "drift")
     (df.withColumn("v", F.col("v") + 1).withColumn("day", F.to_date("bucket_ts"))
        .write.partitionBy("day").parquet(drifted))
-    a = _day_stats(spark, src, "day").collect()[0]
-    b = _day_stats(spark, drifted, "day").collect()[0]
+    a = _day_stats(spark, src).collect()[0]
+    b = _day_stats(spark, drifted).collect()[0]
     assert a.rows == b.rows and a.checksum != b.checksum

@@ -37,7 +37,7 @@ def test_scd2_matches_bruteforce(spark, seqs):
     df = spark.createDataFrame(
         rows, "k string, ts timestamp, attr string, i int"
     )
-    out = changes_to_scd2(df, "k", "attr", "ts", tiebreak="i").collect()
+    out = changes_to_scd2(df, "k", "attr", tiebreak="i").collect()
     by_key = {}
     for r in out:
         by_key.setdefault(r.k, []).append(r)

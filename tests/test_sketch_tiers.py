@@ -60,8 +60,8 @@ def _exact(pdf):
 
 
 def _daily_reads(spark, df):
-    hourly = sketch_tier(df, ["k"], "ts", "v", "uid", "1h")
-    daily = merge_sketch_tier(hourly, ["k"], "1d")
+    hourly = sketch_tier(df, ["k"], "v", "uid", "1h")
+    daily = merge_sketch_tier(hourly, ["k"])
     return read_sketch_tier(daily, PROBS).toPandas()
 
 
@@ -98,7 +98,7 @@ def test_merge_composes_across_levels(spark):
     df, pdf = _fixture(spark, n=8_000, n_keys=1)
     merged = _daily_reads(spark, df)
     direct = read_sketch_tier(
-        sketch_tier(df, ["k"], "ts", "v", "uid", "1d"), PROBS
+        sketch_tier(df, ["k"], "v", "uid", "1d"), PROBS
     ).toPandas()
     m = merged.merge(direct, on=["k", "bucket_ts"], suffixes=("_m", "_d"))
     assert len(m) == len(direct) == len(merged)
@@ -138,7 +138,7 @@ def test_sliding_distinct_sketch_matches_exact_band(spark):
     )
     df = spark.createDataFrame(pdf).repartition(5)
     got = sliding_distinct_sketch(
-        df, ["k"], "ts", "uid", window_hours=6
+        df, ["k"], "uid", window_hours=6
     ).toPandas()
     assert len(got) == pdf["ts"].dt.floor("h").nunique()
     g = pdf.assign(hr=pdf["ts"].dt.floor("h"))
@@ -157,7 +157,7 @@ def test_plan_is_pure_jvm(spark):
     df, _ = _fixture(spark, n=2_000)
     daily = read_sketch_tier(
         merge_sketch_tier(
-            sketch_tier(df, ["k"], "ts", "v", "uid", "1h"), ["k"], "1d"
+            sketch_tier(df, ["k"], "v", "uid", "1h"), ["k"]
         ),
         PROBS,
     )

@@ -56,8 +56,7 @@ def test_incremental_drains_equal_batch(spark, tmp_path_factory):
 
     full = part1.unionByName(part2)
     batch = (
-        ewma(full, value_col="v", alpha=0.25, group_col="series_id",
-             ts_col="bucket_ts")
+        ewma(full, alpha=0.25)
         .toPandas()
         .sort_values(["series_id", "bucket_ts"])
         .reset_index(drop=True)

@@ -59,7 +59,6 @@ def test_stream_ohlc_restart_equals_batch(spark, tmp_path_factory):
     batch = (
         ohlc_bars(
             parts[0].unionByName(parts[1]),
-            bucket="1 hour",
             volume_col="v",
         )
         .toPandas()

@@ -79,7 +79,7 @@ def test_incremental_drains_equal_batch(spark, tmp_path_factory):
         .reset_index(drop=True)
     )
     want = (
-        counter_rate(full, bucket="1 hour")
+        counter_rate(full)
         .drop("rate_per_s")
         .toPandas()
         .sort_values(["series_id", "bucket_ts"])
@@ -133,7 +133,7 @@ def test_stream_dedup_cross_restart(spark, tmp_path_factory):
     )
     spark.createDataFrame(pdf, schema).write.mode("append").parquet(in_p)
     await_drain(
-        stream_dedup(spark, in_p, out_p, ck, schema, keys=["event_id"]), 120
+        stream_dedup(spark, in_p, out_p, ck, schema), 120
     )
     # restart with dups of 1 and 3 plus a new key 4
     pdf2 = pd.DataFrame(
@@ -145,7 +145,7 @@ def test_stream_dedup_cross_restart(spark, tmp_path_factory):
     )
     spark.createDataFrame(pdf2, schema).write.mode("append").parquet(in_p)
     await_drain(
-        stream_dedup(spark, in_p, out_p, ck, schema, keys=["event_id"]), 120
+        stream_dedup(spark, in_p, out_p, ck, schema), 120
     )
     out = spark.read.parquet(out_p).toPandas()
     assert sorted(out.event_id) == [1, 2, 3, 4]

@@ -82,7 +82,7 @@ def _canon(pdf, cols):
 def test_twa_parity(spark):
     df = _samples()
     got = time_weighted_avg(
-        spark.createDataFrame(df), bucket="1 hour"
+        spark.createDataFrame(df)
     ).toPandas()
     want = _twa_brute(df)
     cols = ["series_id", "bucket_ts", "covered_us"]
@@ -107,7 +107,7 @@ def test_twa_segment_spanning_buckets_and_boundary_end(spark):
         }
     )
     got = (
-        time_weighted_avg(spark.createDataFrame(df), bucket="1 hour")
+        time_weighted_avg(spark.createDataFrame(df))
         .toPandas()
         .sort_values("bucket_ts")
         .reset_index(drop=True)
@@ -159,7 +159,7 @@ def test_counter_rate_parity_with_resets(spark):
     df["v"] = df.groupby("series_id")["v"].cumsum()
     reset_rows = rng.random(len(df)) < 0.05
     df.loc[reset_rows, "v"] = df.loc[reset_rows, "v"] * 0.01  # drop -> reset
-    got = counter_rate(spark.createDataFrame(df), bucket="1 hour").toPandas()
+    got = counter_rate(spark.createDataFrame(df)).toPandas()
     want = _rate_brute(df)
     cols = ["series_id", "bucket_ts", "n_deltas", "n_resets"]
     pd.testing.assert_frame_equal(
@@ -270,7 +270,7 @@ def test_twa_mass_conservation_property(spark):
     for seed in (1, 7, 42):
         df = _samples(seed=seed, n=300, n_keys=3)
         out = time_weighted_avg(
-            spark.createDataFrame(df), bucket="1 hour"
+            spark.createDataFrame(df)
         ).toPandas()
         got_mass = (out.twa * out.covered_us).sum()
         want_mass = 0.0
@@ -324,7 +324,7 @@ def test_ohlc_matches_brute(spark):
     df["v"] = (df["v"] * 100).round().astype(np.int64)
     out = (
         ohlc_bars(
-            spark.createDataFrame(df), bucket="1 hour", volume_col="v"
+            spark.createDataFrame(df), volume_col="v"
         )
         .toPandas()
         .sort_values(["series_id", "bucket_ts"])

@@ -78,7 +78,7 @@ def _py_rep(text, n=3):
     ],
 )
 def test_repetition_ratio_matches_python(spark, text):
-    out = repetition_ratio(_df(spark, [(1, text)]), n=3).collect()[0]
+    out = repetition_ratio(_df(spark, [(1, text)])).collect()[0]
     tot, dst, dup, top = _py_rep(text)
     assert out["n_grams"] == tot and out["n_distinct"] == dst
     assert abs(out["dup_ratio"] - dup) < 1e-12

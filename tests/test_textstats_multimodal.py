@@ -31,7 +31,7 @@ def test_lang_id_heuristic(spark):
     got = {
         r.doc_id: r.lang
         for r in df.select(
-            "doc_id", textstats.lang_id("text").alias("lang")
+            "doc_id", textstats.lang_id().alias("lang")
         ).collect()
     }
     assert got[1] == "en"
@@ -45,7 +45,7 @@ def test_fingerprint_normalization(spark):
         [(1, "Hello   World"), (2, "hello world"), (3, " HELLO\tWORLD ")],
         "doc_id long, text string",
     )
-    fps = df.select(textstats.fingerprint("text").alias("fp")).distinct()
+    fps = df.select(textstats.fingerprint().alias("fp")).distinct()
     assert fps.count() == 1
 
 

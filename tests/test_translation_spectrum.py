@@ -244,8 +244,7 @@ def test_spectral_features_numpy_parity_and_extremes(spark):
     )
     out = (
         spectral_features(
-            spark.createDataFrame(pdf), value_col="v",
-            group_cols=("series_id",), ts_col="bucket_ts",
+            spark.createDataFrame(pdf), group_cols=("series_id",)
         )
         .toPandas()
         .set_index("series_id")
@@ -303,13 +302,12 @@ def test_spectral_features_non_string_group_cols(spark):
     )
     df = spark.createDataFrame(pdf)  # series_id/year infer as bigint
     out = spectral_features(
-        df, value_col="v", group_cols=("series_id", "year"),
-        ts_col="bucket_ts",
+        df, group_cols=("series_id", "year")
     ).toPandas()
     assert sorted(out["series_id"]) == [7, 8]
     assert out["series_id"].dtype.kind == "i"
     spec = fft_spectrum(
-        df, value_col="v", group_cols=("series_id", "year"), ts_col="bucket_ts"
+        df, value_col="v", ts_col="bucket_ts"
     ).toPandas()
     assert set(spec["series_id"]) == {7, 8}
     assert spec["series_id"].dtype.kind == "i"

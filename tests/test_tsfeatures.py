@@ -49,7 +49,7 @@ def _per_group(pdf):
 
 def test_rolling_matches_pandas(series_df, series_pdf):
     out = (
-        rolling_stats(series_df, value_col="v", k=24)
+        rolling_stats(series_df)
         .toPandas()
         .sort_values(["series_id", "bucket_ts"])
         .reset_index(drop=True)
@@ -70,7 +70,7 @@ def test_rolling_matches_pandas(series_df, series_pdf):
 def test_ewma_matches_recursion(series_df, series_pdf):
     alpha = 0.3
     out = (
-        ewma(series_df, value_col="v", alpha=alpha)
+        ewma(series_df, alpha=alpha)
         .toPandas()
         .sort_values(["series_id", "bucket_ts"])
         .reset_index(drop=True)
@@ -85,7 +85,7 @@ def test_ewma_matches_recursion(series_df, series_pdf):
 
 
 def test_acf_matches_numpy(series_df, series_pdf):
-    out = acf(series_df, value_col="v", max_lag=30).toPandas()
+    out = acf(series_df, max_lag=30).toPandas()
     for g, gd in _per_group(series_pdf):
         x = gd["v"].to_numpy()
         for lag in (1, 12, 24, 30):
@@ -102,7 +102,7 @@ def test_acf_matches_numpy(series_df, series_pdf):
 
 def test_m4_matches_pandas(series_df, series_pdf):
     out = m4_downsample(
-        series_df, value_col="v", bucket="1 day"
+        series_df, bucket="1 day"
     ).toPandas()
     for g, gd in _per_group(series_pdf):
         gd = gd.assign(day=gd["bucket_ts"].dt.floor("D"))
@@ -133,12 +133,12 @@ def test_m4_last_tie_break_is_deterministic(spark):
         df = spark.createDataFrame(
             [rows[i] for i in perm], "series_id string, bucket_ts timestamp, v double"
         ).repartition(3)
-        got = m4_downsample(df, value_col="v", bucket="1 hour").collect()[0]
+        got = m4_downsample(df, bucket="1 hour").collect()[0]
         assert got["last_v"] == 7.0 and got["first_v"] == 5.0
 
 
 def test_robust_anomalies_flags_planted_outliers(series_df, series_pdf):
-    out = robust_anomalies(series_df, value_col="v").toPandas()
+    out = robust_anomalies(series_df).toPandas()
     for g, gd in _per_group(series_pdf):
         med = np.median(gd["v"])
         mad = np.median(np.abs(gd["v"] - med))
@@ -166,7 +166,7 @@ def test_cusum_finds_planted_level_shift(spark):
         }
     )
     out = cusum_changepoint(
-        spark.createDataFrame(pdf).repartition(4), value_col="v"
+        spark.createDataFrame(pdf).repartition(4)
     ).collect()[0]
     got_idx = pdf[pdf.bucket_ts == out["cp_ts"]].index[0]
     # numpy oracle: argmax |cumsum(x - mean)|
@@ -180,7 +180,7 @@ def test_cusum_finds_planted_level_shift(spark):
 def test_seasonal_decompose_identities(series_df, series_pdf):
     period = 24
     out = (
-        seasonal_decompose(series_df, value_col="v", period=period)
+        seasonal_decompose(series_df, period=period)
         .toPandas()
         .sort_values(["series_id", "bucket_ts"])
         .reset_index(drop=True)
@@ -214,7 +214,7 @@ def test_seasonal_decompose_identities(series_df, series_pdf):
 
 def test_rolling_plan_single_exchange(spark, series_pdf):
     df = spark.createDataFrame(series_pdf)  # no pre-repartition noise
-    plan = rolling_stats(df, value_col="v", k=24)._jdf.queryExecution().executedPlan().toString()
+    plan = rolling_stats(df)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
@@ -224,7 +224,7 @@ def test_brown_les_matches_recursion(series_df, series_pdf):
 
     alpha = 0.25
     out = (
-        brown_les(series_df, value_col="v", alpha=alpha)
+        brown_les(series_df, alpha=alpha)
         .toPandas()
         .sort_values(["series_id", "bucket_ts"])
         .reset_index(drop=True)
@@ -278,7 +278,7 @@ def test_cross_corr_matches_numpy(series_df, series_pdf):
     from wavelet_decomposition_spark.operators.tsfeatures import cross_corr
 
     out = cross_corr(
-        series_df, id_a="a", id_b="b", value_col="v", max_lag=5
+        series_df, id_a="a", id_b="b", max_lag=5
     ).toPandas().set_index("lag")
     a = next(gd for g, gd in _per_group(series_pdf) if g == "a")["v"].to_numpy()
     b = next(gd for g, gd in _per_group(series_pdf) if g == "b")["v"].to_numpy()
@@ -338,7 +338,7 @@ def test_lttb_greedy_optimality(series_df, series_pdf):
 
     n_out = 40
     out = (
-        lttb_downsample(series_df, n_out=n_out, value_col="v")
+        lttb_downsample(series_df, n_out=n_out)
         .toPandas()
         .sort_values(["series_id", "bucket_ts"])
     )
@@ -397,7 +397,7 @@ def test_rolling_median_matches_pandas(series_df, series_pdf):
     )
 
     out = (
-        rolling_median(series_df, value_col="v", k=24)
+        rolling_median(series_df)
         .toPandas()
         .sort_values(["series_id", "bucket_ts"])
         .reset_index(drop=True)
@@ -424,7 +424,7 @@ def test_theil_sen_matches_numpy_and_resists_outliers(spark):
         ]
     )
     out = (
-        theil_sen(spark.createDataFrame(pdf), unit="1 hour")
+        theil_sen(spark.createDataFrame(pdf))
         .toPandas()
         .set_index("series_id")
     )
@@ -546,7 +546,7 @@ def test_m4_first_tie_break_is_deterministic(spark):
             [rows[i] for i in perm],
             "series_id string, bucket_ts timestamp, v double",
         ).repartition(3)
-        got = m4_downsample(df, value_col="v", bucket="1 hour").collect()[0]
+        got = m4_downsample(df, bucket="1 hour").collect()[0]
         assert got["first_v"] == 3.0 and got["last_v"] == 4.0
 
 
@@ -578,7 +578,7 @@ def test_holt_winters_matches_independent_oracle(series_df, series_pdf):
         holt_winters,
     )
 
-    out = holt_winters(series_df, period=24, horizon=24).toPandas()
+    out = holt_winters(series_df, horizon=24).toPandas()
     assert out.dual_ok.all()
     for gname, gd in _per_group(series_pdf):
         lvl, tr, sse, fc = _hw_oracle(gd.v.to_numpy())
@@ -609,7 +609,7 @@ def test_holt_winters_exact_periodic_is_exact(spark):
         }
     )
     out = (
-        holt_winters(spark.createDataFrame(pdf), period=24, horizon=24)
+        holt_winters(spark.createDataFrame(pdf), horizon=24)
         .toPandas()
         .sort_values("h")
     )
@@ -637,13 +637,13 @@ def test_holt_winters_shift_equivariance(spark):
         {"series_id": "x", "bucket_ts": ts, "v": xs + 1000.0}
     )
     f0 = (
-        holt_winters(spark.createDataFrame(base), period=24)
+        holt_winters(spark.createDataFrame(base))
         .toPandas()
         .sort_values("h")
         .forecast.to_numpy()
     )
     f1 = (
-        holt_winters(spark.createDataFrame(shifted), period=24)
+        holt_winters(spark.createDataFrame(shifted))
         .toPandas()
         .sort_values("h")
         .forecast.to_numpy()
@@ -663,5 +663,5 @@ def test_holt_winters_short_series_dropped(spark):
             "v": np.arange(47.0),
         }
     )
-    out = holt_winters(spark.createDataFrame(pdf), period=24).toPandas()
+    out = holt_winters(spark.createDataFrame(pdf)).toPandas()
     assert len(out) == 0

@@ -8,7 +8,7 @@ from wavelet_decomposition_spark.operators import activity, gapfill, wavelet_ops
 
 def _filled(spark, n=6, seed=2):
     raw = activity.activity_raw(transcripts_df(spark, n, seed=seed))
-    return gapfill.gapfill_zero(raw, ["turns", "chars", "tool_calls"])
+    return gapfill.gapfill_zero(raw)
 
 
 # the grid step of _filled's raw (1-second) tier
@@ -98,9 +98,7 @@ def test_sparse_fill_fusion_matches_explicit_gapfill(spark):
 
     raw = activity.activity_raw(transcripts_df(spark, 8, seed=5))
     tier = rollup.rollup_once(raw, "1m")
-    dense = gapfill.gapfill_zero(
-        tier, ["turns", "chars", "tool_calls"], step="1 minute"
-    )
+    dense = gapfill.gapfill_zero(tier, step="1 minute")
     kw = dict(
         wavelet="db4", levels=3, window_len=64, sparse_fill_step="1 minute"
     )

@@ -43,7 +43,7 @@ def test_relational_matches_kernel(series):
         sparse_fill_step=STEP,
     )
     rel = wavelet_ops.haar_dwt_relational(
-        series, "turns", levels=levels, window_len=window_len,
+        series, levels=levels, window_len=window_len,
         sparse_fill_step=STEP,
     )
     keys = ["conv_id", "window_id", "level", "k", "coef_type"]
@@ -88,7 +88,7 @@ def test_closed_form_vs_numpy(series):
         details, approx = kdwt.dwt(x, "haar", levels=3)
         rel = (
             wavelet_ops.haar_dwt_relational(
-                one, "turns", 3, 16, sparse_fill_step=STEP
+                one, 3, 16, sparse_fill_step=STEP
             )
             .filter("window_id = 0")
             .toPandas()

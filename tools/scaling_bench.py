@@ -255,7 +255,7 @@ def relational_job(spark, tx_path):
 
     def sessions():
         return sessionize(
-            tx, gap="60 seconds", group_col="conv_id", ts_col="ts",
+            tx, gap="60 seconds", group_col="conv_id",
             order_col="turn_idx", value_col="n_chars",
         )
 

@@ -3,11 +3,12 @@
 Pure-numpy transcription of the published algorithm (the same algorithm
 scipy.sparse.linalg.lsqr implements), needed because the sandbox has no
 scipy. The reference calls ``lsqr(A, s, damp=0.001, atol=0, btol=0,
-conlim=0)`` for every (signal, year) group
-(/root/reference/wavelet_decomposition.py:195-199); with those tolerances the
-solver runs until the machine-epsilon guard tests fire, so an exact
-transcription of the stopping rules reproduces the golden coefficients to
-~1e-12 absolute error.
+conlim=0)`` for every (signal, year) group (the reference's
+``wavelet_decomposition.py``, lines 195-199). Those zero tolerances are the
+only ones the engine runs, so they are fixed here: the tolerance tests
+compare against 0.0 and the solver runs until the machine-epsilon guard
+tests fire, so an exact transcription of the stopping rules reproduces the
+golden coefficients to ~1e-12 absolute error.
 
 The matrix argument is anything exposing ``matvec``/``rmatvec``/``shape``
 (our :class:`~wavelet_decomposition_spark.kernel.sparse.CSRMatrix`). One
@@ -42,18 +43,11 @@ def _sym_ortho(a: float, b: float):
     return c, s, r
 
 
-def lsqr(
-    A,
-    b: np.ndarray,
-    damp: float = 0.0,
-    atol: float = 0.0,
-    btol: float = 0.0,
-    conlim: float = 0.0,
-):
+def lsqr(A, b: np.ndarray, damp: float = 0.0):
     """Solve ``min ||A x - b||^2 + damp^2 ||x||^2``.
 
     Returns ``(x, istop, itn)``. Stopping-rule semantics follow the
-    published algorithm: with ``atol=btol=0, conlim=0`` iteration continues
+    published algorithm with ``atol=btol=0, conlim=0``: iteration continues
     until the machine-precision guards (istop 4/5/6) or ``2 * n``
     iterations.
     """
@@ -61,7 +55,6 @@ def lsqr(
     b = np.asarray(b, dtype=np.float64)
     iter_lim = 2 * n
 
-    ctol = 1.0 / conlim if conlim > 0 else 0.0
     dampsq = damp * damp
 
     itn = 0
@@ -164,7 +157,6 @@ def lsqr(
         test2 = arnorm / (anorm * rnorm + _EPS)
         test3 = 1.0 / (acond + _EPS)
         t1chk = test1 / (1.0 + anorm * xnorm / bnorm)
-        rtol = btol + atol * anorm * xnorm / bnorm
 
         if itn >= iter_lim:
             istop = 7
@@ -174,11 +166,11 @@ def lsqr(
             istop = 5
         if 1.0 + t1chk <= 1.0:
             istop = 4
-        if test3 <= ctol:
+        if test3 <= 0.0:
             istop = 3
-        if test2 <= atol:
+        if test2 <= 0.0:
             istop = 2
-        if test1 <= rtol:
+        if test1 <= 0.0:
             istop = 1
         if istop != 0:
             break
@@ -187,7 +179,8 @@ def lsqr(
 
 
 def beta_decomposition(A, signal: np.ndarray) -> np.ndarray:
-    """The reference's solve call: LSQR damped by 0.001 with exact-zero
-    tolerances (/root/reference/wavelet_decomposition.py:195-199)."""
-    x, _, _ = lsqr(A, signal, damp=0.001, atol=0.0, btol=0.0, conlim=0.0)
+    """The reference's solve call, ``lsqr(A, s, damp=0.001, atol=0, btol=0,
+    conlim=0)`` (its ``wavelet_decomposition.py``, lines 195-199): LSQR
+    damped by 0.001 with the exact-zero tolerances ``lsqr`` fixes."""
+    x, _, _ = lsqr(A, signal, damp=0.001)
     return x

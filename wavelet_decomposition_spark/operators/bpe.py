@@ -40,8 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.session import worker_kernel
-
-_WORD_REGEX = r"[a-zA-Z0-9]+|[^a-zA-Z0-9\s]"
+from .textstats import TOKEN_REGEX
 
 
 def _pairs_nonoverlap(sym: list, a: str, b: str) -> int:
@@ -77,7 +76,7 @@ def word_counts(docs: DataFrame) -> DataFrame:
     words = docs.select(
         F.explode(
             F.regexp_extract_all(
-                F.col("text"), F.lit(_WORD_REGEX), F.lit(0)
+                F.col("text"), F.lit(TOKEN_REGEX), F.lit(0)
             )
         ).alias("word")
     )
@@ -163,13 +162,12 @@ def _apply_merges(
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 30,
-    min_freq: int = 2,
     verify: bool = False,
 ) -> dict:
     """Learn ``n_merges`` BPE merges from the corpus. Returns
     ``{"merges": [(left, right, pair_count), ...] in rank order,
     "bookkeeping_ok": bool (verify=True only), "n_words": int}``.
-    Stops early when no pair reaches ``min_freq``."""
+    Stops early when no pair occurs at least twice."""
     # checkpoint cadence (measured, r6): consecutive merge applies with
     # no shuffle between them FUSE into one stage of chained Arrow
     # evals, so a persist boundary every round costs more than it saves
@@ -201,7 +199,7 @@ def bpe_train(
             .limit(1)
             .collect()
         )
-        if not top or top[0]["pair_count"] < min_freq:
+        if not top or top[0]["pair_count"] < 2:
             break
         a, b, f = top[0]["left"], top[0]["right"], int(top[0]["pair_count"])
         merges.append((a, b, f))
@@ -277,7 +275,7 @@ def bpe_encode(
     merge applies."""
     import re
 
-    rx = re.compile(_WORD_REGEX)
+    rx = re.compile(TOKEN_REGEX)
     seq = [(a, b, a + b) for a, b, _ in merges]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -19,10 +19,10 @@ Determinism: a group lives in one task; costs derive from left-to-right
 prefix sums (fixed association); argmin tie-breaks at the lowest
 candidate index — so output is bit-stable under any partitioning.
 
-Verification: ``verify=True`` runs the UNPRUNED O(n^2) DP side by side
-in the same kernel and emits per-group agreement — the PELT-equals-DP
-theorem as an executable invariant (gate-scale only; production turns
-it off). tests/test_changepoint.py additionally pins exact recovery of
+Verification: the kernel always runs the UNPRUNED O(n^2) DP side by side
+and emits per-group agreement — the PELT-equals-DP theorem as an
+executable invariant (quadratic, so gate-scale series only).
+tests/test_changepoint.py additionally pins exact recovery of
 planted mean shifts and a numpy reference DP.
 """
 
@@ -98,23 +98,20 @@ def pelt_changepoints(
     df: DataFrame,
     group_cols: list[str],
     order_col: str,
-    value_col: str,
     beta: float,
-    verify: bool = False,
 ) -> DataFrame:
-    """Exact penalized segmentation per group: one output row per SEGMENT
-    — ``(group_cols..., seg_idx, start_pos, end_pos, n_points, seg_mean
-    [, dp_equal_ok])`` where positions are 0-based ranks under
-    ``order_col`` (must be unique per group) and ``end_pos`` is
-    exclusive. ``verify=True`` adds the unpruned-DP agreement flag
+    """Exact penalized segmentation of column ``v`` per group: one output
+    row per SEGMENT — ``(group_cols..., seg_idx, start_pos, end_pos,
+    n_points, seg_mean, dp_equal_ok)`` where positions are 0-based ranks
+    under ``order_col`` (must be unique per group), ``end_pos`` is
+    exclusive and ``dp_equal_ok`` is the unpruned-DP agreement flag
     (quadratic — gate/test scale only)."""
     gtypes = ", ".join(
         f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
     )
     schema = (
         f"{gtypes}, seg_idx int, start_pos int, end_pos int, "
-        "n_points int, seg_mean double"
-        + (", dp_equal_ok boolean" if verify else "")
+        "n_points int, seg_mean double, dp_equal_ok boolean"
     )
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -127,7 +124,7 @@ def pelt_changepoints(
                 f"pelt_changepoints: duplicate {order_col!r} values in "
                 "group — segmentation would be order-nondeterministic"
             )
-        y = pdf[value_col].to_numpy(dtype=np.float64)
+        y = pdf["v"].to_numpy(dtype=np.float64)
         cps = pelt_segments_np(y, beta)
         bounds = [0] + cps + [len(y)]
         rows = []
@@ -142,10 +139,9 @@ def pelt_changepoints(
             columns=group_cols
             + ["seg_idx", "start_pos", "end_pos", "n_points", "seg_mean"],
         )
-        if verify:
-            out["dp_equal_ok"] = cps == dp_segments_np(y, beta)
+        out["dp_equal_ok"] = cps == dp_segments_np(y, beta)
         return out
 
-    return df.select(*group_cols, order_col, value_col).groupBy(
+    return df.select(*group_cols, order_col, "v").groupBy(
         *group_cols
     ).applyInPandas(worker_kernel(fit), schema=schema)

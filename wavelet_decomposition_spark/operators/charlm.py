@@ -84,13 +84,13 @@ def trigram_profile(docs: DataFrame) -> DataFrame:
     )
 
 
-def trigram_quality(docs: DataFrame, rare_max: int = 2) -> DataFrame:
+def trigram_quality(docs: DataFrame) -> DataFrame:
     """Per-document integer quality statistics against the corpus' own
     trigram profile (self-scoring):
 
     ``n_tri``    total trigram occurrences in the doc (0 for docs under
                  3 normalized chars — such docs still appear, zeroed);
-    ``n_rare``   occurrences whose corpus frequency is <= ``rare_max``;
+    ``n_rare``   occurrences whose corpus frequency is <= 2;
     ``df_mass``  exact BIGINT sum of corpus frequencies over the doc's
                  occurrences — df_mass/n_tri is the mean familiarity.
 
@@ -119,7 +119,7 @@ def trigram_quality(docs: DataFrame, rare_max: int = 2) -> DataFrame:
         .agg(
             F.sum("_c").alias("n_tri"),
             F.sum(
-                F.when(F.col("df") <= rare_max, F.col("_c"))
+                F.when(F.col("df") <= 2, F.col("_c"))
                 .otherwise(F.lit(0))
             ).alias("n_rare"),
             F.sum(F.col("df") * F.col("_c")).alias("df_mass"),

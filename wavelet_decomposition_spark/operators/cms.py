@@ -56,11 +56,12 @@ _KIND_CAND = 1  # (key, cnt): local exact top-k candidate
 _KIND_NROW = 2  # (cnt): partition row count
 
 _PARTIAL_SCHEMA = "kind tinyint, cell bigint, key string, cnt bigint"
+_DEPTH = 4  # independent hash rows of the sketch
 
 
-def _cells_expr(key: Column, depth: int, width: int) -> Column:
-    """array<bigint> of the key's d sketch cells, cell = j*width + pos —
-    the ONE hashing definition shared by the scatter pass and candidate
+def _cells_expr(key: Column, width: int) -> Column:
+    """array<bigint> of the key's ``_DEPTH`` sketch cells, cell = j*width +
+    pos — the ONE hashing definition shared by the scatter pass and candidate
     re-derivation (xxhash64 seeded per row via a literal column)."""
     return F.array(
         *[
@@ -68,7 +69,7 @@ def _cells_expr(key: Column, depth: int, width: int) -> Column:
                 F.pmod(F.xxhash64(key, F.lit(j)), F.lit(width))
                 + F.lit(j * width)
             ).cast("bigint")
-            for j in range(depth)
+            for j in range(_DEPTH)
         ]
     )
 
@@ -77,7 +78,6 @@ def cms_heavy_hitters(
     df: DataFrame,
     key_col: str,
     support: float,
-    depth: int = 4,
     width: int = 8192,
 ) -> DataFrame:
     """All keys whose frequency is >= ``support`` of the total row count,
@@ -85,7 +85,7 @@ def cms_heavy_hitters(
     n_total bigint). Guaranteed a superset of the true hot set with
     estimate >= true count; false positives are bounded by the CMS
     overcount (expected collision mass ~ n_total/width per counter,
-    minimized over ``depth`` independent rows).
+    minimized over ``_DEPTH`` independent rows).
     """
     if not (0.0 < support < 1.0):
         raise ValueError(f"support must be in (0,1), got {support}")
@@ -95,10 +95,10 @@ def cms_heavy_hitters(
     keyed = (
         df.select(F.col(key_col).cast("string").alias("_k"))
         .filter(F.col("_k").isNotNull())  # support is a share of non-null keys
-        .withColumn("_cells", _cells_expr(F.col("_k"), depth, width))
+        .withColumn("_cells", _cells_expr(F.col("_k"), width))
     )
 
-    n_cells = depth * width
+    n_cells = _DEPTH * width
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         sketch = np.zeros(n_cells, dtype=np.int64)
@@ -163,7 +163,7 @@ def cms_heavy_hitters(
         .agg(F.sum("cnt").alias("n_total"))
     )
     est = (
-        cands.withColumn("cell", F.explode(_cells_expr(F.col("key"), depth, width)))
+        cands.withColumn("cell", F.explode(_cells_expr(F.col("key"), width)))
         .join(cells, "cell")
         .groupBy("key")
         .agg(F.min("cell_cnt").alias("estimate"))

@@ -26,14 +26,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _day_stats(spark: SparkSession, path: str, part_col: str) -> DataFrame:
-    """Per-partition (files, rows, checksum) measured from the files
-    actually read — one aggregate scan."""
+def _day_stats(spark: SparkSession, path: str) -> DataFrame:
+    """Per-day (files, rows, checksum) measured from the files actually
+    read — one aggregate scan."""
     df = spark.read.parquet(path)
-    value_cols = sorted(c for c in df.columns if c != part_col)
+    value_cols = sorted(c for c in df.columns if c != "day")
     return (
         df.withColumn("_file", F.input_file_name())
-        .groupBy(part_col)
+        .groupBy("day")
         .agg(
             F.countDistinct("_file").alias("files"),
             F.count(F.lit(1)).alias("rows"),
@@ -48,37 +48,32 @@ def compact_partitioned(
     spark: SparkSession,
     src_path: str,
     dst_path: str,
-    part_col: str = "day",
     target_rows_per_file: int = 1_000_000,
 ) -> DataFrame:
     """Bin-pack rewrite of ``src_path`` into ``dst_path`` and verify it.
 
-    Returns one row per partition value:
-    (part, files_before, files_after, rows, files_ok, rows_ok, checksum_ok)
+    Returns one row per ``day`` partition:
+    (day, files_before, files_after, rows, files_ok, rows_ok, checksum_ok)
     — files_ok: the rewrite produced exactly ceil(rows/target) files;
     rows_ok / checksum_ok: row counts and order-free content checksums
     match pre/post. The caller swaps directories only on all-true.
     """
     src = spark.read.parquet(src_path)
     (
-        src.repartition(F.col(part_col))
+        src.repartition(F.col("day"))
         .write.mode("overwrite")
         .option("maxRecordsPerFile", target_rows_per_file)
-        .partitionBy(part_col)
+        .partitionBy("day")
         .parquet(dst_path)
     )
-    before = _day_stats(spark, src_path, part_col)
-    after = _day_stats(spark, dst_path, part_col)
+    before = _day_stats(spark, src_path)
+    after = _day_stats(spark, dst_path)
     b, a = before.alias("b"), after.alias("a")
     expected_files = F.ceil(F.col("b.rows") / F.lit(target_rows_per_file))
     # full outer + null-safe comparisons: a partition that vanished (or
     # appeared) in the rewrite must surface as a false row, not be dropped
-    return b.join(
-        a, F.col(f"b.{part_col}") == F.col(f"a.{part_col}"), "fullouter"
-    ).select(
-        F.coalesce(F.col(f"b.{part_col}"), F.col(f"a.{part_col}")).alias(
-            part_col
-        ),
+    return b.join(a, F.col("b.day") == F.col("a.day"), "fullouter").select(
+        F.coalesce(F.col("b.day"), F.col("a.day")).alias("day"),
         F.col("b.files").alias("files_before"),
         F.col("a.files").alias("files_after"),
         F.col("b.rows").alias("rows"),

@@ -83,11 +83,15 @@ def connected_components(edges: DataFrame) -> DataFrame:
         .where(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .distinct()
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
     prev = None
     for _ in range(_MAX_ROUNDS):
-        e = _star(_star(e, large=True), large=False).localCheckpoint()
+        # lazy, like the input's: the signature aggregate below is the job
+        # that materializes the round (an eager checkpoint is a second job)
+        e = _star(_star(e, large=True), large=False).localCheckpoint(
+            eager=False
+        )
         sig = e.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(

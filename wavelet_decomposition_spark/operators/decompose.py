@@ -184,7 +184,6 @@ def reconstruct_relational(
     betas: DataFrame,
     support: DataFrame,
     keep_scales=None,
-    add_offset: bool = True,
 ) -> DataFrame:
     """A8 in its relational form (SURVEY.md J3): ``signal[idx] =
     sum(beta * weight)`` as a broadcast equi-join on (year, scale_idx, pos)
@@ -206,8 +205,6 @@ def reconstruct_relational(
         sel = [int(s) for s in keep_scales]
         b = b.filter(F.col("scale_idx").isin(sel))
         sup = sup.filter(F.col("scale_idx").isin(sel))
-    if not add_offset:
-        b = b.filter(F.col("scale_idx") != 15)
     return (
         b.join(F.broadcast(sup), ["year", "scale_idx", "pos"])
         .groupBy("series_id", "year", "idx")

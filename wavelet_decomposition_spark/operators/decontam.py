@@ -32,18 +32,13 @@ from wavelet_decomposition_spark.operators.dedup import word_shingles
 def decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
-    n: int = 5,
     on_hash: bool = True,
 ) -> DataFrame:
-    """One row per corpus document: ``n_overlap`` (count of distinct
-    n-grams also present anywhere in the benchmark) and ``contaminated``
+    """One row per corpus document: ``n_overlap`` (count of distinct word
+    3-grams also present anywhere in the benchmark) and ``contaminated``
     (any overlap at all — the usual drop criterion)."""
-    bench_grams = (
-        word_shingles(benchmark, n=n)
-        .select("shingle")
-        .distinct()
-    )
-    corpus_grams = word_shingles(corpus, n=n)
+    bench_grams = word_shingles(benchmark).select("shingle").distinct()
+    corpus_grams = word_shingles(corpus)
     if on_hash:
         key = F.xxhash64("shingle").alias("_g")
         bench_grams = bench_grams.select(key).distinct()

@@ -35,6 +35,8 @@ from ..plans.session import worker_kernel
 # negligible for shingle sets)
 _MERSENNE = (1 << 31) - 1
 _N_PERM = 64  # MinHash permutations (signature length)
+_MAX_EDIT = 16  # edit_distance_pairs: largest edit distance reported
+_BLOCK_PREFIX = 24  # edit_distance_pairs: normalized characters per block key
 
 
 def _perm_params():
@@ -78,15 +80,15 @@ def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep the lowest-id representative per identical (normalized) text."""
     w = Window.partitionBy("fp").orderBy("doc_id")
     return (
-        df.withColumn("fp", fingerprint("text"))
+        df.withColumn("fp", fingerprint())
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn", "fp")
     )
 
 
-def _gram_array(words: F.Column, n: int) -> F.Column:
-    """Distinct word n-grams from an ALREADY-MATERIALIZED words column.
+def _gram_array(words: F.Column) -> F.Column:
+    """Distinct word 3-grams from an ALREADY-MATERIALIZED words column.
 
     ``words`` must be a plain column reference, not the split expression:
     higher-order functions are interpreted (no common-subexpression
@@ -94,8 +96,8 @@ def _gram_array(words: F.Column, n: int) -> F.Column:
     normalize+split over the whole document once per gram — O(len^2) per
     doc (measured: ~25% of the signature stage even on 50-word docs)."""
     grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
-        lambda i: F.concat_ws(" ", *[F.element_at(words, (i + j + 1).cast("int")) for j in range(n)]),
+        F.sequence(F.lit(0), F.greatest(F.size(words) - 3, F.lit(0))),
+        lambda i: F.concat_ws(" ", *[F.element_at(words, (i + j + 1).cast("int")) for j in range(3)]),
     )
     return F.filter(F.array_distinct(grams), lambda g: F.length(g) > 0)
 
@@ -108,13 +110,13 @@ def shingled(df: DataFrame) -> DataFrame:
         .withColumn("_w", F.split(normalized("text"), " "))
         .select(
             F.col("doc_id").alias("id"),
-            _gram_array(F.col("_w"), 3).alias("sh"),
+            _gram_array(F.col("_w")).alias("sh"),
         )
     )
 
 
-def word_shingles(df: DataFrame, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per doc: (id, shingle).
+def word_shingles(df: DataFrame) -> DataFrame:
+    """Distinct word 3-gram shingles per doc: (id, shingle).
 
     The gram array is exploded INLINE rather than through a named column:
     ``explode(attribute)`` triggers Catalyst's InferFiltersFromGenerate,
@@ -130,7 +132,7 @@ def word_shingles(df: DataFrame, n: int = 3) -> DataFrame:
     )
     return base.select(
         F.col("doc_id").alias("id"),
-        F.explode(_gram_array(F.col("_w"), n)).alias("shingle"),
+        F.explode(_gram_array(F.col("_w"))).alias("shingle"),
     )
 
 
@@ -456,11 +458,8 @@ def _cosine(a, b) -> F.Column:
     return dot / (na * nb)
 
 
-def embedding_near_dup_pairs(
-    emb: DataFrame,
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Cosine >= threshold pairs of 64-d embeddings via random-hyperplane
+def embedding_near_dup_pairs(emb: DataFrame) -> DataFrame:
+    """Cosine >= 0.999 pairs of 64-d embeddings via random-hyperplane
     LSH buckets (an 8-plane sign sketch); candidates only meet within a
     bucket. Exact cosine verification in-bucket. High-threshold near-dups
     collide with high probability on all 8 signs."""
@@ -493,19 +492,15 @@ def embedding_near_dup_pairs(
         a.join(b, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", _cosine(F.col("v_a"), F.col("v_b")).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= 0.999)
         .distinct()
     )
 
 
-def edit_distance_pairs(
-    docs: DataFrame,
-    max_dist: int = 16,
-    block_prefix: int = 24,
-) -> DataFrame:
+def edit_distance_pairs(docs: DataFrame) -> DataFrame:
     """Prefix-blocked exact edit-distance near-dup pairs:
     ``(id_a, id_b, dist, len_a, len_b)`` with ``id_a < id_b`` and
-    ``levenshtein(normalized_a, normalized_b) <= max_dist``. The
+    ``levenshtein(normalized_a, normalized_b) <= _MAX_EDIT``. The
     edit-distance family complements the set-based detectors: Jaccard /
     MinHash see bags of shingles (insensitive to local ORDER damage),
     SimHash sees token frequencies; Levenshtein is the only one of the
@@ -514,13 +509,13 @@ def edit_distance_pairs(
     perturbation profile of scraped near-dups.
 
     Candidate generation is PREFIX BLOCKING: only documents sharing
-    their first ``block_prefix`` normalized characters are compared (a
+    their first ``_BLOCK_PREFIX`` normalized characters are compared (a
     hash equi-join, never all-pairs). That is a deliberate recall
     contract, not a shortcut: a pair differing inside the prefix has
     edit distance >= 1 *located at the head*, the rarest corruption
     site in practice (templates and OCR damage concentrate in bodies
     and tails); pairs that differ early are caught by the unordered
-    detectors upstream. A length guard (|len_a - len_b| <= max_dist,
+    detectors upstream. A length guard (|len_a - len_b| <= _MAX_EDIT,
     a lower bound on edit distance) prunes before the O(m*n) DP runs.
 
     Scale shape (100 TB): one exchange on the block key; per-block
@@ -538,9 +533,9 @@ def edit_distance_pairs(
     sides = docs.select(
         F.col("doc_id").alias("id"),
         norm.alias("t"),
-        F.substring(norm, 1, block_prefix).alias("blk"),
+        F.substring(norm, 1, _BLOCK_PREFIX).alias("blk"),
         F.length(norm).alias("len"),
-    ).where(F.length("t") >= block_prefix)
+    ).where(F.length("t") >= _BLOCK_PREFIX)
     a = sides.select(
         F.col("id").alias("id_a"), F.col("t").alias("t_a"),
         F.col("len").alias("len_a"), "blk",
@@ -553,9 +548,9 @@ def edit_distance_pairs(
         a.join(b, "blk")
         .where(
             (F.col("id_a") < F.col("id_b"))
-            & (F.abs(F.col("len_a") - F.col("len_b")) <= max_dist)
+            & (F.abs(F.col("len_a") - F.col("len_b")) <= _MAX_EDIT)
         )
         .withColumn("dist", F.levenshtein("t_a", "t_b"))
-        .where(F.col("dist") <= max_dist)
+        .where(F.col("dist") <= _MAX_EDIT)
         .select("id_a", "id_b", "dist", "len_a", "len_b")
     )

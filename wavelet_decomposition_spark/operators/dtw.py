@@ -112,10 +112,8 @@ def full_dtw_numpy(x: np.ndarray, y: np.ndarray) -> float:
     return float(np.sqrt(D[n, m]))
 
 
-def pack_series(
-    series: DataFrame, key_col: str, order_col: str, value_col: str
-) -> DataFrame:
-    """Long (key, order, value) -> one (key, vals: array<double>) row per
+def pack_series(series: DataFrame, key_col: str, order_col: str) -> DataFrame:
+    """Long (key, order, v) -> one (key, vals: array<double>) row per
     key, ordered by ``order_col``. One hash aggregate; the sort happens
     inside ``sort_array`` on the collected structs (per-group, no global
     sort shuffle)."""
@@ -124,7 +122,7 @@ def pack_series(
         .agg(
             F.sort_array(
                 F.collect_list(F.struct(F.col(order_col).alias("o"),
-                                        F.col(value_col).alias("v")))
+                                        F.col("v")))
             ).alias("_p")
         )
         .select(
@@ -169,21 +167,17 @@ def _score_kernel(radius: int, wide_radius: int | None):
     return kernel, schema
 
 
-def dtw_for_candidates(
-    packed: DataFrame,
-    candidates: DataFrame,
-    radius: int,
-) -> DataFrame:
-    """Score an explicit (key_a, key_b) candidate list — the scale path.
-    Two broadcast/hash equi-joins attach the packed arrays, then one Arrow
-    kernel scores each pair; O(|candidates| * n * radius) total work,
+def dtw_for_candidates(packed: DataFrame, candidates: DataFrame) -> DataFrame:
+    """Score an explicit (key_a, key_b) candidate list with band radius 4 —
+    the scale path. Two broadcast/hash equi-joins attach the packed arrays,
+    then one Arrow kernel scores each pair; O(|candidates| * n) total work,
     partitioned by pair. ``euclid`` is NaN for unequal-length pairs."""
     a = packed.select(F.col("key").alias("key_a"), F.col("vals").alias("vals_a"))
     b = packed.select(F.col("key").alias("key_b"), F.col("vals").alias("vals_b"))
     joined = candidates.join(a, "key_a").join(b, "key_b").select(
         "key_a", "key_b", "vals_a", "vals_b"
     )
-    kernel, schema = _score_kernel(radius, None)
+    kernel, schema = _score_kernel(4, None)
     return joined.mapInPandas(worker_kernel(kernel), schema=schema)
 
 
@@ -191,7 +185,6 @@ def dtw_allpairs(
     series: DataFrame,
     key_col: str,
     order_col: str,
-    value_col: str,
     radius: int,
     wide_radius: int | None = None,
     include_self: bool = False,
@@ -202,7 +195,7 @@ def dtw_allpairs(
     no join, so no nested-loop plan to regress); the packed row bounds S by
     design. For large S, bucket candidates first and call
     :func:`dtw_for_candidates`."""
-    packed = pack_series(series, key_col, order_col, value_col)
+    packed = pack_series(series, key_col, order_col)
     one = packed.agg(
         F.sort_array(
             F.collect_list(F.struct(F.col("key"), F.col("vals")))

@@ -30,15 +30,12 @@ def winsorize(
     value_col: str,
     group_col: str,
     id_col: str,
-    lo_pct: int = 5,
-    hi_pct: int = 95,
 ) -> DataFrame:
-    """Clamp ``value_col`` (integer) to the per-group order statistics
-    at ranks ceil(lo_pct*n/100) and ceil(hi_pct*n/100) over the total
-    order (value, id). Adds ``<value_col>_w`` (clamped), ``lo_bound``,
+    """Clamp ``value_col`` (integer) to the per-group 5th and 95th
+    percentile order statistics, at ranks ceil(5*n/100) and ceil(95*n/100)
+    over the total order (value, id). Adds ``<value_col>_w`` (clamped), ``lo_bound``,
     ``hi_bound``, and ``clamped`` (-1 low / 0 no / +1 high).
     """
-    assert 0 < lo_pct < hi_pct <= 100
     w = Window.partitionBy(group_col).orderBy(value_col, id_col)
     n = F.count(F.lit(1)).over(Window.partitionBy(group_col))
     ranked = df.select(
@@ -48,8 +45,8 @@ def winsorize(
         F.row_number().over(w).alias("_rn"),
         n.alias("_n"),
     )
-    lo_rank = (F.lit(lo_pct) * F.col("_n") + 99) / 100
-    hi_rank = (F.lit(hi_pct) * F.col("_n") + 99) / 100
+    lo_rank = (F.lit(5) * F.col("_n") + 99) / 100
+    hi_rank = (F.lit(95) * F.col("_n") + 99) / 100
     bounds = (
         ranked.withColumn("_lo_rank", F.floor(lo_rank).cast("bigint"))
         .withColumn("_hi_rank", F.floor(hi_rank).cast("bigint"))

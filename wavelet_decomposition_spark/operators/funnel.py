@@ -29,25 +29,19 @@ from wavelet_decomposition_spark.operators._time import gran_us as _gran_us
 from wavelet_decomposition_spark.operators._time import us as _us
 
 
-def cohort_retention(
-    events: DataFrame,
-    cohort_event: str | None = "signup",
-    period: str = "1 week",
-) -> DataFrame:
-    """Classic retention triangle: users are cohorted by the period of
-    their FIRST ``cohort_event`` (or first event of any type when None);
-    a cohort member is "active in period k" when they have any event in
-    ``[cohort_start + k*period, cohort_start + (k+1)*period)`` — periods
-    are relative to each cohort's own start, the standard product
-    convention. Period 0 is the cohort period itself (retention 1.0 by
-    construction when cohorting on an event the user performed).
+def cohort_retention(events: DataFrame) -> DataFrame:
+    """Classic weekly retention triangle: users are cohorted by the week
+    of their FIRST ``signup`` event; a cohort member is "active in period
+    k" when they have any event in ``[cohort_start + k weeks,
+    cohort_start + (k+1) weeks)`` — periods are relative to each cohort's
+    own start, the standard product convention. Period 0 is the cohort
+    period itself (retention 1.0 by construction: every member signed up
+    in it).
 
     Output: ``cohort_ts, period_k, n_active, n_cohort, retention`` —
     one row per (cohort, observed period)."""
-    gus = _gran_us(period)
-    src = events
-    if cohort_event is not None:
-        src = events.where(F.col("event_type") == cohort_event)
+    gus = _gran_us("1 week")
+    src = events.where(F.col("event_type") == "signup")
     # cohort start via integer modulo subtraction — exact for any epoch,
     # no float floor near period boundaries
     cohorts = src.groupBy("user_id").agg(
@@ -83,14 +77,10 @@ def cohort_retention(
     )
 
 
-def funnel(
-    events: DataFrame,
-    steps: list[str],
-    window: str = "7 days",
-) -> DataFrame:
-    """Ordered funnel with a conversion window: a user completes step k
-    when they have a ``steps[k]`` event AT OR AFTER their step-(k-1)
-    completion time and within ``window`` of their STEP-1 time (the
+def funnel(events: DataFrame, steps: list[str]) -> DataFrame:
+    """Ordered funnel with a 7-day conversion window: a user completes
+    step k when they have a ``steps[k]`` event AT OR AFTER their step-(k-1)
+    completion time and within 7 days of their STEP-1 time (the
     whole-funnel window convention; each user's earliest valid
     completion is taken at every step, which is the standard greedy
     semantics — earliest-first maximizes downstream conversions under a
@@ -104,7 +94,7 @@ def funnel(
     from pyspark.sql import Window
 
     spark = events.sparkSession
-    wus = _gran_us(window)
+    wus = _gran_us("7 days")
     base = events.select(
         "user_id", F.col("event_type").alias("_ty"), _us("ts").alias("_t")
     )

@@ -35,15 +35,14 @@ def time_grid(series: DataFrame, step: str = "1 second",
     )
 
 
-def gapfill_zero(
-    series: DataFrame, value_cols, step: str = "1 second"
-) -> DataFrame:
-    """Counts: missing buckets become 0. The oracle of the wavelet
+def gapfill_zero(series: DataFrame, step: str = "1 second") -> DataFrame:
+    """Activity counts: missing buckets get 0 ``turns``, ``chars`` and
+    ``tool_calls``. The oracle of the wavelet
     operators' fused zero fill: their windows over this output equal their
     windows over the sparse input."""
     grid = time_grid(series, step)
     filled = grid.join(series, ["conv_id", "bucket_ts"], "left")
-    return filled.fillna(0, subset=list(value_cols))
+    return filled.fillna(0, subset=["turns", "chars", "tool_calls"])
 
 
 def gapfill_locf(series: DataFrame, value_cols, step: str = "1 second",

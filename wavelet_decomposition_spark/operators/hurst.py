@@ -47,10 +47,10 @@ def rs_ladder(
     series: DataFrame,
     value_col: str = "v",
     group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
     sizes: tuple[int, ...] = DEFAULT_SIZES,
 ) -> DataFrame:
-    """Per-(group, window size) rescaled-range statistics:
+    """Per-(group, window size) rescaled-range statistics over each group's
+    ``bucket_ts`` order:
     ``(group, n, n_chunks, sum_rs_micro)`` where ``sum_rs_micro`` is
     the BIGINT sum over full chunks of ``floor(R/S * 1e6)`` (zero-std
     chunks excluded — R/S is undefined on a constant chunk, and both
@@ -69,7 +69,7 @@ def rs_ladder(
     laddered = (
         series.select(
             F.col(group_col).alias("_g"),
-            F.col(ts_col).alias("_ts"),
+            F.col("bucket_ts").alias("_ts"),
             F.col(value_col).cast("bigint").alias("_x"),
         )
         .withColumn(

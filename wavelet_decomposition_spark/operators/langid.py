@@ -349,21 +349,21 @@ def classify_texts(texts: pd.Series) -> pd.DataFrame:
 _classify_udf = None
 
 
-def lang_id_col(text_col) -> Column:
-    """Column form: struct<lang, margin> per row (one Arrow kernel)."""
+def lang_id_col() -> Column:
+    """Column form: struct<lang, margin> of the ``text`` column per row
+    (one Arrow kernel)."""
     # UDF built lazily: parsing the DDL return type needs an active session
     global _classify_udf
     if _classify_udf is None:
         _classify_udf = F.pandas_udf(
             classify_texts, "struct<lang: string, margin: double>"
         )
-    c = text_col if isinstance(text_col, Column) else F.col(text_col)
-    return _classify_udf(c)
+    return _classify_udf(F.col("text"))
 
 
 def lang_id_ngram(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, lang, margin) per document — map-side only, no shuffle."""
-    pred = lang_id_col("text")
+    pred = lang_id_col()
     return df.select(
         id_col,
         pred["lang"].alias("lang"),

@@ -34,10 +34,9 @@ from pyspark.sql import DataFrame
 def write_clustered(
     df: DataFrame,
     path: str,
-    cluster_cols: list[str],
     target_rows_per_file: int = 1_000_000,
 ) -> None:
-    """Overwrite ``path`` with ``df`` as parquet clustered on ``cluster_cols``:
+    """Overwrite ``path`` with ``df`` as parquet clustered on ``user_id``:
     range-repartitioned so each output task owns a contiguous key range,
     sorted within partitions so row groups inside a file are themselves
     contiguous, and capped at ``target_rows_per_file`` so file size is
@@ -47,14 +46,14 @@ def write_clustered(
     The row-count cap (not a byte cap) is deliberate: bytes-per-row is
     stable within one table, the cap composes with AQE coalescing, and
     ``maxRecordsPerFile`` is enforced by the writer without a second
-    pass. The range exchange samples the cluster keys (one extra job over
+    pass. The range exchange samples the cluster key (one extra job over
     a sample, negligible vs the write) — skewed keys get MORE output
     tasks, which is the behavior a hot tenant needs.
     """
     n = max(1, df.sparkSession.sparkContext.defaultParallelism)
     (
-        df.repartitionByRange(n, *cluster_cols)
-        .sortWithinPartitions(*cluster_cols)
+        df.repartitionByRange(n, "user_id")
+        .sortWithinPartitions("user_id")
         .write.mode("overwrite")
         .option("maxRecordsPerFile", target_rows_per_file)
         .parquet(path)
@@ -105,12 +104,10 @@ def zvalue(x_col, y_col, bits: int = 21):
 def write_zorder(
     df: DataFrame,
     path: str,
-    x_col: str,
-    y_col: str,
     target_rows_per_file: int = 1_000_000,
 ) -> None:
     """Overwrite ``path`` with ``df`` as parquet clustered on the Z-order
-    curve of ``(x_col, y_col)``: range-repartitioned and sorted by the morton
+    curve of its ``(x, y)`` columns: range-repartitioned and sorted by the morton
     value (Delta's OPTIMIZE ... ZORDER mechanism), files capped like
     ``write_clustered``. The z column itself is not persisted — the
     pruning payoff is in the per-file min/max envelopes of the ORIGINAL
@@ -130,8 +127,8 @@ def write_zorder(
     bits = 16
     top = (1 << bits) - 1
     b = df.agg(
-        F.min(x_col).alias("_xmin"), F.max(x_col).alias("_xmax"),
-        F.min(y_col).alias("_ymin"), F.max(y_col).alias("_ymax"),
+        F.min("x").alias("_xmin"), F.max("x").alias("_xmax"),
+        F.min("y").alias("_ymin"), F.max("y").alias("_ymax"),
     )
     scale = lambda c, lo, hi: F.floor(  # noqa: E731
         (F.col(c) - F.col(lo)).cast("double")
@@ -143,8 +140,8 @@ def write_zorder(
     keyed = df.crossJoin(F.broadcast(b)).withColumn(
         "_z",
         zvalue(
-            scale(x_col, "_xmin", "_xmax"),
-            scale(y_col, "_ymin", "_ymax"),
+            scale("x", "_xmin", "_xmax"),
+            scale("y", "_ymin", "_ymax"),
             bits,
         ),
     ).drop("_xmin", "_xmax", "_ymin", "_ymax")

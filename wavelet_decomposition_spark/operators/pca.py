@@ -51,7 +51,7 @@ from ..plans.session import worker_kernel
 from .kmeans import SCALE
 
 
-def _stats_kernel(dim: int, vec_col: str):
+def _stats_kernel(dim: int):
     """mapInPandas kernel: ONE partial-statistics row per Arrow batch —
     ``n`` (rows), ``s`` (coordinate sums, exact int64), ``g`` (packed
     upper-triangle Gram, exact int64). Integer matmul in 4096-row
@@ -62,7 +62,7 @@ def _stats_kernel(dim: int, vec_col: str):
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.int64)
+            X = np.array(pdf["embedding"].tolist(), dtype=np.int64)
             G = np.zeros((dim, dim), dtype=np.int64)
             for lo in range(0, len(X), 4096):
                 B = X[lo:lo + 4096]
@@ -97,7 +97,7 @@ def pca_fit(emb: DataFrame, n_components: int = 16) -> dict:
         raise ValueError("pca_fit on an empty DataFrame")
     dim = len(first[0])
     partials = emb.select("embedding").mapInPandas(
-        worker_kernel(_stats_kernel(dim, "embedding")),
+        worker_kernel(_stats_kernel(dim)),
         schema="n long, s array<bigint>, g array<bigint>",
     )
     # flatten (n | s | g) into one posexplode so ONE aggregate reduces

@@ -103,7 +103,7 @@ def train_pq_codebooks(
     return books
 
 
-def _encode_kernel(books: np.ndarray, id_col: str, vec_col: str):
+def _encode_kernel(books: np.ndarray):
     """mapInPandas kernel: per row, the m nearest-codeword indices plus
     the exact total squared quantization error in floor-micro units
     (sum over subspaces of the min squared distance — the number a
@@ -115,7 +115,7 @@ def _encode_kernel(books: np.ndarray, id_col: str, vec_col: str):
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             codes = np.empty((len(X), m), dtype=np.int32)
             qerr = np.zeros(len(X), dtype=np.float64)
             for j in range(m):
@@ -129,7 +129,7 @@ def _encode_kernel(books: np.ndarray, id_col: str, vec_col: str):
                 qerr += np.maximum(d[np.arange(len(S)), codes[:, j]], 0.0)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].values,
+                    "vec_id": pdf["vec_id"].values,
                     "codes": list(codes),
                     "qerr_micro": np.floor(qerr * 1e6).astype(np.int64),
                 }
@@ -144,7 +144,7 @@ def pq_encode(corpus: DataFrame, books: np.ndarray) -> DataFrame:
     ``qerr_micro`` is the exact (floor-micro) squared reconstruction
     error, carried so a decode pass can verify the encode."""
     return corpus.select("vec_id", "embedding").mapInPandas(
-        worker_kernel(_encode_kernel(books, "vec_id", "embedding")),
+        worker_kernel(_encode_kernel(books)),
         schema="vec_id bigint, codes array<int>, qerr_micro bigint",
     )
 

@@ -50,19 +50,18 @@ def resample_per_year(
 def resample_linear_relational(
     df: DataFrame,
     group_col: str,
-    idx_col: str,
-    value_col: str,
     dpd: int,
     ndpd: int,
 ) -> DataFrame:
-    """P4 in its pure-relational form: linear interpolation onto a denser
+    """P4 in its pure-relational form: linear interpolation of ``v`` over
+    ``idx`` onto a denser
     positional grid via ``sequence``/``explode`` + two equi-joins — no
     Python, SQL-expressible (DuckDB-oracle-checked in __spark_entry__.py).
 
     Semantics match ``np.interp`` on the reference's grids
     ``arange(0,n/dpd,1/dpd) -> arange(0,n/dpd,1/ndpd)`` including the
     right-edge clamp (pinned by tests). Input must be a gap-free positional
-    series (``idx_col`` = 0..n-1 per group). Prefer :func:`resample_per_year`
+    series (``idx`` = 0..n-1 per group). Prefer :func:`resample_per_year`
     when bit-for-bit reference parity matters; prefer this form when the
     plan must stay whole-stage-codegen JVM (both joins shuffle on
     (group, idx), the grid explode is ndpd/dpd x the source rows)."""
@@ -93,13 +92,13 @@ def resample_linear_relational(
     )
     src_lo = df.select(
         F.col(group_col).alias("_gl"),
-        F.col(idx_col).alias("_il"),
-        F.col(value_col).alias("_v_lo"),
+        F.col("idx").alias("_il"),
+        F.col("v").alias("_v_lo"),
     )
     src_hi = df.select(
         F.col(group_col).alias("_gh"),
-        F.col(idx_col).alias("_ih"),
-        F.col(value_col).alias("_v_hi"),
+        F.col("idx").alias("_ih"),
+        F.col("v").alias("_v_hi"),
     )
     return (
         pts.join(
@@ -112,10 +111,10 @@ def resample_linear_relational(
         )
         .select(
             group_col,
-            F.col("j").alias(idx_col),
+            F.col("j").alias("idx"),
             (
                 F.col("_v_lo")
                 + F.col("_frac") * (F.col("_v_hi") - F.col("_v_lo"))
-            ).alias(value_col),
+            ).alias("v"),
         )
     )

@@ -19,14 +19,21 @@ from pyspark.sql import functions as F
 
 from .activity import ACTIVITY_COUNT_COLS
 
-TIER_ORDER = ["raw", "1m", "1h", "1d"]
-_TRUNC = {"raw": "second", "1m": "minute", "1h": "hour", "1d": "day"}
+#: the one table of retention tiers, finest first: tier -> (``date_trunc``
+#: unit, bucket step in seconds)
+TIERS = {
+    "raw": ("second", 1.0),
+    "1m": ("minute", 60.0),
+    "1h": ("hour", 3600.0),
+    "1d": ("day", 86400.0),
+}
+TIER_ORDER = list(TIERS)
 
 
 def rollup_once(finer: DataFrame, tier: str) -> DataFrame:
     """Aggregate a finer tier into ``tier`` ('1m' | '1h' | '1d'). Applied
     to raw directly, it is the oracle the cascade is checked against."""
-    unit = _TRUNC[tier]
+    unit = TIERS[tier][0]
     aggs = [F.sum(c).alias(c) for c in ACTIVITY_COUNT_COLS]
     return (
         finer.groupBy(

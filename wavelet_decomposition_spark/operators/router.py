@@ -26,8 +26,10 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: tier -> bucket step in seconds (rollup.TIER_ORDER resolutions)
-TIER_STEP = {"raw": 1.0, "1m": 60.0, "1h": 3600.0, "1d": 86400.0}
+from .rollup import TIERS
+
+#: tier -> bucket step in seconds
+TIER_STEP = {tier: step for tier, (_, step) in TIERS.items()}
 
 
 def choose_tier(

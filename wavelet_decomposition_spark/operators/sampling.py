@@ -37,11 +37,9 @@ _LCG_C = 12345
 _MOD = 2_147_483_648  # 2^31
 
 
-def hash_bucket(
-    key, seed: int = 0, method: str = "xxhash64"
-) -> Column:
-    """Uniform double in [0, 1) as a pure function of (key, seed)."""
-    key = F.col(key) if isinstance(key, str) else key
+def hash_bucket(seed: int = 0, method: str = "xxhash64") -> Column:
+    """Uniform double in [0, 1) as a pure function of (doc_id, seed)."""
+    key = F.col("doc_id")
     if method == "xxhash64":
         h = F.xxhash64(key, F.lit(seed))
         return (F.pmod(h, F.lit(_MOD))) / F.lit(float(_MOD))
@@ -63,21 +61,19 @@ def hash_sample(
     """Deterministic Bernoulli(rate) sample keyed on ``doc_id``."""
     if not 0.0 <= rate <= 1.0:
         raise ValueError(f"rate must be in [0, 1], got {rate}")
-    return df.where(hash_bucket("doc_id", seed, method) < F.lit(rate))
+    return df.where(hash_bucket(seed, method) < F.lit(rate))
 
 
 def weighted_sample(
     df: DataFrame,
     k: int,
-    weight_col: str,
-    key_col: str = "doc_id",
     seed: int = 0,
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement
-    (Efraimidis-Spirakis A-ES): each row draws u = hash(key, seed) in
-    (0, 1) and the k largest u^(1/w) win — inclusion probability is
-    proportional to weight in the without-replacement sense, and like
-    everything in this module the draw depends only on (key, seed), so
+    (Efraimidis-Spirakis A-ES) on weight column ``w``: each row draws
+    u = hash(doc_id, seed) in (0, 1) and the k largest u^(1/w) win —
+    inclusion probability is proportional to weight in the without-replacement sense, and like
+    everything in this module the draw depends only on (doc_id, seed), so
     reruns, backfills, and repartitioned inputs select the SAME rows.
 
     Implemented as the k largest ln(u)/w (monotone-equivalent, no
@@ -92,14 +88,12 @@ def weighted_sample(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    u = hash_bucket(key_col, seed)
-    es = F.log(F.greatest(u, F.lit(2.0**-53))) / F.col(weight_col)
+    u = hash_bucket(seed)
+    es = F.log(F.greatest(u, F.lit(2.0**-53))) / F.col("w")
     return (
-        df.where(
-            (F.col(weight_col) > 0) & F.col(key_col).isNotNull()
-        )
+        df.where((F.col("w") > 0) & F.col("doc_id").isNotNull())
         .withColumn("_es_key", es)
-        .orderBy(F.desc("_es_key"), key_col)
+        .orderBy(F.desc("_es_key"), "doc_id")
         .limit(k)
         .drop("_es_key")
     )
@@ -108,18 +102,17 @@ def weighted_sample(
 def assign_splits(
     df: DataFrame,
     weights: dict[str, float],
-    key_col: str = "doc_id",
     seed: int = 0,
     method: str = "xxhash64",
 ) -> DataFrame:
     """Disjoint, exhaustive split labels (e.g. train/val/test 0.8/0.1/0.1)
-    by hash-bucket thresholds. Weights must sum to 1 (±1e-9); every row
+    by hash-bucket thresholds on ``doc_id``. Weights must sum to 1 (±1e-9); every row
     gets exactly one label, and the assignment is stable under reruns,
     repartitioning, and incremental appends."""
     total = sum(weights.values())
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"split weights must sum to 1, got {total}")
-    b = hash_bucket(key_col, seed, method)
+    b = hash_bucket(seed, method)
     expr = None
     acc = 0.0
     items = list(weights.items())

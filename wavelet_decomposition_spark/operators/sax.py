@@ -67,22 +67,19 @@ BREAKPOINTS = {
 }
 
 _ALPHABET = "abcdefghij"
+_WINDOW_LEN = 64  # rows per tumbling window
 
 
-def paa(
-    series: DataFrame,
-    value_col: str,
-    window_len: int,
-    n_segments: int,
-) -> DataFrame:
-    """Piecewise Aggregate Approximation over tumbling windows.
+def paa(series: DataFrame, n_segments: int) -> DataFrame:
+    """Piecewise Aggregate Approximation of column ``vm`` over tumbling
+    ``_WINDOW_LEN``-row windows.
 
-    ``value_col`` must be an exact-integer-unit column (BIGINT), and
+    ``vm`` must be an exact-integer-unit column (BIGINT), and
     the input must have ONE row per (group, ts) — positions come from a
     rank over ``bucket_ts``, so duplicate timestamps would make window
     membership partitioning-order-dependent. Compose with the rollup /
     gapfill operators, which guarantee exactly that grid. Each complete
-    ``window_len``-row window is cut into ``n_segments`` equal
+    window is cut into ``n_segments`` equal
     segments; each segment emits its mean as a double (exact integer
     sum / exact integer count — one IEEE division). Incomplete tail
     windows are dropped (their PAA would mix frame sizes).
@@ -90,9 +87,9 @@ def paa(
     Output: group, window_id, seg_id, window_start, seg_mean, n_pts
     (rows = complete windows x n_segments).
     """
-    if window_len % n_segments:
-        raise ValueError("window_len must be divisible by n_segments")
-    seg_len = window_len // n_segments
+    if _WINDOW_LEN % n_segments:
+        raise ValueError("the window length must be divisible by n_segments")
+    seg_len = _WINDOW_LEN // n_segments
     pos = (
         F.row_number().over(
             Window.partitionBy("series_id").orderBy("bucket_ts")
@@ -103,9 +100,9 @@ def paa(
         series.select(
             "series_id",
             F.col("bucket_ts"),
-            F.col(value_col).alias("_v"),
-            F.floor(pos / window_len).cast("int").alias("window_id"),
-            F.floor((pos % window_len) / seg_len)
+            F.col("vm").alias("_v"),
+            F.floor(pos / _WINDOW_LEN).cast("int").alias("window_id"),
+            F.floor((pos % _WINDOW_LEN) / seg_len)
             .cast("int")
             .alias("seg_id"),
         )
@@ -119,7 +116,7 @@ def paa(
     w = Window.partitionBy("series_id", "window_id")
     return (
         segs.withColumn("n_pts", F.sum("_n").over(w))
-        .where(F.col("n_pts") == window_len)
+        .where(F.col("n_pts") == _WINDOW_LEN)
         .select(
             "series_id",
             "window_id",
@@ -133,16 +130,10 @@ def paa(
     )
 
 
-def sax_rare_words(
-    series: DataFrame,
-    value_col: str,
-    k: int = 1,
-    window_len: int = 64,
-    n_segments: int = 8,
-    alphabet: int = 5,
-) -> DataFrame:
+def sax_rare_words(series: DataFrame, k: int = 1) -> DataFrame:
     """HOT-SAX-style anomaly candidates: the ``k`` windows per series
-    whose SAX word is rarest WITHIN that series (a window shaped unlike
+    whose 5-letter-alphabet SAX word (:func:`sax_words`) is rarest WITHIN
+    that series (a window shaped unlike
     the series' recurring patterns gets a word nothing else uses —
     Keogh's discord heuristic, here as the exact rank rather than the
     search-order heuristic). Ties break on (freq, window_id), so the
@@ -153,7 +144,7 @@ def sax_rare_words(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    words = sax_words(series, value_col, window_len, n_segments, alphabet)
+    words = sax_words(series, alphabet=5)
     freq = words.groupBy("series_id", "word").agg(
         F.count(F.lit(1)).alias("word_freq")
     )
@@ -170,14 +161,9 @@ def sax_rare_words(
     )
 
 
-def sax_words(
-    series: DataFrame,
-    value_col: str,
-    window_len: int = 64,
-    n_segments: int = 8,
-    alphabet: int = 5,
-) -> DataFrame:
-    """SAX: z-normalize PAA segment means per series and discretize.
+def sax_words(series: DataFrame, alphabet: int = 5) -> DataFrame:
+    """SAX: z-normalize the 8 PAA segment means (:func:`paa`) of each
+    window of column ``vm`` per series and discretize.
 
     Normalization uses the WHOLE series' moments (the streaming-index
     formulation): mu = S/n and sd = sqrt(max(SS/n - mu^2, 0)) from exact
@@ -186,16 +172,16 @@ def sax_words(
     the middle letter rather than dividing by zero.
 
     Output: one row per complete window — group, window_id,
-    window_start, word (n_segments letters), n_pts.
+    window_start, word (8 letters), n_pts.
     """
     if alphabet not in BREAKPOINTS:
         raise ValueError(f"alphabet must be one of {sorted(BREAKPOINTS)}")
     stats = series.groupBy("series_id").agg(
-        F.sum(value_col).alias("_gs"),
-        F.sum(F.col(value_col) * F.col(value_col)).alias("_gss"),
+        F.sum("vm").alias("_gs"),
+        F.sum(F.col("vm") * F.col("vm")).alias("_gss"),
         F.count(F.lit(1)).alias("_gn"),
     )
-    p = paa(series, value_col, window_len, n_segments).join(
+    p = paa(series, 8).join(
         F.broadcast(stats), "series_id"
     )
     mu = F.col("_gs") / F.col("_gn")

@@ -28,10 +28,10 @@ def changes_to_scd2(
     df: DataFrame,
     key: str,
     attr: str,
-    ts: str,
     tiebreak: str | None = None,
 ) -> DataFrame:
-    """Collapse the event stream into one row per run of equal ``attr``.
+    """Collapse the event stream into one row per run of equal ``attr``
+    over ``ts`` order.
 
     Output: (key, version, attr, valid_from, valid_to, n_events,
     is_current) — version is 1-based per key in time order; valid_to is the
@@ -42,7 +42,7 @@ def changes_to_scd2(
     key's very first event always opens version 1 even when the attribute
     is NULL.
     """
-    order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
+    order = [F.col("ts")] + ([F.col(tiebreak)] if tiebreak else [])
     w = Window.partitionBy(key).orderBy(*order)
     chg: Column = (
         (F.row_number().over(w) == 1)
@@ -52,7 +52,7 @@ def changes_to_scd2(
         "version", F.sum(chg).over(w.rowsBetween(Window.unboundedPreceding, 0))
     )
     grouped = runs.groupBy(key, "version", attr).agg(
-        F.min(ts).alias("valid_from"),
+        F.min("ts").alias("valid_from"),
         F.count(F.lit(1)).alias("n_events"),
     )
     w_out = Window.partitionBy(key).orderBy("valid_from")

@@ -26,11 +26,11 @@ def sessionize(
     df: DataFrame,
     gap: str = "30 minutes",
     group_col: str = "user_id",
-    ts_col: str = "ts",
     order_col: str | None = "event_id",
     value_col: str | None = "value",
 ) -> DataFrame:
-    """One row per (group, session): start/end, event count, value sum.
+    """One row per (group, session) over the ``ts`` column: start/end,
+    event count, value sum.
 
     A session index is the running count of "gap exceeded" markers per
     group — the standard relational sessionization (identical SQL runs on
@@ -39,11 +39,11 @@ def sessionize(
     change session membership (a 0 gap never exceeds the threshold).
     """
     gap_us = int(pd.Timedelta(gap).total_seconds() * 1_000_000)
-    order = [F.col(ts_col)] + ([F.col(order_col)] if order_col else [])
+    order = [F.col("ts")] + ([F.col(order_col)] if order_col else [])
     w = Window.partitionBy(group_col).orderBy(*order)
     # cast covers TIMESTAMP_NTZ inputs (exact under the engine's fixed UTC
     # session timezone); unix_micros accepts only TIMESTAMP
-    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     prev_us = F.lag(ts_us).over(w)
     new_s = (
         prev_us.isNull() | (ts_us - prev_us > F.lit(gap_us))
@@ -55,8 +55,8 @@ def sessionize(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     aggs = [
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
         F.count(F.lit(1)).alias("n_events"),
     ]
     if value_col is not None:

@@ -114,12 +114,11 @@ def _bucket_expr(vec_col, planes: np.ndarray):
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 10,
     n_planes: int = 6,
 ) -> DataFrame:
-    """Bucketed ANN over 64-d embeddings: corpus bucketed once by
-    hyperplane signs; each query scores only its bucket and the hamming-1
-    buckets around it."""
+    """Bucketed ANN over 64-d embeddings, the top 5 per query: corpus
+    bucketed once by hyperplane signs; each query scores only its bucket
+    and the hamming-1 buckets around it."""
     planes = np.random.default_rng(42).normal(size=(n_planes, 64))
     c = corpus.select(
         F.col("vec_id"),
@@ -145,12 +144,13 @@ def lsh_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
     )
 
 
-def train_coarse_quantizer(corpus: DataFrame, n_cells: int) -> np.ndarray:
-    """Spherical k-means centroids (unit rows, shape ``(min(n_cells, n), dim)``).
+def train_coarse_quantizer(corpus: DataFrame) -> np.ndarray:
+    """Spherical k-means centroids of 8 cells (unit rows, shape
+    ``(min(8, n), dim)``).
 
     Training collects a BOUNDED, UNBIASED sample to the driver
     (4096 rows — a few MB even at 10^12-row corpora, the same order as
@@ -162,7 +162,7 @@ def train_coarse_quantizer(corpus: DataFrame, n_cells: int) -> np.ndarray:
     time/source-correlated vectors and silently degrade recall on the rest
     of the corpus at scale). ``orderBy().limit()`` executes as a
     per-partition top-N + driver merge of n rows — no full sort shuffle.
-    ``n_cells`` is clamped to the sample size; callers must use the
+    The cell count is clamped to the sample size; callers must use the
     returned ``C.shape[0]`` as the effective cell count."""
     pdf = (
         corpus.select("vec_id", "embedding")
@@ -173,7 +173,7 @@ def train_coarse_quantizer(corpus: DataFrame, n_cells: int) -> np.ndarray:
     )
     X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-    n_cells = min(n_cells, len(X))
+    n_cells = min(8, len(X))
     rng = np.random.default_rng(42)
     C = X[rng.choice(len(X), size=n_cells, replace=False)]
     for _ in range(10):
@@ -189,18 +189,17 @@ def train_coarse_quantizer(corpus: DataFrame, n_cells: int) -> np.ndarray:
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 16,
     n_probe: int = 3,
 ) -> DataFrame:
-    """IVF-bucketed ANN: corpus assigned to its nearest centroid cell in one
+    """IVF-bucketed ANN, the top 5 per query: corpus assigned to its
+    nearest of 8 centroid cells (:func:`train_coarse_quantizer`) in one
     JVM scan; each query scores only its ``n_probe`` nearest cells.
 
-    Per-query work ≈ corpus * n_probe / n_cells. The cell assignment is a
-    broadcast of ``n_cells`` centroid literals — at cluster scale the scan
+    Per-query work ≈ corpus * n_probe / 8. The cell assignment is a
+    broadcast of the centroid literals — at cluster scale the scan
     stays embarrassingly parallel and nothing about the corpus is ever
     centralized."""
-    C = train_coarse_quantizer(corpus, n_cells)
+    C = train_coarse_quantizer(corpus)
     n_cells = C.shape[0]  # trainer clamps to the sample size
     n_probe = min(n_probe, n_cells)
 
@@ -246,7 +245,7 @@ def ivf_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
     )
 
 

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_TRUNC = {"1m": "minute", "1h": "hour", "1d": "day"}
+from .rollup import TIERS
 
 #: default sketch parameters — k=200 is the Datasketches KLL default
 #: (~1.65% normalized rank error at one sigma); lg_k=12 gives HLL
@@ -60,13 +60,12 @@ def hll_rsd(lg_k: int = HLL_LG_K) -> float:
 def sketch_tier(
     df: DataFrame,
     keys: list[str],
-    ts_col: str,
     value_col: str,
     distinct_col: str,
     tier: str,
 ) -> DataFrame:
-    """Build the finest sketch tier straight from raw rows (KLL at
-    ``KLL_K``, HLL at ``HLL_LG_K``).
+    """Build the finest sketch tier straight from raw rows bucketed on
+    ``ts`` (KLL at ``KLL_K``, HLL at ``HLL_LG_K``).
 
     One hash aggregate (map-side partial sketches — each task folds its rows
     into local sketches, only sketch bytes ride the exchange, bounded by
@@ -75,9 +74,9 @@ def sketch_tier(
     the exact ``n_rows`` count (counts compose exactly; stored for the
     conservation cross-check against ``kll_sketch_get_n``).
     """
-    unit = _TRUNC[tier]
+    unit = TIERS[tier][0]
     return df.groupBy(
-        *keys, F.date_trunc(unit, F.col(ts_col)).alias("bucket_ts")
+        *keys, F.date_trunc(unit, F.col("ts")).alias("bucket_ts")
     ).agg(
         F.kll_sketch_agg_double(F.col(value_col).cast("double"), KLL_K).alias(
             "value_kll"
@@ -87,16 +86,13 @@ def sketch_tier(
     )
 
 
-def merge_sketch_tier(
-    finer: DataFrame, keys: list[str], tier: str
-) -> DataFrame:
-    """Roll a sketch tier up one level by MERGING sketches — never re-reads
-    raw. Input must carry ``bucket_ts`` / ``value_kll`` / ``distinct_hll`` /
+def merge_sketch_tier(finer: DataFrame, keys: list[str]) -> DataFrame:
+    """Roll a sketch tier up to the 1d tier by MERGING sketches — never
+    re-reads raw. Input must carry ``bucket_ts`` / ``value_kll`` / ``distinct_hll`` /
     ``n_rows`` as produced by :func:`sketch_tier` (or a previous merge —
     merges compose)."""
-    unit = _TRUNC[tier]
     return finer.groupBy(
-        *keys, F.date_trunc(unit, F.col("bucket_ts")).alias("bucket_ts")
+        *keys, F.date_trunc("day", F.col("bucket_ts")).alias("bucket_ts")
     ).agg(
         F.kll_merge_agg_double("value_kll").alias("value_kll"),
         F.hll_union_agg("distinct_hll").alias("distinct_hll"),
@@ -126,11 +122,11 @@ def read_sketch_tier(tier_df: DataFrame, probs: list[float]) -> DataFrame:
 def sliding_distinct_sketch(
     df: DataFrame,
     keys: list[str],
-    ts_col: str,
     distinct_col: str,
     window_hours: int = 24,
 ) -> DataFrame:
-    """Trailing-window distinct-count estimate with ZERO event fan-out.
+    """Trailing-window distinct-count estimate of events bucketed on
+    ``ts``, with ZERO event fan-out.
 
     The exact form of 'distinct users in the trailing 24 h, per hour'
     replicates every event windowDuration/slide = 24 times before a
@@ -148,7 +144,7 @@ def sliding_distinct_sketch(
     (bucket_ts + 1h - window, bucket_ts + 1h]).
     """
     hourly = df.groupBy(
-        *keys, F.date_trunc("hour", F.col(ts_col)).alias("bucket_ts")
+        *keys, F.date_trunc("hour", F.col("ts")).alias("bucket_ts")
     ).agg(F.hll_sketch_agg(distinct_col, HLL_LG_K).alias("_sk"))
     from pyspark.sql import Window
 

@@ -21,11 +21,11 @@ from ..plans.session import worker_kernel
 def fft_spectrum(
     df: DataFrame,
     value_col: str = "value",
-    group_cols=("series_id", "year"),
     ts_col: str = "idx",
 ) -> DataFrame:
-    """(group..., freq_idx, magnitude): one-sided demeaned FFT magnitude."""
-    group_cols = list(group_cols)
+    """(series_id, year, freq_idx, magnitude): one-sided demeaned FFT
+    magnitude per (series_id, year)."""
+    group_cols = ["series_id", "year"]
     out_schema = (
         ", ".join(
             f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
@@ -49,15 +49,10 @@ def fft_spectrum(
     )
 
 
-def spectral_features(
-    df: DataFrame,
-    value_col: str = "v",
-    group_cols=("series_id",),
-    ts_col: str = "bucket_ts",
-) -> DataFrame:
+def spectral_features(df: DataFrame, group_cols=("series_id",)) -> DataFrame:
     """Per-group frequency-domain scalar features over the demeaned
-    series: normalized spectral entropy (0 = one pure tone, 1 = white
-    noise — the classic 'is this series forecastable' feature), the
+    series ``v`` in ``bucket_ts`` order: normalized spectral entropy (0 =
+    one pure tone, 1 = white noise — the classic 'is this series forecastable' feature), the
     dominant nonzero frequency index and its power share, and a Parseval
     check pair (time-domain energy vs spectrum energy — carried so the
     driver invariant can assert the transform itself, not just produce
@@ -79,8 +74,8 @@ def spectral_features(
     )
 
     def _feat(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        y = pdf[value_col].to_numpy(dtype=np.float64)
+        pdf = pdf.sort_values("bucket_ts")
+        y = pdf["v"].to_numpy(dtype=np.float64)
         y = y - y.mean()
         n = y.size
         spec = np.abs(np.fft.rfft(y)) ** 2

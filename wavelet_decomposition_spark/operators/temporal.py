@@ -44,8 +44,8 @@ from wavelet_decomposition_spark.operators._time import gran_us as _gran_us
 from wavelet_decomposition_spark.operators._time import us as _us
 
 
-def time_weighted_avg(samples: DataFrame, bucket: str = "1 hour") -> DataFrame:
-    """Per-(group, bucket) time-weighted mean of the LOCF step function:
+def time_weighted_avg(samples: DataFrame) -> DataFrame:
+    """Per-(group, hourly bucket) time-weighted mean of the LOCF step function:
     each sample's value holds until the next sample of the same group; a
     segment spanning several buckets contributes to each in proportion to
     overlap. The trailing sample (no successor) contributes nothing — its
@@ -61,7 +61,7 @@ def time_weighted_avg(samples: DataFrame, bucket: str = "1 hour") -> DataFrame:
     segment into the buckets it overlaps, one hash aggregate keyed
     (group, bucket). No Python anywhere.
     """
-    gus = _gran_us(bucket)
+    gus = _gran_us("1 hour")
     seg = (
         samples.select(
             "series_id",
@@ -101,8 +101,8 @@ def time_weighted_avg(samples: DataFrame, bucket: str = "1 hour") -> DataFrame:
     )
 
 
-def counter_rate(samples: DataFrame, bucket: str = "1 hour") -> DataFrame:
-    """Per-(group, bucket) increase and per-second rate of a cumulative
+def counter_rate(samples: DataFrame) -> DataFrame:
+    """Per-(group, hourly bucket) increase and per-second rate of a cumulative
     counter with restart detection (PromQL ``increase`` over aligned
     buckets): each adjacent-sample delta contributes ``v_t - v_{t-1}``
     when nonnegative, else ``v_t`` (the counter restarted at 0 and climbed
@@ -114,7 +114,7 @@ def counter_rate(samples: DataFrame, bucket: str = "1 hour") -> DataFrame:
 
     Shape: one window (lag) on the group sort, one hash aggregate.
     """
-    gus = _gran_us(bucket)
+    gus = _gran_us("1 hour")
     w = Window.partitionBy("series_id").orderBy("_ts_us")
     d = (
         samples.select(
@@ -150,10 +150,9 @@ def counter_rate(samples: DataFrame, bucket: str = "1 hour") -> DataFrame:
 
 def ohlc_bars(
     samples: DataFrame,
-    bucket: str = "1 hour",
     volume_col: str | None = None,
 ) -> DataFrame:
-    """Per-(group, bucket) OHLC candle: ``open`` = value at the bucket's
+    """Per-(group, hourly bucket) OHLC candle: ``open`` = value at the bucket's
     earliest sample, ``high``/``low`` = extremes, ``close`` = value at the
     latest sample, plus ``n_samples`` (and ``volume`` = sum of
     ``volume_col`` when given). First/last are DETERMINISTIC under ties:
@@ -167,7 +166,7 @@ def ohlc_bars(
     partials, so at 100 TB each task reduces its split to one candle per
     live (group, bucket) before the single exchange.
     """
-    gus = _gran_us(bucket)
+    gus = _gran_us("1 hour")
     pre = samples.select(
         "series_id",
         _us("ts").alias("_t"),

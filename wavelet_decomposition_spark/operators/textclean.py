@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import normalized
+
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 IPV4_RE = r"([0-9]{1,3}\.){3}[0-9]{1,3}"
 PHONE_RE = r"\+?[0-9][0-9()\s.-]{6,}[0-9]"
@@ -62,8 +64,8 @@ def strip_html(df: DataFrame) -> DataFrame:
     return df.select(F.col("doc_id"), clean.alias("clean"))
 
 
-def repetition_ratio(df: DataFrame, n: int = 3) -> DataFrame:
-    """Intra-document n-gram repetition: (id, n_grams, n_distinct,
+def repetition_ratio(df: DataFrame) -> DataFrame:
+    """Intra-document word 3-gram repetition: (id, n_grams, n_distinct,
     dup_ratio, top_gram_frac). ``dup_ratio = 1 - distinct/total`` is the
     standard "repeated n-gram fraction" quality filter (high values mean
     looping/boilerplate text); ``top_gram_frac`` = share of the single
@@ -78,22 +80,17 @@ def repetition_ratio(df: DataFrame, n: int = 3) -> DataFrame:
     whole query; same hazard class as ``dedup.word_shingles``)."""
     words = F.col("_w")
     grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
+        F.sequence(F.lit(0), F.greatest(F.size(words) - 3, F.lit(0))),
         # F.get, not element_at: out-of-range must be null (tail grams of
-        # docs shorter than n), and element_at THROWS under ANSI mode
+        # docs shorter than 3 words), and element_at THROWS under ANSI mode
         lambda i: F.concat_ws(
-            " ", *[F.get(words, i + j) for j in range(n)]
+            " ", *[F.get(words, i + j) for j in range(3)]
         ),
     )
     exploded = (
         df.select(
             F.col("doc_id").alias("id"),
-            F.split(
-                F.trim(
-                    F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
-                ),
-                " ",
-            ).alias("_w"),
+            F.split(normalized("text"), " ").alias("_w"),
         )
         .select("id", F.explode(grams).alias("g"))
     )

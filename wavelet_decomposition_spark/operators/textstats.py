@@ -33,9 +33,10 @@ def normalized(text_col) -> Column:
     return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
 
 
-def fingerprint(text_col) -> Column:
-    """Content-addressable document fingerprint (md5 of normalized text)."""
-    return F.md5(normalized(text_col))
+def fingerprint() -> Column:
+    """Content-addressable document fingerprint (md5 of the normalized
+    ``text`` column)."""
+    return F.md5(normalized("text"))
 
 
 def token_count(text_col) -> Column:
@@ -55,10 +56,10 @@ def _marker_hits(norm: Column, words) -> Column:
     return expr
 
 
-def lang_id(text_col) -> Column:
-    """Greatest-hits language guess over small stopword marker sets;
-    'und' (undetermined) when nothing matches."""
-    norm = normalized(text_col)
+def lang_id() -> Column:
+    """Greatest-hits language guess for the ``text`` column over small
+    stopword marker sets; 'und' (undetermined) when nothing matches."""
+    norm = normalized("text")
     scores = [
         F.struct(
             _marker_hits(norm, words).alias("hits"), F.lit(lang).alias("lang")
@@ -101,6 +102,6 @@ def doc_stats(df: DataFrame) -> DataFrame:
         punct_ratio.alias("punct_ratio"),
         stop_ratio.alias("stopword_ratio"),
         quality.alias("quality_score"),
-        lang_id("text").alias("lang_guess"),
-        fingerprint("text").alias("fingerprint"),
+        lang_id().alias("lang_guess"),
+        fingerprint().alias("fingerprint"),
     )

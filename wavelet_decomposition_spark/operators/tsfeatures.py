@@ -34,16 +34,15 @@ from ..plans.session import worker_kernel
 def rolling_stats(
     series: DataFrame,
     value_col: str = "v",
-    k: int = 24,
 ) -> DataFrame:
-    """Trailing-window mean/std/min/max over the last ``k`` observations
+    """Trailing-window mean/std/min/max over the last 24 observations
     (row-based frame: the series is already on a regular bucket grid —
     compose with ``gapfill_*`` first if it is not, or missing buckets
     silently shrink the window)."""
     w = (
         Window.partitionBy("series_id")
         .orderBy("bucket_ts")
-        .rowsBetween(-(k - 1), 0)
+        .rowsBetween(-23, 0)
     )
     v = F.col(value_col)
     return series.select(
@@ -60,13 +59,11 @@ def rolling_stats(
 
 def ewma(
     series: DataFrame,
-    value_col: str = "v",
     alpha: float = 0.2,
-    group_col: str = "series_id",
-    ts_col: str = "bucket_ts",
 ) -> DataFrame:
-    """Exponentially-weighted moving average, ``adjust=False`` semantics:
-    ``s_0 = x_0``; ``s_t = (1-alpha)*s_{t-1} + alpha*x_t``.
+    """Exponentially-weighted moving average of ``v`` per ``series_id`` in
+    ``bucket_ts`` order, ``adjust=False`` semantics: ``s_0 = x_0``;
+    ``s_t = (1-alpha)*s_{t-1} + alpha*x_t``.
 
     One shuffle on the group key, then a vectorized pandas scan per group
     (C-implemented ``Series.ewm``; no Python-level per-row loop). A SQL
@@ -79,31 +76,27 @@ def ewma(
     """
     import pandas as pd  # noqa: F401  (documents the kernel dependency)
 
-    gtype = series.schema[group_col].dataType.simpleString()
+    gtype = series.schema["series_id"].dataType.simpleString()
     out_schema = (
-        f"{group_col} {gtype}, {ts_col} timestamp, "
-        f"{value_col} double, ewma double"
+        f"series_id {gtype}, bucket_ts timestamp, v double, ewma double"
     )
 
     def fit(pdf):
-        pdf = pdf.sort_values(ts_col)
-        pdf = pdf[[group_col, ts_col, value_col]]
-        pdf["ewma"] = (
-            pdf[value_col].ewm(alpha=alpha, adjust=False).mean()
-        )
+        pdf = pdf.sort_values("bucket_ts")
+        pdf = pdf[["series_id", "bucket_ts", "v"]]
+        pdf["ewma"] = pdf["v"].ewm(alpha=alpha, adjust=False).mean()
         return pdf
 
-    return series.select(group_col, ts_col, value_col).groupBy(
-        group_col
+    return series.select("series_id", "bucket_ts", "v").groupBy(
+        "series_id"
     ).applyInPandas(worker_kernel(fit), schema=out_schema)
 
 
 def acf(
     series: DataFrame,
-    value_col: str = "v",
     max_lag: int = 12,
 ) -> DataFrame:
-    """Sample autocorrelation at lags ``1..max_lag`` per group:
+    """Sample autocorrelation of ``v`` at lags ``1..max_lag`` per group:
     ``corr(x_t, x_{t-lag})`` over the aligned pairs (the "naive"
     per-lag-Pearson estimator — matches any SQL engine's ``corr`` on the
     same pair set, which is the point; the Bartlett-windowed estimator is
@@ -117,7 +110,7 @@ def acf(
     w = Window.partitionBy("series_id").orderBy("bucket_ts")
     base = series.select(
         "series_id",
-        F.col(value_col).alias("_x"),
+        F.col("v").alias("_x"),
         (F.row_number().over(w) - 1).alias("_idx"),
     )
     lagged = base.select(
@@ -143,10 +136,9 @@ def acf(
 
 def brown_les(
     series: DataFrame,
-    value_col: str = "v",
     alpha: float = 0.25,
 ) -> DataFrame:
-    """Brown's linear (double) exponential smoothing: the classic
+    """Brown's linear (double) exponential smoothing of ``v``: the classic
     trend-aware forecaster one notch up from EWMA. Two chained
     adjust=False EWMA passes — ``s1 = ewm(x)``, ``s2 = ewm(s1)`` — give
     ``level = 2*s1 - s2``, ``trend = alpha/(1-alpha) * (s1 - s2)``, and
@@ -166,21 +158,21 @@ def brown_les(
     gtype = series.schema["series_id"].dataType.simpleString()
     out_schema = (
         f"series_id {gtype}, bucket_ts timestamp, "
-        f"{value_col} double, level double, trend double, forecast double"
+        "v double, level double, trend double, forecast double"
     )
     gain = alpha / (1.0 - alpha)
 
     def fit(pdf):
         pdf = pdf.sort_values("bucket_ts")
-        pdf = pdf[["series_id", "bucket_ts", value_col]]
-        s1 = pdf[value_col].ewm(alpha=alpha, adjust=False).mean()
+        pdf = pdf[["series_id", "bucket_ts", "v"]]
+        s1 = pdf["v"].ewm(alpha=alpha, adjust=False).mean()
         s2 = s1.ewm(alpha=alpha, adjust=False).mean()
         pdf["level"] = 2.0 * s1 - s2
         pdf["trend"] = gain * (s1 - s2)
         pdf["forecast"] = pdf["level"] + pdf["trend"]
         return pdf
 
-    return series.select("series_id", "bucket_ts", value_col).groupBy(
+    return series.select("series_id", "bucket_ts", "v").groupBy(
         "series_id"
     ).applyInPandas(worker_kernel(fit), schema=out_schema)
 
@@ -189,12 +181,11 @@ def cross_corr(
     series: DataFrame,
     id_a,
     id_b,
-    value_col: str = "v",
     max_lag: int = 6,
 ) -> DataFrame:
-    """Cross-correlation between two named series at lags ``-max_lag ..
-    max_lag``: ``xcorr(lag) = corr(a_t, b_{t-lag})`` over positionally
-    aligned pairs (positive lag = b leads a). Assumes both series sit on
+    """Cross-correlation of ``v`` between two named series at lags
+    ``-max_lag .. max_lag``: ``xcorr(lag) = corr(a_t, b_{t-lag})`` over
+    positionally aligned pairs (positive lag = b leads a). Assumes both series sit on
     the same bucket grid — compose with ``gapfill_*`` first; alignment is
     by row position within each series' time order, exactly like
     :func:`acf`.
@@ -208,7 +199,7 @@ def cross_corr(
         F.col("series_id").isin([id_a, id_b])
     ).select(
         "series_id",
-        F.col(value_col).alias("_x"),
+        F.col("v").alias("_x"),
         (F.row_number().over(w) - 1).alias("_idx"),
     )
     a = base.where(F.col("series_id") == id_a).select("_x", "_idx")
@@ -235,12 +226,10 @@ def cross_corr(
 
 def rolling_median(
     series: DataFrame,
-    value_col: str = "v",
-    k: int = 24,
 ) -> DataFrame:
-    """Trailing-window median — the robust twin of ``rolling_stats``'s
-    mean (one wild outlier moves a 24-bucket mean by outlier/24 but the
-    median not at all). Expressed as the ``percentile(0.5)`` aggregate
+    """Trailing 24-observation median of ``v`` — the robust twin of
+    ``rolling_stats``'s mean (one wild outlier moves a 24-bucket mean by
+    outlier/24 but the median not at all). Expressed as the ``percentile(0.5)`` aggregate
     over a rows-frame window: exact (sort-based, not a sketch), stays in
     the JVM, and — key for the oracle — both Spark and DuckDB define the
     even-count median as the mean of the two middle order statistics, so
@@ -248,28 +237,28 @@ def rolling_median(
 
     Cost note for 100 TB: an exact sliding median re-sorts the frame per
     row (O(n*k log k) per group vs O(n*k) for the running-sum stats);
-    bounded k and bounded per-group series keep it a within-task cost,
-    and the GK-sketch path (`percentile_approx`) is the escape hatch when
-    k explodes."""
+    the bounded window and bounded per-group series keep it a
+    within-task cost, and the GK-sketch path (`percentile_approx`) is the
+    escape hatch for wide windows."""
     w = (
         Window.partitionBy("series_id")
         .orderBy("bucket_ts")
-        .rowsBetween(-(k - 1), 0)
+        .rowsBetween(-23, 0)
     )
     return series.select(
         "series_id",
         "bucket_ts",
-        value_col,
-        F.expr(f"percentile({value_col}, 0.5)").over(w).alias("roll_median"),
+        "v",
+        F.expr("percentile(v, 0.5)").over(w).alias("roll_median"),
         F.count(F.lit(1)).over(w).alias("roll_n"),
     )
 
 
-def theil_sen(series: DataFrame, unit: str = "1 hour") -> DataFrame:
+def theil_sen(series: DataFrame) -> DataFrame:
     """Theil–Sen robust trend: per group, the median of all pairwise
     slopes ``(v_j - v_i) / (t_j - t_i)`` — up to ~29% corrupted points
     move it boundedly where least-squares follows every outlier. Slope
-    unit = value per ``unit``.
+    unit = value per hour.
 
     Plan: index rows once per group, one self equi-join on the group key
     (i < j predicate applied post-join), one ``percentile(0.5)``
@@ -282,7 +271,7 @@ def theil_sen(series: DataFrame, unit: str = "1 hour") -> DataFrame:
 
     base = series.select(
         "series_id",
-        (us("bucket_ts") / gran_us(unit)).alias("_t"),
+        (us("bucket_ts") / gran_us("1 hour")).alias("_t"),
         F.col("v").alias("_v"),
     )
     a = base.select(
@@ -337,9 +326,9 @@ def theil_sen(series: DataFrame, unit: str = "1 hour") -> DataFrame:
 def lttb_downsample(
     series: DataFrame,
     n_out: int = 500,
-    value_col: str = "v",
 ) -> DataFrame:
-    """Largest-Triangle-Three-Buckets downsampling (Steinarsson 2013) to
+    """Largest-Triangle-Three-Buckets downsampling (Steinarsson 2013) of
+    ``v`` to
     exactly ``min(n_out, n)`` points per group: the line-chart downsampler
     that preserves visual extremes better than striding. First and last
     points are always kept; each interior bucket contributes the point
@@ -365,16 +354,16 @@ def lttb_downsample(
         raise ValueError("n_out must be >= 3")
     gtype = series.schema["series_id"].dataType.simpleString()
     out_schema = (
-        f"series_id {gtype}, bucket_ts timestamp, {value_col} double"
+        f"series_id {gtype}, bucket_ts timestamp, v double"
     )
 
     def fit(pdf):
         pdf = pdf.sort_values("bucket_ts").reset_index(drop=True)
         n = len(pdf)
         if n <= n_out:
-            return pdf[["series_id", "bucket_ts", value_col]]
+            return pdf[["series_id", "bucket_ts", "v"]]
         t = pdf["bucket_ts"].astype("int64").to_numpy().astype(np.float64)
-        v = pdf[value_col].to_numpy().astype(np.float64)
+        v = pdf["v"].to_numpy().astype(np.float64)
         # interior bucket boundaries over points 1..n-2 (endpoints pinned)
         edges = np.linspace(1, n - 1, n_out - 1).astype(np.int64)
         sel = np.empty(n_out, dtype=np.int64)
@@ -393,27 +382,26 @@ def lttb_downsample(
             a = lo + int(np.argmax(area))
             sel[k + 1] = a
         sel[-1] = n - 1
-        return pdf.iloc[sel][["series_id", "bucket_ts", value_col]]
+        return pdf.iloc[sel][["series_id", "bucket_ts", "v"]]
 
-    return series.select("series_id", "bucket_ts", value_col).groupBy(
+    return series.select("series_id", "bucket_ts", "v").groupBy(
         "series_id"
     ).applyInPandas(worker_kernel(fit), schema=out_schema)
 
 
 def m4_downsample(
     series: DataFrame,
-    value_col: str = "v",
     bucket: str = "1 hour",
 ) -> DataFrame:
-    """M4 visualization downsampling (Jugel et al., VLDB'14): per time
-    bucket keep exactly the first, last, min, and max points — the four
+    """M4 visualization downsampling (Jugel et al., VLDB'14) of ``v``: per
+    time bucket keep exactly the first, last, min, and max points — the four
     values that make a line rendering of the bucket pixel-identical to
     the full-resolution series. ONE hash aggregate with map-side partial
     combine; ties on equal values/timestamps resolved by earliest
     timestamp (``min_by`` on a (v, ts) / (ts) struct) so output is
     partitioning-independent."""
     b = F.window(F.col("bucket_ts"), bucket)["start"].alias("bucket_start")
-    v, t = F.col(value_col), F.col("bucket_ts")
+    v, t = F.col("v"), F.col("bucket_ts")
     return (
         series.groupBy("series_id", b)
         .agg(
@@ -426,8 +414,9 @@ def m4_downsample(
     )
 
 
-def robust_anomalies(series: DataFrame, value_col: str = "v") -> DataFrame:
-    """Median/MAD outlier flags (Iglewicz–Hoaglin modified z-score:
+def robust_anomalies(series: DataFrame) -> DataFrame:
+    """Median/MAD outlier flags on ``v`` (Iglewicz–Hoaglin modified
+    z-score:
     ``0.6745*(x-median)/MAD``, cut at 3.5). Mean/std anomaly scoring is
     circular — the anomalies inflate the std that is supposed to expose
     them; the 50% breakdown point of median/MAD is why every production
@@ -438,31 +427,31 @@ def robust_anomalies(series: DataFrame, value_col: str = "v") -> DataFrame:
     twice but shuffled never (percentile partials and the tiny per-group
     stats move)."""
     med = series.groupBy("series_id").agg(
-        F.percentile(value_col, F.lit(0.5)).alias("_med")
+        F.percentile("v", F.lit(0.5)).alias("_med")
     )
     dev = series.join(F.broadcast(med), "series_id").select(
         "series_id",
         "bucket_ts",
-        F.col(value_col),
+        F.col("v"),
         F.col("_med"),
-        F.abs(F.col(value_col) - F.col("_med")).alias("_adev"),
+        F.abs(F.col("v") - F.col("_med")).alias("_adev"),
     )
     mad = dev.groupBy("series_id").agg(
         F.percentile("_adev", F.lit(0.5)).alias("_mad")
     )
-    z = F.lit(0.6745) * (F.col(value_col) - F.col("_med")) / F.col("_mad")
+    z = F.lit(0.6745) * (F.col("v") - F.col("_med")) / F.col("_mad")
     return dev.join(F.broadcast(mad), "series_id").select(
         "series_id",
         "bucket_ts",
-        value_col,
+        "v",
         z.alias("robust_z"),
         (F.abs(z) > 3.5).alias("is_anomaly"),
     )
 
 
-def cusum_changepoint(series: DataFrame, value_col: str = "v") -> DataFrame:
-    """Single most-likely mean-shift location per group via the CUSUM
-    statistic: ``S_t = cumsum(x - mean)``; the change point is the
+def cusum_changepoint(series: DataFrame) -> DataFrame:
+    """Single most-likely mean-shift location of ``v`` per group via the
+    CUSUM statistic: ``S_t = cumsum(x - mean)``; the change point is the
     ``argmax |S_t|`` and the normalized statistic ``max|S|/(std*sqrt(n))``
     is the scale-free evidence size (≳1.36 ≈ 5% KS significance).
 
@@ -472,7 +461,7 @@ def cusum_changepoint(series: DataFrame, value_col: str = "v") -> DataFrame:
     stats = Window.partitionBy("series_id")
     ordered = stats.orderBy("bucket_ts")
     wcum = ordered.rowsBetween(Window.unboundedPreceding, 0)
-    v = F.col(value_col)
+    v = F.col("v")
     cum = series.select(
         "series_id",
         "bucket_ts",
@@ -495,10 +484,9 @@ def cusum_changepoint(series: DataFrame, value_col: str = "v") -> DataFrame:
 
 def seasonal_decompose(
     series: DataFrame,
-    value_col: str = "v",
     period: int = 24,
 ) -> DataFrame:
-    """Additive seasonal decomposition, moving-average flavor (the
+    """Additive seasonal decomposition of ``v``, moving-average flavor (the
     classical `decompose`): trend = centered (period+1)-point moving
     average (null at the edges where the window is incomplete — honest
     nulls, not zero-padding), seasonal = per-phase mean of the detrended
@@ -519,7 +507,7 @@ def seasonal_decompose(
     period-point centered mean, which is exactly seasonal-orthogonal."""
     half = period // 2
     wobs = Window.partitionBy("series_id").orderBy("bucket_ts")
-    v = F.col(value_col)
+    v = F.col("v")
     if period % 2 == 0:
         wa = wobs.rowsBetween(-half, half - 1)
         wb = wobs.rowsBetween(-(half - 1), half)
@@ -554,7 +542,7 @@ def seasonal_decompose(
     return base.join(F.broadcast(ph), ["series_id", "phase"]).select(
         "series_id",
         "bucket_ts",
-        value_col,
+        "v",
         "phase",
         "trend",
         "seasonal",
@@ -564,13 +552,13 @@ def seasonal_decompose(
 
 def holt_winters(
     series: DataFrame,
-    period: int = 24,
     horizon: int | None = None,
     n_buckets: int = 64,
     verify: bool = True,
 ) -> DataFrame:
     """Additive Holt-Winters (triple exponential smoothing) fit +
-    ``horizon``-step forecast per series, with FIXED smoothing gains
+    ``horizon``-step forecast per series, with a season of m = 24 steps
+    and FIXED smoothing gains
     (a=0.3, b=0.05, g=0.2) — deterministic, no optimizer. ``brown_les``
     deliberately stops at Brown's single-gain form because Holt's coupled
     recurrences cannot
@@ -584,7 +572,7 @@ def holt_winters(
     length.
 
     Standard additive recursion with ring-buffer seasonals (slot ``t %
-    period`` holds the latest estimate for that phase):
+    m`` holds the latest estimate for that phase):
 
       l_t = a*(x_t - s_{t-m}) + (1-a)*(l_{t-1} + b_{t-1})
       b_t = b*(l_t - l_{t-1}) + (1-b)*b_{t-1}
@@ -594,7 +582,7 @@ def holt_winters(
     b_0 = (mean season two - mean season one)/m, s_i = x_i - l_0); an
     exactly periodic, trend-free series therefore fits with zero one-step
     error and forecasts its own next cycle exactly — the planted-series
-    gate the driver query rides on. Series shorter than 2*period are
+    gate the driver query rides on. Series shorter than 2*m are
     dropped (cannot be seeded); forecasts cover h = 1..horizon (default
     one full season). ``sse`` sums the one-step fitted errors over t >=
     period.
@@ -608,13 +596,13 @@ def holt_winters(
     Expects a gap-free regular grid per series (compose with
     ``gapfill_*``); phase is positional. One exchange (the bucket hash);
     at 100 TB parallelism comes from the number of series, per-series
-    state is O(period), and batch memory is S*T doubles per bucket — size
+    state is O(m), and batch memory is S*T doubles per bucket — size
     ``n_buckets`` so a bucket's series fit one Arrow batch.
     """
     import numpy as np
     import pandas as pd
 
-    m = int(period)
+    m = 24
     H = int(horizon) if horizon is not None else m
     a, b, g = 0.3, 0.05, 0.2
     gtype = series.schema["series_id"].dataType.simpleString()

@@ -304,14 +304,14 @@ def dwt_windows(
 
 def haar_dwt_relational(
     series: DataFrame,
-    value_col: str,
     levels: int,
     window_len: int,
     *,
     sparse_fill_step: str,
 ) -> DataFrame:
-    """Closed-form Haar pyramid as PURE relational ops — the independent
-    verification twin of ``dwt_windows(wavelet='haar')``.
+    """Closed-form Haar pyramid of the ``turns`` column as PURE relational
+    ops — the independent verification twin of
+    ``dwt_windows(wavelet='haar')``.
 
     Haar's level-``l`` detail coefficient over a dyadic window is the
     closed form ``2^(-l/2) * (sum of the block's first half - sum of its
@@ -322,7 +322,7 @@ def haar_dwt_relational(
     ``(level, k, coef_type)``) followed by ONE hash aggregate — no
     Python stage anywhere, a completely disjoint computation path from
     the ``applyInPandas`` numpy kernel it verifies. Signed contributions
-    are summed in the value column's own (integer) type, so for count
+    are summed in the ``turns`` column's own (integer) type, so for count
     series the block sums are exact and the only float op is the final
     ``2^(-l/2)`` scaling.
 
@@ -341,7 +341,7 @@ def haar_dwt_relational(
         "conv_id",
         F.floor(pos / window_len).cast("int").alias("window_id"),
         (pos % window_len).alias("_p"),
-        F.col(value_col).alias("_v"),
+        F.col("turns").alias("_v"),
     )
     entries = []
     for lvl in range(1, levels + 1):

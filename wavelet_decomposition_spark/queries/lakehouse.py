@@ -101,7 +101,7 @@ def _q_scd2_build(spark, sf_dir):
     user_id hash partitioning; pinned in tests/test_scd_compact.py). The
     DuckDB oracle rebuilds the same runs with window functions."""
     return changes_to_scd2(
-        _events(spark, sf_dir), "user_id", "event_type", "ts",
+        _events(spark, sf_dir), "user_id", "event_type",
         tiebreak="event_id",
     )
 
@@ -128,7 +128,7 @@ def _q_compact_tier(spark, sf_dir):
         .withColumn("day", F.to_date("bucket_ts"))
     )
     one_m.repartition(16).write.mode("overwrite").partitionBy("day").parquet(src)
-    out = compact_partitioned(spark, src, dst, "day", target_rows_per_file=2000)
+    out = compact_partitioned(spark, src, dst, target_rows_per_file=2000)
     return out.select(
         F.col("day").cast("string").alias("day"),
         "files_before",
@@ -206,7 +206,7 @@ def _q_scd2_asof_probe(spark, sf_dir):
     versioned table, no window re-evaluation at probe time."""
     probe = F.lit("2024-01-15 12:00:00").cast("timestamp_ntz")
     hist = changes_to_scd2(
-        _events(spark, sf_dir), "user_id", "event_type", "ts",
+        _events(spark, sf_dir), "user_id", "event_type",
         tiebreak="event_id",
     )
     return hist.where(
@@ -328,9 +328,9 @@ def _q_sketch_tier_merge(spark, sf_dir):
     probs = [0.5, 0.95, 0.99]
     eps = 0.05
     ev = _events(spark, sf_dir).select("event_type", "ts", "value", "user_id")
-    hourly = sketch_tier(ev, ["event_type"], "ts", "value", "user_id", "1h")
+    hourly = sketch_tier(ev, ["event_type"], "value", "user_id", "1h")
     daily = read_sketch_tier(
-        merge_sketch_tier(hourly, ["event_type"], "1d"), probs
+        merge_sketch_tier(hourly, ["event_type"]), probs
     )
     # verification side (exact, raw-scan — exists only to check the cascade)
     exact = ev.groupBy(
@@ -403,13 +403,8 @@ def _q_weighted_sample(spark, sf_dir):
     )
     corpus = base.unionByName(heavies).unionByName(lights)
     k = 50
-    samp = weighted_sample(
-        corpus, k=k, weight_col="w", key_col="doc_id", seed=42
-    ).cache()
-    samp2 = weighted_sample(
-        corpus.repartition(7), k=k, weight_col="w", key_col="doc_id",
-        seed=42,
-    )
+    samp = weighted_sample(corpus, k=k, seed=42).cache()
+    samp2 = weighted_sample(corpus.repartition(7), k=k, seed=42)
     det = (
         samp.select("doc_id")
         .unionAll(samp2.select("doc_id"))
@@ -483,8 +478,7 @@ def _q_zorder_layout(spark, sf_dir):
     path = scratch_dir("layout_zorder")
     cap = 5_000
     write_zorder(
-        _zx_zy(spark, sf_dir), path, "x", "y",
-        target_rows_per_file=cap,
+        _zx_zy(spark, sf_dir), path, target_rows_per_file=cap,
     )
     pfs = {}
     stats = None
@@ -721,7 +715,6 @@ def _q_clustered_layout(spark, sf_dir):
     write_clustered(
         _events(spark, sf_dir).select("user_id", "ts", "value"),
         path,
-        cluster_cols=["user_id"],
         target_rows_per_file=cap,
     )
     stats = layout_stats(path, "user_id")

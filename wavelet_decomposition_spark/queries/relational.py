@@ -448,9 +448,7 @@ def _q_cohort_retention(spark, sf_dir):
     = any event in [cohort_start + k weeks, +1 week). Integer modulo
     cohort arithmetic (no float floor), unrounded retention ratio — both
     engines divide the same two integers once, bit-identically."""
-    out = cohort_retention(
-        _events(spark, sf_dir), cohort_event="signup", period="1 week"
-    )
+    out = cohort_retention(_events(spark, sf_dir))
     return out.select(
         "cohort_ts", "period_k", "n_active", "n_cohort", "retention"
     )
@@ -466,7 +464,6 @@ def _q_funnel_steps(spark, sf_dir):
     return funnel(
         _events(spark, sf_dir),
         steps=["signup", "click", "purchase"],
-        window="7 days",
     )
 
 
@@ -609,7 +606,7 @@ def _q_cms_heavy_hitters(spark, sf_dir):
     # <= 1/support keys, so the checkpoint is tiny at any sf
     hh = (
         cms_heavy_hitters(
-            ev, "user_id", support=support, depth=4, width=width
+            ev, "user_id", support=support, width=width
         )
         .withColumn("user_id", F.col("key").cast("bigint"))
         .localCheckpoint()
@@ -845,7 +842,7 @@ def _q_sliding_distinct_sketch(spark, sf_dir):
     floor 2."""
     ev = _events(spark, sf_dir).select("ts", "event_type", "user_id")
     est = sliding_distinct_sketch(
-        ev, ["event_type"], "ts", "user_id", window_hours=24
+        ev, ["event_type"], "user_id", window_hours=24
     )
     exact = (
         ev.groupBy(
@@ -944,7 +941,7 @@ def _q_sessionize(spark, sf_dir):
     equivalence-tested in tests/test_sessions.py."""
     return sessionize(
         _events(spark, sf_dir), gap="30 minutes", group_col="user_id",
-        ts_col="ts", order_col="event_id", value_col="value",
+        order_col="event_id", value_col="value",
     )
 
 
@@ -991,7 +988,7 @@ def _q_sessionize_skewed(spark, sf_dir):
     )
     out = sessionize(
         ev, gap="30 minutes", group_col="user_id",
-        ts_col="ts", order_col="event_id", value_col="value",
+        order_col="event_id", value_col="value",
     )
     return out.withColumnRenamed("total_value", "total_cents")
 
@@ -1048,8 +1045,7 @@ def _q_winsorize_values(spark, sf_dir):
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
     )
     return winsorize(
-        ev, value_col="cents", group_col="event_type",
-        id_col="event_id", lo_pct=5, hi_pct=95,
+        ev, value_col="cents", group_col="event_type", id_col="event_id"
     ).orderBy("event_type", "event_id")
 
 

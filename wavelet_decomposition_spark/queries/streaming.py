@@ -81,7 +81,6 @@ def _q_stream_sessionize_drain(spark, sf_dir):
     q = stream_sessionize(
         spark, in_path, out_path, ckpt,
         "event_id long, ts timestamp, user_id long, value double",
-        gap="30 minutes",
     )
     await_drain(q, 300)
 
@@ -90,7 +89,7 @@ def _q_stream_sessionize_drain(spark, sf_dir):
         F.round("total_value", 6).alias("total_value"),
     )
     batch = sessionize(
-        ev, gap="30 minutes", group_col="user_id", ts_col="ts",
+        ev, gap="30 minutes", group_col="user_id",
         order_col="event_id", value_col="value",
     )
     w = Window.partitionBy("user_id")
@@ -134,10 +133,9 @@ def _q_stream_ewma_drain(spark, sf_dir):
     streamed = spark.read.parquet(out_p).select(
         "series_id", "bucket_ts", "ewma"
     )
-    batch = ewma(
-        hr, value_col="v", alpha=0.25, group_col="series_id",
-        ts_col="bucket_ts",
-    ).select("series_id", "bucket_ts", F.col("ewma").alias("ewma_b"))
+    batch = ewma(hr, alpha=0.25).select(
+        "series_id", "bucket_ts", F.col("ewma").alias("ewma_b")
+    )
     j = streamed.join(batch, ["series_id", "bucket_ts"], "full_outer")
     return _mismatch_summary(
         j, "n_buckets",
@@ -193,7 +191,7 @@ def _q_stream_counter_rate_drain(spark, sf_dir):
             F.sum("is_reset").cast("bigint").alias("n_resets_s"),
         )
     )
-    batch = counter_rate(counter, bucket="1 hour").select(
+    batch = counter_rate(counter).select(
         "series_id", "bucket_ts", "increase", "n_deltas", "n_resets"
     )
     j = streamed.join(batch, ["series_id", "bucket_ts"], "full_outer")
@@ -225,7 +223,7 @@ def _q_stream_dedup_drain(spark, sf_dir):
         "append"
     ).parquet(in_p)
     await_drain(
-        stream_dedup(spark, in_p, out_p, ck, schema, keys=["event_id"]), 300
+        stream_dedup(spark, in_p, out_p, ck, schema), 300
     )
     # run 2 (same checkpoint): odd-sample duplicates — only state carried
     # from run 1 can identify them as duplicates
@@ -233,7 +231,7 @@ def _q_stream_dedup_drain(spark, sf_dir):
         in_p
     )
     await_drain(
-        stream_dedup(spark, in_p, out_p, ck, schema, keys=["event_id"]), 300
+        stream_dedup(spark, in_p, out_p, ck, schema), 300
     )
 
     emitted = spark.read.parquet(out_p)
@@ -334,7 +332,7 @@ def _q_stream_ohlc_drain(spark, sf_dir):
 
     streamed = spark.read.parquet(out_path)
     batch = ohlc_bars(
-        spark.read.parquet(in_path), bucket="1 hour", volume_col="v"
+        spark.read.parquet(in_path), volume_col="v"
     ).select(
         "series_id",
         "bucket_ts",

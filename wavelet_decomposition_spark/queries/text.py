@@ -44,8 +44,12 @@ from wavelet_decomposition_spark.operators.textclean import (
     strip_html,
 )
 from wavelet_decomposition_spark.operators.textstats import (
+    TOKEN_REGEX,
     doc_stats,
+    fingerprint,
+    normalized,
     token_count,
+    word_count,
 )
 from wavelet_decomposition_spark.queries import (
     _docs,
@@ -55,19 +59,12 @@ from wavelet_decomposition_spark.queries import (
 )
 
 
-_TOKEN_REGEX = r"[a-zA-Z0-9]+|[^a-zA-Z0-9\s]"
-
-
-def _norm_text(c):
-    return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
-
-
 @query(bench=True)
 def _q_dedup_groups(spark, sf_dir):
     """Exact dedup groups over normalized-text fingerprints."""
     return (
         _docs(spark, sf_dir)
-        .select("doc_id", F.md5(_norm_text(F.col("text"))).alias("fp"))
+        .select("doc_id", fingerprint().alias("fp"))
         .groupBy("fp")
         .agg(F.count(F.lit(1)).alias("n_dups"), F.min("doc_id").alias("keeper_id"))
     )
@@ -96,9 +93,9 @@ def _q_doc_stats(spark, sf_dir):
     return docs.select(
         "doc_id",
         F.length("text").alias("n_chars"),
-        F.size(F.split(_norm_text(F.col("text")), " ")).alias("n_words"),
-        F.regexp_count(F.col("text"), F.lit(_TOKEN_REGEX)).alias("n_tokens"),
-        F.md5(_norm_text(F.col("text"))).alias("fingerprint"),
+        word_count("text").alias("n_words"),
+        token_count("text").alias("n_tokens"),
+        fingerprint().alias("fingerprint"),
     )
 
 
@@ -106,7 +103,7 @@ def _q_doc_stats(spark, sf_dir):
 def _q_lang_marker_hits(spark, sf_dir):
     """Language-ID marker counts (the lang_id heuristic's inputs)."""
     docs = _docs(spark, sf_dir)
-    padded = F.concat(F.lit(" "), _norm_text(F.col("text")), F.lit(" "))
+    padded = F.concat(F.lit(" "), normalized("text"), F.lit(" "))
     def hits(words):
         e = F.lit(0)
         for w in words:
@@ -131,7 +128,7 @@ def _q_stratified_split(spark, sf_dir):
     return assign_splits(
         _docs(spark, sf_dir).select("doc_id"),
         {"train": 0.8, "val": 0.1, "test": 0.1},
-        key_col="doc_id", seed=42, method="lcg",
+        seed=42, method="lcg",
     )
 
 
@@ -152,7 +149,7 @@ def _q_decontaminate(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     bench = docs.where(F.col("doc_id") % 37 == 0)
     corpus = docs.where(F.col("doc_id") % 37 != 0)
-    return decontaminate(corpus, bench, n=3)
+    return decontaminate(corpus, bench)
 
 
 # designed nested-loop join: 1-row broadcast corpus stats (N, avgdl) +
@@ -214,9 +211,7 @@ def _q_boolean_retrieval(spark, sf_dir):
     term filter, two hash aggregates, all exact integers;
     DuckDB-oracle-checked.
     """
-    return boolean_and(
-        _docs(spark, sf_dir), ["spark", "data", "join"]
-    ).orderBy("doc_id")
+    return boolean_and(_docs(spark, sf_dir)).orderBy("doc_id")
 
 
 @query(bench=True)
@@ -340,7 +335,7 @@ def _q_repetition_ratio(spark, sf_dir):
     """Intra-doc 3-gram repetition quality signal: repeated-gram fraction
     and single-most-frequent-gram share; one explode + one count
     aggregate + one per-doc rollup."""
-    out = repetition_ratio(_docs(spark, sf_dir), n=3)
+    out = repetition_ratio(_docs(spark, sf_dir))
     return out.select(
         F.col("id").alias("doc_id"),
         "n_grams",
@@ -419,7 +414,7 @@ def _q_trigram_quality(spark, sf_dir):
         [(20_000_000, "ab")], "doc_id bigint, text string"
     )
     return trigram_quality(
-        docs.unionByName(planted), rare_max=2
+        docs.unionByName(planted)
     ).orderBy("doc_id")
 
 
@@ -448,9 +443,7 @@ def _q_edit_distance_pairs(spark, sf_dir):
         )
     )
     return (
-        edit_distance_pairs(
-            docs.unionByName(planted), max_dist=16, block_prefix=24
-        )
+        edit_distance_pairs(docs.unionByName(planted))
         .select(
             "id_a",
             "id_b",
@@ -494,7 +487,7 @@ def _q_dsir_weights(spark, sf_dir):
         "source",
         F.explode(
             F.regexp_extract_all(
-                F.col("text"), F.lit(_TOKEN_REGEX), F.lit(0)
+                F.col("text"), F.lit(TOKEN_REGEX), F.lit(0)
             )
         ).alias("w"),
     )
@@ -576,7 +569,7 @@ def _q_bpe_vocab(spark, sf_dir):
     # table — AQE re-planning per round is pure round-trip overhead at
     # gate scale, and real corpora (gate: 10M docs) keep AQE on
     with aqe_off(spark, 1, when=docs.count() <= 10_000_000):
-        fit = bpe_train(docs, n_merges=24, min_freq=2, verify=True)
+        fit = bpe_train(docs, n_merges=24, verify=True)
         # dual-path gate reads the trainer's own checkpointed word table
         # (same rows word_counts(docs) would produce — it IS that
         # aggregate, materialized once) instead of a second corpus scan

@@ -200,7 +200,7 @@ def _q_dtw_pairs(spark, sf_dir):
         F.coalesce(F.col("n"), F.lit(0)).cast("double").alias("v"),
     )
     out = dtw_allpairs(
-        filled, "series_id", "bucket_ts", "v",
+        filled, "series_id", "bucket_ts",
         radius=24, wide_radius=72, include_self=True,
     )
     return out.select(
@@ -353,7 +353,7 @@ def _q_time_weighted_avg(spark, sf_dir):
             .alias("v")
         )
     )
-    out = time_weighted_avg(samples, bucket="1 hour")
+    out = time_weighted_avg(samples)
     return out.select(
         "series_id",
         "bucket_ts",
@@ -386,7 +386,7 @@ def _q_counter_rate(spark, sf_dir):
         .withColumn("v", (F.sum("_c").over(w) % 1_000_000).cast("double"))
         .drop("_c")
     )
-    out = counter_rate(counter, bucket="1 hour")
+    out = counter_rate(counter)
     return out.select(
         "series_id",
         "bucket_ts",
@@ -437,7 +437,7 @@ def _q_ohlc_bars(spark, sf_dir):
         "ts",
         F.round(F.col("value") * 100).cast("bigint").alias("v"),
     )
-    out = ohlc_bars(samples, bucket="1 hour", volume_col="v")
+    out = ohlc_bars(samples, volume_col="v")
     return out.select(
         "series_id",
         "bucket_ts",
@@ -536,7 +536,6 @@ def _q_forecast_backtest(spark, sf_dir):
     )
     fc = holt_winters(
         train.select("series_id", "bucket_ts", "v"),
-        period=24,
         horizon=h_test,
         verify=False,
     ).select("series_id", "h", "forecast")
@@ -628,7 +627,7 @@ def _q_sax_words(spark, sf_dir):
         )
     )
     return sax_words(
-        hr, "vm", window_len=64, n_segments=8, alphabet=5
+        hr, alphabet=5
     ).orderBy("series_id", "window_id")
 
 
@@ -663,7 +662,7 @@ def _q_sax_anomaly(spark, sf_dir):
         )
     )
     return sax_rare_words(
-        hr, "vm", k=2, window_len=64, n_segments=8, alphabet=5
+        hr, k=2
     ).orderBy("series_id", "window_id")
 
 
@@ -721,7 +720,6 @@ def _q_holt_winters(spark, sf_dir):
     )
     out = holt_winters(
         filled.unionByName(planted),
-        period=24,
         horizon=24,
         n_buckets=4,
     )
@@ -792,7 +790,7 @@ def _q_ts_rolling(spark, sf_dir):
             ).alias("vm"),
         )
     )
-    out = rolling_stats(hr, value_col="vm", k=24)
+    out = rolling_stats(hr, value_col="vm")
     # sample std from exact integer window sums (the operator's Welford
     # stddev is association-order-dependent across engines); Catalyst
     # merges these into the operator's existing Window node
@@ -828,10 +826,7 @@ def _q_ts_ewma(spark, sf_dir):
     alpha and 1-alpha are exact doubles in BOTH engines); Spark side is
     the vectorized pandas kernel, oracle side a DuckDB recursive CTE
     replaying the identical recurrence."""
-    out = ewma(
-        _hourly_series(spark, sf_dir), value_col="v", alpha=0.25,
-        group_col="series_id", ts_col="bucket_ts",
-    )
+    out = ewma(_hourly_series(spark, sf_dir), alpha=0.25)
     return out.select(
         "series_id", "bucket_ts", "v", F.round("ewma", 6).alias("ewma")
     )
@@ -842,7 +837,7 @@ def _q_ts_acf(spark, sf_dir):
     """Sample autocorrelation at lags 1..12 per series: one explode of
     forward offsets + one equi-join (no per-lag window sorts), partial-
     aggregated corr."""
-    out = acf(_hourly_series(spark, sf_dir), value_col="v", max_lag=12)
+    out = acf(_hourly_series(spark, sf_dir), max_lag=12)
     return out.select(
         "series_id",
         F.col("lag").cast("int").alias("lag"),
@@ -866,7 +861,7 @@ def _q_m4_downsample(spark, sf_dir):
         )
         .agg(F.round(F.avg("value"), 6).alias("v"))
     )
-    out = m4_downsample(base, value_col="v", bucket="1 hour")
+    out = m4_downsample(base, bucket="1 hour")
     return out.select(
         "series_id", "bucket_start",
         "first_v", "last_v", "min_v", "max_v", "n_points",
@@ -877,7 +872,7 @@ def _q_m4_downsample(spark, sf_dir):
 def _q_ts_anomaly(spark, sf_dir):
     """Median/MAD modified-z outlier flags (Iglewicz–Hoaglin 3.5 cut) on
     the hourly series; exact percentile aggregates, broadcast stats join."""
-    out = robust_anomalies(_hourly_series(spark, sf_dir), value_col="v")
+    out = robust_anomalies(_hourly_series(spark, sf_dir))
     return out.select(
         "series_id", "bucket_ts", "v",
         F.round("robust_z", 6).alias("robust_z"),
@@ -890,7 +885,7 @@ def _q_ts_cusum(spark, sf_dir):
     """CUSUM mean-shift change-point per series: argmax |cumsum(x-mean)|
     plus the normalized max statistic; per-group output is one scalar row
     so the final shuffle is one row per series."""
-    out = cusum_changepoint(_hourly_series(spark, sf_dir), value_col="v")
+    out = cusum_changepoint(_hourly_series(spark, sf_dir))
     return out.select(
         "series_id", "cp_ts", F.round("cusum_stat", 6).alias("cusum_stat"),
         "n",
@@ -913,7 +908,7 @@ def _q_ts_seasonal(spark, sf_dir):
         F.round(F.col("v") * 1_000_000).cast("bigint").cast("double")
         .alias("v"),
     )
-    out = seasonal_decompose(vi, value_col="v", period=24)
+    out = seasonal_decompose(vi, period=24)
     m = F.lit(1_000_000.0)
     # edge buckets (incomplete centered window) have null trend/residual;
     # sentinel them — NaN ties in the gate's row sort scramble row order
@@ -939,7 +934,7 @@ def _q_ts_rolling_median(spark, sf_dir):
     the doubles are bit-identical; a 6-dp round would land even-count
     midpoints of 6-dp inputs exactly on half-boundaries where the two
     engines' round() tie-breaking differs."""
-    out = rolling_median(_hourly_series(spark, sf_dir), k=24)
+    out = rolling_median(_hourly_series(spark, sf_dir))
     return out.select(
         "series_id", "bucket_ts", "v", "roll_median", "roll_n"
     )
@@ -953,7 +948,7 @@ def _q_ts_theil_sen(spark, sf_dir):
     unit), every slope is one identical IEEE division in both engines,
     and the median is the same two-middle-order-statistics formula —
     unrounded output, bit-identical cross-engine."""
-    out = theil_sen(_hourly_series(spark, sf_dir), unit="1 hour")
+    out = theil_sen(_hourly_series(spark, sf_dir))
     return out.select("series_id", "slope_per_unit", "n_pairs")
 
 
@@ -1037,8 +1032,7 @@ def _q_spectral_features(spark, sf_dir):
     entropy in [0,1], and peak_share in (0,1] — a kernel emitting
     garbage spectra cannot satisfy time-vs-frequency energy equality."""
     out = spectral_features(
-        _hourly_series(spark, sf_dir), value_col="v",
-        group_cols=("series_id",), ts_col="bucket_ts",
+        _hourly_series(spark, sf_dir), group_cols=("series_id",)
     )
     rel = F.abs(F.col("energy_time") - F.col("energy_spec")) / F.greatest(
         F.col("energy_time"), F.lit(1e-30)
@@ -1188,7 +1182,7 @@ def _q_resample_linear(spark, sf_dir):
             "event_type", (F.row_number().over(w) - 1).alias("idx"), "v"
         )
     )
-    out = resample_linear_relational(per_min, "event_type", "idx", "v", 1, 4)
+    out = resample_linear_relational(per_min, "event_type", 1, 4)
     return out.select(
         "event_type", "idx", F.round("v", 6).alias("v")
     )
@@ -1236,7 +1230,7 @@ def _q_hurst_rs(spark, sf_dir):
     return (
         rs_ladder(
             hourly, value_col="vm", group_col="event_type",
-            ts_col="bucket_ts", sizes=(8, 16, 32, 64),
+            sizes=(8, 16, 32, 64),
         )
         .select(
             F.col("event_type").alias("series_id"),
@@ -1289,7 +1283,7 @@ def _q_pelt_changepoints(spark, sf_dir):
     )
     base = _hourly_series(spark, sf_dir).unionByName(planted)
     segs = pelt_changepoints(
-        base, ["series_id"], "bucket_ts", "v", beta=1e4, verify=True
+        base, ["series_id"], "bucket_ts", beta=1e4
     ).cache()
     got = sorted(
         r["start_pos"]

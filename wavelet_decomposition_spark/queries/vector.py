@@ -167,9 +167,9 @@ def _q_kmeans_clusters(spark, sf_dir):
     # small jobs, so the wall is max, not sum
     with ThreadPoolExecutor(max_workers=1) as _pool:
         _f2 = _pool.submit(
-            lambda: kmeans_fit(emb, k=8, max_iter=4, seed=42)
+            lambda: kmeans_fit(emb, k=8, max_iter=4)
         )
-        fit1 = kmeans_fit(emb, k=8, max_iter=4, seed=42)
+        fit1 = kmeans_fit(emb, k=8, max_iter=4)
         fit2 = _f2.result()
     refit_ok = bool(
         np.array_equal(fit1["centroids"], fit2["centroids"])
@@ -400,7 +400,7 @@ def _q_lsh_ann_topk(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = lsh_topk(emb, queries, k=5)
+    out = lsh_topk(emb, queries)
     exact = brute_force_topk(emb, queries, k=5)
     return _ann_with_recall_invariant(out, exact, recall_bound=0.2)
 
@@ -417,7 +417,7 @@ def _q_ivf_ann_topk(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = ivf_topk(emb, queries, k=5, n_cells=8, n_probe=4)
+    out = ivf_topk(emb, queries, n_probe=4)
     exact = brute_force_topk(emb, queries, k=5)
     return _ann_with_recall_invariant(out, exact, recall_bound=0.6)
 

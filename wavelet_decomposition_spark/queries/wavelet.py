@@ -386,7 +386,7 @@ def _q_reconstruction_relational(spark, sf_dir):
     bc = dec.broadcast_dictionaries(spark, "square", {2013: trans[1]})
     betas = dec.decompose(df, bc)
     support = dec.support_table(spark, bc)
-    recon = dec.reconstruct_relational(betas, support, add_offset=True)
+    recon = dec.reconstruct_relational(betas, support)
     joined = recon.join(
         df.withColumnRenamed("value", "signal"), ["series_id", "year", "idx"]
     )
@@ -516,7 +516,7 @@ def _tier_wavelet_parity_plan(spark):
             sparse_fill_step=step,
         )
         rel = wavelet_ops.haar_dwt_relational(
-            tiers[tier], "turns", levels=levels, window_len=wlen,
+            tiers[tier], levels=levels, window_len=wlen,
             sparse_fill_step=step,
         ).withColumnRenamed("coef", "rel_coef")
         # ONE full-outer join replaces the old left-join + left-anti pair,

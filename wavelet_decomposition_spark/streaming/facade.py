@@ -28,11 +28,11 @@ def stream_rollup_1m(
     input_path: str,
     output_path: str,
     checkpoint_path: str,
-    watermark: str = "10 minutes",
 ):
-    """File-source stream of transcript parquet -> 1m tier parquet sink."""
+    """File-source stream of transcript parquet -> 1m tier parquet sink
+    (10-minute watermark)."""
     stream = parquet_source(
-        spark, TRANSCRIPT_SCHEMA, input_path, "ts", watermark
+        spark, TRANSCRIPT_SCHEMA, input_path, "ts", "10 minutes"
     )
     tier = (
         stream.groupBy(
@@ -91,9 +91,8 @@ def stream_dedup(
     output_path: str,
     checkpoint_path: str,
     schema: str,
-    keys: list,
 ):
-    """Streaming exact dedup on ``keys`` via
+    """Streaming exact dedup on ``event_id`` via
     ``dropDuplicatesWithinWatermark`` — the incremental twin of the batch
     ``operators.dedup.exact_dedup``/``dropDuplicates``: only the FIRST
     arrival of each key within the watermark horizon is emitted, and the
@@ -110,7 +109,7 @@ def stream_dedup(
     streaming operators."""
     stream = parquet_source(spark, schema, input_path, "ts", "90 days")
     return start_drain(
-        stream.dropDuplicatesWithinWatermark(keys), output_path,
+        stream.dropDuplicatesWithinWatermark(["event_id"]), output_path,
         checkpoint_path,
     )
 

@@ -11,7 +11,7 @@ event proves the gap.
 Semantics match the batch form exactly for every CLOSED session (asserted
 by tests/test_sessions.py): each group's events are processed in event-time
 order within a micro-batch; a session closes when a later event arrives
-more than ``gap`` after it.
+more than 30 minutes after it.
 
 Late-data contract (guarded, not assumed): events are sorted within each
 micro-batch, but an event that arrives in a LATER micro-batch with
@@ -161,14 +161,14 @@ def stream_sessionize(
     output_path: str,
     checkpoint_path: str,
     schema,
-    gap: str = "30 minutes",
 ):
-    """File-source stream -> closed-session parquet sink (append mode).
+    """File-source stream -> closed-session parquet sink (append mode),
+    with a 30-minute session gap.
 
     Re-starting the drain on the same checkpoint resumes the state store,
     so open sessions keep accumulating across restarts.
     """
-    gap_us = int(pd.Timedelta(gap).total_seconds() * 1_000_000)
+    gap_us = int(pd.Timedelta("30 minutes").total_seconds() * 1_000_000)
     return _drain_with_state(
         spark, schema, input_path, output_path, checkpoint_path, "user_id",
         _sessionize_group(gap_us), OUT_SCHEMA, STATE_SCHEMA,
