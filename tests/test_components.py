@@ -66,25 +66,42 @@ def test_cc_long_chain(spark):
     assert (cc["component"] == 0).all()
 
 
-def test_cc_round_is_one_job(spark):
-    """Every star round (and the input edge list) is checkpointed lazily, so
-    each round's signature aggregate is the one job that materializes it.
-    Pinned on a 65-node chain: 62 jobs under the test session's confs (an
-    eager checkpoint adds one job per round: 70)."""
-    n = 65
-    pdf = pd.DataFrame(
-        {"id_a": np.arange(n - 1), "id_b": np.arange(1, n)}
-    ).astype(np.int64)
-    src = spark.createDataFrame(pdf)
+def _cc_jobs(spark, src, group):
+    """Spark jobs one connected_components run over ``src`` takes."""
     sc = spark.sparkContext
-    sc.setJobGroup("test_cc_round_is_one_job", "connected_components jobs")
+    sc.setJobGroup(group, "connected_components jobs")
     try:
         cc = connected_components(src).toPandas()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("test_cc_round_is_one_job")
-    assert len(cc) == n and (cc["component"] == 0).all()
-    assert len(jobs) == 62
+    assert (cc["component"] == 0).all()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cc_checkpoints_add_no_job(spark, monkeypatch):
+    """Every star round (and the input edge list) is checkpointed lazily, so
+    each round's signature aggregate is the job that materializes it: made
+    eager, the checkpoints add exactly one job each (17-node chain, 5
+    rounds: 6 more jobs)."""
+    from wavelet_decomposition_spark.operators import components
+
+    n = 17
+    src = spark.createDataFrame(
+        pd.DataFrame({"id_a": np.arange(n - 1), "id_b": np.arange(1, n)}).astype(np.int64)
+    )
+    stars = []
+    star = components._star
+    monkeypatch.setattr(
+        components, "_star", lambda e, large: stars.append(large) or star(e, large)
+    )
+    lazy = _cc_jobs(spark, src, "test_cc_lazy")
+    rounds = len(stars) // 2
+    checkpoint = type(src).localCheckpoint
+    monkeypatch.setattr(
+        type(src), "localCheckpoint", lambda self, eager=True, storageLevel=None: checkpoint(self, True, storageLevel)
+    )
+    eager = _cc_jobs(spark, src, "test_cc_eager")
+    assert rounds > 1 and eager - lazy == rounds + 1
 
 
 def test_dedup_clusters_singletons_and_canonical(spark):

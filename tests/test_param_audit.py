@@ -12,11 +12,16 @@ its default. A non-literal argument, or a call that spreads ``*args`` or
 through ``Ctx.call(name, fn, ...)`` and ``submit(fn, ...)``. A call counts
 only for the package function it reaches: a module that defines a function
 or method of the callee's name calls its own, not the package's. Tests
-count as callers. A parameter no call reaches has no value and is not
-flagged: dunder methods and the ``@query`` bodies are reached through the
-language or a registry. A function that non-test code references other
-than by calling it (a kernel handed to Spark, a table entry) may be called
-with any arguments, so it is skipped; a test's reference skips nothing.
+count as callers. A function no call reaches keeps only its defaults, so
+its defaulted parameters are flagged; its required ones are not (dunder
+methods and the ``@query`` bodies are reached through the language or a
+registry). A function that non-test code references other than by calling
+it (a kernel handed to Spark, a table entry) may be called with any
+arguments, so it is skipped; a test's reference skips nothing. A reference
+is a name bound to the package function (imported from the package, or a
+function of the package module itself) that no parameter or assignment of
+the enclosing function shadows, or an attribute read from a package module
+or from ``self``/``cls``.
 
 Run ``python tests/test_param_audit.py`` to list the findings."""
 
@@ -101,8 +106,8 @@ def package_functions(root):
 
 
 def _imports(tree):
-    """The names a module binds with ``from ... import``: local name ->
-    imported name, and the local names bound from the package."""
+    """The names a module binds by import: local name -> imported name, and
+    the local names bound from the package (its functions and modules)."""
     names, from_package = {}, set()
     for node in ast.walk(tree):
         if isinstance(node, ast.ImportFrom):
@@ -110,14 +115,47 @@ def _imports(tree):
                 names[a.asname or a.name] = a.name
                 if (node.module or "").startswith(PACKAGE) or node.level:
                     from_package.add(a.asname or a.name)
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] == PACKAGE:
+                    from_package.add(a.asname or PACKAGE)
     return names, from_package
+
+
+def _refs(tree, names, package_names, own, callee_nodes):
+    """The package functions ``tree`` uses other than as a callee: a bare
+    name bound from the package or to a function of the module's own
+    (unless a parameter or assignment of the enclosing function shadows
+    it), or an attribute read from a package module or from ``self``/``cls``."""
+    found = set()
+
+    def visit(node, shadowed):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            a = node.args
+            bound = a.posonlyargs + a.args + a.kwonlyargs + [p for p in (a.vararg, a.kwarg) if p]
+            shadowed = shadowed | {p.arg for p in bound} | {
+                n.id for n in ast.walk(node)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)}
+        elif id(node) not in callee_nodes and isinstance(getattr(node, "ctx", None), ast.Load):
+            if isinstance(node, ast.Name):
+                if node.id not in shadowed and (node.id in package_names or node.id in own):
+                    found.add(names.get(node.id, node.id))
+            elif isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+                if node.value.id in package_names or (
+                        node.value.id in ("self", "cls") and node.attr in own):
+                    found.add(node.attr)
+        for child in ast.iter_child_nodes(node):
+            visit(child, shadowed)
+
+    visit(tree, frozenset())
+    return found
 
 
 def _calls_and_refs(root):
     """callee name -> list of (calling module, positional args, keyword
     args, spread, whether the call reaches a function of the calling module
-    that has the callee's name); and the names non-test code uses other than
-    as a callee."""
+    that has the callee's name); and the package functions non-test code
+    references other than as a callee."""
     calls, refs = {}, set()
     for path in _py_files(root):
         rel = os.path.relpath(path, root)
@@ -150,18 +188,19 @@ def _calls_and_refs(root):
                       or any(k.arg is None for k in node.keywords))
             calls.setdefault(target, []).append(
                 (rel, args, {k.arg: k.value for k in node.keywords if k.arg}, spread, local))
-        if is_test:
-            continue
-        for node in ast.walk(tree):
-            if isinstance(node, (ast.Name, ast.Attribute)) and id(node) not in callee_nodes:
-                if isinstance(node.ctx, ast.Load):
-                    refs.add(names.get(_name(node), _name(node)))
+        if not is_test:
+            in_package = rel.split(os.sep)[0] == PACKAGE
+            refs |= _refs(tree, names, from_package, own if in_package else set(),
+                          callee_nodes)
     return calls, refs
 
 
 def _single_valued(pname, pos, default, sites):
     """True when every call site gives the parameter one and the same
-    literal value (an omitted argument gives the default)."""
+    literal value (an omitted argument gives the default); a defaulted
+    parameter no call reaches only ever takes its default."""
+    if not sites:
+        return default is not None
     values = set()
     for args, kws, spread in sites:
         if spread:
@@ -241,6 +280,14 @@ def test_rule_default_passed_only_its_own_value_is_flagged(tmp_path):
     assert got == ["mod.py::g(n)"]
 
 
+def test_rule_default_of_an_uncalled_function_is_flagged(tmp_path):
+    got = _plant(tmp_path, {
+        MOD: "def f(x, n=5):\n    return x\n",
+        "tools/run.py": "def f(x, n=5):\n    return x\nf(1, n=6)\nf(2)\n",
+    })
+    assert got == ["mod.py::f(n)"]
+
+
 def test_rule_second_value_makes_an_option(tmp_path):
     got = _plant(tmp_path, {
         MOD: ("def two(x, col):\n    return x\n"
@@ -263,6 +310,21 @@ def test_rule_test_reference_does_not_hide_a_function(tmp_path):
                                "h(2)\nh(3)\n"),
     })
     assert got == ["mod.py::h(col)"]
+
+
+def test_rule_only_a_reference_to_the_package_function_hides_it(tmp_path):
+    got = _plant(tmp_path, {
+        MOD: ("def kept(x, col='a'):\n    return x\n"
+              "def shadowed(x, col='a'):\n    return x\n"
+              "def named(x, col='a'):\n    return x\n"),
+        "tools/run.py": ("from wavelet_decomposition_spark.mod import kept, named, shadowed\n"
+                         "TABLE = [kept]\n"
+                         "def tally(shadowed):\n    return shadowed[0]\n"
+                         "def count(rows):\n    named = len(rows)\n    return named\n"
+                         "kept(1)\nshadowed(1)\nshadowed(2)\nnamed(1)\nnamed(2)\n"),
+        "tools/other.py": "named = 3\nprint(named, rows.shadowed)\n",
+    })
+    assert sorted(got) == ["mod.py::named(col)", "mod.py::shadowed(col)"]
 
 
 def test_rule_calling_module_own_function_is_not_a_caller(tmp_path):

@@ -44,8 +44,9 @@ def token_count(text_col) -> Column:
     return F.regexp_count(c, F.lit(TOKEN_REGEX))
 
 
-def word_count(text_col) -> Column:
-    return F.size(F.split(normalized(text_col), " "))
+def word_count() -> Column:
+    """Number of space-separated words in the normalized ``text`` column."""
+    return F.size(F.split(normalized("text"), " "))
 
 
 def _marker_hits(norm: Column, words) -> Column:
@@ -75,7 +76,7 @@ def doc_stats(df: DataFrame) -> DataFrame:
     c = F.col("text")
     norm = normalized("text")
     n_chars = F.length(c)
-    n_words = word_count("text")
+    n_words = word_count()
     n_tokens = token_count("text")
     punct = F.regexp_count(c, F.lit(r"[^\w\s]"))
     stop_hits = _marker_hits(norm, _EN_STOPWORDS)

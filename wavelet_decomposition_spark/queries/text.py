@@ -93,7 +93,7 @@ def _q_doc_stats(spark, sf_dir):
     return docs.select(
         "doc_id",
         F.length("text").alias("n_chars"),
-        word_count("text").alias("n_words"),
+        word_count().alias("n_words"),
         token_count("text").alias("n_tokens"),
         fingerprint().alias("fingerprint"),
     )
