@@ -133,3 +133,31 @@ def test_changed_input_invalidates_partition(spark, tmp_path):
     )
     rebuilt = ckpt.refresh_tier(spark, changed, _compute, base, "1h")
     assert rebuilt == [str(some_day)]
+
+
+def test_tier_content_hashes_match_manifest(spark, tmp_path):
+    """One grouped pass over a stored tier reproduces the content hash
+    refresh_tier recorded for every day; a day rewritten with other rows
+    gets another hash."""
+    base = str(tmp_path / "tiers5")
+    os.makedirs(base, exist_ok=True)
+    inp = _input_with_day(spark, n=20, seed=5)
+    ckpt.refresh_tier(spark, inp, _compute, base, "1h")
+    manifest = ckpt.read_manifest(base, "1h")
+    hashes = ckpt.tier_content_hashes(spark, base, "1h")
+    assert len(hashes) > 1
+    assert hashes == {d: r["content_hash"] for d, r in manifest.items()}
+
+    day = min(hashes)
+    changed = inp.withColumn(
+        "turns",
+        F.when(F.col("day") == F.lit(day), F.col("turns") + 1).otherwise(
+            F.col("turns")
+        ),
+    )
+    assert ckpt.refresh_tier(spark, changed, _compute, base, "1h") == [day]
+    rehashed = ckpt.tier_content_hashes(spark, base, "1h")
+    assert rehashed[day] != hashes[day]
+    assert rehashed == {
+        d: r["content_hash"] for d, r in ckpt.read_manifest(base, "1h").items()
+    }

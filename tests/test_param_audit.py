@@ -7,8 +7,9 @@ options from growing back.
 
 The scan is static and matches callees by name. A call gives a parameter
 the literal it passes by keyword or by position; a call that omits it gives
-its default. A non-literal argument, or a call that spreads ``*args`` or
-``**kw``, counts as a second value. Calls reach a function directly or
+its default; a column reference ``F.col(<literal>)`` gives its literal. Any
+other non-literal argument, or a call that spreads ``*args`` or ``**kw``,
+counts as a second value. Calls reach a function directly or
 through ``Ctx.call(name, fn, ...)`` and ``submit(fn, ...)``. A call counts
 only for the package function it reaches: a module that defines a function
 or method of the callee's name calls its own, not the package's. Tests
@@ -71,7 +72,12 @@ def _functions(tree):
 
 
 def _literal(node):
-    """The literal ``node`` spells, as a comparable key, or None."""
+    """The literal ``node`` spells, as a comparable key, or None. A column
+    reference ``F.col(<literal>)`` spells its literal: a caller passing
+    ``F.col("text")`` and one passing ``"text"`` give one value."""
+    if (isinstance(node, ast.Call) and _name(node.func) == "col"
+            and len(node.args) == 1 and not node.keywords):
+        node = node.args[0]
     try:
         return repr(ast.literal_eval(node))
     except (ValueError, TypeError, SyntaxError):
@@ -268,6 +274,16 @@ def test_rule_required_parameter_with_one_literal_is_flagged(tmp_path):
     got = _plant(tmp_path, {
         MOD: "def f(x, col):\n    return x\n",
         "tools/run.py": "f(1, 'a')\nf(2, 'a')\n",
+    })
+    assert got == ["mod.py::f(col)"]
+
+
+def test_rule_column_reference_gives_its_literal(tmp_path):
+    got = _plant(tmp_path, {
+        MOD: ("def f(x, col):\n    return x\n"
+              "def g(x, col):\n    return x\n"),
+        "tools/run.py": ("f(1, 'text')\nf(2, F.col('text'))\n"
+                         "g(1, 'text')\ng(2, F.col('body'))\n"),
     })
     assert got == ["mod.py::f(col)"]
 

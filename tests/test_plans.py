@@ -152,31 +152,39 @@ def test_solve_stage_not_coalesced(spark, queries):
 def test_wavelet_queries_leave_no_storage(spark, queries, name):
     """The wavelet queries hand the sparse tier and its grid step straight
     to the operators: no gap-filled grid is built and none is cached.
-    Building and running one leaves no persistent RDD behind, except
-    tier_wavelet_parity's own returned checkpoint, and this holds on every
-    repeat. The energy and denoise queries run exactly one Python stage,
-    read no cached relation and explode no grid ``sequence``."""
+    Building and running one leaves no persistent RDD behind, on every
+    repeat. tier_wavelet_parity's builder only builds: it runs no Spark job
+    and its plan reads no cached relation. The energy and denoise queries
+    run exactly one Python stage, read no cached relation and explode no
+    grid ``sequence``."""
     import __spark_entry__ as entrymod
 
     sc = spark.sparkContext
-    allowed = 1 if name == "tier_wavelet_parity" else 0
     start = set(sc._jsc.getPersistentRDDs().keys())
-    for _ in range(2):
+    for i in range(2):
         before = len(sc._jsc.getPersistentRDDs())
-        df = (
-            entrymod.entry(spark) if name == "entry"
-            else queries[name](spark, SF_DIR)
-        )
+        group = f"build:{name}:{i}"
+        sc.setJobGroup(group, group)
+        try:
+            df = (
+                entrymod.entry(spark) if name == "entry"
+                else queries[name](spark, SF_DIR)
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
         df.collect()
-        assert len(sc._jsc.getPersistentRDDs()) - before <= allowed
-        if name in ("dwt_energy", "modwt_energy", "wpt_energy", "dwt_denoise"):
-            # the plan that ran: AQE's final plan, not its initial one
-            plan = df._jdf.queryExecution().executedPlan()
-            if plan.nodeName() == "AdaptiveSparkPlan":
-                plan = plan.executedPlan()
-            plan = plan.toString()
-            assert plan.count("FlatMapGroupsInPandas") == 1
+        assert len(sc._jsc.getPersistentRDDs()) <= before
+        # the plan that ran: AQE's final plan, not its initial one
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()
+        plan = plan.toString()
+        if name != "entry":
             assert "InMemoryRelation" not in plan
+        if name == "tier_wavelet_parity":
+            assert sc.statusTracker().getJobIdsForGroup(group) == []
+        elif name != "entry":
+            assert plan.count("FlatMapGroupsInPandas") == 1
             assert not [
                 ln for ln in plan.splitlines()
                 if "Generate" in ln and "sequence(" in ln

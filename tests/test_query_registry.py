@@ -95,7 +95,9 @@ def test_prep_ships_the_package_once(spark, sf_dir):
 def test_conf_window_queries_leave_session_confs_unchanged(
     spark, sf_dir, name
 ):
-    """These three build under ``aqe_off``; the confs must come back."""
+    """pagerank and bpe_vocab build under ``aqe_off`` and
+    tier_wavelet_parity builds a lazy plan; each must leave the session's
+    confs as it found them, also once its frame runs."""
     before = spark.conf.getAll
     df = entrymod.queries()[name](spark, sf_dir)
     assert spark.conf.getAll == before
@@ -107,10 +109,10 @@ def test_aqe_off_restores_on_exception_and_skips_when_false(spark):
     keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     before = {k: spark.conf.get(k) for k in keys}
     with pytest.raises(RuntimeError):
-        with aqe_off(spark, 3):
+        with aqe_off(spark):
             assert spark.conf.get(keys[0]) == "false"
-            assert spark.conf.get(keys[1]) == "3"
+            assert spark.conf.get(keys[1]) == "1"
             raise RuntimeError("inside the window")
     assert {k: spark.conf.get(k) for k in keys} == before
-    with aqe_off(spark, 3, when=False):
+    with aqe_off(spark, when=False):
         assert {k: spark.conf.get(k) for k in keys} == before

@@ -4,6 +4,10 @@ names, and an order-insensitive value hash.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...] [--rtol R]
 
+One line per query goes to stdout, and the last line is the tally as JSON,
+``{"ok": n, "rows_only": n, "failed": [names]}``: ``ok`` counts the queries
+that match their oracle, ``rows_only`` the passing queries without one.
+
 --rtol R (diagnostic, NOT the driver's semantics): when the exact value
 hash mismatches, fall back to a cell-wise comparison that accepts float
 columns within relative tolerance R (non-float columns still exact, row
@@ -15,6 +19,7 @@ sf0.01 driver gate stays bit-exact.
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 import time
@@ -96,8 +101,10 @@ def main():
     import __spark_entry__ as entrymod
     from wavelet_decomposition_spark.plans.session import build_session
 
+    # no progress bar: it would interleave with the result lines
     spark = build_session(app_name="correctness-check", cores=8,
-                          shuffle_partitions=16)
+                          shuffle_partitions=16,
+                          extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in TABLES:
         # driver testdata ships single files; derived dirs (make_scaled_sf)
@@ -178,9 +185,15 @@ def main():
         print(f"{len(failures)} FAILURES:")
         for n, p in failures:
             print(f"  {n}: {p}")
-        sys.exit(1)
-    print("all queries match")
+    else:
+        print("all queries match")
+    failed = sorted({n for n, _ in failures})
+    passed = [n for n in qs if (not only or n in only) and n not in failed]
+    print(json.dumps({"ok": sum(n in oracles for n in passed),
+                      "rows_only": sum(n not in oracles for n in passed),
+                      "failed": failed}))
     spark.stop()
+    sys.exit(1 if failures else 0)
 
 
 if __name__ == "__main__":

@@ -13,6 +13,11 @@ stopped and re-runs are no-ops:
 - fingerprints derive from the *input* partition's content, so late data
   (a changed input day) automatically invalidates and rebuilds exactly the
   affected partitions (deterministic re-aggregation, no watermarks needed).
+- one content hash, ``_content_hash`` (the sum of per-row xxhash64 as
+  decimal(38,0)), is both an input day's fingerprint and a written
+  partition's ``content_hash``; ``tier_content_hashes`` recomputes it for
+  every stored day of a tier in one grouped pass, so checking a tier against
+  its manifest is one job.
 
 The manifest is a small JSON-lines table on the same filesystem. Writes are
 atomic-per-partition (parquet dir replace, then manifest append) — crash
@@ -53,16 +58,22 @@ def _append_manifest(base_path: str, tier: str, row: dict) -> None:
         fh.write(json.dumps(row, sort_keys=True) + "\n")
 
 
+def _content_hash(cols: list[str]):
+    """The order-insensitive content hash of a set of rows: the sum of
+    per-row xxhash64 over ``cols``, accumulated as decimal(38,0)
+    (commutative -> partition-order independent; wide enough that ANSI-mode
+    long overflow cannot occur)."""
+    return F.sum(F.xxhash64(*cols).cast("decimal(38,0)"))
+
+
 def partition_fingerprints(df: DataFrame, day_col: str = "day") -> dict[str, dict]:
-    """Order-insensitive per-day content fingerprint + row count of an input
-    DataFrame: sum of per-row xxhash64 over all columns, accumulated as
-    decimal(38,0) (commutative -> partition-order independent; wide enough
-    that ANSI-mode long overflow cannot occur)."""
+    """Per-day content fingerprint (``_content_hash`` over all columns) +
+    row count of an input DataFrame."""
     rows = (
         df.groupBy(day_col)
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("fp"),
+            _content_hash(df.columns).alias("fp"),
         )
         .collect()
     )
@@ -125,7 +136,7 @@ def refresh_tier(
         written = spark.read.parquet(part_path)
         content = written.agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64(*written.columns).cast("decimal(38,0)")).alias("h"),
+            _content_hash(written.columns).alias("h"),
         ).collect()[0]
         with lock:
             _append_manifest(
@@ -161,6 +172,16 @@ def refresh_tier(
 
 def read_tier(spark: SparkSession, base_path: str, tier: str) -> DataFrame:
     return spark.read.parquet(os.path.join(base_path, f"tier={tier}"))
+
+
+def tier_content_hashes(spark: SparkSession, base_path: str, tier: str) -> dict[str, str]:
+    """{day: content hash} of every day stored in a tier, in one grouped
+    aggregate over its ``day=`` partitions; a day whose data is unchanged
+    since ``refresh_tier`` wrote it gets its manifest ``content_hash``."""
+    stored = read_tier(spark, base_path, tier)
+    cols = [c for c in stored.columns if c != "day"]
+    rows = stored.groupBy(stored.day.cast("string")).agg(_content_hash(cols)).collect()
+    return {day: str(h) for day, h in rows}
 
 
 def expire_tier(base_path: str, tier: str, cutoff_day: str) -> list[str]:

@@ -44,7 +44,7 @@ def char_trigrams(docs: DataFrame) -> DataFrame:
     key on). Documents shorter than 3 normalized chars contribute no
     rows. Output: ``(doc_id, tri)``, one row per occurrence.
     """
-    norm = normalized(F.col("text"))
+    norm = normalized()
     # NB 1: Spark's sequence(1, stop) DESCENDS when stop < 1
     # (sequence(1,0) is [1, 0], not empty) — short docs need the
     # explicit empty branch.

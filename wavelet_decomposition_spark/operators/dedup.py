@@ -87,17 +87,18 @@ def exact_dedup(df: DataFrame) -> DataFrame:
     )
 
 
-def _gram_array(words: F.Column) -> F.Column:
-    """Distinct word 3-grams from an ALREADY-MATERIALIZED words column.
+def _gram_array() -> F.Column:
+    """Distinct word 3-grams from the words column ``_w``, which the
+    caller must materialize first.
 
-    ``words`` must be a plain column reference, not the split expression:
+    The lambdas must read a plain column reference, not the split expression:
     higher-order functions are interpreted (no common-subexpression
     elimination), so an inline ``split(normalized(text))`` would re-run the
     normalize+split over the whole document once per gram — O(len^2) per
     doc (measured: ~25% of the signature stage even on 50-word docs)."""
     grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(words) - 3, F.lit(0))),
-        lambda i: F.concat_ws(" ", *[F.element_at(words, (i + j + 1).cast("int")) for j in range(3)]),
+        F.sequence(F.lit(0), F.greatest(F.size("_w") - 3, F.lit(0))),
+        lambda i: F.concat_ws(" ", *[F.element_at("_w", (i + j + 1).cast("int")) for j in range(3)]),
     )
     return F.filter(F.array_distinct(grams), lambda g: F.length(g) > 0)
 
@@ -107,10 +108,10 @@ def shingled(df: DataFrame) -> DataFrame:
     the words array materialized first (see :func:`_gram_array`)."""
     return (
         _spread(df.select("doc_id", "text"))
-        .withColumn("_w", F.split(normalized("text"), " "))
+        .withColumn("_w", F.split(normalized(), " "))
         .select(
             F.col("doc_id").alias("id"),
-            _gram_array(F.col("_w")).alias("sh"),
+            _gram_array().alias("sh"),
         )
     )
 
@@ -128,11 +129,11 @@ def word_shingles(df: DataFrame) -> DataFrame:
     complex expression directly blocks the inference (the rule only fires
     on attribute children)."""
     base = _spread(df.select("doc_id", "text")).withColumn(
-        "_w", F.split(normalized("text"), " ")
+        "_w", F.split(normalized(), " ")
     )
     return base.select(
         F.col("doc_id").alias("id"),
-        F.explode(_gram_array(F.col("_w"))).alias("shingle"),
+        F.explode(_gram_array()).alias("shingle"),
     )
 
 
@@ -354,7 +355,7 @@ def simhash(df: DataFrame) -> DataFrame:
     Python anywhere (round-1 ran a byte-at-a-time FNV loop here — the one
     violation of the no-per-row-Python contract, and 14.8 s at sf0.1)."""
     token_hashes = F.transform(
-        F.split(normalized("text"), " "), lambda t: F.xxhash64(t)
+        F.split(normalized(), " "), lambda t: F.xxhash64(t)
     )
     hashed = _spread(df.select("doc_id", "text")).select(
         F.col("doc_id").alias("id"), token_hashes.alias("h")
@@ -449,12 +450,13 @@ def simhash_near_pairs(sh: DataFrame, max_hamming: int = 3) -> DataFrame:
 # Embedding cosine near-dup
 # --------------------------------------------------------------------------
 
-def _cosine(a, b) -> F.Column:
+def _cosine() -> F.Column:
+    """Cosine of the ``v_a`` and ``v_b`` vector columns."""
     dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
+        F.zip_with("v_a", "v_b", lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
     )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
+    na = F.sqrt(F.aggregate("v_a", F.lit(0.0), lambda acc, v: acc + v * v))
+    nb = F.sqrt(F.aggregate("v_b", F.lit(0.0), lambda acc, v: acc + v * v))
     return dot / (na * nb)
 
 
@@ -491,7 +493,7 @@ def embedding_near_dup_pairs(emb: DataFrame) -> DataFrame:
     return (
         a.join(b, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", _cosine(F.col("v_a"), F.col("v_b")).alias("cosine"))
+        .select("id_a", "id_b", _cosine().alias("cosine"))
         .filter(F.col("cosine") >= 0.999)
         .distinct()
     )
@@ -529,7 +531,7 @@ def edit_distance_pairs(docs: DataFrame) -> DataFrame:
     ASCII-only); on non-ASCII corpora the oracle would need a
     byte-level cast.
     """
-    norm = normalized(F.col("text"))
+    norm = normalized()
     sides = docs.select(
         F.col("doc_id").alias("id"),
         norm.alias("t"),

@@ -141,7 +141,7 @@ def domain_mix(
     rather than silently renormalizing."""
     per = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(token_count("text")).alias("n_tokens"),
+        F.sum(token_count()).alias("n_tokens"),
     )
     if weights is None:
         w = 1.0 / F.count(F.lit(1)).over(Window.partitionBy())
@@ -198,7 +198,7 @@ def pack_sequences(
     toks = (
         F.col(token_col)
         if token_col
-        else token_count(F.col("text"))
+        else token_count()
     ).cast("int")
     meta = df.select(F.col("doc_id").alias("_id"), toks.alias("n_tokens"))
 

@@ -163,14 +163,13 @@ def sliding_distinct_sketch(
     )
 
 
-def rank_band_columns(
-    value_col: Column, probs: list[float], eps: float
-) -> list[Column]:
-    """Exact order-statistics verification bands: for each target rank p,
-    the exact values at ranks p-eps and p+eps (clamped to [0, 1]). Quantile
-    values are monotone in rank, so ``lo <= estimate <= hi`` is the sound
-    check for 'estimate's rank error <= eps'. Exact ``percentile`` — this is
-    the VERIFICATION path only; never run it on the production cascade."""
+def rank_band_columns(probs: list[float], eps: float) -> list[Column]:
+    """Exact order-statistics verification bands of the ``value`` column:
+    for each target rank p, the exact values at ranks p-eps and p+eps
+    (clamped to [0, 1]). Quantile values are monotone in rank, so
+    ``lo <= estimate <= hi`` is the sound check for 'estimate's rank error
+    <= eps'. Exact ``percentile`` — this is the VERIFICATION path only;
+    never run it on the production cascade."""
     # ONE percentile buffer for all bands: percentile(value, array(...))
     # computes every requested rank from a single per-group value buffer,
     # and the identical aggregate child under each element_at dedupes in
@@ -181,7 +180,7 @@ def rank_band_columns(
     for p in probs:
         pcts.append(max(0.0, p - eps))
         pcts.append(min(1.0, p + eps))
-    arr = F.percentile(value_col, F.array(*[F.lit(x) for x in pcts]))
+    arr = F.percentile("value", F.array(*[F.lit(x) for x in pcts]))
     cols: list[Column] = []
     for i, p in enumerate(probs):
         tag = f"p{int(round(p * 100)):02d}"

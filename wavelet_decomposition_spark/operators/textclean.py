@@ -90,7 +90,7 @@ def repetition_ratio(df: DataFrame) -> DataFrame:
     exploded = (
         df.select(
             F.col("doc_id").alias("id"),
-            F.split(normalized("text"), " ").alias("_w"),
+            F.split(normalized(), " ").alias("_w"),
         )
         .select("id", F.explode(grams).alias("g"))
     )

@@ -26,27 +26,26 @@ _EN_STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "it", "for", "on"]
 TOKEN_REGEX = r"[a-zA-Z0-9]+|[^a-zA-Z0-9\s]"
 
 
-def normalized(text_col) -> Column:
-    """Lowercase, collapse whitespace, trim — the canonical form every
-    fingerprint/dedup operator keys on."""
-    c = text_col if isinstance(text_col, Column) else F.col(text_col)
-    return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
+def normalized() -> Column:
+    """The ``text`` column lowercased, whitespace collapsed, trimmed — the
+    canonical form every fingerprint/dedup operator keys on."""
+    return F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
 
 
 def fingerprint() -> Column:
     """Content-addressable document fingerprint (md5 of the normalized
     ``text`` column)."""
-    return F.md5(normalized("text"))
+    return F.md5(normalized())
 
 
-def token_count(text_col) -> Column:
-    c = text_col if isinstance(text_col, Column) else F.col(text_col)
-    return F.regexp_count(c, F.lit(TOKEN_REGEX))
+def token_count() -> Column:
+    """Number of ``TOKEN_REGEX`` tokens in the ``text`` column."""
+    return F.regexp_count(F.col("text"), F.lit(TOKEN_REGEX))
 
 
 def word_count() -> Column:
     """Number of space-separated words in the normalized ``text`` column."""
-    return F.size(F.split(normalized("text"), " "))
+    return F.size(F.split(normalized(), " "))
 
 
 def _marker_hits(norm: Column, words) -> Column:
@@ -60,7 +59,7 @@ def _marker_hits(norm: Column, words) -> Column:
 def lang_id() -> Column:
     """Greatest-hits language guess for the ``text`` column over small
     stopword marker sets; 'und' (undetermined) when nothing matches."""
-    norm = normalized("text")
+    norm = normalized()
     scores = [
         F.struct(
             _marker_hits(norm, words).alias("hits"), F.lit(lang).alias("lang")
@@ -74,10 +73,10 @@ def lang_id() -> Column:
 def doc_stats(df: DataFrame) -> DataFrame:
     """Per-document quality features + a composite quality score in [0, 1]."""
     c = F.col("text")
-    norm = normalized("text")
+    norm = normalized()
     n_chars = F.length(c)
     n_words = word_count()
-    n_tokens = token_count("text")
+    n_tokens = token_count()
     punct = F.regexp_count(c, F.lit(r"[^\w\s]"))
     stop_hits = _marker_hits(norm, _EN_STOPWORDS)
     punct_ratio = punct / F.greatest(n_chars, F.lit(1))

@@ -75,17 +75,17 @@ def registry() -> dict[str, Callable]:
 
 
 @contextmanager
-def aqe_off(spark, shuffle_partitions: int, when: bool = True):
-    """Run the block with AQE off and ``shuffle_partitions`` shuffle
-    partitions, restoring both confs on exit (also on an exception).
-    With ``when`` false the block runs under the session's own confs."""
+def aqe_off(spark, when: bool = True):
+    """Run the block with AQE off and one shuffle partition, restoring
+    both confs on exit (also on an exception). With ``when`` false the
+    block runs under the session's own confs."""
     if not when:
         yield
         return
     keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     old = {k: spark.conf.get(k) for k in keys}
     spark.conf.set(keys[0], "false")
-    spark.conf.set(keys[1], str(shuffle_partitions))
+    spark.conf.set(keys[1], "1")
     try:
         yield
     finally:

@@ -70,7 +70,7 @@ def _q_pagerank(spark, sf_dir):
     # partition. Restored before the returned plan is built, and
     # skipped outright for large graphs (at sf100 this graph has ~6e8
     # edges and AQE is doing real work).
-    with aqe_off(spark, 1, when=li.count() <= 20_000_000):
+    with aqe_off(spark, when=li.count() <= 20_000_000):
         with ThreadPoolExecutor(max_workers=1) as _pool:
             _star_fit = _pool.submit(
                 lambda: pagerank(

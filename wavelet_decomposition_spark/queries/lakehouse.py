@@ -224,7 +224,8 @@ def _q_tier_retention_expiry(spark, sf_dir):
     per tier-day from the store itself: dropped_ok (exactly the days
     before each tier's cutoff are gone from disk AND from the manifest),
     survivor_ok (every surviving day's partition still matches its
-    manifest content hash — expiry touched nothing it kept), and
+    manifest content hash — expiry touched nothing it kept; one grouped
+    pass per tier, ckpt.tier_content_hashes), and
     refresh_ok (a horizon-filtered refresh after expiry rebuilds
     nothing — the manifest rewrite is consistent)."""
     tag = os.path.basename(sf_dir.rstrip("/"))
@@ -254,27 +255,22 @@ def _q_tier_retention_expiry(spark, sf_dir):
     rows = []
     for tier in ("raw", "1h"):
         man_after = ckpt.read_manifest(base, tier)
-        tier_dir = f"{base}/tier={tier}"
         on_disk = {
-            e[4:] for e in os.listdir(tier_dir) if e.startswith("day=")
+            e[4:] for e in os.listdir(f"{base}/tier={tier}")
+            if e.startswith("day=")
         }
-        for day, meta in sorted(man_before[tier].items()):
+        hashes = ckpt.tier_content_hashes(spark, base, tier)
+        for day in sorted(man_before[tier]):
             expired = day < cutoffs[tier]
             dropped_ok = (
                 (day in dropped[tier]) == expired
                 and (day in on_disk) != expired
                 and (day in man_after) != expired
             )
-            if expired:
-                survivor_ok = True  # nothing to compare; gone is correct
-            else:
-                written = spark.read.parquet(f"{tier_dir}/day={day}")
-                content = written.agg(
-                    F.sum(
-                        F.xxhash64(*written.columns).cast("decimal(38,0)")
-                    ).alias("h")
-                ).collect()[0]
-                survivor_ok = str(content["h"]) == man_after[day]["content_hash"]
+            # an expired day has nothing to compare; gone is correct
+            survivor_ok = expired or (
+                hashes.get(day) == man_after[day]["content_hash"]
+            )
             rows.append((tier, day, expired, dropped_ok, survivor_ok))
 
     # horizon-filtered refresh after expiry must rebuild nothing
@@ -338,7 +334,7 @@ def _q_sketch_tier_merge(spark, sf_dir):
     ).agg(
         F.count(F.lit(1)).alias("n_exact"),
         F.countDistinct("user_id").alias("d_exact"),
-        *rank_band_columns(F.col("value"), probs, eps),
+        *rank_band_columns(probs, eps),
     )
     kll_ok = None
     for p in probs:

@@ -94,7 +94,7 @@ def _q_doc_stats(spark, sf_dir):
         "doc_id",
         F.length("text").alias("n_chars"),
         word_count().alias("n_words"),
-        token_count("text").alias("n_tokens"),
+        token_count().alias("n_tokens"),
         fingerprint().alias("fingerprint"),
     )
 
@@ -103,7 +103,7 @@ def _q_doc_stats(spark, sf_dir):
 def _q_lang_marker_hits(spark, sf_dir):
     """Language-ID marker counts (the lang_id heuristic's inputs)."""
     docs = _docs(spark, sf_dir)
-    padded = F.concat(F.lit(" "), normalized("text"), F.lit(" "))
+    padded = F.concat(F.lit(" "), normalized(), F.lit(" "))
     def hits(words):
         e = F.lit(0)
         for w in words:
@@ -301,7 +301,7 @@ def _q_pack_sequences(spark, sf_dir):
     w_all = Window.partitionBy(F.lit(1))
     expect = docs.agg(
         F.count(F.lit(1)).alias("n_docs_in"),
-        F.sum(token_count(F.col("text"))).alias("tok_in"),
+        F.sum(token_count()).alias("tok_in"),
     )
     return (
         packed.withColumn("bin_tokens", F.sum("n_tokens").over(w))
@@ -568,7 +568,7 @@ def _q_bpe_vocab(spark, sf_dir):
     # 24 merge rounds are one tiny job each over the Zipf-bounded word
     # table — AQE re-planning per round is pure round-trip overhead at
     # gate scale, and real corpora (gate: 10M docs) keep AQE on
-    with aqe_off(spark, 1, when=docs.count() <= 10_000_000):
+    with aqe_off(spark, when=docs.count() <= 10_000_000):
         fit = bpe_train(docs, n_merges=24, verify=True)
         # dual-path gate reads the trainer's own checkpointed word table
         # (same rows word_counts(docs) would produce — it IS that

@@ -35,7 +35,7 @@ from wavelet_decomposition_spark.operators.translation import (
     residues_for_shifts,
 )
 from wavelet_decomposition_spark.operators.wavelet_ops import denoise_windows
-from wavelet_decomposition_spark.queries import aqe_off, query
+from wavelet_decomposition_spark.queries import query
 
 
 def _tier_1m(spark, n_convs):
@@ -452,7 +452,7 @@ def _q_wpt_energy(spark, sf_dir):
     )
 
 
-@query(bench=True)
+@query(bench=True, designed_bnl=True)
 def _q_tier_wavelet_parity(spark, sf_dir):
     """Wavelet coefficient + point parity at EVERY retention tier — the
     north metric's "coefficient/point parity vs reference at every
@@ -475,33 +475,14 @@ def _q_tier_wavelet_parity(spark, sf_dir):
     cascade equal the same tiers aggregated straight from raw, exactly
     (integer counts; full-outer null-safe comparison finds any drift).
     """
-    # small-data conf window (same rationale as _q_pagerank/_q_bpe_vocab):
-    # this query's input is the FIXED 100-conversation parity fixture —
-    # a ~25-stage verification DAG over <=6k-row tiers where AQE's
-    # stage-by-stage materialization is pure driver round trips
-    # (measured 3.9-4.3 s -> 3.0 s back-to-back). The plan executes
-    # eagerly inside the window via localCheckpoint and the confs are
-    # restored before return; nothing leaves the timed region — query
-    # construction IS timed by the bench harness. The tier caches only
-    # serve the checkpoint, so they are released right after it (coarsest
-    # first: no cached plan is left referring to a released one).
-    with aqe_off(spark, 16):
-        plan, tiers = _tier_wavelet_parity_plan(spark)
-        try:
-            out = plan.localCheckpoint()
-        finally:
-            for t in reversed(tiers.values()):
-                t.unpersist()
-    return out.orderBy("tier", "level", "coef_type")
+    return _tier_wavelet_parity_plan(spark).orderBy("tier", "level", "coef_type")
 
 
 def _tier_wavelet_parity_plan(spark):
-    """``(plan, tiers)``: the unordered parity plan and the cached tiers
-    (raw included) it reads."""
+    """The unordered parity plan over the 100-conversation fixture's
+    tiers; nothing runs until the caller's action."""
     tx = transcripts_df(spark, 100, seed=42)
-    tiers = rollup.build_tiers(activity.activity_raw(tx).cache())
-    for t in ("1m", "1h", "1d"):
-        tiers[t] = tiers[t].cache()
+    tiers = rollup.build_tiers(activity.activity_raw(tx))
     raw = tiers["raw"]
     cfg = {"1m": ("1 minute", 64, 4), "1h": ("1 hour", 32, 4),
            "1d": ("1 day", 8, 3)}
@@ -579,8 +560,7 @@ def _tier_wavelet_parity_plan(spark):
             "cascade_ok"
         )
     )
-    # ordering applied by the caller after the checkpoint
-    return out.crossJoin(F.broadcast(casc)), tiers
+    return out.crossJoin(F.broadcast(casc))
 
 
 @query(designed_bnl=True)
