@@ -1,9 +1,13 @@
-"""EPN DataFrame operator vs the numpy oracle (kernel/epn.py), on golden
-betas stacked across all 7 years — the reference's own analysis input."""
+"""EPN DataFrame operator vs the numpy oracle (kernel/epn.py), on betas
+stacked across all 7 years: the reference's golden Consumption sheets (its
+own analysis input) where the reference root holds
+``betas/square_shape/betas_Consumption.xlsx``, and the seeded synthetic
+sheets of tests/electricity_inputs.py, in the same layout, where it does
+not. The oracle comparison holds for any betas."""
 
 import numpy as np
 
-from wavelet_decomposition_spark.io import reference_data as rd
+from tests import electricity_inputs as ei
 from wavelet_decomposition_spark.kernel.epn import calc_epn
 from wavelet_decomposition_spark.kernel.wavelets import TIME_SCALES_HOURS
 from wavelet_decomposition_spark.operators.epn import epn
@@ -14,7 +18,7 @@ SATIS = [50.0, 90.0, 99.0]
 def _stacked_golden(signal):
     sheets = None
     for year in range(2012, 2019):
-        g = rd.load_golden_betas(signal, year)
+        g = ei.load_golden_betas(signal, year)
         if sheets is None:
             sheets = [list(col) for col in g]
         else:

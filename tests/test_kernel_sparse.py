@@ -1,5 +1,6 @@
 import numpy as np
 
+from tests import electricity_inputs as ei
 from wavelet_decomposition_spark.kernel.sparse import CSRMatrix, load_npz_csr
 
 
@@ -29,6 +30,7 @@ def test_from_coo_canonical_order():
     assert A.data.tolist() == [1.0, 3.0, 2.0, 4.0]
 
 
+@ei.reference_skipif("saved_matrix/square_shape/A_2012.npz")
 def test_load_reference_npz():
     A = load_npz_csr("/root/reference/saved_matrix/square_shape/A_2012.npz")
     assert A.shape == (23360, 23423)

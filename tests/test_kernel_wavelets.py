@@ -1,10 +1,14 @@
 import numpy as np
 import pytest
 
+from tests import electricity_inputs as ei
 from wavelet_decomposition_spark.io import reference_data as rd
 from wavelet_decomposition_spark.kernel import wavelets as wl
 
 
+@ei.reference_skipif(
+    "translation/trans_square_12_18.p", "saved_matrix/square_shape/A_2012.npz"
+)
 def test_square_dictionary_exact_vs_golden_2012():
     trans = rd.load_translations("square")
     A = wl.generate_dictionary("square", trans[0])
@@ -15,6 +19,9 @@ def test_square_dictionary_exact_vs_golden_2012():
     assert np.array_equal(A.data, G.data)
 
 
+@ei.reference_skipif(
+    "translation/trans_sine_12_18.p", "saved_matrix/sine_shape/A_2012.npz"
+)
 def test_sine_dictionary_vs_golden_2012():
     trans = rd.load_translations("sine")
     A = wl.generate_dictionary("sine", trans[0])
@@ -26,6 +33,7 @@ def test_sine_dictionary_vs_golden_2012():
     np.testing.assert_allclose(A.data, G.data, rtol=3e-16, atol=0)
 
 
+@ei.reference_skipif("saved_matrix/square_shape/no_trans/A_2012.npz")
 def test_square_no_trans_dictionary_exact_vs_golden_2012():
     """The reference also ships untranslated dictionaries
     (saved_matrix/square_shape/no_trans/A_*.npz); trans=[0,0,0] must

@@ -8,6 +8,8 @@ import os
 
 import pytest
 
+from tests import electricity_inputs as ei
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF001_DIR", "/root/testdata/sf0.01")
 
 pytestmark = pytest.mark.skipif(
@@ -78,7 +80,7 @@ def test_shingle_pipeline_no_inferred_filter(spark):
     assert "Filter" not in plan
 
 
-def test_invariant_queries_single_lineage(spark, queries):
+def test_invariant_queries_single_lineage(spark, queries, monkeypatch):
     """The self-verifying driver queries must compute their invariant as a
     window aggregate over ONE lineage: referencing the solve/pyramid
     DataFrame from two plan branches (agg + crossJoin back) recomputes the
@@ -86,7 +88,26 @@ def test_invariant_queries_single_lineage(spark, queries):
     solves (round-3 fix). Pin the Python-stage counts: one resample + one
     decompose FlatMapGroupsInPandas per dictionary-shape branch (the
     energy queries' single pyramid stage is pinned by
-    test_wavelet_queries_leave_no_storage)."""
+    test_wavelet_queries_leave_no_storage). The builders read the reference
+    workbook, translation pickles and betas workbooks while they build;
+    where the workbook is absent they read tests/electricity_inputs.py's
+    synthetic stand-ins instead, through a fresh ``_GOLDEN_CACHE`` so no
+    synthetic broadcast or golden frame outlives the test. Only plans are
+    explained, so the golden values never matter."""
+    if not os.path.exists(ei.WORKBOOK):
+        from wavelet_decomposition_spark.io import reference_data as rd
+        from wavelet_decomposition_spark.queries import wavelet
+
+        monkeypatch.setattr(wavelet, "electricity_df", ei.electricity_df)
+        monkeypatch.setattr(wavelet, "load_translations", ei.load_translations)
+        monkeypatch.setattr(rd, "load_translations", ei.load_translations)
+        monkeypatch.setattr(
+            wavelet, "load_prepared_signal", ei.load_prepared_signal
+        )
+        monkeypatch.setattr(
+            rd, "load_golden_betas_long", ei.load_golden_betas_long
+        )
+        monkeypatch.setattr(wavelet, "_GOLDEN_CACHE", {})
     # full: square branch (resample+decompose) + sine branch = 4 stages
     plan = _plan(queries["full_decomposition"](spark, SF_DIR), "simple")
     assert plan.count("FlatMapGroupsInPandas") == 4
@@ -121,18 +142,16 @@ def test_solve_stage_not_coalesced(spark, queries):
     per task and that no extra exchange appeared."""
     from pyspark.sql import functions as F
 
-    from wavelet_decomposition_spark.io import reference_data as rd
-    from wavelet_decomposition_spark.io.electricity import electricity_df
     from wavelet_decomposition_spark.operators import decompose as dec
     from wavelet_decomposition_spark.operators import series as ser
     from wavelet_decomposition_spark.operators.resample import resample_per_year
 
     years = [2012, 2013, 2014]
-    df = electricity_df(spark, signals=["Consumption"], years=years)
+    df = ei.electricity_df(spark, signals=["Consumption"], years=years)
     df = ser.leap_trim(df, 48 * 365)
     df = ser.normalize_yearly_mean(df)
     df = resample_per_year(df, 48, 64, 365)
-    trans = rd.load_translations("square")
+    trans = ei.load_translations("square")
     bc = dec.broadcast_dictionaries(
         spark, "square", {y: trans[y - 2012] for y in years}
     )

@@ -1,6 +1,7 @@
 import numpy as np
 from pyspark.sql import functions as F
 
+from tests import electricity_inputs as ei
 from wavelet_decomposition_spark.io import reference_data as rd
 from wavelet_decomposition_spark.kernel import wavelets as wl
 from wavelet_decomposition_spark.kernel.lsqr import lsqr
@@ -43,6 +44,7 @@ def test_translation_search_matches_numpy_bruteforce(spark):
     assert got == best
 
 
+@ei.reference_skipif("input_time_series.xlsx", "translation/trans_square_12_18.p")
 def test_full_translation_sweep_matches_golden_2012(spark):
     """A11 end-to-end at FULL width: all 23,360 circular shifts for each
     family, distributed, vs the golden pickle
@@ -100,6 +102,7 @@ def test_full_translation_sweep_matches_golden_2012(spark):
     )
 
 
+@ei.reference_skipif("input_time_series.xlsx", "translation/trans_sine_12_18.p")
 def test_full_sine_translation_sweep_matches_golden_2012(spark):
     """The SINE-shape E3 pickle (trans_sine_12_18.p — previously the one
     reference artifact never exercised): all 23,360 shifts per family with
@@ -192,15 +195,14 @@ def test_per_scale_reconstruction_sums_to_full(spark):
     """The 15 single-scale reconstructions + offset = full reconstruction
     (linearity of A @ beta)."""
     from wavelet_decomposition_spark.operators import decompose as dec
-    from wavelet_decomposition_spark.io.electricity import electricity_df
     from wavelet_decomposition_spark.operators import series as ser
     from wavelet_decomposition_spark.operators.resample import resample_per_year
 
-    df = electricity_df(spark, signals=["PV"], years=[2015])
+    df = ei.electricity_df(spark, signals=["PV"], years=[2015])
     df = ser.leap_trim(df, 48 * 365)
     df = ser.normalize_yearly_mean(df)
     df = resample_per_year(df, 48, 64, 365)
-    trans = rd.load_translations("square")
+    trans = ei.load_translations("square")
     bc = dec.broadcast_dictionaries(spark, "square", {2015: trans[3]})
     betas = dec.decompose(df, bc).cache()
 
