@@ -1,16 +1,8 @@
 """Character-trigram corpus profiling (operators/charlm.py) vs direct
-Python recomputation, including the short-document and smoothing
-edges."""
-
-import math
-
-import pytest
-from pyspark.sql import functions as F
+Python recomputation, including the short-document edges."""
 
 from wavelet_decomposition_spark.operators.charlm import (
     char_trigrams,
-    trigram_logprob,
-    trigram_profile,
     trigram_quality,
 )
 
@@ -48,20 +40,6 @@ def test_char_trigrams_matches_python(spark):
     assert got == want
 
 
-def test_profile_counts_occurrences(spark):
-    prof = {
-        r["tri"]: r["df"]
-        for r in trigram_profile(_docs_df(spark)).collect()
-    }
-    want = {}
-    for _, t in DOCS:
-        for tri in _tris(t):
-            want[tri] = want.get(tri, 0) + 1
-    assert prof == want
-    # "the" occurs twice in doc 1 and twice in doc 2
-    assert prof["the"] == 4
-
-
 def test_quality_stats_match_python(spark):
     df = _docs_df(spark)
     got = {
@@ -88,34 +66,6 @@ def test_quality_stats_match_python(spark):
     # junk doc is rare-dominated; twin docs share identical stats
     assert got[3][1] == got[3][0] > 0
     assert got[1] == got[2]
-
-
-def test_logprob_matches_python(spark):
-    df = _docs_df(spark)
-    prof = {}
-    for _, t in DOCS:
-        for tri in _tris(t):
-            prof[tri] = prof.get(tri, 0) + 1
-    total, vocab, alpha = sum(prof.values()), len(prof), 0.5
-    got = {
-        r["doc_id"]: (r["n_tri"], r["mean_logprob"])
-        for r in trigram_logprob(
-            df, trigram_profile(df), alpha=alpha
-        ).collect()
-    }
-    for i, t in DOCS:
-        tris = _tris(t)
-        if not tris:
-            assert i not in got  # logprob is occurrence-grain
-            continue
-        lp = sum(
-            math.log((prof[tri] + alpha) / (total + alpha * vocab))
-            for tri in tris
-        ) / len(tris)
-        assert got[i][0] == len(tris)
-        assert got[i][1] == pytest.approx(lp, rel=1e-12)
-    # familiar prose beats junk under its own corpus profile
-    assert got[1][1] > got[3][1]
 
 
 def test_profile_is_broadcast_join(spark):

@@ -124,18 +124,6 @@ def test_simhash_near_pairs(spark, docs):
     assert hits == 20
 
 
-def test_embedding_near_dup(spark):
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    # plant a near-duplicate of vec 0
-    v0 = emb.filter(F.col("vec_id") == 0).collect()[0].embedding
-    noisy = [float(x) + 1e-4 for x in v0]
-    extra = spark.createDataFrame(
-        [(990001, noisy, 0)], "vec_id long, embedding array<float>, label int"
-    )
-    pairs = dedup.embedding_near_dup_pairs(emb.unionByName(extra)).toPandas()
-    assert ((pairs.id_a == 0) & (pairs.id_b == 990001)).any()
-
-
 def test_brute_force_topk_matches_numpy(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").cache()
     queries = emb.limit(3).select(

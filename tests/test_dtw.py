@@ -4,14 +4,11 @@ the provable distance properties, and the Spark packing/pair plumbing."""
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from wavelet_decomposition_spark.operators.dtw import (
     banded_dtw_numpy,
     dtw_allpairs,
-    dtw_for_candidates,
     full_dtw_numpy,
-    pack_series,
 )
 
 
@@ -96,23 +93,6 @@ def test_spark_allpairs_matches_numpy(spark):
         )
         if row.key_a == row.key_b:
             assert row.dtw == 0.0
-
-
-def test_candidates_path_scores_only_requested_pairs(spark):
-    rng = np.random.default_rng(9)
-    data = {f"s{j}": rng.normal(size=32) for j in range(5)}
-    packed = pack_series(_series_df(spark, data), "k", "o")
-    cand = spark.createDataFrame(
-        pd.DataFrame({"key_a": ["s0", "s1"], "key_b": ["s3", "s4"]})
-    )
-    out = dtw_for_candidates(packed, cand).toPandas()
-    assert sorted(zip(out["key_a"], out["key_b"])) == [
-        ("s0", "s3"), ("s1", "s4")
-    ]
-    for row in out.itertuples():
-        assert row.dtw == pytest.approx(
-            banded_dtw_numpy(data[row.key_a], data[row.key_b], 4), rel=1e-12
-        )
 
 
 def test_unequal_lengths_euclid_nan(spark):

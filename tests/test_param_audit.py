@@ -1,4 +1,6 @@
-"""No single-valued options: every parameter of a package function, with or
+"""Two rules against unused code in the package.
+
+No single-valued options: every parameter of a package function, with or
 without a default, takes at least two different values over the calls in
 the repo's Python (the package, the contract module, ``bench.py``,
 ``tools/``, ``enginebench/`` and the tests). A parameter every call gives
@@ -24,7 +26,22 @@ function of the package module itself) that no parameter or assignment of
 the enclosing function shadows, or an attribute read from a package module
 or from ``self``/``cls``.
 
-Run ``python tests/test_param_audit.py`` to list the findings."""
+No unreached code: every module-level function or class of the package is
+reached from the program or named in ``ORACLES``. The program's roots are
+every module outside the package and the tests (``__spark_entry__.py``,
+``bench.py``, ``tools/``, ``enginebench/``), the package's module-level
+statements, every ``@query`` body (the registry imports the family
+modules by a computed name, which a static scan cannot follow) and every
+function of ``EXEMPT_MODULES``. A reached
+function or class reaches every package function or class its body
+references, called or not, by the reference rule above; reach is
+transitive, and a test reaches nothing. A named oracle is kept code, so
+what it references is reached too, but each must be read by some test.
+References resolve by name: a reached name reaches every module-level
+function or class of that name.
+
+Run ``python tests/test_param_audit.py`` to list the findings of both
+rules."""
 
 import ast
 import os
@@ -41,6 +58,11 @@ EXEMPT_PARAMS = {"root", "scratch_dir"}
 EXEMPT_FUNCS = {"calc_epn", "dictionary_width", "scale_sizes", "column_floats",
                 "best_translation", "bpe_train_reference", "transcripts_pandas"}
 EXEMPT_MODULES = {os.path.join("io", "reference_data.py")}
+# test oracles: package code only tests call, kept as the reference a test
+# checks the program's code against
+ORACLES = {"best_translation", "calc_epn", "decode", "dictionary_width", "dwt",
+           "encode", "full_dtw_numpy", "gapfill_zero", "idwt", "imodwt",
+           "iwpt_batch", "modwt", "scale_sizes", "transcripts_pandas"}
 
 # (callee attribute, index of the function argument) of the call indirections
 INDIRECT = {"call": 1, "submit": 0}
@@ -69,6 +91,14 @@ def _name(node):
 
 def _functions(tree):
     return [n for n in ast.walk(tree) if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+
+
+def _own(tree, from_package):
+    """The names of the module's own functions and classes: a call or
+    reference to one of these by bare name or through ``self``/``cls``
+    reaches the module's own, not the package's."""
+    return {n.name for n in ast.walk(tree) if isinstance(
+        n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))} - from_package
 
 
 def _literal(node):
@@ -168,9 +198,7 @@ def _calls_and_refs(root):
         is_test = rel.split(os.sep)[0] == TESTS
         tree = _parse(path)
         names, from_package = _imports(tree)
-        # a call to one of these by bare name or through ``self``/``cls``
-        # reaches the module's own function
-        own = {f.name for f in _functions(tree)} - from_package
+        own = _own(tree, from_package)
         callee_nodes = set()
         for node in ast.walk(tree):
             if isinstance(node, ast.Attribute):
@@ -252,19 +280,68 @@ def findings(root=ROOT):
     return audit(root)[1]
 
 
+def unreached(root=ROOT, oracles=ORACLES):
+    """The package's module-level functions and classes that no program
+    path reaches and ``oracles`` does not name, as ``module::name``; then
+    each oracle no test reads, as ``oracle::name``."""
+    defs, uses, roots, read_by_tests = {}, {}, set(oracles), set()
+    for path in _py_files(root):
+        rel = os.path.relpath(path, root)
+        top = rel.split(os.sep)[0]
+        tree = _parse(path)
+        names, from_package = _imports(tree)
+        own = _own(tree, from_package) if top == PACKAGE else set()
+        # the object an attribute is read from is a module or an instance
+        objects = {id(n.value) for n in ast.walk(tree) if isinstance(n, ast.Attribute)}
+
+        def refs(node):
+            return _refs(node, names, from_package, own, objects)
+
+        if top != PACKAGE:
+            (read_by_tests if top == TESTS else roots).update(refs(tree))
+            continue
+        mod = os.path.relpath(path, os.path.join(root, PACKAGE))
+        for node in tree.body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                roots |= refs(node)
+                continue
+            defs.setdefault(node.name, []).append(mod)
+            uses[mod, node.name] = refs(node)
+            if mod in EXEMPT_MODULES or any(  # ``@query`` or ``@query(...)``
+                    _name(getattr(d, "func", d)) == "query" for d in node.decorator_list):
+                roots.add(node.name)
+    reached, todo = set(), list(roots)
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            for mod in defs.get(name, ()):
+                todo.extend(uses[mod, name])
+    return (sorted(f"{mod}::{name}" for name, mods in defs.items() if name not in reached
+                   for mod in mods)
+            + [f"oracle::{name}" for name in sorted(set(oracles) - read_by_tests)])
+
+
 def test_every_parameter_takes_two_values():
     single = findings()
     assert not single, (f"{len(single)} parameters take one value at every call; "
                         "make each the constant it always is:\n" + "\n".join(single))
 
 
-def _plant(tmp_path, files):
-    """Write ``{relative path: source}`` under ``tmp_path`` and audit it."""
+def test_package_code_is_reached_or_an_oracle():
+    found = unreached()
+    assert not found, (f"{len(found)} unreached or unread; delete the code no program "
+                       "path reaches, or name the test oracle:\n" + "\n".join(found))
+
+
+def _plant(tmp_path, files, rule=findings):
+    """Write ``{relative path: source}`` under ``tmp_path`` and run ``rule``
+    on it."""
     for rel, src in files.items():
         path = tmp_path / rel
         path.parent.mkdir(parents=True, exist_ok=True)
         path.write_text(src)
-    return findings(str(tmp_path))
+    return rule(str(tmp_path))
 
 
 MOD = f"{PACKAGE}/mod.py"
@@ -355,6 +432,73 @@ def test_rule_calling_module_own_function_is_not_a_caller(tmp_path):
     assert got == ["mod.py::k(mode)"]
 
 
+def _reach(oracles=("ref",)):
+    return lambda root: unreached(root, oracles)
+
+
+def test_reach_function_only_a_test_calls_is_flagged(tmp_path):
+    got = _plant(tmp_path, {
+        MOD: "def f(x):\n    return x\n",
+        "tools/run.py": "def f(x):\n    return x\nf(1)\n",
+        f"{TESTS}/test_f.py": "from wavelet_decomposition_spark.mod import f\nf(1)\n",
+    }, _reach(()))
+    assert got == ["mod.py::f"]
+
+
+def test_reach_function_tools_call_is_not_flagged(tmp_path):
+    got = _plant(tmp_path, {
+        MOD: ("def f(x):\n    return g(x)\n"
+              "def g(x):\n    return x\n"
+              "class K:\n    pass\n"
+              "def h(x):\n    return x\n"
+              "TABLE = {'h': h}\n"),
+        f"{PACKAGE}/kernel.py": "def k(x):\n    return x\n",
+        "tools/run.py": ("from wavelet_decomposition_spark import kernel\n"
+                         "from wavelet_decomposition_spark.mod import f, K\n"
+                         "f(K)\nkernel.k(1)\n"),
+    }, _reach(()))
+    assert got == []
+
+
+def test_reach_function_only_an_unreached_function_calls_is_flagged(tmp_path):
+    got = _plant(tmp_path, {
+        MOD: ("def dead(x):\n    return helper(x)\n"
+              "def helper(x):\n    return x\n"
+              "def live(x):\n    return x\n"),
+        "tools/run.py": "from wavelet_decomposition_spark.mod import live\nlive(1)\n",
+    }, _reach(()))
+    assert got == ["mod.py::dead", "mod.py::helper"]
+
+
+def test_reach_function_a_query_body_calls_is_not_flagged(tmp_path):
+    got = _plant(tmp_path, {
+        f"{PACKAGE}/queries/family.py": (
+            "from . import query\n"
+            "from ..mod import op\n"
+            "@query\ndef _q_one(spark, sf_dir):\n    return op(spark)\n"
+            "@query(kind='rows')\ndef _q_two(spark, sf_dir):\n    return _shared(spark)\n"
+            "def _shared(spark):\n    return spark\n"),
+        MOD: "def op(spark):\n    return spark\n",
+    }, _reach(()))
+    assert got == []
+
+
+def test_reach_named_oracle_is_not_flagged(tmp_path):
+    got = _plant(tmp_path, {
+        MOD: ("def ref(x):\n    return _step(x)\n"
+              "def _step(x):\n    return x\n"),
+        f"{TESTS}/test_ref.py": "from wavelet_decomposition_spark import mod\nassert mod.ref(1)\n",
+    }, _reach())
+    assert got == []
+
+
+def test_reach_oracle_no_test_reads_is_flagged(tmp_path):
+    got = _plant(tmp_path, {
+        MOD: "def ref(x):\n    return x\n",
+        f"{TESTS}/test_ref.py": "def ref(x):\n    return x\nassert ref(1)\n",
+    }, _reach(("ref", "gone")))
+    assert got == ["oracle::gone", "oracle::ref"]
+
 if __name__ == "__main__":
     fns = package_functions(ROOT)
     n = sum(len(p) for _, _, p in fns)
@@ -363,4 +507,7 @@ if __name__ == "__main__":
     print(f"{n} parameters ({d} defaulted) in {len(fns)} functions, {audited} audited")
     print("\n".join(single))
     print(f"{len(single)} take one value at every call", file=sys.stderr)
-    sys.exit(1 if single else 0)
+    found = unreached()
+    print("\n".join(found))
+    print(f"{len(found)} unreached or unread ({len(ORACLES)} oracles)", file=sys.stderr)
+    sys.exit(1 if single or found else 0)

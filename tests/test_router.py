@@ -113,4 +113,4 @@ def test_read_tier_range_prunes_partitions(spark, tmp_path):
 
 
 def test_tier_steps_cover_rollup_tiers():
-    assert set(TIER_STEP) == set(rollup.TIER_ORDER)
+    assert set(TIER_STEP) == set(rollup.TIERS)

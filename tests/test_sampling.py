@@ -5,12 +5,11 @@ disjoint+exhaustive splits, and domain-mix budget arithmetic."""
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from wavelet_decomposition_spark.operators.sampling import (
     assign_splits,
     domain_mix,
-    hash_sample,
+    hash_bucket,
 )
 
 
@@ -18,34 +17,28 @@ def _ids(spark, n=20_000):
     return spark.range(n).withColumnRenamed("id", "doc_id")
 
 
+def _sample(df, rate, seed, method="xxhash64"):
+    """The doc ids of the deterministic Bernoulli(rate) sample that
+    ``hash_bucket`` gates."""
+    return {r.doc_id for r in df.where(hash_bucket(seed, method) < rate).collect()}
+
+
 @pytest.mark.parametrize("method", ["xxhash64", "lcg"])
 def test_hash_sample_rate_and_determinism(spark, method):
     df = _ids(spark)
-    s1 = hash_sample(df, 0.2, seed=7, method=method)
-    got = s1.count()
+    a = _sample(df, 0.2, 7, method)
     # binomial(20000, 0.2): 5 sigma ~ 283
-    assert abs(got - 4000) < 300, got
+    assert abs(len(a) - 4000) < 300, len(a)
     # same rows regardless of partitioning
-    a = {r.doc_id for r in s1.collect()}
-    b = {
-        r.doc_id
-        for r in hash_sample(
-            df.repartition(17), 0.2, seed=7, method=method
-        ).collect()
-    }
-    assert a == b
+    assert _sample(df.repartition(17), 0.2, 7, method) == a
     # nested property: sample(0.1) is a subset of sample(0.2) at same seed
-    c = {
-        r.doc_id
-        for r in hash_sample(df, 0.1, seed=7, method=method).collect()
-    }
-    assert c <= a
+    assert _sample(df, 0.1, 7, method) <= a
 
 
 def test_hash_sample_seed_independence(spark):
     df = _ids(spark, 10_000)
-    a = {r.doc_id for r in hash_sample(df, 0.3, seed=1).collect()}
-    b = {r.doc_id for r in hash_sample(df, 0.3, seed=2).collect()}
+    a = _sample(df, 0.3, 1)
+    b = _sample(df, 0.3, 2)
     overlap = len(a & b) / (len(a) * len(b) / 10_000)  # obs/expected
     assert 0.8 < overlap < 1.2, overlap
 
@@ -75,8 +68,6 @@ def test_assign_splits_disjoint_exhaustive(spark, method):
 def test_assign_splits_rejects_bad_weights(spark):
     with pytest.raises(ValueError):
         assign_splits(_ids(spark, 10), {"a": 0.5, "b": 0.4})
-    with pytest.raises(ValueError):
-        hash_sample(_ids(spark, 10), 1.5)
 
 
 def test_domain_mix_budget_math(spark):

@@ -104,7 +104,9 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from wavelet_decomposition_spark.plans.session import build_session
 
-    spark = build_session(app_name="wds-plan-audit", cores=8)
+    # no console progress bar: it would split the JSON lines in a merged log
+    spark = build_session(app_name="wds-plan-audit", cores=8,
+                          extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     rows = []
     qs = entrymod.queries()

@@ -106,9 +106,6 @@ class CSRMatrix:
         np.cumsum(indptr, out=indptr)
         return cls(vals, cols, indptr, shape)
 
-    def to_coo(self):
-        return self._row_ids.copy(), self.indices.copy(), self.data.copy()
-
 
 def load_npz_csr(path: str) -> CSRMatrix:
     """Load a scipy ``save_npz`` CSR file with raw numpy (no scipy needed).

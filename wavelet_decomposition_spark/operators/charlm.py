@@ -12,9 +12,7 @@ integer sufficient statistics instead: per document, the trigram count,
 how many of its trigram occurrences are corpus-rare, and the exact sum
 of corpus frequencies over its occurrences (the "document frequency
 mass", whose per-trigram mean is the familiarity signal). All BIGINT,
-hash-identical cross-engine; :func:`trigram_logprob` layers the float
-log-score on top for in-engine use and is pytest-verified against
-numpy.
+hash-identical cross-engine.
 
 Scale shape (100 TB): trigram extraction is one JVM ``transform`` over
 a ``sequence`` (whole-stage codegen, no Python); the profile is a hash
@@ -70,20 +68,6 @@ def char_trigrams(docs: DataFrame) -> DataFrame:
     )
 
 
-def trigram_profile(docs: DataFrame) -> DataFrame:
-    """Corpus trigram frequency table ``(tri, df)`` — df counts
-    OCCURRENCES across the corpus (not distinct docs: repetition inside
-    a document is evidence of the trigram's productivity too, and the
-    occurrence count is what the log-prob numerator needs). Bounded by
-    |charset|^3 rows however large the corpus is.
-    """
-    return (
-        char_trigrams(docs)
-        .groupBy("tri")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-
-
 def trigram_quality(docs: DataFrame) -> DataFrame:
     """Per-document integer quality statistics against the corpus' own
     trigram profile (self-scoring):
@@ -96,10 +80,9 @@ def trigram_quality(docs: DataFrame) -> DataFrame:
 
     ONE trigram explode pass feeds both the profile and the per-doc
     statistics. The (doc, tri) count table is the shared intermediate:
-    the profile is its tri-marginal (sum of counts = occurrence counts,
-    exactly what :func:`trigram_profile` computes) and every per-doc
-    statistic is a count-weighted sum over it. Exact integers
-    throughout, at half the explode/aggregate work of profiling and
+    the profile is its tri-marginal (sum of counts = occurrence counts
+    across the corpus) and every per-doc statistic is a count-weighted
+    sum over it. Exact integers throughout, at half the explode/aggregate work of profiling and
     scoring separately (the explode is the query's dominant stage: all
     trigram occurrences of the corpus). One broadcast join (the profile
     is charset-bounded) + one hash aggregate; the left join back to
@@ -135,41 +118,5 @@ def trigram_quality(docs: DataFrame) -> DataFrame:
             F.coalesce("df_mass", F.lit(0)).cast("bigint").alias(
                 "df_mass"
             ),
-        )
-    )
-
-
-def trigram_logprob(
-    docs: DataFrame,
-    profile: DataFrame,
-    alpha: float = 0.5,
-) -> DataFrame:
-    """Per-document mean trigram log-probability under an
-    add-``alpha``-smoothed unigram-of-trigrams model built from
-    ``profile``: score = mean over occurrences of
-    ln((df + alpha) / (total + alpha * vocab)). Higher = more
-    profile-like. Float path (libm ln — in-engine use and pytest
-    oracle, not the cross-engine hash gate; the gate pins
-    :func:`trigram_quality`'s integer statistics instead).
-    """
-    totals = profile.agg(
-        F.sum("df").alias("_total"), F.count(F.lit(1)).alias("_vocab")
-    )
-    occ = char_trigrams(docs)
-    return (
-        occ.join(F.broadcast(profile), "tri", "left")
-        .crossJoin(F.broadcast(totals))
-        .withColumn("df", F.coalesce(F.col("df"), F.lit(0)))
-        .withColumn(
-            "_lp",
-            F.log(
-                (F.col("df") + F.lit(alpha))
-                / (F.col("_total") + F.lit(alpha) * F.col("_vocab"))
-            ),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tri"),
-            F.avg("_lp").alias("mean_logprob"),
         )
     )

@@ -1,5 +1,5 @@
 """Deduplication for training-data pipelines — exact, n-gram Jaccard,
-MinHash+LSH, SimHash, and embedding-cosine near-dup.
+MinHash+LSH, SimHash and edit-distance near-dup.
 
 Design per scale tier:
 - *exact*            — hash groupBy; one shuffle on the fingerprint.
@@ -14,7 +14,6 @@ Design per scale tier:
                        mapInPandas (bit-twiddling is not expressible as array
                        SQL without per-bit columns); near-dup = small hamming
                        distance, bucketed by 16-bit chunks (Charikar 2002).
-- *embedding cosine* — random-hyperplane LSH buckets + in-bucket cosine.
 """
 
 from __future__ import annotations
@@ -443,59 +442,6 @@ def simhash_near_pairs(sh: DataFrame, max_hamming: int = 3) -> DataFrame:
         )
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-# --------------------------------------------------------------------------
-# Embedding cosine near-dup
-# --------------------------------------------------------------------------
-
-def _cosine() -> F.Column:
-    """Cosine of the ``v_a`` and ``v_b`` vector columns."""
-    dot = F.aggregate(
-        F.zip_with("v_a", "v_b", lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    na = F.sqrt(F.aggregate("v_a", F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate("v_b", F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (na * nb)
-
-
-def embedding_near_dup_pairs(emb: DataFrame) -> DataFrame:
-    """Cosine >= 0.999 pairs of 64-d embeddings via random-hyperplane
-    LSH buckets (an 8-plane sign sketch); candidates only meet within a
-    bucket. Exact cosine verification in-bucket. High-threshold near-dups
-    collide with high probability on all 8 signs."""
-    n_planes = 8
-    planes = np.random.default_rng(42).normal(size=(n_planes, 64))
-    vec = F.col("embedding").cast("array<double>")
-    bucket_bits = [
-        (
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.array(*[F.lit(float(w)) for w in planes[p]]),
-                    lambda x, y: x * y,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            > 0
-        ).cast("int") * (1 << p)
-        for p in range(n_planes)
-    ]
-    bucketed = emb.select(
-        F.col("vec_id").alias("id"),
-        vec.alias("v"),
-        sum(bucket_bits[1:], bucket_bits[0]).alias("bucket"),
-    )
-    a = bucketed.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"), "bucket")
-    b = bucketed.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"), "bucket")
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", _cosine().alias("cosine"))
-        .filter(F.col("cosine") >= 0.999)
-        .distinct()
     )
 
 

@@ -13,19 +13,12 @@ Execution shape (Spark-first):
 - ``pack_series`` turns the long (key, order, value) frame into one
   ``array<double>`` row per key — a single hash aggregate; the array rides
   Arrow into the kernel.
-- ``dtw_for_candidates`` is the SCALE path: given an explicit candidate pair
-  list (from LSH/IVF bucketing, a correlation prefilter, or a business
-  pair list), two hash equi-joins attach the packed arrays and one
-  ``mapInPandas`` Arrow kernel scores each pair. Work is O(|pairs| * n * r),
-  partitioned by pair — embarrassingly parallel, no driver involvement.
-- ``dtw_allpairs`` is the bounded-S convenience form (S = number of series,
+- ``dtw_allpairs`` scores a bounded set of series (S = number of series,
   e.g. the handful of metric series on a dashboard): it builds the S*(S-1)/2
   unordered pairs INSIDE the JVM with one collect_list + a
   transform/flatten/explode (no join at all, so no nested-loop plan), then
-  scores through the same kernel. The single packed row bounds S — this is
-  deliberate and documented: all-pairs DTW is inherently quadratic in S, so
-  at large S you MUST come through ``dtw_for_candidates`` with a bucketed
-  candidate set, exactly like cosine_allpairs_exact vs the LSH dedup path.
+  one ``mapInPandas`` Arrow kernel scores each pair. The single packed row
+  bounds S — all-pairs DTW is inherently quadratic in S.
 
 The kernel is vectorized along anti-diagonals: cells (i, j) with i+j = s
 depend only on diagonals s-1 and s-2, so each of the n+m-1 diagonal steps
@@ -55,15 +48,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.session import worker_kernel
-
-__all__ = [
-    "banded_dtw_numpy",
-    "full_dtw_numpy",
-    "pack_series",
-    "dtw_for_candidates",
-    "dtw_allpairs",
-]
-
 
 def banded_dtw_numpy(x: np.ndarray, y: np.ndarray, radius: int) -> float:
     """Sakoe–Chiba banded DTW distance (sqrt of summed squared local costs).
@@ -167,20 +151,6 @@ def _score_kernel(radius: int, wide_radius: int | None):
     return kernel, schema
 
 
-def dtw_for_candidates(packed: DataFrame, candidates: DataFrame) -> DataFrame:
-    """Score an explicit (key_a, key_b) candidate list with band radius 4 —
-    the scale path. Two broadcast/hash equi-joins attach the packed arrays,
-    then one Arrow kernel scores each pair; O(|candidates| * n) total work,
-    partitioned by pair. ``euclid`` is NaN for unequal-length pairs."""
-    a = packed.select(F.col("key").alias("key_a"), F.col("vals").alias("vals_a"))
-    b = packed.select(F.col("key").alias("key_b"), F.col("vals").alias("vals_b"))
-    joined = candidates.join(a, "key_a").join(b, "key_b").select(
-        "key_a", "key_b", "vals_a", "vals_b"
-    )
-    kernel, schema = _score_kernel(4, None)
-    return joined.mapInPandas(worker_kernel(kernel), schema=schema)
-
-
 def dtw_allpairs(
     series: DataFrame,
     key_col: str,
@@ -193,8 +163,7 @@ def dtw_allpairs(
     per-metric panels — tens, not millions). Pairs are enumerated inside
     the JVM from one collected array row (transform + flatten + explode —
     no join, so no nested-loop plan to regress); the packed row bounds S by
-    design. For large S, bucket candidates first and call
-    :func:`dtw_for_candidates`."""
+    design."""
     packed = pack_series(series, key_col, order_col)
     one = packed.agg(
         F.sort_array(

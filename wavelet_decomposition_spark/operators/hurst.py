@@ -1,6 +1,6 @@
-"""Rescaled-range (R/S) analysis and the Hurst exponent — long-memory
-detection for grouped series. The reference engine characterizes
-multi-scale structure through its wavelet dictionaries
+"""Rescaled-range (R/S) analysis, the statistics under the Hurst
+exponent — long-memory detection for grouped series. The reference
+engine characterizes multi-scale structure through its wavelet dictionaries
 (`wavelet_decomposition.py:103-192` fixes the scales a priori); R/S
 analysis answers the inverse question — *how much* long-range
 dependence a series carries — with one number per series: H ~ 0.5 for
@@ -21,11 +21,10 @@ power of two; every cumulative deviation Z_t = cumsum - t*mean is a
 difference of exactly-representable doubles; S is one correctly-rounded
 IEEE sqrt of an exact rational, R/S one correctly-rounded division.
 The per-(key, n) aggregate ships as floor(R/S * 1e6) BIGINT sums, so
-summation order cannot perturb a single bit. Only the final log-log
-slope (`hurst_exponent`) leaves the deterministic regime — libm log
-implementations differ across engines by ulps — which is why the
-driver oracle checks `rs_ladder` and pytest checks the slope against a
-numpy re-implementation.
+summation order cannot perturb a single bit. The module stops at these
+sufficient statistics: the log-log slope on top of them leaves the
+deterministic regime (libm log implementations differ across engines
+by ulps), so it is left to the caller.
 
 Scale shape (100 TB): everything is window functions + hash aggregates
 partitioned by (key, n, chunk) — ONE exchange on the group key ladder
@@ -135,53 +134,5 @@ def rs_ladder(
             F.sum(
                 F.floor(F.col("_rs") * F.lit(1_000_000.0)).cast("bigint")
             ).alias("sum_rs_micro"),
-        )
-    )
-
-
-def hurst_exponent(series: DataFrame) -> DataFrame:
-    """Per-group Hurst exponent: OLS slope of log2(mean R/S) against
-    log2(n) over the dyadic ladder — ``(series_id, hurst, n_points)``.
-    Groups with fewer than two ladder points (series shorter than 32
-    points) are dropped rather than reported on one point.
-
-    The slope leaves the bit-deterministic regime (libm log2), so this
-    surface is pytest-verified against numpy (`tests/test_hurst.py`)
-    while the driver's hash gate pins :func:`rs_ladder` underneath it.
-    """
-    ladder = rs_ladder(series).where(F.col("n_chunks") > 0)
-    pt = ladder.select(
-        "series_id",
-        F.log2(F.col("n").cast("double")).alias("_lx"),
-        F.log2(
-            F.col("sum_rs_micro").cast("double")
-            / F.col("n_chunks")
-            / F.lit(1_000_000.0)
-        ).alias("_ly"),
-    )
-    lx, ly = F.col("_lx"), F.col("_ly")
-    return (
-        pt.groupBy("series_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum(lx).alias("_sx"),
-            F.sum(ly).alias("_sy"),
-            F.sum(lx * ly).alias("_sxy"),
-            F.sum(lx * lx).alias("_sxx"),
-        )
-        .where(F.col("n_points") >= 2)
-        .select(
-            "series_id",
-            (
-                (
-                    F.col("n_points") * F.col("_sxy")
-                    - F.col("_sx") * F.col("_sy")
-                )
-                / (
-                    F.col("n_points") * F.col("_sxx")
-                    - F.col("_sx") * F.col("_sx")
-                )
-            ).alias("hurst"),
-            "n_points",
         )
     )

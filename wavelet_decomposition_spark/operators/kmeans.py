@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.session import worker_kernel
+from .sampling import vector_sample
 
 SCALE = 1e6  # quantization: integer micro-units per input unit
 
@@ -164,23 +165,11 @@ def kmeans_fit(
     ``quantized()`` first). Returns ``{"centroids": (k, dim) float64,
     "counts": (k,) int64, "inertia_micro": [per-iteration ints],
     "n": corpus size}``. Init: the k rows with the lowest
-    ``xxhash64(vec_id, 42)`` (deterministic, scan-order-free,
-    unbiased for hash-uniform ids).
+    ``xxhash64(vec_id, 42)`` (``sampling.vector_sample``: deterministic,
+    scan-order-free, unbiased for hash-uniform ids).
     """
-    init_rows = (
-        emb.select(
-            F.col("vec_id"),
-            F.col("embedding"),
-            F.xxhash64(F.col("vec_id"), F.lit(42)).alias("_h"),
-        )
-        .orderBy("_h", "vec_id")
-        .limit(k)
-        .collect()
-    )
-    assert len(init_rows) >= 2, "k-means needs at least 2 rows"
-    cent = np.array(
-        [r["embedding"] for r in init_rows], dtype=np.int64
-    ).astype(np.float64)
+    cent = vector_sample(emb, k, 42)
+    assert len(cent) >= 2, "k-means needs at least 2 rows"
     inertias: list[int] = []
     counts = None
     n = 0

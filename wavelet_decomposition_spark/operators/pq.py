@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.session import worker_kernel
+from .sampling import vector_sample
 
 
 def train_pq_codebooks(
@@ -68,17 +69,11 @@ def train_pq_codebooks(
     clamped to the sample size (callers must use the returned shape[1]).
     Sample selection and iteration are exactly the
     ``similarity.train_coarse_quantizer`` discipline — bounded driver
-    sample, deterministic under partitioning — specialized to m
-    independent dsub-dim fits instead of one spherical fit.
+    sample (``sampling.vector_sample``), deterministic under
+    partitioning — specialized to m independent dsub-dim fits instead of
+    one spherical fit.
     """
-    pdf = (
-        corpus.select("vec_id", "embedding")
-        .orderBy(F.xxhash64(F.col("vec_id"), F.lit(seed)), F.col("vec_id"))
-        .limit(train_sample)
-        .select("embedding")
-        .toPandas()
-    )
-    X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+    X = vector_sample(corpus, train_sample, seed)
     n, dim = X.shape
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")

@@ -27,7 +27,6 @@ TIERS = {
     "1h": ("hour", 3600.0),
     "1d": ("day", 86400.0),
 }
-TIER_ORDER = list(TIERS)
 
 
 def rollup_once(finer: DataFrame, tier: str) -> DataFrame:

@@ -4,8 +4,9 @@ decontamination / quality scoring in an LLM data pipeline. The reference
 engine has no sampling surface; these are engine-native additions.
 
 Everything here is a pure map-side column expression — ZERO shuffles for
-sampling and split assignment, one small aggregate for mix rates — and
-deterministic by construction: membership depends only on (key, seed),
+sampling and split assignment, one small aggregate for mix rates, one
+top-N for the vector operators' training sample — and deterministic by
+construction: membership depends only on (key, seed),
 never on partitioning, executor count, or row order. That is the property
 ``DataFrame.sample`` does NOT give you (it is per-partition pseudo-random:
 recompute the input with different parallelism and the sample changes),
@@ -26,6 +27,7 @@ Two hash families:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -52,16 +54,26 @@ def hash_bucket(seed: int = 0, method: str = "xxhash64") -> Column:
     raise ValueError(f"unknown hash method {method!r}")
 
 
-def hash_sample(
-    df: DataFrame,
-    rate: float,
-    seed: int = 0,
-    method: str = "xxhash64",
-) -> DataFrame:
-    """Deterministic Bernoulli(rate) sample keyed on ``doc_id``."""
-    if not 0.0 <= rate <= 1.0:
-        raise ValueError(f"rate must be in [0, 1], got {rate}")
-    return df.where(hash_bucket(seed, method) < F.lit(rate))
+def vector_sample(corpus: DataFrame, n: int, seed: int) -> np.ndarray:
+    """The float64 ``embedding`` matrix of the ``n`` rows with the smallest
+    ``xxhash64(vec_id, seed)``, ties broken by ``vec_id`` — the bounded
+    training sample the vector operators fit on the driver.
+
+    The draw is pseudo-random and depends only on (vec_id, seed), never
+    on file order or partitioning: a plain ``limit`` would train on the
+    first file split's likely time/source-correlated vectors and silently
+    degrade the fit on the rest of the corpus at scale.
+    ``orderBy().limit()`` executes as a per-partition top-N and a driver
+    merge of n rows, with no full sort shuffle, so the corpus itself is
+    never collected."""
+    pdf = (
+        corpus.select("vec_id", "embedding")
+        .orderBy(F.xxhash64(F.col("vec_id"), F.lit(seed)), F.col("vec_id"))
+        .limit(n)
+        .select("embedding")
+        .toPandas()
+    )
+    return np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
 
 
 def weighted_sample(
@@ -133,8 +145,9 @@ def domain_mix(
     """Per-source sampling rates that hit a token budget under target mix
     weights: rate(s) = min(1, budget * w(s) / tokens(s)). With
     ``weights=None`` the target mix is uniform over the observed sources.
-    One small aggregate (n_sources rows); the rates are then applied with
-    :func:`hash_sample` per source — still shuffle-free over the corpus.
+    One small aggregate (n_sources rows); a caller applies the rates by
+    gating each source's rows on :func:`hash_bucket` — still shuffle-free
+    over the corpus.
 
     Undersupplied sources (rate capped at 1) deliver fewer tokens than
     their target share — ``expected_tokens`` makes the shortfall explicit

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.session import worker_kernel
+from .sampling import vector_sample
 
 
 def _dot(a, b):
@@ -153,25 +154,12 @@ def train_coarse_quantizer(corpus: DataFrame) -> np.ndarray:
     ``(min(8, n), dim)``).
 
     Training collects a BOUNDED, UNBIASED sample to the driver
-    (4096 rows — a few MB even at 10^12-row corpora, the same order as
-    broadcasting the query set) and runs 10 Lloyd iterations in numpy;
-    the corpus itself is never collected. The sample is the 4096 rows
-    with the smallest seeded ``xxhash64(id)`` — a deterministic
-    pseudo-random draw that is independent of file order and partitioning
-    (a plain ``limit`` would train on the first file split's likely
-    time/source-correlated vectors and silently degrade recall on the rest
-    of the corpus at scale). ``orderBy().limit()`` executes as a
-    per-partition top-N + driver merge of n rows — no full sort shuffle.
+    (``sampling.vector_sample``: 4096 rows — a few MB even at 10^12-row
+    corpora, the same order as broadcasting the query set) and runs 10
+    Lloyd iterations in numpy; the corpus itself is never collected.
     The cell count is clamped to the sample size; callers must use the
     returned ``C.shape[0]`` as the effective cell count."""
-    pdf = (
-        corpus.select("vec_id", "embedding")
-        .orderBy(F.xxhash64(F.col("vec_id"), F.lit(42)), F.col("vec_id"))
-        .limit(4096)
-        .select("embedding")
-        .toPandas()
-    )
-    X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+    X = vector_sample(corpus, 4096, 42)
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
     n_cells = min(8, len(X))
     rng = np.random.default_rng(42)
@@ -256,9 +244,8 @@ def cosine_allpairs_exact(
     tile_rows: int = 2_000_000,
 ) -> DataFrame:
     """EXACT all-pairs cosine >= threshold — (id_a, id_b, cosine) with
-    id_a < id_b. The verification oracle for the LSH-bucketed near-dup
-    path (``dedup.embedding_near_dup_pairs``) and the input to cluster
-    contraction (``components.dedup_clusters``).
+    id_a < id_b. The input to cluster contraction
+    (``components.dedup_clusters``).
 
     Shape: one side of the O(n^2) product is collected ONCE into a dense
     unit-row numpy matrix and broadcast; the other side streams through
@@ -282,8 +269,7 @@ def cosine_allpairs_exact(
     an 80k-row tile never materializes a multi-GB float panel (measured
     swapping the whole host in the unblocked form). Total tile-read IO is
     side_bytes * n_tasks — the textbook blocked outer-product cost, the
-    price of exactness without a broadcast. Beyond ~10^7 rows use the LSH
-    path and reserve this as the audit oracle on samples/buckets.
+    price of exactness without a broadcast.
 
     ``scratch_dir``: where the tile parquet goes (overwritten) — must be
     reachable from every executor (local path in local mode; a shared FS /

@@ -406,8 +406,7 @@ def _q_trigram_quality(spark, sf_dir):
     is charset-bounded (<= |alphabet|^3 rows — broadcast side forever),
     so the plan is one broadcast-hash join + two hash aggregates. A
     planted 2-char document exercises the empty-trigram path in both
-    engines (it must appear with all-zero statistics). The float
-    log-prob layer (trigram_logprob) is pytest-verified against numpy.
+    engines (it must appear with all-zero statistics).
     """
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     planted = spark.createDataFrame(

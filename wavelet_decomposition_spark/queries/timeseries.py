@@ -1200,12 +1200,9 @@ def _q_hurst_rs(spark, sf_dir):
     uses — keep every chunk moment inside the 2^53 exact-double
     envelope) so chunk sums, means (power-of-two divisors), cumulative
     deviations, and variances are all exact; R/S is one IEEE sqrt + one
-    division — bit-identical
-    cross-engine, floored to micro-units BEFORE the order-sensitive
-    summation. The float log-log slope on top (hurst_exponent) is
-    pytest-verified against numpy (tests/test_hurst.py). One exchange
-    on the (series, n, chunk) ladder, window ops + two hash
-    aggregates, no Python stage.
+    division — bit-identical cross-engine, floored to micro-units BEFORE
+    the order-sensitive summation. One exchange on the (series, n, chunk)
+    ladder, window ops + two hash aggregates, no Python stage.
     """
     hourly = (
         _events(spark, sf_dir)
