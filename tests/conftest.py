@@ -35,3 +35,21 @@ def spark():
     s = build_session(app_name="wds-tests", cores=4, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def rdds_left(spark):
+    """``count(run)``: how many persistent RDDs ``run()`` leaves behind, as
+    the ids after it minus the ids before it (so the cleaner reclaiming
+    older RDDs meanwhile cannot hide one). It releases what it counted."""
+    sc = spark.sparkContext
+
+    def count(run):
+        before = set(sc._jsc.getPersistentRDDs().keys())
+        run()
+        left = {k: v for k, v in sc._jsc.getPersistentRDDs().items() if k not in before}
+        for rdd in left.values():
+            rdd.unpersist(True)
+        return len(left)
+
+    return count

@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+
 from wavelet_decomposition_spark.operators.components import (
     connected_components,
     dedup_clusters,
@@ -64,6 +65,21 @@ def test_cc_long_chain(spark):
     cc = connected_components(spark.createDataFrame(pdf)).toPandas()
     assert len(cc) == n
     assert (cc["component"] == 0).all()
+
+
+def test_cc_superseded_rounds_are_released(spark, rdds_left):
+    """Each star round's checkpoint is released once the next round's
+    signature collect has materialized it: a 200-node chain, which takes
+    more rounds, leaves as many persistent RDDs as a 4-node chain."""
+    left = {}
+    for n in (4, 200):
+        src = spark.createDataFrame(
+            pd.DataFrame({"id_a": np.arange(n), "id_b": np.arange(1, n + 1)}).astype(np.int64)
+        )
+        out = []
+        left[n] = rdds_left(lambda: out.extend(connected_components(src).collect()))
+        assert len(out) == n + 1 and {r.component for r in out} == {0}
+    assert left[4] == left[200]
 
 
 def _cc_jobs(spark, src, group):

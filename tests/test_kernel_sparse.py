@@ -1,3 +1,5 @@
+import pickle
+
 import numpy as np
 
 from tests import electricity_inputs as ei
@@ -17,6 +19,23 @@ def test_matvec_rmatvec_match_dense():
     y = rng.normal(size=dense.shape[0])
     np.testing.assert_allclose(A.matvec(x), dense @ x, rtol=1e-13)
     np.testing.assert_allclose(A.rmatvec(y), dense.T @ y, rtol=1e-13)
+
+
+def test_pickle_ships_only_the_four_arrays():
+    """A broadcast CSR is pickled as data/indices/indptr/shape: the row ids
+    and the CSC view are rebuilt where it is unpickled, and its matvecs
+    are bit-identical to the original's."""
+    rng = np.random.default_rng(11)
+    _, A = _random_csr(rng, m=400, n=300)
+    x = rng.normal(size=A.shape[1])
+    y = rng.normal(size=A.shape[0])
+    A.rmatvec(y)  # builds the CSC view on the original
+    blob = pickle.dumps(A)
+    assert len(blob) <= A.data.nbytes + A.indices.nbytes + A.indptr.nbytes + 1024
+    B = pickle.loads(blob)
+    assert B.shape == A.shape
+    np.testing.assert_array_equal(B.matvec(x), A.matvec(x))
+    np.testing.assert_array_equal(B.rmatvec(y), A.rmatvec(y))
 
 
 def test_from_coo_canonical_order():

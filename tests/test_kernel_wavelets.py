@@ -75,6 +75,10 @@ def test_flat_to_scale_pos_bijection():
         sel = scale_idx == s
         assert sel.sum() == size
         assert set(pos[sel]) == set(range(size))
+    # scale_pos_to_flat inverts it, on the whole layout and on any subset
+    np.testing.assert_array_equal(wl.scale_pos_to_flat(scale_idx, pos), np.arange(m))
+    sub = np.random.default_rng(3).permutation(m)[:5000]
+    np.testing.assert_array_equal(wl.scale_pos_to_flat(scale_idx[sub], pos[sub]), sub)
 
 
 def test_mother_dictionary_shapes():

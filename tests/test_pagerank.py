@@ -70,3 +70,18 @@ def test_null_endpoint_edges_dropped(spark):
     # only the mutual pair remains; no NULL node row, mass still 1
     assert sorted(r.node for r in out) == [1, 2]
     assert abs(sum(r.rank for r in out) - 1.0) < 1e-12
+
+
+def test_superseded_rounds_are_released(spark, rdds_left):
+    """Each round's checkpoint is released once the next round's scalar
+    collect has materialized it, so a run leaves as many persistent RDDs
+    after 12 rounds as after 3 (the edge, node and final rank frames)."""
+    e = _edges(spark, [(i, (i + 1) % 12) for i in range(12)] + [(0, 6), (3, 9)])
+    left = {}
+    for rounds in (3, 12):
+        out = []
+        left[rounds] = rdds_left(
+            lambda: out.extend(pagerank(e, max_iter=rounds, tol=0.0).collect())
+        )
+        assert {r.n_iter for r in out} == {rounds}
+    assert left[3] == left[12]

@@ -37,8 +37,13 @@ function or class reaches every package function or class its body
 references, called or not, by the reference rule above; reach is
 transitive, and a test reaches nothing. A named oracle is kept code, so
 what it references is reached too, but each must be read by some test.
-References resolve by name: a reached name reaches every module-level
-function or class of that name.
+A reference resolves to the function it names where the scan can tell:
+``mod.f`` read from a package module is that module's ``f``, a name
+imported ``from pkg.x import f`` is ``x``'s ``f``, and a bare name of the
+module's own is its own. Any other reference (a method, an attribute of
+a class, a name whose module has no such function) resolves by name: it
+reaches every module-level function or class of that name. An ``ORACLES``
+entry is a name, or ``module::name`` for one module's function.
 
 Run ``python tests/test_param_audit.py`` to list the findings of both
 rules."""
@@ -59,10 +64,13 @@ EXEMPT_FUNCS = {"calc_epn", "dictionary_width", "scale_sizes", "column_floats",
                 "best_translation", "bpe_train_reference", "transcripts_pandas"}
 EXEMPT_MODULES = {os.path.join("io", "reference_data.py")}
 # test oracles: package code only tests call, kept as the reference a test
-# checks the program's code against
-ORACLES = {"best_translation", "calc_epn", "decode", "dictionary_width", "dwt",
-           "encode", "full_dtw_numpy", "gapfill_zero", "idwt", "imodwt",
-           "iwpt_batch", "modwt", "scale_sizes", "transcripts_pandas"}
+# checks the program's code against (``module::name`` where the name is
+# defined in more than one module)
+ORACLES = {"best_translation", "calc_epn", "dictionary_width", "dwt",
+           "full_dtw_numpy", "gapfill_zero", "idwt", "imodwt", "iwpt_batch",
+           "kernel/deltadelta.py::decode", "kernel/deltadelta.py::encode",
+           "kernel/gorilla.py::decode", "kernel/gorilla.py::encode", "modwt",
+           "scale_sizes", "transcripts_pandas"}
 
 # (callee attribute, index of the function argument) of the call indirections
 INDIRECT = {"call": 1, "submit": 0}
@@ -158,11 +166,52 @@ def _imports(tree):
     return names, from_package
 
 
-def _refs(tree, names, package_names, own, callee_nodes):
-    """The package functions ``tree`` uses other than as a callee: a bare
-    name bound from the package or to a function of the module's own
-    (unless a parameter or assignment of the enclosing function shadows
-    it), or an attribute read from a package module or from ``self``/``cls``."""
+def _targets(tree, pkg, here):
+    """Where each name the module binds from the package points: local name
+    -> (module, None) for a package module, (module, name) for a name read
+    from one, or (None, name) where that module is not in the package
+    directory ``pkg``. Modules are paths relative to ``pkg``; ``here`` is
+    the importing module's directory there, or None outside the package."""
+
+    def module(parts):
+        path = os.path.join("", *parts)
+        for cand in (path + ".py", os.path.join(path, "__init__.py")):
+            if os.path.isfile(os.path.join(pkg, cand)):
+                return cand
+        return None
+
+    out = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom):
+            named = node.module.split(".") if node.module else []
+            if node.level and here is not None:
+                base = here.split(os.sep) if here else []
+                parts = base[:len(base) - node.level + 1] + named
+            elif not node.level and named[:1] == [PACKAGE]:
+                parts = named[1:]
+            else:
+                continue
+            for a in node.names:
+                sub, mod = module(parts + [a.name]), module(parts)
+                out[a.asname or a.name] = (sub, None) if sub else (mod, a.name)
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                parts = a.name.split(".")
+                if parts[0] == PACKAGE:
+                    out[a.asname or PACKAGE] = (module(parts[1:] if a.asname else []), None)
+    return out
+
+
+def _refs(tree, names, package_names, own, callee_nodes, targets=None, here=None):
+    """The package functions ``tree`` uses other than as a callee, as
+    (module or None, name): a bare name bound from the package or to a
+    function of the module's own (unless a parameter or assignment of the
+    enclosing function shadows it), or an attribute read from a package
+    module or from ``self``/``cls``. The module is the one ``targets`` (see
+    :func:`_targets`) or ``here`` (the module's own path) resolves the
+    reference to, None where it does not; a package module named bare is
+    no function and is left out."""
+    targets = targets or {}
     found = set()
 
     def visit(node, shadowed):
@@ -174,12 +223,18 @@ def _refs(tree, names, package_names, own, callee_nodes):
                 if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)}
         elif id(node) not in callee_nodes and isinstance(getattr(node, "ctx", None), ast.Load):
             if isinstance(node, ast.Name):
-                if node.id not in shadowed and (node.id in package_names or node.id in own):
-                    found.add(names.get(node.id, node.id))
+                if node.id not in shadowed and node.id in package_names:
+                    mod, name = targets.get(node.id, (None, names.get(node.id, node.id)))
+                    if name is not None:
+                        found.add((mod, name))
+                elif node.id not in shadowed and node.id in own:
+                    found.add((here, node.id))
             elif isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
-                if node.value.id in package_names or (
-                        node.value.id in ("self", "cls") and node.attr in own):
-                    found.add(node.attr)
+                mod, name = targets.get(node.value.id, (None, None))
+                if node.value.id in package_names:
+                    found.add((mod if name is None else None, node.attr))
+                elif node.value.id in ("self", "cls") and node.attr in own:
+                    found.add((None, node.attr))
         for child in ast.iter_child_nodes(node):
             visit(child, shadowed)
 
@@ -224,8 +279,8 @@ def _calls_and_refs(root):
                 (rel, args, {k.arg: k.value for k in node.keywords if k.arg}, spread, local))
         if not is_test:
             in_package = rel.split(os.sep)[0] == PACKAGE
-            refs |= _refs(tree, names, from_package, own if in_package else set(),
-                          callee_nodes)
+            refs |= {name for _mod, name in _refs(
+                tree, names, from_package, own if in_package else set(), callee_nodes)}
     return calls, refs
 
 
@@ -284,42 +339,51 @@ def unreached(root=ROOT, oracles=ORACLES):
     """The package's module-level functions and classes that no program
     path reaches and ``oracles`` does not name, as ``module::name``; then
     each oracle no test reads, as ``oracle::name``."""
-    defs, uses, roots, read_by_tests = {}, {}, set(oracles), set()
+    pkg = os.path.join(root, PACKAGE)
+    uses, by_name, roots, read_by_tests = {}, {}, set(), set()
     for path in _py_files(root):
         rel = os.path.relpath(path, root)
         top = rel.split(os.sep)[0]
         tree = _parse(path)
         names, from_package = _imports(tree)
-        own = _own(tree, from_package) if top == PACKAGE else set()
+        mod = os.path.relpath(path, pkg) if top == PACKAGE else None
+        targets = _targets(tree, pkg, os.path.dirname(mod) if mod else None)
+        own = _own(tree, from_package) if mod else set()
         # the object an attribute is read from is a module or an instance
         objects = {id(n.value) for n in ast.walk(tree) if isinstance(n, ast.Attribute)}
 
         def refs(node):
-            return _refs(node, names, from_package, own, objects)
+            return _refs(node, names, from_package, own, objects, targets, mod)
 
-        if top != PACKAGE:
+        if mod is None:
             (read_by_tests if top == TESTS else roots).update(refs(tree))
             continue
-        mod = os.path.relpath(path, os.path.join(root, PACKAGE))
         for node in tree.body:
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 roots |= refs(node)
                 continue
-            defs.setdefault(node.name, []).append(mod)
+            by_name.setdefault(node.name, []).append(mod)
             uses[mod, node.name] = refs(node)
             if mod in EXEMPT_MODULES or any(  # ``@query`` or ``@query(...)``
                     _name(getattr(d, "func", d)) == "query" for d in node.decorator_list):
-                roots.add(node.name)
-    reached, todo = set(), list(roots)
+                roots.add((mod, node.name))
+
+    def resolve(ref):
+        mod, name = ref
+        if (mod, name) in uses:
+            return [(mod, name)]
+        return [(m, name) for m in by_name.get(name, ())]
+
+    named = {o: tuple(o.split("::")) if "::" in o else (None, o) for o in oracles}
+    reached, todo = set(), [r for ref in roots | set(named.values()) for r in resolve(ref)]
     while todo:
-        name = todo.pop()
-        if name not in reached:
-            reached.add(name)
-            for mod in defs.get(name, ()):
-                todo.extend(uses[mod, name])
-    return (sorted(f"{mod}::{name}" for name, mods in defs.items() if name not in reached
-                   for mod in mods)
-            + [f"oracle::{name}" for name in sorted(set(oracles) - read_by_tests)])
+        key = todo.pop()
+        if key not in reached:
+            reached.add(key)
+            todo.extend(r for ref in uses[key] for r in resolve(ref))
+    read = {r for ref in read_by_tests for r in resolve(ref)}
+    return (sorted(f"{mod}::{name}" for mod, name in uses if (mod, name) not in reached)
+            + [f"oracle::{o}" for o in sorted(oracles) if not read & set(resolve(named[o]))])
 
 
 def test_every_parameter_takes_two_values():
@@ -458,6 +522,27 @@ def test_reach_function_tools_call_is_not_flagged(tmp_path):
                          "f(K)\nkernel.k(1)\n"),
     }, _reach(()))
     assert got == []
+
+
+def test_reach_reference_resolves_to_its_module(tmp_path):
+    got = _plant(tmp_path, {
+        f"{PACKAGE}/a.py": "def g(x):\n    return x\ndef h(x):\n    return x\n",
+        f"{PACKAGE}/b.py": "def g(x):\n    return x\ndef h(x):\n    return x\n",
+        "tools/run.py": ("from wavelet_decomposition_spark import a\n"
+                         "from wavelet_decomposition_spark.b import h\n"
+                         "a.g(1)\nh(2)\n"),
+    }, _reach(()))
+    assert got == ["a.py::h", "b.py::g"]
+
+
+def test_reach_module_qualified_oracle_names_one_function(tmp_path):
+    got = _plant(tmp_path, {
+        f"{PACKAGE}/a.py": "def g(x):\n    return x\n",
+        f"{PACKAGE}/b.py": "def g(x):\n    return x\n",
+        f"{TESTS}/test_g.py": ("from wavelet_decomposition_spark import a, b\n"
+                               "assert a.g(1) == b.g(1)\n"),
+    }, _reach(("a.py::g",)))
+    assert got == ["b.py::g"]
 
 
 def test_reach_function_only_an_unreached_function_calls_is_flagged(tmp_path):

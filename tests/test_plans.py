@@ -80,6 +80,24 @@ def test_shingle_pipeline_no_inferred_filter(spark):
     assert "Filter" not in plan
 
 
+def _reference_inputs(monkeypatch):
+    """Where the reference workbook is absent, point the wavelet query
+    builders at tests/electricity_inputs.py's synthetic stand-ins, through a
+    fresh ``_GOLDEN_CACHE`` so no synthetic broadcast or golden frame
+    outlives the test."""
+    if os.path.exists(ei.WORKBOOK):
+        return
+    from wavelet_decomposition_spark.io import reference_data as rd
+    from wavelet_decomposition_spark.queries import wavelet
+
+    monkeypatch.setattr(wavelet, "electricity_df", ei.electricity_df)
+    monkeypatch.setattr(wavelet, "load_translations", ei.load_translations)
+    monkeypatch.setattr(rd, "load_translations", ei.load_translations)
+    monkeypatch.setattr(wavelet, "load_prepared_signal", ei.load_prepared_signal)
+    monkeypatch.setattr(rd, "load_golden_betas_long", ei.load_golden_betas_long)
+    monkeypatch.setattr(wavelet, "_GOLDEN_CACHE", {})
+
+
 def test_invariant_queries_single_lineage(spark, queries, monkeypatch):
     """The self-verifying driver queries must compute their invariant as a
     window aggregate over ONE lineage: referencing the solve/pyramid
@@ -89,25 +107,10 @@ def test_invariant_queries_single_lineage(spark, queries, monkeypatch):
     decompose FlatMapGroupsInPandas per dictionary-shape branch (the
     energy queries' single pyramid stage is pinned by
     test_wavelet_queries_leave_no_storage). The builders read the reference
-    workbook, translation pickles and betas workbooks while they build;
-    where the workbook is absent they read tests/electricity_inputs.py's
-    synthetic stand-ins instead, through a fresh ``_GOLDEN_CACHE`` so no
-    synthetic broadcast or golden frame outlives the test. Only plans are
-    explained, so the golden values never matter."""
-    if not os.path.exists(ei.WORKBOOK):
-        from wavelet_decomposition_spark.io import reference_data as rd
-        from wavelet_decomposition_spark.queries import wavelet
-
-        monkeypatch.setattr(wavelet, "electricity_df", ei.electricity_df)
-        monkeypatch.setattr(wavelet, "load_translations", ei.load_translations)
-        monkeypatch.setattr(rd, "load_translations", ei.load_translations)
-        monkeypatch.setattr(
-            wavelet, "load_prepared_signal", ei.load_prepared_signal
-        )
-        monkeypatch.setattr(
-            rd, "load_golden_betas_long", ei.load_golden_betas_long
-        )
-        monkeypatch.setattr(wavelet, "_GOLDEN_CACHE", {})
+    workbook, translation pickles and betas workbooks while they build,
+    or their stand-ins (``_reference_inputs``). Only plans are explained,
+    so the golden values never matter."""
+    _reference_inputs(monkeypatch)
     # full: square branch (resample+decompose) + sine branch = 4 stages
     plan = _plan(queries["full_decomposition"](spark, SF_DIR), "simple")
     assert plan.count("FlatMapGroupsInPandas") == 4
@@ -130,6 +133,19 @@ def test_invariant_queries_single_lineage(spark, queries, monkeypatch):
     # full E3: exactly one sweep (MapInPandas) per mother family
     plan = _plan(queries["translation_full"](spark, SF_DIR), "simple")
     assert plan.count("MapInPandas") == 3
+
+
+def test_e1_reconstruction_invariants_hold(spark, queries, monkeypatch):
+    """The three E1 reconstruction queries, built and collected: every
+    row's ``invariant_ok`` (the reconstruction fits the input signal to the
+    damped-LSQR bound) is true. Their inputs are the same as in
+    ``test_invariant_queries_single_lineage``."""
+    _reference_inputs(monkeypatch)
+    for name in ("reconstruction_roundtrip", "heatmap_scales",
+                 "reconstruction_relational"):
+        rows = queries[name](spark, SF_DIR).select("invariant_ok").collect()
+        assert len(rows) == 365 * 64, name
+        assert all(r.invariant_ok for r in rows), name
 
 
 def test_solve_stage_not_coalesced(spark, queries):

@@ -244,9 +244,3 @@ def imodwt(W, V: np.ndarray, wavelet: str = "haar") -> np.ndarray:
         idx = (t[:, None] + step * np.arange(h.size)[None, :]) % n
         v = v[idx] @ ht + np.asarray(W[j - 1])[idx] @ gt
     return v
-
-
-def energy_spectrum(details, approx) -> np.ndarray:
-    """Per-scale energy: [E(d1), ..., E(dJ), E(approx)]."""
-    return np.array([float(np.square(d).sum()) for d in details] +
-                    [float(np.square(approx).sum())])

@@ -4,7 +4,8 @@
 The sandbox has no scipy, and the engine only ever needs matvecs (the
 reference also only uses the CSR for iterative solves — it never factorizes;
 see /root/reference/wavelet_decomposition.py:195-199). A ~3 MB CSR is
-broadcast to executors and used inside applyInPandas workers.
+broadcast to executors as its four arrays (``__reduce__``) and used inside
+applyInPandas workers; each worker rebuilds its row ids and CSC view once.
 
 Also provides a loader for scipy-format ``.npz`` CSR files (plain numpy
 arrays zipped with keys data/indices/indptr/shape/format), used only by the
@@ -52,6 +53,11 @@ class CSRMatrix:
         self._csc_rows = None
         self._csc_colptr = None
         self._cols_ok = False
+
+    def __reduce__(self):
+        # pickle only the four CSR arrays: the row ids and the CSC view are
+        # derived, and rebuilt where the matrix is unpickled
+        return CSRMatrix, (self.data, self.indices, self.indptr, self.shape)
 
     @property
     def nnz(self) -> int:

@@ -145,8 +145,14 @@ def mother_dictionary(
 
 
 # ---------------------------------------------------------------------------
-# flat coefficient index -> (scale_idx, pos) mapping
+# flat coefficient index <-> (scale_idx, pos) mapping
 # ---------------------------------------------------------------------------
+
+def _list_sizes():
+    """Length of each scale list in the solver's flat order: the offset,
+    then every level of :func:`_family_specs`."""
+    return [1] + [count for _family, _level, count, _dt in _family_specs()]
+
 
 def flat_to_scale_pos():
     """Vectorized mapping from the solver's natural flat coefficient order to
@@ -160,23 +166,18 @@ def flat_to_scale_pos():
 
     Returns (scale_idx[M] int32, pos[M] int32).
     """
-    sizes = [1]  # offset
-    for k in range(VY):
-        sizes.append(2**k)
-    for k in range(VW):
-        sizes.append(52 * 2**k)
-    for k in range(VD):
-        sizes.append(DPY * 2**k)
-    n_scales = len(sizes)  # 16 natural scale lists
+    sizes = _list_sizes()
+    scale_idx = np.repeat(np.arange(len(sizes) - 1, -1, -1, dtype=np.int32), sizes)
+    pos = np.concatenate([np.arange(n - 1, -1, -1, dtype=np.int32) for n in sizes])
+    return scale_idx, pos
 
-    scale_idx_parts = []
-    pos_parts = []
-    for s, size in enumerate(sizes):
-        scale_idx_parts.append(
-            np.full(size, n_scales - 1 - s, dtype=np.int32)
-        )
-        pos_parts.append(np.arange(size - 1, -1, -1, dtype=np.int32))
-    return np.concatenate(scale_idx_parts), np.concatenate(pos_parts)
+
+def scale_pos_to_flat(scale_idx, pos):
+    """Inverse of :func:`flat_to_scale_pos`: the flat index of each sheet
+    coordinate, i.e. its scale list's last flat index minus ``pos``
+    (the sheet reverses each list; wavelet_decomposition.py:385-434)."""
+    last = (np.cumsum(_list_sizes()) - 1)[::-1]
+    return last[np.asarray(scale_idx)] - np.asarray(pos)
 
 
 def scale_sizes(vy: int = VY, vw: int = VW, vd: int = VD, dpy: int = DPY):

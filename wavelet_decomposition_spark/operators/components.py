@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.session import worker_kernel
+from ..plans.session import release_checkpoint, worker_kernel
 
 _MAX_ROUNDS = 50
 
@@ -89,6 +89,7 @@ def connected_components(edges: DataFrame) -> DataFrame:
     for _ in range(_MAX_ROUNDS):
         # lazy, like the input's: the signature aggregate below is the job
         # that materializes the round (an eager checkpoint is a second job)
+        done = e
         e = _star(_star(e, large=True), large=False).localCheckpoint(
             eager=False
         )
@@ -98,6 +99,8 @@ def connected_components(edges: DataFrame) -> DataFrame:
                 F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)
             ).alias("s"),
         ).collect()[0]
+        # the collect materialized this round: the one it read is done
+        release_checkpoint(done)
         cur = (sig["n"], sig["s"])
         if cur == prev:
             break

@@ -5,11 +5,12 @@ coefficient table.
 Reference: the year loop at /root/reference/wavelet_decomposition.py:232-250
 (one ``lsqr(A_year, signal_slice)`` per year) and the sheet reshape at
 :260-298. Here every (series_id, year) group is one Spark task: the
-dictionaries (~4.5 MB CSR per year) and the flat->(scale,pos) mapping are
-broadcast once; the solve runs as sequential numpy inside an Arrow pandas
-UDF (deterministic — a solve is never split across partitions), and the
-reshape is a vectorized gather, so the group's 23,360 input rows map to
-23,423 coefficient rows with no per-row Python.
+dictionaries (one ~4.5 MB ``CSRMatrix`` per year) are broadcast once, as
+``{year: CSRMatrix}``; the solve runs as sequential numpy inside an Arrow
+pandas UDF (deterministic — a solve is never split across partitions), and
+the reshape to and from the sheet layout is ``kernel/wavelets``'
+vectorized ``flat_to_scale_pos`` / ``scale_pos_to_flat``, so the group's
+23,360 input rows map to 23,423 coefficient rows with no per-row Python.
 
 Scale note: groups are fixed-size (points_per_year rows) so groupBy skew is
 bounded by design; parallelism = #series x #years, embarrassingly parallel
@@ -26,7 +27,6 @@ from pyspark.sql import functions as F
 
 from ..kernel import wavelets as wl
 from ..kernel.lsqr import beta_decomposition
-from ..kernel.sparse import CSRMatrix
 from ..plans.session import worker_kernel
 
 BETA_SCHEMA = (
@@ -40,15 +40,14 @@ def broadcast_dictionaries(
     translations_by_year: dict[int, list[int]],
 ):
     """Generate one CSR dictionary per year on the driver (<1 s/year,
-    CSR-direct — the reference's dense path needs 4.38 GB) and broadcast the
-    raw arrays plus the scale map. Returns the broadcast handle."""
-    payload = {}
-    for year, trans in translations_by_year.items():
-        A = wl.generate_dictionary(shape, trans)
-        payload[int(year)] = (A.data, A.indices, A.indptr, A.shape)
-    scale_idx, pos = wl.flat_to_scale_pos()
+    CSR-direct — the reference's dense path needs 4.38 GB) and broadcast
+    them as ``{year: CSRMatrix}``, each pickled as its four arrays. Returns
+    the broadcast handle."""
     return spark.sparkContext.broadcast(
-        {"matrices": payload, "scale_idx": scale_idx, "pos": pos}
+        {
+            int(year): wl.generate_dictionary(shape, trans)
+            for year, trans in translations_by_year.items()
+        }
     )
 
 
@@ -72,10 +71,8 @@ def decompose(df: DataFrame, bc) -> DataFrame:
     compute-dense shuffle shape)."""
 
     def _solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        state = bc.value
         year = int(pdf["year"].iloc[0])
-        data, indices, indptr, shape = state["matrices"][year]
-        A = CSRMatrix(data, indices, indptr, shape)
+        A = bc.value[year]
         pdf = pdf.sort_values("idx")
         signal = pdf["value"].to_numpy(dtype=np.float64)
         if signal.size != A.shape[0]:
@@ -84,12 +81,13 @@ def decompose(df: DataFrame, bc) -> DataFrame:
                 f"{signal.size} points, dictionary expects {A.shape[0]}"
             )
         beta = beta_decomposition(A, signal)
+        scale_idx, pos = wl.flat_to_scale_pos()
         return pd.DataFrame(
             {
                 "series_id": pdf["series_id"].iloc[0],
                 "year": year,
-                "scale_idx": state["scale_idx"],
-                "pos": state["pos"],
+                "scale_idx": scale_idx,
+                "pos": pos,
                 "beta": beta,
             }
         )
@@ -115,28 +113,17 @@ def reconstruct(
     scales = set(int(s) for s in keep_scales) if keep_scales is not None else None
 
     def _recon(pdf: pd.DataFrame) -> pd.DataFrame:
-        state = bc.value
         year = int(pdf["year"].iloc[0])
-        data, indices, indptr, shape = state["matrices"][year]
-        A = CSRMatrix(data, indices, indptr, shape)
-        flat = np.zeros(shape[1], dtype=np.float64)
+        A = bc.value[year]
         scale_idx = pdf["scale_idx"].to_numpy()
         keep = np.ones(len(pdf), dtype=bool)
         if scales is not None:
             keep &= np.isin(scale_idx, list(scales))
         if not add_offset:
             keep &= scale_idx != 15
-        # invert the sheet mapping: position in natural flat order
         sel = pdf[keep]
-        lut_scale = state["scale_idx"]
-        lut_pos = state["pos"]
-        # build (scale_idx, pos) -> flat index lookup once per group
-        key_lut = lut_scale.astype(np.int64) * 100000 + lut_pos
-        order = np.argsort(key_lut)
-        want = sel["scale_idx"].to_numpy().astype(np.int64) * 100000 + sel[
-            "pos"
-        ].to_numpy()
-        flat_idx = order[np.searchsorted(key_lut[order], want)]
+        flat = np.zeros(A.shape[1], dtype=np.float64)
+        flat_idx = wl.scale_pos_to_flat(sel["scale_idx"], sel["pos"])
         flat[flat_idx] = sel["beta"].to_numpy(dtype=np.float64)
         signal = A.matvec(flat)
         return pd.DataFrame(
@@ -160,23 +147,21 @@ def support_table(spark: SparkSession, bc) -> DataFrame:
     (~373k/year, a few MB — broadcast-able). Built driver-side from the
     same broadcast payload the UDF path uses, so both reconstruction forms
     share one dictionary source of truth."""
-    state = bc.value
-    lut_scale, lut_pos = state["scale_idx"], state["pos"]
-    frames = []
-    for year, (data, indices, indptr, shape) in state["matrices"].items():
-        frames.append(
-            pd.DataFrame(
-                {
-                    "year": np.int32(year),
-                    "scale_idx": lut_scale[indices],
-                    "pos": lut_pos[indices],
-                    "idx": np.repeat(
-                        np.arange(shape[0], dtype=np.int32), np.diff(indptr)
-                    ),
-                    "weight": data,
-                }
-            )
+    scale_idx, pos = wl.flat_to_scale_pos()
+    frames = [
+        pd.DataFrame(
+            {
+                "year": np.int32(year),
+                "scale_idx": scale_idx[A.indices],
+                "pos": pos[A.indices],
+                "idx": np.repeat(
+                    np.arange(A.shape[0], dtype=np.int32), np.diff(A.indptr)
+                ),
+                "weight": A.data,
+            }
         )
+        for year, A in bc.value.items()
+    ]
     return spark.createDataFrame(pd.concat(frames, ignore_index=True))
 
 

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.session import release_checkpoint
+
 
 def pagerank(
     edges: DataFrame,
@@ -170,6 +172,8 @@ def pagerank(
             ).alias("m"),
         ).collect()[0]
         delta, dangling = scalars["d"], scalars["m"]
+        # the collect materialized this round: the one it read is done
+        release_checkpoint(ranks)
         ranks = new.drop("_prev")
         if delta <= tol:
             break

@@ -14,7 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernel.sparse import CSRMatrix
+from ..kernel import wavelets as wl
 from ..plans.session import worker_kernel
 
 
@@ -118,25 +118,15 @@ def per_scale_reconstruction(betas: DataFrame, bc, n_scales: int = 15) -> DataFr
     (the heatmap's pre-pivot long form; pivot at presentation time)."""
 
     def _per_scale(pdf: pd.DataFrame) -> pd.DataFrame:
-        state = bc.value
         year = int(pdf["year"].iloc[0])
-        data, indices, indptr, shape = state["matrices"][year]
-        A = CSRMatrix(data, indices, indptr, shape)
-        lut_scale, lut_pos = state["scale_idx"], state["pos"]
-        key_lut = lut_scale.astype(np.int64) * 100000 + lut_pos
-        order = np.argsort(key_lut)
-        want = (
-            pdf["scale_idx"].to_numpy().astype(np.int64) * 100000
-            + pdf["pos"].to_numpy()
-        )
-        flat_idx = order[np.searchsorted(key_lut[order], want)]
-        flat_all = np.zeros(shape[1])
+        A = bc.value[year]
+        flat_idx = wl.scale_pos_to_flat(pdf["scale_idx"], pdf["pos"])
+        flat_all = np.zeros(A.shape[1])
         flat_all[flat_idx] = pdf["beta"].to_numpy(dtype=np.float64)
+        lut_scale = wl.flat_to_scale_pos()[0]
         frames = []
         for s in range(n_scales):
-            mask = np.zeros(shape[1])
-            sel = lut_scale == s
-            mask[sel] = flat_all[sel]
+            mask = np.where(lut_scale == s, flat_all, 0.0)
             sig = A.matvec(mask)
             frames.append(
                 pd.DataFrame(

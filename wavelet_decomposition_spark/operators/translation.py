@@ -39,16 +39,14 @@ def residues_for_shifts(
     mothers = wl.mother_dictionary(family, shape, dpy, dpd)
     rows, cols = np.nonzero(mothers.T)
     A = CSRMatrix.from_coo(rows, cols, mothers.T[rows, cols], mothers.T.shape)
-    # broadcast ONLY the CSR (~0.5 MB) — the dense mothers matrix (day
-    # family: 365 x 23,360 float64 = 68 MB) was previously shipped and
-    # unpickled by every Python worker per family stage purely to compute
-    # the residual product; every row of mothers.T has AT MOST ONE nonzero
-    # (disjoint mother supports), so the CSR matvec is bit-identical to
-    # the dense ``mothers.T @ beta`` (verified in
-    # tests/test_translation_spectrum.py) at 1/140th the broadcast bytes
+    # broadcast the CSR (~0.5 MB, pickled as its four arrays), not the
+    # dense mothers matrix (day family: 365 x 23,360 float64 = 68 MB):
+    # every row of mothers.T has AT MOST ONE nonzero (disjoint mother
+    # supports), so the CSR matvec is bit-identical to the dense
+    # ``mothers.T @ beta`` (verified in tests/test_translation_spectrum.py)
+    # at 1/140th the broadcast bytes
     bc = spark.sparkContext.broadcast(
-        {"signal": np.asarray(signal, dtype=np.float64),
-         "csr": (A.data, A.indices, A.indptr, A.shape)}
+        (np.asarray(signal, dtype=np.float64), A)
     )
     n = signal.size
     if shifts is None:
@@ -57,10 +55,7 @@ def residues_for_shifts(
         cand = spark.createDataFrame([(int(s),) for s in shifts], "shift long")
 
     def _residues(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state = bc.value
-        sig = state["signal"]
-        data, indices, indptr, shp = state["csr"]
-        A_ = CSRMatrix(data, indices, indptr, shp)
+        sig, A_ = bc.value
         for pdf in batches:
             out_shift, out_res = [], []
             for d in pdf["shift"].to_numpy():

@@ -194,6 +194,43 @@ def _q_dwt_denoise(spark, sf_dir):
     ).orderBy("conv_id", "window_id")
 
 
+def _e1_signal(spark, signals, years):
+    """The paper's E1 input: ingest -> P1 leap trim -> P2 normalize by the
+    year mean -> P4 resample 48 -> 64 samples/day, as (series_id, year, idx,
+    value)."""
+    df = electricity_df(spark, signals=signals, years=years)
+    df = ser.leap_trim(df, 48 * 365)
+    df = ser.normalize_yearly_mean(df)
+    return resample_per_year(df, 48, 64, 365)
+
+
+def _consumption_2013(spark):
+    """(signal, dictionary broadcast, betas) of the 2013 Consumption series
+    against its square dictionary."""
+    signal = _e1_signal(spark, ["Consumption"], [2013])
+    trans = rd.load_translations("square")
+    bc = dec.broadcast_dictionaries(spark, "square", {2013: trans[1]})
+    return signal, bc, dec.decompose(signal, bc)
+
+
+def _with_fit_ok(recon, signal, value, *cols):
+    """``recon``'s (series_id, year, idx) rows with ``cols`` and
+    ``invariant_ok`` = per-(series, year) relative error of the
+    reconstruction ``value`` vs ``signal``'s value < 1e-2 (the damped-LSQR
+    fit bound), as a window aggregate over the one joined lineage (a second
+    branch would recompute the whole decompose + reconstruct lineage)."""
+    joined = recon.join(
+        signal.withColumnRenamed("value", "signal"), ["series_id", "year", "idx"]
+    )
+    w = Window.partitionBy("series_id", "year")
+    rel_err = F.sum(F.pow(value - F.col("signal"), 2)).over(w) / F.sum(
+        F.pow("signal", 2)
+    ).over(w)
+    return joined.select(
+        "series_id", "year", "idx", *cols, (rel_err < 1e-2).alias("invariant_ok")
+    )
+
+
 @query()
 def _q_fft_spectrum(spark, sf_dir):
     """A7 — one-sided demeaned FFT magnitude spectrum per (series, year),
@@ -202,10 +239,7 @@ def _q_fft_spectrum(spark, sf_dir):
     equals the demeaned input energy to 1e-4 relative (the omitted Nyquist
     bin contributes ~1e-7 on this signal) — the rows-only gate cannot pass
     on garbage magnitudes."""
-    df = electricity_df(spark, signals=["Consumption"], years=[2013])
-    df = ser.leap_trim(df, 48 * 365)
-    df = ser.normalize_yearly_mean(df)
-    df = resample_per_year(df, 48, 64, 365)
+    df = _e1_signal(spark, ["Consumption"], [2013])
     in_e = df.groupBy("series_id", "year").agg(
         (
             F.sum(F.col("value") * F.col("value"))
@@ -236,25 +270,9 @@ def _q_reconstruction_roundtrip(spark, sf_dir):
     satisfy it. Band-pass masking (P7) is pinned separately by
     tests/test_decompose_spark.py and the per-scale ``heatmap_scales``
     query."""
-    df = electricity_df(spark, signals=["Consumption"], years=[2013])
-    df = ser.leap_trim(df, 48 * 365)
-    df = ser.normalize_yearly_mean(df)
-    df = resample_per_year(df, 48, 64, 365)
-    trans = rd.load_translations("square")
-    bc = dec.broadcast_dictionaries(spark, "square", {2013: trans[1]})
-    betas = dec.decompose(df, bc)
+    df, bc, betas = _consumption_2013(spark)
     recon = dec.reconstruct(betas, bc)
-    joined = recon.join(
-        df.withColumnRenamed("value", "signal"), ["series_id", "year", "idx"]
-    )
-    w = Window.partitionBy("series_id", "year")
-    rel_err = F.sum(F.pow(F.col("value") - F.col("signal"), 2)).over(w) / F.sum(
-        F.pow("signal", 2)
-    ).over(w)
-    return joined.select(
-        "series_id", "year", "idx", "value",
-        (rel_err < 1e-2).alias("invariant_ok"),
-    )
+    return _with_fit_ok(recon, df, F.col("value"), "value")
 
 
 @query(bench=True)
@@ -340,34 +358,14 @@ def _q_heatmap_scales(spark, sf_dir):
     < 1e-2 (the damped-LSQR fit bound) — shift a single scale's matvec and
     the sum breaks. The per-scale-vs-full linearity is also asserted
     exactly in tests/test_translation_spectrum.py."""
-    df = electricity_df(spark, signals=["Consumption"], years=[2013])
-    df = ser.leap_trim(df, 48 * 365)
-    df = ser.normalize_yearly_mean(df)
-    df = resample_per_year(df, 48, 64, 365)
-    trans = rd.load_translations("square")
-    bc = dec.broadcast_dictionaries(spark, "square", {2013: trans[1]})
-    betas = dec.decompose(df, bc)
+    df, bc, betas = _consumption_2013(spark)
     pivot = heatmap_pivot(
         per_scale_reconstruction(betas, bc, n_scales=16), scales=range(16)
-    )
-    joined = pivot.join(
-        df.select(
-            "series_id", "year", "idx", F.col("value").alias("_signal")
-        ),
-        ["series_id", "year", "idx"],
     )
     scale_sum = sum(
         [F.col("1")] + [F.col(str(s)) for s in range(2, 16)], F.col("0")
     )
-    w = Window.partitionBy("series_id", "year")
-    rel_err = F.sum(F.pow(scale_sum - F.col("_signal"), 2)).over(w) / F.sum(
-        F.pow("_signal", 2)
-    ).over(w)
-    return joined.select(
-        "series_id", "year", "idx",
-        *[F.col(str(s)) for s in range(16)],
-        (rel_err < 1e-2).alias("invariant_ok"),
-    )
+    return _with_fit_ok(pivot, df, scale_sum, *[str(s) for s in range(16)])
 
 
 @query()
@@ -378,29 +376,10 @@ def _q_reconstruction_relational(spark, sf_dir):
     Self-verifying: ``invariant_ok`` carries the relative reconstruction
     error vs the input signal (< 1e-2 for the damped-LSQR fit) — a garbage
     join/agg cannot satisfy it."""
-    df = electricity_df(spark, signals=["Consumption"], years=[2013])
-    df = ser.leap_trim(df, 48 * 365)
-    df = ser.normalize_yearly_mean(df)
-    df = resample_per_year(df, 48, 64, 365)
-    trans = rd.load_translations("square")
-    bc = dec.broadcast_dictionaries(spark, "square", {2013: trans[1]})
-    betas = dec.decompose(df, bc)
+    df, bc, betas = _consumption_2013(spark)
     support = dec.support_table(spark, bc)
     recon = dec.reconstruct_relational(betas, support)
-    joined = recon.join(
-        df.withColumnRenamed("value", "signal"), ["series_id", "year", "idx"]
-    )
-    # single lineage: the relative-error invariant is a window aggregate
-    # over the one joined result (referencing `joined` from two branches
-    # would recompute the whole decompose+reconstruct lineage twice)
-    w = Window.partitionBy("series_id", "year")
-    rel_err = F.sum(F.pow(F.col("value") - F.col("signal"), 2)).over(w) / F.sum(
-        F.pow("signal", 2)
-    ).over(w)
-    return joined.select(
-        "series_id", "year", "idx", "value",
-        (rel_err < 1e-2).alias("invariant_ok"),
-    )
+    return _with_fit_ok(recon, df, F.col("value"), "value")
 
 
 @query(designed_bnl=True)
@@ -670,10 +649,7 @@ def _betas_with_golden_parity(spark, shape, signals, years):
     ``max_abs_err`` (vs the reference's exported coefficient sheet) and
     ``invariant_ok`` = (all 23,423 coefficients joined AND max_abs_err <=
     1e-9) — the rows-only driver gate cannot pass on garbage betas."""
-    df = electricity_df(spark, signals=signals, years=years)
-    df = ser.leap_trim(df, 48 * 365)
-    df = ser.normalize_yearly_mean(df)
-    df = resample_per_year(df, 48, 64, 365)
+    df = _e1_signal(spark, signals, years)
 
     # keyed by applicationId, not id(spark): id() can be recycled after a
     # stopped session is GC'd, which would hand back a broadcast bound to a
