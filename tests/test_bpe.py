@@ -101,3 +101,36 @@ def test_encode_counts_and_monotonicity(spark, corpus):
     assert sum(r.n_tokens for r in enc.values()) < sum(
         r.n_tokens for r in raw.values()
     )
+
+
+def test_superseded_rounds_are_released(spark, rdds_left):
+    """Each checkpointed round is released once the next round's pair
+    count has materialized its successor, so 40 merges (8 checkpointed
+    rounds) leave no more persistent RDDs than 10 do: the initial word
+    table, the newest round and the one it superseded."""
+    import random
+
+    from wavelet_decomposition_spark.operators.bpe import (
+        bpe_train,
+        bpe_train_reference,
+        word_counts,
+    )
+
+    rng = random.Random(7)
+    docs = spark.createDataFrame(
+        [
+            (i, " ".join(
+                "".join(rng.choice("abcdefgh") for _ in range(rng.randint(3, 8)))
+                for _ in range(12)
+            ))
+            for i in range(200)
+        ],
+        "doc_id long, text string",
+    )
+    wc = {r["word"]: r["count"] for r in word_counts(docs).collect()}
+    for n in (10, 40):
+        fit = {}
+        left = rdds_left(lambda: fit.update(bpe_train(docs, n_merges=n)))
+        assert left <= 3
+        assert len(fit["merges"]) == n
+        assert fit["merges"] == bpe_train_reference(wc, n, 2)

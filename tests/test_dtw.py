@@ -104,3 +104,39 @@ def test_unequal_lengths_euclid_nan(spark):
     assert np.isnan(out["euclid"].iloc[0])
     # band auto-widens to |n-m| so the end cell is reachable
     assert np.isfinite(out["dtw"].iloc[0])
+
+
+def test_hourly_grid_is_shared_by_every_type(spark, tmp_path):
+    """dtw_pairs and holt_winters read the zero-filled hourly counts of
+    ``_hourly_counts_filled``: every event type gets the same grid from
+    the first to the last event hour of any type (so equal lengths), 0 in
+    each of its empty hours, and its own event count in total."""
+    from datetime import datetime, timedelta
+
+    from wavelet_decomposition_spark.queries.timeseries import (
+        _hourly_counts_filled,
+    )
+
+    def at(h, m=0):
+        return datetime(2024, 1, 1) + timedelta(hours=h, minutes=m)
+
+    # "a" has no event at hours 2 and 4, "b" none at hours 0 and 3
+    events = [("a", at(0, 5)), ("a", at(0, 40)), ("a", at(1)), ("a", at(3, 59)),
+              ("b", at(1, 30)), ("b", at(2)), ("b", at(4, 10))]
+    pd.DataFrame({
+        "event_id": range(len(events)),
+        "ts": [t for _, t in events],
+        "user_id": 1,
+        "event_type": [e for e, _ in events],
+        "value": 1.0,
+        "props": "",
+    }).to_parquet(tmp_path / "events.parquet", coerce_timestamps="us")
+    filled, lo, hi = _hourly_counts_filled(spark, str(tmp_path))
+    assert (lo, hi) == (at(0), at(4))
+    n = (hi - lo) // timedelta(hours=1) + 1
+    got = {(r.series_id, r.bucket_ts): r.v for r in filled.collect()}
+    assert got == {
+        **{("a", at(h)): v for h, v in enumerate([2, 1, 0, 1, 0])},
+        **{("b", at(h)): v for h, v in enumerate([0, 1, 1, 0, 1])},
+    }
+    assert len(got) == 2 * n

@@ -1,4 +1,5 @@
-"""Two rules against unused code in the package.
+"""Two rules against unused code in the package, and one against copied
+code in its query layer.
 
 No single-valued options: every parameter of a package function, with or
 without a default, takes at least two different values over the calls in
@@ -45,7 +46,13 @@ a class, a name whose module has no such function) resolves by name: it
 reaches every module-level function or class of that name. An ``ORACLES``
 entry is a name, or ``module::name`` for one module's function.
 
-Run ``python tests/test_param_audit.py`` to list the findings of both
+No copied query code: no two function bodies under ``queries/`` share a
+run of ``RUN`` consecutive lines. A body's lines are its non-blank,
+non-comment source lines, stripped, without its docstring; the lines of a
+nested function belong to that function alone. A derived series or column
+set two queries need is built once, in a helper both call.
+
+Run ``python tests/test_param_audit.py`` to list the findings of all three
 rules."""
 
 import ast
@@ -74,6 +81,9 @@ ORACLES = {"best_translation", "calc_epn", "dictionary_width", "dwt",
 
 # (callee attribute, index of the function argument) of the call indirections
 INDIRECT = {"call": 1, "submit": 0}
+# the shortest run of lines two query-layer bodies may not share; the
+# 6-line per-(type, hour) groupBy prefix of two hourly bases stays below it
+RUN = 7
 
 
 def _py_files(top):
@@ -386,6 +396,41 @@ def unreached(root=ROOT, oracles=ORACLES):
             + [f"oracle::{o}" for o in sorted(oracles) if not read & set(resolve(named[o]))])
 
 
+def _body_lines(fn, lines):
+    """The stripped non-blank, non-comment source lines of ``fn``'s body,
+    without its docstring and the lines of the functions nested in it."""
+    body = fn.body[1:] if ast.get_docstring(fn) is not None else fn.body
+    if not body:
+        return []
+    nested = set()
+    for n in _functions(fn):
+        if n is not fn:
+            start = min([d.lineno for d in n.decorator_list] + [n.lineno])
+            nested.update(range(start, n.end_lineno + 1))
+    return [text for i in range(body[0].lineno, fn.end_lineno + 1)
+            if i not in nested and (text := lines[i - 1].strip())
+            and not text.startswith("#")]
+
+
+def duplicate_bodies(root=ROOT):
+    """Each set of two or more function bodies under ``queries/`` that
+    share a run of ``RUN`` consecutive lines, as their sorted
+    ``module::function`` names joined by `` / ``."""
+    top = os.path.join(root, PACKAGE, "queries")
+    where = {}
+    for path in _py_files(top):
+        rel = os.path.relpath(path, top)
+        with open(path, encoding="utf-8") as fh:
+            src = fh.read()
+        lines = src.splitlines()
+        for fn in _functions(ast.parse(src, path)):
+            body = _body_lines(fn, lines)
+            for i in range(len(body) - RUN + 1):
+                where.setdefault(tuple(body[i:i + RUN]), set()).add((rel, fn.lineno, fn.name))
+    return sorted({" / ".join(sorted(f"{rel}::{name}" for rel, _, name in fns))
+                   for fns in where.values() if len(fns) > 1})
+
+
 def test_every_parameter_takes_two_values():
     single = findings()
     assert not single, (f"{len(single)} parameters take one value at every call; "
@@ -396,6 +441,12 @@ def test_package_code_is_reached_or_an_oracle():
     found = unreached()
     assert not found, (f"{len(found)} unreached or unread; delete the code no program "
                        "path reaches, or name the test oracle:\n" + "\n".join(found))
+
+
+def test_query_bodies_share_no_run_of_lines():
+    found = duplicate_bodies()
+    assert not found, (f"{len(found)} sets of query-layer bodies share a run of {RUN} "
+                       "lines; build the shared part once in a helper:\n" + "\n".join(found))
 
 
 def _plant(tmp_path, files, rule=findings):
@@ -584,6 +635,39 @@ def test_reach_oracle_no_test_reads_is_flagged(tmp_path):
     }, _reach(("ref", "gone")))
     assert got == ["oracle::gone", "oracle::ref"]
 
+
+QMOD = f"{PACKAGE}/queries/a.py"
+# a 7-line run: the copy two bodies may not share
+COPY = "".join(f"    x{i} = {i}\n" for i in range(7))
+
+
+def test_copy_seven_line_run_in_two_bodies_is_flagged(tmp_path):
+    got = _plant(tmp_path, {
+        QMOD: f"def f():\n    a = 1\n{COPY}    return a\n",
+        f"{PACKAGE}/queries/b.py": f"def g():\n{COPY}    return 2\n",
+    }, duplicate_bodies)
+    assert got == ["a.py::f / b.py::g"]
+
+
+def test_copy_six_line_run_and_docstring_are_not_flagged(tmp_path):
+    doc = '    """One docstring\n    both bodies\n    carry."""\n'
+    six = "".join(COPY.splitlines(True)[:6])
+    got = _plant(tmp_path, {
+        QMOD: (f"def f():\n{doc}{six}    return 1\n"
+               f"def g():\n{doc}    # a comment\n\n{six}    return 2\n"),
+    }, duplicate_bodies)
+    assert got == []
+
+
+def test_copy_nested_def_lines_count_only_in_the_nested_def(tmp_path):
+    got = _plant(tmp_path, {
+        QMOD: ("def outer():\n    a = 1\n    def inner():\n"
+               + COPY.replace("    ", "        ") + "        return 0\n"
+               "    return inner\n"
+               f"def other():\n{COPY}    return 2\n"),
+    }, duplicate_bodies)
+    assert got == ["a.py::inner / a.py::other"]
+
 if __name__ == "__main__":
     fns = package_functions(ROOT)
     n = sum(len(p) for _, _, p in fns)
@@ -595,4 +679,8 @@ if __name__ == "__main__":
     found = unreached()
     print("\n".join(found))
     print(f"{len(found)} unreached or unread ({len(ORACLES)} oracles)", file=sys.stderr)
-    sys.exit(1 if single or found else 0)
+    copies = duplicate_bodies()
+    print("\n".join(copies))
+    print(f"{len(copies)} sets of query-layer bodies share a run of {RUN} lines",
+          file=sys.stderr)
+    sys.exit(1 if single or found or copies else 0)

@@ -14,8 +14,9 @@ collected row
 (the argmax pair under a total order: max count, then lexicographic —
 engine-independent determinism), (3) one Arrow pass applying the merge
 to the symbol arrays. ``localCheckpoint`` every few rounds truncates
-the iterative lineage (the components.py discipline). The corpus is
-touched exactly once.
+the iterative lineage (the components.py discipline), and each
+checkpointed round is released once its successor is materialized. The
+corpus is touched exactly once.
 
 Exact bookkeeping invariant: applying merge (a, b) with pair count f
 shrinks the total weighted symbol count by EXACTLY f (every occurrence
@@ -39,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.session import worker_kernel
+from ..plans.session import release_checkpoint, worker_kernel
 from .textstats import TOKEN_REGEX
 
 
@@ -190,6 +191,10 @@ def bpe_train(
     # checkpointed vocab; they ride into the NEXT round's counting pass
     # (one fused Arrow stage) and are materialized every 5 rounds
     pending: list[tuple[str, str]] = []
+    # the checkpointed round the newest one superseded: released once the
+    # next pair count has materialized its successor (never vocab0, which
+    # the caller gets back)
+    stale = None
     for _r in range(n_merges):
         top = (
             _pair_counts(vocab, tuple(pending))
@@ -199,12 +204,16 @@ def bpe_train(
             .limit(1)
             .collect()
         )
+        if stale is not None:
+            release_checkpoint(stale)
+            stale = None
         if not top or top[0]["pair_count"] < 2:
             break
         a, b, f = top[0]["left"], top[0]["right"], int(top[0]["pair_count"])
         merges.append((a, b, f))
         pending.append((a, b))
         if len(pending) >= 5:
+            stale = vocab if vocab is not vocab0 else None
             vocab = _apply_merges(vocab, tuple(pending)).localCheckpoint(
                 eager=False
             )

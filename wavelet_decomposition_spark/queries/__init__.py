@@ -25,6 +25,7 @@ import tempfile
 from collections.abc import Callable
 from contextlib import contextmanager
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from wavelet_decomposition_spark.plans.session import ship_package
@@ -103,6 +104,42 @@ def scratch_dir(name: str) -> str:
 
 def _events(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/events.parquet")
+
+
+def _cents():
+    """``value`` quantized to integer cents: sums of these are exact and
+    order-free, so Spark and the DuckDB oracle add them bit-identically."""
+    return F.round(F.col("value") * 100).cast("bigint")
+
+
+def _events_1m(spark, sf_dir):
+    """The 1m tier of the events: per-(event_type, minute) ``turns`` and
+    unrounded ``sum_value``."""
+    return (
+        _events(spark, sf_dir)
+        .groupBy(
+            "event_type", F.date_trunc("minute", F.col("ts")).alias("bucket_ts")
+        )
+        .agg(F.count(F.lit(1)).alias("turns"), F.sum("value").alias("sum_value"))
+    )
+
+
+def _cents_counter(spark, sf_dir):
+    """A cumulative counter with genuine resets, ``(series_id, ts, v)``:
+    per event type, the running total of each timestamp's summed cents,
+    modulo 1e6."""
+    w = (
+        Window.partitionBy("series_id")
+        .orderBy("ts")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return (
+        _events(spark, sf_dir)
+        .groupBy(F.col("event_type").alias("series_id"), "ts")
+        .agg(F.sum(_cents()).alias("_c"))
+        .withColumn("v", (F.sum("_c").over(w) % 1_000_000).cast("double"))
+        .drop("_c")
+    )
 
 
 def _docs(spark, sf_dir):

@@ -41,8 +41,10 @@ from wavelet_decomposition_spark.operators.sketch_tiers import (
     sketch_tier,
 )
 from wavelet_decomposition_spark.queries import (
+    _cents,
     _docs,
     _events,
+    _events_1m,
     query,
     scratch_dir,
 )
@@ -71,14 +73,7 @@ def _q_tier_routed_read(spark, sf_dir):
     if tier != "1h" or tier_unbounded != "1h":  # pin the routing decisions
         raise RuntimeError(f"router regression: {tier}/{tier_unbounded}")
 
-    one_m = (
-        _events(spark, sf_dir)
-        .groupBy(
-            "event_type", F.date_trunc("minute", F.col("ts")).alias("bucket_ts")
-        )
-        .agg(F.count(F.lit(1)).alias("turns"), F.sum("value").alias("sum_value"))
-    )
-    one_h = one_m.groupBy(
+    one_h = _events_1m(spark, sf_dir).groupBy(
         "event_type", F.date_trunc("hour", F.col("bucket_ts")).alias("bucket_ts")
     ).agg(F.sum("turns").alias("turns"), F.sum("sum_value").alias("sum_value"))
     base = scratch_dir(f"tier_store_{os.path.basename(sf_dir.rstrip('/'))}")
@@ -119,14 +114,7 @@ def _q_compact_tier(spark, sf_dir):
     tag = os.path.basename(sf_dir.rstrip("/"))
     src = scratch_dir(f"compact_src_{tag}")
     dst = scratch_dir(f"compact_dst_{tag}")
-    one_m = (
-        _events(spark, sf_dir)
-        .groupBy(
-            "event_type", F.date_trunc("minute", F.col("ts")).alias("bucket_ts")
-        )
-        .agg(F.count(F.lit(1)).alias("turns"), F.sum("value").alias("sum_value"))
-        .withColumn("day", F.to_date("bucket_ts"))
-    )
+    one_m = _events_1m(spark, sf_dir).withColumn("day", F.to_date("bucket_ts"))
     one_m.repartition(16).write.mode("overwrite").partitionBy("day").parquet(src)
     out = compact_partitioned(spark, src, dst, target_rows_per_file=2000)
     return out.select(
@@ -438,7 +426,7 @@ def _zx_zy(spark, sf_dir):
         F.floor(F.unix_timestamp("ts") / F.lit(3600))
         .cast("bigint")
         .alias("x"),
-        F.round(F.col("value") * 100).cast("bigint").alias("y"),
+        _cents().alias("y"),
     )
 
 
@@ -549,7 +537,7 @@ def _q_merge_upsert(spark, sf_dir):
     """
     ev = _events(spark, sf_dir).select(
         "event_id",
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+        _cents().alias("cents"),
     )
     target = ev.where(F.col("event_id") % 10 != 0)
     source = (
@@ -644,12 +632,12 @@ def _q_snapshot_diff(spark, sf_dir):
     a = ev.select(
         "event_id",
         F.col("value").alias("_va"),
-        F.round(F.col("value") * 100).cast("bigint").alias("_ca"),
+        _cents().alias("_ca"),
     )
     b = new.select(
         "event_id",
         F.col("value").alias("_vb"),
-        F.round(F.col("value") * 100).cast("bigint").alias("_cb"),
+        _cents().alias("_cb"),
     )
     j = a.join(b, "event_id", "full_outer")
     cls = (

@@ -23,7 +23,12 @@ from wavelet_decomposition_spark.operators.sketch_tiers import (
     hll_rsd,
     sliding_distinct_sketch,
 )
-from wavelet_decomposition_spark.queries import _events, query
+from wavelet_decomposition_spark.queries import (
+    _cents,
+    _events,
+    _events_1m,
+    query,
+)
 
 
 @query(bench=True)
@@ -47,15 +52,8 @@ def _q_activity_1m(spark, sf_dir):
 def _q_rollup_1h(spark, sf_dir):
     """1m -> 1h cascade (continuous-aggregate composition; oracle aggregates
     straight from raw — equality IS the rollup-correctness statement)."""
-    one_m = (
-        _events(spark, sf_dir)
-        .groupBy(
-            "event_type", F.date_trunc("minute", F.col("ts")).alias("bucket_ts")
-        )
-        .agg(F.count(F.lit(1)).alias("turns"), F.sum("value").alias("sum_value"))
-    )
     return (
-        one_m.groupBy(
+        _events_1m(spark, sf_dir).groupBy(
             "event_type", F.date_trunc("hour", F.col("bucket_ts")).alias("bucket_ts")
         )
         .agg(
@@ -274,6 +272,21 @@ def _q_nation_revenue(spark, sf_dir):
     )
 
 
+def _lineitem_rev4(spark, sf_dir, where):
+    """``(l_orderkey, _rev4)`` of the lineitems ``where`` holds for, with
+    the revenue ``price * (1 - discount)`` in exact integer 1e-4 units."""
+    return (
+        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        .where(where)
+        .select(
+            "l_orderkey",
+            F.round(
+                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10_000
+            ).cast("bigint").alias("_rev4"),
+        )
+    )
+
+
 @query(bench=True)
 def _q_shipping_priority(spark, sf_dir):
     """TPC-H Q3 shape (shipping priority): customer segment filter ->
@@ -295,16 +308,7 @@ def _q_shipping_priority(spark, sf_dir):
         .where(F.col("o_orderdate") < cutoff)
         .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
     )
-    li = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .where(F.col("l_shipdate") > cutoff)
-        .select(
-            "l_orderkey",
-            F.round(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10_000
-            ).cast("bigint").alias("_rev4"),
-        )
-    )
+    li = _lineitem_rev4(spark, sf_dir, F.col("l_shipdate") > cutoff)
     return (
         # cust scales with sf (even segment-filtered) — broadcast is AQE's
         # runtime call from the measured size, not a pin (see nation_revenue)
@@ -331,16 +335,7 @@ def _q_returned_customers(spark, sf_dir):
         .where((F.col("o_orderdate") >= lo) & (F.col("o_orderdate") < hi))
         .select("o_orderkey", "o_custkey")
     )
-    li = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .where(F.col("l_returnflag") == "R")
-        .select(
-            "l_orderkey",
-            F.round(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10_000
-            ).cast("bigint").alias("_rev4"),
-        )
-    )
+    li = _lineitem_rev4(spark, sf_dir, F.col("l_returnflag") == "R")
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
         "c_custkey", "c_name", "c_acctbal", "c_nationkey"
     )
@@ -379,7 +374,7 @@ def _q_feature_binning(spark, sf_dir):
     ev = _events(spark, sf_dir).select(
         "event_type",
         "event_id",
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+        _cents().alias("cents"),
     )
     w = Window.partitionBy("event_type").orderBy("cents", "event_id")
     return (
@@ -411,9 +406,7 @@ def _q_topn_others(spark, sf_dir):
         _events(spark, sf_dir)
         .groupBy("event_type")
         .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias(
-                "cents"
-            ),
+            F.sum(_cents()).alias("cents"),
             F.count(F.lit(1)).alias("n"),
         )
     )
@@ -488,14 +481,10 @@ def _q_value_histogram(spark, sf_dir):
     )
 
 
-@query(bench=True)
-def _q_user_profile(spark, sf_dir):
-    """Per-user lifetime profile: first/last seen, tenure, distinct
-    active days, event counts by class, exact integer-cents spend — the
-    LTV/engagement table every downstream model joins against. ONE hash
-    aggregate over events (conditional aggregation for the per-class
-    counts — no per-class scans), integer-exact money."""
-    ev = _events(spark, sf_dir)
+def _user_profile(ev):
+    """One row per user of the events ``ev``: first/last seen, tenure,
+    active days, event and per-class counts, and purchase spend in
+    integer cents, in one hash aggregate."""
     tenure_s = (
         F.unix_micros(F.max("ts").cast("timestamp"))
         - F.unix_micros(F.min("ts").cast("timestamp"))
@@ -515,10 +504,20 @@ def _q_user_profile(spark, sf_dir):
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.round(F.col("value") * 100).cast("bigint"),
+                _cents(),
             ).otherwise(F.lit(0).cast("bigint"))
         ).alias("spend_cents"),
     )
+
+
+@query(bench=True)
+def _q_user_profile(spark, sf_dir):
+    """Per-user lifetime profile: first/last seen, tenure, distinct
+    active days, event counts by class, exact integer-cents spend — the
+    LTV/engagement table every downstream model joins against. ONE hash
+    aggregate over events (conditional aggregation for the per-class
+    counts — no per-class scans), integer-exact money."""
+    return _user_profile(_events(spark, sf_dir))
 
 
 @query(bench=True, side_effect=True)
@@ -719,7 +718,7 @@ def _q_cube_profile(spark, sf_dir):
     ev = _events(spark, sf_dir).select(
         "event_type",
         F.dayofweek("ts").alias("dow"),
-        F.round(F.col("value") * 100).cast("bigint").alias("_cents"),
+        _cents().alias("_cents"),
     )
     return (
         ev.cube("event_type", "dow")
@@ -748,7 +747,7 @@ def _q_hopping_window(spark, sf_dir):
     ev = _events(spark, sf_dir).select(
         "ts",
         "event_type",
-        F.round(F.col("value") * 100).cast("bigint").alias("_cents"),
+        _cents().alias("_cents"),
     )
     return (
         ev.groupBy(
@@ -888,7 +887,7 @@ def _q_weekly_profile(spark, sf_dir):
         "event_type",
         F.dayofweek("ts").alias("dow"),
         F.hour("ts").alias("hod"),
-        F.round(F.col("value") * 100).cast("bigint").alias("_cents"),
+        _cents().alias("_cents"),
     )
     cells = ev.groupBy("event_type", "dow", "hod").agg(
         F.count(F.lit(1)).alias("n"),
@@ -983,9 +982,7 @@ def _q_sessionize_skewed(spark, sf_dir):
     sessions' big sums stay order-free and bit-identical cross-engine.
     tests/test_plans.py pins the skew-robustness plan properties (AQE
     skew-split on the shuffle, map-side partial agg)."""
-    ev = _skewed_events(spark, sf_dir).withColumn(
-        "value", F.round(F.col("value") * 100).cast("bigint")
-    )
+    ev = _skewed_events(spark, sf_dir).withColumn("value", _cents())
     out = sessionize(
         ev, gap="30 minutes", group_col="user_id",
         order_col="event_id", value_col="value",
@@ -1001,30 +998,7 @@ def _q_user_profile_skewed(spark, sf_dir):
     pre-combined inside every input partition before the ONE exchange, so
     the reducer receives at most n_partitions rows for it (asserted on
     the plan in tests/test_plans.py)."""
-    ev = _skewed_events(spark, sf_dir)
-    tenure_s = (
-        F.unix_micros(F.max("ts").cast("timestamp"))
-        - F.unix_micros(F.min("ts").cast("timestamp"))
-    ) / F.lit(1_000_000.0)
-    return ev.groupBy("user_id").agg(
-        F.min("ts").alias("first_seen"),
-        F.max("ts").alias("last_seen"),
-        F.round(tenure_s, 6).alias("tenure_s"),
-        F.countDistinct(F.to_date("ts")).alias("active_days"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-        ).cast("bigint").alias("n_purchases"),
-        F.sum(
-            F.when(F.col("event_type") == "error", 1).otherwise(0)
-        ).cast("bigint").alias("n_errors"),
-        F.sum(
-            F.when(
-                F.col("event_type") == "purchase",
-                F.round(F.col("value") * 100).cast("bigint"),
-            ).otherwise(F.lit(0).cast("bigint"))
-        ).alias("spend_cents"),
-    )
+    return _user_profile(_skewed_events(spark, sf_dir))
 
 
 @query(bench=True)
@@ -1042,7 +1016,7 @@ def _q_winsorize_values(spark, sf_dir):
     ev = _events(spark, sf_dir).select(
         "event_type",
         "event_id",
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+        _cents().alias("cents"),
     )
     return winsorize(
         ev, value_col="cents", group_col="event_type", id_col="event_id"

@@ -28,6 +28,8 @@ from wavelet_decomposition_spark.streaming.stateful import (
     stream_sessionize,
 )
 from wavelet_decomposition_spark.queries import (
+    _cents,
+    _cents_counter,
     _events,
     _hourly_series,
     query,
@@ -155,19 +157,8 @@ def _q_stream_counter_rate_drain(spark, sf_dir):
     (series, bucket) row must match the batch operator over the union
     input EXACTLY (integer arithmetic end to end) — n_mismatch == 0 and
     full coverage is ``invariant_ok``."""
-    w = (
-        Window.partitionBy("series_id")
-        .orderBy("ts")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    counter = (
-        _events(spark, sf_dir)
-        .groupBy(F.col("event_type").alias("series_id"), "ts")
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("_c")
-        )
-        .withColumn("v", (F.sum("_c").over(w) % 1_000_000).cast("double"))
-        .select("series_id", F.col("ts").cast("timestamp").alias("ts"), "v")
+    counter = _cents_counter(spark, sf_dir).select(
+        "series_id", F.col("ts").cast("timestamp").alias("ts"), "v"
     )
     in_p, out_p, ck = _drain_paths("stream_counter_rate_drain")
     schema = "series_id string, ts timestamp, v double"
@@ -325,7 +316,7 @@ def _q_stream_ohlc_drain(spark, sf_dir):
     samples = _events(spark, sf_dir).select(
         F.col("event_type").alias("series_id"),
         "ts",
-        F.round(F.col("value") * 100).cast("bigint").alias("v"),
+        _cents().alias("v"),
     )
     samples.write.mode("overwrite").parquet(in_path)
     await_drain(stream_ohlc_1h(spark, in_path, out_path, ckpt, schema), 300)

@@ -48,7 +48,13 @@ from wavelet_decomposition_spark.operators.tsfeatures import (
     seasonal_decompose,
     theil_sen,
 )
-from wavelet_decomposition_spark.queries import _events, _hourly_series, query
+from wavelet_decomposition_spark.queries import (
+    _cents,
+    _cents_counter,
+    _events,
+    _hourly_series,
+    query,
+)
 
 
 @query()
@@ -156,22 +162,11 @@ def _q_response_latency(spark, sf_dir):
     )
 
 
-@query(bench=True)
-def _q_dtw_pairs(spark, sf_dir):
-    """Banded dynamic-time-warping distances between the per-type hourly
-    activity series (operators/dtw.py) — phase-robust series similarity
-    next to the Pearson corr_matrix (a burst an hour late is 'near' under
-    DTW, 'far' under Euclid). Series are zero-filled onto one shared
-    hourly grid (equal lengths by construction), packed to arrays in one
-    hash aggregate, pairs enumerated JVM-side (transform/flatten/explode —
-    no join, no nested-loop plan), scored by an anti-diagonal-vectorized
-    Arrow kernel at Sakoe-Chiba radius 24 h and 72 h in one pass.
-    Rows-only, SELF-VERIFYING with DTW's provable properties computed
-    in-query: ``self_ok`` = dtw(x,x) == 0 on the identity pairs;
-    ``bound_ok`` = dtw <= Euclid (the diagonal path is admissible inside
-    any band); ``band_ok`` = the 72 h-band distance <= the 24 h-band
-    distance (wider band = superset of warping paths). A kernel that
-    mis-scores or mis-aligns cannot satisfy all three."""
+def _hourly_counts_filled(spark, sf_dir):
+    """``(filled, lo, hi)``: every event type's hourly event count as
+    ``(series_id, bucket_ts, v)``, zero-filled onto one shared hourly
+    grid from ``lo`` to ``hi`` (the first and last hour with any event),
+    so every type's series has the same length."""
     counts = (
         _events(spark, sf_dir)
         .groupBy(
@@ -199,6 +194,26 @@ def _q_dtw_pairs(spark, sf_dir):
         "bucket_ts",
         F.coalesce(F.col("n"), F.lit(0)).cast("double").alias("v"),
     )
+    return filled, lo, hi
+
+
+@query(bench=True)
+def _q_dtw_pairs(spark, sf_dir):
+    """Banded dynamic-time-warping distances between the per-type hourly
+    activity series (operators/dtw.py) — phase-robust series similarity
+    next to the Pearson corr_matrix (a burst an hour late is 'near' under
+    DTW, 'far' under Euclid). Series are zero-filled onto one shared
+    hourly grid (equal lengths by construction), packed to arrays in one
+    hash aggregate, pairs enumerated JVM-side (transform/flatten/explode —
+    no join, no nested-loop plan), scored by an anti-diagonal-vectorized
+    Arrow kernel at Sakoe-Chiba radius 24 h and 72 h in one pass.
+    Rows-only, SELF-VERIFYING with DTW's provable properties computed
+    in-query: ``self_ok`` = dtw(x,x) == 0 on the identity pairs;
+    ``bound_ok`` = dtw <= Euclid (the diagonal path is admissible inside
+    any band); ``band_ok`` = the 72 h-band distance <= the 24 h-band
+    distance (wider band = superset of warping paths). A kernel that
+    mis-scores or mis-aligns cannot satisfy all three."""
+    filled, _, _ = _hourly_counts_filled(spark, sf_dir)
     out = dtw_allpairs(
         filled, "series_id", "bucket_ts",
         radius=24, wide_radius=72, include_self=True,
@@ -347,11 +362,7 @@ def _q_time_weighted_avg(spark, sf_dir):
     samples = (
         _events(spark, sf_dir)
         .groupBy(F.col("event_type").alias("series_id"), "ts")
-        .agg(
-            F.max(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("double")
-            .alias("v")
-        )
+        .agg(F.max(_cents()).cast("double").alias("v"))
     )
     out = time_weighted_avg(samples)
     return out.select(
@@ -372,21 +383,7 @@ def _q_counter_rate(spark, sf_dir):
     exercised on real data. All arithmetic is integer-exact in both
     engines; only the final rate division is floating (one deterministic
     op)."""
-    w = (
-        Window.partitionBy("series_id")
-        .orderBy("ts")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    counter = (
-        _events(spark, sf_dir)
-        .groupBy(F.col("event_type").alias("series_id"), "ts")
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("_c")
-        )
-        .withColumn("v", (F.sum("_c").over(w) % 1_000_000).cast("double"))
-        .drop("_c")
-    )
-    out = counter_rate(counter)
+    out = counter_rate(_cents_counter(spark, sf_dir))
     return out.select(
         "series_id",
         "bucket_ts",
@@ -435,7 +432,7 @@ def _q_ohlc_bars(spark, sf_dir):
     samples = _events(spark, sf_dir).select(
         F.col("event_type").alias("series_id"),
         "ts",
-        F.round(F.col("value") * 100).cast("bigint").alias("v"),
+        _cents().alias("v"),
     )
     out = ohlc_bars(samples, volume_col="v")
     return out.select(
@@ -587,6 +584,30 @@ def _q_forecast_backtest(spark, sf_dir):
     )
 
 
+def _hourly_scaled_mean(spark, sf_dir, scale):
+    """Per-(event_type, hour) mean value as the exact integer
+    ``vm = floor(sum of cents * scale / events)``, as
+    ``(series_id, bucket_ts, vm)``."""
+    return (
+        _events(spark, sf_dir)
+        .groupBy(
+            F.col("event_type").alias("series_id"),
+            F.date_trunc("hour", F.col("ts")).alias("bucket_ts"),
+        )
+        .agg(
+            F.sum(_cents()).alias("_cents"),
+            F.count(F.lit(1)).alias("_nev"),
+        )
+        .select(
+            "series_id",
+            "bucket_ts",
+            F.floor(
+                F.col("_cents").cast("double") * scale / F.col("_nev")
+            ).alias("vm"),
+        )
+    )
+
+
 @query(bench=True)
 def _q_sax_words(spark, sf_dir):
     """PAA + SAX symbolic downsampling (operators/sax.py — Lin et al.
@@ -606,26 +627,7 @@ def _q_sax_words(spark, sf_dir):
     bit-identical cross-engine; the breakpoints are irrational N(0,1)
     quantiles a quotient of integers never lands on exactly.
     """
-    hr = (
-        _events(spark, sf_dir)
-        .groupBy(
-            F.col("event_type").alias("series_id"),
-            F.date_trunc("hour", F.col("ts")).alias("bucket_ts"),
-        )
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias(
-                "_cents"
-            ),
-            F.count(F.lit(1)).alias("_nev"),
-        )
-        .select(
-            "series_id",
-            "bucket_ts",
-            F.floor(
-                F.col("_cents").cast("double") * 10.0 / F.col("_nev")
-            ).alias("vm"),
-        )
-    )
+    hr = _hourly_scaled_mean(spark, sf_dir, 10.0)
     return sax_words(
         hr, alphabet=5
     ).orderBy("series_id", "window_id")
@@ -641,26 +643,7 @@ def _q_sax_anomaly(spark, sf_dir):
     symbols, frequencies, and ranks alike. Same exact integer
     milli-unit pipeline as `sax_words`.
     """
-    hr = (
-        _events(spark, sf_dir)
-        .groupBy(
-            F.col("event_type").alias("series_id"),
-            F.date_trunc("hour", F.col("ts")).alias("bucket_ts"),
-        )
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias(
-                "_cents"
-            ),
-            F.count(F.lit(1)).alias("_nev"),
-        )
-        .select(
-            "series_id",
-            "bucket_ts",
-            F.floor(
-                F.col("_cents").cast("double") * 10.0 / F.col("_nev")
-            ).alias("vm"),
-        )
-    )
+    hr = _hourly_scaled_mean(spark, sf_dir, 10.0)
     return sax_rare_words(
         hr, k=2
     ).orderBy("series_id", "window_id")
@@ -682,33 +665,7 @@ def _q_holt_winters(spark, sf_dir):
     identity up to float round-trip; ``planted_n_ok`` = all 24 planted
     forecast rows actually exist (a dropped planted series cannot pass
     vacuously). ``finite_ok`` pins NaN/inf out of every output."""
-    counts = (
-        _events(spark, sf_dir)
-        .groupBy(
-            F.col("event_type").alias("series_id"),
-            F.date_trunc("hour", F.col("ts")).alias("bucket_ts"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    # bounded scalar collect: the global grid endpoints (2 timestamps)
-    lo, hi = counts.agg(F.min("bucket_ts"), F.max("bucket_ts")).first()
-    grid = (
-        counts.select("series_id")
-        .distinct()
-        .select(
-            "series_id",
-            F.explode(
-                F.sequence(
-                    F.lit(lo), F.lit(hi), F.expr("interval 1 hour")
-                )
-            ).alias("bucket_ts"),
-        )
-    )
-    filled = grid.join(counts, ["series_id", "bucket_ts"], "left").select(
-        "series_id",
-        "bucket_ts",
-        F.coalesce(F.col("n"), F.lit(0)).cast("double").alias("v"),
-    )
+    filled, lo, hi = _hourly_counts_filled(spark, sf_dir)
     planted = spark.range(1).select(
         F.posexplode(
             F.sequence(F.lit(lo), F.lit(hi), F.expr("interval 1 hour"))
@@ -770,26 +727,7 @@ def _q_ts_rolling(spark, sf_dir):
     # integer micro-units, then every windowed statistic is derived from
     # exact integer window sums via the SAME double operations in both
     # engines — bit-identical outputs, no rounding anywhere.
-    hr = (
-        _events(spark, sf_dir)
-        .groupBy(
-            F.col("event_type").alias("series_id"),
-            F.date_trunc("hour", F.col("ts")).alias("bucket_ts"),
-        )
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias(
-                "_cents"
-            ),
-            F.count(F.lit(1)).alias("_nev"),
-        )
-        .select(
-            "series_id",
-            "bucket_ts",
-            F.floor(
-                F.col("_cents").cast("double") * 10000.0 / F.col("_nev")
-            ).alias("vm"),
-        )
-    )
+    hr = _hourly_scaled_mean(spark, sf_dir, 10000.0)
     out = rolling_stats(hr, value_col="vm")
     # sample std from exact integer window sums (the operator's Welford
     # stddev is association-order-dependent across engines); Catalyst
@@ -1209,7 +1147,7 @@ def _q_hurst_rs(spark, sf_dir):
         .select(
             "event_type",
             F.date_trunc("hour", F.col("ts")).alias("bucket_ts"),
-            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+            _cents().alias("cents"),
         )
         .groupBy("event_type", "bucket_ts")
         .agg(

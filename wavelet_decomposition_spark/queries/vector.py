@@ -127,6 +127,17 @@ def _q_hybrid_search_rrf(spark, sf_dir):
     )
 
 
+def _quantized_embeddings(spark, sf_dir):
+    """The embeddings corpus ``(vec_id, embedding)`` in integer
+    micro-units (``kmeans.quantized``), cached: each caller fits it
+    twice."""
+    return quantized(
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+            "vec_id", "embedding"
+        )
+    ).cache()
+
+
 @query(bench=True)
 def _q_kmeans_clusters(spark, sf_dir):
     """Distributed Lloyd's k-means over the embeddings corpus
@@ -156,11 +167,7 @@ def _q_kmeans_clusters(spark, sf_dir):
     batch, one k*dim hash aggregate, one bounded k*dim collect. The
     corpus never shuffles and never reaches the driver.
     """
-    emb = quantized(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-            "vec_id", "embedding"
-        )
-    ).cache()
+    emb = _quantized_embeddings(spark, sf_dir)
     # the two fits are independent by construction (the refit-identical
     # invariant compares them) — run them as concurrent driver threads
     # (guide §2.6): each fit's Lloyd rounds are scheduling-latency-bound
@@ -229,11 +236,7 @@ def _q_pca_embeddings(spark, sf_dir):
     Output: the top 16 components' spectrum (eigenvalue + explained
     variance ratio per component).
     """
-    emb = quantized(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-            "vec_id", "embedding"
-        )
-    ).cache()
+    emb = _quantized_embeddings(spark, sf_dir)
     # independent fits (the refit invariant compares them) — overlap
     # them on driver threads, guide §2.6
     with ThreadPoolExecutor(max_workers=1) as _pool:

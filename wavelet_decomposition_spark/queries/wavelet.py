@@ -63,18 +63,21 @@ def _with_parseval(spectrum, tier, *cols):
     )
 
 
-@query(bench=True, designed_bnl=True)
-def _q_epn_thresholds(spark, sf_dir):
-    """A6 — EPN analytics via the engine operator, fed lineitem prices as
-    coefficients (scale_idx = l_linenumber - 1)."""
+def _lineitem_betas(spark, sf_dir):
+    """Lineitem prices as one series' coefficients: ``beta`` =
+    l_extendedprice at ``scale_idx`` = l_linenumber - 1."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    betas = li.select(
+    return li.select(
         F.lit("li").alias("series_id"),
         (F.col("l_linenumber") - 1).cast("int").alias("scale_idx"),
         F.col("l_extendedprice").alias("beta"),
     )
-    out = epn(spark, betas, [90.0], n_years=1)
-    return out.select(
+
+
+def _epn_rounded():
+    """The six ``epn`` outputs per scale, rounded to 6 dp for the
+    cross-engine compare."""
+    return (
         "scale_idx",
         "satisfaction",
         F.round("pmax", 6).alias("pmax"),
@@ -84,10 +87,19 @@ def _q_epn_thresholds(spark, sf_dir):
         # serv = emax * n is O(1e9); oracle-compare it in scaled millions so
         # the 6-decimal rounding absorbs float reassociation (~1e-2 abs)
         # while still pinning all meaningful digits — all six calc_EPN.py
-        # outputs are now DuckDB-checked (exact-value pytest oracle remains
+        # outputs are DuckDB-checked (exact-value pytest oracle remains
         # in tests/test_epn.py)
         F.round(F.col("serv") / 1e6, 6).alias("serv_m"),
     )
+
+
+@query(bench=True, designed_bnl=True)
+def _q_epn_thresholds(spark, sf_dir):
+    """A6 — EPN analytics via the engine operator, fed lineitem prices as
+    coefficients (scale_idx = l_linenumber - 1)."""
+    betas = _lineitem_betas(spark, sf_dir)
+    out = epn(spark, betas, [90.0], n_years=1)
+    return out.select(*_epn_rounded())
 
 
 @query()
@@ -103,12 +115,7 @@ def _q_epn_approx(spark, sf_dir):
     ``sketch_ok`` = (lo <= pmax <= hi) rides on every row. The exact form
     is the DuckDB-checked ``epn_thresholds`` above."""
     acc = 10_000
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    betas = li.select(
-        F.lit("li").alias("series_id"),
-        (F.col("l_linenumber") - 1).cast("int").alias("scale_idx"),
-        F.col("l_extendedprice").alias("beta"),
-    )
+    betas = _lineitem_betas(spark, sf_dir)
     out = epn(
         spark, betas, [90.0], n_years=1, exact=False, approx_accuracy=acc
     )
@@ -133,13 +140,7 @@ def _q_epn_approx(spark, sf_dir):
         .agg(F.min("ab").alias("lo"), F.max("ab").alias("hi"))
     )
     return out.join(F.broadcast(band), "scale_idx").select(
-        "scale_idx",
-        "satisfaction",
-        F.round("pmax", 6).alias("pmax"),
-        F.round("emax", 6).alias("emax"),
-        F.round("n", 6).alias("n_cycles"),
-        F.round("uf", 6).alias("uf"),
-        F.round(F.col("serv") / 1e6, 6).alias("serv_m"),
+        *_epn_rounded(),
         (
             (F.col("pmax") >= F.col("lo") - 1e-9)
             & (F.col("pmax") <= F.col("hi") + 1e-9)
