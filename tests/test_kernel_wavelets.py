@@ -82,8 +82,18 @@ def test_flat_to_scale_pos_bijection():
 
 
 def test_mother_dictionary_shapes():
-    for family, count in (("year", 1), ("week", 52), ("day", 365)):
-        M = wl.mother_dictionary(family, "square")
-        assert M.shape == (count, 23360)
+    for family, count, width in (
+        ("year", 1, 23360), ("week", 52, 7 * 64), ("day", 365, 64)
+    ):
+        got, pattern = wl.mother_dictionary(family, "square")
+        assert (got, pattern.shape) == (count, (width,))
         # square mothers are zero-sum
-        np.testing.assert_allclose(M.sum(axis=1), 0.0)
+        np.testing.assert_allclose(pattern.sum(), 0.0)
+
+
+def test_mother_dictionary_supports_must_fit_the_grid():
+    """52 week supports need 364 days: a 16-day grid has no room for them,
+    in either shape."""
+    for shape in ("square", "sine"):
+        with pytest.raises(ValueError, match="exceed"):
+            wl.mother_dictionary("week", shape, 16, 8)

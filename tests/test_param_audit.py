@@ -68,13 +68,13 @@ SKIP_DIRS = {".git", ".claude", "__pycache__", ".enginebench", ".pytest_cache"}
 EXEMPT_PARAMS = {"root", "scratch_dir"}
 # test oracles kept with their options
 EXEMPT_FUNCS = {"calc_epn", "dictionary_width", "scale_sizes", "column_floats",
-                "best_translation", "bpe_train_reference", "transcripts_pandas"}
+                "bpe_train_reference", "transcripts_pandas"}
 EXEMPT_MODULES = {os.path.join("io", "reference_data.py")}
 # test oracles: package code only tests call, kept as the reference a test
 # checks the program's code against (``module::name`` where the name is
 # defined in more than one module)
-ORACLES = {"best_translation", "calc_epn", "dictionary_width", "dwt",
-           "full_dtw_numpy", "gapfill_zero", "idwt", "imodwt", "iwpt_batch",
+ORACLES = {"calc_epn", "dictionary_width", "dwt", "full_dtw_numpy",
+           "gapfill_zero", "idwt", "imodwt", "iwpt_batch",
            "kernel/deltadelta.py::decode", "kernel/deltadelta.py::encode",
            "kernel/gorilla.py::decode", "kernel/gorilla.py::encode", "modwt",
            "scale_sizes", "transcripts_pandas"}

@@ -6,9 +6,11 @@ map-side partial aggregation, single-shuffle UDF stages) asserted against
 
 import os
 
+import numpy as np
 import pytest
 
 from tests import electricity_inputs as ei
+from tests.test_translation_spectrum import lsqr_residues
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF001_DIR", "/root/testdata/sf0.01")
 
@@ -146,6 +148,28 @@ def test_e1_reconstruction_invariants_hold(spark, queries, monkeypatch):
         rows = queries[name](spark, SF_DIR).select("invariant_ok").collect()
         assert len(rows) == 365 * 64, name
         assert all(r.invariant_ok for r in rows), name
+
+
+def test_e3_translation_queries_collect(spark, queries, monkeypatch):
+    """translation_search and translation_full, built and collected on the
+    inputs of ``test_invariant_queries_single_lineage``: one row per
+    circular shift of each family, and each family's minimum residue is
+    the LSQR brute force's residue at that shift. ``invariant_ok`` compares
+    the argmins with golden translations that belong to the reference
+    signal, so it is not asserted."""
+    from wavelet_decomposition_spark.queries import wavelet
+
+    _reference_inputs(monkeypatch)
+    sig = wavelet.load_prepared_signal("Consumption", 2012)
+    n = sig.size
+    search = queries["translation_search"](spark, SF_DIR).toPandas()
+    full = queries["translation_full"](spark, SF_DIR).toPandas()
+    assert (len(search), len(full)) == (n, 3 * n)
+    for fam, pdf in [("year", search), *full.groupby("family")]:
+        assert sorted(pdf["shift"]) == list(range(n)), fam
+        best = pdf.loc[pdf["residue"].idxmin()]
+        want = lsqr_residues(sig, fam, "square", 365, 64, [best["shift"]])
+        np.testing.assert_allclose(best["residue"], want, rtol=1e-12, err_msg=fam)
 
 
 def test_solve_stage_not_coalesced(spark, queries):

@@ -4,44 +4,90 @@ from pyspark.sql import functions as F
 from tests import electricity_inputs as ei
 from wavelet_decomposition_spark.io import reference_data as rd
 from wavelet_decomposition_spark.kernel import wavelets as wl
-from wavelet_decomposition_spark.kernel.lsqr import lsqr
+from wavelet_decomposition_spark.kernel.lsqr import beta_decomposition
 from wavelet_decomposition_spark.kernel.sparse import CSRMatrix
 from wavelet_decomposition_spark.operators import spectrum, translation
 
-# small synthetic config: 16 "days" x 8 points -> 128-point grid
-DPY, DPD = 16, 8
-N = DPY * DPD
+FAMILIES = ("day", "week", "year")
+SHAPES = ("square", "sine")
 
 
-def _toy_signal(true_shift=37):
-    base = np.zeros(N)
-    base[: N // 2] = 1.0
-    base[N // 2 :] = -1.0  # the year mother itself
-    sig = np.roll(base, true_shift) + 0.01 * np.sin(np.arange(N))
-    return sig
+def lsqr_residues(signal, family, shape, dpy, dpd, shifts):
+    """The reference's brute force (calc_translations.py:29-118): for each
+    circular shift, one damped LSQR fit of the family's mother set to the
+    rolled, centred signal, and its residue."""
+    count, pattern = wl.mother_dictionary(family, shape, dpy, dpd)
+    rows = np.arange(count * pattern.size)
+    A = CSRMatrix.from_coo(
+        rows, rows // pattern.size, np.tile(pattern, count), (signal.size, count)
+    )
+    out = []
+    for d in shifts:
+        rolled = np.roll(signal, -int(d))
+        rolled = rolled - rolled.mean()
+        resid = rolled - A.matvec(beta_decomposition(A, rolled))
+        out.append(float(resid @ resid))
+    return np.array(out)
+
+
+def _tie_class(shift, family, dpd, n):
+    """The orbit of exact ties ``shift`` belongs to: day mothers repeat
+    every ``dpd`` points, a half-period roll negates the year mother, and
+    the week mothers have no symmetry."""
+    return shift % {"day": dpd, "week": n, "year": n // 2}[family]
+
+
+def _sweep(spark, signal, family, shape, dpy, dpd):
+    """``residues_for_shifts``' residue at every shift, indexed by shift."""
+    pdf = translation.residues_for_shifts(
+        spark, signal, family, shape, dpy=dpy, dpd=dpd
+    ).toPandas()
+    assert sorted(pdf["shift"]) == list(range(signal.size))
+    return pdf.sort_values("shift")["residue"].to_numpy()
 
 
 def test_translation_search_matches_numpy_bruteforce(spark):
-    sig = _toy_signal()
-    mothers = wl.mother_dictionary("year", "square", DPY, DPD)
-    rows, cols = np.nonzero(mothers.T)
-    A = CSRMatrix.from_coo(rows, cols, mothers.T[rows, cols], mothers.T.shape)
+    """Every shift's residue on a 365-day x 4-point grid equals the LSQR
+    brute force's, for all three families and both shapes, and each argmin
+    falls in the brute force's tie class (an exact tie in real arithmetic
+    is broken by rounding, which differs between the two).
 
-    # numpy brute force over all shifts
-    best, best_res = 0, float(np.dot(sig, sig))
-    for d in range(N):
-        rolled = np.roll(sig, -d)
-        rolled = rolled - rolled.mean()
-        beta, _, _ = lsqr(A, rolled, damp=0.001)
-        resid = rolled - mothers.T @ beta
-        r = float(np.dot(resid, resid))
-        if r < best_res:
-            best, best_res = d, r
+    The closed form's error is a few ulps of the signal's energy at every
+    shift, so its relative error grows as a fit leaves less of the signal:
+    a roll of the square year mother plus 1% noise leaves 4e-6 of it, and
+    there it is checked against that energy instead."""
+    dpy, dpd = 365, 4
+    load = ei.load_prepared_signal("Consumption", 2012).reshape(365, 64)
+    load = load[:, :: 64 // dpd].ravel()
+    n = load.size
+    for shape in SHAPES:
+        for fam in FAMILIES:
+            want = lsqr_residues(load, fam, shape, dpy, dpd, range(n))
+            got = _sweep(spark, load, fam, shape, dpy, dpd)
+            np.testing.assert_allclose(got, want, rtol=1e-12, err_msg=(shape, fam))
+            assert _tie_class(int(np.argmin(got)), fam, dpd, n) == _tie_class(
+                int(np.argmin(want)), fam, dpd, n
+            ), (shape, fam)
 
-    got = translation.best_translation(
-        spark, sig, "year", "square", dpy=DPY, dpd=DPD
-    )
-    assert got == best
+    year = np.roll(np.repeat([1.0, -1.0], n // 2), 37) + 0.01 * np.sin(np.arange(n))
+    want = lsqr_residues(year, "year", "square", dpy, dpd, range(n))
+    got = _sweep(spark, year, "year", "square", dpy, dpd)
+    energy = float(np.sum((year - year.mean()) ** 2))
+    np.testing.assert_allclose(got, want, rtol=0, atol=1e-12 * energy)
+    assert int(np.argmin(got)) % (n // 2) == int(np.argmin(want)) % (n // 2) == 37
+
+
+def test_translation_residues_match_lsqr_at_full_width(spark):
+    """20 seeded shifts per family and shape of the full 365 x 64 grid:
+    the residues equal the LSQR brute force's."""
+    sig = ei.load_prepared_signal("Consumption", 2012)
+    rng = np.random.default_rng(2012)
+    for shape in SHAPES:
+        for fam in FAMILIES:
+            shifts = rng.choice(sig.size, 20, replace=False)
+            want = lsqr_residues(sig, fam, shape, 365, 64, shifts)
+            got = _sweep(spark, sig, fam, shape, 365, 64)[shifts]
+            np.testing.assert_allclose(got, want, rtol=1e-12, err_msg=(shape, fam))
 
 
 @ei.reference_skipif("input_time_series.xlsx", "translation/trans_square_12_18.p")
@@ -150,28 +196,6 @@ def test_full_sine_translation_sweep_matches_golden_2012(spark):
     np.testing.assert_allclose(
         res["year"][y], res["year"][golden_year], rtol=1e-9
     )
-
-
-def test_mother_csr_matvec_bit_identical_to_dense():
-    """r6 optimization guard: residues_for_shifts now computes the
-    residual product through the broadcast CSR instead of shipping the
-    dense mothers matrix (68 MB/worker for the day family). The swap is
-    exact, not approximate: every row of mothers.T has AT MOST ONE
-    nonzero (mother supports are disjoint), so the dense row dot is the
-    single product a*b with exact-zero padding and the CSR segment sum
-    reproduces it bit-for-bit. Full production width, both shapes."""
-    rng = np.random.default_rng(7)
-    for shape in ("square", "sine"):
-        for fam in ("day", "week", "year"):
-            mothers = wl.mother_dictionary(fam, shape, 365, 64)
-            rows, cols = np.nonzero(mothers.T)
-            A = CSRMatrix.from_coo(
-                rows, cols, mothers.T[rows, cols], mothers.T.shape
-            )
-            assert int(np.diff(A.indptr).max()) <= 1, (fam, shape)
-            beta = rng.standard_normal(mothers.shape[0])
-            dense = mothers.T @ beta
-            assert np.array_equal(A.matvec(beta), dense), (fam, shape)
 
 
 def test_fft_spectrum_matches_numpy(spark):

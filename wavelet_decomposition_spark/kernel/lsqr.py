@@ -4,11 +4,13 @@ Pure-numpy transcription of the published algorithm (the same algorithm
 scipy.sparse.linalg.lsqr implements), needed because the sandbox has no
 scipy. The reference calls ``lsqr(A, s, damp=0.001, atol=0, btol=0,
 conlim=0)`` for every (signal, year) group (the reference's
-``wavelet_decomposition.py``, lines 195-199). Those zero tolerances are the
-only ones the engine runs, so they are fixed here: the tolerance tests
-compare against 0.0 and the solver runs until the machine-epsilon guard
-tests fire, so an exact transcription of the stopping rules reproduces the
-golden coefficients to ~1e-12 absolute error.
+``wavelet_decomposition.py``, lines 195-199), and its translation search
+the same damped solve once per shift (``calc_translations.py``). That
+damping and those zero tolerances are the only ones the engine runs, so
+they are fixed here: the tolerance tests compare against 0.0 and the
+solver runs until the machine-epsilon guard tests fire, so an exact
+transcription of the stopping rules reproduces the golden coefficients to
+~1e-12 absolute error.
 
 The matrix argument is anything exposing ``matvec``/``rmatvec``/``shape``
 (our :class:`~wavelet_decomposition_spark.kernel.sparse.CSRMatrix`). One
@@ -22,6 +24,7 @@ from __future__ import annotations
 import numpy as np
 
 _EPS = np.finfo(np.float64).eps
+DAMP = 0.001
 
 
 def _sym_ortho(a: float, b: float):
@@ -43,8 +46,8 @@ def _sym_ortho(a: float, b: float):
     return c, s, r
 
 
-def lsqr(A, b: np.ndarray, damp: float = 0.0):
-    """Solve ``min ||A x - b||^2 + damp^2 ||x||^2``.
+def lsqr(A, b: np.ndarray):
+    """Solve ``min ||A x - b||^2 + DAMP^2 ||x||^2``.
 
     Returns ``(x, istop, itn)``. Stopping-rule semantics follow the
     published algorithm with ``atol=btol=0, conlim=0``: iteration continues
@@ -55,7 +58,7 @@ def lsqr(A, b: np.ndarray, damp: float = 0.0):
     b = np.asarray(b, dtype=np.float64)
     iter_lim = 2 * n
 
-    dampsq = damp * damp
+    dampsq = DAMP * DAMP
 
     itn = 0
     istop = 0
@@ -107,15 +110,11 @@ def lsqr(A, b: np.ndarray, damp: float = 0.0):
                 v /= alfa
 
         # eliminate the damping parameter with a plane rotation
-        if damp > 0:
-            rhobar1 = np.sqrt(rhobar**2 + dampsq)
-            cs1 = rhobar / rhobar1
-            sn1 = damp / rhobar1
-            psi = sn1 * phibar
-            phibar = cs1 * phibar
-        else:
-            rhobar1 = rhobar
-            psi = 0.0
+        rhobar1 = np.sqrt(rhobar**2 + dampsq)
+        cs1 = rhobar / rhobar1
+        sn1 = DAMP / rhobar1
+        psi = sn1 * phibar
+        phibar = cs1 * phibar
 
         # plane rotation to eliminate the subdiagonal element
         cs, sn, rho = _sym_ortho(rhobar1, beta)
@@ -181,6 +180,6 @@ def lsqr(A, b: np.ndarray, damp: float = 0.0):
 def beta_decomposition(A, signal: np.ndarray) -> np.ndarray:
     """The reference's solve call, ``lsqr(A, s, damp=0.001, atol=0, btol=0,
     conlim=0)`` (its ``wavelet_decomposition.py``, lines 195-199): LSQR
-    damped by 0.001 with the exact-zero tolerances ``lsqr`` fixes."""
-    x, _, _ = lsqr(A, signal, damp=0.001)
+    damped by ``DAMP`` with the exact-zero tolerances ``lsqr`` fixes."""
+    x, _, _ = lsqr(A, signal)
     return x

@@ -117,13 +117,13 @@ def dictionary_width(vy: int = VY, vw: int = VW, vd: int = VD, dpy: int = DPY) -
 
 def mother_dictionary(
     family: str, shape: str, dpy: int = DPY, dpd: int = NDPD
-) -> np.ndarray:
-    """Dense mother-wavelet set for the translation grid search
-    (reference builds these per year at calc_translations.py:62-114).
-
-    Returns a (count, N) dense array — these are tiny (<= 365 rows) and the
-    search fits them with LSQR after sparsifying; we keep them dense and wrap
-    in CSR at the call site.
+) -> tuple[int, np.ndarray]:
+    """The family's mother-wavelet set for the translation grid search
+    (reference builds these per year at calc_translations.py:62-114), as
+    ``(count, pattern)``: ``count`` copies of ``pattern`` on the disjoint
+    supports ``[i * Dt, (i + 1) * Dt)`` of the ``dpy * dpd``-point grid,
+    with ``Dt = pattern.size``. Raises ``ValueError`` when the supports do
+    not fit the grid (the week family needs 364 days).
     """
     n = dpy * dpd
     if family == "year":
@@ -134,14 +134,13 @@ def mother_dictionary(
         count, Dt = dpy, dpd
     else:
         raise ValueError(family)
-    out = np.zeros((count, n), dtype=np.float64)
-    for i in range(count):
-        if shape == "square":
-            out[i, i * Dt : i * Dt + Dt // 2] = 1.0
-            out[i, i * Dt + Dt // 2 : (i + 1) * Dt] = -1.0
-        else:
-            out[i, i * Dt : (i + 1) * Dt] = _sine_period(Dt)
-    return out
+    if count * Dt > n:
+        raise ValueError(
+            f"{count} {family} supports of {Dt} points exceed the {n}-point grid"
+        )
+    if shape == "square":
+        return count, np.concatenate([np.ones(Dt // 2), -np.ones(Dt - Dt // 2)])
+    return count, _sine_period(Dt)
 
 
 # ---------------------------------------------------------------------------

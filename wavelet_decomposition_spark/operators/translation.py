@@ -1,13 +1,21 @@
-"""A11 — brute-force translation grid search, distributed.
+"""A11 — translation grid search.
 
-Reference: /root/reference/calc_translations.py:29-118 — for every circular
-shift d of the signal, fit the family's mother-wavelet dictionary with
-damped LSQR, keep the argmin residual. Single-core there ("grab a coffee",
-calc_translations.py:128: ~3 x 23,360 solves/year); here the shift grid is a
-DataFrame fanned out with mapInPandas against a broadcast (signal, mother
-dictionary) pair — embarrassingly parallel, argmin via a tiny min_by
-aggregation. Mother wavelets have disjoint supports (orthogonal columns), so
-each LSQR converges in a few iterations.
+The reference (calc_translations.py:29-118) fits, for every circular shift
+d of the signal, the family's mother-wavelet set with damped LSQR and keeps
+the argmin residue: ~3 x 23,360 solves a year, single-core ("grab a
+coffee", calc_translations.py:128).
+
+A mother set is ``count`` copies of one ``Dt``-point pattern ``p`` on
+disjoint supports (``wl.mother_dictionary``), so its columns are orthogonal
+with equal norm ``P = ||p||^2`` and the damped fit has a closed form. With
+``y`` the centred signal and ``c[m] = sum_k p[k] y[(m + k) % n]`` its
+circular cross-correlation with ``p``, the fit at shift d has coefficients
+``c[d + i * Dt] / (P + DAMP^2)`` and the residue ``||y||^2 - S(d) (2 / (P +
+DAMP^2) - P / (P + DAMP^2)^2)``, where ``S(d) = sum_i c[(d + i * Dt) %
+n]^2``. One FFT gives the residue at every shift. Its error is a few ulps
+of ``||y||^2`` at every shift, so only a fit that leaves almost none of the
+signal's energy has a larger relative error than LSQR's. The shift grid is
+a DataFrame fanned out with ``mapInPandas``; the queries take the argmin.
 """
 
 from __future__ import annotations
@@ -17,12 +25,25 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..kernel import wavelets as wl
-from ..kernel.lsqr import lsqr
-from ..kernel.sparse import CSRMatrix
+from ..kernel.lsqr import DAMP
 from ..plans.session import worker_kernel
+
+
+def shift_residues(y: np.ndarray, pattern: np.ndarray, count: int) -> np.ndarray:
+    """The damped-fit residue of the mother set ``(count, pattern)`` to the
+    centred signal ``y`` rolled left by d (``np.roll(y, -d)``), for every
+    shift d in ``range(y.size)``."""
+    n = y.size
+    c = np.fft.irfft(np.fft.rfft(y) * np.conj(np.fft.rfft(pattern, n)), n)
+    c2 = c * c
+    s = np.zeros(n)
+    for i in range(count):
+        s += np.roll(c2, -i * pattern.size)
+    p2 = float(pattern @ pattern)
+    k = p2 + DAMP * DAMP
+    return float(y @ y) - s * (2.0 / k - p2 / (k * k))
 
 
 def residues_for_shifts(
@@ -32,62 +53,22 @@ def residues_for_shifts(
     shape: str,
     dpy: int = wl.DPY,
     dpd: int = wl.NDPD,
-    shifts=None,
-    damp: float = 0.001,
 ) -> DataFrame:
-    """(shift, residue) for every candidate circular shift."""
-    mothers = wl.mother_dictionary(family, shape, dpy, dpd)
-    rows, cols = np.nonzero(mothers.T)
-    A = CSRMatrix.from_coo(rows, cols, mothers.T[rows, cols], mothers.T.shape)
-    # broadcast the CSR (~0.5 MB, pickled as its four arrays), not the
-    # dense mothers matrix (day family: 365 x 23,360 float64 = 68 MB):
-    # every row of mothers.T has AT MOST ONE nonzero (disjoint mother
-    # supports), so the CSR matvec is bit-identical to the dense
-    # ``mothers.T @ beta`` (verified in tests/test_translation_spectrum.py)
-    # at 1/140th the broadcast bytes
-    bc = spark.sparkContext.broadcast(
-        (np.asarray(signal, dtype=np.float64), A)
-    )
-    n = signal.size
-    if shifts is None:
-        cand = spark.range(0, n).withColumnRenamed("id", "shift")
-    else:
-        cand = spark.createDataFrame([(int(s),) for s in shifts], "shift long")
+    """(shift, residue) for every circular shift of ``signal``."""
+    count, pattern = wl.mother_dictionary(family, shape, dpy, dpd)
+    sig = np.asarray(signal, dtype=np.float64)
+    bc = spark.sparkContext.broadcast((sig - sig.mean(), pattern, count))
 
     def _residues(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sig, A_ = bc.value
+        res = shift_residues(*bc.value)
         for pdf in batches:
-            out_shift, out_res = [], []
-            for d in pdf["shift"].to_numpy():
-                # translate(signal, d): out[i] = sig[(i+d) % n]
-                rolled = np.roll(sig, -int(d))
-                rolled = rolled - rolled.mean()  # calc_translations.py:22
-                beta, _, _ = lsqr(A_, rolled, damp=damp)
-                resid = rolled - A_.matvec(beta)
-                out_shift.append(int(d))
-                out_res.append(float(np.dot(resid, resid)))
-            yield pd.DataFrame({"shift": out_shift, "residue": out_res})
+            shift = pdf["shift"].to_numpy()
+            yield pd.DataFrame({"shift": shift, "residue": res[shift]})
 
-    return cand.mapInPandas(
-        worker_kernel(_residues), schema="shift long, residue double"
+    # one task: every task sweeps all shifts, so a second one would only
+    # repeat the FFT and add its Python-task overhead (~0.1 s, 10x the sweep)
+    return (
+        spark.range(0, sig.size, numPartitions=1)
+        .withColumnRenamed("id", "shift")
+        .mapInPandas(worker_kernel(_residues), schema="shift long, residue double")
     )
-
-
-def best_translation(
-    spark: SparkSession,
-    signal: np.ndarray,
-    family: str,
-    shape: str,
-    **kw,
-) -> int:
-    """argmin-residue shift (reference keeps the first improvement under the
-    no-shift residue; ties resolve to the smallest shift)."""
-    res = residues_for_shifts(spark, signal, family, shape, **kw)
-    base = float(np.dot(signal, signal))
-    row = (
-        res.filter(F.col("residue") < F.lit(base))
-        .orderBy(F.asc("residue"), F.asc("shift"))
-        .limit(1)
-        .collect()
-    )
-    return int(row[0].shift) if row else 0

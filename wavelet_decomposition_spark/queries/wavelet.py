@@ -278,9 +278,10 @@ def _q_reconstruction_roundtrip(spark, sf_dir):
 
 @query(bench=True)
 def _q_translation_search(spark, sf_dir):
-    """A11 — the reference's dominant cost at FULL width: all 23,360
-    circular shifts for (Consumption, 2012, year family), distributed
-    (reference: ~hours single-core per year, calc_translations.py:29-43
+    """A11 — the reference's dominant cost at FULL width: the damped fit's
+    residue at all 23,360 circular shifts for (Consumption, 2012, year
+    family), in closed form from one cross-correlation (reference: one LSQR
+    solve per shift, ~hours single-core per year, calc_translations.py:29-43
     "grab a coffee"). SELF-VERIFYING: ``invariant_ok`` = (argmin shift ==
     the golden pickle's transyear, modulo the square year wavelet's
     N/2 sign-flip tie symmetry), as a window aggregate over the one sweep
@@ -306,9 +307,10 @@ def _q_translation_search(spark, sf_dir):
 def _q_translation_full(spark, sf_dir):
     """The reference's COMPLETE E3 offline job for one year, distributed
     and self-verifying: all three mother-wavelet families (day, week, year)
-    swept over every one of the 23,360 circular shifts — ~3 x 23,360 LSQR
-    fits, the load the reference calls "grab a coffee ... hours single-core"
-    (calc_translations.py:45-118,128). ``invariant_ok`` on every row:
+    swept over every one of the 23,360 circular shifts, where the reference
+    runs ~3 x 23,360 LSQR fits, "grab a coffee ... hours single-core"
+    (calc_translations.py:45-118,128); here each family's residues come in
+    closed form from one cross-correlation. ``invariant_ok`` on every row:
     the per-family argmin (min-residue shift, window aggregate over the one
     union lineage) must equal the golden pickle trans_square_12_18.p[0] ==
     [87, 5974, 19225] MODULO the family's proven exact-arithmetic tie
