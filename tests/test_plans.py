@@ -85,8 +85,8 @@ def test_shingle_pipeline_no_inferred_filter(spark):
 def _reference_inputs(monkeypatch):
     """Where the reference workbook is absent, point the wavelet query
     builders at tests/electricity_inputs.py's synthetic stand-ins, through a
-    fresh ``_GOLDEN_CACHE`` so no synthetic broadcast or golden frame
-    outlives the test."""
+    fresh ``_GOLDEN_CACHE`` so no synthetic golden frame outlives the
+    test."""
     if os.path.exists(ei.WORKBOOK):
         return
     from wavelet_decomposition_spark.io import reference_data as rd
@@ -132,9 +132,11 @@ def test_invariant_queries_single_lineage(spark, queries, monkeypatch):
     # (explicit pivot values — no eager distinct job at plan time)
     plan = _plan(queries["heatmap_scales"](spark, SF_DIR), "simple")
     assert plan.count("FlatMapGroupsInPandas") == 4
-    # full E3: exactly one sweep (MapInPandas) per mother family
+    # full E3: exactly one sweep (MapInPandas) per mother family, and the
+    # golden shifts are literals: no Python-RDD scan broadcast into a join
     plan = _plan(queries["translation_full"](spark, SF_DIR), "simple")
     assert plan.count("MapInPandas") == 3
+    assert "BroadcastExchange" not in plan and "ExistingRDD" not in plan
 
 
 def test_e1_reconstruction_invariants_hold(spark, queries, monkeypatch):
@@ -154,9 +156,10 @@ def test_e3_translation_queries_collect(spark, queries, monkeypatch):
     """translation_search and translation_full, built and collected on the
     inputs of ``test_invariant_queries_single_lineage``: one row per
     circular shift of each family, and each family's minimum residue is
-    the LSQR brute force's residue at that shift. ``invariant_ok`` compares
-    the argmins with golden translations that belong to the reference
-    signal, so it is not asserted."""
+    the LSQR brute force's residue at that shift. The golden translations
+    belong to the reference signal, so ``invariant_ok`` is then checked
+    against golden shifts set to each family's argmin plus its tie
+    modulus: it must hold on every row."""
     from wavelet_decomposition_spark.queries import wavelet
 
     _reference_inputs(monkeypatch)
@@ -165,11 +168,17 @@ def test_e3_translation_queries_collect(spark, queries, monkeypatch):
     search = queries["translation_search"](spark, SF_DIR).toPandas()
     full = queries["translation_full"](spark, SF_DIR).toPandas()
     assert (len(search), len(full)) == (n, 3 * n)
+    best = {}
     for fam, pdf in [("year", search), *full.groupby("family")]:
         assert sorted(pdf["shift"]) == list(range(n)), fam
-        best = pdf.loc[pdf["residue"].idxmin()]
-        want = lsqr_residues(sig, fam, "square", 365, 64, [best["shift"]])
-        np.testing.assert_allclose(best["residue"], want, rtol=1e-12, err_msg=fam)
+        row = pdf.loc[pdf["residue"].idxmin()]
+        want = lsqr_residues(sig, fam, "square", 365, 64, [row["shift"]])
+        np.testing.assert_allclose(row["residue"], want, rtol=1e-12, err_msg=fam)
+        best[fam] = int(row["shift"])
+    golden = [best["day"] + 64, best["week"], (best["year"] + n // 2) % n]
+    monkeypatch.setattr(wavelet, "load_translations", lambda shape: [golden])
+    ok = queries["translation_full"](spark, SF_DIR).select("invariant_ok")
+    assert all(r.invariant_ok for r in ok.collect())
 
 
 def test_solve_stage_not_coalesced(spark, queries):

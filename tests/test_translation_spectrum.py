@@ -1,3 +1,5 @@
+from types import SimpleNamespace
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -5,7 +7,6 @@ from tests import electricity_inputs as ei
 from wavelet_decomposition_spark.io import reference_data as rd
 from wavelet_decomposition_spark.kernel import wavelets as wl
 from wavelet_decomposition_spark.kernel.lsqr import beta_decomposition
-from wavelet_decomposition_spark.kernel.sparse import CSRMatrix
 from wavelet_decomposition_spark.operators import spectrum, translation
 
 FAMILIES = ("day", "week", "year")
@@ -18,8 +19,10 @@ def lsqr_residues(signal, family, shape, dpy, dpd, shifts):
     rolled, centred signal, and its residue."""
     count, pattern = wl.mother_dictionary(family, shape, dpy, dpd)
     rows = np.arange(count * pattern.size)
-    A = CSRMatrix.from_coo(
-        rows, rows // pattern.size, np.tile(pattern, count), (signal.size, count)
+    dense = np.zeros((signal.size, count))
+    dense[rows, rows // pattern.size] = np.tile(pattern, count)
+    A = SimpleNamespace(
+        shape=dense.shape, matvec=dense.__matmul__, rmatvec=dense.T.__matmul__
     )
     out = []
     for d in shifts:

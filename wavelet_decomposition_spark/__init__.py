@@ -8,9 +8,9 @@ required by the project north star.
 
 Layout
 ------
-kernel/     pure-numpy numeric kernels (no Spark): sparse CSR, LSQR,
-            wavelet-dictionary generation, DWT/MODWT, Gorilla & delta-of-delta
-            codecs, EPN analytics, golden-artifact readers.
+kernel/     pure-numpy numeric kernels (no Spark): LSQR, the wavelet
+            dictionary operator, DWT/MODWT, Gorilla & delta-of-delta codecs,
+            EPN analytics, the stdlib xlsx reader.
 io/         table layer: synthetic transcript generator, checkpoint manifest,
             reference golden-data loaders.
 operators/  Spark DataFrame operators (ingest, resample, decompose, activity

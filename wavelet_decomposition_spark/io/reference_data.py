@@ -7,17 +7,18 @@ Artifacts (see SURVEY.md §5):
 - ``input_time_series.xlsx``   — 7 year-sheets, half-hourly Consumption/Wind/PV
 - ``betas/*/betas_<signal>.xlsx`` — golden coefficients, one column per scale
 - ``translation/trans_*_12_18.p`` — per-year [transday, transweek, transyear]
-- ``saved_matrix/*/A_YYYY.npz``   — golden CSR dictionaries
+- ``saved_matrix/*/A_YYYY.npz``   — golden dictionaries, scipy CSR, read as
+  the ``(rows, cols, vals)`` triplets ``WaveletDictionary.coo()`` returns
 """
 
 from __future__ import annotations
 
 import io
 import pickle
+import zipfile
 
 import numpy as np
 
-from ..kernel.sparse import CSRMatrix, load_npz_csr
 from ..kernel.xlsx import XlsxFile
 
 REFERENCE_ROOT = "/root/reference"
@@ -66,7 +67,39 @@ def load_prepared_signal(
     return np.interp(newx, oldx, raw)
 
 
-def load_golden_matrix(shape: str, year: int, root: str = REFERENCE_ROOT) -> CSRMatrix:
+def load_npz_csr(path: str):
+    """A scipy ``save_npz`` CSR file read with raw numpy (no scipy needed),
+    as its nonzeros ``(rows, cols, vals)`` in CSR order: by row, then
+    column, the order ``WaveletDictionary.coo()`` uses.
+
+    scipy stores plain ``.npy`` members named data/indices/indptr/shape (and a
+    ``format`` marker) inside a zip.
+    """
+    with zipfile.ZipFile(path) as zf:
+        members = {}
+        for name in zf.namelist():
+            key = name[:-4] if name.endswith(".npy") else name
+            with zf.open(name) as fh:
+                members[key] = np.load(io.BytesIO(fh.read()), allow_pickle=False)
+    fmt = members.get("format")
+    if fmt is not None:
+        fmt_str = bytes(fmt.tobytes()).decode("latin1").strip("\x00")
+        if "csr" not in fmt_str:
+            raise ValueError(f"unsupported sparse format: {fmt_str!r}")
+    rows = np.repeat(
+        np.arange(int(members["shape"][0]), dtype=np.int64),
+        np.diff(members["indptr"].astype(np.int64)),
+    )
+    return (
+        rows,
+        members["indices"].astype(np.int64),
+        members["data"].astype(np.float64),
+    )
+
+
+def load_golden_matrix(shape: str, year: int, root: str = REFERENCE_ROOT):
+    """The reference's saved dictionary for (shape, year) as
+    ``(rows, cols, vals)`` (:func:`load_npz_csr`)."""
     sub = "square_shape" if shape == "square" else "sine_shape"
     return load_npz_csr(f"{root}/saved_matrix/{sub}/A_{year}.npz")
 

@@ -13,7 +13,8 @@ transcription of the stopping rules reproduces the golden coefficients to
 ~1e-12 absolute error.
 
 The matrix argument is anything exposing ``matvec``/``rmatvec``/``shape``
-(our :class:`~wavelet_decomposition_spark.kernel.sparse.CSRMatrix`). One
+(the engine's is
+:class:`~wavelet_decomposition_spark.kernel.wavelets.WaveletDictionary`). One
 solve is a single sequential numpy computation — it is never split across
 Spark partitions (determinism under float non-reassociation), parallelism
 comes from running many (series, year) groups as independent tasks.

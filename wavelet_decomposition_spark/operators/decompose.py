@@ -1,12 +1,13 @@
 """A1/A4 — the flagship operator: per-(series, year) damped-LSQR wavelet
-decomposition against a broadcast sparse dictionary, emitting a long-format
-coefficient table.
+decomposition against a broadcast wavelet dictionary, emitting a
+long-format coefficient table.
 
 Reference: the year loop at /root/reference/wavelet_decomposition.py:232-250
 (one ``lsqr(A_year, signal_slice)`` per year) and the sheet reshape at
 :260-298. Here every (series_id, year) group is one Spark task: the
-dictionaries (one ~4.5 MB ``CSRMatrix`` per year) are broadcast once, as
-``{year: CSRMatrix}``; the solve runs as sequential numpy inside an Arrow
+dictionaries are broadcast once, as ``{year: WaveletDictionary}`` (each
+pickled as its shape and translation vector, ~100 B, and rebuilt in ~1 ms
+where it is read); the solve runs as sequential numpy inside an Arrow
 pandas UDF (deterministic — a solve is never split across partitions), and
 the reshape to and from the sheet layout is ``kernel/wavelets``'
 vectorized ``flat_to_scale_pos`` / ``scale_pos_to_flat``, so the group's
@@ -39,9 +40,8 @@ def broadcast_dictionaries(
     shape: str,
     translations_by_year: dict[int, list[int]],
 ):
-    """Generate one CSR dictionary per year on the driver (<1 s/year,
-    CSR-direct — the reference's dense path needs 4.38 GB) and broadcast
-    them as ``{year: CSRMatrix}``, each pickled as its four arrays. Returns
+    """Broadcast one wavelet dictionary per year (the reference's dense
+    path needs 4.38 GB a year) as ``{year: WaveletDictionary}``. Returns
     the broadcast handle."""
     return spark.sparkContext.broadcast(
         {
@@ -109,7 +109,7 @@ def reconstruct(
     """A8 — inverse transform: signal[t] = (A @ beta_natural)[t], optionally
     band-passed to ``keep_scales`` and with the offset dropped
     (wavelet_decomposition.py:385-434). Per-group vectorized matvec against
-    the broadcast CSR. Returns (series_id, year, idx, value)."""
+    the broadcast dictionary. Returns (series_id, year, idx, value)."""
     scales = set(int(s) for s in keep_scales) if keep_scales is not None else None
 
     def _recon(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -143,25 +143,25 @@ def reconstruct(
 
 def support_table(spark: SparkSession, bc) -> DataFrame:
     """J3 — the wavelet dictionary as a long relational table
-    ``(year, scale_idx, pos, idx, weight)``: one row per CSR nonzero
+    ``(year, scale_idx, pos, idx, weight)``: one row per dictionary nonzero
     (~373k/year, a few MB — broadcast-able). Built driver-side from the
     same broadcast payload the UDF path uses, so both reconstruction forms
     share one dictionary source of truth."""
     scale_idx, pos = wl.flat_to_scale_pos()
-    frames = [
-        pd.DataFrame(
-            {
-                "year": np.int32(year),
-                "scale_idx": scale_idx[A.indices],
-                "pos": pos[A.indices],
-                "idx": np.repeat(
-                    np.arange(A.shape[0], dtype=np.int32), np.diff(A.indptr)
-                ),
-                "weight": A.data,
-            }
+    frames = []
+    for year, A in bc.value.items():
+        rows, cols, vals = A.coo()
+        frames.append(
+            pd.DataFrame(
+                {
+                    "year": np.int32(year),
+                    "scale_idx": scale_idx[cols],
+                    "pos": pos[cols],
+                    "idx": rows.astype(np.int32),
+                    "weight": vals,
+                }
+            )
         )
-        for year, A in bc.value.items()
-    ]
     return spark.createDataFrame(pd.concat(frames, ignore_index=True))
 
 

@@ -4,7 +4,7 @@ reconstruction matrix for heatmaps.
 Reference: plots.py:85-95 (one-sided 2/N * |fft(y - mean)|) and
 preplotprocessing (wavelet_decomposition.py:325-358 — reconstruct each of
 the 15 scales separately; the reference densifies the 4.38 GB matrix for
-this, we run 15 sparse matvecs per group).
+this, we run 15 dictionary matvecs per group).
 """
 
 from __future__ import annotations
@@ -114,7 +114,7 @@ def spectral_features(df: DataFrame, group_cols=("series_id",)) -> DataFrame:
 
 def per_scale_reconstruction(betas: DataFrame, bc, n_scales: int = 15) -> DataFrame:
     """A9 — reconstruct each scale's signal separately:
-    (series_id, year, scale_idx, idx, value). One group = 15 sparse matvecs
+    (series_id, year, scale_idx, idx, value). One group = 15 dictionary matvecs
     (the heatmap's pre-pivot long form; pivot at presentation time)."""
 
     def _per_scale(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -321,14 +321,13 @@ def _q_translation_full(spark, sf_dir):
     sig = load_prepared_signal("Consumption", 2012)
     n = int(sig.size)
     g_day, g_week, g_year = load_translations("square")[0]
-    golden = spark.createDataFrame(
-        [
-            ("day", int(g_day), 64),
-            ("week", int(g_week), n),
-            ("year", int(g_year), n // 2),
-        ],
-        "family string, golden_shift long, modulus long",
+    family = F.col("family")
+    golden_shift = (
+        F.when(family == "day", int(g_day))
+        .when(family == "week", int(g_week))
+        .otherwise(int(g_year))
     )
+    modulus = F.when(family == "day", 64).when(family == "week", n).otherwise(n // 2)
     res = None
     for fam in ("day", "week", "year"):
         part = residues_for_shifts(
@@ -339,13 +338,11 @@ def _q_translation_full(spark, sf_dir):
     best_shift = F.min(F.struct(F.col("residue"), F.col("shift"))).over(w)[
         "shift"
     ]
-    return res.join(F.broadcast(golden), "family").select(
+    return res.select(
         "family",
         "shift",
         "residue",
-        (
-            F.pmod(best_shift - F.col("golden_shift"), F.col("modulus")) == 0
-        ).alias("invariant_ok"),
+        (F.pmod(best_shift - golden_shift, modulus) == 0).alias("invariant_ok"),
     )
 
 
@@ -353,8 +350,8 @@ def _q_translation_full(spark, sf_dir):
 def _q_heatmap_scales(spark, sf_dir):
     """A9 — heatmap pre-pivot: each scale reconstructed separately, pivoted
     wide (reference wavelet_decomposition.py:325-358, notebook cells
-    21->23 — which densify the 4.38 GB matrix; here one sparse matvec per
-    scale per group). Now SELF-VERIFYING via the linearity identity: with
+    21->23 — which densify the 4.38 GB matrix; here one dictionary matvec
+    per scale per group). Now SELF-VERIFYING via the linearity identity: with
     the offset included as the 16th column, the scale columns must SUM to
     the full reconstruction, so ``invariant_ok`` = per-(series, year)
     relative error of (sum of all 16 scale columns) vs the input signal
@@ -638,10 +635,9 @@ def _q_wavelet_betas_golden(spark, sf_dir):
     return _betas_with_golden_parity(spark, "square", ["Consumption"], [2013])
 
 
-# per-session memo for the reference dictionaries and the parsed golden
-# workbooks: the reference itself memoizes both (the import_matrix flag,
-# wavelet_decomposition.py:30-35, and the betas xlsx cache), so the warm
-# path prices only the distributed solves, not re-parsing static artifacts
+# per-session memo for the parsed golden workbooks (the reference caches its
+# betas xlsx too), so the warm path prices only the distributed solves, not
+# re-parsing static artifacts
 _GOLDEN_CACHE: dict = {}
 
 
@@ -653,27 +649,18 @@ def _betas_with_golden_parity(spark, shape, signals, years):
     ``invariant_ok`` = (all 23,423 coefficients joined AND max_abs_err <=
     1e-9) — the rows-only driver gate cannot pass on garbage betas."""
     df = _e1_signal(spark, signals, years)
-
-    # keyed by applicationId, not id(spark): id() can be recycled after a
-    # stopped session is GC'd, which would hand back a broadcast bound to a
-    # dead SparkContext (round-3 advisory)
-    key = ("bc", shape, tuple(years), spark.sparkContext.applicationId)
-    bc = _GOLDEN_CACHE.get(key)
-    if bc is None:
-        trans = rd.load_translations(shape)
-        bc = dec.broadcast_dictionaries(
-            spark, shape, {y: trans[y - 2012] for y in years}
-        )
-        _GOLDEN_CACHE[key] = bc
+    trans = rd.load_translations(shape)
+    bc = dec.broadcast_dictionaries(
+        spark, shape, {y: trans[y - 2012] for y in years}
+    )
     betas = dec.decompose(df, bc)
 
-    # cache the golden side as a SPARK DataFrame (keyed per session):
-    # re-running createDataFrame on the ~328k-row pandas frame cost ~2 s
-    # of every warm repeat; a LocalRelation is immutable and reusable
-    gkey = (
-        "golden", tuple(signals), tuple(years),
-        spark.sparkContext.applicationId,
-    )
+    # cache the golden side as a SPARK DataFrame, keyed per session by
+    # applicationId, not id(spark) (id() can be recycled after a stopped
+    # session is GC'd): re-running createDataFrame on the ~328k-row pandas
+    # frame cost ~2 s of every warm repeat; a LocalRelation is immutable
+    # and reusable
+    gkey = (tuple(signals), tuple(years), spark.sparkContext.applicationId)
     golden = _GOLDEN_CACHE.get(gkey)
     if golden is None:
         gpdf = rd.load_golden_betas_long(
