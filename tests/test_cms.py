@@ -90,12 +90,11 @@ def test_plan_is_one_arrow_pass_bounded_shuffles(spark):
         .executedPlan()
         .toString()
     )
-    # the partials are persisted, so all three downstream branches (cells,
-    # candidates, n_total) read the cache — the input scan + Arrow pass
-    # execute ONCE (the plan string repeats the cached relation's
-    # description under each InMemoryTableScan; what matters is that every
-    # branch is a cache read, not a scan replay)
-    assert plan.count("InMemoryTableScan") == 3
+    # the partials are a local checkpoint, so all three downstream branches
+    # (cells, candidates, n_total) read it: the input scan + Arrow pass
+    # execute ONCE, in the checkpoint's lineage, and no branch replays them
+    assert plan.count("Scan ExistingRDD") == 3
+    assert "MapInPandas" not in plan and "FileScan" not in plan
     assert plan.count("BroadcastNestedLoopJoin") <= 1
     # estimation join on cell ids is an equi-join, not a BNL
     assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan) or (

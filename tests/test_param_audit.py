@@ -1,5 +1,5 @@
-"""Two rules against unused code in the package, and one against copied
-code in its query layer.
+"""Two rules against unused code in the package, one against copied
+code in its query layer, and one against cached query plans.
 
 No single-valued options: every parameter of a package function, with or
 without a default, takes at least two different values over the calls in
@@ -52,7 +52,15 @@ non-comment source lines, stripped, without its docstring; the lines of a
 nested function belong to that function alone. A derived series or column
 set two queries need is built once, in a helper both call.
 
-Run ``python tests/test_param_audit.py`` to list the findings of all three
+No cached plans: no package code calls ``.cache()`` or ``.persist()``. A
+cached frame registers its plan with Spark's CacheManager, and any later
+query that builds the same plan silently reads it: a memo across queries
+and repeats. A check that reads a frame the rows also read is a window
+aggregate over the one lineage instead; what must be materialized once
+inside a query is a ``localCheckpoint``, which no plan matches. A
+decorator such as ``@functools.cache`` is not a call and is not flagged.
+
+Run ``python tests/test_param_audit.py`` to list the findings of all four
 rules."""
 
 import ast
@@ -431,6 +439,16 @@ def duplicate_bodies(root=ROOT):
                    for fns in where.values() if len(fns) > 1})
 
 
+def cached_plans(root=ROOT):
+    """Each ``.cache()`` or ``.persist()`` call in the package, as
+    ``module:line``."""
+    top = os.path.join(root, PACKAGE)
+    return [f"{os.path.relpath(path, top)}:{node.func.end_lineno}"
+            for path in _py_files(top) for node in ast.walk(_parse(path))
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("cache", "persist")]
+
+
 def test_every_parameter_takes_two_values():
     single = findings()
     assert not single, (f"{len(single)} parameters take one value at every call; "
@@ -447,6 +465,12 @@ def test_query_bodies_share_no_run_of_lines():
     found = duplicate_bodies()
     assert not found, (f"{len(found)} sets of query-layer bodies share a run of {RUN} "
                        "lines; build the shared part once in a helper:\n" + "\n".join(found))
+
+
+def test_package_caches_no_plan():
+    found = cached_plans()
+    assert not found, (f"{len(found)} .cache()/.persist() calls; compute the check "
+                       "over the one lineage, or localCheckpoint:\n" + "\n".join(found))
 
 
 def _plant(tmp_path, files, rule=findings):
@@ -668,6 +692,20 @@ def test_copy_nested_def_lines_count_only_in_the_nested_def(tmp_path):
     }, duplicate_bodies)
     assert got == ["a.py::inner / a.py::other"]
 
+
+def test_cache_and_persist_calls_are_flagged(tmp_path):
+    got = _plant(tmp_path, {
+        MOD: ("import functools\n"
+              "@functools.cache\n"
+              "def f(df):\n"
+              "    # df.cache() in a comment\n"
+              "    a = df.cache()\n"
+              "    b = df.persist(level)\n"
+              "    return df.localCheckpoint(eager=False), cache(a), b\n"),
+    }, cached_plans)
+    assert got == ["mod.py:5", "mod.py:6"]
+
+
 if __name__ == "__main__":
     fns = package_functions(ROOT)
     n = sum(len(p) for _, _, p in fns)
@@ -683,4 +721,7 @@ if __name__ == "__main__":
     print("\n".join(copies))
     print(f"{len(copies)} sets of query-layer bodies share a run of {RUN} lines",
           file=sys.stderr)
-    sys.exit(1 if single or found or copies else 0)
+    cached = cached_plans()
+    print("\n".join(cached))
+    print(f"{len(cached)} .cache()/.persist() calls", file=sys.stderr)
+    sys.exit(1 if single or found or copies or cached else 0)

@@ -212,6 +212,54 @@ def test_solve_stage_not_coalesced(spark, queries):
     assert plan.count("Exchange") == 2  # resample's + the solve repartition
 
 
+def _build_and_run_twice(spark, build, name):
+    """Build ``build()`` under a job group and collect it, twice, from a
+    session with no cached plan. Per run: the frame, the plan that ran
+    (AQE's final plan, not its initial one), the build group's job names,
+    the ids of the persistent RDDs the run added, and whether the
+    CacheManager is empty. Frees every persistent RDD the runs left."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # frames other tests cached
+    start = set(sc._jsc.getPersistentRDDs().keys())
+    runs = []
+    try:
+        for i in range(2):
+            before = set(sc._jsc.getPersistentRDDs().keys())
+            group = f"build:{name}:{i}"
+            sc.setJobGroup(group, group)
+            try:
+                df = build()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan()
+            if plan.nodeName() == "AdaptiveSparkPlan":
+                plan = plan.executedPlan()
+            jobs = [
+                store.job(j).name()
+                for j in sc.statusTracker().getJobIdsForGroup(group)
+            ]
+            added = set(sc._jsc.getPersistentRDDs().keys()) - before
+            runs.append((df, plan.toString(), jobs, added, cm.isEmpty()))
+    finally:
+        for rdd_id, rdd in sc._jsc.getPersistentRDDs().items():
+            if rdd_id not in start:
+                rdd.unpersist(True)
+    return runs
+
+
+def _checkpoints_read(df) -> set:
+    """Ids of the RDDs behind the ``LogicalRDD`` leaves of ``df``'s plan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+    }
+
+
 @pytest.mark.parametrize(
     "name",
     ["dwt_energy", "modwt_energy", "wpt_energy", "dwt_denoise",
@@ -227,39 +275,53 @@ def test_wavelet_queries_leave_no_storage(spark, queries, name):
     grid ``sequence``."""
     import __spark_entry__ as entrymod
 
-    sc = spark.sparkContext
-    start = set(sc._jsc.getPersistentRDDs().keys())
-    for i in range(2):
-        before = len(sc._jsc.getPersistentRDDs())
-        group = f"build:{name}:{i}"
-        sc.setJobGroup(group, group)
-        try:
-            df = (
-                entrymod.entry(spark) if name == "entry"
-                else queries[name](spark, SF_DIR)
-            )
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        df.collect()
-        assert len(sc._jsc.getPersistentRDDs()) <= before
-        # the plan that ran: AQE's final plan, not its initial one
-        plan = df._jdf.queryExecution().executedPlan()
-        if plan.nodeName() == "AdaptiveSparkPlan":
-            plan = plan.executedPlan()
-        plan = plan.toString()
+    build = (
+        (lambda: entrymod.entry(spark)) if name == "entry"
+        else (lambda: queries[name](spark, SF_DIR))
+    )
+    for _df, plan, jobs, added, _ in _build_and_run_twice(spark, build, name):
+        assert not added
         if name != "entry":
             assert "InMemoryRelation" not in plan
         if name == "tier_wavelet_parity":
-            assert sc.statusTracker().getJobIdsForGroup(group) == []
+            assert jobs == []
         elif name != "entry":
             assert plan.count("FlatMapGroupsInPandas") == 1
             assert not [
                 ln for ln in plan.splitlines()
                 if "Generate" in ln and "sequence(" in ln
             ]
-    for rdd_id, rdd in sc._jsc.getPersistentRDDs().items():
-        if rdd_id not in start:
-            rdd.unpersist(True)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["bm25_topk", "weighted_sample", "pelt_changepoints", "matrix_profile",
+     "conversation_forks", "kmeans_clusters", "pca_embeddings",
+     "cms_heavy_hitters", "dtw_pairs", "holt_winters"],
+)
+def test_queries_cache_nothing(spark, queries, name):
+    """Building and running a query registers nothing with the
+    CacheManager, so no later query or repeat can read its plans: after
+    each of two builds and collects the CacheManager is empty and the
+    executed plan reads no cached relation. The checks that read a frame
+    the rows also read are window aggregates over one lineage, so these
+    builders run no job of their own (the one job of a
+    ``spark.read.parquet`` is Spark's schema read). A run leaves no
+    persistent RDD but the checkpoint cms_heavy_hitters' answer reads:
+    its operator's partials are released once that checkpoint is built."""
+    runs = _build_and_run_twice(
+        spark, lambda: queries[name](spark, SF_DIR), name
+    )
+    for df, plan, jobs, added, cache_empty in runs:
+        assert cache_empty
+        assert "InMemoryRelation" not in plan
+        if name in ("pelt_changepoints", "conversation_forks", "dtw_pairs",
+                    "holt_winters"):
+            assert not [j for j in jobs if not j.startswith("parquet at ")]
+        if name == "cms_heavy_hitters":
+            assert added == _checkpoints_read(df) and len(added) == 1
+        else:
+            assert not added
 
 
 @pytest.mark.parametrize(

@@ -142,11 +142,14 @@ def cms_heavy_hitters(
     # Three downstream branches (cells, candidates, n_total) read the
     # partials; WITHOUT materialization each branch would replay the full
     # input scan + Arrow pass (3 scans of 100 TB). The partials are
-    # bounded by partitions x (d*w + local_k) rows — pennies to cache —
-    # so persist THEM, making the expensive pass run exactly once.
+    # bounded by partitions x (d*w + local_k) rows, so a lazy local
+    # checkpoint keeps THEM: the first action runs the expensive pass
+    # once, and unlike a cached plan no later query can match and read it.
+    # A caller that has materialized the result frees them with
+    # plans.session.release_checkpoint(result).
     partials = keyed.mapInPandas(
         worker_kernel(partial), _PARTIAL_SCHEMA
-    ).persist()
+    ).localCheckpoint(eager=False)
     # one small shuffle each, all bounded by partitions x (d*w + k):
     cells = (
         partials.filter(F.col("kind") == _KIND_CELL)

@@ -57,10 +57,11 @@ def residues_for_shifts(
     """(shift, residue) for every circular shift of ``signal``."""
     count, pattern = wl.mother_dictionary(family, shape, dpy, dpd)
     sig = np.asarray(signal, dtype=np.float64)
-    bc = spark.sparkContext.broadcast((sig - sig.mean(), pattern, count))
+    y = sig - sig.mean()
 
+    # y and the pattern (~190 KB) ride in the one task's pickled closure
     def _residues(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        res = shift_residues(*bc.value)
+        res = shift_residues(y, pattern, count)
         for pdf in batches:
             shift = pdf["shift"].to_numpy()
             yield pd.DataFrame({"shift": shift, "residue": res[shift]})

@@ -1,7 +1,7 @@
 """SparkSession construction with the engine's scale-oriented defaults;
 what the Python workers need: the shipped package zip, the malloc env and
-:func:`worker_kernel`; and :func:`release_checkpoint`, which frees a
-superseded ``localCheckpoint`` round of an iterative operator.
+:func:`worker_kernel`; and :func:`release_checkpoint`, which frees the
+local checkpoints a frame reads once nothing reads them any more.
 
 The sandbox runs ``local[N]`` single-JVM; the configs below are chosen to be
 the right ones on a real multi-executor cluster too (AQE with skew-join
@@ -131,15 +131,16 @@ def worker_kernel(fn):
 
 
 def release_checkpoint(frame) -> None:
-    """Free the blocks of the ``localCheckpoint`` ``frame`` reads (its
-    analyzed plan's ``LogicalRDD``, found through single-child nodes such
-    as a projection). ``DataFrame.unpersist()`` does not release a local
-    checkpoint. A released checkpoint cannot be recomputed, so call this
-    only on a round that no frame still in use reads."""
-    plan = frame._jdf.queryExecution().analyzed()
-    while plan.getClass().getSimpleName() != "LogicalRDD":
-        plan = plan.children().apply(0)
-    plan.rdd().unpersist(False)
+    """Free the blocks of every ``localCheckpoint`` ``frame`` reads (the
+    ``LogicalRDD`` leaves of its analyzed plan).
+    ``DataFrame.unpersist()`` does not release a local checkpoint. A
+    released checkpoint cannot be recomputed, so call this only when no
+    frame still in use reads it."""
+    leaves = frame._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
 
 
 # glibc malloc tuning for the pandas-UDF workers (and the JVM they fork

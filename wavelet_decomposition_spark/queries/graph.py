@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
+import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -327,32 +328,34 @@ def _q_conversation_forks(spark, sf_dir):
                            fork group exists ONLY through byte-equal
                            prefix texts, this simultaneously proves
                            the generator planted the texts and the
-                           fingerprint recovered them.
+                           fingerprint recovered them: the full outer
+                           join of the groups with the plan leaves no
+                           row unmatched (a window count).
 
-    The group collect is bounded by the planted-fork count (group
-    membership lists are fork families, not the corpus)."""
+    The plan is a local relation of at most 5 x 30 rows, and group
+    membership lists are fork families, not the corpus."""
     n, nf = 120, 30
     depths = (1, 2, 3, 4, 6)
     tx = transcripts_df(spark, n, seed=42, n_forks=nf)
     fp = prefix_fingerprints(tx, "conv_id", "turn_idx", "text", depths)
-    groups = shared_prefix_groups(fp, "conv_id", with_members=True).cache()
-    got = {
-        (r["depth"], frozenset(r["members"])) for r in groups.collect()
-    }
+    groups = shared_prefix_groups(fp, "conv_id", with_members=True)
     meta = fork_metadata(n, nf, seed=42)
-    want = set()
-    for d in depths:
-        for p, g in meta[meta.fork_depth >= d].groupby("parent_id"):
-            want.add((
-                d,
-                frozenset(
-                    [f"conv-{p:08d}"]
-                    + [f"conv-{f:08d}" for f in g.fork_id]
-                ),
-            ))
-    return groups.select(
-        "depth",
-        "prefix_hash",
-        "n_members",
-        F.lit(got == want).alias("families_exact_ok"),
-    ).orderBy("depth", "prefix_hash")
+    want = spark.createDataFrame(pd.DataFrame(
+        [(d, sorted(f"conv-{c:08d}" for c in [p, *g.fork_id]), True)
+         for d in depths
+         for p, g in meta[meta.fork_depth >= d].groupby("parent_id")],
+        columns=["depth", "members", "_want"],
+    ), "depth int, members array<string>, _want boolean")
+    unmatched = F.col("prefix_hash").isNull() | F.col("_want").isNull()
+    return (
+        groups.join(want, ["depth", "members"], "full")
+        .select(
+            "depth",
+            "prefix_hash",
+            "n_members",
+            (F.count(F.when(unmatched, 1)).over(Window.partitionBy()) == 0)
+            .alias("families_exact_ok"),
+        )
+        .where(F.col("prefix_hash").isNotNull())
+        .orderBy("depth", "prefix_hash")
+    )

@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 from datetime import datetime
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from wavelet_decomposition_spark.io import checkpoint as ckpt
@@ -356,9 +357,7 @@ def _q_sketch_tier_merge(spark, sf_dir):
     )
 
 
-# designed nested-loop join: 1-row broadcast determinism/planted-dominance
-# invariant joins
-@query(bench=True, designed_bnl=True)
+@query(bench=True)
 def _q_weighted_sample(spark, sf_dir):
     """Deterministic weighted sampling without replacement
     (operators/sampling.py weighted_sample — Efraimidis-Spirakis A-ES)
@@ -373,7 +372,9 @@ def _q_weighted_sample(spark, sf_dir):
     ``light_ok`` as above, ``k_ok`` (exactly 50 rows), and ``det_ok`` —
     a SECOND invocation over the same input repartitioned differently
     must select the identical id set (the partition-independence
-    property DataFrame.sample does not have). Rows-only (ln is not
+    property DataFrame.sample does not have): the full outer join of
+    the two draws on ``doc_id`` leaves no id unmatched. Each invariant
+    is a window aggregate over that one join. Rows-only (ln is not
     cross-engine bit-stable; the SELECTED SET is the checked artifact).
     """
     base = _docs(spark, sf_dir).select(
@@ -387,33 +388,26 @@ def _q_weighted_sample(spark, sf_dir):
     )
     corpus = base.unionByName(heavies).unionByName(lights)
     k = 50
-    samp = weighted_sample(corpus, k=k, seed=42).cache()
-    samp2 = weighted_sample(corpus.repartition(7), k=k, seed=42)
-    det = (
-        samp.select("doc_id")
-        .unionAll(samp2.select("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .agg(
-            (F.sum(F.when(F.col("_c") != 2, 1).otherwise(0)) == 0).alias(
-                "det_ok"
-            )
-        )
+    samp = weighted_sample(corpus, k=k, seed=42)
+    samp2 = weighted_sample(corpus.repartition(7), k=k, seed=42).select(
+        F.col("doc_id").alias("_id2")
     )
-    checks = samp.agg(
-        (
-            F.sum(
-                F.when(F.col("doc_id").between(-20, -1), 1).otherwise(0)
-            )
-            == 20
-        ).alias("planted_ok"),
-        (
-            F.sum(F.when(F.col("doc_id") <= -100, 1).otherwise(0)) == 0
-        ).alias("light_ok"),
-        (F.count(F.lit(1)) == k).alias("k_ok"),
-    ).crossJoin(F.broadcast(det))
+    every = Window.partitionBy()
+    d = F.col("doc_id")
+    unmatched = d.isNull() | F.col("_id2").isNull()
     return (
-        samp.crossJoin(F.broadcast(checks)).orderBy("doc_id")
+        samp.join(samp2, d == F.col("_id2"), "full")
+        .select(
+            "*",
+            (F.count(F.when(d.between(-20, -1), 1)).over(every) == 20)
+            .alias("planted_ok"),
+            (F.count(F.when(d <= -100, 1)).over(every) == 0).alias("light_ok"),
+            (F.count(d).over(every) == k).alias("k_ok"),
+            (F.count(F.when(unmatched, 1)).over(every) == 0).alias("det_ok"),
+        )
+        .where(d.isNotNull())
+        .drop("_id2")
+        .orderBy("doc_id")
     )
 
 

@@ -23,6 +23,7 @@ from wavelet_decomposition_spark.operators.sketch_tiers import (
     hll_rsd,
     sliding_distinct_sketch,
 )
+from wavelet_decomposition_spark.plans.session import release_checkpoint
 from wavelet_decomposition_spark.queries import (
     _cents,
     _events,
@@ -603,13 +604,11 @@ def _q_cms_heavy_hitters(spark, sf_dir):
     # Catalyst otherwise re-runs the whole CMS Arrow fold per consumer
     # (9 Python stages in the before-plan); the table is bounded at
     # <= 1/support keys, so the checkpoint is tiny at any sf
-    hh = (
-        cms_heavy_hitters(
-            ev, "user_id", support=support, width=width
-        )
-        .withColumn("user_id", F.col("key").cast("bigint"))
-        .localCheckpoint()
-    )
+    heavy = cms_heavy_hitters(ev, "user_id", support=support, width=width)
+    hh = heavy.withColumn(
+        "user_id", F.col("key").cast("bigint")
+    ).localCheckpoint()
+    release_checkpoint(heavy)  # the operator's partials: hh holds the answer
     # exact counts for the FOUND keys only — filter-before-shuffle
     exact_cand = (
         ev.join(F.broadcast(hh.select("user_id")), "user_id")

@@ -163,10 +163,12 @@ def _q_response_latency(spark, sf_dir):
 
 
 def _hourly_counts_filled(spark, sf_dir):
-    """``(filled, lo, hi)``: every event type's hourly event count as
-    ``(series_id, bucket_ts, v)``, zero-filled onto one shared hourly
-    grid from ``lo`` to ``hi`` (the first and last hour with any event),
-    so every type's series has the same length."""
+    """``(filled, counts)``: ``counts`` is every event type's hourly event
+    count ``(series_id, bucket_ts, n)``; ``filled`` is the same counts as
+    ``(series_id, bucket_ts, v)``, zero-filled onto one shared hourly grid
+    from the first to the last hour with any event, so every type's series
+    has the same length. The grid endpoints are global window aggregates,
+    so building it runs no job."""
     counts = (
         _events(spark, sf_dir)
         .groupBy(
@@ -175,18 +177,18 @@ def _hourly_counts_filled(spark, sf_dir):
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    # bounded scalar collect: the global grid endpoints (2 timestamps)
-    lo, hi = counts.agg(F.min("bucket_ts"), F.max("bucket_ts")).first()
+    every = Window.partitionBy()
     grid = (
-        counts.select("series_id")
+        counts.select(
+            "series_id",
+            F.min("bucket_ts").over(every).alias("lo"),
+            F.max("bucket_ts").over(every).alias("hi"),
+        )
         .distinct()
         .select(
             "series_id",
-            F.explode(
-                F.sequence(
-                    F.lit(lo), F.lit(hi), F.expr("interval 1 hour")
-                )
-            ).alias("bucket_ts"),
+            F.explode(F.sequence("lo", "hi", F.expr("interval 1 hour")))
+            .alias("bucket_ts"),
         )
     )
     filled = grid.join(counts, ["series_id", "bucket_ts"], "left").select(
@@ -194,7 +196,7 @@ def _hourly_counts_filled(spark, sf_dir):
         "bucket_ts",
         F.coalesce(F.col("n"), F.lit(0)).cast("double").alias("v"),
     )
-    return filled, lo, hi
+    return filled, counts
 
 
 @query(bench=True)
@@ -213,7 +215,7 @@ def _q_dtw_pairs(spark, sf_dir):
     any band); ``band_ok`` = the 72 h-band distance <= the 24 h-band
     distance (wider band = superset of warping paths). A kernel that
     mis-scores or mis-aligns cannot satisfy all three."""
-    filled, _, _ = _hourly_counts_filled(spark, sf_dir)
+    filled, _ = _hourly_counts_filled(spark, sf_dir)
     out = dtw_allpairs(
         filled, "series_id", "bucket_ts",
         radius=24, wide_radius=72, include_self=True,
@@ -665,12 +667,11 @@ def _q_holt_winters(spark, sf_dir):
     identity up to float round-trip; ``planted_n_ok`` = all 24 planted
     forecast rows actually exist (a dropped planted series cannot pass
     vacuously). ``finite_ok`` pins NaN/inf out of every output."""
-    filled, lo, hi = _hourly_counts_filled(spark, sf_dir)
-    planted = spark.range(1).select(
-        F.posexplode(
-            F.sequence(F.lit(lo), F.lit(hi), F.expr("interval 1 hour"))
-        ).alias("i", "bucket_ts")
-    ).select(
+    filled, counts = _hourly_counts_filled(spark, sf_dir)
+    hours = F.sequence("lo", "hi", F.expr("interval 1 hour"))
+    planted = counts.agg(
+        F.min("bucket_ts").alias("lo"), F.max("bucket_ts").alias("hi")
+    ).select(F.posexplode(hours).alias("i", "bucket_ts")).select(
         F.lit("__planted_periodic__").alias("series_id"),
         "bucket_ts",
         ((F.col("i") % 24) * 37 % 101).cast("double").alias("v"),
@@ -1193,7 +1194,8 @@ def _q_pelt_changepoints(spark, sf_dir):
                           0/1000/-500/300 at 60/50/70/60 points)
                           unioned into the input must segment at
                           EXACTLY [60, 110, 180] — recovered
-                          boundaries, not just counts.
+                          boundaries, not just counts (a window
+                          aggregate over the output rows).
 
     beta = 1e4 sized to the hourly series' noise floor (var ~1e3 per
     point: beta 10 chased noise into ~600 segments per series; 1e4
@@ -1217,14 +1219,12 @@ def _q_pelt_changepoints(spark, sf_dir):
         level.alias("v"),
     )
     base = _hourly_series(spark, sf_dir).unionByName(planted)
-    segs = pelt_changepoints(
-        base, ["series_id"], "bucket_ts", beta=1e4
-    ).cache()
-    got = sorted(
-        r["start_pos"]
-        for r in segs.filter(F.col("series_id") == "planted").collect()
+    segs = pelt_changepoints(base, ["series_id"], "bucket_ts", beta=1e4)
+    planted_starts = F.sort_array(
+        F.collect_list(
+            F.when(F.col("series_id") == "planted", F.col("start_pos"))
+        ).over(Window.partitionBy())
     )
-    planted_ok = got == [0] + bounds
     return segs.select(
         "series_id",
         "seg_idx",
@@ -1233,13 +1233,13 @@ def _q_pelt_changepoints(spark, sf_dir):
         "n_points",
         F.round("seg_mean", 6).alias("seg_mean"),
         "dp_equal_ok",
-        F.lit(planted_ok).alias("planted_exact_ok"),
+        (planted_starts == F.array(*map(F.lit, [0] + bounds))).alias(
+            "planted_exact_ok"
+        ),
     ).orderBy("series_id", "seg_idx")
 
 
-# designed nested-loop join: 1-row broadcast planted-motif/discord + recompute
-# invariant joins
-@query(bench=True, designed_bnl=True)
+@query(bench=True)
 def _q_matrix_profile(spark, sf_dir):
     """Matrix-profile motif + discord discovery (operators/motif.py —
     Yeh et al. ICDM'16) over the hourly series, PLUS a planted series
@@ -1257,7 +1257,9 @@ def _q_matrix_profile(spark, sf_dir):
     (explode the window offsets, equi-join back to the points, one
     aggregate computing the z-normalized correlation distance) and must
     match the GEMM kernel to 1e-6, with a count gate so the planted rows
-    cannot vanish vacuously."""
+    cannot vanish vacuously. The recompute groups by the planted rows'
+    own columns, so the planted profile is read once, and each invariant
+    is a window aggregate over the planted rows."""
     m = 24
     # --- planted series ------------------------------------------------
     i = F.col("id")
@@ -1284,13 +1286,10 @@ def _q_matrix_profile(spark, sf_dir):
         .otherwise(day + jitter)
         .alias("v"),
     )
-    top_p = motif.top_motif_discord(
-        motif.matrix_profile(planted, m=m)
-    ).cache()
+    top_p = motif.top_motif_discord(motif.matrix_profile(planted, m=m))
     # --- relational recompute of both reported distances ---------------
     pairs = top_p.select(
-        "kind", "idx", "nn_idx", "mp_dist",
-        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("off"),
+        "*", F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("off")
     )
     pts = planted.select("pos", "v")
     j = (
@@ -1308,58 +1307,46 @@ def _q_matrix_profile(spark, sf_dir):
         F.sum(F.col("va") * F.col("vb"))
         - F.count(F.lit(1)) * F.avg("va") * F.avg("vb")
     ) / (F.stddev_pop("va") * F.stddev_pop("vb"))
-    rel = j.groupBy("kind", "mp_dist").agg(
+    rel = j.groupBy(*top_p.columns).agg(
         F.sqrt(
             F.greatest(F.lit(0.0), 2.0 * (F.lit(float(m)) - zdot))
         ).alias("rel_dist")
     )
-    inv = rel.agg(
-        (
-            (F.count(F.lit(1)) == 2)
-            & (
-                F.max(F.abs(F.col("rel_dist") - F.col("mp_dist")))
-                <= 1e-6
-            )
-        ).alias("recompute_ok")
-    )
-    checks = (
-        top_p.groupBy()
-        .agg(
-            F.max(
-                F.when(
-                    F.col("kind") == "motif",
-                    (
-                        (
-                            (F.col("idx") == 72)
-                            & (F.col("nn_idx") == 336)
-                        )
-                        | (
-                            (F.col("idx") == 336)
-                            & (F.col("nn_idx") == 72)
-                        )
-                    )
-                    & (F.col("mp_dist") <= 1e-6),
-                )
-            ).alias("planted_motif_ok"),
-            F.max(
-                F.when(
-                    F.col("kind") == "discord",
-                    F.col("idx").between(240 - (m - 1), 263),
-                )
-            ).alias("planted_discord_ok"),
-        )
-        .crossJoin(F.broadcast(inv))
-    )
     # --- real series alongside the plant -------------------------------
     top_r = motif.top_motif_discord(
         motif.matrix_profile(_hourly_series(spark, sf_dir), m=m)
-    )
+    ).withColumn("rel_dist", F.lit(None).cast("double"))
+    every = Window.partitionBy()
+    is_p = F.col("series_id") == "planted"
+    kind = F.col("kind")
+    idx, nn = F.col("idx"), F.col("nn_idx")
     return (
-        top_r.unionByName(top_p)
-        .crossJoin(F.broadcast(checks))
+        top_r.unionByName(rel)
         .select(
             "series_id", "kind", "idx", "nn_idx", "mp_dist", "start_ts",
-            "planted_motif_ok", "planted_discord_ok", "recompute_ok",
+            F.max(
+                F.when(
+                    is_p & (kind == "motif"),
+                    (
+                        ((idx == 72) & (nn == 336))
+                        | ((idx == 336) & (nn == 72))
+                    )
+                    & (F.col("mp_dist") <= 1e-6),
+                )
+            ).over(every).alias("planted_motif_ok"),
+            F.max(
+                F.when(
+                    is_p & (kind == "discord"),
+                    idx.between(240 - (m - 1), 263),
+                )
+            ).over(every).alias("planted_discord_ok"),
+            (
+                (F.count(F.when(is_p, 1)).over(every) == 2)
+                & (
+                    F.max(F.abs(F.col("rel_dist") - F.col("mp_dist")))
+                    .over(every) <= 1e-6
+                )
+            ).alias("recompute_ok"),
         )
         .orderBy("series_id", "kind")
     )

@@ -129,13 +129,14 @@ def _q_hybrid_search_rrf(spark, sf_dir):
 
 def _quantized_embeddings(spark, sf_dir):
     """The embeddings corpus ``(vec_id, embedding)`` in integer
-    micro-units (``kmeans.quantized``), cached: each caller fits it
-    twice."""
+    micro-units (``kmeans.quantized``). Not cached: each fit pass
+    re-reads one projected parquet file, and a cached plan would be read
+    by any later query that builds the same plan."""
     return quantized(
         spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
             "vec_id", "embedding"
         )
-    ).cache()
+    )
 
 
 @query(bench=True)
